@@ -461,6 +461,12 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str = "doc_id",
     # consumer re-ran tokenize+shingle+distinct above the shared scan
     # exchange (three full text passes; count-agg subtrees never
     # canonicalize for AQE stage reuse).
+    # 100 TB caveat: the index is (doc, shingle, sz) per distinct
+    # shingle, ~3-4x the corpus text bytes, held in executor block
+    # storage; and a localCheckpoint truncates lineage without a
+    # reliable copy, so a lost executor fails the job instead of
+    # recomputing. At that scale use a reliable `checkpoint()` to a
+    # checkpoint dir sized for it.
     sh = (_sized_shingles(df, id_col, text_col, n, max_shingle_df=None)
           .localCheckpoint(eager=True))
     sig = _signatures_from_shingles(sh, id_col)

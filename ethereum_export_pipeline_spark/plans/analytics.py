@@ -13,6 +13,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from ..artifacts import artifact
 from ..sources.tables import load_table, register_views
 from .base import Query, cents, qty, revenue_e4
 
@@ -1253,31 +1254,22 @@ def _fuzzy_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _fuzzy_candidate_pairs(spark, sf_dir)
 
 
-_FUZZY_PAIRS_MEMO: dict[tuple[str, str], "DataFrame"] = {}
-
-
 def _dirty_parts(spark: SparkSession, sf_dir: str):
     return load_table(spark, sf_dir, "part").select(
         F.col("p_partkey").alias("id"),
         F.expr(_DIRTY_NAME).alias("name"))
 
 
+@artifact("fuzzy_pairs")
 def _fuzzy_candidate_pairs(spark: SparkSession, sf_dir: str):
     """The blocked+Levenshtein pair list, memoized per (session,
     corpus) and eagerly localCheckpointed — `q_fuzzy_match` and
     `q_entity_resolution` consume the SAME pair computation (the
-    plans/llm.py shared-artifact discipline); the computation is a
-    pure function of the corpus, so a cold single-query session
-    produces identical hashes."""
-    import os
+    shared-artifact discipline, `artifacts.py`)."""
     from ..operators.joins import fuzzy_pairs
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    if key not in _FUZZY_PAIRS_MEMO:
-        from .llm import _memo_put
-        _memo_put(_FUZZY_PAIRS_MEMO, key, fuzzy_pairs(
-            _dirty_parts(spark, sf_dir), "id", "name",
-            F.expr(_BLOCK), max_dist=2).localCheckpoint(eager=True))
-    return _FUZZY_PAIRS_MEMO[key]
+    return fuzzy_pairs(
+        _dirty_parts(spark, sf_dir), "id", "name",
+        F.expr(_BLOCK), max_dist=2).localCheckpoint(eager=True)
 
 
 #: shared CTE chain: dirty names → blocked base (with the hot-block

@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
+from ..artifacts import artifact
 from ..partitioning import range_cols, volume_balanced_plan
 from ..sources.tables import load_table, register_views
 from ..util import local_df, scratch_dir
@@ -1177,42 +1178,7 @@ _DP_VALUE_STR = (
     f" lpad(CAST({_DP_L} AS STRING), 18, '0')) END")
 
 
-#: Same-application evictions from the scratch memos below
-#: (`_DUALPREC_CSV`, `_BUCKETED_TABLES`) park here instead of being
-#: deleted: a lazy frame returned earlier in the SAME application may
-#: still reference the files/tables and would fail at scan time were
-#: they reclaimed immediately. Entries are (owner applicationId,
-#: scratch path, catalog tables to DROP) and are swept by
-#: `_sweep_dead_orphans` the next time either memo is touched by a
-#: DIFFERENT application — by then the owner app (and every frame it
-#: handed out) is gone. Interpreter exit is covered independently:
-#: every path came from `util.scratch_dir`, which registers an atexit
-#: rmtree.
-_SCRATCH_ORPHANS: list[tuple[str, str, tuple[str, ...]]] = []
-
-
-def _sweep_dead_orphans(spark: SparkSession) -> None:
-    """Reclaim orphaned scratch whose owning application is no longer
-    the live one (see `_SCRATCH_ORPHANS`)."""
-    import shutil
-    live = spark.sparkContext.applicationId
-    keep = []
-    for app_id, path, tables in _SCRATCH_ORPHANS:
-        if app_id == live:
-            keep.append((app_id, path, tables))
-            continue
-        for t in tables:
-            try:
-                spark.sql(f"DROP TABLE IF EXISTS {t}")
-            except Exception:
-                pass  # catalog of the dead app may be gone entirely
-        shutil.rmtree(path, ignore_errors=True)
-    _SCRATCH_ORPHANS[:] = keep
-
-
-_DUALPREC_CSV: dict[tuple, str] = {}
-
-
+@artifact("dualprec_csv", owns=lambda out: (out, ()))
 def _dualprec_csv(spark: SparkSession, sf_dir: str) -> str:
     """Scratch CSV landing of the synthesized dual-precision wei
     strings, memoized per (session, corpus) like the llm.py artifact
@@ -1222,35 +1188,13 @@ def _dualprec_csv(spark: SparkSession, sf_dir: str) -> str:
     exist on S3 — so repeated graded/bench runs must not re-pay or
     re-measure it. bench.py charges the first touch to
     `artifact:dualprec_csv`."""
-    import os
-    _sweep_dead_orphans(spark)
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    if key not in _DUALPREC_CSV:
-        e = load_table(spark, sf_dir, "events")
-        src = e.selectExpr("user_id", f"{_DP_VALUE_STR} AS value_wei")
-        out = scratch_dir("spark_graft_dualprec_")
-        width = spark.sparkContext.defaultParallelism
-        src.repartition(width).write.mode("overwrite") \
-           .option("header", True).csv(out)
-        _evict_dualprec_if_full(spark)
-        _DUALPREC_CSV[key] = out
-    return _DUALPREC_CSV[key]
-
-
-def _evict_dualprec_if_full(spark: SparkSession) -> None:
-    """Bound the scratch memo at 8 entries, reclaiming disk only when
-    the evicted entry's owning application is gone: a lazy frame
-    built earlier in the CURRENT app may still reference the path and
-    would fail at scan time were it rmtree'd — same-app evictions
-    park in `_SCRATCH_ORPHANS` and are reclaimed once the app dies."""
-    if len(_DUALPREC_CSV) >= 8:
-        import shutil
-        old_key = next(iter(_DUALPREC_CSV))
-        evicted = _DUALPREC_CSV.pop(old_key)
-        if old_key[0] != spark.sparkContext.applicationId:
-            shutil.rmtree(evicted, ignore_errors=True)
-        else:
-            _SCRATCH_ORPHANS.append((old_key[0], evicted, ()))
+    e = load_table(spark, sf_dir, "events")
+    src = e.selectExpr("user_id", f"{_DP_VALUE_STR} AS value_wei")
+    out = scratch_dir("spark_graft_dualprec_")
+    width = spark.sparkContext.defaultParallelism
+    src.repartition(width).write.mode("overwrite") \
+       .option("header", True).csv(out)
+    return out
 
 
 def _dual_precision(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1486,57 +1430,37 @@ FROM z ORDER BY zone_id
 
 BUCKETS = 8
 
-_BUCKETED_TABLES: dict[tuple, tuple[str, str, str]] = {}
-
-
-def _bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    """Bucketed orders/lineitem catalog tables, memoized per
-    (session, corpus) like `_dualprec_csv`: the hash-bucketed ingest
-    is the ONE-TIME cost the bucketing design exists to amortize, so
-    repeated graded/bench runs must not re-pay (or re-measure) it
-    inside the join's timing. bench.py charges the first touch to
-    `artifact:bucketed_tables`; the graded row then times only the
-    exchange-free join."""
+@artifact("bucketed_tables", owns=lambda t: (t[2], t[:2]))
+def _bucketed_tables(spark: SparkSession,
+                     sf_dir: str) -> tuple[str, str, str]:
+    """Bucketed orders/lineitem catalog tables and their scratch base
+    path, memoized per (session, corpus) like `_dualprec_csv`: the
+    hash-bucketed ingest is the ONE-TIME cost the bucketing design
+    exists to amortize, so repeated graded/bench runs must not re-pay
+    (or re-measure) it inside the join's timing. bench.py charges the
+    first touch to `artifact:bucketed_tables`; the graded row then
+    times only the exchange-free join."""
     import hashlib as _hl
-    import os
-    import shutil
-    _sweep_dead_orphans(spark)
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    if key not in _BUCKETED_TABLES:
-        # the tag carries the applicationId too: were it sf_dir-only,
-        # evicting a stale prior-application entry for the same corpus
-        # would DROP the identically-named tables the current
-        # application's still-memoized entry points to
-        tag = _hl.md5(f"{key[0]}|{sf_dir}".encode()).hexdigest()[:8]
-        ot, lt = f"bkt_orders_{tag}", f"bkt_lineitem_{tag}"
-        base = scratch_dir("spark_graft_bkt_")
-        (load_table(spark, sf_dir, "orders")
-            .select("o_orderkey", "o_orderpriority")
-            .write.mode("overwrite").format("parquet")
-            .bucketBy(BUCKETS, "o_orderkey").sortBy("o_orderkey")
-            .option("path", f"{base}/orders").saveAsTable(ot))
-        (load_table(spark, sf_dir, "lineitem")
-            .select("l_orderkey", "l_quantity", "l_extendedprice",
-                    "l_discount")
-            .write.mode("overwrite").format("parquet")
-            .bucketBy(BUCKETS, "l_orderkey").sortBy("l_orderkey")
-            .option("path", f"{base}/lineitem").saveAsTable(lt))
-        if len(_BUCKETED_TABLES) >= 8:
-            # mirror _evict_dualprec_if_full: DROP + rmtree only when
-            # the evicted entry belongs to a DEAD application — a lazy
-            # frame returned earlier by _bucketed_join over another
-            # corpus in the CURRENT app still scans these tables
-            e_key = next(iter(_BUCKETED_TABLES))
-            e_ot, e_lt, e_base = _BUCKETED_TABLES.pop(e_key)
-            if e_key[0] != spark.sparkContext.applicationId:
-                for t in (e_ot, e_lt):
-                    spark.sql(f"DROP TABLE IF EXISTS {t}")
-                shutil.rmtree(e_base, ignore_errors=True)
-            else:
-                _SCRATCH_ORPHANS.append((e_key[0], e_base, (e_ot, e_lt)))
-        _BUCKETED_TABLES[key] = (ot, lt, base)
-    ot, lt, _ = _BUCKETED_TABLES[key]
-    return ot, lt
+    # the tag carries the applicationId too: were it sf_dir-only,
+    # reclaiming a stale prior-application entry for the same corpus
+    # would DROP the identically-named tables the current
+    # application's still-memoized entry points to
+    app = spark.sparkContext.applicationId
+    tag = _hl.md5(f"{app}|{sf_dir}".encode()).hexdigest()[:8]
+    ot, lt = f"bkt_orders_{tag}", f"bkt_lineitem_{tag}"
+    base = scratch_dir("spark_graft_bkt_")
+    (load_table(spark, sf_dir, "orders")
+        .select("o_orderkey", "o_orderpriority")
+        .write.mode("overwrite").format("parquet")
+        .bucketBy(BUCKETS, "o_orderkey").sortBy("o_orderkey")
+        .option("path", f"{base}/orders").saveAsTable(ot))
+    (load_table(spark, sf_dir, "lineitem")
+        .select("l_orderkey", "l_quantity", "l_extendedprice",
+                "l_discount")
+        .write.mode("overwrite").format("parquet")
+        .bucketBy(BUCKETS, "l_orderkey").sortBy("l_orderkey")
+        .option("path", f"{base}/lineitem").saveAsTable(lt))
+    return ot, lt, base
 
 
 def _bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1554,7 +1478,7 @@ def _bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     single biggest shuffle a fact-fact join would otherwise pay.
     The returned frame aggregates the joined result so the graded
     output is small and exact."""
-    ot, lt = _bucketed_tables(spark, sf_dir)
+    ot, lt, _ = _bucketed_tables(spark, sf_dir)
     j = (spark.table(ot)
               .join(spark.table(lt),
                     F.col("o_orderkey") == F.col("l_orderkey")))

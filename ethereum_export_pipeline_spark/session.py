@@ -15,7 +15,6 @@ column reads as a nanosecond-epoch BIGINT. Either way
 from __future__ import annotations
 
 import os
-import weakref
 
 from pyspark.sql import SparkSession
 
@@ -80,13 +79,6 @@ def get_spark(app_name: str = "ethereum_export_pipeline_spark",
     return spark
 
 
-#: Live child sessions handed out by `isolated_session`. Each
-#: SparkSession owns its OWN StreamingQueryManager, so a safety check
-#: like "no streaming query is running in this JVM" cannot be answered
-#: from one session alone — `recycle_python_workers` walks this set.
-_CHILD_SESSIONS: weakref.WeakSet = weakref.WeakSet()
-
-
 def isolated_session(spark: SparkSession) -> SparkSession:
     """A child session (same SparkContext, same cached data, SEPARATE
     runtime SQLConf) for work that must mutate session confs — the
@@ -96,108 +88,7 @@ def isolated_session(spark: SparkSession) -> SparkSession:
     invisible to any query concurrently planning on the caller's
     session (set/restore on a SHARED session has a race window).
     The child gets the same runtime confs `ensure_conf` guarantees."""
-    child = ensure_conf(spark.newSession())
-    _CHILD_SESSIONS.add(child)
-    return child
-
-
-def _any_stream_active(spark: SparkSession) -> bool:
-    """True if ANY session sharing this process has an active
-    streaming query: the caller's, any `isolated_session` child
-    (streams run on those — each session has its own
-    StreamingQueryManager, so the caller's `spark.streams` alone
-    can't see them), or the JVM-registered active/default session."""
-    candidates = [spark, *list(_CHILD_SESSIONS)]
-    try:
-        active = SparkSession.getActiveSession()
-        if active is not None:
-            candidates.append(active)
-    except Exception:
-        pass
-    for s in candidates:
-        try:
-            if s.streams.active:
-                return True
-        except Exception:
-            continue  # session stopped mid-walk: no streams there
-    return False
-
-
-def recycle_python_workers(spark: SparkSession) -> int:
-    """Kill this session's POOLED Python worker processes so the next
-    Arrow/mapInPandas stage forks fresh ones. Returns the number of
-    workers killed.
-
-    Why: long multi-query sessions age the reused Python workers —
-    bench.py's bracketing canaries measured the mapInPandas path
-    degrading 2.5× across a ~200-query run while the pure-JVM canary
-    stayed flat (worker-state accumulation: allocator fragmentation,
-    module caches, GC debt). At 100 TB the same tax lands on any
-    long-lived executor running Arrow stages back to back.
-
-    Why this is safe: `spark.python.worker.reuse` parks idle workers
-    in PythonWorkerFactory's idle queue, and the 4.1 factory checks
-    liveness on dequeue — a dead pooled worker is discarded with a
-    WARN ("process from idle queue is dead, discarding.") and a fresh
-    one is forked from the still-running pyspark.daemon (verified
-    empirically in tests/test_round10_ops.py: kill → query succeeds →
-    pool refills). The daemon itself is never touched, so fork cost
-    (not interpreter start-up) is the only re-warm price, and it's
-    paid off the timed path when callers recycle between queries.
-
-    Only call between jobs: a worker killed mid-task fails that task,
-    and local mode defaults to spark.task.maxFailures=1. Streaming
-    micro-batches are jobs too, and streams run on `isolated_session`
-    children whose queries the caller's `spark.streams` can't see —
-    so the function itself refuses (returns 0, kills nothing) while
-    ANY session in this process has an active streaming query, rather
-    than trusting every call site to remember.
-
-    Scoping: walks /proc for `pyspark.daemon` processes whose
-    ancestry contains THIS session's JVM pid, then SIGKILLs only
-    their forked children (the workers). Other Spark sessions on the
-    host are untouched."""
-    import signal
-
-    if _any_stream_active(spark):
-        return 0
-
-    jvm_pid = int(spark._jvm.java.lang.ProcessHandle.current().pid())
-    cmds, ppids = {}, {}
-    for pid in os.listdir("/proc"):
-        if not pid.isdigit():
-            continue
-        try:
-            with open(f"/proc/{pid}/cmdline", "rb") as fh:
-                cmd = fh.read().replace(b"\0", b" ").decode(errors="replace")
-            with open(f"/proc/{pid}/stat") as fh:
-                ppid = int(fh.read().rsplit(")", 1)[-1].split()[1])
-        except OSError:
-            continue  # raced with process exit
-        cmds[int(pid)] = cmd
-        ppids[int(pid)] = ppid
-
-    def _under_jvm(pid: int) -> bool:
-        seen = set()
-        while pid > 1 and pid not in seen:
-            if pid == jvm_pid:
-                return True
-            seen.add(pid)
-            pid = ppids.get(pid, 0)
-        return False
-
-    daemons = {p for p, c in cmds.items()
-               if "pyspark.daemon" in c and _under_jvm(p)}
-    workers = [p for p in cmds
-               if ppids.get(p) in daemons and "pyspark" in cmds[p]]
-    killed = 0
-    for pid in workers:
-        try:
-            os.kill(pid, signal.SIGKILL)
-            killed += 1
-        except OSError:
-            pass  # already gone
-    return killed
+    return ensure_conf(spark.newSession())
 
 
 def ensure_conf(spark: SparkSession) -> SparkSession:

@@ -168,3 +168,58 @@ def eth_fixture_dir(tmp_path_factory):
         pq.write_table(pa.Table.from_arrays(arrays, schema=pa.schema(fields)),
                        root / f"{name}.parquet")
     return str(root)
+
+
+@pytest.fixture
+def scratch_eviction(spark, tmp_path):
+    """Check the registry's eviction rule on one scratch-owning
+    artifact: `check(name, get, fake)` where `get` is the artifact
+    getter and `fake(path)` a stand-in value owning `path`. Evicting
+    an entry whose application is dead reclaims its path at once;
+    evicting one owned by the LIVE application must not (a lazy frame
+    built earlier in this session may still scan it) -- it parks,
+    survives the live application's sweeps, and is reclaimed once a
+    different application touches the registry. Returns the freshly
+    built value so the caller can check it works."""
+    import os
+
+    from __spark_entry__ import SMOKE_SF_DIR as sf
+    from ethereum_export_pipeline_spark import artifacts
+
+    app = spark.sparkContext.applicationId
+    saved_orph = list(artifacts._ORPHANS)
+    restore = []
+
+    def check(name, get, fake):
+        memo = artifacts._MEMOS[name]
+        restore.append((memo, dict(memo)))
+        dead_dir, live_dir = tmp_path / f"{name}_dead", tmp_path / name
+        dead_dir.mkdir()
+        live_dir.mkdir()
+        memo.clear()
+        artifacts._ORPHANS.clear()
+        memo[("dead-app", "/c0")] = fake(str(dead_dir))
+        memo[(app, "/c1")] = fake(str(live_dir))
+        for i in range(2, artifacts.MAX_ENTRIES):
+            memo[("dead-app", f"/c{i}")] = fake("/nonexistent")
+        get(spark, sf)                          # evicts the dead entry
+        assert not dead_dir.exists(), name
+        assert artifacts._ORPHANS == []
+        memo.pop((app, os.path.abspath(sf)))
+        memo[("dead-app", "/filler")] = fake("/nonexistent")
+        value = get(spark, sf)                  # evicts the live entry
+        assert live_dir.is_dir(), f"{name}: same-app eviction reclaimed"
+        orphans = list(artifacts._ORPHANS)
+        assert [o[:2] for o in orphans] == [(app, str(live_dir))]
+        artifacts._sweep(spark, app)
+        assert live_dir.is_dir()
+        artifacts._sweep(spark, "a-later-app")
+        assert not live_dir.exists()
+        assert artifacts._ORPHANS == []
+        return value, orphans[0]
+
+    yield check
+    for memo, saved in restore:
+        memo.clear()
+        memo.update(saved)
+    artifacts._ORPHANS[:] = saved_orph

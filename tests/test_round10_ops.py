@@ -2,11 +2,11 @@
 under adversarial DHT payloads (out-of-range size symbols that would
 overflow the int64 coefficient array, over-subscribed code trees),
 the table-driven Huffman LUT agreeing bit-for-bit with the canonical
-code assignment, and the artifact-memo eviction fixes (bucketed-table
-names scoped per application so a stale prior-app eviction cannot
-DROP the live app's tables; dual-precision CSV scratch reclaimed only
-when its owning application is dead, so earlier-built lazy frames
-keep a readable path).
+code assignment, and the bucketed-table names scoped per application
+so reclaiming a stale prior-app entry cannot DROP the live app's
+tables, and dual-precision CSV scratch reclaimed only when its owning
+application is dead, so earlier-built lazy frames keep a readable
+path.
 """
 
 from __future__ import annotations
@@ -104,36 +104,6 @@ def test_jpeg_decode_survives_entropy_junk():
         assert out is None or out[2] == 1
 
 
-# ------------------------- python-worker recycling (bench aging)
-
-def test_recycle_python_workers_safe_between_jobs(spark):
-    """The aging mitigation's safety contract, proven live: after an
-    Arrow stage populates the reuse pool, killing the pooled workers
-    must (a) report kills, (b) leave the daemon able to serve the
-    next mapInPandas job (the 4.1 factory discards dead workers on
-    dequeue and forks fresh ones), and (c) produce identical results
-    before and after."""
-    from ethereum_export_pipeline_spark.session import (
-        recycle_python_workers)
-
-    def f(pdfs):
-        for pdf in pdfs:
-            yield pdf.assign(v=pdf["id"] * 3 % 7)
-
-    def run():
-        return (spark.range(0, 200_000, 1, 8)
-                     .mapInPandas(f, "id long, v long")
-                     .selectExpr("sum(v)").collect()[0][0])
-
-    before = run()
-    killed = recycle_python_workers(spark)
-    assert killed > 0, "expected pooled workers from the first run"
-    assert run() == before
-    # a second recycle-and-run cycle: the pool must have refilled
-    assert recycle_python_workers(spark) > 0
-    assert run() == before
-
-
 # ----------------------- crawl → train-manifest composed flagship
 
 def test_crawl_manifest_composition_invariants(spark):
@@ -165,22 +135,25 @@ def test_bucketed_table_names_scoped_per_application(spark):
     that DROP at the live application's tables."""
     import hashlib
 
+    from ethereum_export_pipeline_spark import artifacts
     from ethereum_export_pipeline_spark.plans import eth
 
-    ot, lt = eth._bucketed_tables(spark, SF)
+    ot, lt, _ = eth._bucketed_tables(spark, SF)
     corpus_only = hashlib.md5(SF.encode()).hexdigest()[:8]
     assert corpus_only not in ot and corpus_only not in lt
     app = spark.sparkContext.applicationId
     scoped = hashlib.md5(f"{app}|{SF}".encode()).hexdigest()[:8]
     assert scoped in ot and scoped in lt
-    # a simulated dead-application eviction must leave them readable
-    eth._BUCKETED_TABLES[("dead-app", "/nowhere")] = (
-        "bkt_orders_deadbeef", "bkt_lineitem_deadbeef", "/nonexistent")
-    eth._BUCKETED_TABLES.pop(("dead-app", "/nowhere"))
+    # reclaiming a dead application's parked tables must leave the
+    # live application's readable
+    artifacts._ORPHANS.append(("dead-app", "/nonexistent", (
+        "bkt_orders_deadbeef", "bkt_lineitem_deadbeef")))
+    eth._bucketed_tables(spark, SF)  # a registry touch sweeps
+    assert not any(o[0] == "dead-app" for o in artifacts._ORPHANS)
     assert spark.table(ot).count() > 0
 
 
-def test_dualprec_scratch_not_reclaimed_while_app_live(spark):
+def test_dualprec_scratch_not_reclaimed_while_app_live(scratch_eviction):
     """Same-application eviction must NOT rmtree the scratch CSV: a
     lazy frame built from the evicted path earlier in this session
     still scans it. Dead-application entries are reclaimed."""
@@ -188,30 +161,6 @@ def test_dualprec_scratch_not_reclaimed_while_app_live(spark):
 
     from ethereum_export_pipeline_spark.plans import eth
 
-    live = eth._dualprec_csv(spark, SF)
-    assert os.path.isdir(live)
-    saved = dict(eth._DUALPREC_CSV)
-    try:
-        dead_dir = live + "_deadcopy"
-        os.makedirs(dead_dir, exist_ok=True)
-        # oldest entry owned by a DEAD application → reclaimed
-        eth._DUALPREC_CSV.clear()
-        eth._DUALPREC_CSV[("dead-app", "/d0")] = dead_dir
-        for i in range(1, 8):
-            eth._DUALPREC_CSV[("dead-app", f"/d{i}")] = "/nonexistent"
-        eth._evict_dualprec_if_full(spark)
-        assert not os.path.isdir(dead_dir)
-        # oldest entry owned by the LIVE application → path survives
-        live_key = (spark.sparkContext.applicationId,
-                    os.path.abspath(SF))
-        eth._DUALPREC_CSV.clear()
-        eth._DUALPREC_CSV[live_key] = live
-        for i in range(7):
-            eth._DUALPREC_CSV[("dead-app", f"/x{i}")] = "/nonexistent"
-        eth._evict_dualprec_if_full(spark)
-        assert live_key not in eth._DUALPREC_CSV
-        assert os.path.isdir(live), \
-            "same-app eviction must not delete scratch a lazy frame uses"
-    finally:
-        eth._DUALPREC_CSV.clear()
-        eth._DUALPREC_CSV.update(saved)
+    out, _ = scratch_eviction("dualprec_csv", eth._dualprec_csv,
+                              lambda d: d)
+    assert os.path.isdir(out)

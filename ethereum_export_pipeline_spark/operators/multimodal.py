@@ -38,6 +38,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
 
+from ..execution import spread
+
 MEDIA_SCHEMA = T.StructType([
     T.StructField("media_id", T.LongType()),
     T.StructField("payload", T.BinaryType()),
@@ -63,28 +65,16 @@ FEATURE_SCHEMA = T.StructType([
 ])
 
 
-def _spread_source(src: DataFrame) -> DataFrame:
-    """Scan-width spread of the PRE-PAYLOAD (id, text) source rows
-    (optimization r11, guide §2.5): a one-file corpus is one scan
-    task, which would serialize media generation AND every downstream
-    mapInPandas decode onto one Python worker while 31 idle. The
-    round-robin moves only the light text rows — payloads are
-    generated AFTER it, so heavy media bytes still never cross an
-    exchange (the mm-tier scale claim, pinned by
-    test_scene_cuts_no_shuffle's above-the-generator assertion).
-    No-op when file splits already provide the width (100 TB case)."""
-    from .similarity import _ensure_scan_width
-    return _ensure_scan_width(
-        src, src.sparkSession.sparkContext.defaultParallelism)
-
-
 def documents_as_media(df: DataFrame, id_col: str = "doc_id",
                        text_col: str = "text") -> DataFrame:
     """Make an opaque-binary media table out of the documents fixture:
     payload = utf-8 bytes, metadata struct alongside — the canonical
     multimodal column layout."""
     payload = F.encode(F.col(text_col), "utf-8")
-    return _spread_source(df.select(F.col(id_col), F.col(text_col))).select(
+    # every documents_as_*_media spreads the light (id, text) rows
+    # BEFORE generating payloads, so media bytes never cross an
+    # exchange (pinned by test_scene_cuts_no_shuffle)
+    return spread(df.select(F.col(id_col), F.col(text_col))).select(
         F.col(id_col).alias("media_id"),
         payload.alias("payload"),
         F.struct(
@@ -119,7 +109,7 @@ def documents_as_ppm_media(df: DataFrame, id_col: str = "doc_id",
     import numpy as np
 
     id_out, txt, fmt = "media_id", "__txt", "__fmt"
-    src = _spread_source(
+    src = spread(
         df.select(F.col(id_col).alias(id_out),
                   F.col(text_col).alias(txt),
                   (F.col(format_col) if format_col
@@ -960,7 +950,7 @@ def documents_as_jpeg_media(df: DataFrame, id_col: str = "doc_id",
     import numpy as np
 
     id_out, txt = "media_id", "__txt"
-    src = _spread_source(
+    src = spread(
         df.select(F.col(id_col).alias(id_out),
                   F.col(text_col).alias(txt)))
 
@@ -1009,7 +999,7 @@ def documents_as_png_media(df: DataFrame, id_col: str = "doc_id",
     import numpy as np
 
     id_out, txt = "media_id", "__txt"
-    src = _spread_source(
+    src = spread(
         df.select(F.col(id_col).alias(id_out),
                   F.col(text_col).alias(txt)))
 
@@ -1486,7 +1476,7 @@ def documents_as_video_media(df: DataFrame, id_col: str = "doc_id",
     import numpy as np
 
     id_out, txt = "media_id", "__txt"
-    src = _spread_source(
+    src = spread(
         df.select(F.col(id_col).alias(id_out), F.col(text_col).alias(txt)))
     n_px = frame_w * frame_h * 3
 

@@ -28,6 +28,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..execution import checkpoint
+
 
 def resolve_reorgs(blocks: DataFrame, max_depth: int = 16,
                    height_col: str = "height", hash_col: str = "hash",
@@ -38,10 +40,9 @@ def resolve_reorgs(blocks: DataFrame, max_depth: int = 16,
     canonical) for every block with height > tip_height − max_depth,
     canonical ∈ {0,1}; exactly one canonical block per height in the
     window (the tip's ancestry)."""
-    b = blocks.select(F.col(height_col).alias("height"),
-                      F.col(hash_col).alias("bhash"),
-                      F.col(parent_col).alias("parent"))
-    b = b.localCheckpoint(eager=True)  # referenced every walk step
+    b = checkpoint(blocks.select(  # referenced every walk step
+        F.col(height_col).alias("height"), F.col(hash_col).alias("bhash"),
+        F.col(parent_col).alias("parent")))
     # Walk-step checkpoints are LAZY (optimization r11, guide §1.2
     # step 1): each head_i is referenced twice (the canon union AND
     # the next step's join), so WITHOUT a checkpoint the unrolled
@@ -49,19 +50,19 @@ def resolve_reorgs(blocks: DataFrame, max_depth: int = 16,
     # form paid one blocking Spark job per step (~max_depth job
     # launches for ~1-row frames). eager=False keeps the plan-level
     # truncation (LogicalRDD, computed once, persisted) while the
-    # whole walk fuses into the final action's single job.
-    tip = (b.orderBy(F.col("height").desc(), F.col("bhash").asc())
-            .limit(1)
-            .select("height", "bhash", "parent")
-            .localCheckpoint(eager=False))
+    # whole walk fuses into the final action's single job. (With a
+    # context checkpoint dir `execution.checkpoint` is reliable and
+    # eager on every step instead.)
+    tip = checkpoint(b.orderBy(F.col("height").desc(), F.col("bhash").asc())
+                      .limit(1)
+                      .select("height", "bhash", "parent"), eager=False)
     canon = tip.select("bhash")
     head = tip
     for _ in range(max_depth - 1):
-        head = (b.join(F.broadcast(head.select(F.col("parent")
-                                               .alias("_want"))),
-                       F.col("bhash") == F.col("_want"))
-                 .select("height", "bhash", "parent")
-                 .localCheckpoint(eager=False))
+        head = checkpoint(
+            b.join(F.broadcast(head.select(F.col("parent").alias("_want"))),
+                   F.col("bhash") == F.col("_want"))
+             .select("height", "bhash", "parent"), eager=False)
         canon = canon.unionAll(head.select("bhash"))
     tip_h = tip.select(F.col("height").alias("tip_h"))
     chashes = (canon.select(F.col("bhash").alias("_chash"))

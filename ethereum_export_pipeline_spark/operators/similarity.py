@@ -30,6 +30,8 @@ from functools import lru_cache
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from ..execution import spread
+
 
 def _freeze(x):
     return tuple(_freeze(v) for v in x) if isinstance(x, (list, tuple)) else x
@@ -115,8 +117,7 @@ def brute_force_topk(df: DataFrame, id_col: str = "vec_id",
     well-split input)."""
     query_pred = query_pred or f"{id_col} < 10"
     base = with_quantized(
-        _ensure_scan_width(df.select(id_col, emb_col),
-                           df.sparkSession.sparkContext.defaultParallelism),
+        spread(df.select(id_col, emb_col)),
         emb_col).select(id_col, "qvec", "n2")
     q = (base.where(query_pred)
              .select(F.col(id_col).alias("query_id"),
@@ -196,13 +197,12 @@ def lsh_topk(df: DataFrame, id_col: str = "vec_id",
     Scan width (optimization r11, guide §2.5): the quantize + plane
     projections (n_bands·n_planes·dim multiply-adds per row) evaluate
     in the SCAN stage, so a narrow input (one small file = one task)
-    runs them on one core; `_ensure_scan_width` spreads the (id, emb)
+    runs them on one core; `execution.spread` spreads the (id, emb)
     projection first — a no-op when file splits already provide the
     parallelism (the 100 TB case)."""
     query_pred = query_pred or f"{id_col} < 10"
-    narrowed = _ensure_scan_width(
-        df.where(F.size(F.col(emb_col)) == dim).select(id_col, emb_col),
-        df.sparkSession.sparkContext.defaultParallelism)
+    narrowed = spread(
+        df.where(F.size(F.col(emb_col)) == dim).select(id_col, emb_col))
     base = banded_buckets(
         with_quantized(narrowed, emb_col)
         .select(id_col, "qvec", "n2"), dim, n_planes, n_bands)
@@ -249,9 +249,8 @@ def range_search(df: DataFrame, id_col: str = "vec_id",
     production radius query tightens/widens `n_bands`, never falls
     back to all-pairs."""
     query_pred = query_pred or f"{id_col} < 10"
-    narrowed = _ensure_scan_width(
-        df.where(F.size(F.col(emb_col)) == dim).select(id_col, emb_col),
-        df.sparkSession.sparkContext.defaultParallelism)
+    narrowed = spread(
+        df.where(F.size(F.col(emb_col)) == dim).select(id_col, emb_col))
     base = banded_buckets(
         with_quantized(narrowed, emb_col)
         .select(id_col, "qvec", "n2"), dim, n_planes, n_bands)
@@ -369,9 +368,8 @@ def semantic_decontaminate(df: DataFrame, id_col: str = "vec_id",
     corpus × bench. The verdict re-attaches to the corpus with one
     left join on id."""
     from pyspark.sql import Window
-    narrowed = _ensure_scan_width(
-        df.where(F.size(F.col(emb_col)) == dim).select(id_col, emb_col),
-        df.sparkSession.sparkContext.defaultParallelism)
+    narrowed = spread(
+        df.where(F.size(F.col(emb_col)) == dim).select(id_col, emb_col))
     base = banded_buckets(
         with_quantized(narrowed, emb_col)
         .select(id_col, "qvec", "n2"), dim, n_planes, n_bands)
@@ -424,9 +422,8 @@ def embedding_neardup_pairs(df: DataFrame, id_col: str = "vec_id",
     cosine). Same `dim` guard and `n_planes`/`n_bands` trade-offs as
     `lsh_topk`, and the same scan-width spread before the quantize +
     plane projections."""
-    narrowed = _ensure_scan_width(
-        df.where(F.size(F.col(emb_col)) == dim).select(id_col, emb_col),
-        df.sparkSession.sparkContext.defaultParallelism)
+    narrowed = spread(
+        df.where(F.size(F.col(emb_col)) == dim).select(id_col, emb_col))
     base = banded_buckets(
         with_quantized(narrowed, emb_col)
         .select(id_col, "qvec", "n2"), dim, n_planes, n_bands)
@@ -450,26 +447,6 @@ def embedding_neardup_pairs(df: DataFrame, id_col: str = "vec_id",
 IVF_CELLS = 16
 IVF_KMEANS_ITERS = 8
 
-
-def _ensure_scan_width(df: DataFrame, target: int | None) -> DataFrame:
-    """Spread a compute-bound pre-shuffle projection across `target`
-    partitions ONLY when the scan is narrower than that: a single small
-    local file yields one partition (all 32 cores idle behind one
-    task), while an already-well-split input — the 100 TB case, where
-    file splits provide the parallelism — keeps its splits and skips
-    what would be a wasted full round-robin shuffle of the table. The
-    partition count is inspected once at plan-build time.
-
-    `SPARK_GRAFT_SPREAD=0` disables every spread call site (the A/B
-    lever used to measure each family in-place; production clusters
-    whose inputs are always well-split can set it to skip the
-    plan-build partition probe too)."""
-    import os
-    if target is None or os.environ.get("SPARK_GRAFT_SPREAD", "1") == "0":
-        return df
-    if df.rdd.getNumPartitions() >= target:
-        return df
-    return df.repartition(target)
 
 # ------------------------------------------------------------------- PQ
 
@@ -523,24 +500,21 @@ def ivf_cell_col(centroids: list[list[int]],
 def ivf_topk(df: DataFrame, centroids: list[list[int]],
              id_col: str = "vec_id", emb_col: str = "embedding",
              k: int = 5, query_pred: str | None = None,
-             dim: int = EMB_DIM,
-             scan_parallelism: int | None = None) -> DataFrame:
+             dim: int = EMB_DIM) -> DataFrame:
     """IVF(nprobe=1) top-k: exact cosine among candidates in the
     query's coarse-quantizer cell. The data-adaptive sibling of
     `lsh_topk`: cells follow the density of the corpus instead of
     random hyperplanes, so candidate lists are balanced where the
     data is. The cell join is an equi-shuffle on a small int key.
 
-    `scan_parallelism`: cell assignment (n_cells × dim lambda evals
-    per row; Catalyst higher-order functions run interpreted, not
-    codegen'd) is the compute-bound step and happens BEFORE any
-    shuffle, so it runs at the SCAN's parallelism. Pass the core count
-    and `_ensure_scan_width` decides: it repartitions only when the
-    scan is narrower (the one-small-file fixture case) and leaves an
-    already-well-split input untouched — no shuffle at 100 TB."""
+    Cell assignment (n_cells × dim lambda evals per row; Catalyst
+    higher-order functions run interpreted, not codegen'd) is the
+    compute-bound step and happens BEFORE any shuffle, so it runs at
+    the SCAN's parallelism: `execution.spread` widens a one-small-file
+    scan and leaves an already-well-split input untouched — no
+    shuffle at 100 TB."""
     query_pred = query_pred or f"{id_col} < 10"
-    narrowed = _ensure_scan_width(df.where(F.size(F.col(emb_col)) == dim),
-                                  scan_parallelism)
+    narrowed = spread(df.where(F.size(F.col(emb_col)) == dim))
     base = (with_quantized(narrowed, emb_col)
             .withColumn("cell", ivf_cell_col(centroids).cast("long"))
             .select(id_col, "qvec", "n2", "cell"))
@@ -672,8 +646,7 @@ def ivfpq_packed_topk(df: DataFrame, centroids: list[list[int]],
                       codebooks: list[list[list[int]]],
                       id_col: str = "vec_id", emb_col: str = "embedding",
                       k: int = 5, query_pred: str | None = None,
-                      dim: int = EMB_DIM,
-                      scan_parallelism: int | None = None) -> DataFrame:
+                      dim: int = EMB_DIM) -> DataFrame:
     """`ivfpq_topk` with the candidate side compressed to ONE BIGINT
     per row: the cell join ships (neighbor_id, packed, cell) — 8 B of
     code payload instead of the m-int array (~72 B serialized) or the
@@ -684,8 +657,7 @@ def ivfpq_packed_topk(df: DataFrame, centroids: list[list[int]],
     packed word so the oracle must reproduce the packing bit-for-bit:
     (query_id, neighbor_id, packed, adc_dist, rank)."""
     query_pred = query_pred or f"{id_col} < 10"
-    narrowed = _ensure_scan_width(df.where(F.size(F.col(emb_col)) == dim),
-                                  scan_parallelism)
+    narrowed = spread(df.where(F.size(F.col(emb_col)) == dim))
     base = (with_quantized(narrowed, emb_col)
             .withColumn("cell", ivf_cell_col(centroids).cast("long")))
     q = (base.where(query_pred)
@@ -714,8 +686,7 @@ def ivfpq_topk(df: DataFrame, centroids: list[list[int]],
                codebooks: list[list[list[int]]],
                id_col: str = "vec_id", emb_col: str = "embedding",
                k: int = 5, query_pred: str | None = None,
-               dim: int = EMB_DIM,
-               scan_parallelism: int | None = None) -> DataFrame:
+               dim: int = EMB_DIM) -> DataFrame:
     """IVF-PQ top-k — the memory-compressed scale path: candidates are
     pruned to the query's IVF cell (equi-join on a small int key, as in
     `ivf_topk`) and then RANKED BY ADC distance computed from the
@@ -727,8 +698,7 @@ def ivfpq_topk(df: DataFrame, centroids: list[list[int]],
     by ADC ascending then neighbor id (exact ints, engine-identical).
     """
     query_pred = query_pred or f"{id_col} < 10"
-    narrowed = _ensure_scan_width(df.where(F.size(F.col(emb_col)) == dim),
-                                  scan_parallelism)
+    narrowed = spread(df.where(F.size(F.col(emb_col)) == dim))
     base = (with_quantized(narrowed, emb_col)
             .withColumn("cell", ivf_cell_col(centroids).cast("long")))
     q = (base.where(query_pred)
@@ -838,9 +808,8 @@ def jl_rerank_topk(df: DataFrame, id_col: str = "vec_id",
     from pyspark.sql import Window
     query_pred = query_pred or f"{id_col} < 10"
     S = matrix_lit(jl_signs(out_dim, dim))
-    narrowed = _ensure_scan_width(
-        df.where(F.size(F.col(emb_col)) == dim).select(id_col, emb_col),
-        df.sparkSession.sparkContext.defaultParallelism)
+    narrowed = spread(
+        df.where(F.size(F.col(emb_col)) == dim).select(id_col, emb_col))
     base = (with_quantized(narrowed, emb_col)
             .withColumn("p", F.transform(
                 S, lambda s: F.aggregate(
@@ -894,8 +863,7 @@ def jl_rerank_topk(df: DataFrame, id_col: str = "vec_id",
 
 def semdedup_cells(df: DataFrame, centroids: list[list[int]],
                    id_col: str = "vec_id", emb_col: str = "embedding",
-                   threshold: float = 0.3, dim: int = EMB_DIM,
-                   scan_parallelism: int | None = None) -> DataFrame:
+                   threshold: float = 0.3, dim: int = EMB_DIM) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023):
     assign every vector to its k-means cell, compare pairs ONLY
     within a cell, and greedily drop any vector that has an
@@ -912,13 +880,13 @@ def semdedup_cells(df: DataFrame, centroids: list[list[int]],
     keep = 0 iff some over-threshold neighbor has a smaller id.
 
     Scale shape: cell assignment is a pre-shuffle codegen/interpreted
-    projection at scan width (`_ensure_scan_width` discipline); the
+    projection at the scan's own width (not `execution.spread`: the
+    graded `emb_semdedup_cells` plan has no round-robin exchange); the
     pair join is an equi-shuffle on the small int cell key, quadratic
     only WITHIN a cell — the whole point of clustering first (at 100
     TB: cap cell population via more centroids, the paper's k ∝ √n).
     One cosine per candidate pair, one hash-agg back to vectors."""
-    narrowed = _ensure_scan_width(df.where(F.size(F.col(emb_col)) == dim),
-                                  scan_parallelism)
+    narrowed = df.where(F.size(F.col(emb_col)) == dim)
     base = (with_quantized(narrowed, emb_col)
             .withColumn("cell", ivf_cell_col(centroids).cast("long"))
             .select(id_col, "qvec", "n2", "cell")
@@ -1210,9 +1178,8 @@ def with_binary_codes(df: DataFrame, id_col: str = "vec_id",
     a 32× cut in vector state — THE serving-tier story at 100 TB."""
     assert dim == HAM_BANDS * HAM_BAND_BITS, dim
     base = with_quantized(
-        _ensure_scan_width(
-            df.where(F.size(F.col(emb_col)) == dim).select(id_col, emb_col),
-            df.sparkSession.sparkContext.defaultParallelism),
+        spread(df.where(F.size(F.col(emb_col)) == dim)
+                 .select(id_col, emb_col)),
         emb_col)
     band_cols = [F.expr(hamming_band_expr("qvec", b)).alias(f"band{b}")
                  for b in range(HAM_BANDS)]
@@ -1340,10 +1307,8 @@ def kmeans_assign(df: DataFrame, id_col: str = "vec_id",
     previous centroid (the driver-side merge defaults), so the cell
     count never silently shrinks."""
     vecs = (with_quantized(
-                _ensure_scan_width(
-                    df.where(F.size(F.col(emb_col)) == dim)
-                      .select(id_col, emb_col),
-                    df.sparkSession.sparkContext.defaultParallelism),
+                spread(df.where(F.size(F.col(emb_col)) == dim)
+                         .select(id_col, emb_col)),
                 emb_col)
             .select(F.col(id_col).alias("vid"), "qvec")
             .localCheckpoint(eager=True))  # scanned once per round
@@ -1553,9 +1518,8 @@ def mmr_rerank(df: DataFrame, id_col: str = "vec_id",
     query_pred = query_pred or f"{id_col} < 10"
     from pyspark.sql import Window
     base = (with_quantized(
-                _ensure_scan_width(
-                    df.where(F.size(emb_col) == dim).select(id_col, emb_col),
-                    df.sparkSession.sparkContext.defaultParallelism),
+                spread(df.where(F.size(emb_col) == dim)
+                         .select(id_col, emb_col)),
                 emb_col)
             .select(id_col, "qvec", "n2"))
     q = (base.where(query_pred)
@@ -1639,7 +1603,6 @@ def ivf_recall_report(df: DataFrame, centroids: list[list[int]],
                       emb_col: str = "embedding",
                       query_pred: str | None = None,
                       dim: int = EMB_DIM,
-                      scan_parallelism: int | None = None,
                       exact: DataFrame | None = None) -> DataFrame:
     """`ann_recall_report`'s IVF sibling — recall@k of the nprobe=1
     IVF path against the exact top-k, the measurement that tunes the
@@ -1654,8 +1617,7 @@ def ivf_recall_report(df: DataFrame, centroids: list[list[int]],
         exact = brute_force_topk(df, id_col, emb_col, k=k,
                                  query_pred=query_pred)
     approx = ivf_topk(df, centroids, id_col, emb_col, k=k,
-                      query_pred=query_pred, dim=dim,
-                      scan_parallelism=scan_parallelism)
+                      query_pred=query_pred, dim=dim)
     return _recall_vs_exact(exact, approx, k)
 
 
@@ -1665,7 +1627,6 @@ def pq_recall_report(df: DataFrame, centroids: list[list[int]],
                      emb_col: str = "embedding",
                      query_pred: str | None = None,
                      dim: int = EMB_DIM,
-                     scan_parallelism: int | None = None,
                      exact: DataFrame | None = None) -> DataFrame:
     """Completes the recall-measurement trio (LSH bands →
     `ann_recall_report`, IVF cells → `ivf_recall_report`, PQ codes →
@@ -1680,6 +1641,5 @@ def pq_recall_report(df: DataFrame, centroids: list[list[int]],
         exact = brute_force_topk(df, id_col, emb_col, k=k,
                                  query_pred=query_pred)
     approx = ivfpq_topk(df, centroids, codebooks, id_col, emb_col,
-                        k=k, query_pred=query_pred, dim=dim,
-                        scan_parallelism=scan_parallelism)
+                        k=k, query_pred=query_pred, dim=dim)
     return _recall_vs_exact(exact, approx, k)

@@ -19,6 +19,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from ..execution import checkpoint, spread
 from ..functions import MERSENNE31, tokens
 
 #: Tiny embedded stopword lexicons (top function words). Deliberately
@@ -36,20 +37,6 @@ STOPWORDS = {
 }
 
 TOKENS_COL = "toks"
-
-
-def _spread(df: DataFrame) -> DataFrame:
-    """Scan-width spread (optimization r11, guide §2.5) for operators
-    whose tokenize + per-token hashing runs in the scan stage AND is
-    followed by a shuffle anyway: a one-file corpus is one scan task,
-    serializing the heavy projection onto one core. Round-robins only
-    the light pre-tokenize rows; no-op when file splits already
-    provide the width (the 100 TB case). NOT applied to map-only
-    operators (blocklist/phrase/pseudonymize/…): their zero-exchange
-    plans are the contract, and at scale the scan is already wide."""
-    from .similarity import _ensure_scan_width
-    return _ensure_scan_width(
-        df, df.sparkSession.sparkContext.defaultParallelism)
 
 
 def with_tokens(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -173,7 +160,7 @@ def top_terms(df: DataFrame, id_col: str = "doc_id",
     partitioned top-k window; the window shuffles on the doc key only."""
     from pyspark.sql import Window
     counts = (
-        _spread(df).select(F.col(id_col), F.explode(tokens(text_col)).alias("term"))
+        spread(df).select(F.col(id_col), F.explode(tokens(text_col)).alias("term"))
           .groupBy(id_col, "term")
           .agg(F.count(F.lit(1)).alias("n"))
     )
@@ -189,7 +176,7 @@ def corpus_stats(df: DataFrame, id_col: str = "doc_id",
     size, exact-duplicate ratio — the first report a training-data
     pipeline prints. Two scans (token stats + dup grouping), both
     map-side-combining aggregates."""
-    toks = _spread(df).select(F.col(id_col), F.explode(tokens(text_col)).alias("term"))
+    toks = spread(df).select(F.col(id_col), F.explode(tokens(text_col)).alias("term"))
     tok_stats = toks.agg(
         F.count(F.lit(1)).alias("total_tokens"),
         F.countDistinct("term").alias("vocab_size"))
@@ -244,7 +231,7 @@ def repetition_stats(df: DataFrame, id_col: str = "doc_id",
     per-doc aggregate; both group-bys shuffle on the doc key, ratios
     are single divisions over exact ints (engine-identical doubles)."""
     counts = (
-        _spread(df).select(F.col(id_col), F.explode(tokens(text_col)).alias("term"))
+        spread(df).select(F.col(id_col), F.explode(tokens(text_col)).alias("term"))
           .groupBy(id_col, "term")
           .agg(F.count(F.lit(1)).alias("n"))
     )
@@ -325,7 +312,7 @@ def tfidf_top_terms(df: DataFrame, id_col: str = "doc_id",
     dedup inverted index. n_docs is a 1-row broadcast cross join whose
     scan prunes to the text column with no tokenize."""
     from pyspark.sql import Window
-    tf = (_spread(df.where(F.col(text_col).isNotNull()))
+    tf = (spread(df.where(F.col(text_col).isNotNull()))
             .select(F.col(id_col), F.explode(tokens(text_col)).alias("term"))
             .groupBy(id_col, "term")
             .agg(F.count(F.lit(1)).alias("tf")))
@@ -506,7 +493,7 @@ def token_rarity(df: DataFrame, id_col: str = "doc_id",
     token key. The final per-doc aggregate is map-side-combining.
     mean_df is the single double division over exact BIGINTs
     (cross-engine exact)."""
-    tok = _spread(df).select(
+    tok = spread(df).select(
         F.col(id_col),
         F.explode(F.array_distinct(tokens(text_col))).alias("tok"))
     dfreq = tok.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
@@ -537,7 +524,7 @@ def duplicated_sentences(df: DataFrame, id_col: str = "doc_id",
     HAVING on the aggregate, so singleton sentences — the vast
     majority — die in the combiner."""
     sent = (
-        _spread(df).select(F.col(id_col),
+        spread(df).select(F.col(id_col),
                   F.explode(F.split(F.col(text_col), "[.]")).alias("s"))
           .select(id_col, F.trim(F.lower(F.col("s"))).alias("s"))
           .where(F.length("s") >= min_chars)
@@ -626,7 +613,7 @@ def token_drift(df: DataFrame, id_col: str = "doc_id",
     tf-idf's, bounded by vocabulary size after map-side combine."""
     side = side_col if side_col is not None \
         else (F.col(id_col) % 2 == 0).cast("int")
-    occ = (with_tokens(_spread(df.where(F.col(text_col).isNotNull())), text_col)
+    occ = (with_tokens(spread(df.where(F.col(text_col).isNotNull())), text_col)
            .select(side.alias("_a"), F.explode(TOKENS_COL).alias("tok")))
     counts = (occ.groupBy("tok")
                  .agg(F.sum("_a").cast("long").alias("cnt_a"),
@@ -700,11 +687,11 @@ def bm25_topk(df: DataFrame, id_col: str = "doc_id",
     corpus, unlike the window it replaces. The two-window form is the
     measured keeper at both sf0.1 and ×10."""
     from pyspark.sql import Window
-    tf = (_spread(df.where(F.col(text_col).isNotNull()))
+    tf = (spread(df.where(F.col(text_col).isNotNull()))
             .select(F.col(id_col), F.explode(tokens(text_col)).alias("term"))
             .groupBy(id_col, "term")
             .agg(F.count(F.lit(1)).alias("tf")))
-    tot = (_spread(df.where(F.col(text_col).isNotNull()))
+    tot = (spread(df.where(F.col(text_col).isNotNull()))
            .agg(F.count(F.lit(1)).cast("long").alias("n"),
                 F.sum(F.size(tokens(text_col))).cast("long")
                  .alias("t_tokens")))
@@ -769,7 +756,7 @@ def bigram_fluency(df: DataFrame, id_col: str = "doc_id",
     way hot terms skew tf-idf's df window — the same salt/df-cut
     mitigations apply."""
     from pyspark.sql import Window
-    bg = (with_tokens(_spread(df.where(F.col(text_col).isNotNull())), text_col)
+    bg = (with_tokens(spread(df.where(F.col(text_col).isNotNull())), text_col)
           .where(F.size(TOKENS_COL) >= 2)
           .select(F.col(id_col),
                   F.explode(F.expr(
@@ -869,13 +856,6 @@ def stratified_reservoir(df: DataFrame, id_col: str = "doc_id",
 
 BPE_ROUNDS = 6
 
-#: A/B lever (optimization r12): cadence of the per-round word-table
-#: checkpoint in `bpe_train` — False = lazy (materialized by the next
-#: round's argmax job), True = eager (one blocking job per round).
-#: Values are identical either way; only materialization timing moves.
-_BPE_WORDS_EAGER = False
-
-
 def bpe_train(df: DataFrame, text_col: str = "text",
               rounds: int = BPE_ROUNDS) -> DataFrame:
     """BPE tokenizer-merge training (Sennrich et al. 2016) as an
@@ -919,14 +899,14 @@ def bpe_train(df: DataFrame, text_col: str = "text",
     round could emit a row either)."""
     from pyspark.sql import types as T
     from ..functions import tokens
-    words = (_spread(df.where(F.col(text_col).isNotNull()))
-               .select(F.explode(tokens(text_col)).alias("word"))
-               .groupBy("word")
-               .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-               .select(F.expr("concat(' ', regexp_replace(word, '(.)', "
-                              "'$1 '))").alias("w"),
-                       "cnt")
-               .localCheckpoint(eager=True))
+    words = checkpoint(
+        spread(df.where(F.col(text_col).isNotNull()))
+        .select(F.explode(tokens(text_col)).alias("word"))
+        .groupBy("word")
+        .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
+        .select(F.expr("concat(' ', regexp_replace(word, '(.)', "
+                       "'$1 '))").alias("w"),
+                "cnt"))
     spark = df.sparkSession
     merge_rows: list[tuple[int, str, str, int]] = []
     for r in range(rounds):
@@ -946,11 +926,10 @@ def bpe_train(df: DataFrame, text_col: str = "text",
             break
         x, y, pair_n = top[0]["x"], top[0]["y"], int(top[0]["pair_n"])
         merge_rows.append((r + 1, x, y, pair_n))
-        words = (words.select(
-                     F.replace(F.col("w"),
-                               F.lit(f" {x} {y} "),
-                               F.lit(f" {x}{y} ")).alias("w"), "cnt")
-                      .localCheckpoint(eager=_BPE_WORDS_EAGER))
+        words = checkpoint(
+            words.select(F.replace(F.col("w"), F.lit(f" {x} {y} "),
+                                   F.lit(f" {x}{y} ")).alias("w"), "cnt"),
+            eager=False)
     schema = T.StructType([
         T.StructField("round", T.LongType()),
         T.StructField("x", T.StringType()),
@@ -1026,7 +1005,7 @@ def shingle_novelty(df: DataFrame, id_col: str = "doc_id",
     roll-up exchanges on the doc key. No joins, two exchanges."""
     from pyspark.sql import Window
     from ..operators.dedup import shingles
-    sh = shingles(_spread(df.select(id_col, text_col)), id_col, text_col)
+    sh = shingles(spread(df.select(id_col, text_col)), id_col, text_col)
     w = Window.partitionBy("shingle")
     flagged = sh.withColumn("first_seen", F.min(id_col).over(w))
     return (flagged.groupBy(id_col)
@@ -1067,7 +1046,7 @@ def collocations(df: DataFrame, text_col: str = "text",
     global window) over candidates surviving the min_count cut —
     at web scale the cut is what keeps that input small."""
     from pyspark.sql import Window
-    bg = (with_tokens(_spread(df.where(F.col(text_col).isNotNull())), text_col)
+    bg = (with_tokens(spread(df.where(F.col(text_col).isNotNull())), text_col)
           .where(F.size(TOKENS_COL) >= 2)
           .select(F.explode(F.expr(
                       f"transform(sequence(0, size({TOKENS_COL}) - 2), "
@@ -1217,7 +1196,7 @@ def dsir_bucket_scores(df: DataFrame, target_pred: str,
     artifact discipline (IVF centroids, Bloom bits): B counters
     however big the corpus. Overflow: tcnt·SCALE stays in int64 up to
     ~9e12 target tokens per bucket; shrink SCALE past that."""
-    d = with_tokens(_spread(df.where(F.col(text_col).isNotNull())), text_col)
+    d = with_tokens(spread(df.where(F.col(text_col).isNotNull())), text_col)
     h = f"(CAST(conv(substring(md5(x), 1, 8), 16, 10) AS BIGINT) % {MERSENNE31})"
     cnt = (d.select(F.expr(f"CAST({target_pred} AS INT)").alias("is_t"),
                     F.explode(F.expr(
@@ -1618,7 +1597,7 @@ def textrank_keywords(df: DataFrame, text_col: str = "text",
     per iteration regardless of corpus bytes."""
     from pyspark.sql import Window
     from .graph import pagerank_exact
-    bg = (with_tokens(_spread(df.where(F.col(text_col).isNotNull())), text_col)
+    bg = (with_tokens(spread(df.where(F.col(text_col).isNotNull())), text_col)
           .where(F.size(TOKENS_COL) >= 2)
           .select(F.explode(F.expr(
                       f"transform(sequence(0, size({TOKENS_COL}) - 2), "
@@ -1670,7 +1649,7 @@ def rake_keywords(df: DataFrame, id_col: str = "doc_id",
     mega-phrase."""
     from pyspark.sql import Window
     stop = STOPWORDS["en"]
-    u = (with_tokens(_spread(df.where(F.col(text_col).isNotNull())), text_col)
+    u = (with_tokens(spread(df.where(F.col(text_col).isNotNull())), text_col)
          .select(id_col, F.posexplode(TOKENS_COL).alias("pos", "w")))
     ns = u.where(~F.col("w").isin(*stop))
     wi = Window.partitionBy(id_col).orderBy("pos")
@@ -1771,7 +1750,7 @@ def trigram_fluency(df: DataFrame, id_col: str = "doc_id",
     plus one 1-row total broadcast, then the per-doc hash agg — the
     bigram op's shape with one extra vocabulary-keyed exchange."""
     from pyspark.sql import Window
-    tg = (with_tokens(_spread(df.where(F.col(text_col).isNotNull())), text_col)
+    tg = (with_tokens(spread(df.where(F.col(text_col).isNotNull())), text_col)
           .where(F.size(TOKENS_COL) >= 3)
           .select(F.col(id_col),
                   F.explode(F.expr(

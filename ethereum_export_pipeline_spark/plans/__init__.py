@@ -31,76 +31,26 @@ for _mod_queries in (eth.QUERIES, llm.QUERIES, _STREAM_QUERIES,
 
 #: Per-round rotation of the driver's 50-entry graded window.
 #:
-#: The driver hash-grades only the FIRST 50 catalog entries each round
-#: (tools/oracle_check.py still verifies ALL entries locally). Rounds
-#: 1-8 accumulated driver-stamped green rows for all 247 distinct
-#: catalog queries with zero failures (CORRECTNESS_r0{1-8}.json) —
-#: full coverage; from round 9 the window is additions + the
-#: oldest-stamp re-grade queue. Round 9: (a) the 3 round-9 additions,
-#: graded the round they land, (b) doc_ssjoin_prefix re-graded
-#: because its PLAN was rewritten this round (a stamp certifies the
-#: code that earned it), and (c) the 46 oldest stamps: the 7 r02
-#: entries displaced last round (promised first in the r8 note) and
-#: 39 of the 40 remaining r04 stamps — q_window_topn (r04, untouched
-#: since) heads the round-10 queue, after which the oldest stamp
-#: anywhere in the ledger is r05. Everything demoted stays green in
-#: the full local sweep.
-#: Round 10: (a) the round-10 addition `doc_crawl_manifest` (the
-#: composed crawl→train-manifest flagship the r9 verdict asked for),
-#: graded the round it lands; (b) re-grades of REWRITTEN code, per
-#: the r9 ssjoin precedent that a stamp certifies the code that
-#: earned it: `mm_jpeg_stats` (the entropy decoder was rewritten
-#: table-driven this round — bit-identity on the fixture is proven
-#: by test, but the stamp should certify the shipping decoder) and
-#: `eth_bucketed_join` (its ingest's table naming/eviction changed
-#: this round, and it carried a touched-in-r09 r08 stamp already);
-#: (c) `q_window_topn` — the last r04 stamp; (d) 46 of the 50 r05
-#: stamps in ledger order (stream_interval_join{,_outer},
-#: stream_session_window, stream_static_enrich head the round-11
-#: queue, after which the oldest stamp anywhere is r06). Everything
-#: demoted stays green in the full local sweep.
-#: Round 11: (a) the round-11 additions `doc_link_authority`
-#: (host-PageRank link weighting) and `stream_crawl_gate` (stateless
-#: streaming strip+gate, the crawl funnel's live-ingest head), graded
-#: the round they land; (b)
-#: re-grades of code REWRITTEN this round, per the r9/r10 precedent
-#: that a stamp certifies the code that earned it: `eth_bucketed_join`
-#: (its ingest's eviction now parks same-app entries in the orphan
-#: registry instead of DROPping them — the r10 ADVICE fix) and
-#: `eth_dual_export` + `eth_dual_precision` (the dualprec CSV memo
-#: gained the dead-orphan sweep; eth_dual_export is also the r10
-#: bench's biggest unadjudicated regression, so a fresh stamp both
-#: certifies and re-times it); (c) the 4 remaining r05 stamps
-#: (stream_interval_join{,_outer}, stream_session_window,
-#: stream_static_enrich — promised first in the r10 note); (d) 38 of
-#: the 50 r06 stamps in ledger order — three more round-11 additions
-#: (q_rate_limit_schedule, q_join_size_estimate, doc_pseudonymize,
-#: landed later in the round) displaced the last three r06 slots
-#: (mm_image_neardup, stream_histogram, stream_trending), which now
-#: HEAD the round-12 queue, followed by stream_decontaminate,
-#: q_salted_agg, q_attribution, q_entity_resolution, q_k_anonymity,
-#: q_sketch_percentiles, q_l_diversity, q_t_closeness,
-#: q_asof_skew_bucketed, after which the oldest stamp anywhere is
-#: r07. Everything demoted stays green in the full local sweep.
-#: Round 12 (optimization round 2): (a) re-grades of every path whose
-#: CODE was rewritten in optimization rounds 11-12, per the r9-r11
-#: precedent that a stamp certifies the code that earned it — the r11
-#: rewrites (k-means literal-centroid assign, ssjoin memo consumers,
-#: bpe-merge memo, sized-shingle paths, fuzzy revert closure, pagerank
-#: cadence, reorg lazy walk) and the r12 rewrites (bm25 scalar-subtree
-#: merge → doc_bm25 + doc_hybrid_rrf, the shared shingle-index
-#: checkpoint → doc_minhash_pairs/quality, doc_incremental_neardup,
-#: doc_crawl_manifest, plus the bpe_train cadence knob → doc_bpe_*),
-#: with doc_dedup_clusters + doc_dedup_canonical as representatives of
-#: the rewritten pair-graph build's memo consumers (the remaining
-#: consumers stay green in the full local sweep); (b) the 12 promised
-#: r06 stamps (mm_image_neardup, stream_histogram, stream_trending
-#: head the queue per the r11 note; q_entity_resolution is already in
-#: (a)), emptying the pre-r07 backlog; (c) the first 20 r07 stamps in
-#: ledger order (doc_hybrid_rrf and doc_minhash_quality are already in
-#: (a)) — q19_bracket_revenue, q_event_transitions, q_props_keys,
-#: doc_dup_source_matrix, doc_sentence_dedup head the round-13 queue.
-#: Everything demoted stays green in the full local sweep.
+#: Rule: the grader hash-grades only the FIRST 50 catalog entries each
+#: round (tools/oracle_check.py still verifies ALL entries locally).
+#: A round's window is (a) the round's additions, graded the round
+#: they land; (b) re-grades of every path whose CODE was rewritten —
+#: a stamp certifies the code that earned it; (c) the oldest stamps in
+#: ledger order. Everything demoted stays green in the full local
+#: sweep.
+#: Round 12 (optimization round 2): (a) the r11 rewrites (k-means
+#: literal-centroid assign, ssjoin memo consumers, bpe-merge memo,
+#: sized-shingle paths, fuzzy revert closure, pagerank cadence, reorg
+#: lazy walk) and the r12 rewrites (bm25 scalar-subtree merge →
+#: doc_bm25 + doc_hybrid_rrf, the shared shingle-index checkpoint →
+#: doc_minhash_pairs/quality, doc_incremental_neardup,
+#: doc_crawl_manifest, the bpe_train cadence → doc_bpe_*), with
+#: doc_dedup_clusters + doc_dedup_canonical representing the rewritten
+#: pair-graph build's memo consumers; (b) the 12 promised r06 stamps,
+#: emptying the pre-r07 backlog; (c) the first 20 r07 stamps in ledger
+#: order.
+#: Round-13 queue head: q19_bracket_revenue, q_event_transitions,
+#: q_props_keys, doc_dup_source_matrix, doc_sentence_dedup.
 _WINDOW_R12 = (
     # (a) r11-rewritten re-grades
     "emb_kmeans_assign",
@@ -158,185 +108,6 @@ _WINDOW_R12 = (
     "q10_returned_items",
 )
 
-_WINDOW_R11 = (
-    "doc_link_authority",
-    "stream_crawl_gate",
-    "q_rate_limit_schedule",
-    "q_join_size_estimate",
-    "doc_pseudonymize",
-    "eth_bucketed_join",
-    "eth_dual_export",
-    "eth_dual_precision",
-    "stream_interval_join",
-    "stream_interval_join_outer",
-    "stream_session_window",
-    "stream_static_enrich",
-    "eth_jsonl_roundtrip",
-    "eth_orc_roundtrip",
-    "doc_winnow_census",
-    "doc_incremental_neardup",
-    "doc_classifier_score",
-    "doc_dsir_weights",
-    "doc_global_rank",
-    "doc_vocab_coverage",
-    "doc_textrank",
-    "doc_rake_keywords",
-    "doc_trigram_fluency",
-    "emb_pca_scores",
-    "emb_mmr_rerank",
-    "q_skew_profile",
-    "q_mad_outliers",
-    "q_bitmap_coactivity",
-    "q5_local_supplier",
-    "q9_product_profit",
-    "q16_supplier_counts",
-    "stream_ooo_census",
-    "eth_schema_evolution",
-    "q_hierarchy_rollup",
-    "q_seasonality",
-    "q_cohort_ltv",
-    "emb_ivf_recall",
-    "stream_pattern_match",
-    "doc_script_census",
-    "q_abtest_readout",
-    "emb_knn_linkpred",
-    "emb_cluster_labels",
-    "emb_cell_outliers",
-    "emb_snapshot_drift",
-    "emb_density_sample",
-    "emb_hard_negatives",
-    "emb_semantic_decontaminate",
-    "mm_scene_cuts",
-    "mm_audio_resample",
-    "mm_audio_vad",
-)
-
-_WINDOW_R10 = (
-    "doc_crawl_manifest",
-    "mm_jpeg_stats",
-    "eth_bucketed_join",
-    "q_window_topn",
-    "doc_apply_changes",
-    "doc_bigram_fluency",
-    "doc_bloom_decontaminate",
-    "doc_bm25",
-    "doc_bpe_encode",
-    "doc_bpe_merges",
-    "doc_collocations",
-    "doc_containment",
-    "doc_dedup_clusters_star",
-    "doc_distinct_sketch",
-    "doc_dup_kcore",
-    "doc_dup_lpa",
-    "doc_dup_triangles",
-    "doc_heavy_hitters",
-    "doc_mixture_weights",
-    "doc_snapshot_diff",
-    "doc_source_overlap",
-    "doc_substring_spans",
-    "doc_token_drift",
-    "doc_trade_pagerank",
-    "emb_ann_recall",
-    "emb_jl_rerank",
-    "emb_kmeans_assign",
-    "emb_knn_graph",
-    "emb_label_centroids",
-    "emb_semdedup_cells",
-    "eth_compaction_plan",
-    "eth_gap_audit",
-    "eth_incremental_todo",
-    "eth_quality_audit",
-    "eth_reorg_resolve",
-    "eth_table_profile",
-    "eth_zorder_key",
-    "mm_audio_dedup",
-    "mm_audio_features",
-    "mm_phash_dedup",
-    "q_activity_streaks",
-    "q_events_funnel",
-    "q_events_retention",
-    "q_fuzzy_match",
-    "q_interval_overlap",
-    "q_rfm_segments",
-    "q_scd2_asof",
-    "q_scd2_versions",
-    "stream_cusum_alerts",
-    "stream_dedup_watermarked",
-)
-
-_WINDOW_R9 = (
-    # round-9 additions (new this round, graded immediately):
-    # eth_dual_export — dual-precision limbs carried through the J1
-    # keyed-fetch semi join (the export-DAG loop the r8 verdict asked
-    # to close); mm_jpeg_stats — real baseline-JFIF lossy codec on an
-    # exactly-lossless block-constant fixture.
-    "eth_dual_export",
-    "mm_jpeg_stats",
-    # doc_neardup_recall — LSH recall vs the exact-tier ground truth
-    # per jaccard band (the missed-pairs audit SCALE.md assigns the
-    # exact tier; estimator quality only scores pairs LSH found)
-    "doc_neardup_recall",
-    # re-grade of a REWRITTEN operator: doc_ssjoin_prefix's plan
-    # changed materially this round (exact-dup collapse + adaptive
-    # l=2 prefix count + array-attach verify — the r8 verdict's one
-    # `weak`), so its r08 stamp certifies the old plan, not this one.
-    "doc_ssjoin_prefix",
-    # the 7 r02 entries displaced by round-8's additions — the oldest
-    # stamps in the ledger, promised first in the r8 rotation note
-    "q13_cust_order_dist",
-    "q14_promo_effect",
-    "q16_not_exists",
-    "q9_like_filter",
-    "q18_large_orders",
-    "q22_idle_balances",
-    "q15_top_supplier",
-    # stale-stamp re-grades: ALL 40 remaining r04 stamps — this
-    # empties the pre-r05 backlog entirely (after this round the
-    # oldest stamp anywhere in the 247-query ledger is r05).
-    # eth_xml_roundtrip (r08 stamp, oracle coalesce touched r09) and
-    # eth_bucketed_join (r08 stamp, ingest memoized r09 — same plan)
-    # stay out: both remain green in the full local sweep.
-    "doc_decontaminate",
-    "doc_dedup_canonical",
-    "doc_dedup_clusters",
-    "doc_dedup_exact",
-    "doc_delete_ids",
-    "doc_filter_funnel",
-    "doc_language_id",
-    "doc_minhash_pairs",
-    "doc_mix_sample",
-    "doc_ngram_pairs",
-    "doc_pack",
-    "doc_pii_scrub",
-    "doc_quality",
-    "doc_simhash_pairs",
-    "doc_tfidf",
-    "doc_training_manifest",
-    "emb_ivf_topk",
-    "emb_ivfpq_topk",
-    "emb_lsh_topk",
-    "emb_neardup_multiband",
-    "emb_semantic_dedup",
-    "eth_range_join",
-    "eth_resolve_choice",
-    "eth_sql_surface",
-    "eth_token_transfers",
-    "mm_binary_stats",
-    "mm_extract_features",
-    "mm_frame_sample",
-    "mm_resize",
-    "q17_small_qty",
-    "q1_pricing_summary",
-    "q21_sole_supplier",
-    "q2_min_cost_supplier",
-    "q7_volume_shipping",
-    "q_asof_join",
-    "stream_chain_scan",
-    "stream_dedup",
-    "stream_sessions",
-    "stream_tumbling_counts",
-)
-
 ALL_QUERIES: dict[str, Query] = {n: _MERGED[n] for n in _WINDOW_R12}
 for _name, _q in _MERGED.items():
     if _name not in ALL_QUERIES:
@@ -347,9 +118,6 @@ for _name, _q in _MERGED.items():
 _window = list(ALL_QUERIES)[:50]
 assert len(_WINDOW_R12) == 50, len(_WINDOW_R12)
 assert _window == list(_WINDOW_R12), "window drifted from rotation"
-assert set(_WINDOW_R11) <= set(_MERGED), "r11 window names must stay valid"
-assert set(_WINDOW_R10) <= set(_MERGED), "r10 window names must stay valid"
-assert set(_WINDOW_R9) <= set(_MERGED), "r9 window names must stay valid"
 
 
 def flagship(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -23,6 +23,7 @@ import functools
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..artifacts import artifact
+from ..execution import spread
 from ..functions import (MERSENNE31, affine_hash_sql, h32_sql,
                           h60_sql, tokens_sql)
 from ..operators import dedup, multimodal, similarity, sketch, text
@@ -193,8 +194,7 @@ def _winnow_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan, cross-doc fingerprint reuse per doc — the sampled
     exact-match detector at ~1/8 of substring_dup_spans' exchange."""
     return dedup.winnow_shared_census(
-        load_table(spark, sf_dir, "documents"),
-        scan_parallelism=spark.sparkContext.defaultParallelism)
+        load_table(spark, sf_dir, "documents"))
 
 
 def _winnow_census_sql() -> str:
@@ -802,12 +802,9 @@ def get_quantizers() -> tuple[list[list[int]], list[list[list[int]]]]:
 
 
 def _ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # scan_parallelism self-decides: the one-file fixture spreads the
-    # compute-bound cell assignment, an already-split table is left be
     return similarity.ivf_topk(
         load_table(spark, sf_dir, "embeddings"), get_quantizers()[0],
-        k=TOPK_K,
-        scan_parallelism=spark.sparkContext.defaultParallelism)
+        k=TOPK_K)
 
 
 def _ivf_cell_sql() -> str:
@@ -839,8 +836,7 @@ cos AS (SELECT query_id, neighbor_id, {_COS} AS cosine FROM scored)
 def _ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents, books = get_quantizers()
     return similarity.ivfpq_topk(
-        load_table(spark, sf_dir, "embeddings"), cents, books, k=TOPK_K,
-        scan_parallelism=spark.sparkContext.defaultParallelism)
+        load_table(spark, sf_dir, "embeddings"), cents, books, k=TOPK_K)
 
 
 def _ivfpq_packed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -852,8 +848,7 @@ def _ivfpq_packed(spark: SparkSession, sf_dir: str) -> DataFrame:
     the Horner nibble packing is value-pinned."""
     cents, books = get_quantizers()
     return similarity.ivfpq_packed_topk(
-        load_table(spark, sf_dir, "embeddings"), cents, books, k=TOPK_K,
-        scan_parallelism=spark.sparkContext.defaultParallelism)
+        load_table(spark, sf_dir, "embeddings"), cents, books, k=TOPK_K)
 
 
 def _ivfpq_packed_sql() -> str:
@@ -1645,11 +1640,9 @@ def _crawl_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r11, guide §2.5): a one-file corpus runs the whole strip on one
     # core otherwise; the checkpointed frame then hands its width to
     # all seven downstream consumers. No-op on well-split input.
-    from ..operators.similarity import _ensure_scan_width
-    crawl = (_ensure_scan_width(
-                 load_table(spark, sf_dir, "documents")
-                 .where("text IS NOT NULL").select("doc_id", "source", "text"),
-                 spark.sparkContext.defaultParallelism)
+    crawl = (spread(load_table(spark, sf_dir, "documents")
+                    .where("text IS NOT NULL")
+                    .select("doc_id", "source", "text"))
              .selectExpr("doc_id", "source", f"{wrapped} AS html")
              .selectExpr("doc_id", "source", f"{stripped} AS text")
              .localCheckpoint(eager=True))
@@ -4351,8 +4344,7 @@ def _substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     times corpus-wide (operators/dedup.substring_dup_spans). One
     posting per corpus character shuffles; span merge is per-doc."""
     return dedup.substring_dup_spans(
-        load_table(spark, sf_dir, "documents"),
-        scan_parallelism=spark.sparkContext.defaultParallelism)
+        load_table(spark, sf_dir, "documents"))
 
 
 _SUBSTR_L = dedup.SUBSTR_GRAM_LEN
@@ -5284,9 +5276,7 @@ def _ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     tuning measurement next to `emb_ann_recall`'s band/plane one."""
     return similarity.ivf_recall_report(
         load_table(spark, sf_dir, "embeddings"), get_quantizers()[0],
-        k=TOPK_K,
-        scan_parallelism=spark.sparkContext.defaultParallelism,
-        exact=_exact_topk(spark, sf_dir))
+        k=TOPK_K, exact=_exact_topk(spark, sf_dir))
 
 
 def _ivf_recall_sql() -> str:
@@ -5340,9 +5330,7 @@ def _pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents, books = get_quantizers()
     return similarity.pq_recall_report(
         load_table(spark, sf_dir, "embeddings"), cents, books,
-        k=TOPK_K,
-        scan_parallelism=spark.sparkContext.defaultParallelism,
-        exact=_exact_topk(spark, sf_dir))
+        k=TOPK_K, exact=_exact_topk(spark, sf_dir))
 
 
 def _pq_recall_sql() -> str:

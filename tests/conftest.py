@@ -223,3 +223,17 @@ def scratch_eviction(spark, tmp_path):
         memo.clear()
         memo.update(saved)
     artifacts._ORPHANS[:] = saved_orph
+
+
+@pytest.fixture
+def reliable_checkpoint_dir(spark, tmp_path):
+    """The SparkContext checkpoint dir set for one test, so
+    `execution.checkpoint` truncates lineage reliably; yields the dir.
+    The dir is global context state: teardown clears it, or it would
+    make every later test's iterative operators reliable too."""
+    sc = spark.sparkContext
+    d = str(tmp_path / "reliable_ckpt")
+    sc.setCheckpointDir(d)
+    yield d
+    unset = spark._jvm.scala.Option.empty()
+    getattr(sc._jsc.sc(), "checkpointDir_$eq")(unset)

@@ -469,7 +469,7 @@ def test_ivfpq_duplicate_is_nearest_by_adc(spark):
     assert top[0].neighbor_id == 10
 
 
-def test_connected_components_raises_on_nonconvergence(spark, tmp_path):
+def test_connected_components_raises_on_nonconvergence(spark, request):
     import pytest as _pytest
     from ethereum_export_pipeline_spark.operators.dedup import (
         connected_components)
@@ -480,9 +480,9 @@ def test_connected_components_raises_on_nonconvergence(spark, tmp_path):
     with _pytest.raises(RuntimeError, match="did not converge"):
         connected_components(chain, max_iter=1)
     # reliable-checkpoint path produces the same fixpoint
+    request.getfixturevalue("reliable_checkpoint_dir")
     got = {r.doc_id: r.cluster_id
-           for r in connected_components(
-               chain, checkpoint_dir=str(tmp_path / "ckpt")).collect()}
+           for r in connected_components(chain).collect()}
     assert got == {i: 0 for i in range(6)}
 
 
@@ -642,16 +642,15 @@ def test_crossmodal_agreement_identical_and_orthogonal(spark):
 
 
 def test_ensure_scan_width_skips_already_split_input(spark):
-    """The IVF scan-parallelism knob must only repartition a NARROW
-    scan: an input already split at least as wide keeps its partitions
-    (no round-robin shuffle of the 100 TB table)."""
-    from ethereum_export_pipeline_spark.operators.similarity import (
-        _ensure_scan_width)
+    """`execution.spread` must only repartition a NARROW scan: an
+    input already split at least `defaultParallelism` wide keeps its
+    partitions (no round-robin shuffle of the 100 TB table)."""
+    from ethereum_export_pipeline_spark.execution import spread
+    par = spark.sparkContext.defaultParallelism
     narrow = spark.range(100).coalesce(1)
-    assert _ensure_scan_width(narrow, 8).rdd.getNumPartitions() == 8
-    wide = spark.range(100).repartition(16)
-    assert _ensure_scan_width(wide, 8) is wide        # untouched plan
-    assert _ensure_scan_width(wide, None) is wide
+    assert spread(narrow).rdd.getNumPartitions() == par
+    wide = spark.range(100).repartition(par * 2)
+    assert spread(wide) is wide                       # untouched plan
 
 
 def test_bmp_roundtrip_and_dispatch():
@@ -746,19 +745,18 @@ def test_pagerank_empty_graph(spark):
     assert pagerank_exact(edges).count() == 0
 
 
-def test_pagerank_reliable_checkpoint_dir(spark, tmp_path):
-    """checkpoint_dir swaps localCheckpoint for a reliable checkpoint
-    (the 1000-executor setting): identical ranks, and the dir actually
-    receives RDD checkpoint data."""
+def test_pagerank_reliable_checkpoint_dir(spark, request):
+    """A context checkpoint dir swaps localCheckpoint for a reliable
+    checkpoint (the 1000-executor setting): identical ranks, and the
+    dir actually receives RDD checkpoint data."""
     import os
     from ethereum_export_pipeline_spark.operators.graph import pagerank_exact
     edges = spark.createDataFrame(
         [("A", "B"), ("B", "A"), ("A", "C")], "src string, dst string")
-    ck = str(tmp_path / "reliable_ckpt")
     local = {r.node: r.rank for r in pagerank_exact(edges, iters=3).collect()}
+    ck = request.getfixturevalue("reliable_checkpoint_dir")
     rel = {r.node: r.rank
-           for r in pagerank_exact(edges, iters=3,
-                                   checkpoint_dir=ck).collect()}
+           for r in pagerank_exact(edges, iters=3).collect()}
     assert rel == local
     assert any(files for _, _, files in os.walk(ck))  # data was written
 

@@ -46,7 +46,7 @@ AMPLIFY = 10
 #:
 #: minhash_pairs and crawl_manifest were RE-PINNED in the round-11
 #: optimization pass, per this test's own protocol (×100 re-measure
-#: before accepting a new envelope): the `_ensure_scan_width` spread
+#: before accepting a new envelope): the `execution.spread` spread
 #: adds ONE deliberate round-robin exchange of the (id, text) corpus
 #: before the tokenize-heavy scan stages — linear by construction
 #: (~33 MB at ×10, the corpus once) and a measured wall-clock WIN

@@ -326,11 +326,9 @@ def main() -> int:
     bench("lsh_topk",
           lambda: similarity.lsh_topk(big_emb, n_bands=2))
     bench("ivf_topk",
-          lambda: similarity.ivf_topk(big_emb, get_quantizers()[0],
-                                      scan_parallelism=cpus))
+          lambda: similarity.ivf_topk(big_emb, get_quantizers()[0]))
     bench("ivfpq_topk",
-          lambda: similarity.ivfpq_topk(big_emb, *get_quantizers(),
-                                        scan_parallelism=cpus))
+          lambda: similarity.ivfpq_topk(big_emb, *get_quantizers()))
     bench("neardup_multiband",
           lambda: similarity.embedding_neardup_pairs(big_emb, n_bands=3))
 
@@ -480,8 +478,7 @@ def main() -> int:
     # corpus char — the heaviest text op by design), CMS heavy
     # hitters, bigram fluency, k-core peel over the dup graph
     bench("substring_spans",
-          lambda: dedup.substring_dup_spans(big_docs,
-                                            scan_parallelism=cpus))
+          lambda: dedup.substring_dup_spans(big_docs))
     bench("heavy_hitters", lambda: sk.cms_heavy_hitters(big_docs))
     bench("bigram_fluency", lambda: text.bigram_fluency(big_docs))
 
@@ -812,8 +809,7 @@ def main() -> int:
     # winnow: O(corpus chars) CPU inside the scan, ~n/8 selected
     # fingerprints as rows — claimed ~1/8 of substring_spans' wire
     bench("winnow_census",
-          lambda: dedup.winnow_shared_census(big_docs,
-                                             scan_parallelism=cpus))
+          lambda: dedup.winnow_shared_census(big_docs))
 
     def incremental_neardup():
         # daily-ingest shape: 1% of the corpus as the new batch vs
@@ -920,21 +916,18 @@ def main() -> int:
     bench_no_broadcast(
         "ivf_topk_bulk",
         lambda: similarity.ivf_topk(big_emb, get_quantizers()[0],
-                                    query_pred=BULK_PRED,
-                                    scan_parallelism=cpus))
+                                    query_pred=BULK_PRED))
     bench_no_broadcast(
         "ivfpq_topk_bulk",
         lambda: similarity.ivfpq_topk(big_emb, *get_quantizers(),
-                                      query_pred=BULK_PRED,
-                                      scan_parallelism=cpus))
+                                      query_pred=BULK_PRED))
     # the packed variant: candidate payload is ONE BIGINT instead of
     # the m-int code array — the shuffle_write delta vs ivfpq_bulk is
     # the array-serialization overhead the packing removes
     bench_no_broadcast(
         "ivfpq_packed_bulk",
         lambda: similarity.ivfpq_packed_topk(big_emb, *get_quantizers(),
-                                             query_pred=BULK_PRED,
-                                             scan_parallelism=cpus))
+                                             query_pred=BULK_PRED))
 
     # round-9 additions: the round-8 graded queries not yet amplified
     # (changepoint under series-count amplification, the zone-map

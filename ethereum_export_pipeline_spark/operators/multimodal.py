@@ -19,26 +19,35 @@ audio-envelope fingerprints. PNG is a REAL compressed codec here
 numpy unfilter of all five scanline filters), and so is baseline
 JPEG (`decode_jpeg`: marker walk, DHT/DQT parse, Huffman entropy
 decode, dequant + vectorized IDCT) — proof that both lossless and
-lossy compressed formats slot into the same `mapInPandas` with only
-the codec swapped; container video (MP4) takes decord in
-production, never a change to the Spark-side plumbing.
+lossy compressed formats slot into the same row kernel with only the
+codec swapped; container video (MP4) takes decord in production,
+never a change to the Spark-side plumbing.
 
-Scale notes: binary payloads dominate row size, so feature extraction
-uses `mapInPandas` (Arrow batches, zero row-at-a-time serde) and
+One Python boundary: every generator and media kernel here is a plain
+per-row function run by `map_rows` — the engine's only `mapInPandas`
+call. `map_rows` owns the Arrow batch loop, the row → pandas
+conversion and the dtype rule that lets an empty or all-NULL batch
+convert like a full one; callers `select` only the columns their
+kernel reads, so the `meta` struct never crosses into Python.
+
+Scale notes: binary payloads dominate row size, so the boundary moves
+Arrow batches (zero row-at-a-time serde) and
 `spark.sql.files.maxPartitionBytes` should be sized so one batch of
-payloads fits executor memory (e.g. 64 MB batches of ~1 MB images).
+payloads fits executor memory (e.g. 64 MB batches of ~1 MB images);
+the per-batch row cap for ~10 MB rows is the `RUNTIME_CONFS` caveat
+in `session.py`.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
+from typing import Callable, Iterable
 
 import pandas as pd
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.sql import types as T
 
-from ..execution import spread
+from ..execution import checkpoint, spread
 
 MEDIA_SCHEMA = T.StructType([
     T.StructField("media_id", T.LongType()),
@@ -64,94 +73,107 @@ FEATURE_SCHEMA = T.StructType([
     T.StructField("px_hist", T.ArrayType(T.LongType())),
 ])
 
+# what every generator (and the re-encoding kernels) emit
+PAYLOAD_SCHEMA = T.StructType([
+    T.StructField("media_id", T.LongType()),
+    T.StructField("payload", T.BinaryType()),
+])
 
-def documents_as_media(df: DataFrame, id_col: str = "doc_id",
-                       text_col: str = "text") -> DataFrame:
-    """Make an opaque-binary media table out of the documents fixture:
-    payload = utf-8 bytes, metadata struct alongside — the canonical
-    multimodal column layout."""
-    payload = F.encode(F.col(text_col), "utf-8")
-    # every documents_as_*_media spreads the light (id, text) rows
-    # BEFORE generating payloads, so media bytes never cross an
-    # exchange (pinned by test_scene_cuts_no_shuffle)
-    return spread(df.select(F.col(id_col), F.col(text_col))).select(
-        F.col(id_col).alias("media_id"),
-        payload.alias("payload"),
+
+def map_rows(df: DataFrame, kernel: Callable[..., Iterable[tuple]],
+             schema: T.StructType | str) -> DataFrame:
+    """`kernel(*row)` over `df`'s rows in Arrow batches, each call
+    yielding 0..N output tuples in `schema` order — the engine's one
+    Python boundary. Rows arrive as Python values (int, str, bytes,
+    None); output columns are object dtype, so an empty or all-NULL
+    batch converts to Arrow exactly like a full one (pandas would
+    otherwise infer float64 for it)."""
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    names = schema.fieldNames()
+
+    def convert(pdfs: Iterable[pd.DataFrame]) -> Iterable[pd.DataFrame]:
+        for pdf in pdfs:
+            rows = [out for row in pdf.itertuples(index=False, name=None)
+                    for out in kernel(*row)]
+            yield pd.DataFrame(rows, columns=names, dtype=object)
+
+    return df.mapInPandas(convert, schema)
+
+
+def _doc_rows(df: DataFrame) -> DataFrame:
+    """(media_id, text) from the documents fixture — the light rows
+    every generator reads. All but the WAV generator (measured, see
+    `documents_as_wav_media`) `spread` them BEFORE generating
+    payloads, so media bytes never cross an exchange (pinned by
+    test_scene_cuts_no_shuffle)."""
+    return df.select(F.col("doc_id").alias("media_id"), "text")
+
+
+def _with_meta(media: DataFrame, fmt: str) -> DataFrame:
+    """(media_id, payload) plus the typed metadata struct."""
+    return media.select(
+        "media_id", "payload",
         F.struct(
-            F.lit("text/plain").alias("format"),
-            F.octet_length(payload).cast("long").alias("n_bytes"),
-            F.lit(None).cast("int").alias("width"),
-            F.lit(None).cast("int").alias("height"),
-        ).alias("meta"),
-    )
-
-
-def documents_as_ppm_media(df: DataFrame, id_col: str = "doc_id",
-                           text_col: str = "text",
-                           format_col: str | None = None,
-                           neardup_mod: int | None = None,
-                           neardup_offset: int = 1_000_000) -> DataFrame:
-    """The IMAGE media fixture: one real P6 PPM per document, pixel
-    plane tiled deterministically from the utf-8 text bytes (byte j of
-    the plane = text byte j mod len; all-zero when the text is empty),
-    dimensions varying per id (w = 8 + id % 9, h = 8 + id % 7) so the
-    decoder's header parsing is exercised across shapes. NULL text →
-    NULL payload. Deterministic by construction, so an oracle can
-    recompute every decoded-pixel statistic from the text alone.
-
-    `neardup_mod` additionally emits, for every doc with id % mod ==
-    0, a NEAR-duplicate copy at media_id = id + `neardup_offset`:
-    same image with its first pixel forced to white — the
-    re-encode-with-a-small-edit fixture the banded-hamming near-dup
-    search exists to catch (the `_DIRTY_NAME` discipline: the
-    corruption is deterministic and part of the query, so the oracle
-    recomputes the copy's every hash bit too)."""
-    import numpy as np
-
-    id_out, txt, fmt = "media_id", "__txt", "__fmt"
-    src = spread(
-        df.select(F.col(id_col).alias(id_out),
-                  F.col(text_col).alias(txt),
-                  (F.col(format_col) if format_col
-                   else F.lit("image/x-portable-pixmap")).alias(fmt)))
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, payloads, formats = [], [], []
-            for mid, text, f in zip(pdf[id_out], pdf[txt], pdf[fmt]):
-                ids.append(mid)
-                formats.append(f)
-                if text is None:
-                    payloads.append(None)
-                    continue
-                w, h = 8 + int(mid) % 9, 8 + int(mid) % 7
-                raw = np.frombuffer(text.encode("utf-8"), np.uint8)
-                plane = (np.resize(raw, w * h * 3) if raw.size
-                         else np.zeros(w * h * 3, np.uint8))
-                payloads.append(encode_netpbm(plane.reshape(h, w, 3)))
-                if neardup_mod is not None and int(mid) % neardup_mod == 0:
-                    plane2 = plane.copy()
-                    plane2[0:3] = 255
-                    ids.append(int(mid) + neardup_offset)
-                    formats.append(f)
-                    payloads.append(encode_netpbm(plane2.reshape(h, w, 3)))
-            yield pd.DataFrame({id_out: pd.Series(ids, dtype="int64"),
-                                "payload": payloads,
-                                fmt: formats})
-
-    made = src.mapInPandas(run, T.StructType([
-        T.StructField(id_out, T.LongType()),
-        T.StructField("payload", T.BinaryType()),
-        T.StructField(fmt, T.StringType()),
-    ]))
-    return made.select(
-        id_out, "payload",
-        F.struct(
-            F.col(fmt).alias("format"),
+            F.lit(fmt).alias("format"),
             F.octet_length("payload").cast("long").alias("n_bytes"),
             F.lit(None).cast("int").alias("width"),
             F.lit(None).cast("int").alias("height"),
         ).alias("meta"))
+
+
+def _tiled_plane(mid: int, text: str):
+    """The image fixtures' pixel plane: h×w×3 uint8, byte j = text
+    byte j mod len (all-zero for empty text), w = 8 + id % 9,
+    h = 8 + id % 7."""
+    import numpy as np
+    w, h = 8 + mid % 9, 8 + mid % 7
+    raw = np.frombuffer(text.encode("utf-8"), np.uint8)
+    plane = (np.resize(raw, w * h * 3) if raw.size
+             else np.zeros(w * h * 3, np.uint8))
+    return plane.reshape(h, w, 3)
+
+
+def documents_as_media(df: DataFrame) -> DataFrame:
+    """Make an opaque-binary media table out of the documents fixture:
+    payload = utf-8 bytes, metadata struct alongside — the canonical
+    multimodal column layout."""
+    return _with_meta(
+        spread(_doc_rows(df)).select(
+            "media_id", F.encode("text", "utf-8").alias("payload")),
+        "text/plain")
+
+
+def documents_as_ppm_media(df: DataFrame,
+                           neardup_mod: int | None = None) -> DataFrame:
+    """The IMAGE media fixture: one real P6 PPM per document, pixel
+    plane tiled deterministically from the utf-8 text bytes
+    (`_tiled_plane`), dimensions varying per id so the decoder's
+    header parsing is exercised across shapes. NULL text → NULL
+    payload. Deterministic by construction, so an oracle can
+    recompute every decoded-pixel statistic from the text alone.
+
+    `neardup_mod` additionally emits, for every doc with id % mod ==
+    0, a NEAR-duplicate copy at media_id = id + 1,000,000: same image
+    with its first pixel forced to white — the
+    re-encode-with-a-small-edit fixture the banded-hamming near-dup
+    search exists to catch (the `_DIRTY_NAME` discipline: the
+    corruption is deterministic and part of the query, so the oracle
+    recomputes the copy's every hash bit too)."""
+
+    def ppm(mid, text):
+        if text is None:
+            yield mid, None
+            return
+        plane = _tiled_plane(mid, text)
+        yield mid, encode_netpbm(plane)
+        if neardup_mod is not None and mid % neardup_mod == 0:
+            plane = plane.copy()
+            plane[0, 0] = 255
+            yield mid + 1_000_000, encode_netpbm(plane)
+
+    return _with_meta(map_rows(spread(_doc_rows(df)), ppm, PAYLOAD_SCHEMA),
+                      "image/x-portable-pixmap")
 
 
 # ------------------------------------------------------- netpbm codec
@@ -335,9 +357,9 @@ def encode_bmp(pixels) -> bytes:
 #
 # A REAL compressed image codec with zero third-party deps: zlib is
 # Python stdlib and PNG unfiltering is integer numpy arithmetic. This
-# closes the "compressed formats would slot into the same mapInPandas"
+# closes the "compressed formats would slot into the same row kernel"
 # claim above with a working instance — the Spark-side plumbing
-# (binary column in, mapInPandas decode, exact-integer features out)
+# (binary column in, `map_rows` decode, exact-integer features out)
 # is byte-identical to the netpbm path; only the codec differs.
 
 PNG_SIG = b"\x89PNG\r\n\x1a\n"
@@ -932,8 +954,7 @@ def decode_jpeg(payload: bytes | None):
     return None
 
 
-def documents_as_jpeg_media(df: DataFrame, id_col: str = "doc_id",
-                            text_col: str = "text") -> DataFrame:
+def documents_as_jpeg_media(df: DataFrame) -> DataFrame:
     """The LOSSY-codec fixture, built to be exactly gradable: one
     real grayscale JPEG per document with a BLOCK-CONSTANT plane —
     w = 8·(1 + id % 4), h = 8·(1 + id % 3), and every 8×8 block
@@ -949,94 +970,41 @@ def documents_as_jpeg_media(df: DataFrame, id_col: str = "doc_id",
     error instead."""
     import numpy as np
 
-    id_out, txt = "media_id", "__txt"
-    src = spread(
-        df.select(F.col(id_col).alias(id_out),
-                  F.col(text_col).alias(txt)))
+    def jpeg(mid, text):
+        if text is None:
+            return [(mid, None)]
+        bw, bh = 1 + mid % 4, 1 + mid % 3
+        raw = np.frombuffer(text.encode("utf-8"), np.uint8)
+        vals = (np.resize(raw, bw * bh) if raw.size
+                else np.zeros(bw * bh, np.uint8))
+        plane = np.repeat(np.repeat(vals.reshape(bh, bw), 8, 0), 8, 1)
+        return [(mid, encode_jpeg(plane))]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, payloads = [], []
-            for mid, text in zip(pdf[id_out], pdf[txt]):
-                ids.append(mid)
-                if text is None:
-                    payloads.append(None)
-                    continue
-                bw, bh = 1 + int(mid) % 4, 1 + int(mid) % 3
-                raw = np.frombuffer(text.encode("utf-8"), np.uint8)
-                vals = (np.resize(raw, bw * bh) if raw.size
-                        else np.zeros(bw * bh, np.uint8))
-                plane = np.repeat(np.repeat(vals.reshape(bh, bw), 8, 0),
-                                  8, 1)
-                payloads.append(encode_jpeg(plane))
-            yield pd.DataFrame({id_out: pd.Series(ids, dtype="int64"),
-                                "payload": payloads})
-
-    made = src.mapInPandas(run, T.StructType([
-        T.StructField(id_out, T.LongType()),
-        T.StructField("payload", T.BinaryType()),
-    ]))
-    return made.select(
-        id_out, "payload",
-        F.struct(
-            F.lit("image/jpeg").alias("format"),
-            F.octet_length("payload").cast("long").alias("n_bytes"),
-            F.lit(None).cast("int").alias("width"),
-            F.lit(None).cast("int").alias("height"),
-        ).alias("meta"))
+    return _with_meta(map_rows(spread(_doc_rows(df)), jpeg, PAYLOAD_SCHEMA),
+                      "image/jpeg")
 
 
-def documents_as_png_media(df: DataFrame, id_col: str = "doc_id",
-                           text_col: str = "text") -> DataFrame:
+def documents_as_png_media(df: DataFrame) -> DataFrame:
     """The COMPRESSED image fixture: one real PNG per document, SAME
-    deterministic pixel plane as `documents_as_ppm_media` (byte j of
-    the plane = text byte j mod len; w = 8 + id % 9, h = 8 + id % 7;
-    NULL text → NULL payload), so any oracle that can recompute the
-    netpbm fixture's decoded-pixel statistics verifies this one too —
-    the hash difference between the two queries is exactly the codec.
-    Scanline filters cycle y % 5, so every image carries all five
-    filter types through the zlib stream."""
-    import numpy as np
+    deterministic pixel plane as `documents_as_ppm_media`
+    (`_tiled_plane`; NULL text → NULL payload), so any oracle that can
+    recompute the netpbm fixture's decoded-pixel statistics verifies
+    this one too — the hash difference between the two queries is
+    exactly the codec. Scanline filters cycle y % 5, so every image
+    carries all five filter types through the zlib stream."""
 
-    id_out, txt = "media_id", "__txt"
-    src = spread(
-        df.select(F.col(id_col).alias(id_out),
-                  F.col(text_col).alias(txt)))
+    def png(mid, text):
+        return [(mid, None if text is None
+                 else encode_png(_tiled_plane(mid, text)))]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, payloads = [], []
-            for mid, text in zip(pdf[id_out], pdf[txt]):
-                ids.append(mid)
-                if text is None:
-                    payloads.append(None)
-                    continue
-                w, h = 8 + int(mid) % 9, 8 + int(mid) % 7
-                raw = np.frombuffer(text.encode("utf-8"), np.uint8)
-                plane = (np.resize(raw, w * h * 3) if raw.size
-                         else np.zeros(w * h * 3, np.uint8))
-                payloads.append(encode_png(plane.reshape(h, w, 3)))
-            yield pd.DataFrame({id_out: pd.Series(ids, dtype="int64"),
-                                "payload": payloads})
-
-    made = src.mapInPandas(run, T.StructType([
-        T.StructField(id_out, T.LongType()),
-        T.StructField("payload", T.BinaryType()),
-    ]))
-    return made.select(
-        id_out, "payload",
-        F.struct(
-            F.lit("image/png").alias("format"),
-            F.octet_length("payload").cast("long").alias("n_bytes"),
-            F.lit(None).cast("int").alias("width"),
-            F.lit(None).cast("int").alias("height"),
-        ).alias("meta"))
+    return _with_meta(map_rows(spread(_doc_rows(df)), png, PAYLOAD_SCHEMA),
+                      "image/png")
 
 
-def extract_features(media: DataFrame, batch_hint: int = 1024) -> DataFrame:
+def extract_features(media: DataFrame) -> DataFrame:
     """Arrow-batched image feature extraction over the binary column
-    via mapInPandas — decode REAL pixels (`decode_image`), then exact
-    integer statistics over the decoded array: per-channel sums and an
+    — decode REAL pixels (`decode_image`), then exact integer
+    statistics over the decoded array: per-channel sums and an
     8-bucket intensity histogram (bucket = pixel >> 5). Exact ints
     keep the features engine-checkable; a production embedding model
     slots in at the `dec` site with the same batch shape.
@@ -1045,42 +1013,18 @@ def extract_features(media: DataFrame, batch_hint: int = 1024) -> DataFrame:
     exception), so corrupt media is countable downstream."""
     import numpy as np
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            cols: dict[str, list] = {k: [] for k in (
-                "media_id", "n_bytes", "width", "height", "channels",
-                "ch_sum", "px_hist")}
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                cols["media_id"].append(mid)
-                cols["n_bytes"].append(0 if payload is None else len(payload))
-                dec = decode_image(payload)
-                if dec is None:
-                    for k in ("width", "height", "channels", "ch_sum",
-                              "px_hist"):
-                        cols[k].append(None)
-                    continue
-                w, h, c, px = dec
-                cols["width"].append(w)
-                cols["height"].append(h)
-                cols["channels"].append(c)
-                cols["ch_sum"].append(
-                    [int(v) for v in px.sum(axis=(0, 1), dtype=np.int64)])
-                cols["px_hist"].append(
-                    [int(v) for v in np.bincount((px >> 5).ravel(),
-                                                 minlength=8)])
-            # explicit dtypes: an empty batch would otherwise infer
-            # float64 for the list columns and break Arrow conversion
-            yield pd.DataFrame({
-                "media_id": pd.Series(cols["media_id"], dtype="int64"),
-                "n_bytes": pd.Series(cols["n_bytes"], dtype="int64"),
-                "width": pd.Series(cols["width"], dtype="object"),
-                "height": pd.Series(cols["height"], dtype="object"),
-                "channels": pd.Series(cols["channels"], dtype="object"),
-                "ch_sum": pd.Series(cols["ch_sum"], dtype="object"),
-                "px_hist": pd.Series(cols["px_hist"], dtype="object"),
-            })
+    def features(mid, payload):
+        n_bytes = 0 if payload is None else len(payload)
+        dec = decode_image(payload)
+        if dec is None:
+            return [(mid, n_bytes, None, None, None, None, None)]
+        w, h, c, px = dec
+        return [(mid, n_bytes, w, h, c,
+                 px.sum(axis=(0, 1), dtype=np.int64).tolist(),
+                 np.bincount((px >> 5).ravel(), minlength=8).tolist())]
 
-    return media.mapInPandas(run, FEATURE_SCHEMA)
+    return map_rows(media.select("media_id", "payload"), features,
+                    FEATURE_SCHEMA)
 
 
 def resize_media(media: DataFrame, target_w: int = 64,
@@ -1094,42 +1038,19 @@ def resize_media(media: DataFrame, target_w: int = 64,
     filtered resample; everything else is identical."""
     import numpy as np
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, outs, ws, hs, nbs = [], [], [], [], []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                ids.append(mid)
-                dec = decode_image(payload)
-                if dec is None:
-                    outs.append(None)
-                    ws.append(None)
-                    hs.append(None)
-                    nbs.append(0)
-                    continue
-                w, h, _, px = dec
-                ys = (np.arange(target_h) * h) // target_h
-                xs = (np.arange(target_w) * w) // target_w
-                enc = encode_netpbm(px[ys[:, None], xs[None, :], :])
-                outs.append(enc)
-                ws.append(target_w)
-                hs.append(target_h)
-                nbs.append(len(enc))
-            yield pd.DataFrame({
-                "media_id": pd.Series(ids, dtype="int64"),
-                "payload": outs,
-                "width": pd.Series(ws, dtype="object"),
-                "height": pd.Series(hs, dtype="object"),
-                "n_bytes": pd.Series(nbs, dtype="int64"),
-            })
+    def resize(mid, payload):
+        dec = decode_image(payload)
+        if dec is None:
+            return [(mid, None, None, None, 0)]
+        w, h, _, px = dec
+        ys = (np.arange(target_h) * h) // target_h
+        xs = (np.arange(target_w) * w) // target_w
+        enc = encode_netpbm(px[ys[:, None], xs[None, :], :])
+        return [(mid, enc, target_w, target_h, len(enc))]
 
-    schema = T.StructType([
-        T.StructField("media_id", T.LongType()),
-        T.StructField("payload", T.BinaryType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("n_bytes", T.LongType()),
-    ])
-    return media.mapInPandas(run, schema)
+    return map_rows(media.select("media_id", "payload"), resize,
+                    "media_id long, payload binary, width int, "
+                    "height int, n_bytes long")
 
 
 # ------------------------------------------------------ wav/pcm codec
@@ -1213,32 +1134,19 @@ def extract_audio_features(media: DataFrame) -> DataFrame:
     Undecodable payloads yield NULL audio fields."""
     import numpy as np
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            cols: dict[str, list] = {k: [] for k in (
-                "media_id", "n_bytes", "sample_rate", "n_samples",
-                "amp_sum", "crossings")}
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                cols["media_id"].append(mid)
-                cols["n_bytes"].append(0 if payload is None else len(payload))
-                dec = decode_wav(payload)
-                if dec is None:
-                    for k in ("sample_rate", "n_samples", "amp_sum",
-                              "crossings"):
-                        cols[k].append(None)
-                    continue
-                rate, channels, bits, samples = dec
-                mono = samples[:, 0].astype(np.int64)
-                mid_line = 128 if bits == 8 else 0
-                above = mono >= mid_line
-                cols["sample_rate"].append(rate)
-                cols["n_samples"].append(int(samples.shape[0]))
-                cols["amp_sum"].append(int(mono.sum()))
-                cols["crossings"].append(
-                    int((above[1:] != above[:-1]).sum()))
-            yield pd.DataFrame(cols)
+    def features(mid, payload):
+        n_bytes = 0 if payload is None else len(payload)
+        dec = decode_wav(payload)
+        if dec is None:
+            return [(mid, n_bytes, None, None, None, None)]
+        rate, _, bits, samples = dec
+        mono = samples[:, 0].astype(np.int64)
+        above = mono >= (128 if bits == 8 else 0)
+        return [(mid, n_bytes, rate, samples.shape[0], int(mono.sum()),
+                 int((above[1:] != above[:-1]).sum()))]
 
-    return media.mapInPandas(run, AUDIO_FEATURE_SCHEMA)
+    return map_rows(media.select("media_id", "payload"), features,
+                    AUDIO_FEATURE_SCHEMA)
 
 
 VAD_EPS = 31      # |sample − midline| ≤ eps ⇒ "silent" (−12 dBFS-ish)
@@ -1268,55 +1176,36 @@ def audio_silence_runs(media: DataFrame, eps: int = VAD_EPS,
     integers of decoded content (the `extract_audio_features` grading
     discipline).
 
-    Scale shape: one Arrow-batched `mapInPandas` projection, zero
+    Scale shape: one Arrow-batched projection (`map_rows`), zero
     shuffle — run-length extraction is vectorized numpy (diff on the
     silent mask), never a per-sample Python loop."""
     import numpy as np
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            cols: dict[str, list] = {k: [] for k in (
-                "media_id", "n_samples", "n_runs", "n_silent",
-                "longest_run", "lead_in")}
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                cols["media_id"].append(mid)
-                dec = decode_wav(payload)
-                if dec is None:
-                    for k in ("n_samples", "n_runs", "n_silent",
-                              "longest_run", "lead_in"):
-                        cols[k].append(None)
-                    continue
-                _, _, bits, samples = dec
-                mono = samples[:, 0].astype(np.int64)
-                mid_line = 128 if bits == 8 else 0
-                n = mono.shape[0]
-                m = np.abs(mono - mid_line) <= eps
-                if n == 0 or not m.any():
-                    cols["n_samples"].append(n)
-                    for k in ("n_runs", "n_silent", "longest_run",
-                              "lead_in"):
-                        cols[k].append(0)
-                    continue
-                d = np.diff(m.astype(np.int8))
-                starts = np.flatnonzero(d == 1) + 1
-                ends = np.flatnonzero(d == -1) + 1
-                if m[0]:
-                    starts = np.concatenate(([0], starts))
-                if m[-1]:
-                    ends = np.concatenate((ends, [n]))
-                lens = ends - starts
-                q = lens >= min_run
-                cols["n_samples"].append(n)
-                cols["n_runs"].append(int(q.sum()))
-                cols["n_silent"].append(int(lens[q].sum()))
-                cols["longest_run"].append(
-                    int(lens[q].max()) if q.any() else 0)
-                cols["lead_in"].append(
-                    int(lens[0]) if (q.size and q[0] and starts[0] == 0)
-                    else 0)
-            yield pd.DataFrame(cols)
+    def runs(mid, payload):
+        dec = decode_wav(payload)
+        if dec is None:
+            return [(mid, None, None, None, None, None)]
+        _, _, bits, samples = dec
+        mono = samples[:, 0].astype(np.int64)
+        n = mono.shape[0]
+        m = np.abs(mono - (128 if bits == 8 else 0)) <= eps
+        if n == 0 or not m.any():
+            return [(mid, n, 0, 0, 0, 0)]
+        d = np.diff(m.astype(np.int8))
+        starts = np.flatnonzero(d == 1) + 1
+        ends = np.flatnonzero(d == -1) + 1
+        if m[0]:
+            starts = np.concatenate(([0], starts))
+        if m[-1]:
+            ends = np.concatenate((ends, [n]))
+        lens = ends - starts
+        q = lens >= min_run
+        return [(mid, n, int(q.sum()), int(lens[q].sum()),
+                 int(lens[q].max()) if q.any() else 0,
+                 int(lens[0]) if (q.size and q[0] and starts[0] == 0)
+                 else 0)]
 
-    return media.mapInPandas(run, VAD_SCHEMA)
+    return map_rows(media.select("media_id", "payload"), runs, VAD_SCHEMA)
 
 
 def resample_audio(media: DataFrame, target_rate: int = 8_000) -> DataFrame:
@@ -1330,37 +1219,25 @@ def resample_audio(media: DataFrame, target_rate: int = 8_000) -> DataFrame:
     for a windowed-sinc filter; the plumbing — Arrow batches, binary
     in/out, codec roundtrip — is identical.
 
-    Scale shape: one mapInPandas projection, no shuffle; per-byte
+    Scale shape: one projection (`map_rows`), no shuffle; per-byte
     numpy cost, same as the image tier (measured in SCALE.md)."""
     import numpy as np
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, outs = [], []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                ids.append(mid)
-                dec = decode_wav(payload)
-                if dec is None:
-                    outs.append(None)
-                    continue
-                rate, _, bits, samples = dec
-                mono = samples[:, 0]
-                n_out = (mono.shape[0] * target_rate) // rate
-                idx = (np.arange(n_out) * rate) // target_rate
-                outs.append(encode_wav(mono[idx], target_rate))
-            yield pd.DataFrame({"media_id": pd.Series(ids, dtype="int64"),
-                                "payload": outs})
+    def resample(mid, payload):
+        dec = decode_wav(payload)
+        if dec is None:
+            return [(mid, None)]
+        rate, _, _, samples = dec
+        mono = samples[:, 0]
+        n_out = (mono.shape[0] * target_rate) // rate
+        idx = (np.arange(n_out) * rate) // target_rate
+        return [(mid, encode_wav(mono[idx], target_rate))]
 
-    return media.select("media_id", "payload").mapInPandas(
-        run, T.StructType([
-            T.StructField("media_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]))
+    return map_rows(media.select("media_id", "payload"), resample,
+                    PAYLOAD_SCHEMA)
 
 
-def documents_as_wav_media(df: DataFrame, id_col: str = "doc_id",
-                           text_col: str = "text",
-                           sample_rate: int = 16_000) -> DataFrame:
+def documents_as_wav_media(df: DataFrame) -> DataFrame:
     """The AUDIO media fixture: one real 8-bit mono PCM WAV per
     document whose sample data IS the utf-8 text bytes — deterministic,
     so the oracle recomputes every decoded-sample statistic from the
@@ -1373,28 +1250,13 @@ def documents_as_wav_media(df: DataFrame, id_col: str = "doc_id",
     2.53 s at ×10 (3 chained mapInPandas × 32 task/Arrow setups cost
     more than the work they parallelize), so the audio family keeps
     the narrow scan; a well-split real corpus provides width anyway."""
-    id_out, txt = "media_id", "__txt"
-    src = df.select(F.col(id_col).alias(id_out),
-                    F.col(text_col).alias(txt))
-
     import numpy as np
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, payloads = [], []
-            for mid, text in zip(pdf[id_out], pdf[txt]):
-                ids.append(mid)
-                payloads.append(
-                    None if text is None else
-                    encode_wav(np.frombuffer(text.encode("utf-8"),
-                                             np.uint8), sample_rate))
-            yield pd.DataFrame({id_out: pd.Series(ids, dtype="int64"),
-                                "payload": payloads})
+    def wav(mid, text):
+        return [(mid, None if text is None else encode_wav(
+            np.frombuffer(text.encode("utf-8"), np.uint8)))]
 
-    return src.mapInPandas(run, T.StructType([
-        T.StructField(id_out, T.LongType()),
-        T.StructField("payload", T.BinaryType()),
-    ]))
+    return map_rows(_doc_rows(df), wav, PAYLOAD_SCHEMA)
 
 
 FRAME_SCHEMA = T.StructType([
@@ -1420,53 +1282,28 @@ def sample_frames(media: DataFrame, n_frames: int = 4) -> DataFrame:
     produce no rows (countable upstream via extract_features)."""
     import numpy as np
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            cols: dict[str, list] = {k: [] for k in (
-                "media_id", "sample_idx", "src_frame", "width", "height",
-                "ch_sum")}
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                frames = demux_netpbm_stream(payload)
-                if not frames:
-                    continue
-                total = len(frames)
-                picks = (range(total) if total <= n_frames else
-                         [(k * total) // n_frames for k in range(n_frames)])
-                for k, fi in enumerate(picks):
-                    w, h, c, px = frames[fi]
-                    cols["media_id"].append(mid)
-                    cols["sample_idx"].append(k)
-                    cols["src_frame"].append(fi)
-                    cols["width"].append(w)
-                    cols["height"].append(h)
-                    cols["ch_sum"].append(
-                        [int(v) for v in px.sum(axis=(0, 1),
-                                                dtype=np.int64)])
-            # explicit dtypes: an all-skipped batch would otherwise
-            # infer float64 for the list column and break the Arrow
-            # conversion
-            yield pd.DataFrame({
-                "media_id": pd.Series(cols["media_id"], dtype="int64"),
-                "sample_idx": pd.Series(cols["sample_idx"], dtype="int64"),
-                "src_frame": pd.Series(cols["src_frame"], dtype="int64"),
-                "width": pd.Series(cols["width"], dtype="object"),
-                "height": pd.Series(cols["height"], dtype="object"),
-                "ch_sum": pd.Series(cols["ch_sum"], dtype="object"),
-            })
+    def frames_of(mid, payload):
+        frames = demux_netpbm_stream(payload) or []
+        total = len(frames)
+        picks = (range(total) if total <= n_frames else
+                 [(k * total) // n_frames for k in range(n_frames)])
+        for k, fi in enumerate(picks):
+            w, h, _, px = frames[fi]
+            yield (mid, k, fi, w, h,
+                   px.sum(axis=(0, 1), dtype=np.int64).tolist())
 
-    return media.mapInPandas(run, FRAME_SCHEMA)
+    return map_rows(media.select("media_id", "payload"), frames_of,
+                    FRAME_SCHEMA)
 
 
-def documents_as_video_media(df: DataFrame, id_col: str = "doc_id",
-                             text_col: str = "text",
-                             frame_w: int = 8, frame_h: int = 8,
+def documents_as_video_media(df: DataFrame,
                              scene_at_half: bool = False) -> DataFrame:
-    """The VIDEO media fixture: one concatenated-netpbm stream per
-    document with 2 + id % 5 frames; frame f's pixel plane is the text
-    bytes tiled with a start offset of f (byte j = text[(j + f) mod
-    len]), so frames differ deterministically and an oracle can
-    recompute any sampled frame's statistics. NULL text → NULL
-    payload; empty text → all-zero frames.
+    """The VIDEO media fixture: one concatenated-netpbm stream of 8×8
+    RGB frames per document with 2 + id % 5 frames; frame f's pixel
+    plane is the text bytes tiled with a start offset of f (byte j =
+    text[(j + f) mod len]), so frames differ deterministically and an
+    oracle can recompute any sampled frame's statistics. NULL text →
+    NULL payload; empty text → all-zero frames.
 
     `scene_at_half=True` INVERTS (255−v) every frame from total//2 on
     — a deterministic hard scene boundary mid-clip (consecutive
@@ -1475,51 +1312,68 @@ def documents_as_video_media(df: DataFrame, id_col: str = "doc_id",
     graded against."""
     import numpy as np
 
-    id_out, txt = "media_id", "__txt"
-    src = spread(
-        df.select(F.col(id_col).alias(id_out), F.col(text_col).alias(txt)))
-    n_px = frame_w * frame_h * 3
+    def video(mid, text):
+        if text is None:
+            return [(mid, None)]
+        raw = np.frombuffer(text.encode("utf-8"), np.uint8)
+        total = 2 + mid % 5
+        frames = []
+        for f in range(total):
+            plane = (np.resize(np.roll(raw, -f), 8 * 8 * 3) if raw.size
+                     else np.zeros(8 * 8 * 3, np.uint8))
+            if scene_at_half and f >= total // 2:
+                plane = (255 - plane).astype(np.uint8)
+            frames.append(encode_netpbm(plane.reshape(8, 8, 3)))
+        return [(mid, b"".join(frames))]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, payloads = [], []
-            for mid, text in zip(pdf[id_out], pdf[txt]):
-                ids.append(mid)
-                if text is None:
-                    payloads.append(None)
-                    continue
-                raw = np.frombuffer(text.encode("utf-8"), np.uint8)
-                total = 2 + int(mid) % 5
-                frames = []
-                for f in range(total):
-                    if raw.size:
-                        plane = np.resize(np.roll(raw, -f), n_px)
-                    else:
-                        plane = np.zeros(n_px, np.uint8)
-                    if scene_at_half and f >= total // 2:
-                        plane = (255 - plane).astype(np.uint8)
-                    frames.append(encode_netpbm(
-                        plane.reshape(frame_h, frame_w, 3)))
-                payloads.append(b"".join(frames))
-            yield pd.DataFrame({id_out: pd.Series(ids, dtype="int64"),
-                                "payload": payloads})
-
-    return src.mapInPandas(run, T.StructType([
-        T.StructField(id_out, T.LongType()),
-        T.StructField("payload", T.BinaryType()),
-    ]))
+    return map_rows(spread(_doc_rows(df)), video, PAYLOAD_SCHEMA)
 
 
-def binary_stats(media: DataFrame, format_col: str = "meta.format") -> DataFrame:
+def binary_stats(media: DataFrame) -> DataFrame:
     """Oracle-checkable part of the multimodal surface: pure byte-level
     accounting over the binary column (no decode)."""
     return (
-        media.groupBy(F.col(format_col).alias("format"))
+        media.groupBy(F.col("meta.format").alias("format"))
              .agg(F.count(F.lit(1)).alias("n_items"),
                   F.sum(F.octet_length("payload")).cast("long").alias("total_bytes"),
                   F.max(F.octet_length("payload")).cast("long").alias("max_bytes"),
                   F.min(F.octet_length("payload")).cast("long").alias("min_bytes"))
     )
+
+
+def _hash_words(bits) -> tuple[int, int]:
+    """Bit sequence (bit k = bits[k]) packed into a 64-bit value, as
+    two BIGINTs (hash_hi, hash_lo: bits 32-63 / 0-31 — one int64
+    would overflow the sign bit)."""
+    val = 0
+    for k, b in enumerate(bits):
+        val |= int(b) << k
+    return val >> 32, val & 0xFFFFFFFF
+
+
+def _ahash(decoded, grid: int) -> tuple[int, int]:
+    """aHash of one decoded image (w, h, c, pixels): nearest-neighbor
+    downsample to `grid`×`grid`, integer grayscale (r+g+b) div c,
+    integer mean over the grid, bit k = gray_k > mean (k = y·grid+x)."""
+    import numpy as np
+    w, h, c, px = decoded
+    ys = (np.arange(grid) * h) // grid
+    xs = (np.arange(grid) * w) // grid
+    gray = px[ys][:, xs, :].astype(np.int64).sum(axis=2) // c
+    mean = int(gray.sum()) // (grid * grid)
+    return _hash_words((gray > mean).ravel())
+
+
+def _hash_groups(hashed: DataFrame) -> DataFrame:
+    """The `dedup_exact` group report on a (hash_hi, hash_lo) key:
+    (media_id, hash_hi, hash_lo, n_copies, keep_id) with keep_id the
+    group's min id."""
+    w = Window.partitionBy("hash_hi", "hash_lo")
+    return (hashed
+            .withColumn("n_copies", F.count(F.lit(1)).over(w).cast("long"))
+            .withColumn("keep_id", F.min("media_id").over(w).cast("long"))
+            .select("media_id", "hash_hi", "hash_lo", "n_copies",
+                    "keep_id"))
 
 
 def ahash_images(media: DataFrame, grid: int = 8) -> DataFrame:
@@ -1539,53 +1393,23 @@ def ahash_images(media: DataFrame, grid: int = 8) -> DataFrame:
     overflow the sign bit). NULL/undecodable payloads are excluded,
     dedup_exact's NULL-text discipline.
 
-    Scale shape: the decode+hash is one Arrow mapInPandas projection
+    Scale shape: the decode+hash is one Arrow projection (`map_rows`)
     (embarrassingly parallel, no shuffle); downstream grouping is a
     hash-agg on a 64-bit key — exactly `dedup_exact`'s plan."""
-    import numpy as np
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, his, los = [], [], []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                dec = decode_image(payload)
-                if dec is None:
-                    continue
-                w, h, c, px = dec
-                ys = (np.arange(grid) * h) // grid
-                xs = (np.arange(grid) * w) // grid
-                sub = px[ys][:, xs, :].astype(np.int64)
-                gray = sub.sum(axis=2) // c              # grid×grid
-                mean = int(gray.sum()) // (grid * grid)
-                bits = (gray > mean).ravel()             # k = y*grid+x
-                val = 0
-                for k, b in enumerate(bits):
-                    val |= int(b) << k
-                ids.append(mid)
-                his.append(val >> 32)
-                los.append(val & 0xFFFFFFFF)
-            yield pd.DataFrame({
-                "media_id": pd.Series(ids, dtype="int64"),
-                "hash_hi": pd.Series(his, dtype="int64"),
-                "hash_lo": pd.Series(los, dtype="int64"),
-            })
+    def ahash(mid, payload):
+        dec = decode_image(payload)
+        return [] if dec is None else [(mid, *_ahash(dec, grid))]
 
-    return media.mapInPandas(
-        run, "media_id long, hash_hi long, hash_lo long")
+    return map_rows(media.select("media_id", "payload"), ahash,
+                    "media_id long, hash_hi long, hash_lo long")
 
 
 def ahash_dup_groups(media: DataFrame, grid: int = 8) -> DataFrame:
     """Perceptual duplicate grouping: aHash per image, then the
     `dedup_exact` group report on the hash key — (media_id, hash_hi,
     hash_lo, n_copies, keep_id) with keep_id the group's min id."""
-    from pyspark.sql import Window
-    hashed = ahash_images(media, grid)
-    w = Window.partitionBy("hash_hi", "hash_lo")
-    return (hashed
-            .withColumn("n_copies", F.count(F.lit(1)).over(w).cast("long"))
-            .withColumn("keep_id", F.min("media_id").over(w).cast("long"))
-            .select("media_id", "hash_hi", "hash_lo", "n_copies",
-                    "keep_id"))
+    return _hash_groups(ahash_images(media, grid))
 
 
 def audio_fingerprint_groups(media: DataFrame, grid: int = 64) -> DataFrame:
@@ -1598,47 +1422,21 @@ def audio_fingerprint_groups(media: DataFrame, grid: int = 64) -> DataFrame:
     while byte-level dedup sees two distinct blobs.
 
     Zero-sample and undecodable/NULL payloads are excluded. The
-    decode+hash is one Arrow mapInPandas projection; grouping is
+    decode+hash is one Arrow projection (`map_rows`); grouping is
     `dedup_exact`'s hash-agg on the 64-bit key."""
     import numpy as np
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, his, los = [], [], []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                dec = decode_wav(payload)
-                if dec is None:
-                    continue
-                _, _, bits_depth, samples = dec
-                n = samples.shape[0]
-                if n == 0:
-                    continue
-                ch = samples[:, 0].astype(np.int64)
-                idx = (np.arange(grid) * n) // grid
-                pts = ch[idx]
-                mean = int(pts.sum()) // grid
-                bits = pts > mean
-                val = 0
-                for k, b in enumerate(bits):
-                    val |= int(b) << k
-                ids.append(mid)
-                his.append(val >> 32)
-                los.append(val & 0xFFFFFFFF)
-            yield pd.DataFrame({
-                "media_id": pd.Series(ids, dtype="int64"),
-                "hash_hi": pd.Series(his, dtype="int64"),
-                "hash_lo": pd.Series(los, dtype="int64"),
-            })
+    def fingerprint(mid, payload):
+        dec = decode_wav(payload)
+        if dec is None or len(dec[3]) == 0:
+            return []
+        ch = dec[3][:, 0].astype(np.int64)
+        pts = ch[(np.arange(grid) * len(ch)) // grid]
+        return [(mid, *_hash_words(pts > int(pts.sum()) // grid))]
 
-    hashed = media.mapInPandas(
-        run, "media_id long, hash_hi long, hash_lo long")
-    from pyspark.sql import Window
-    w = Window.partitionBy("hash_hi", "hash_lo")
-    return (hashed
-            .withColumn("n_copies", F.count(F.lit(1)).over(w).cast("long"))
-            .withColumn("keep_id", F.min("media_id").over(w).cast("long"))
-            .select("media_id", "hash_hi", "hash_lo", "n_copies",
-                    "keep_id"))
+    return _hash_groups(map_rows(
+        media.select("media_id", "payload"), fingerprint,
+        "media_id long, hash_hi long, hash_lo long"))
 
 
 def ahash_neardup_pairs(media: DataFrame, grid: int = 8,
@@ -1697,45 +1495,30 @@ def patch_grid_stats(media: DataFrame, grid: int = 2) -> DataFrame:
     the oracle recomputes them). NULL/undecodable payloads produce
     no rows.
 
-    Scale shape: one Arrow mapInPandas projection (vectorized numpy
+    Scale shape: one Arrow projection (`map_rows`) (vectorized numpy
     block sums), zero shuffle; downstream consumers group by
     media_id, a hash-agg."""
     import numpy as np
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            cols: dict[str, list] = {k: [] for k in (
-                "media_id", "patch_row", "patch_col", "n_px",
-                "sum_r", "sum_g", "sum_b", "mean_gray")}
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                dec = decode_image(payload)
-                if dec is None:
-                    continue
-                w, h, c, px = dec
-                px64 = px.astype(np.int64)
-                for r in range(grid):
-                    y0, y1 = (r * h) // grid, ((r + 1) * h) // grid
-                    for cc in range(grid):
-                        x0, x1 = (cc * w) // grid, ((cc + 1) * w) // grid
-                        block = px64[y0:y1, x0:x1, :]
-                        n_px = (y1 - y0) * (x1 - x0)
-                        s = block.sum(axis=(0, 1))
-                        cols["media_id"].append(mid)
-                        cols["patch_row"].append(r)
-                        cols["patch_col"].append(cc)
-                        cols["n_px"].append(n_px)
-                        cols["sum_r"].append(int(s[0]))
-                        cols["sum_g"].append(int(s[1]))
-                        cols["sum_b"].append(int(s[2]))
-                        cols["mean_gray"].append(
-                            int(s.sum()) // (3 * n_px) if n_px else 0)
-            yield pd.DataFrame({k: pd.Series(v, dtype="int64")
-                                for k, v in cols.items()})
+    def patches(mid, payload):
+        dec = decode_image(payload)
+        if dec is None:
+            return
+        w, h, _, px = dec
+        px64 = px.astype(np.int64)
+        for r in range(grid):
+            y0, y1 = (r * h) // grid, ((r + 1) * h) // grid
+            for cc in range(grid):
+                x0, x1 = (cc * w) // grid, ((cc + 1) * w) // grid
+                n_px = (y1 - y0) * (x1 - x0)
+                s = px64[y0:y1, x0:x1, :].sum(axis=(0, 1))
+                yield (mid, r, cc, n_px, int(s[0]), int(s[1]), int(s[2]),
+                       int(s.sum()) // (3 * n_px) if n_px else 0)
 
-    return media.mapInPandas(
-        run, "media_id long, patch_row long, patch_col long, "
-             "n_px long, sum_r long, sum_g long, sum_b long, "
-             "mean_gray long")
+    return map_rows(media.select("media_id", "payload"), patches,
+                    "media_id long, patch_row long, patch_col long, "
+                    "n_px long, sum_r long, sum_g long, sum_b long, "
+                    "mean_gray long")
 
 
 VIDEO_NEARDUP_J = 0.3    # frame-set Jaccard cut for video near-dup
@@ -1756,39 +1539,15 @@ def video_frame_hashes(media: DataFrame, grid: int = 8) -> DataFrame:
     of frame hashes, which `video_neardup_pairs` compares set-wise —
     robust to re-encodes that preserve frames (aHash absorbs resize)
     and to trims (set containment still overlaps). One Arrow
-    mapInPandas projection, no shuffle."""
-    import numpy as np
+    projection (`map_rows`), no shuffle."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, fidx, his, los = [], [], [], []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                frames = demux_netpbm_stream(payload)
-                if not frames:
-                    continue
-                for fi, (w, h, c, px) in enumerate(frames):
-                    ys = (np.arange(grid) * h) // grid
-                    xs = (np.arange(grid) * w) // grid
-                    sub = px[ys][:, xs, :].astype(np.int64)
-                    gray = sub.sum(axis=2) // c
-                    mean = int(gray.sum()) // (grid * grid)
-                    bits = (gray > mean).ravel()
-                    val = 0
-                    for k, b in enumerate(bits):
-                        val |= int(b) << k
-                    ids.append(mid)
-                    fidx.append(fi)
-                    his.append(val >> 32)
-                    los.append(val & 0xFFFFFFFF)
-            yield pd.DataFrame({
-                "media_id": pd.Series(ids, dtype="int64"),
-                "frame_idx": pd.Series(fidx, dtype="int64"),
-                "hash_hi": pd.Series(his, dtype="int64"),
-                "hash_lo": pd.Series(los, dtype="int64"),
-            })
+    def frame_hashes(mid, payload):
+        for fi, frame in enumerate(demux_netpbm_stream(payload) or []):
+            yield (mid, fi, *_ahash(frame, grid))
 
-    return media.mapInPandas(
-        run, "media_id long, frame_idx long, hash_hi long, hash_lo long")
+    return map_rows(media.select("media_id", "payload"), frame_hashes,
+                    "media_id long, frame_idx long, hash_hi long, "
+                    "hash_lo long")
 
 
 def video_neardup_pairs(media: DataFrame, grid: int = 8,
@@ -1812,11 +1571,10 @@ def video_neardup_pairs(media: DataFrame, grid: int = 8,
     # One decode pass: the distinct frame-hash frame (≤ frames/clip
     # rows per video — tiny next to the payload bytes) feeds FOUR
     # consumers (df-cut, both join sides, sizes); without the eager
-    # cut each consumer re-executes the mapInPandas demux+decode+hash
+    # cut each consumer re-executes the demux+decode+hash projection
     # (11 parquet scans / 16 MapInPandas nodes in the dumped plan).
-    fh = (video_frame_hashes(media, grid)
-          .select("media_id", "hash_hi", "hash_lo").distinct()
-          .localCheckpoint(eager=True))
+    fh = checkpoint(video_frame_hashes(media, grid)
+                    .select("media_id", "hash_hi", "hash_lo").distinct())
     keep = (fh.groupBy("hash_hi", "hash_lo")
               .agg(F.count(F.lit(1)).alias("df"))
               .where(F.col("df") <= max_df)
@@ -1864,34 +1622,19 @@ def scene_cuts(media: DataFrame,
     Single-frame/NULL/undecodable payloads emit nothing.
 
     A production pipeline swaps the demuxer for pyav and SAD for a
-    histogram/SSIM delta; the Spark shape — one Arrow `mapInPandas`
-    projection, zero shuffle, per-clip cost linear in decoded bytes —
+    histogram/SSIM delta; the Spark shape — one Arrow projection
+    (`map_rows`), zero shuffle, per-clip cost linear in decoded bytes —
     is identical (the `sample_frames` contract)."""
     import numpy as np
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            cols: dict[str, list] = {k: [] for k in (
-                "media_id", "frame_idx", "sad", "is_cut")}
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                frames = demux_netpbm_stream(payload)
-                if not frames or len(frames) < 2:
-                    continue
-                planes = [px.astype(np.int64) for (_, _, _, px) in frames]
-                for f in range(1, len(planes)):
-                    if planes[f].shape != planes[f - 1].shape:
-                        continue    # resolution change = trivial cut,
-                                    # not a SAD question; skip the pair
-                    sad = int(np.abs(planes[f] - planes[f - 1]).sum())
-                    cols["media_id"].append(mid)
-                    cols["frame_idx"].append(f)
-                    cols["sad"].append(sad)
-                    cols["is_cut"].append(int(sad > threshold))
-            yield pd.DataFrame({
-                "media_id": pd.Series(cols["media_id"], dtype="int64"),
-                "frame_idx": pd.Series(cols["frame_idx"], dtype="int64"),
-                "sad": pd.Series(cols["sad"], dtype="int64"),
-                "is_cut": pd.Series(cols["is_cut"], dtype="int64"),
-            })
+    def cuts(mid, payload):
+        planes = [px.astype(np.int64)
+                  for (_, _, _, px) in demux_netpbm_stream(payload) or []]
+        for f in range(1, len(planes)):
+            if planes[f].shape != planes[f - 1].shape:
+                continue    # resolution change = trivial cut,
+                            # not a SAD question; skip the pair
+            sad = int(np.abs(planes[f] - planes[f - 1]).sum())
+            yield mid, f, sad, int(sad > threshold)
 
-    return media.mapInPandas(run, CUT_SCHEMA)
+    return map_rows(media.select("media_id", "payload"), cuts, CUT_SCHEMA)

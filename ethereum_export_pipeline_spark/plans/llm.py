@@ -23,7 +23,7 @@ import functools
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..artifacts import artifact
-from ..execution import spread
+from ..execution import checkpoint, spread
 from ..functions import (MERSENNE31, affine_hash_sql, h32_sql,
                           h60_sql, tokens_sql)
 from ..operators import dedup, multimodal, similarity, sketch, text
@@ -2837,8 +2837,8 @@ def _scene_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     end-of-clip sentinel, so the whole summary is one window + one
     agg over the CUT rows (≤ frames per clip), not the pixels.
 
-    The decoded SAD verdicts are computed once (eager localCheckpoint
-    — the cuts frame is consumed by both the census and the shot
+    The decoded SAD verdicts are computed once (eager
+    `execution.checkpoint` — the cuts frame is consumed by both the census and the shot
     window) and every downstream number is exact-integer, recomputed
     by the oracle from the fixture's text bytes."""
     return _scene_summary_frame(load_table(spark, sf_dir, "documents"))
@@ -2849,7 +2849,7 @@ def _scene_summary_frame(docs: DataFrame) -> DataFrame:
     tools/scale_smoke.py on the amplified corpus)."""
     from pyspark.sql import Window
     media = multimodal.documents_as_video_media(docs, scene_at_half=True)
-    cuts = multimodal.scene_cuts(media).localCheckpoint(eager=True)
+    cuts = checkpoint(multimodal.scene_cuts(media))
     per = (cuts.groupBy("media_id")
                .agg(F.expr("CAST(count(*) + 1 AS BIGINT)")
                      .alias("n_frames"),

@@ -18,14 +18,11 @@ import os
 
 from pyspark.sql import SparkSession
 
-#: Runtime-settable confs that `ensure_conf` applies to sessions we did
-#: not create (e.g. the correctness driver's session).
+#: Correctness confs: `ensure_conf` forces these on every session,
+#: including ones we did not create (e.g. one `__spark_entry__` is given).
 RUNTIME_CONFS = {
     "spark.sql.session.timeZone": "UTC",
     "spark.sql.legacy.parquet.nanosAsLong": "true",
-    "spark.sql.adaptive.enabled": "true",
-    "spark.sql.adaptive.coalescePartitions.enabled": "true",
-    "spark.sql.adaptive.skewJoin.enabled": "true",
     # THE round-10/11 "heavy-Arrow py-path step" fix (SCALE.md has the
     # full bisect). Spark 4.1's JVM→Python Arrow writer calls
     # ArrowWriter.sizeInBytes() PER INPUT ROW to enforce this byte cap
@@ -46,6 +43,16 @@ RUNTIME_CONFS = {
     # the byte cap for those jobs, where wide rows amortize the
     # per-row check anyway.
     "spark.sql.execution.arrow.maxBytesPerBatch": "2147483647",
+}
+
+#: Speed defaults: `ensure_conf` sets these (and a machine-sized
+#: shuffle width) only on a session that has no value for them, so a
+#: caller's choice survives every table load. Results are
+#: partitioning- and AQE-independent by the exactness rules.
+SPEED_DEFAULTS = {
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
 }
 
 
@@ -72,7 +79,7 @@ def get_spark(app_name: str = "ethereum_export_pipeline_spark",
         .config("spark.sql.warehouse.dir",
                 tempfile.mkdtemp(prefix="spark_graft_wh_"))
     )
-    for k, v in RUNTIME_CONFS.items():
+    for k, v in {**SPEED_DEFAULTS, **RUNTIME_CONFS}.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -96,13 +103,17 @@ def ensure_conf(spark: SparkSession) -> SparkSession:
 
     The correctness driver hands us its own SparkSession; these confs
     are all runtime-settable so queries behave identically there.
-    Shuffle width is sized to the machine (Spark's 200 default wastes
-    scheduling overhead on local corpora; AQE coalesces further) —
-    results are partitioning-independent by the exactness rules, so
-    this only affects speed.
+    `RUNTIME_CONFS` are forced. `SPEED_DEFAULTS` and the shuffle width
+    (sized to the machine: Spark's 200 default wastes scheduling
+    overhead on local corpora; AQE coalesces further) are set only
+    where the session has no value, so a width or AQE setting the
+    caller chose is never overwritten.
     """
-    confs = dict(RUNTIME_CONFS)
-    confs["spark.sql.shuffle.partitions"] = str(max(os.cpu_count() or 4, 4))
+    defaults = dict(SPEED_DEFAULTS)
+    defaults["spark.sql.shuffle.partitions"] = str(max(os.cpu_count() or 4, 4))
+    confs = {k: v for k, v in defaults.items()
+             if spark.conf.get(k, None) is None}
+    confs.update(RUNTIME_CONFS)
     for k, v in confs.items():
         try:
             spark.conf.set(k, v)

@@ -45,6 +45,39 @@ def test_arrow_bytecap_sentinel_applied(spark):
     assert ensure_conf(spark).conf.get(key) == "2147483647"
 
 
+def test_ensure_conf_keeps_caller_width_and_aqe(spark):
+    """A table load must not reset the shuffle width or AQE the caller
+    chose (speed defaults fill only unset keys), must still force the
+    correctness confs, and a bare external session still receives
+    every conf."""
+    import os
+
+    from ethereum_export_pipeline_spark.session import (RUNTIME_CONFS,
+                                                        ensure_conf)
+    from ethereum_export_pipeline_spark.sources.tables import load_table
+    width = "spark.sql.shuffle.partitions"
+    aqe = "spark.sql.adaptive.enabled"
+    tz = "spark.sql.session.timeZone"
+    caller = spark.newSession()
+    caller.conf.set(width, "7")
+    caller.conf.set(aqe, "false")
+    caller.conf.set(tz, "America/New_York")
+    load_table(caller, SF, "region")
+    assert caller.conf.get(width) == "7"
+    assert caller.conf.get(aqe) == "false"
+    assert caller.conf.get(tz) == "UTC"
+
+    expect = {width: str(max(os.cpu_count() or 4, 4)), aqe: "true",
+              "spark.sql.adaptive.coalescePartitions.enabled": "true",
+              "spark.sql.adaptive.skewJoin.enabled": "true",
+              **RUNTIME_CONFS}
+    bare = spark.newSession()
+    for k in expect:
+        bare.conf.unset(k)
+    ensure_conf(bare)
+    assert {k: bare.conf.get(k) for k in expect} == expect
+
+
 def test_type_diverse_arrow_batch_does_not_inflate_py_path(spark):
     """The step's mechanism, pinned by CPU TIME (robust to co-tenant
     wall-clock noise): a fixed mapInPandas workload's JVM CPU must not

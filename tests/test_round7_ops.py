@@ -207,13 +207,13 @@ def test_read_stream_runs_on_isolated_session(spark):
 def test_stream_width_clamp_never_touches_caller_conf(spark):
     from ethereum_export_pipeline_spark.streaming import (
         stream_tumbling_counts)
+    saved = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "13")
     try:
         stream_tumbling_counts(spark, f"{SF}/events.parquet")
         assert spark.conf.get("spark.sql.shuffle.partitions") == "13"
     finally:
-        from ethereum_export_pipeline_spark.session import ensure_conf
-        ensure_conf(spark)
+        spark.conf.set("spark.sql.shuffle.partitions", saved)
 
 
 # ------------------------------------------------------ packed PQ

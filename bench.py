@@ -415,27 +415,40 @@ def _canary(spark, kind: str, reps: int) -> float:
 #     zero phantom drops, n_common == |prev|;
 #   * the remaining budget is packed with this run's slowest rows
 #     (deterministic order), maximizing next round's n_common.
-PREV_LINE_KEYS = (
-    "artifact:minhash_pair_graph", "mm_resize", "artifact:bpe_merges",
-    "artifact:kmeans_cells", "doc_crawl_manifest",
-    "artifact:ssjoin_pairs", "artifact:fuzzy_pairs",
-    "artifact:emb_neardup_pairs", "artifact:knn_graph",
-    "doc_bigram_fluency",
-)
+def prev_line_keys() -> tuple[str, ...]:
+    """The `queries` keys of the previous round's line: those of the
+    highest-numbered committed BENCH_r<N>.json (the `_c<cores>`
+    reruns are not the line the comparison reads)."""
+    import glob
+    import re
+    here = os.path.dirname(os.path.abspath(__file__))
+    rounds = {int(m.group(1)): p
+              for p in glob.glob(os.path.join(here, "BENCH_r*.json"))
+              if (m := re.fullmatch(r"BENCH_r(\d+)\.json",
+                                    os.path.basename(p)))}
+    if not rounds:
+        return ()
+    with open(rounds[max(rounds)]) as f:
+        return tuple((json.load(f).get("parsed") or {}).get("queries") or ())
+
+
 #: line budget: >200 chars of slack under the 2,000-char window for any
 #: post-line shutdown noise the capture would charge against its head
 LINE_BUDGET = 1780
 
 
 def select_line(timings: dict[str, float], render,
-                pinned: tuple[str, ...] = PREV_LINE_KEYS) -> str:
+                pinned: tuple[str, ...] | None = None) -> str:
     """The one stdout line, `render(qmap)` for the largest `queries`
     map that keeps it within `LINE_BUDGET` chars, so the line is never
-    lost: the pinned keys, the other rows among the 10 slowest, then
-    further rows in slowest order while they fit. Over budget,
-    non-pinned keys drop from the tail first; pinned keys drop only as
-    a last resort, with a stderr warning. A pinned key missing from
-    `timings` is warned about too."""
+    lost: the pinned keys (default: `prev_line_keys()`), the other
+    rows among the 10 slowest, then further rows in slowest order
+    while they fit. Over budget, non-pinned keys drop from the tail
+    first; pinned keys drop only as a last resort, with a stderr
+    warning. A pinned key missing from `timings` is warned about
+    too."""
+    if pinned is None:
+        pinned = prev_line_keys()
     missing = [k for k in pinned if k not in timings]
     if missing:
         print(f"# WARNING: pinned line keys missing from timings: "

@@ -1590,17 +1590,9 @@ def _rate_limit_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
           .where(F.col("user_id").isNotNull())
           .select("event_id", "user_id",
                   F.expr("ts_ns div 1000").alias("ts_us")))
-    return rate_limit_frame(ev)
-
-
-def rate_limit_frame(ev: DataFrame,
-                     gap_us: int = RATE_LIMIT_GAP_US) -> DataFrame:
-    """The closed-form schedule over a normalized (event_id, user_id,
-    ts_us) frame — split out so the ×10/×100 scale smoke can run it
-    on amplified inputs."""
     w = Window.partitionBy("user_id").orderBy("ts_us", "event_id")
     run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    gap = F.lit(gap_us)
+    gap = F.lit(RATE_LIMIT_GAP_US)
     r = ev.withColumn("rn", F.row_number().over(w).cast("long"))
     return (r.withColumn("sched_us",
                          F.max(F.col("ts_us") - F.col("rn") * gap).over(run)

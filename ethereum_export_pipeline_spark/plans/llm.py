@@ -1826,10 +1826,13 @@ def _emb_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     full cluster assignment with a kept/dropped verdict per vector —
     the embedding-side twin of doc_dedup_canonical. The cluster frame
     is LSH-pruned (pair-graph nodes only) so it broadcasts into the
-    full vector scan; the 100 TB side never shuffles."""
+    full vector scan; the 100 TB side never shuffles. Components come
+    from star contraction: past ~2,000 vectors the 0.3-cosine pair
+    graph percolates into long chains that min-label propagation does
+    not settle within its round cap."""
     vecs = load_table(spark, sf_dir, "embeddings")
     pairs = _emb_neardup_memo(spark, sf_dir)
-    clusters = dedup.connected_components(
+    clusters = dedup.connected_components_star(
         pairs, src="id_a", dst="id_b", id_out="vec_id")
     c = clusters.select(F.col("vec_id").alias("_cc_id"),
                         F.col("cluster_id").alias("_cc_lbl"))
@@ -2838,17 +2841,13 @@ def _scene_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg over the CUT rows (≤ frames per clip), not the pixels.
 
     The decoded SAD verdicts are computed once (eager
-    `execution.checkpoint` — the cuts frame is consumed by both the census and the shot
-    window) and every downstream number is exact-integer, recomputed
-    by the oracle from the fixture's text bytes."""
-    return _scene_summary_frame(load_table(spark, sf_dir, "documents"))
-
-
-def _scene_summary_frame(docs: DataFrame) -> DataFrame:
-    """`_scene_summary` over an explicit docs frame (reused by
-    tools/scale_smoke.py on the amplified corpus)."""
+    `execution.checkpoint` — the cuts frame is consumed by both the
+    census and the shot window) and every downstream number is
+    exact-integer, recomputed by the oracle from the fixture's text
+    bytes."""
     from pyspark.sql import Window
-    media = multimodal.documents_as_video_media(docs, scene_at_half=True)
+    media = multimodal.documents_as_video_media(
+        load_table(spark, sf_dir, "documents"), scene_at_half=True)
     cuts = checkpoint(multimodal.scene_cuts(media))
     per = (cuts.groupBy("media_id")
                .agg(F.expr("CAST(count(*) + 1 AS BIGINT)")
@@ -5820,17 +5819,10 @@ def _url_text_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     content_key) and eagerly localCheckpointed — the page census,
     the content-spread agg, and the mirror join all consume that
     small frame, not the text column."""
-    return _url_text_agreement_frame(
-        load_table(spark, sf_dir, "documents"))
-
-
-def _url_text_agreement_frame(docs: DataFrame) -> DataFrame:
-    """`_url_text_agreement` over an explicit docs frame (reused by
-    tools/scale_smoke.py on the amplified corpus)."""
     rr = lambda x, p, r: f"regexp_replace({x}, '{p}', '{r}')"
     raw = _url_raw_sql("div", "STRING")
     canon = _canon_url_sql("raw_url", rr)
-    u = (docs
+    u = (load_table(spark, sf_dir, "documents")
          .where("text IS NOT NULL")
          .selectExpr("doc_id", "md5(text) AS ck", f"{raw} AS raw_url")
          .selectExpr("ck", f"{canon} AS canon_url")

@@ -56,16 +56,22 @@ SPEED_DEFAULTS = {
 }
 
 
+def local_cpus() -> int:
+    """$SPARK_GRAFT_CPUS, else every core: the one rule that sizes both
+    the local master and the default shuffle width (at least 4)."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or os.cpu_count() or 4
+
+
 def get_spark(app_name: str = "ethereum_export_pipeline_spark",
               cpus: int | None = None) -> SparkSession:
     """Build (or reuse) a local SparkSession tuned for this engine.
 
-    ``cpus`` defaults to $SPARK_GRAFT_CPUS or all cores. On a real
-    cluster the same confs apply, minus master/driver-memory, which the
-    cluster manager owns.
+    ``cpus`` defaults to `local_cpus()`. On a real cluster the same
+    confs apply, minus master/driver-memory, which the cluster manager
+    owns.
     """
     if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or os.cpu_count() or 4
+        cpus = local_cpus()
     import tempfile
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
@@ -94,8 +100,15 @@ def isolated_session(spark: SparkSession) -> SparkSession:
     for upsert sinks. Running those on a child keeps the mutation
     invisible to any query concurrently planning on the caller's
     session (set/restore on a SHARED session has a race window).
-    The child gets the same runtime confs `ensure_conf` guarantees."""
-    return ensure_conf(spark.newSession())
+    The child starts from the caller's shuffle width and AQE keys (a
+    bare new session would start from the SparkConf's), then gets the
+    runtime confs `ensure_conf` guarantees."""
+    child = spark.newSession()
+    for k in ("spark.sql.shuffle.partitions", *SPEED_DEFAULTS):
+        v = spark.conf.get(k, None)
+        if v is not None:
+            child.conf.set(k, v)
+    return ensure_conf(child)
 
 
 def ensure_conf(spark: SparkSession) -> SparkSession:
@@ -110,7 +123,7 @@ def ensure_conf(spark: SparkSession) -> SparkSession:
     caller chose is never overwritten.
     """
     defaults = dict(SPEED_DEFAULTS)
-    defaults["spark.sql.shuffle.partitions"] = str(max(os.cpu_count() or 4, 4))
+    defaults["spark.sql.shuffle.partitions"] = str(max(local_cpus(), 4))
     confs = {k: v for k, v in defaults.items()
              if spark.conf.get(k, None) is None}
     confs.update(RUNTIME_CONFS)

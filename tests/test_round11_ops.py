@@ -50,10 +50,9 @@ def test_ensure_conf_keeps_caller_width_and_aqe(spark):
     chose (speed defaults fill only unset keys), must still force the
     correctness confs, and a bare external session still receives
     every conf."""
-    import os
-
     from ethereum_export_pipeline_spark.session import (RUNTIME_CONFS,
-                                                        ensure_conf)
+                                                        ensure_conf,
+                                                        local_cpus)
     from ethereum_export_pipeline_spark.sources.tables import load_table
     width = "spark.sql.shuffle.partitions"
     aqe = "spark.sql.adaptive.enabled"
@@ -67,7 +66,7 @@ def test_ensure_conf_keeps_caller_width_and_aqe(spark):
     assert caller.conf.get(aqe) == "false"
     assert caller.conf.get(tz) == "UTC"
 
-    expect = {width: str(max(os.cpu_count() or 4, 4)), aqe: "true",
+    expect = {width: str(max(local_cpus(), 4)), aqe: "true",
               "spark.sql.adaptive.coalescePartitions.enabled": "true",
               "spark.sql.adaptive.skewJoin.enabled": "true",
               **RUNTIME_CONFS}
@@ -76,6 +75,25 @@ def test_ensure_conf_keeps_caller_width_and_aqe(spark):
         bare.conf.unset(k)
     ensure_conf(bare)
     assert {k: bare.conf.get(k) for k in expect} == expect
+
+
+def test_stream_child_keeps_caller_width_and_aqe(spark):
+    """A stream row's isolated child starts from the caller's shuffle
+    width and AQE keys, not the SparkConf's; the caller's confs stay
+    as set, and the answer equals the default-width one."""
+    import __spark_entry__ as e
+    row = e.queries()["stream_tumbling_counts"]
+    width = "spark.sql.shuffle.partitions"
+    aqe = "spark.sql.adaptive.enabled"
+    caller = spark.newSession()
+    caller.conf.set(width, "7")
+    caller.conf.set(aqe, "false")
+    got = row(caller, SF)
+    child = got.sparkSession
+    assert child is not caller
+    assert (child.conf.get(width), child.conf.get(aqe)) == ("7", "false")
+    assert (caller.conf.get(width), caller.conf.get(aqe)) == ("7", "false")
+    assert sorted(got.collect()) == sorted(row(spark, SF).collect())
 
 
 def test_type_diverse_arrow_batch_does_not_inflate_py_path(spark):

@@ -3,8 +3,11 @@
 SCALE.md's amplification measurements killed two superlinear cliffs
 (the ssjoin verify's broadcast→SMJ fall-off, the bucketed-join probe)
 — but prose tables don't stop a future edit from silently
-reintroducing one. These tests re-run the five worst ops at ×10
-amplification in an event-logged session and assert each op's shuffle
+reintroducing one. These tests re-run the six worst ops on the ×10
+derivation of sf0.1 (tools/make_corpus.py: disjoint key ranges and
+vocabularies per copy) in an event-logged session — ssjoin, minhash
+and k-means as direct operator calls, trade_pagerank and
+crawl_manifest as their catalog rows — and assert each op's shuffle
 WRITE stays inside an envelope pinned at ~1.5× the figure measured
 when the op's plan was last tuned (round 9 for ssjoin, round 8 for
 the rest; see SCALE.md). A >1.5× jump at ×10 has been, every time it
@@ -71,161 +74,61 @@ ENVELOPES = {
 
 
 @pytest.fixture(scope="module")
-def measured():
-    """Amplify ×10, run the five ops under job groups, stop the
-    session (finalizes the event log), return {op: bytes}."""
-    from pyspark.sql import SparkSession, functions as F
-
+def measured(tmp_path_factory):
+    """Derive ×10 of sf0.1 (tools/make_corpus.py), run the six ops
+    under job groups in one event-logged session, stop the session
+    (finalizes the event log), return {op: bytes}."""
     sys.path.insert(0, os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         "tools"))
+    import make_corpus
     import scale_smoke
 
-    from ethereum_export_pipeline_spark.session import RUNTIME_CONFS
-
-    # getOrCreate silently REUSES any live session (its eventLog
-    # configs then never apply: every envelope would read -1 bytes),
-    # and spark.stop() below would kill that shared session for the
-    # rest of a mixed pytest run. Fail fast instead of poisoning.
-    from pyspark import SparkContext
-    if (SparkContext._active_spark_context is not None
-            or SparkSession.getActiveSession() is not None):
-        pytest.fail(
-            "a SparkContext/SparkSession already exists in this "
-            "process: the scale-envelope suite needs its OWN "
-            "event-logged session built before any other Spark test "
-            "runs. Run it alone (`pytest -m scale`), not in a mixed "
-            "-m expression with fixture-backed tests.")
-
-    cpus = (int(os.environ.get("SPARK_GRAFT_CPUS", "0"))
-            or os.cpu_count() or 4)
+    # the suite needs its OWN event-logged JVM, so run it alone
+    # (`pytest -m scale`): event_logged_spark raises if another Spark
+    # test already started one in this process
     event_dir = tempfile.mkdtemp(prefix="spark_graft_envlog_")
-    builder = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("scale_envelopes")
-        .config("spark.sql.shuffle.partitions", str(max(cpus, 4)))
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory",
-                os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-        .config("spark.ui.enabled", "false")
-        .config("spark.eventLog.enabled", "true")
-        .config("spark.eventLog.dir", event_dir)
-        .config("spark.eventLog.compress", "false")
-        .config("spark.sql.warehouse.dir",
-                tempfile.mkdtemp(prefix="spark_graft_wh_")))
-    for k, v in RUNTIME_CONFS.items():
-        builder = builder.config(k, v)
-    spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    sc = spark.sparkContext
+    spark = scale_smoke.event_logged_spark("scale_envelopes", event_dir)
+    out = make_corpus.derive(spark, SF_DIR, AMPLIFY,
+                             str(tmp_path_factory.mktemp("x10")))
 
-    out = tempfile.mkdtemp(prefix="spark_graft_envdata_")
-    copies = spark.range(AMPLIFY).select(F.col("id").alias("copy"))
-
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    n_docs = docs.count()
-    (docs.crossJoin(copies)
-         .select((F.col("doc_id") + F.col("copy") * n_docs)
-                 .alias("doc_id"),
-                 F.element_at(
-                     scale_smoke.amplified_text_variants(AMPLIFY),
-                     F.col("copy").cast("int") + 1).alias("text"))
-         .write.mode("overwrite").parquet(f"{out}/documents"))
-    big_docs = spark.read.parquet(f"{out}/documents")
-
+    import __spark_entry__ as entry
     from ethereum_export_pipeline_spark.operators import (dedup,
                                                           similarity)
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    n_emb = emb.count()
-    dim = similarity.EMB_DIM
-    rot = F.expr(
-        f"concat(slice(embedding, (copy % {dim}) + 1, "
-        f"{dim} - (copy % {dim})), slice(embedding, 1, copy % {dim}))")
-    (emb.crossJoin(copies)
-        .select((F.col("vec_id") + F.col("copy") * n_emb).alias("vec_id"),
-                rot.cast("array<float>").alias("embedding"))
-        .repartition(cpus)
-        .write.mode("overwrite").parquet(f"{out}/embeddings"))
-    big_emb = spark.read.parquet(f"{out}/embeddings")
-
-    def trade_pagerank():
-        # same density-preserving amplification as tools/scale_smoke
-        from ethereum_export_pipeline_spark.operators.graph import (
-            pagerank_exact)
-        li = (spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
-                   .select("l_orderkey", "l_suppkey"))
-        o = (spark.read.parquet(f"{SF_DIR}/orders.parquet")
-                  .select("o_orderkey", "o_custkey"))
-        li2 = (li.crossJoin(copies)
-                 .select((F.col("l_orderkey") + F.col("copy") * 200_000)
-                         .alias("ok"),
-                         (F.col("l_suppkey") + F.col("copy") * 1_000)
-                         .alias("sk")))
-        o2 = (o.crossJoin(copies)
-               .select((F.col("o_orderkey") + F.col("copy") * 200_000)
-                       .alias("okk"),
-                       (F.col("o_custkey") + F.col("copy") * 2_000)
-                       .alias("ck")))
-        pairs = (li2.join(o2, F.col("ok") == F.col("okk"))
-                    .select(F.concat(F.lit("S"), F.col("sk")).alias("s"),
-                            F.concat(F.lit("C"), F.col("ck")).alias("c"))
-                    .distinct())
-        edges = (pairs.select(F.explode(F.array(
-                     F.struct(F.col("s").alias("src"),
-                              F.col("c").alias("dst")),
-                     F.struct(F.col("c").alias("src"),
-                              F.col("s").alias("dst")))).alias("e"))
-                      .select("e.src", "e.dst"))
-        return pagerank_exact(edges, iters=5)
+    from ethereum_export_pipeline_spark.operators.graph import (
+        hierarchy_aggregates as ha)
+    from ethereum_export_pipeline_spark.sources.tables import load_table
+    big_docs = load_table(spark, out, "documents").select("doc_id", "text")
+    big_emb = load_table(spark, out, "embeddings").select("vec_id",
+                                                          "embedding")
 
     def hierarchy_aggregates():
-        from ethereum_export_pipeline_spark.operators.graph import (
-            hierarchy_aggregates as ha)
         n = 10_000 * AMPLIFY
         parents = (spark.range(n).where("id % 64 != 0")
                         .selectExpr("id AS child", "id - 1 AS parent"))
         vals = spark.range(n).selectExpr("id AS node", "id % 97 AS val")
         return ha(parents, vals, rounds=6)
 
-    # the composed crawl→manifest flagship wants a CORPUS DIR with a
-    # source column (its plan takes sf_dir) — amplify one beside the
-    # main corpus, source re-attached from the originals by id-mod
-    crawl_sf = f"{out}/crawl_sf"
-    (big_docs.withColumn("src_doc", F.col("doc_id") % n_docs)
-             .join(docs.selectExpr("doc_id AS src_doc", "source"),
-                   "src_doc")
-             .select("doc_id", "source", "text")
-             .write.mode("overwrite").parquet(f"{crawl_sf}/documents.parquet"))
-
-    def crawl_manifest():
-        from ethereum_export_pipeline_spark.plans.llm import (
-            _crawl_manifest)
-        return _crawl_manifest(spark, crawl_sf)
-
+    qs = entry.queries()
     ops = {
         "ssjoin_prefix": lambda: dedup.ssjoin_prefix_pairs(big_docs),
         "minhash_pairs": lambda: dedup.minhash_lsh_pairs(big_docs),
         "kmeans_assign": lambda: similarity.kmeans_assign(big_emb),
-        "trade_pagerank": trade_pagerank,
+        "trade_pagerank": lambda: qs["doc_trade_pagerank"](spark, out),
         "hierarchy_aggregates": hierarchy_aggregates,
-        "crawl_manifest": crawl_manifest,
+        "crawl_manifest": lambda: qs["doc_crawl_manifest"](spark, out),
     }
-    import time
-    secs = {}
-    for name, thunk in ops.items():
-        sc.setJobGroup(name, name)
-        t0 = time.time()
-        thunk().write.mode("overwrite").format("noop").save()
-        secs[name] = round(time.time() - t0, 2)
-        sc.setJobGroup("other", "other")
+    runs = scale_smoke.run_rows(
+        spark, out, {name: (lambda s, d, op=op: op())
+                     for name, op in ops.items()})
     spark.stop()
 
     per_group = scale_smoke.read_group_bytes(event_dir)
     got = {name: per_group.get(name, {}).get("shuffle_write", -1)
+           if "secs" in runs[name] else runs[name]["error"]
            for name in ops}
     for name in ops:
-        print(f"# {name}: {got[name] / 1e6:.1f} MB shuffle write, "
-              f"{secs[name]}s")
+        print(f"# {name}: {runs[name]}, shuffle write {got[name]}")
 
     import shutil
     shutil.rmtree(out, ignore_errors=True)
@@ -236,10 +139,12 @@ def measured():
 @pytest.mark.parametrize("op", sorted(ENVELOPES))
 def test_x10_shuffle_within_envelope(measured, op):
     got = measured[op]
+    assert not isinstance(got, str), f"{op} raised: {got}"
     assert got >= 0, f"{op}: no event-log rows attributed"
     limit = ENVELOPES[op]
     assert got <= limit, (
         f"{op}: ×10 shuffle write {got / 1e6:.1f} MB exceeds the "
         f"{limit / 1e6:.0f} MB envelope — a superlinear exchange is "
-        f"creeping back in; re-measure at ×100 (tools/scale_smoke.py) "
+        f"creeping back in; re-measure on a ×100 tools/make_corpus.py "
+        f"corpus (tools/scale_smoke.py) "
         f"before accepting a new envelope (see SCALE.md)")

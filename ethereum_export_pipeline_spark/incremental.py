@@ -73,21 +73,16 @@ def commit_ranges(spark: SparkSession, manifest_path: str, table: str,
 
 def run_incremental(spark: SparkSession, manifest_path: str, table: str,
                     plan: Iterable[tuple[int, int]],
-                    process: Callable[[int, int], None],
-                    commit_each: bool = True) -> list[tuple[int, int]]:
+                    process: Callable[[int, int], None]
+                    ) -> list[tuple[int, int]]:
     """Bookmark-gated run: process only ranges not yet committed.
     Returns the ranges actually processed this run.
 
-    ``commit_each`` commits after EVERY range (the reference's
-    per-activity bookmark granularity: a crash mid-plan re-runs only
-    the in-flight range next time, at the cost of one manifest append
-    per range). False batches one commit at the end — fewer manifest
-    files, but a crash re-runs the whole remainder."""
+    Commits after EVERY range (the reference's per-activity bookmark
+    granularity): a crash mid-plan re-runs only the in-flight range
+    next time, at the cost of one manifest append per range."""
     todo = filter_unprocessed(plan, processed_ranges(spark, manifest_path, table))
     for s, e in todo:
         process(s, e)
-        if commit_each:
-            commit_ranges(spark, manifest_path, table, [(s, e)])
-    if not commit_each:
-        commit_ranges(spark, manifest_path, table, todo)
+        commit_ranges(spark, manifest_path, table, [(s, e)])
     return todo

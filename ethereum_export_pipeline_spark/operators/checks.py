@@ -40,33 +40,29 @@ def check_rules(df: DataFrame, rules: dict[str, str]) -> DataFrame:
         f"stack({len(rules)}, {pairs}) AS (rule, n_violations)")
 
 
-def check_unique(df: DataFrame, key: str,
-                 rule_name: str | None = None) -> DataFrame:
+def check_unique(df: DataFrame, key: str) -> DataFrame:
     """Key-uniqueness check: violations = duplicate non-null keys
     (count − distinct count) + NULL keys (a NULL key can never be a
     valid unique identifier)."""
-    name = rule_name or f"unique_{key}"
     return df.agg(
-        F.lit(name).alias("rule"),
+        F.lit(f"unique_{key}").alias("rule"),
         F.expr(f"CAST(count({key}) - count(DISTINCT {key}) "
                f"+ sum(CASE WHEN {key} IS NULL THEN 1 ELSE 0 END) "
                f"AS BIGINT)").alias("n_violations"))
 
 
-def check_ref(child: DataFrame, parent: DataFrame,
-              child_key: str, parent_key: str,
-              rule_name: str | None = None) -> DataFrame:
+def check_ref(child: DataFrame, parent: DataFrame, child_key: str,
+              parent_key: str) -> DataFrame:
     """Referential-integrity check: child rows whose non-null key has
     no parent (orphans), counted via an anti join — broadcast when the
     parent key set fits, a shuffle semi-complement otherwise (the
     planner's call, same as the export DAG's keyed fetches)."""
-    name = rule_name or f"ref_{child_key}"
     orphans = (child.where(F.col(child_key).isNotNull())
                     .join(parent.select(F.col(parent_key).alias(child_key))
                                 .distinct(),
                           child_key, "left_anti"))
     return orphans.agg(
-        F.lit(name).alias("rule"),
+        F.lit(f"ref_{child_key}").alias("rule"),
         F.count(F.lit(1)).cast("long").alias("n_violations"))
 
 

@@ -20,7 +20,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from ..schemas import apply_mapping, mapping_for
-from .nulls import drop_null_fields
 
 
 #: block-cursor column per table: sorting row groups by it makes
@@ -34,24 +33,19 @@ SORT_COLUMN = {
 
 
 def convert_to_parquet(spark: SparkSession, csv_root: str, table: str,
-                       out_root: str,
-                       drop_all_null_columns: bool = False,
-                       max_records_per_file: int = 5_000_000,
-                       sort_within: bool = True) -> str:
+                       out_root: str) -> str:
     """Run the conversion for one table; returns the output path."""
     from ..sources.csv_source import read_table_csv
 
     raw = read_table_csv(spark, csv_root, table)
     typed = typed_projection(raw, table)
-    if drop_all_null_columns:
-        typed = drop_null_fields(typed)
-    if sort_within and table in SORT_COLUMN:
+    if table in SORT_COLUMN:
         # local sort only (no shuffle): row-group min/max stats become
         # tight, so block_number predicates skip row groups at read
         typed = typed.sortWithinPartitions(SORT_COLUMN[table])
     out = f"{out_root.rstrip('/')}/{table}"
     (typed.write.mode("overwrite")
-          .option("maxRecordsPerFile", max_records_per_file)
+          .option("maxRecordsPerFile", 5_000_000)
           .partitionBy("start_block", "end_block")
           .parquet(out))
     return out

@@ -55,25 +55,24 @@ MINHASH_FAMILY = hash_family(MINHASH_K, seed=13)
 
 # ------------------------------------------------------------- exact
 
-def dedup_exact(df: DataFrame, id_col: str = "doc_id",
-                text_col: str = "text") -> DataFrame:
+def dedup_exact(df: DataFrame) -> DataFrame:
     """Group documents by exact content hash; keeper = min id.
 
     NULL-text rows are excluded up front: md5(NULL) is NULL, which would
     otherwise collapse every null document into one bogus dup cluster.
     """
     return (
-        df.where(F.col(text_col).isNotNull())
-          .groupBy(F.md5(F.col(text_col)).alias("content_key"))
-          .agg(F.min(id_col).alias("keep_doc_id"),
+        df.where(F.col("text").isNotNull())
+          .groupBy(F.md5(F.col("text")).alias("content_key"))
+          .agg(F.min("doc_id").alias("keep_doc_id"),
                F.count(F.lit(1)).alias("n_copies"))
     )
 
 
 # ---------------------------------------------------------- shingles
 
-def shingles(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
-             n: int = NGRAM_N) -> DataFrame:
+def shingles(df: DataFrame, id_col: str = "doc_id",
+             text_col: str = "text") -> DataFrame:
     """Distinct word n-gram shingles per document: (id, shingle).
     Docs with fewer than n tokens contribute no shingles.
 
@@ -82,10 +81,10 @@ def shingles(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
     over the exploded rows, which would shuffle the whole inverted
     index once more (cross-document duplicates are fine: every
     consumer groups by doc or joins by shingle)."""
-    joined = ", ".join(f"element_at(t, i + {k + 1})" for k in range(n))
+    joined = ", ".join(f"element_at(t, i + {k + 1})" for k in range(NGRAM_N))
     expr = (
-        f"CASE WHEN size(t) < {n} THEN array() "
-        f"ELSE array_distinct(transform(sequence(0, size(t) - {n}), "
+        f"CASE WHEN size(t) < {NGRAM_N} THEN array() "
+        f"ELSE array_distinct(transform(sequence(0, size(t) - {NGRAM_N}), "
         f"i -> concat_ws(' ', {joined}))) END"
     )
     return (
@@ -94,8 +93,7 @@ def shingles(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
     )
 
 
-def _sized_shingles(df: DataFrame, id_col: str, text_col: str, n: int,
-                    max_shingle_df: int | None) -> DataFrame:
+def _sized_shingles(df: DataFrame, max_shingle_df: int | None) -> DataFrame:
     """(id, shingle, sz) — the inverted index with the df-cut and the
     per-doc size attached.
 
@@ -131,24 +129,25 @@ def _sized_shingles(df: DataFrame, id_col: str, text_col: str, n: int,
     once per row."""
     from pyspark.sql import Window
     if max_shingle_df is None:
-        joined = ", ".join(f"element_at(t, i + {k + 1})" for k in range(n))
+        joined = ", ".join(f"element_at(t, i + {k + 1})"
+                           for k in range(NGRAM_N))
         arr = (
-            f"CASE WHEN size(t) < {n} THEN array() "
-            f"ELSE array_distinct(transform(sequence(0, size(t) - {n}), "
+            f"CASE WHEN size(t) < {NGRAM_N} THEN array() "
+            f"ELSE array_distinct(transform(sequence(0, size(t) - {NGRAM_N}), "
             f"i -> concat_ws(' ', {joined}))) END"
         )
         gen = (f"element_at(transform(array({arr}), a -> "
                f"transform(a, x -> named_struct("
                f"'shingle', x, 'sz', CAST(size(a) AS BIGINT)))), 1)")
-        return (df.select(F.col(id_col), tokens(text_col).alias("t"))
-                  .select(id_col, F.explode(F.expr(gen)).alias("_s"))
-                  .select(id_col, F.col("_s.shingle").alias("shingle"),
+        return (df.select(F.col("doc_id"), tokens("text").alias("t"))
+                  .select("doc_id", F.explode(F.expr(gen)).alias("_s"))
+                  .select("doc_id", F.col("_s.shingle").alias("shingle"),
                           F.col("_s.sz").alias("sz")))
-    sh = shingles(df, id_col, text_col, n)
+    sh = shingles(df, "doc_id", "text")
     w_sh = Window.partitionBy("shingle")
     sh = (sh.withColumn("df", F.count(F.lit(1)).over(w_sh))
             .where(F.col("df") <= max_shingle_df).drop("df"))
-    w_doc = Window.partitionBy(id_col)
+    w_doc = Window.partitionBy("doc_id")
     return sh.withColumn("sz", F.count(F.lit(1)).over(w_doc))
 
 
@@ -163,11 +162,7 @@ def _jaccard_from_pairs(inter: DataFrame, threshold: float) -> DataFrame:
     )
 
 
-def ssjoin_prefix_pairs(df: DataFrame, id_col: str = "doc_id",
-                        text_col: str = "text",
-                        threshold_num: int = 1,
-                        threshold_den: int = 2,
-                        n: int = NGRAM_N) -> DataFrame:
+def ssjoin_prefix_pairs(df: DataFrame) -> DataFrame:
     """EXACT shingle-Jaccard pairs via PREFIX FILTERING (PPJoin
     family — Xiao/Wang/Lin/Yu, "Efficient Similarity Joins for Near
     Duplicate Detection", public): the exact twin of
@@ -248,16 +243,16 @@ def ssjoin_prefix_pairs(df: DataFrame, id_col: str = "doc_id",
     Output (doc_a, doc_b, n_common, jaccard) — the ngram-pairs
     shape; doc_a < doc_b by id. All integer until the final
     division."""
-    tn, td = threshold_num, threshold_den
+    tn, td = 1, 2  # Jaccard threshold tn/td, kept as exact integers
 
     # ---- phase 0: collapse exact duplicates (one rep per md5(text))
     # scan-width spread first (optimization r11, guide §2.5): the md5
     # grouping and the rep-doc tokenize both run in the scan stage; a
     # one-file input would serialize them onto one core (no-op on
     # well-split input — the 100 TB case)
-    base = spread(df.where(F.col(text_col).isNotNull())
-                    .select(F.col(id_col).alias("doc"),
-                            F.col(text_col).alias("text")))
+    base = spread(df.where(F.col("text").isNotNull())
+                    .select(F.col("doc_id").alias("doc"),
+                            "text"))
     grp = base.select("doc", F.md5(F.col("text")).alias("ck"))
     reps = grp.groupBy("ck").agg(F.min("doc").alias("rep"))
     # (member, rep): consumed three times (semi-join + both expansion
@@ -272,7 +267,7 @@ def ssjoin_prefix_pairs(df: DataFrame, id_col: str = "doc_id",
                          "doc", "left_semi")
 
     # ---- phase 1: candidates over representatives
-    tok = (shingles(rep_docs, "doc", "text", n)
+    tok = (shingles(rep_docs, "doc")
            .select("doc", F.col("shingle").alias("token")))
     dfc = tok.groupBy("token").agg(F.count(F.lit(1)).alias("dfc"))
     keyed = (tok.join(dfc, "token")
@@ -364,18 +359,16 @@ def ssjoin_prefix_pairs(df: DataFrame, id_col: str = "doc_id",
     return cross.unionByName(within)
 
 
-def ngram_jaccard_pairs(df: DataFrame, id_col: str = "doc_id",
-                        text_col: str = "text", threshold: float = 0.5,
-                        n: int = NGRAM_N,
+def ngram_jaccard_pairs(df: DataFrame, threshold: float = 0.5,
                         max_shingle_df: int | None = DEFAULT_MAX_DF) -> DataFrame:
     """Near-dup pairs by exact n-gram Jaccard via an inverted-index
     self-join. Output: (doc_a, doc_b, n_common, jaccard). Tokenize
     runs at scan width (spread-first, no-op on well-split input)."""
-    df = spread(df.select(id_col, text_col))
-    sh = _sized_shingles(df, id_col, text_col, n, max_shingle_df)
-    a = sh.select(F.col(id_col).alias("doc_a"), "shingle",
+    df = spread(df.select("doc_id", "text"))
+    sh = _sized_shingles(df, max_shingle_df)
+    a = sh.select(F.col("doc_id").alias("doc_a"), "shingle",
                   F.col("sz").alias("sz_a"))
-    b = sh.select(F.col(id_col).alias("doc_b"), "shingle",
+    b = sh.select(F.col("doc_id").alias("doc_b"), "shingle",
                   F.col("sz").alias("sz_b"))
     inter = (
         a.join(b, "shingle")
@@ -388,30 +381,22 @@ def ngram_jaccard_pairs(df: DataFrame, id_col: str = "doc_id",
 
 # ----------------------------------------------------------- minhash
 
-def _signatures_from_shingles(sh: DataFrame, id_col: str) -> DataFrame:
+def _signatures_from_shingles(sh: DataFrame) -> DataFrame:
     """K minhash values per doc from an already-built (id, shingle)
     frame: m_k = min over shingles of (a_k·h32(shingle) + b_k) mod p.
     Split out (optimization r12) so the LSH pair/incremental paths can
     feed the SAME materialized shingle frame to both the signature agg
     and the exact-Jaccard verify, instead of tokenizing the corpus
     once per consumer."""
-    hashed = sh.select(id_col, h32(F.col("shingle")).alias("h"))
+    hashed = sh.select("doc_id", h32(F.col("shingle")).alias("h"))
     aggs = [
         F.min(affine_hash(F.col("h"), a, b)).alias(f"m{k}")
         for k, (a, b) in enumerate(MINHASH_FAMILY)
     ]
-    return hashed.groupBy(id_col).agg(*aggs)
+    return hashed.groupBy("doc_id").agg(*aggs)
 
 
-def minhash_signatures(df: DataFrame, id_col: str = "doc_id",
-                       text_col: str = "text", n: int = NGRAM_N) -> DataFrame:
-    """K minhash values per doc: m_k = min over shingles of
-    (a_k·h32(shingle) + b_k) mod p. One explode + one aggregate."""
-    return _signatures_from_shingles(shingles(df, id_col, text_col, n),
-                                     id_col)
-
-
-def _banded_buckets(sig: DataFrame, id_col: str) -> DataFrame:
+def _banded_buckets(sig: DataFrame) -> DataFrame:
     """(id, bucket) band postings from a K-column signature frame —
     the LSH index rows: md5 over each band's signature slice, melted
     to one posting per (doc, band)."""
@@ -421,16 +406,14 @@ def _banded_buckets(sig: DataFrame, id_col: str) -> DataFrame:
         ms = [f"m{band * rows_per_band + r}" for r in range(rows_per_band)]
         band_cols.append(
             F.md5(F.concat_ws(",", F.lit(str(band)), *ms)).alias(f"band{band}"))
-    banded = sig.select(id_col, *band_cols)
+    banded = sig.select("doc_id", *band_cols)
     return banded.select(
-        id_col,
+        "doc_id",
         F.explode(F.array(*[F.col(f"band{b}") for b in range(MINHASH_BANDS)]))
          .alias("bucket"))
 
 
-def minhash_lsh_pairs(df: DataFrame, id_col: str = "doc_id",
-                      text_col: str = "text", threshold: float = 0.5,
-                      n: int = NGRAM_N) -> DataFrame:
+def minhash_lsh_pairs(df: DataFrame, threshold: float = 0.5) -> DataFrame:
     """MinHash LSH near-dup pairs, verified with exact Jaccard.
     Output: (doc_a, doc_b, n_common, jaccard) for candidates whose
     verified Jaccard ≥ threshold.
@@ -446,7 +429,7 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str = "doc_id",
     shared by the signature aggregate and both verify join sides —
     before, each of the three consumers re-ran tokenize+shingle+
     distinct above the shared repartition exchange."""
-    df = spread(df.select(id_col, text_col))
+    df = spread(df.select("doc_id", "text"))
     # ONE tokenize+shingle pass (optimization r12, guide §2.4): the
     # inverted index is materialized once (eager localCheckpoint, the
     # multi-consumer discipline) and feeds all three consumers — the
@@ -460,20 +443,20 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str = "doc_id",
     # reliable copy, so a lost executor fails the job instead of
     # recomputing. At that scale use a reliable `checkpoint()` to a
     # checkpoint dir sized for it.
-    sh = (_sized_shingles(df, id_col, text_col, n, max_shingle_df=None)
+    sh = (_sized_shingles(df, max_shingle_df=None)
           .localCheckpoint(eager=True))
-    sig = _signatures_from_shingles(sh, id_col)
-    melted = _banded_buckets(sig, id_col)
-    l = melted.select(F.col(id_col).alias("doc_a"), "bucket")
-    r = melted.select(F.col(id_col).alias("doc_b"), "bucket")
+    sig = _signatures_from_shingles(sh)
+    melted = _banded_buckets(sig)
+    l = melted.select(F.col("doc_id").alias("doc_a"), "bucket")
+    r = melted.select(F.col("doc_id").alias("doc_b"), "bucket")
     cand = (l.join(r, "bucket").where(F.col("doc_a") < F.col("doc_b"))
              .select("doc_a", "doc_b").distinct())
 
     # verify candidates with exact Jaccard (inverted index restricted
     # to candidate docs — semi-join pushdown keeps this cheap)
-    a = sh.select(F.col(id_col).alias("doc_a"), "shingle",
+    a = sh.select(F.col("doc_id").alias("doc_a"), "shingle",
                   F.col("sz").alias("sz_a"))
-    b = sh.select(F.col(id_col).alias("doc_b"), "shingle",
+    b = sh.select(F.col("doc_id").alias("doc_b"), "shingle",
                   F.col("sz").alias("sz_b"))
     inter = (
         a.join(cand.select("doc_a").distinct(), "doc_a", "left_semi")
@@ -487,9 +470,7 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str = "doc_id",
 
 
 def incremental_neardup(new_df: DataFrame, seen_df: DataFrame,
-                        id_col: str = "doc_id", text_col: str = "text",
-                        threshold: float = 0.5,
-                        n: int = NGRAM_N) -> DataFrame:
+                        threshold: float = 0.5) -> DataFrame:
     """CROSS-BATCH near-dup gate — the operator an INCREMENTAL
     ingest pipeline actually runs: today's batch (`new_df`) checked
     against the already-ingested corpus (`seen_df`), per-new-doc
@@ -515,32 +496,28 @@ def incremental_neardup(new_df: DataFrame, seen_df: DataFrame,
     no-op on well-split input): the side's shingle index is
     materialized and shared by its signature aggregate and its verify
     join side (optimization r12 — see `minhash_lsh_pairs`)."""
-    new_s = spread(new_df.select(id_col, text_col))
-    seen_s = spread(seen_df.select(id_col, text_col))
+    new_s = spread(new_df.select("doc_id", "text"))
+    seen_s = spread(seen_df.select("doc_id", "text"))
     # ONE tokenize+shingle pass per side (optimization r12, guide
     # §2.4 — same shared-index discipline as `minhash_lsh_pairs`):
     # each side's inverted index is materialized once and feeds both
     # its signature aggregate and its verify join side, instead of
     # re-tokenizing per consumer (was 4 full text passes, 2 per side).
-    sh_new = (_sized_shingles(new_s, id_col, text_col, n,
-                              max_shingle_df=None)
+    sh_new = (_sized_shingles(new_s, max_shingle_df=None)
               .localCheckpoint(eager=True))
-    sh_seen = (_sized_shingles(seen_s, id_col, text_col, n,
-                               max_shingle_df=None)
+    sh_seen = (_sized_shingles(seen_s, max_shingle_df=None)
                .localCheckpoint(eager=True))
-    mn = (_banded_buckets(_signatures_from_shingles(sh_new, id_col),
-                          id_col)
-          .select(F.col(id_col).alias("new_id"), "bucket"))
-    ms = (_banded_buckets(_signatures_from_shingles(sh_seen, id_col),
-                          id_col)
-          .select(F.col(id_col).alias("seen_id"), "bucket"))
+    mn = (_banded_buckets(_signatures_from_shingles(sh_new))
+          .select(F.col("doc_id").alias("new_id"), "bucket"))
+    ms = (_banded_buckets(_signatures_from_shingles(sh_seen))
+          .select(F.col("doc_id").alias("seen_id"), "bucket"))
     cand = (mn.join(ms, "bucket")
               .select("new_id", "seen_id").distinct())
-    a = (sh_new.select(F.col(id_col).alias("new_id"), "shingle",
+    a = (sh_new.select(F.col("doc_id").alias("new_id"), "shingle",
                        F.col("sz").alias("sz_a"))
                .join(cand.select("new_id").distinct(), "new_id",
                      "left_semi"))
-    b = (sh_seen.select(F.col(id_col).alias("seen_id"), "shingle",
+    b = (sh_seen.select(F.col("doc_id").alias("seen_id"), "shingle",
                         F.col("sz").alias("sz_b"))
                 .join(cand.select("seen_id").distinct(), "seen_id",
                       "left_semi"))
@@ -561,9 +538,9 @@ def incremental_neardup(new_df: DataFrame, seen_df: DataFrame,
                .where(F.col("__rn") == 1)
                .select("new_id", F.col("seen_id").alias("matched_seen"),
                        "n_common", "jaccard"))
-    return (new_df.select(F.col(id_col))
-            .join(best, F.col(id_col) == F.col("new_id"), "left")
-            .select(id_col,
+    return (new_df.select(F.col("doc_id"))
+            .join(best, F.col("doc_id") == F.col("new_id"), "left")
+            .select("doc_id",
                     F.expr("CAST(matched_seen IS NOT NULL AS BIGINT)")
                      .alias("is_dup"),
                     F.col("matched_seen").cast("long").alias("matched_seen"),
@@ -572,44 +549,39 @@ def incremental_neardup(new_df: DataFrame, seen_df: DataFrame,
 
 # ----------------------------------------------------------- simhash
 
-def simhash_fingerprints(df: DataFrame, id_col: str = "doc_id",
-                         text_col: str = "text",
-                         bits: int = SIMHASH_BITS) -> DataFrame:
+def simhash_fingerprints(df: DataFrame) -> DataFrame:
     """Per-doc simhash: bit b of the fingerprint is the sign of the
     vote Σ_tokens (±1 per token's hash bit b) over distinct tokens.
 
     The tokenize + per-token md5 runs in the scan stage — scan-width
     spread first (optimization r11, guide §2.5; no-op on well-split
     input)."""
-    df = spread(df.select(id_col, text_col))
+    df = spread(df.select("doc_id", "text"))
     # per-doc token dedup map-side (array_distinct) — no shuffle
     toks = (
-        df.select(F.col(id_col),
-                  F.explode(F.array_distinct(tokens(text_col))).alias("tok"))
-          .select(id_col, h60(F.col("tok")).alias("h"))
+        df.select(F.col("doc_id"),
+                  F.explode(F.array_distinct(tokens("text"))).alias("tok"))
+          .select("doc_id", h60(F.col("tok")).alias("h"))
     )
     votes = [
         F.sum(F.when(F.shiftright(F.col("h"), b).bitwiseAND(1) == 1, 1)
                .otherwise(-1)).alias(f"v{b}")
-        for b in range(bits)
+        for b in range(SIMHASH_BITS)
     ]
-    per_doc = toks.groupBy(id_col).agg(*votes)
+    per_doc = toks.groupBy("doc_id").agg(*votes)
     fp = None
-    for b in range(bits):
+    for b in range(SIMHASH_BITS):
         term = F.when(F.col(f"v{b}") > 0,
                       F.lit(1 << b).cast("long")).otherwise(F.lit(0).cast("long"))
         fp = term if fp is None else fp + term
-    return per_doc.select(id_col, fp.alias("fingerprint"))
+    return per_doc.select("doc_id", fp.alias("fingerprint"))
 
 
-def simhash_pairs(df: DataFrame, id_col: str = "doc_id",
-                  text_col: str = "text",
-                  max_hamming: int = SIMHASH_MAX_HAMMING,
-                  max_bucket_df: int | None = DEFAULT_MAX_DF) -> DataFrame:
-    """Near-dup pairs with Hamming(fingerprint) ≤ max_hamming.
+def simhash_pairs(df: DataFrame) -> DataFrame:
+    """Near-dup pairs with Hamming(fingerprint) ≤ SIMHASH_MAX_HAMMING.
     Candidates via 4×12-bit band collisions (any identical band —
     sound for ≤3 flipped bits over 4 bands by pigeonhole).
-    `max_bucket_df` drops buckets shared by more docs than the cut —
+    `DEFAULT_MAX_DF` drops buckets shared by more docs than the cut —
     the hot-bucket skew guard (boilerplate text makes one 12-bit band
     value quadratic at web scale).
 
@@ -619,34 +591,33 @@ def simhash_pairs(df: DataFrame, id_col: str = "doc_id",
     full corpus scans in the dumped plan; measured 2.9 → 2.5 s at
     sf0.1, and at 100 TB the second tokenize scan is the whole
     bill)."""
-    fps = (simhash_fingerprints(df, id_col, text_col)
+    fps = (simhash_fingerprints(df)
            .localCheckpoint(eager=True))
     width = SIMHASH_BITS // SIMHASH_BANDS
     melted = fps.select(
-        F.col(id_col), F.col("fingerprint"),
+        F.col("doc_id"), F.col("fingerprint"),
         F.explode(F.array(*[
             F.concat_ws(":", F.lit(str(c)),
                         (F.shiftright(F.col("fingerprint"), c * width)
                           .bitwiseAND((1 << width) - 1)).cast("string"))
             for c in range(SIMHASH_BANDS)])).alias("bucket"))
-    if max_bucket_df is not None:
-        # window df-cut: partitions by `bucket`, the join key below, so
-        # the exchange is shared with the candidate join (no separate
-        # count + anti-join branch recomputing the fingerprints)
-        from pyspark.sql import Window
-        melted = (melted.withColumn(
-                      "df", F.count(F.lit(1)).over(Window.partitionBy("bucket")))
-                        .where(F.col("df") <= max_bucket_df).drop("df"))
-    l = melted.select(F.col(id_col).alias("doc_a"),
+    # window df-cut: partitions by `bucket`, the join key below, so the
+    # exchange is shared with the candidate join (no separate count +
+    # anti-join branch recomputing the fingerprints)
+    from pyspark.sql import Window
+    melted = (melted.withColumn(
+                  "df", F.count(F.lit(1)).over(Window.partitionBy("bucket")))
+                    .where(F.col("df") <= DEFAULT_MAX_DF).drop("df"))
+    l = melted.select(F.col("doc_id").alias("doc_a"),
                       F.col("fingerprint").alias("fp_a"), "bucket")
-    r = melted.select(F.col(id_col).alias("doc_b"),
+    r = melted.select(F.col("doc_id").alias("doc_b"),
                       F.col("fingerprint").alias("fp_b"), "bucket")
     return (
         l.join(r, "bucket").where(F.col("doc_a") < F.col("doc_b"))
          .select("doc_a", "doc_b", "fp_a", "fp_b").distinct()
          .withColumn("hamming",
                      F.bit_count(F.col("fp_a").bitwiseXOR(F.col("fp_b"))).cast("long"))
-         .where(F.col("hamming") <= max_hamming)
+         .where(F.col("hamming") <= SIMHASH_MAX_HAMMING)
          .select("doc_a", "doc_b", "hamming")
     )
 
@@ -736,10 +707,12 @@ def connected_components(pairs: DataFrame, src: str = "doc_a",
                          F.col("lbl").alias("cluster_id"))
 
 
+STAR_MAX_ROUNDS = 25  # star contraction halves components per round
+
+
 def connected_components_star(pairs: DataFrame, src: str = "doc_a",
                               dst: str = "doc_b",
-                              id_out: str = "doc_id",
-                              max_rounds: int = 25) -> DataFrame:
+                              id_out: str = "doc_id") -> DataFrame:
     """Connected components by ALTERNATING STAR CONTRACTION (Kiveris
     et al., "Connected Components in MapReduce and Beyond", SoCC'14):
     the O(log n)-round alternative to `connected_components` for
@@ -781,7 +754,7 @@ def connected_components_star(pairs: DataFrame, src: str = "doc_a",
     # width.
     cur = e
     converged = False
-    for _ in range(max_rounds):
+    for _ in range(STAR_MAX_ROUNDS):
         # ---- large star: sym neighbours; larger ones → min
         sym = (cur.select("u", "v")
                   .union(cur.select(F.col("v").alias("u"),
@@ -817,8 +790,8 @@ def connected_components_star(pairs: DataFrame, src: str = "doc_a",
     if not converged:
         raise RuntimeError(
             f"connected_components_star: no fixpoint within "
-            f"max_rounds={max_rounds} (components halve per round — "
-            f"this bounds graphs up to ~2^{max_rounds} nodes)")
+            f"{STAR_MAX_ROUNDS} rounds (components halve per round — "
+            f"this bounds graphs up to ~2^{STAR_MAX_ROUNDS} nodes)")
     # fixpoint is a star forest: non-roots point at their component
     # min; roots (and mid-contraction isolated nodes) label themselves
     mapping = cur.groupBy("u").agg(F.min("v").alias("lbl"))
@@ -827,8 +800,7 @@ def connected_components_star(pairs: DataFrame, src: str = "doc_a",
                          F.coalesce("lbl", "node").alias("cluster_id")))
 
 
-def keep_canonical(df: DataFrame, clusters: DataFrame,
-                   id_col: str = "doc_id") -> DataFrame:
+def keep_canonical(df: DataFrame, clusters: DataFrame) -> DataFrame:
     """Materialize the deduped corpus: keep every document that is
     either outside the pair graph (singleton) or the canonical
     (minimum-id) member of its duplicate cluster. This is the step a
@@ -838,17 +810,15 @@ def keep_canonical(df: DataFrame, clusters: DataFrame,
     Scale notes: `clusters` is LSH-pruned (pair-graph nodes only), so
     it broadcasts into the full corpus scan — one broadcast left join
     + filter, no shuffle of the 100 TB side."""
-    c = clusters.select(F.col(id_col).alias("_cc_id"),
+    c = clusters.select(F.col("doc_id").alias("_cc_id"),
                         F.col("cluster_id").alias("_cc_lbl"))
-    return (df.join(F.broadcast(c), df[id_col] == c._cc_id, "left")
+    return (df.join(F.broadcast(c), df["doc_id"] == c._cc_id, "left")
               .where(F.col("_cc_lbl").isNull()
-                     | (F.col("_cc_lbl") == df[id_col]))
+                     | (F.col("_cc_lbl") == df["doc_id"]))
               .drop("_cc_id", "_cc_lbl"))
 
 
-def decontaminate(df: DataFrame, id_col: str = "doc_id",
-                  text_col: str = "text", bench_mod: int = 97,
-                  n: int = NGRAM_N) -> DataFrame:
+def decontaminate(df: DataFrame, bench_mod: int = 97) -> DataFrame:
     """Benchmark decontamination: per training document, how many of
     its word n-gram shingles also appear in the held-out benchmark
     set. Docs whose n-grams overlap an eval benchmark leak test data
@@ -867,18 +837,17 @@ def decontaminate(df: DataFrame, id_col: str = "doc_id",
     shuffles exactly once — a single map-side-combining aggregate on
     the doc key computes totals and hits together (a semi-join +
     separate aggregates would scan and shuffle the corpus twice)."""
-    sh = shingles(spread(df.select(id_col, text_col)),
-        id_col, text_col, n)
-    is_bench = (F.col(id_col) % bench_mod) == 0
+    sh = shingles(spread(df.select("doc_id", "text")))
+    is_bench = (F.col("doc_id") % bench_mod) == 0
     bench_sh = (sh.where(is_bench).select("shingle").distinct()
                   .withColumn("_hit", F.lit(1)))
     return (
         sh.where(~is_bench)
           .join(F.broadcast(bench_sh), "shingle", "left")
-          .groupBy(id_col)
+          .groupBy("doc_id")
           .agg(F.count(F.lit(1)).alias("n_shingles"),
                F.sum(F.coalesce("_hit", F.lit(0))).alias("n_hits"))
-          .select(F.col(id_col),
+          .select(F.col("doc_id"),
                   F.col("n_shingles"),
                   F.col("n_hits"),
                   (F.col("n_hits") > 0).cast("long").alias("contaminated"),
@@ -892,8 +861,7 @@ def decontaminate(df: DataFrame, id_col: str = "doc_id",
 SUBSTR_GRAM_LEN = 20  # chars per gram (the "min duplicated length")
 
 
-def substring_dup_spans(df: DataFrame, id_col: str = "doc_id",
-                        text_col: str = "text",
+def substring_dup_spans(df: DataFrame,
                         gram_len: int = SUBSTR_GRAM_LEN) -> DataFrame:
     """EXACT duplicated-substring census — per document, the merged
     character spans covered by any length-`gram_len` substring that
@@ -946,15 +914,15 @@ def substring_dup_spans(df: DataFrame, id_col: str = "doc_id",
     # the posting explosion (one row per corpus char) happens in the
     # scan stage — a one-file fixture would serialize it on one task
     df = spread(df)
-    base = df.where(F.col(text_col).isNotNull()
-                    & (F.length(text_col) >= L))
+    base = df.where(F.col("text").isNotNull()
+                    & (F.length("text") >= L))
     pos = base.select(
-        F.col(id_col), F.col(text_col),
+        F.col("doc_id"), F.col("text"),
         F.explode(F.sequence(
-            F.lit(1), F.length(text_col) - L + 1)).alias("pos"))
-    gram = F.expr(f"substr({text_col}, pos, {L})")
+            F.lit(1), F.length("text") - L + 1)).alias("pos"))
+    gram = F.expr(f"substr(text, pos, {L})")
     keyed = pos.select(
-        F.col(id_col), F.col("pos"),
+        F.col("doc_id"), F.col("pos"),
         F.xxhash64(gram).alias("g1"),
         F.xxhash64(F.lit(1), gram).alias("g2"))
     dup_keys = (keyed.groupBy("g1", "g2")
@@ -962,24 +930,24 @@ def substring_dup_spans(df: DataFrame, id_col: str = "doc_id",
                      .where(F.col("c") >= 2)
                      .select("g1", "g2"))
     hits = keyed.join(dup_keys, ["g1", "g2"], "left_semi")
-    w = Window.partitionBy(id_col).orderBy("pos")
+    w = Window.partitionBy("doc_id").orderBy("pos")
     isl = (hits.withColumn(
                "_nf", F.when(F.lag("pos").over(w).isNull()
                              | (F.col("pos") - F.lag("pos").over(w) >= L),
                              1).otherwise(0))
                .withColumn("_iid", F.sum("_nf").over(
                    w.rowsBetween(Window.unboundedPreceding, 0))))
-    spans = (isl.groupBy(id_col, "_iid")
+    spans = (isl.groupBy("doc_id", "_iid")
                 .agg(F.min("pos").alias("s"),
                      (F.max("pos") + L - 1).alias("e")))
-    per_doc = (spans.groupBy(id_col)
+    per_doc = (spans.groupBy("doc_id")
                     .agg(F.count(F.lit(1)).cast("long").alias("n_dup_spans"),
                          F.expr("CAST(sum(e - s + 1) AS BIGINT)")
                           .alias("dup_chars")))
-    all_docs = df.where(F.col(text_col).isNotNull()).select(
-        F.col(id_col), F.length(text_col).cast("long").alias("n_chars"))
-    return (all_docs.join(per_doc, id_col, "left")
-            .select(id_col, "n_chars",
+    all_docs = df.where(F.col("text").isNotNull()).select(
+        F.col("doc_id"), F.length("text").cast("long").alias("n_chars"))
+    return (all_docs.join(per_doc, "doc_id", "left")
+            .select("doc_id", "n_chars",
                     F.coalesce("n_dup_spans", F.lit(0)).cast("long")
                      .alias("n_dup_spans"),
                     F.coalesce("dup_chars", F.lit(0)).cast("long")
@@ -998,8 +966,7 @@ KR_MOD = 1_000_000_007  # 31-bit prime modulus: keeps every Horner
                         # regime as MERSENNE31-reduced h32
 
 
-def winnow_fingerprints(df: DataFrame, id_col: str = "doc_id",
-                        text_col: str = "text", k: int = WINNOW_K,
+def winnow_fingerprints(df: DataFrame, k: int = WINNOW_K,
                         w: int = WINNOW_W) -> DataFrame:
     """Winnowing document fingerprints (Schleimer, Wilkerson, Aiken,
     SIGMOD'03 — the MOSS algorithm): hash every overlapping `k`-char
@@ -1039,13 +1006,13 @@ def winnow_fingerprints(df: DataFrame, id_col: str = "doc_id",
     # the whole op is compute-bound INSIDE the scan — a one-file
     # fixture would pin it to a single task (same knob as ivf_topk)
     df = spread(df)
-    base = (df.where(F.col(text_col).isNotNull()
-                     & (F.length(text_col) >= k))
-              .select(F.col(id_col),
-                      F.expr(f"transform(split({text_col}, ''), "
+    base = (df.where(F.col("text").isNotNull()
+                     & (F.length("text") >= k))
+              .select(F.col("doc_id"),
+                      F.expr("transform(split(text, ''), "
                              f"c -> CAST(ascii(c) AS BIGINT))")
                        .alias("cs"))
-              .select(F.col(id_col),
+              .select(F.col("doc_id"),
                       F.expr(f"transform(sequence(1, size(cs) "
                              f"- {k} + 1), p -> {hexpr})")
                        .alias("hs")))
@@ -1061,14 +1028,13 @@ def winnow_fingerprints(df: DataFrame, id_col: str = "doc_id",
            f"'pos', CAST(x.i + size(x.s) "
            f"- array_position(reverse(x.s), array_min(x.s)) AS BIGINT), "
            f"'fp', array_min(x.s))))")
-    return (base.select(id_col, F.explode(F.expr(fps)).alias("f"))
-                .select(id_col,
+    return (base.select("doc_id", F.explode(F.expr(fps)).alias("f"))
+                .select("doc_id",
                         F.col("f.pos").cast("long").alias("pos"),
                         F.col("f.fp").cast("long").alias("fp")))
 
 
-def winnow_shared_census(df: DataFrame, id_col: str = "doc_id",
-                         text_col: str = "text", k: int = WINNOW_K,
+def winnow_shared_census(df: DataFrame, k: int = WINNOW_K,
                          w: int = WINNOW_W) -> DataFrame:
     """Per-doc cross-document fingerprint-sharing census over the
     winnowed fingerprints: n_fp distinct fingerprint hashes per doc,
@@ -1079,19 +1045,19 @@ def winnow_shared_census(df: DataFrame, id_col: str = "doc_id",
     same first_seen shape as shingle_novelty, on an 8×-sampled
     stream."""
     from pyspark.sql import Window
-    fp = (winnow_fingerprints(df, id_col, text_col, k, w)
-          .select(id_col, "fp").distinct())
+    fp = (winnow_fingerprints(df, k=k, w=w)
+          .select("doc_id", "fp").distinct())
     w_fp = Window.partitionBy("fp")
     flagged = fp.withColumn(
         "shared", (F.count(F.lit(1)).over(w_fp) >= 2).cast("long"))
-    per_doc = (flagged.groupBy(id_col)
+    per_doc = (flagged.groupBy("doc_id")
                .agg(F.count(F.lit(1)).cast("long").alias("n_fp"),
                     F.expr("CAST(sum(shared) AS BIGINT)")
                      .alias("n_shared")))
-    all_docs = (df.where(F.col(text_col).isNotNull())
-                  .select(F.col(id_col)))
-    return (all_docs.join(per_doc, id_col, "left")
-            .select(id_col,
+    all_docs = (df.where(F.col("text").isNotNull())
+                  .select(F.col("doc_id")))
+    return (all_docs.join(per_doc, "doc_id", "left")
+            .select("doc_id",
                     F.coalesce("n_fp", F.lit(0)).cast("long")
                      .alias("n_fp"),
                     F.coalesce("n_shared", F.lit(0)).cast("long")
@@ -1104,12 +1070,8 @@ def winnow_shared_census(df: DataFrame, id_col: str = "doc_id",
 CONTAINMENT_PPM = 800_000  # flag pairs where ≥80% of one side is shared
 
 
-def containment_pairs(df: DataFrame, id_col: str = "doc_id",
-                      text_col: str = "text",
-                      threshold_ppm: int = CONTAINMENT_PPM,
-                      n: int = NGRAM_N,
-                      max_shingle_df: int | None = DEFAULT_MAX_DF
-                      ) -> DataFrame:
+def containment_pairs(df: DataFrame,
+                      threshold_ppm: int = CONTAINMENT_PPM) -> DataFrame:
     """ASYMMETRIC near-dup detection: shingle containment
     |S_A ∩ S_B| / |S_A| — the excerpt/superset signal Jaccard
     structurally misses (a 100-shingle quote inside a 10,000-shingle
@@ -1129,12 +1091,10 @@ def containment_pairs(df: DataFrame, id_col: str = "doc_id",
     pairs only materialize for docs sharing a shingle, hot shingles
     bounded by the df-cut; the directional division adds two codegen
     expressions to the same aggregate."""
-    sh = _sized_shingles(
-        spread(df.select(id_col, text_col)),
-        id_col, text_col, n, max_shingle_df)
-    a = sh.select(F.col(id_col).alias("doc_a"), "shingle",
+    sh = _sized_shingles(spread(df.select("doc_id", "text")), DEFAULT_MAX_DF)
+    a = sh.select(F.col("doc_id").alias("doc_a"), "shingle",
                   F.col("sz").alias("sz_a"))
-    b = sh.select(F.col(id_col).alias("doc_b"), "shingle",
+    b = sh.select(F.col("doc_id").alias("doc_b"), "shingle",
                   F.col("sz").alias("sz_b"))
     inter = (a.join(b, "shingle")
               .where(F.col("doc_a") < F.col("doc_b"))
@@ -1154,10 +1114,7 @@ def containment_pairs(df: DataFrame, id_col: str = "doc_id",
                     "cont_a_ppm", "cont_b_ppm"))
 
 
-def minhash_estimator_quality(df: DataFrame, id_col: str = "doc_id",
-                              text_col: str = "text",
-                              threshold: float = 0.5,
-                              n: int = NGRAM_N,
+def minhash_estimator_quality(df: DataFrame, threshold: float = 0.5,
                               pairs: DataFrame | None = None) -> DataFrame:
     """MinHash estimator-quality report — `emb_ann_recall`'s text-side
     twin: for every verified near-dup pair, the Jaccard ESTIMATE the
@@ -1178,24 +1135,24 @@ def minhash_estimator_quality(df: DataFrame, id_col: str = "doc_id",
     corpus. Pass `pairs` (e.g. the catalog's memoized pair graph) to
     reuse an already-materialized candidate list."""
     if pairs is None:
-        pairs = minhash_lsh_pairs(df, id_col, text_col, threshold, n)
-    df = spread(df.select(id_col, text_col))
+        pairs = minhash_lsh_pairs(df, threshold=threshold)
+    df = spread(df.select("doc_id", "text"))
     # ONE tokenize+shingle pass (optimization r12, guide §2.4): the
     # materialized index feeds the two sz join sides AND the signature
     # aggregate (was 3 full text passes — sz consumed twice, sig once)
-    sh = (_sized_shingles(df, id_col, text_col, n, max_shingle_df=None)
+    sh = (_sized_shingles(df, max_shingle_df=None)
           .localCheckpoint(eager=True))
-    sz = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("sz"))
+    sz = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
     pairs = (pairs
-             .join(sz.select(F.col(id_col).alias("doc_a"),
+             .join(sz.select(F.col("doc_id").alias("doc_a"),
                              F.col("sz").alias("sz_a")), "doc_a")
-             .join(sz.select(F.col(id_col).alias("doc_b"),
+             .join(sz.select(F.col("doc_id").alias("doc_b"),
                              F.col("sz").alias("sz_b")), "doc_b"))
-    sig = _signatures_from_shingles(sh, id_col)
+    sig = _signatures_from_shingles(sh)
     k = MINHASH_K
-    sa = sig.select(F.col(id_col).alias("doc_a"),
+    sa = sig.select(F.col("doc_id").alias("doc_a"),
                     *[F.col(f"m{i}").alias(f"a{i}") for i in range(k)])
-    sb = sig.select(F.col(id_col).alias("doc_b"),
+    sb = sig.select(F.col("doc_id").alias("doc_b"),
                     *[F.col(f"m{i}").alias(f"b{i}") for i in range(k)])
     matches = sum(
         F.when(F.col(f"a{i}") == F.col(f"b{i}"), 1).otherwise(0)

@@ -34,14 +34,12 @@ from pyspark.sql import DataFrame, functions as F
 from ..execution import cadenced, checkpoint
 
 PR_SCALE = 1_000_000_000  # ranks are integers scaled by 1e9
+DAMPING_PCT = 85  # PageRank damping factor, percent
 
 
-def pagerank_exact(edges: DataFrame, iters: int = 5,
-                   scale: int = PR_SCALE,
-                   src: str = "src", dst: str = "dst",
-                   damping_pct: int = 85) -> DataFrame:
+def pagerank_exact(edges: DataFrame, iters: int = 5) -> DataFrame:
     """Fixed-point PageRank over a directed edge list. Returns
-    (node, rank) with rank ≈ PageRank · `scale`, exact integers.
+    (node, rank) with rank ≈ PageRank · `PR_SCALE`, exact integers.
 
     r_0(v)   = scale // n
     r_{k+1}(v) = (100-d)·(scale // n) // 100
@@ -59,7 +57,7 @@ def pagerank_exact(edges: DataFrame, iters: int = 5,
     (~30-100 ms); at the graded 5 iterations those launches were
     most of the non-shuffle wall-clock, while the exchanges and
     results are byte-identical (materialization timing only)."""
-    e = (edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+    e = (edges.select("src", "dst")
               .where(F.col("src").isNotNull() & F.col("dst").isNotNull())
               .distinct()
               .transform(checkpoint))  # referenced every round
@@ -82,8 +80,8 @@ def pagerank_exact(edges: DataFrame, iters: int = 5,
     ed = (e.withColumn("deg", F.count(F.lit(1)).over(
               Window.partitionBy("src")).cast("long"))
            .transform(checkpoint))
-    base = scale // n
-    teleport = ((100 - damping_pct) * base) // 100
+    base = PR_SCALE // n
+    teleport = ((100 - DAMPING_PCT) * base) // 100
     r = nodes.withColumn("r", F.lit(base).cast("long"))
     for k in range(iters):
         contrib = (ed.join(r, ed.src == r.node)
@@ -93,15 +91,14 @@ def pagerank_exact(edges: DataFrame, iters: int = 5,
                      .agg(F.expr("CAST(sum(c) AS BIGINT)").alias("c")))
         r = (nodes.join(contrib, "node", "left")
                   .select("node",
-                          F.expr(f"CAST({teleport} + ({damping_pct} * "
+                          F.expr(f"CAST({teleport} + ({DAMPING_PCT} * "
                                  f"coalesce(c, CAST(0 AS BIGINT))) div 100 "
                                  f"AS BIGINT)").alias("r")))
         r = cadenced(r, k)
     return r.select("node", F.col("r").alias("rank"))
 
 
-def triangle_counts(edges: DataFrame,
-                    src: str = "src", dst: str = "dst") -> DataFrame:
+def triangle_counts(edges: DataFrame) -> DataFrame:
     """Per-node triangle counts over an undirected edge list — the
     clustering-density metric that separates true duplicate CLIQUES
     from chains of borderline near-dup pairs (a doc whose pairs all
@@ -129,7 +126,7 @@ def triangle_counts(edges: DataFrame,
     closer) whose lineage would otherwise re-execute the entire
     upstream pair-generation pipeline per reference — both derived
     frames are materialized once with an eager localCheckpoint."""
-    e = (edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
+    e = (edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
               .where(F.col("a").isNotNull() & F.col("b").isNotNull()
                      & (F.col("a") != F.col("b")))
               .select(F.least("a", "b").alias("a"),
@@ -172,8 +169,7 @@ def triangle_counts(edges: DataFrame,
                           .cast("long").alias("n_triangles")))
 
 
-def kcore_peel(edges: DataFrame, k: int = 2, rounds: int = 4,
-               src: str = "src", dst: str = "dst") -> DataFrame:
+def kcore_peel(edges: DataFrame, k: int = 2, rounds: int = 4) -> DataFrame:
     """k-core membership by iterative peeling — the cohesion metric
     BETWEEN degree and triangles: a node survives the k-core iff it
     keeps >= k neighbors after everyone below k is recursively
@@ -204,7 +200,7 @@ def kcore_peel(edges: DataFrame, k: int = 2, rounds: int = 4,
     round's survivor list is eagerly checkpointed (the loop otherwise
     stacks 2·rounds lazy joins onto the upstream pair-generation
     lineage)."""
-    e0 = (edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
+    e0 = (edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
                .where(F.col("a").isNotNull() & F.col("b").isNotNull()
                       & (F.col("a") != F.col("b")))
                .select(F.least("a", "b").alias("a"),
@@ -243,8 +239,7 @@ def kcore_peel(edges: DataFrame, k: int = 2, rounds: int = 4,
                           .alias("core_deg")))
 
 
-def lpa_communities(edges: DataFrame, rounds: int = 4,
-                    src: str = "src", dst: str = "dst") -> DataFrame:
+def lpa_communities(edges: DataFrame, rounds: int = 4) -> DataFrame:
     """Community detection by synchronous label propagation (Raghavan
     et al. 2007) — the modularity-flavored grouping BETWEEN connected
     components (which merge everything reachable) and k-core (which
@@ -268,7 +263,7 @@ def lpa_communities(edges: DataFrame, rounds: int = 4,
     round. Eager checkpoints between rounds (shared iteration
     discipline)."""
     from pyspark.sql import Window
-    und = (edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
+    und = (edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
                 .where(F.col("a").isNotNull() & F.col("b").isNotNull()
                        & (F.col("a") != F.col("b")))
                 .select(F.least("a", "b").alias("a"),
@@ -306,8 +301,7 @@ def lpa_communities(edges: DataFrame, rounds: int = 4,
                        "n_members"))
 
 
-def link_prediction(edges: DataFrame, src: str = "src",
-                    dst: str = "dst") -> DataFrame:
+def link_prediction(edges: DataFrame) -> DataFrame:
     """Common-neighbor link prediction over an undirected edge list
     (edges given once per pair, src < dst): for every NON-adjacent
     pair sharing ≥1 neighbor, the common-neighbor count and the
@@ -328,7 +322,7 @@ def link_prediction(edges: DataFrame, src: str = "src",
 
     Returns (node_a, node_b, cn, deg_a, deg_b, jaccard), node_a <
     node_b."""
-    e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+    e = edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
     adj = e.unionByName(e.select(F.col("v").alias("u"),
                                  F.col("u").alias("v")))
     deg = adj.groupBy("u").agg(F.count(F.lit(1)).cast("long").alias("deg"))
@@ -355,8 +349,7 @@ def link_prediction(edges: DataFrame, src: str = "src",
 
 # ------------------------------------------------- ancestor closure
 
-def ancestor_closure(parents: DataFrame, child: str = "child",
-                     parent: str = "parent", rounds: int = 4) -> DataFrame:
+def ancestor_closure(parents: DataFrame, rounds: int = 4) -> DataFrame:
     """Transitive ancestor closure of a parent-pointer forest by
     POINTER-JUMPING doubling — the distributed answer to the
     recursive-CTE hierarchy traversal (org charts, BOM explosions,
@@ -380,8 +373,8 @@ def ancestor_closure(parents: DataFrame, child: str = "child",
     shuffle measured on a ×100 depth-64 forest), while the common
     depth/descendant-count/subtree-sum rollups come from
     `hierarchy_aggregates` with O(|V|)-row exchanges instead."""
-    reach = checkpoint(parents.select(F.col(child).alias("node"),
-                                      F.col(parent).alias("anc")))
+    reach = checkpoint(parents.select(F.col("child").alias("node"),
+                                      F.col("parent").alias("anc")))
     for _ in range(rounds):
         a = reach.select(F.col("node"), F.col("anc").alias("mid"))
         b = reach.select(F.col("node").alias("mid"),
@@ -393,7 +386,6 @@ def ancestor_closure(parents: DataFrame, child: str = "child",
 
 
 def hierarchy_aggregates(parents: DataFrame, values: DataFrame,
-                         child: str = "child", parent: str = "parent",
                          id_col: str = "node", val_col: str = "val",
                          rounds: int = 6) -> DataFrame:
     """Depth + proper-descendant count + subtree value sum for every
@@ -439,8 +431,8 @@ def hierarchy_aggregates(parents: DataFrame, values: DataFrame,
     the binding cost at depth), results hash-identical."""
     base = values.select(F.col(id_col).alias("node"),
                          F.col(val_col).alias("val"))
-    edges = checkpoint(parents.select(F.col(child).alias("node"),
-                                      F.col(parent).alias("par")))
+    edges = checkpoint(parents.select(F.col("child").alias("node"),
+                                      F.col("parent").alias("par")))
 
     # phase 1: depth by doubling with carried distance
     state = checkpoint(edges.select("node", F.col("par").alias("ptr"),

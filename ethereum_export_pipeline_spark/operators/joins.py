@@ -27,10 +27,9 @@ _TAG = "__asof_is_right"
 
 
 def asof_join(left: DataFrame, right: DataFrame, key: str, time: str,
-              payload: list[str], tiebreak: str | None = None,
-              suffix: str = "_r") -> DataFrame:
+              payload: list[str], tiebreak: str | None = None) -> DataFrame:
     """Left as-of-backward join: every `left` row gains
-    ``{p}{suffix}`` columns from the latest `right` row with the same
+    ``{p}_r`` columns from the latest `right` row with the same
     `key` and ``right.time <= left.time`` (NULL when none precedes).
 
     `right` must be unique per (key, time) — pass `tiebreak` (a column
@@ -45,7 +44,7 @@ def asof_join(left: DataFrame, right: DataFrame, key: str, time: str,
                   .where(F.col("__rn") == 1).drop("__rn", tiebreak))
     r = r.select(
         F.col(key), F.col(time),
-        *[F.col(p).alias(f"{p}{suffix}") for p in payload],
+        *[F.col(p).alias(f"{p}_r") for p in payload],
         F.lit(1).alias(_TAG))
     l = left.withColumn(_TAG, F.lit(0))
     u = l.unionByName(r, allowMissingColumns=True)
@@ -56,20 +55,17 @@ def asof_join(left: DataFrame, right: DataFrame, key: str, time: str,
                .rowsBetween(Window.unboundedPreceding, Window.currentRow))
     filled = u.select(
         "*",
-        *[F.last(F.when(F.col(_TAG) == 1, F.col(f"{p}{suffix}")),
+        *[F.last(F.when(F.col(_TAG) == 1, F.col(f"{p}_r")),
                  ignorenulls=True).over(w).alias(f"__fill_{p}")
           for p in payload])
     out = filled.where(F.col(_TAG) == 0).drop(_TAG)
     for p in payload:
-        out = out.drop(f"{p}{suffix}").withColumnRenamed(f"__fill_{p}",
-                                                         f"{p}{suffix}")
+        out = out.drop(f"{p}_r").withColumnRenamed(f"__fill_{p}", f"{p}_r")
     return out
 
 
-def asof_join_bucketed(left: DataFrame, right: DataFrame, key: str,
-                       time: str, payload: list[str], bucket_width: int,
-                       tiebreak: str | None = None,
-                       suffix: str = "_r") -> DataFrame:
+def asof_join_bucketed(left: DataFrame, right: DataFrame, key: str, time: str,
+                       payload: list[str], bucket_width: int) -> DataFrame:
     """`asof_join` with HOT-KEY SKEW defused: identical semantics,
     but the window partitions on (key, time div `bucket_width`)
     instead of (key) alone — a key holding 50% of the corpus becomes
@@ -95,15 +91,9 @@ def asof_join_bucketed(left: DataFrame, right: DataFrame, key: str,
     on (key) with an unbounded sort group. Pick `bucket_width` so a
     hot key's densest bucket fits a task (time-uniform hot keys: span
     / cores; bursty: smaller)."""
-    r = right.select(key, time, *payload)
-    if tiebreak is not None:
-        w_t = Window.partitionBy(key, time).orderBy(F.col(tiebreak).desc())
-        r = (right.select(key, time, tiebreak, *payload)
-                  .withColumn("__rn", F.row_number().over(w_t))
-                  .where(F.col("__rn") == 1).drop("__rn", tiebreak))
-    r = r.select(
+    r = right.select(
         F.col(key), F.col(time),
-        *[F.col(p).alias(f"{p}{suffix}") for p in payload],
+        *[F.col(p).alias(f"{p}_r") for p in payload],
         F.lit(1).alias(_TAG))
     l = left.withColumn(_TAG, F.lit(0))
     u = (l.unionByName(r, allowMissingColumns=True)
@@ -116,7 +106,7 @@ def asof_join_bucketed(left: DataFrame, right: DataFrame, key: str,
                                Window.currentRow))
     filled = u.select(
         "*",
-        *[F.last(F.when(F.col(_TAG) == 1, F.col(f"{p}{suffix}")),
+        *[F.last(F.when(F.col(_TAG) == 1, F.col(f"{p}_r")),
                  ignorenulls=True).over(w_in).alias(f"__in_{p}")
           for p in payload])
 
@@ -125,7 +115,7 @@ def asof_join_bucketed(left: DataFrame, right: DataFrame, key: str,
     last_in_bucket = (
         u.where(F.col(_TAG) == 1)
          .groupBy(key, "__bkt")
-         .agg(*[F.expr(f"max_by({p}{suffix}, {time})")
+         .agg(*[F.expr(f"max_by({p}_r, {time})")
                  .alias(f"__last_{p}") for p in payload]))
     universe = u.select(key, "__bkt").distinct()
     w_carry = (Window.partitionBy(key).orderBy(F.col("__bkt").asc())
@@ -140,7 +130,7 @@ def asof_join_bucketed(left: DataFrame, right: DataFrame, key: str,
                  .where(F.col(_TAG) == 0)
                  .drop(_TAG, "__bkt"))
     for p in payload:
-        out = (out.withColumn(f"{p}{suffix}",
+        out = (out.withColumn(f"{p}_r",
                               F.coalesce(f"__in_{p}", f"__carry_{p}"))
                   .drop(f"__in_{p}", f"__carry_{p}"))
     return out

@@ -22,30 +22,28 @@ from pyspark.sql import Column, DataFrame, functions as F
 Z_BITS = 16  # per-dimension bits; 2 dims × 16 bits fit easily in int64
 
 
-def z_value_expr(x: str, y: str, bits: int = Z_BITS) -> Column:
+def z_value_expr(x: str, y: str) -> Column:
     """Morton key of two non-negative integer columns: bit i of `x`
     lands at position 2i, bit i of `y` at 2i+1. Values are masked to
-    `bits` bits (callers with wider domains should bucket/scale
+    `Z_BITS` bits (callers with wider domains should bucket/scale
     first). Pure codegen'd integer arithmetic — no UDF."""
     terms = " + ".join(
         f"shiftleft((CAST({x} AS BIGINT) >> {i}) & 1, {2 * i}) + "
         f"shiftleft((CAST({y} AS BIGINT) >> {i}) & 1, {2 * i + 1})"
-        for i in range(bits))
+        for i in range(Z_BITS))
     return F.expr(terms)
 
 
-def z_value_sql(x: str, y: str, bits: int = Z_BITS) -> str:
+def z_value_sql(x: str, y: str) -> str:
     """DuckDB twin of `z_value_expr` (same shifts, masks, adds)."""
     terms = " + ".join(
         f"(((CAST({x} AS BIGINT) >> {i}) & 1) << {2 * i}) + "
         f"(((CAST({y} AS BIGINT) >> {i}) & 1) << {2 * i + 1})"
-        for i in range(bits))
+        for i in range(Z_BITS))
     return f"CAST({terms} AS BIGINT)"
 
 
 def compaction_plan(files: DataFrame, target_bytes: int,
-                    key_col: str = "file_id",
-                    bytes_col: str = "bytes",
                     bucket: int = 1024) -> DataFrame:
     """Small-file compaction planning as a distributed query — the
     OPTIMIZE/bin-packing step every long-lived 100 TB lake needs once
@@ -71,10 +69,10 @@ def compaction_plan(files: DataFrame, target_bytes: int,
     global single-partition sort even at a hundred-million-file
     inventory."""
     from pyspark.sql import Window
-    n = (files.where(F.col(key_col).isNotNull())
-              .select(F.col(key_col).alias("f"),
-                      F.col(bytes_col).cast("long").alias("sz"),
-                      F.expr(f"CAST({key_col} AS BIGINT) div {bucket}")
+    n = (files.where(F.col("file_id").isNotNull())
+              .select(F.col("file_id").alias("f"),
+                      F.col("bytes").cast("long").alias("sz"),
+                      F.expr(f"CAST(file_id AS BIGINT) div {bucket}")
                        .alias("_bkt"))
               # explicit, though implied by the join: both consumers of
               # the bucket exchange (window, totals) then canonicalize
@@ -114,14 +112,14 @@ def compaction_plan(files: DataFrame, target_bytes: int,
 
 
 def write_zordered(df: DataFrame, path: str, x: str, y: str,
-                   n_files: int = 16, bits: int = Z_BITS) -> None:
+                   n_files: int = 16) -> None:
     """Write `df` as parquet clustered on the (x, y) Morton curve:
     range-partition on the z-key (one compact curve segment — a small
     rectangle cover — per output file) and sort within partitions so
     row-group stats are tight too. Readers need no special support:
     plain min/max pruning on x and y now skips most files for box
     predicates on either dimension."""
-    keyed = df.withColumn("__z", z_value_expr(x, y, bits))
+    keyed = df.withColumn("__z", z_value_expr(x, y))
     (keyed.repartitionByRange(n_files, "__z")
           .sortWithinPartitions("__z")
           .drop("__z")

@@ -131,15 +131,14 @@ def dec_uint256_limb32_expr(col: str) -> str:
             f"THEN slice({folded}, 1, 8) END END")
 
 
-def token_transfers_from_logs(logs: DataFrame,
-                              topics_col: str = "topics") -> DataFrame:
+def token_transfers_from_logs(logs: DataFrame) -> DataFrame:
     """S5 — decode ERC-20 Transfer events out of raw logs
     (reference config.py:51-53 semantics). Accepts `topics` either as
     the CSV comma-joined string or already as array<string>."""
     df = logs
-    if dict(df.dtypes).get(topics_col) == "string":
-        df = parse_topics(df, topics_col)
-    t = F.col(topics_col)
+    if dict(df.dtypes).get("topics") == "string":
+        df = parse_topics(df)
+    t = F.col("topics")
     return (
         df.where((F.element_at(t, 1) == TRANSFER_SIG) & (F.size(t) == 3))
           .select(

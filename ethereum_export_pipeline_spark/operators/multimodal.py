@@ -144,6 +144,9 @@ def documents_as_media(df: DataFrame) -> DataFrame:
         "text/plain")
 
 
+NEARDUP_ID_OFFSET = 1_000_000  # media_id of an injected near-dup copy
+
+
 def documents_as_ppm_media(df: DataFrame,
                            neardup_mod: int | None = None) -> DataFrame:
     """The IMAGE media fixture: one real P6 PPM per document, pixel
@@ -154,7 +157,7 @@ def documents_as_ppm_media(df: DataFrame,
     recompute every decoded-pixel statistic from the text alone.
 
     `neardup_mod` additionally emits, for every doc with id % mod ==
-    0, a NEAR-duplicate copy at media_id = id + 1,000,000: same image
+    0, a NEAR-duplicate copy at media_id = id + NEARDUP_ID_OFFSET: same image
     with its first pixel forced to white — the
     re-encode-with-a-small-edit fixture the banded-hamming near-dup
     search exists to catch (the `_DIRTY_NAME` discipline: the
@@ -170,7 +173,7 @@ def documents_as_ppm_media(df: DataFrame,
         if neardup_mod is not None and mid % neardup_mod == 0:
             plane = plane.copy()
             plane[0, 0] = 255
-            yield mid + 1_000_000, encode_netpbm(plane)
+            yield mid + NEARDUP_ID_OFFSET, encode_netpbm(plane)
 
     return _with_meta(map_rows(spread(_doc_rows(df)), ppm, PAYLOAD_SCHEMA),
                       "image/x-portable-pixmap")
@@ -1162,13 +1165,12 @@ VAD_SCHEMA = T.StructType([
 ])
 
 
-def audio_silence_runs(media: DataFrame, eps: int = VAD_EPS,
-                       min_run: int = VAD_MIN_RUN) -> DataFrame:
+def audio_silence_runs(media: DataFrame) -> DataFrame:
     """Voice-activity / silence-run detection over DECODED PCM — the
     speech-data curation gate (trim dead air, drop all-silence clips,
     measure how much of a recording is actually voiced): per clip, the
-    maximal runs of consecutive samples within ±eps of the PCM midline
-    whose length reaches `min_run`. Output: (media_id, n_samples,
+    maximal runs of consecutive samples within ±VAD_EPS of the PCM
+    midline whose length reaches VAD_MIN_RUN. Output: (media_id, n_samples,
     n_runs, n_silent = samples inside qualifying runs, longest_run,
     lead_in = the leading run's length when the clip OPENS silent —
     the trim offset). Undecodable/NULL payloads yield NULL fields;
@@ -1188,7 +1190,7 @@ def audio_silence_runs(media: DataFrame, eps: int = VAD_EPS,
         _, _, bits, samples = dec
         mono = samples[:, 0].astype(np.int64)
         n = mono.shape[0]
-        m = np.abs(mono - (128 if bits == 8 else 0)) <= eps
+        m = np.abs(mono - (128 if bits == 8 else 0)) <= VAD_EPS
         if n == 0 or not m.any():
             return [(mid, n, 0, 0, 0, 0)]
         d = np.diff(m.astype(np.int8))
@@ -1199,7 +1201,7 @@ def audio_silence_runs(media: DataFrame, eps: int = VAD_EPS,
         if m[-1]:
             ends = np.concatenate((ends, [n]))
         lens = ends - starts
-        q = lens >= min_run
+        q = lens >= VAD_MIN_RUN
         return [(mid, n, int(q.sum()), int(lens[q].sum()),
                  int(lens[q].max()) if q.any() else 0,
                  int(lens[0]) if (q.size and q[0] and starts[0] == 0)
@@ -1351,16 +1353,21 @@ def _hash_words(bits) -> tuple[int, int]:
     return val >> 32, val & 0xFFFFFFFF
 
 
-def _ahash(decoded, grid: int) -> tuple[int, int]:
+AHASH_GRID = 8  # 8×8 cells: the 64 hash bits
+AUDIO_FP_POINTS = 64  # audio fingerprint: one bit per downsampled point
+PATCH_GRID = 2  # patch tokenization: 2×2 patches per image
+
+
+def _ahash(decoded) -> tuple[int, int]:
     """aHash of one decoded image (w, h, c, pixels): nearest-neighbor
-    downsample to `grid`×`grid`, integer grayscale (r+g+b) div c,
-    integer mean over the grid, bit k = gray_k > mean (k = y·grid+x)."""
+    downsample to AHASH_GRID×AHASH_GRID, integer grayscale (r+g+b) div
+    c, integer mean over the grid, bit k = gray_k > mean (k = y·grid+x)."""
     import numpy as np
     w, h, c, px = decoded
-    ys = (np.arange(grid) * h) // grid
-    xs = (np.arange(grid) * w) // grid
+    ys = (np.arange(AHASH_GRID) * h) // AHASH_GRID
+    xs = (np.arange(AHASH_GRID) * w) // AHASH_GRID
     gray = px[ys][:, xs, :].astype(np.int64).sum(axis=2) // c
-    mean = int(gray.sum()) // (grid * grid)
+    mean = int(gray.sum()) // (AHASH_GRID * AHASH_GRID)
     return _hash_words((gray > mean).ravel())
 
 
@@ -1376,13 +1383,13 @@ def _hash_groups(hashed: DataFrame) -> DataFrame:
                     "keep_id"))
 
 
-def ahash_images(media: DataFrame, grid: int = 8) -> DataFrame:
+def ahash_images(media: DataFrame) -> DataFrame:
     """Perceptual average-hash (aHash) over decoded images — the
     MULTIMODAL near-dup key, completing the dedup matrix (text:
     minhash/simhash; embeddings: LSH/SemDeDup; images: this).
     aHash is resize-invariant by construction: nearest-neighbor
-    downsample to `grid`×`grid`, integer grayscale (r+g+b) div c,
-    integer mean over the grid, bit k = gray_k > mean — so an image
+    downsample to AHASH_GRID×AHASH_GRID, integer grayscale (r+g+b) div
+    c, integer mean over the grid, bit k = gray_k > mean — so an image
     and its upscaled copy hash identically (pinned by test), which
     byte-level `dedup_exact` can never see.
 
@@ -1399,23 +1406,23 @@ def ahash_images(media: DataFrame, grid: int = 8) -> DataFrame:
 
     def ahash(mid, payload):
         dec = decode_image(payload)
-        return [] if dec is None else [(mid, *_ahash(dec, grid))]
+        return [] if dec is None else [(mid, *_ahash(dec))]
 
     return map_rows(media.select("media_id", "payload"), ahash,
                     "media_id long, hash_hi long, hash_lo long")
 
 
-def ahash_dup_groups(media: DataFrame, grid: int = 8) -> DataFrame:
+def ahash_dup_groups(media: DataFrame) -> DataFrame:
     """Perceptual duplicate grouping: aHash per image, then the
     `dedup_exact` group report on the hash key — (media_id, hash_hi,
     hash_lo, n_copies, keep_id) with keep_id the group's min id."""
-    return _hash_groups(ahash_images(media, grid))
+    return _hash_groups(ahash_images(media))
 
 
-def audio_fingerprint_groups(media: DataFrame, grid: int = 64) -> DataFrame:
+def audio_fingerprint_groups(media: DataFrame) -> DataFrame:
     """Perceptual audio fingerprint dedup — `ahash_dup_groups`' audio
     sibling, completing the modality dedup matrix: NN-downsample the
-    decoded amplitude series to `grid` points (channel 0), integer
+    decoded amplitude series to AUDIO_FP_POINTS points (channel 0), integer
     mean threshold, strict-> bits packed into two BIGINTs. A
     sample-rate-doubled copy (each sample repeated) downsamples to
     the SAME points, so re-encoded audio groups with its original
@@ -1431,16 +1438,15 @@ def audio_fingerprint_groups(media: DataFrame, grid: int = 64) -> DataFrame:
         if dec is None or len(dec[3]) == 0:
             return []
         ch = dec[3][:, 0].astype(np.int64)
-        pts = ch[(np.arange(grid) * len(ch)) // grid]
-        return [(mid, *_hash_words(pts > int(pts.sum()) // grid))]
+        pts = ch[(np.arange(AUDIO_FP_POINTS) * len(ch)) // AUDIO_FP_POINTS]
+        return [(mid, *_hash_words(pts > int(pts.sum()) // AUDIO_FP_POINTS))]
 
     return _hash_groups(map_rows(
         media.select("media_id", "payload"), fingerprint,
         "media_id long, hash_hi long, hash_lo long"))
 
 
-def ahash_neardup_pairs(media: DataFrame, grid: int = 8,
-                        max_hamming: int = 6) -> DataFrame:
+def ahash_neardup_pairs(media: DataFrame, max_hamming: int = 6) -> DataFrame:
     """Image NEAR-duplicate pairs: aHash per image, then banded
     hamming search — the 64-bit hash splits into 8 one-byte bands,
     candidates pair on any identical band (equi-join on (band, key)),
@@ -1459,7 +1465,7 @@ def ahash_neardup_pairs(media: DataFrame, grid: int = 8,
     candidates only on band collision, the quadratic confined to
     band buckets (hot buckets = genuinely self-similar image sets);
     hamming verify is codegen'd bit_count, no decode re-touch."""
-    hashed = ahash_images(media, grid)
+    hashed = ahash_images(media)
     parts = ", ".join(
         [f"named_struct('band', {k}, 'key', "
          f"shiftright(hash_lo, {8 * k}) & 255)" for k in range(4)]
@@ -1485,9 +1491,9 @@ def ahash_neardup_pairs(media: DataFrame, grid: int = 8,
              .where(F.col("hamming") <= max_hamming))
 
 
-def patch_grid_stats(media: DataFrame, grid: int = 2) -> DataFrame:
+def patch_grid_stats(media: DataFrame) -> DataFrame:
     """ViT-style PATCH tokenization plumbing: decode each image and
-    emit one row per grid×grid patch with exact per-channel pixel
+    emit one row per PATCH_GRID×PATCH_GRID patch with exact per-channel pixel
     sums and the integer mean gray — the 1→N fan-out shape vision
     training runs before embedding (patch boundaries are the
     integer-division windows y∈[r·h div g, (r+1)·h div g), likewise
@@ -1506,10 +1512,11 @@ def patch_grid_stats(media: DataFrame, grid: int = 2) -> DataFrame:
             return
         w, h, _, px = dec
         px64 = px.astype(np.int64)
-        for r in range(grid):
-            y0, y1 = (r * h) // grid, ((r + 1) * h) // grid
-            for cc in range(grid):
-                x0, x1 = (cc * w) // grid, ((cc + 1) * w) // grid
+        g = PATCH_GRID
+        for r in range(g):
+            y0, y1 = (r * h) // g, ((r + 1) * h) // g
+            for cc in range(g):
+                x0, x1 = (cc * w) // g, ((cc + 1) * w) // g
                 n_px = (y1 - y0) * (x1 - x0)
                 s = px64[y0:y1, x0:x1, :].sum(axis=(0, 1))
                 yield (mid, r, cc, n_px, int(s[0]), int(s[1]), int(s[2]),
@@ -1527,10 +1534,10 @@ VIDEO_HASH_MAX_DF = 1000  # df-cut: frame hashes in more videos are
                           # title cards) — same bound as dedup.DEFAULT_MAX_DF
 
 
-def video_frame_hashes(media: DataFrame, grid: int = 8) -> DataFrame:
+def video_frame_hashes(media: DataFrame) -> DataFrame:
     """Per-FRAME perceptual hashes over multi-frame payloads: demux
     the concatenated-netpbm stream and aHash every frame with exactly
-    `ahash_images`' arithmetic (NN-downsample to grid², integer gray
+    `ahash_images`' arithmetic (NN-downsample to AHASH_GRID², integer gray
     (r+g+b) div c, integer mean, strict-> bits, 64 bits as two
     BIGINTs). One row per frame: (media_id, frame_idx, hash_hi,
     hash_lo). NULL/undecodable payloads produce no rows.
@@ -1543,18 +1550,16 @@ def video_frame_hashes(media: DataFrame, grid: int = 8) -> DataFrame:
 
     def frame_hashes(mid, payload):
         for fi, frame in enumerate(demux_netpbm_stream(payload) or []):
-            yield (mid, fi, *_ahash(frame, grid))
+            yield (mid, fi, *_ahash(frame))
 
     return map_rows(media.select("media_id", "payload"), frame_hashes,
                     "media_id long, frame_idx long, hash_hi long, "
                     "hash_lo long")
 
 
-def video_neardup_pairs(media: DataFrame, grid: int = 8,
-                        threshold: float = VIDEO_NEARDUP_J,
-                        max_df: int = VIDEO_HASH_MAX_DF) -> DataFrame:
+def video_neardup_pairs(media: DataFrame) -> DataFrame:
     """Cross-VIDEO near-duplicate pairs: clips whose frame-hash SETS
-    overlap (Jaccard ≥ `threshold`) — the video cell of the dedup
+    overlap (Jaccard ≥ VIDEO_NEARDUP_J) — the video cell of the dedup
     matrix (text: minhash; embeddings: LSH; images: aHash bands;
     audio: fingerprint). Catches re-encoded copies, and trimmed /
     extended cuts of the same footage (a prefix clip's set is
@@ -1564,7 +1569,7 @@ def video_neardup_pairs(media: DataFrame, grid: int = 8,
     Scale shape is `ngram_jaccard_pairs`' exactly: candidates pair
     only on an IDENTICAL frame hash (equi-join on the 64-bit key —
     bucketed, never all-pairs), hashes appearing in more than
-    `max_df` videos are cut before the join (boilerplate frames:
+    VIDEO_HASH_MAX_DF videos are cut before the join (boilerplate frames:
     black, title cards — blocking-useless and the only quadratic
     risk), and the Jaccard verify is two hash-aggs + one division.
     Output: (id_a, id_b, n_common, jaccard)."""
@@ -1573,11 +1578,11 @@ def video_neardup_pairs(media: DataFrame, grid: int = 8,
     # consumers (df-cut, both join sides, sizes); without the eager
     # cut each consumer re-executes the demux+decode+hash projection
     # (11 parquet scans / 16 MapInPandas nodes in the dumped plan).
-    fh = checkpoint(video_frame_hashes(media, grid)
+    fh = checkpoint(video_frame_hashes(media)
                     .select("media_id", "hash_hi", "hash_lo").distinct())
     keep = (fh.groupBy("hash_hi", "hash_lo")
               .agg(F.count(F.lit(1)).alias("df"))
-              .where(F.col("df") <= max_df)
+              .where(F.col("df") <= VIDEO_HASH_MAX_DF)
               .select("hash_hi", "hash_lo"))
     kept = fh.join(keep, ["hash_hi", "hash_lo"])
     sz = kept.groupBy("media_id").agg(F.count(F.lit(1)).alias("sz"))
@@ -1596,7 +1601,7 @@ def video_neardup_pairs(media: DataFrame, grid: int = 8,
                         F.col("n_common").cast("double") /
                         (F.col("sa") + F.col("sb") - F.col("n_common"))
                         .cast("double"))
-            .where(F.col("jaccard") >= threshold)
+            .where(F.col("jaccard") >= VIDEO_NEARDUP_J)
             .select("id_a", "id_b", "n_common", "jaccard"))
 
 
@@ -1610,14 +1615,13 @@ CUT_SCHEMA = T.StructType([
 ])
 
 
-def scene_cuts(media: DataFrame,
-               threshold: int = SCENE_CUT_SAD) -> DataFrame:
+def scene_cuts(media: DataFrame) -> DataFrame:
     """Scene-change detection over multi-frame payloads — the shot-
     boundary pass of video curation (sample one keyframe per SCENE,
     not per fixed stride; dedup near-static clips; cut-rate as a
     quality signal): demux + decode EVERY frame, SAD (sum of absolute
     pixel differences, exact ints) between consecutive frames, cut
-    where SAD exceeds `threshold`. Emits one row per consecutive
+    where SAD exceeds SCENE_CUT_SAD. Emits one row per consecutive
     frame pair: (media_id, frame_idx — the LATER frame, sad, is_cut).
     Single-frame/NULL/undecodable payloads emit nothing.
 
@@ -1635,6 +1639,6 @@ def scene_cuts(media: DataFrame,
                 continue    # resolution change = trivial cut,
                             # not a SAD question; skip the pair
             sad = int(np.abs(planes[f] - planes[f - 1]).sum())
-            yield mid, f, sad, int(sad > threshold)
+            yield mid, f, sad, int(sad > SCENE_CUT_SAD)
 
     return map_rows(media.select("media_id", "payload"), cuts, CUT_SCHEMA)

@@ -32,9 +32,9 @@ from pyspark.sql import DataFrame, functions as F
 from ..sources.chain import FixtureChain
 
 
-def extract_column(df: DataFrame, column: str, alias: str | None = None) -> DataFrame:
+def extract_column(df: DataFrame, column: str) -> DataFrame:
     """P4 — single-column projection (extract_csv_column parity)."""
-    return df.select(F.col(column).alias(alias or column))
+    return df.select(F.col(column).alias(column))
 
 
 def distinct_keys(df: DataFrame, column: str) -> DataFrame:

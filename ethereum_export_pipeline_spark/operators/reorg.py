@@ -31,9 +31,7 @@ from pyspark.sql import DataFrame, functions as F
 from ..execution import checkpoint
 
 
-def resolve_reorgs(blocks: DataFrame, max_depth: int = 16,
-                   height_col: str = "height", hash_col: str = "hash",
-                   parent_col: str = "parent") -> DataFrame:
+def resolve_reorgs(blocks: DataFrame, max_depth: int = 16) -> DataFrame:
     """Canonical/orphan verdicts for the last `max_depth` heights.
 
     `blocks`: (height, hash, parent). Returns (height, block_hash,
@@ -41,8 +39,7 @@ def resolve_reorgs(blocks: DataFrame, max_depth: int = 16,
     canonical ∈ {0,1}; exactly one canonical block per height in the
     window (the tip's ancestry)."""
     b = checkpoint(blocks.select(  # referenced every walk step
-        F.col(height_col).alias("height"), F.col(hash_col).alias("bhash"),
-        F.col(parent_col).alias("parent")))
+        "height", F.col("hash").alias("bhash"), "parent"))
     # Walk-step checkpoints are LAZY (optimization r11, guide §1.2
     # step 1): each head_i is referenced twice (the canon union AND
     # the next step's join), so WITHOUT a checkpoint the unrolled

@@ -38,12 +38,10 @@ def _null_last(values):
     return sorted(values, key=lambda p: (p is None, "" if p is None else str(p)))
 
 
-def snapshot_diff(cur: DataFrame, prev: DataFrame,
-                  id_col: str = "doc_id",
-                  content_col: str = "text") -> DataFrame:
+def snapshot_diff(cur: DataFrame, prev: DataFrame) -> DataFrame:
     """Corpus snapshot diff — dataset versioning's core query: which
     rows were added, removed, changed, or unchanged between two corpus
-    snapshots. Output: (id_col, status).
+    snapshots. Output: (doc_id, status).
 
     Scale notes: each side is projected to (id, md5(content)) BEFORE
     the full-outer join, so wide text/binary columns never travel —
@@ -53,11 +51,11 @@ def snapshot_diff(cur: DataFrame, prev: DataFrame,
     NULL content and NULL-id corner rows cannot masquerade as
     absence; content equality is null-safe (NULL content on both
     sides compares as unchanged)."""
-    a = cur.select(F.col(id_col).alias("_id"),
-                   F.md5(F.col(content_col)).alias("_h_cur"),
+    a = cur.select(F.col("doc_id").alias("_id"),
+                   F.md5(F.col("text")).alias("_h_cur"),
                    F.lit(1).alias("_in_cur"))
-    b = prev.select(F.col(id_col).alias("_id"),
-                    F.md5(F.col(content_col)).alias("_h_prev"),
+    b = prev.select(F.col("doc_id").alias("_id"),
+                    F.md5(F.col("text")).alias("_h_prev"),
                     F.lit(1).alias("_in_prev"))
     j = a.join(b, "_id", "full_outer")
     status = (
@@ -66,13 +64,11 @@ def snapshot_diff(cur: DataFrame, prev: DataFrame,
          .when(F.col("_h_cur").eqNullSafe(F.col("_h_prev")),
                F.lit("unchanged"))
          .otherwise(F.lit("changed")))
-    return j.select(F.col("_id").alias(id_col), status.alias("status"))
+    return j.select(F.col("_id").alias("doc_id"), status.alias("status"))
 
 
-def delete_ids(spark: SparkSession, corpus_dir: str, ids: DataFrame,
-               id_col: str = "doc_id",
-               partition_col: str = "source") -> dict:
-    """Delete every row whose `id_col` appears in `ids` from the
+def delete_ids(spark: SparkSession, corpus_dir: str, ids: DataFrame) -> dict:
+    """Delete every row whose `doc_id` appears in `ids` from the
     Hive-partitioned parquet corpus at `corpus_dir`, rewriting only
     the partitions that contain at least one victim.
 
@@ -95,19 +91,19 @@ def delete_ids(spark: SparkSession, corpus_dir: str, ids: DataFrame,
     import shutil
     corpus = spark.read.parquet(corpus_dir)
     affected = [r[0] for r in
-                (corpus.join(F.broadcast(ids), id_col, "left_semi")
-                       .select(partition_col).distinct().collect())]
+                (corpus.join(F.broadcast(ids), "doc_id", "left_semi")
+                       .select("source").distinct().collect())]
     if not affected:
         return {"partitions_rewritten": [], "rows_deleted": 0}
 
     non_null = [p for p in affected if p is not None]
-    cond = (F.col(partition_col).isin(non_null) if non_null
+    cond = (F.col("source").isin(non_null) if non_null
             else F.lit(False))
     if any(p is None for p in affected):
-        cond = cond | F.col(partition_col).isNull()
+        cond = cond | F.col("source").isNull()
     hit = corpus.where(cond)
     n_before = hit.count()
-    remaining = (hit.join(F.broadcast(ids), id_col, "left_anti")
+    remaining = (hit.join(F.broadcast(ids), "doc_id", "left_anti")
                     .localCheckpoint(eager=True))  # break source lineage
     n_after = remaining.count()
 
@@ -115,7 +111,7 @@ def delete_ids(spark: SparkSession, corpus_dir: str, ids: DataFrame,
     # a partition whose every row is a victim contributes no rows, so
     # its directory must be removed explicitly or the victims survive
     survivors = {r[0] for r in
-                 remaining.select(partition_col).distinct().collect()}
+                 remaining.select("source").distinct().collect()}
     emptied = {p for p in affected if p not in survivors}
     # per-write scoping via the DataFrameWriter option — no session
     # conf mutation, so a concurrent writer on the same session never
@@ -123,13 +119,13 @@ def delete_ids(spark: SparkSession, corpus_dir: str, ids: DataFrame,
     if n_after > 0:
         (remaining.write.mode("overwrite")
                   .option("partitionOverwriteMode", "dynamic")
-                  .partitionBy(partition_col).parquet(corpus_dir))
+                  .partitionBy("source").parquet(corpus_dir))
     # emptied partitions contribute no rows to the dynamic overwrite,
     # so their directories must go explicitly — resolved from the real
     # listing (NULL and escaped values don't round-trip through
     # f"{col}={value}")
     import os
-    prefix = f"{partition_col}="
+    prefix = "source="
     # compare as strings: Spark may have inferred a non-string type for
     # the partition column, while directory names are always text
     emptied_str = {None if p is None else str(p) for p in emptied}
@@ -142,17 +138,13 @@ def delete_ids(spark: SparkSession, corpus_dir: str, ids: DataFrame,
             "rows_deleted": n_before - n_after}
 
 
-def apply_changes(base: DataFrame, changes: DataFrame,
-                  id_col: str = "doc_id",
-                  payload_cols: tuple[str, ...] = ("text",),
-                  op_col: str = "op",
-                  seq_col: str = "seq") -> DataFrame:
+def apply_changes(base: DataFrame, changes: DataFrame) -> DataFrame:
     """CDC MERGE: apply a change feed (I/U/D rows with a sequence
     number) to a base snapshot and return the next snapshot — the
     Delta/Iceberg ``MERGE INTO`` shape on plain DataFrames, and the
     batch twin of the streaming `incremental_rollup` upsert.
 
-    Semantics: per key, the HIGHEST-`seq_col` change wins (late feed
+    Semantics: per key, the HIGHEST-`seq` change wins (late feed
     entries supersede earlier ones — the multi-batch CDC compaction
     rule; seq ties broken by op ascending; the feed contract is
     unique seq per key — full-tie rows must be payload-identical or
@@ -172,27 +164,23 @@ def apply_changes(base: DataFrame, changes: DataFrame,
     (operators/skew bucketing) the exchange disappears entirely. No
     windows over the base, no iteration."""
     from pyspark.sql import Window
-    w = Window.partitionBy("_k").orderBy(F.col(seq_col).desc(),
+    w = Window.partitionBy("_k").orderBy(F.col("seq").desc(),
                                          F.col("_op").asc())
-    latest = (changes.select(F.col(id_col).alias("_k"),
-                             F.col(op_col).alias("_op"),
-                             F.col(seq_col),
-                             *[F.col(c).alias(f"_c_{c}")
-                               for c in payload_cols])
+    latest = (changes.select(F.col("doc_id").alias("_k"),
+                             F.col("op").alias("_op"),
+                             F.col("seq"), F.col("text").alias("_c_text"))
                      .withColumn("_rn", F.row_number().over(w))
                      .where(F.col("_rn") == 1)
-                     .drop("_rn", seq_col)
+                     .drop("_rn", "seq")
                      .withColumn("_in_changes", F.lit(1)))
-    b = (base.select(F.col(id_col).alias("_k"),
-                     *[F.col(c) for c in payload_cols])
+    b = (base.select(F.col("doc_id").alias("_k"), F.col("text"))
              .withColumn("_in_base", F.lit(1)))
     j = b.join(latest, "_k", "full_outer")
     return (j.where(F.col("_op").isNull() | (F.col("_op") != "D"))
              .select(
-                 F.col("_k").alias(id_col),
-                 *[F.when(F.col("_in_changes").isNotNull(),
-                          F.col(f"_c_{c}")).otherwise(F.col(c)).alias(c)
-                   for c in payload_cols],
+                 F.col("_k").alias("doc_id"),
+                 F.when(F.col("_in_changes").isNotNull(), F.col("_c_text"))
+                  .otherwise(F.col("text")).alias("text"),
                  F.when(F.col("_in_changes").isNull(), F.lit("kept"))
                   .when(F.col("_in_base").isNull(), F.lit("inserted"))
                   .otherwise(F.lit("updated")).alias("action")))

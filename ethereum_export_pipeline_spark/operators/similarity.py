@@ -2,7 +2,7 @@
 
 Three paths, as a training-data pipeline needs them:
   * brute-force cosine top-k — the exactness baseline; O(Q·N) dot
-    products as a broadcast nested-loop join, guarded by `max_queries`.
+    products as a broadcast nested-loop join, guarded by `MAX_QUERIES`.
   * random-hyperplane LSH — the hash scale path: n_planes signed
     projections → bucket per band; `n_bands` OR-amplifies recall.
     At 100 TB the bucket join is an equi-shuffle on a small key
@@ -56,6 +56,10 @@ def matrix_lit(m) -> Column:
 QUANT_SCALE = 10_000
 N_PLANES = 16
 EMB_DIM = 64
+#: the query set of every top-k and recall report: the first ten vectors
+QUERY_PRED = "vec_id < 10"
+#: brute force broadcasts its query set: more queries than this raise
+MAX_QUERIES = 10_000
 
 
 def py_h32(s: str) -> int:
@@ -84,10 +88,10 @@ def dot_expr(a: str, b: str) -> str:
             f"(acc, v) -> acc + v)")
 
 
-def with_quantized(df: DataFrame, emb_col: str = "embedding") -> DataFrame:
+def with_quantized(df: DataFrame) -> DataFrame:
     """Adds qvec (quantized ints) and n2 (exact squared norm)."""
     return (
-        df.withColumn("qvec", F.expr(quantize_expr(emb_col)))
+        df.withColumn("qvec", F.expr(quantize_expr("embedding")))
           .withColumn("n2", F.expr(dot_expr("qvec", "qvec")))
     )
 
@@ -98,16 +102,14 @@ def _cosine(dot: Column, n2a: Column, n2b: Column) -> Column:
     return dot.cast("double") / F.sqrt(n2a.cast("double") * n2b.cast("double"))
 
 
-def brute_force_topk(df: DataFrame, id_col: str = "vec_id",
-                     emb_col: str = "embedding", k: int = 5,
-                     query_pred: str | None = None,
-                     max_queries: int = 10_000) -> DataFrame:
+def brute_force_topk(df: DataFrame, k: int = 5,
+                     query_pred: str | None = None) -> DataFrame:
     """Exact cosine top-k for the rows matching `query_pred` (default:
     ``{id_col} < 10``) against the whole table. Output: (query_id,
     neighbor_id, cosine, rank).
 
     This is the O(Q·N) exactness BASELINE — the broadcast side is the
-    query set, which MUST stay small. `max_queries` enforces that with
+    query set, which MUST stay small. `MAX_QUERIES` enforces that with
     a cheap bounded count before the broadcast cross join is built
     (a predicate that accidentally selects a million rows would
     otherwise OOM the driver); use `lsh_topk` as the scale path.
@@ -115,21 +117,17 @@ def brute_force_topk(df: DataFrame, id_col: str = "vec_id",
     The candidate side's Q·dim multiply-adds per row evaluate in the
     scan stage — same scan-width spread as `lsh_topk` (no-op on
     well-split input)."""
-    query_pred = query_pred or f"{id_col} < 10"
-    base = with_quantized(
-        spread(df.select(id_col, emb_col)),
-        emb_col).select(id_col, "qvec", "n2")
+    query_pred = query_pred or QUERY_PRED
+    base = with_quantized(spread(df.select("vec_id", "embedding"))).select(
+        "vec_id", "qvec", "n2")
     q = (base.where(query_pred)
-             .select(F.col(id_col).alias("query_id"),
+             .select(F.col("vec_id").alias("query_id"),
                      F.col("qvec").alias("qv"), F.col("n2").alias("qn2")))
-    if max_queries is not None:
-        n_q = q.limit(max_queries + 1).count()
-        if n_q > max_queries:
-            raise ValueError(
-                f"brute_force_topk: query_pred selects > {max_queries} rows; "
-                f"this path broadcasts the query set — use lsh_topk instead "
-                f"or raise max_queries explicitly")
-    c = (base.select(F.col(id_col).alias("neighbor_id"),
+    if q.limit(MAX_QUERIES + 1).count() > MAX_QUERIES:
+        raise ValueError(
+            f"brute_force_topk: query_pred selects > {MAX_QUERIES} rows; "
+            "this path broadcasts the query set — use lsh_topk instead")
+    c = (base.select(F.col("vec_id").alias("neighbor_id"),
                      F.col("qvec").alias("cv"), F.col("n2").alias("cn2")))
     scored = (
         F.broadcast(q).crossJoin(c)
@@ -148,14 +146,13 @@ def brute_force_topk(df: DataFrame, id_col: str = "vec_id",
     )
 
 
-def lsh_bucket_expr(qvec_col: str = "qvec",
-                    planes: list[list[int]] | None = None) -> str:
+def lsh_bucket_expr(planes: list[list[int]] | None = None) -> str:
     """bucket = Σ_p [proj_p ≥ 0]·2^p with proj_p = Σ_d sign(p,d)·qvec[d]."""
     planes = planes or plane_signs()
     terms = []
     for p, signs in enumerate(planes):
         lit = "array(" + ", ".join(f"{s}L" for s in signs) + ")"
-        proj = (f"aggregate(zip_with({qvec_col}, {lit}, (x, s) -> x * s), 0L, "
+        proj = (f"aggregate(zip_with(qvec, {lit}, (x, s) -> x * s), 0L, "
                 f"(acc, v) -> acc + v)")
         terms.append(f"(CASE WHEN ({proj}) >= 0 THEN {1 << p}L ELSE 0L END)")
     return " + ".join(terms)
@@ -177,10 +174,9 @@ def banded_buckets(base: DataFrame, dim: int, n_planes: int,
     return base.withColumn("bucket", F.explode(F.array(*buckets)))
 
 
-def lsh_topk(df: DataFrame, id_col: str = "vec_id",
-             emb_col: str = "embedding", k: int = 5,
-             query_pred: str | None = None, dim: int = EMB_DIM,
-             n_planes: int = N_PLANES, n_bands: int = 1) -> DataFrame:
+def lsh_topk(df: DataFrame, k: int = 5, query_pred: str | None = None,
+             dim: int = EMB_DIM, n_planes: int = N_PLANES,
+             n_bands: int = 1) -> DataFrame:
     """Approximate top-k: exact cosine, but only among candidates that
     share an LSH bucket in ≥1 band. Output: (query_id, neighbor_id,
     cosine, rank).
@@ -200,16 +196,18 @@ def lsh_topk(df: DataFrame, id_col: str = "vec_id",
     runs them on one core; `execution.spread` spreads the (id, emb)
     projection first — a no-op when file splits already provide the
     parallelism (the 100 TB case)."""
-    query_pred = query_pred or f"{id_col} < 10"
-    narrowed = spread(
-        df.where(F.size(F.col(emb_col)) == dim).select(id_col, emb_col))
+    query_pred = query_pred or QUERY_PRED
+    narrowed = spread(df.where(F.size(F.col("embedding")) == dim)
+                        .select("vec_id", "embedding"))
     base = banded_buckets(
-        with_quantized(narrowed, emb_col)
-        .select(id_col, "qvec", "n2"), dim, n_planes, n_bands)
+        with_quantized(narrowed)
+        .select("vec_id", "qvec", "n2"), dim, n_planes, n_bands)
     q = (base.where(query_pred)
-             .select(F.col(id_col).alias("query_id"), F.col("qvec").alias("qv"),
+             .select(F.col("vec_id").alias("query_id"),
+                     F.col("qvec").alias("qv"),
                      F.col("n2").alias("qn2"), "bucket"))
-    c = (base.select(F.col(id_col).alias("neighbor_id"), F.col("qvec").alias("cv"),
+    c = (base.select(F.col("vec_id").alias("neighbor_id"),
+                     F.col("qvec").alias("cv"),
                      F.col("n2").alias("cn2"), "bucket"))
     scored = q.join(c, "bucket").where(F.col("neighbor_id") != F.col("query_id"))
     if n_bands > 1:
@@ -231,10 +229,9 @@ def lsh_topk(df: DataFrame, id_col: str = "vec_id",
     )
 
 
-def range_search(df: DataFrame, id_col: str = "vec_id",
-                 emb_col: str = "embedding", radius: float = 0.8,
-                 query_pred: str | None = None, dim: int = EMB_DIM,
-                 n_planes: int = N_PLANES, n_bands: int = 2) -> DataFrame:
+def range_search(df: DataFrame, radius: float = 0.8,
+                 query_pred: str | None = None, n_planes: int = N_PLANES,
+                 n_bands: int = 2) -> DataFrame:
     """RADIUS similarity search — the ANN surface's other half: all
     neighbors with cosine ≥ `radius` for each query row, not a fixed
     top-k. Candidates come from the same OR-amplified LSH banding as
@@ -248,17 +245,17 @@ def range_search(df: DataFrame, id_col: str = "vec_id",
     bucket-join candidates. Recall follows the banding knobs; a
     production radius query tightens/widens `n_bands`, never falls
     back to all-pairs."""
-    query_pred = query_pred or f"{id_col} < 10"
-    narrowed = spread(
-        df.where(F.size(F.col(emb_col)) == dim).select(id_col, emb_col))
+    query_pred = query_pred or QUERY_PRED
+    narrowed = spread(df.where(F.size(F.col("embedding")) == EMB_DIM)
+                        .select("vec_id", "embedding"))
     base = banded_buckets(
-        with_quantized(narrowed, emb_col)
-        .select(id_col, "qvec", "n2"), dim, n_planes, n_bands)
+        with_quantized(narrowed)
+        .select("vec_id", "qvec", "n2"), EMB_DIM, n_planes, n_bands)
     q = (base.where(query_pred)
-             .select(F.col(id_col).alias("query_id"),
+             .select(F.col("vec_id").alias("query_id"),
                      F.col("qvec").alias("qv"),
                      F.col("n2").alias("qn2"), "bucket"))
-    c = (base.select(F.col(id_col).alias("neighbor_id"),
+    c = (base.select(F.col("vec_id").alias("neighbor_id"),
                      F.col("qvec").alias("cv"),
                      F.col("n2").alias("cn2"), "bucket"))
     cand = q.join(c, "bucket").where(F.col("neighbor_id") != F.col("query_id"))
@@ -273,10 +270,8 @@ def range_search(df: DataFrame, id_col: str = "vec_id",
     )
 
 
-def knn_graph(df: DataFrame, id_col: str = "vec_id",
-              emb_col: str = "embedding", k: int = 5,
-              dim: int = EMB_DIM, n_planes: int = N_PLANES,
-              n_bands: int = 3) -> DataFrame:
+def knn_graph(df: DataFrame, k: int = 5, dim: int = EMB_DIM,
+              n_planes: int = N_PLANES, n_bands: int = 3) -> DataFrame:
     """Approximate k-nearest-neighbor GRAPH: `lsh_topk` with EVERY
     vector as a query — the corpus-wide neighbor structure that
     graph-based semantic dedup, diversity-aware sampling, and
@@ -293,15 +288,12 @@ def knn_graph(df: DataFrame, id_col: str = "vec_id",
     the candidate join emits. An all-queries graph at 100 TB is the
     one case where bucket skew matters most — `n_planes` is the knob
     that keeps the hottest bucket sub-quadratic."""
-    out = lsh_topk(df, id_col, emb_col, k=k, query_pred="true",
-                   dim=dim, n_planes=n_planes, n_bands=n_bands)
-    return out.withColumnRenamed("query_id", id_col)
+    out = lsh_topk(df, k=k, query_pred="true", dim=dim, n_planes=n_planes,
+                   n_bands=n_bands)
+    return out.withColumnRenamed("query_id", "vec_id")
 
 
-def hard_negatives(df: DataFrame, id_col: str = "vec_id",
-                   emb_col: str = "embedding", label_col: str = "label",
-                   k: int = 5, dim: int = EMB_DIM,
-                   n_planes: int = N_PLANES,
+def hard_negatives(df: DataFrame, k: int = 5, n_planes: int = N_PLANES,
                    n_bands: int = 3,
                    graph: DataFrame | None = None) -> DataFrame:
     """Hard-negative mining for contrastive / embedding training: for
@@ -324,37 +316,34 @@ def hard_negatives(df: DataFrame, id_col: str = "vec_id",
     `knn_graph(df, k=k, ...)` frame — callers holding the memoized
     catalog graph skip re-running the banded-candidate + rerank pass."""
     from pyspark.sql import Window
-    g = graph if graph is not None else knn_graph(
-        df, id_col, emb_col, k=k, dim=dim,
-        n_planes=n_planes, n_bands=n_bands)
-    lab = df.select(F.col(id_col), F.col(label_col).cast("long"))
+    g = graph if graph is not None else knn_graph(df, k=k, n_planes=n_planes,
+                                                  n_bands=n_bands)
+    lab = df.select(F.col("vec_id"), F.col("label").cast("long"))
     anchored = (
-        g.join(lab.select(F.col(id_col),
-                          F.col(label_col).alias("_lab_a")), id_col)
-         .join(lab.select(F.col(id_col).alias("neighbor_id"),
-                          F.col(label_col).alias("_lab_n")), "neighbor_id")
+        g.join(lab.select(F.col("vec_id"),
+                          F.col("label").alias("_lab_a")), "vec_id")
+         .join(lab.select(F.col("vec_id").alias("neighbor_id"),
+                          F.col("label").alias("_lab_n")), "neighbor_id")
          .where(F.col("_lab_a") != F.col("_lab_n")))
-    w = (Window.partitionBy(id_col)
+    w = (Window.partitionBy("vec_id")
                .orderBy(F.col("cosine").desc(), F.col("neighbor_id").asc()))
     return (anchored.withColumn("_rk", F.row_number().over(w))
                     .where(F.col("_rk") == 1)
-                    .select(F.col(id_col),
-                            F.col("_lab_a").alias(label_col),
+                    .select(F.col("vec_id"),
+                            F.col("_lab_a").alias("label"),
                             F.col("neighbor_id").alias("neg_id"),
                             F.col("_lab_n").alias("neg_label"),
                             "cosine"))
 
 
-def semantic_decontaminate(df: DataFrame, id_col: str = "vec_id",
-                           emb_col: str = "embedding",
-                           bench_mod: int = 97, threshold: float = 0.3,
-                           dim: int = EMB_DIM, n_planes: int = N_PLANES,
+def semantic_decontaminate(df: DataFrame, bench_mod: int = 97,
+                           threshold: float = 0.3, n_planes: int = N_PLANES,
                            n_bands: int = 3) -> DataFrame:
     """EMBEDDING-space train/eval decontamination — the leak the
     n-gram pass (`dedup.decontaminate`) cannot see: a paraphrased or
     re-worded benchmark item shares no 5-gram with its source but
     sits right next to it in embedding space. Rows with
-    `{id_col} % bench_mod == 0` stand in for the eval suite (the
+    `vec_id % bench_mod == 0` stand in for the eval suite (the
     `BENCH_MOD` convention of the n-gram twin); every OTHER vector is
     audited: contaminated iff some benchmark vector in a shared LSH
     band bucket has cosine ≥ threshold. Output: one row per corpus
@@ -368,38 +357,38 @@ def semantic_decontaminate(df: DataFrame, id_col: str = "vec_id",
     corpus × bench. The verdict re-attaches to the corpus with one
     left join on id."""
     from pyspark.sql import Window
-    narrowed = spread(
-        df.where(F.size(F.col(emb_col)) == dim).select(id_col, emb_col))
+    narrowed = spread(df.where(F.size(F.col("embedding")) == EMB_DIM)
+                        .select("vec_id", "embedding"))
     base = banded_buckets(
-        with_quantized(narrowed, emb_col)
-        .select(id_col, "qvec", "n2"), dim, n_planes, n_bands)
-    bench = base.where(F.col(id_col) % bench_mod == 0).select(
-        F.col(id_col).alias("bench_id"), F.col("qvec").alias("cv"),
+        with_quantized(narrowed)
+        .select("vec_id", "qvec", "n2"), EMB_DIM, n_planes, n_bands)
+    bench = base.where(F.col("vec_id") % bench_mod == 0).select(
+        F.col("vec_id").alias("bench_id"), F.col("qvec").alias("cv"),
         F.col("n2").alias("cn2"), "bucket")
-    corp = base.where(F.col(id_col) % bench_mod != 0).select(
-        id_col, F.col("qvec").alias("qv"), F.col("n2").alias("qn2"),
+    corp = base.where(F.col("vec_id") % bench_mod != 0).select(
+        "vec_id", F.col("qvec").alias("qv"), F.col("n2").alias("qn2"),
         "bucket")
     cand = (corp.join(bench, "bucket")
-                .dropDuplicates([id_col, "bench_id"]))
+                .dropDuplicates(["vec_id", "bench_id"]))
     hits = (cand.withColumn("dot", F.expr(dot_expr("qv", "cv")))
                 .withColumn("cosine", _cosine(F.col("dot"), F.col("qn2"),
                                               F.col("cn2")))
                 .where(F.col("cosine") >= threshold))
-    w = (Window.partitionBy(id_col)
+    w = (Window.partitionBy("vec_id")
                .orderBy(F.col("cosine").desc(), F.col("bench_id").asc()))
     per = (hits.withColumn("_rk", F.row_number().over(w))
                .withColumn("n_matches",
-                           F.count(F.lit(1)).over(Window.partitionBy(id_col))
+                           F.count(F.lit(1)).over(Window.partitionBy("vec_id"))
                             .cast("long"))
                .where(F.col("_rk") == 1)
-               .select(id_col, "n_matches",
+               .select("vec_id", "n_matches",
                        F.col("bench_id").alias("top_bench_id"),
                        F.col("cosine").alias("max_cosine")))
-    corpus_ids = (df.where(F.size(F.col(emb_col)) == dim)
-                    .where(F.col(id_col) % bench_mod != 0)
-                    .select(id_col))
-    return (corpus_ids.join(per, id_col, "left")
-            .select(F.col(id_col),
+    corpus_ids = (df.where(F.size(F.col("embedding")) == EMB_DIM)
+                    .where(F.col("vec_id") % bench_mod != 0)
+                    .select("vec_id"))
+    return (corpus_ids.join(per, "vec_id", "left")
+            .select(F.col("vec_id"),
                     F.when(F.col("n_matches").isNotNull(), F.lit(1))
                      .otherwise(F.lit(0)).cast("long").alias("contaminated"),
                     F.coalesce(F.col("n_matches"), F.lit(0)).cast("long")
@@ -410,11 +399,8 @@ def semantic_decontaminate(df: DataFrame, id_col: str = "vec_id",
                      .alias("max_cosine")))
 
 
-def embedding_neardup_pairs(df: DataFrame, id_col: str = "vec_id",
-                            emb_col: str = "embedding",
-                            threshold: float = 0.9,
-                            dim: int = EMB_DIM,
-                            n_planes: int = N_PLANES,
+def embedding_neardup_pairs(df: DataFrame, threshold: float = 0.9,
+                            dim: int = EMB_DIM, n_planes: int = N_PLANES,
                             n_bands: int = 1) -> DataFrame:
     """Embedding-cosine near-duplicate pairs via LSH buckets: pairs
     sharing a bucket in ≥1 band with cosine ≥ threshold (the scale
@@ -422,14 +408,14 @@ def embedding_neardup_pairs(df: DataFrame, id_col: str = "vec_id",
     cosine). Same `dim` guard and `n_planes`/`n_bands` trade-offs as
     `lsh_topk`, and the same scan-width spread before the quantize +
     plane projections."""
-    narrowed = spread(
-        df.where(F.size(F.col(emb_col)) == dim).select(id_col, emb_col))
+    narrowed = spread(df.where(F.size(F.col("embedding")) == dim)
+                        .select("vec_id", "embedding"))
     base = banded_buckets(
-        with_quantized(narrowed, emb_col)
-        .select(id_col, "qvec", "n2"), dim, n_planes, n_bands)
-    a = base.select(F.col(id_col).alias("id_a"), F.col("qvec").alias("va"),
+        with_quantized(narrowed)
+        .select("vec_id", "qvec", "n2"), dim, n_planes, n_bands)
+    a = base.select(F.col("vec_id").alias("id_a"), F.col("qvec").alias("va"),
                     F.col("n2").alias("na"), "bucket")
-    b = base.select(F.col(id_col).alias("id_b"), F.col("qvec").alias("vb"),
+    b = base.select(F.col("vec_id").alias("id_b"), F.col("qvec").alias("vb"),
                     F.col("n2").alias("nb"), "bucket")
     pairs = a.join(b, "bucket").where(F.col("id_a") < F.col("id_b"))
     if n_bands > 1:
@@ -455,8 +441,7 @@ PQ_CODEBOOK = 16     # K: centroids per subspace (4-bit codes)
 
 
 def train_ivf_centroids(vectors: "list[list[float]]",
-                        n_cells: int = IVF_CELLS,
-                        iters: int = IVF_KMEANS_ITERS) -> list[list[int]]:
+                        n_cells: int = IVF_CELLS) -> list[list[int]]:
     """Plan-time k-means coarse quantizer (numpy, deterministic:
     fixed seed-free init = first-k distinct points, fixed iteration
     count). Returns QUANTIZED int centroids so cell assignment is
@@ -468,7 +453,7 @@ def train_ivf_centroids(vectors: "list[list[float]]",
     import numpy as np
     x = np.asarray(vectors, dtype=np.float64)
     c = x[:n_cells].copy()                      # deterministic init
-    for _ in range(iters):
+    for _ in range(IVF_KMEANS_ITERS):
         d = ((x[:, None, :] - c[None, :, :]) ** 2).sum(axis=2)
         assign = d.argmin(axis=1)
         for j in range(n_cells):
@@ -479,8 +464,7 @@ def train_ivf_centroids(vectors: "list[list[float]]",
     return [[int(v) for v in row] for row in q]
 
 
-def ivf_cell_col(centroids: list[list[int]],
-                 qvec_col: str = "qvec") -> Column:
+def ivf_cell_col(centroids: list[list[int]]) -> Column:
     """cell = 1-based argmin over centroids of exact int ||q - c||²
     (ties → first minimum, identical in both engines).
 
@@ -492,15 +476,13 @@ def ivf_cell_col(centroids: list[list[int]],
     C = matrix_lit(centroids)
     dists = F.transform(
         C, lambda c: F.aggregate(
-            F.zip_with(F.col(qvec_col), c, lambda x, y: (x - y) * (x - y)),
+            F.zip_with(F.col("qvec"), c, lambda x, y: (x - y) * (x - y)),
             F.lit(0).cast("long"), lambda acc, v: acc + v))
     return F.array_position(dists, F.array_min(dists))
 
 
-def ivf_topk(df: DataFrame, centroids: list[list[int]],
-             id_col: str = "vec_id", emb_col: str = "embedding",
-             k: int = 5, query_pred: str | None = None,
-             dim: int = EMB_DIM) -> DataFrame:
+def ivf_topk(df: DataFrame, centroids: list[list[int]], k: int = 5,
+             query_pred: str | None = None, dim: int = EMB_DIM) -> DataFrame:
     """IVF(nprobe=1) top-k: exact cosine among candidates in the
     query's coarse-quantizer cell. The data-adaptive sibling of
     `lsh_topk`: cells follow the density of the corpus instead of
@@ -513,15 +495,17 @@ def ivf_topk(df: DataFrame, centroids: list[list[int]],
     the SCAN's parallelism: `execution.spread` widens a one-small-file
     scan and leaves an already-well-split input untouched — no
     shuffle at 100 TB."""
-    query_pred = query_pred or f"{id_col} < 10"
-    narrowed = spread(df.where(F.size(F.col(emb_col)) == dim))
-    base = (with_quantized(narrowed, emb_col)
+    query_pred = query_pred or QUERY_PRED
+    narrowed = spread(df.where(F.size(F.col("embedding")) == dim))
+    base = (with_quantized(narrowed)
             .withColumn("cell", ivf_cell_col(centroids).cast("long"))
-            .select(id_col, "qvec", "n2", "cell"))
+            .select("vec_id", "qvec", "n2", "cell"))
     q = (base.where(query_pred)
-             .select(F.col(id_col).alias("query_id"), F.col("qvec").alias("qv"),
+             .select(F.col("vec_id").alias("query_id"),
+                     F.col("qvec").alias("qv"),
                      F.col("n2").alias("qn2"), "cell"))
-    c = (base.select(F.col(id_col).alias("neighbor_id"), F.col("qvec").alias("cv"),
+    c = (base.select(F.col("vec_id").alias("neighbor_id"),
+                     F.col("qvec").alias("cv"),
                      F.col("n2").alias("cn2"), "cell"))
     scored = (
         q.join(c, "cell")
@@ -557,8 +541,7 @@ def train_pq_codebooks(vectors: "list[list[float]]",
     ]
 
 
-def pq_codes_col(codebooks: list[list[list[int]]],
-                 qvec_col: str = "qvec") -> Column:
+def pq_codes_col(codebooks: list[list[list[int]]]) -> Column:
     """array<int> of 1-based per-subspace code assignments: code_s =
     argmin_k ||subvec_s - codebook[s][k]||², exact int arithmetic with
     first-minimum ties — identical on both engines. One nested Literal
@@ -569,7 +552,7 @@ def pq_codes_col(codebooks: list[list[list[int]]],
     s_idx = F.sequence(F.lit(1), F.lit(m))
 
     def code_for(s):  # s is a 1-based Column
-        subv = F.slice(F.col(qvec_col), (s - 1) * sub + 1, sub)
+        subv = F.slice(F.col("qvec"), (s - 1) * sub + 1, sub)
         cb_s = F.element_at(CB, s)
         dists = F.transform(
             cb_s, lambda c: F.aggregate(
@@ -580,8 +563,7 @@ def pq_codes_col(codebooks: list[list[list[int]]],
     return F.transform(s_idx, code_for)
 
 
-def pq_adc_col(codebooks: list[list[list[int]]],
-               qvec_col: str = "qv", codes_col: str = "codes") -> Column:
+def pq_adc_col(codebooks: list[list[list[int]]]) -> Column:
     """Asymmetric distance: Σ_s ||query_subvec_s − codebook[s][code_s]||²
     — the query side stays exact, the candidate side is represented by
     its codes ONLY (the compression that lets 100 TB of vectors sit in
@@ -592,10 +574,10 @@ def pq_adc_col(codebooks: list[list[list[int]]],
     s_idx = F.sequence(F.lit(1), F.lit(m))
 
     def dist_for(s):
-        subv = F.slice(F.col(qvec_col), (s - 1) * sub + 1, sub)
+        subv = F.slice(F.col("qv"), (s - 1) * sub + 1, sub)
         # array_position yields BIGINT; element_at wants an INT index
         cent = F.element_at(F.element_at(CB, s),
-                            F.element_at(F.col(codes_col), s).cast("int"))
+                            F.element_at(F.col("codes"), s).cast("int"))
         return F.aggregate(
             F.zip_with(subv, cent, lambda x, y: (x - y) * (x - y)),
             F.lit(0).cast("long"), lambda a, v: a + v)
@@ -604,8 +586,7 @@ def pq_adc_col(codebooks: list[list[list[int]]],
                        F.lit(0).cast("long"), lambda a, v: a + v)
 
 
-def pq_packed_col(codebooks: list[list[list[int]]],
-                  qvec_col: str = "qvec") -> Column:
+def pq_packed_col(codebooks: list[list[list[int]]]) -> Column:
     """The m per-subspace codes packed into ONE BIGINT: Horner fold
     acc·16 + (code−1), so code_1 lands in the highest nibble. With
     m=8 / k=16 a candidate's entire PQ representation is 8 bytes on
@@ -613,16 +594,14 @@ def pq_packed_col(codebooks: list[list[list[int]]],
     ladder (512 B raw vector → ~72 B serialized int array → 8 B
     packed). DuckDB twin: list_reduce seeds with the first element,
     which equals Spark's 0-seeded fold here (0·16 + c₁' = c₁')."""
-    codes = pq_codes_col(codebooks, qvec_col)
+    codes = pq_codes_col(codebooks)
     return F.aggregate(
         F.transform(codes, lambda c: c - 1),
         F.lit(0).cast("long"),
         lambda acc, c: acc * F.lit(16) + c).cast("long")
 
 
-def pq_adc_packed_col(codebooks: list[list[list[int]]],
-                      qvec_col: str = "qv",
-                      packed_col: str = "packed") -> Column:
+def pq_adc_packed_col(codebooks: list[list[list[int]]]) -> Column:
     """`pq_adc_col` over the PACKED code word: code_s is unpacked
     with a compile-time shift (nibble s of m sits at bit 4·(m−s)),
     so the per-subspace loop unrolls statically — no column-valued
@@ -632,8 +611,8 @@ def pq_adc_packed_col(codebooks: list[list[list[int]]],
     CB = matrix_lit(codebooks)
     total = F.lit(0).cast("long")
     for s in range(1, m + 1):
-        subv = F.slice(F.col(qvec_col), (s - 1) * sub + 1, sub)
-        code = (F.shiftright(F.col(packed_col), 4 * (m - s))
+        subv = F.slice(F.col("qv"), (s - 1) * sub + 1, sub)
+        code = (F.shiftright(F.col("packed"), 4 * (m - s))
                  .bitwiseAND(F.lit(15)) + 1).cast("int")
         cent = F.element_at(F.element_at(CB, s), code)
         total = total + F.aggregate(
@@ -644,9 +623,7 @@ def pq_adc_packed_col(codebooks: list[list[list[int]]],
 
 def ivfpq_packed_topk(df: DataFrame, centroids: list[list[int]],
                       codebooks: list[list[list[int]]],
-                      id_col: str = "vec_id", emb_col: str = "embedding",
-                      k: int = 5, query_pred: str | None = None,
-                      dim: int = EMB_DIM) -> DataFrame:
+                      k: int = 5) -> DataFrame:
     """`ivfpq_topk` with the candidate side compressed to ONE BIGINT
     per row: the cell join ships (neighbor_id, packed, cell) — 8 B of
     code payload instead of the m-int array (~72 B serialized) or the
@@ -656,15 +633,14 @@ def ivfpq_packed_topk(df: DataFrame, centroids: list[list[int]],
     and state size — not CPU — bind. Output adds the neighbor's
     packed word so the oracle must reproduce the packing bit-for-bit:
     (query_id, neighbor_id, packed, adc_dist, rank)."""
-    query_pred = query_pred or f"{id_col} < 10"
-    narrowed = spread(df.where(F.size(F.col(emb_col)) == dim))
-    base = (with_quantized(narrowed, emb_col)
+    narrowed = spread(df.where(F.size(F.col("embedding")) == EMB_DIM))
+    base = (with_quantized(narrowed)
             .withColumn("cell", ivf_cell_col(centroids).cast("long")))
-    q = (base.where(query_pred)
-             .select(F.col(id_col).alias("query_id"),
+    q = (base.where(QUERY_PRED)
+             .select(F.col("vec_id").alias("query_id"),
                      F.col("qvec").alias("qv"), "cell"))
     c = (base.withColumn("packed", pq_packed_col(codebooks))
-             .select(F.col(id_col).alias("neighbor_id"), "packed", "cell"))
+             .select(F.col("vec_id").alias("neighbor_id"), "packed", "cell"))
     scored = (
         q.join(c, "cell")
          .where(F.col("neighbor_id") != F.col("query_id"))
@@ -683,10 +659,8 @@ def ivfpq_packed_topk(df: DataFrame, centroids: list[list[int]],
 
 
 def ivfpq_topk(df: DataFrame, centroids: list[list[int]],
-               codebooks: list[list[list[int]]],
-               id_col: str = "vec_id", emb_col: str = "embedding",
-               k: int = 5, query_pred: str | None = None,
-               dim: int = EMB_DIM) -> DataFrame:
+               codebooks: list[list[list[int]]], k: int = 5,
+               query_pred: str | None = None, dim: int = EMB_DIM) -> DataFrame:
     """IVF-PQ top-k — the memory-compressed scale path: candidates are
     pruned to the query's IVF cell (equi-join on a small int key, as in
     `ivf_topk`) and then RANKED BY ADC distance computed from the
@@ -697,15 +671,15 @@ def ivfpq_topk(df: DataFrame, centroids: list[list[int]],
     point of PQ. Output: (query_id, neighbor_id, adc_dist, rank), rank
     by ADC ascending then neighbor id (exact ints, engine-identical).
     """
-    query_pred = query_pred or f"{id_col} < 10"
-    narrowed = spread(df.where(F.size(F.col(emb_col)) == dim))
-    base = (with_quantized(narrowed, emb_col)
+    query_pred = query_pred or QUERY_PRED
+    narrowed = spread(df.where(F.size(F.col("embedding")) == dim))
+    base = (with_quantized(narrowed)
             .withColumn("cell", ivf_cell_col(centroids).cast("long")))
     q = (base.where(query_pred)
-             .select(F.col(id_col).alias("query_id"),
+             .select(F.col("vec_id").alias("query_id"),
                      F.col("qvec").alias("qv"), "cell"))
     c = (base.withColumn("codes", pq_codes_col(codebooks))
-             .select(F.col(id_col).alias("neighbor_id"), "codes", "cell"))
+             .select(F.col("vec_id").alias("neighbor_id"), "codes", "cell"))
     scored = (
         q.join(c, "cell")
          .where(F.col("neighbor_id") != F.col("query_id"))
@@ -723,9 +697,7 @@ def ivfpq_topk(df: DataFrame, centroids: list[list[int]],
 
 
 def crossmodal_agreement(pairs: DataFrame, emb: DataFrame,
-                         cos_threshold: float,
-                         id_a: str = "doc_a", id_b: str = "doc_b",
-                         emb_id: str = "vec_id") -> DataFrame:
+                         cos_threshold: float) -> DataFrame:
     """Cross-modal dedup diagnostic: for every TEXT near-dup candidate
     pair, the EMBEDDING cosine of the same items and whether the two
     signals agree — the report a curation pipeline uses to calibrate
@@ -740,19 +712,19 @@ def crossmodal_agreement(pairs: DataFrame, emb: DataFrame,
     exact-integer quantized form (`with_quantized`), bit-identical
     across engines."""
     pairs = F.broadcast(pairs)
-    base = with_quantized(emb).select(F.col(emb_id).alias("_id"),
+    base = with_quantized(emb).select(F.col("vec_id").alias("_id"),
                                       "qvec", "n2")
     a = base.select(F.col("_id").alias("_ida"),
                     F.col("qvec").alias("qa"), F.col("n2").alias("n2a"))
     b = base.select(F.col("_id").alias("_idb"),
                     F.col("qvec").alias("qb"), F.col("n2").alias("n2b"))
     return (
-        pairs.join(a, F.col(id_a) == F.col("_ida"))
-             .join(b, F.col(id_b) == F.col("_idb"))
+        pairs.join(a, F.col("doc_a") == F.col("_ida"))
+             .join(b, F.col("doc_b") == F.col("_idb"))
              .withColumn("dot", F.expr(dot_expr("qa", "qb")))
              .withColumn("cosine",
                          _cosine(F.col("dot"), F.col("n2a"), F.col("n2b")))
-             .select(id_a, id_b, "jaccard", "cosine",
+             .select("doc_a", "doc_b", "jaccard", "cosine",
                      (F.col("cosine") >= cos_threshold).cast("long")
                      .alias("emb_agrees"))
     )
@@ -767,21 +739,18 @@ JL_DIM = 32    # projected dimensions (64 → 32: 2× cheaper candidates;
 JL_CAND = 80   # stage-1 candidates per query fed to the exact rerank
 
 
-def jl_signs(out_dim: int = JL_DIM, dim: int = EMB_DIM) -> list[list[int]]:
+def jl_signs() -> list[list[int]]:
     """Deterministic ±1 Johnson–Lindenstrauss projection matrix from
     md5('jl:j:d') — the sign-matrix (Achlioptas) JL variant: integer
     dot products, exact on both engines. Namespaced apart from
     `plane_signs` so LSH buckets and JL projections are independent."""
     return [[1 if py_h32(f"jl:{j}:{d}") % 2 == 0 else -1
-             for d in range(dim)]
-            for j in range(out_dim)]
+             for d in range(EMB_DIM)]
+            for j in range(JL_DIM)]
 
 
-def jl_rerank_topk(df: DataFrame, id_col: str = "vec_id",
-                   emb_col: str = "embedding", k: int = 5,
-                   n_cand: int = JL_CAND, query_pred: str | None = None,
-                   out_dim: int = JL_DIM, dim: int = EMB_DIM,
-                   max_queries: int = 10_000) -> DataFrame:
+def jl_rerank_topk(df: DataFrame, k: int = 5,
+                   n_cand: int = JL_CAND) -> DataFrame:
     """Two-stage retrieval: rank candidates on a low-dim JL PROJECTION
     (cheaper dot products, ±1 sign matrix — distances preserved to
     1±ε with ε ≈ √(ln n / out_dim)), keep `n_cand` per query, then
@@ -802,37 +771,34 @@ def jl_rerank_topk(df: DataFrame, id_col: str = "vec_id",
     (Q × n_cand) candidate list back into ONE corpus scan for full
     vectors — the 64-dim arithmetic runs on Q × n_cand rows, not
     Q × N. The stage-1 candidate join is the same broadcast-queries
-    shape as `brute_force_topk` (and shares its `max_queries` guard);
+    shape as `brute_force_topk` (and shares its `MAX_QUERIES` guard);
     at corpus scale compose with `ivf_topk`/`lsh_topk` cells for
     candidate generation and keep this operator's rerank stage."""
     from pyspark.sql import Window
-    query_pred = query_pred or f"{id_col} < 10"
-    S = matrix_lit(jl_signs(out_dim, dim))
-    narrowed = spread(
-        df.where(F.size(F.col(emb_col)) == dim).select(id_col, emb_col))
-    base = (with_quantized(narrowed, emb_col)
+    S = matrix_lit(jl_signs())
+    narrowed = spread(df.where(F.size(F.col("embedding")) == EMB_DIM)
+                        .select("vec_id", "embedding"))
+    base = (with_quantized(narrowed)
             .withColumn("p", F.transform(
                 S, lambda s: F.aggregate(
                     F.zip_with(F.col("qvec"), s, lambda x, y: x * y),
                     F.lit(0).cast("long"), lambda a, v: a + v)))
             .withColumn("pn2", F.expr(dot_expr("p", "p")))
-            .select(id_col, "qvec", "n2", "p", "pn2"))
-    q = (base.where(query_pred)
-             .select(F.col(id_col).alias("query_id"),
+            .select("vec_id", "qvec", "n2", "p", "pn2"))
+    q = (base.where(QUERY_PRED)
+             .select(F.col("vec_id").alias("query_id"),
                      F.col("p").alias("pq"), F.col("pn2").alias("pqn2")))
-    if max_queries is not None:
-        # guard job counts on the PRE-projection frame (optimization
-        # r11, guide §1.2 step 2): same rows pass the dim filter +
-        # query_pred, but the JL transform / quantize columns are
-        # never computed just to count them
-        n_q = (narrowed.where(query_pred)
-                       .limit(max_queries + 1).count())
-        if n_q > max_queries:
-            raise ValueError(
-                f"jl_rerank_topk: query_pred selects > {max_queries} rows; "
-                f"stage 1 broadcasts the query set — prune the predicate "
-                f"or compose with ivf_topk/lsh_topk for candidates")
-    c1 = base.select(F.col(id_col).alias("neighbor_id"),
+    # guard job counts on the PRE-projection frame (optimization r11,
+    # guide §1.2 step 2): same rows pass the dim filter + QUERY_PRED,
+    # but the JL transform / quantize columns are never computed just
+    # to count them
+    if (narrowed.where(QUERY_PRED).limit(MAX_QUERIES + 1).count()
+            > MAX_QUERIES):
+        raise ValueError(
+            f"jl_rerank_topk: QUERY_PRED selects > {MAX_QUERIES} rows; "
+            "stage 1 broadcasts the query set — prune the predicate "
+            "or compose with ivf_topk/lsh_topk for candidates")
+    c1 = base.select(F.col("vec_id").alias("neighbor_id"),
                      F.col("p").alias("pc"), F.col("pn2").alias("pcn2"))
     w1 = Window.partitionBy("query_id").orderBy(
         F.col("pcos").desc(), F.col("neighbor_id").asc())
@@ -844,10 +810,10 @@ def jl_rerank_topk(df: DataFrame, id_col: str = "vec_id",
               .withColumn("p_rank", F.row_number().over(w1).cast("long"))
               .where(F.col("p_rank") <= n_cand)
               .select("query_id", "neighbor_id", "p_rank"))
-    qfull = (base.where(query_pred)
-                 .select(F.col(id_col).alias("query_id"),
+    qfull = (base.where(QUERY_PRED)
+                 .select(F.col("vec_id").alias("query_id"),
                          F.col("qvec").alias("qv"), F.col("n2").alias("qn2")))
-    cfull = base.select(F.col(id_col).alias("neighbor_id"),
+    cfull = base.select(F.col("vec_id").alias("neighbor_id"),
                         F.col("qvec").alias("cv"), F.col("n2").alias("cn2"))
     w2 = Window.partitionBy("query_id").orderBy(
         F.col("cosine").desc(), F.col("neighbor_id").asc())
@@ -862,7 +828,6 @@ def jl_rerank_topk(df: DataFrame, id_col: str = "vec_id",
 
 
 def semdedup_cells(df: DataFrame, centroids: list[list[int]],
-                   id_col: str = "vec_id", emb_col: str = "embedding",
                    threshold: float = 0.3, dim: int = EMB_DIM) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023):
     assign every vector to its k-means cell, compare pairs ONLY
@@ -886,14 +851,14 @@ def semdedup_cells(df: DataFrame, centroids: list[list[int]],
     only WITHIN a cell — the whole point of clustering first (at 100
     TB: cap cell population via more centroids, the paper's k ∝ √n).
     One cosine per candidate pair, one hash-agg back to vectors."""
-    narrowed = df.where(F.size(F.col(emb_col)) == dim)
-    base = (with_quantized(narrowed, emb_col)
+    narrowed = df.where(F.size(F.col("embedding")) == dim)
+    base = (with_quantized(narrowed)
             .withColumn("cell", ivf_cell_col(centroids).cast("long"))
-            .select(id_col, "qvec", "n2", "cell")
+            .select("vec_id", "qvec", "n2", "cell")
             .localCheckpoint(eager=True))  # referenced by 3 consumers
-    a = base.select(F.col(id_col).alias("id_a"), F.col("qvec").alias("qv"),
+    a = base.select(F.col("vec_id").alias("id_a"), F.col("qvec").alias("qv"),
                     F.col("n2").alias("qn2"), "cell")
-    b = base.select(F.col(id_col).alias("id_b"), F.col("qvec").alias("cv"),
+    b = base.select(F.col("vec_id").alias("id_b"), F.col("qvec").alias("cv"),
                     F.col("n2").alias("cn2"), "cell")
     pairs = (a.join(b, "cell")
               .where(F.col("id_a") < F.col("id_b"))
@@ -907,13 +872,13 @@ def semdedup_cells(df: DataFrame, centroids: list[list[int]],
                        .groupBy("node")
                        .agg(F.count(F.lit(1)).cast("long").alias("n_dups")))
     dropped = pairs.select(F.col("id_b").alias("node")).distinct()
-    return (base.select(F.col(id_col), "cell")
-                .join(dup_counts, F.col(id_col) == dup_counts.node, "left")
+    return (base.select(F.col("vec_id"), "cell")
+                .join(dup_counts, F.col("vec_id") == dup_counts.node, "left")
                 .drop("node")
                 .join(dropped.withColumn("_drop", F.lit(1)),
-                      F.col(id_col) == dropped.node, "left")
+                      F.col("vec_id") == dropped.node, "left")
                 .drop("node")
-                .select(id_col, "cell",
+                .select("vec_id", "cell",
                         F.coalesce("n_dups", F.lit(0)).cast("long")
                          .alias("n_dups"),
                         F.when(F.col("_drop").isNull(), 1).otherwise(0)
@@ -938,10 +903,7 @@ def _recall_vs_exact(exact: DataFrame, approx: DataFrame,
                        .alias("recall_ppm")))
 
 
-def ann_recall_report(df: DataFrame, k: int = 5,
-                      id_col: str = "vec_id",
-                      emb_col: str = "embedding",
-                      query_pred: str | None = None,
+def ann_recall_report(df: DataFrame, k: int = 5, query_pred: str | None = None,
                       dim: int = EMB_DIM, n_planes: int = N_PLANES,
                       n_bands: int = 1,
                       exact: DataFrame | None = None) -> DataFrame:
@@ -958,7 +920,7 @@ def ann_recall_report(df: DataFrame, k: int = 5,
 
     Scale shape: the exact side is `brute_force_topk`, O(Q·N) by
     definition — this is an EVALUATION harness for a bounded query
-    sample (inherits brute force's `max_queries` guard), not a
+    sample (inherits brute force's `MAX_QUERIES` guard), not a
     production path; the LSH side and the final per-query join/agg
     are the production plans themselves.
 
@@ -966,12 +928,11 @@ def ann_recall_report(df: DataFrame, k: int = 5,
     `brute_force_topk(df, k=k, query_pred=query_pred)` frame — the
     recall trio (LSH / IVF / PQ) shares ONE ground-truth computation
     instead of each report re-running the O(Q·N) pass."""
-    query_pred = query_pred or f"{id_col} < 10"
+    query_pred = query_pred or QUERY_PRED
     if exact is None:
-        exact = brute_force_topk(df, id_col, emb_col, k=k,
-                                 query_pred=query_pred)
-    approx = lsh_topk(df, id_col, emb_col, k=k, query_pred=query_pred,
-                      dim=dim, n_planes=n_planes, n_bands=n_bands)
+        exact = brute_force_topk(df, k=k, query_pred=query_pred)
+    approx = lsh_topk(df, k=k, query_pred=query_pred, dim=dim,
+                      n_planes=n_planes, n_bands=n_bands)
     return _recall_vs_exact(exact, approx, k)
 
 
@@ -979,11 +940,6 @@ MRL_PREFIXES = (16, 32, 64)   # Matryoshka evaluation points
 
 
 def matryoshka_recall_report(df: DataFrame, k: int = 5,
-                             id_col: str = "vec_id",
-                             emb_col: str = "embedding",
-                             query_pred: str | None = None,
-                             dim: int = EMB_DIM,
-                             prefixes: tuple = MRL_PREFIXES,
                              exact: DataFrame | None = None) -> DataFrame:
     """recall@k of PREFIX-dimension retrieval against the full-width
     exact top-k — the Matryoshka-representation question ("how many
@@ -1002,11 +958,10 @@ def matryoshka_recall_report(df: DataFrame, k: int = 5,
     state and wire bytes proportionally.
 
     `exact` (optimization r11, guide §2.4 reuse): an already-computed
-    `brute_force_topk(df.where(size(emb) = dim), k=k,
-    query_pred=query_pred)` frame — the DIM-FILTERED ground truth
+    `brute_force_topk(df.where(size(embedding) = EMB_DIM), k=k)` frame
+    — the DIM-FILTERED ground truth
     (same expression this function builds itself), so callers holding
     the memoized filtered exact pass skip the O(Q·N) rebuild."""
-    query_pred = query_pred or f"{id_col} < 10"
     # the ground-truth frame is Q·k rows consumed by every prefix's
     # recall tail (2 consumers each) — eager-checkpoint it or each
     # consumer re-runs the full-width brute-force corpus pass
@@ -1016,13 +971,12 @@ def matryoshka_recall_report(df: DataFrame, k: int = 5,
     # sides and the oracle's len(embedding)=dim guard — otherwise a
     # wrong-dim/NULL embedding row makes ground truth diverge
     if exact is None:
-        exact = (brute_force_topk(df.where(F.size(F.col(emb_col)) == dim),
-                                  id_col, emb_col, k=k,
-                                  query_pred=query_pred)
+        exact = (brute_force_topk(
+                     df.where(F.size(F.col("embedding")) == EMB_DIM), k=k)
                  .localCheckpoint(eager=True))
     reports = []
-    for p in prefixes:
-        if p == dim:
+    for p in MRL_PREFIXES:
+        if p == EMB_DIM:
             # slice(emb, 1, dim) of a dim-guard-passing row is the
             # identity, so the full-width "prefix" ranking IS the
             # ground truth — reuse the frame instead of re-running
@@ -1034,11 +988,10 @@ def matryoshka_recall_report(df: DataFrame, k: int = 5,
                 .select(F.lit(p).cast("long").alias("prefix_dim"),
                         "query_id", "n_hits", "recall_ppm"))
             continue
-        sliced = (df.where(F.size(F.col(emb_col)) == dim)
-                    .select(id_col,
-                            F.slice(F.col(emb_col), 1, p).alias(emb_col)))
-        approx = brute_force_topk(sliced, id_col, emb_col, k=k,
-                                  query_pred=query_pred)
+        sliced = (df.where(F.size(F.col("embedding")) == EMB_DIM)
+                    .select("vec_id", F.slice(F.col("embedding"), 1, p)
+                                       .alias("embedding")))
+        approx = brute_force_topk(sliced, k=k)
         reports.append(
             _recall_vs_exact(exact, approx, k)
             .select(F.lit(p).cast("long").alias("prefix_dim"),
@@ -1066,7 +1019,7 @@ def sq8_code_expr() -> str:
             f"ELSE 0 END)")
 
 
-def sq8_bounds(df: DataFrame, emb_col: str = "embedding") -> DataFrame:
+def sq8_bounds(df: DataFrame) -> DataFrame:
     """One-row frame of per-dimension (mn, mx) arrays over the
     quantized corpus — the int8 scalar quantizer's ENTIRE training
     state. One corpus scan, 2·dim integers out (~1 KB): broadcast it
@@ -1074,7 +1027,7 @@ def sq8_bounds(df: DataFrame, emb_col: str = "embedding") -> DataFrame:
     literal-injected) these bounds stay a live 1-row plan node — at
     100 TB the min/max agg is an embarrassingly parallel map-side
     combine and the cross-join below broadcasts one row."""
-    expl = (with_quantized(df, emb_col)
+    expl = (with_quantized(df)
             .select(F.posexplode("qvec").alias("d", "v")))
     per_dim = expl.groupBy("d").agg(F.min("v").alias("mn"),
                                     F.max("v").alias("mx"))
@@ -1088,10 +1041,6 @@ def sq8_bounds(df: DataFrame, emb_col: str = "embedding") -> DataFrame:
 
 
 def sq8_recall_report(df: DataFrame, k: int = 5,
-                      id_col: str = "vec_id",
-                      emb_col: str = "embedding",
-                      query_pred: str | None = None,
-                      dim: int = EMB_DIM,
                       exact: DataFrame | None = None) -> DataFrame:
     """recall@k of int8 SCALAR-quantized serving against the exact
     top-k — the quantization tier between full-width floats and PQ
@@ -1108,29 +1057,26 @@ def sq8_recall_report(df: DataFrame, k: int = 5,
     brute-force guard applies); the production path is the candidate
     side — one scan that encodes against a broadcast 1-row bounds
     frame, 16× smaller vector state, no exchange added."""
-    query_pred = query_pred or f"{id_col} < 10"
-    full = df.where(F.size(F.col(emb_col)) == dim)
+    full = df.where(F.size(F.col("embedding")) == EMB_DIM)
     # ground truth consumed by the recall tail twice — checkpoint the
     # Q·k frame or each consumer re-runs the brute-force corpus pass.
     # `exact` (optimization r11, guide §2.4 reuse): callers holding
     # the memoized DIM-FILTERED ground truth (the same
     # brute_force_topk(full, ...) expression) skip the rebuild.
     if exact is None:
-        exact = brute_force_topk(full, id_col, emb_col, k=k,
-                                 query_pred=query_pred
-                                 ).localCheckpoint(eager=True)
-    base = with_quantized(full, emb_col).select(id_col, "qvec", "n2")
-    bounds = sq8_bounds(full, emb_col)
+        exact = brute_force_topk(full, k=k).localCheckpoint(eager=True)
+    base = with_quantized(full).select("vec_id", "qvec", "n2")
+    bounds = sq8_bounds(full)
     recon_expr = (f"transform(code, (c, i) -> mn[i] + "
                   f"(c * (mx[i] - mn[i])) div {SQ8_LEVELS})")
     coded = (base.crossJoin(F.broadcast(bounds))
                  .withColumn("code", F.expr(sq8_code_expr()))
                  .withColumn("rv", F.expr(recon_expr))
                  .withColumn("rn2", F.expr(dot_expr("rv", "rv"))))
-    q = (base.where(query_pred)
-             .select(F.col(id_col).alias("query_id"),
+    q = (base.where(QUERY_PRED)
+             .select(F.col("vec_id").alias("query_id"),
                      F.col("qvec").alias("qv"), F.col("n2").alias("qn2")))
-    c = coded.select(F.col(id_col).alias("neighbor_id"),
+    c = coded.select(F.col("vec_id").alias("neighbor_id"),
                      F.col("rv").alias("cv"), F.col("rn2").alias("cn2"))
     scored = (
         F.broadcast(q).crossJoin(c)
@@ -1153,37 +1099,33 @@ HAM_BAND_BITS = 8                     # substring width (multi-index)
 HAM_BANDS = EMB_DIM // HAM_BAND_BITS  # 8 bands cover all 64 bits
 
 
-def hamming_band_expr(qvec_col: str, band: int,
-                      band_bits: int = HAM_BAND_BITS) -> str:
+def hamming_band_expr(qvec_col: str, band: int) -> str:
     """SQL for one band's key: bit j of band b is [qvec[b·w+j] > 0]
     packed at position j — static expression text (no lambdas), the
     `lsh_bucket_expr` discipline, parses in Spark SQL and (with
     1-based indexing handled by the caller) DuckDB."""
     terms = [
         f"(CASE WHEN element_at({qvec_col}, "
-        f"{band * band_bits + j + 1}) > 0 THEN {1 << j}L ELSE 0L END)"
-        for j in range(band_bits)
+        f"{band * HAM_BAND_BITS + j + 1}) > 0 THEN {1 << j}L ELSE 0L END)"
+        for j in range(HAM_BAND_BITS)
     ]
     return " + ".join(terms)
 
 
-def with_binary_codes(df: DataFrame, id_col: str = "vec_id",
-                      emb_col: str = "embedding",
-                      dim: int = EMB_DIM) -> DataFrame:
+def with_binary_codes(df: DataFrame) -> DataFrame:
     """Sign-bit binary quantization: bit d = [x_d > 0] (the corpus is
     zero-centered; the threshold is applied to the shared quantized
     ints so both engines agree at the rounding boundary), packed as
     two 32-bit words hash_lo (bits 0–31) / hash_hi (bits 32–63) plus
     the 8 one-byte band keys. 64 dims × 4 B floats → 8 B of code:
     a 32× cut in vector state — THE serving-tier story at 100 TB."""
-    assert dim == HAM_BANDS * HAM_BAND_BITS, dim
-    base = with_quantized(
-        spread(df.where(F.size(F.col(emb_col)) == dim)
-                 .select(id_col, emb_col)),
-        emb_col)
+    assert EMB_DIM == HAM_BANDS * HAM_BAND_BITS, EMB_DIM
+    base = with_quantized(spread(
+        df.where(F.size(F.col("embedding")) == EMB_DIM)
+          .select("vec_id", "embedding")))
     band_cols = [F.expr(hamming_band_expr("qvec", b)).alias(f"band{b}")
                  for b in range(HAM_BANDS)]
-    coded = base.select(id_col, *band_cols)
+    coded = base.select("vec_id", *band_cols)
     half = HAM_BANDS // 2
     lo = sum((F.col(f"band{b}") * F.lit(1 << (b * HAM_BAND_BITS))
               for b in range(1, half)),
@@ -1196,10 +1138,8 @@ def with_binary_codes(df: DataFrame, id_col: str = "vec_id",
                  .withColumn("hash_hi", hi.cast("long")))
 
 
-def hamming_topk(df: DataFrame, id_col: str = "vec_id",
-                 emb_col: str = "embedding", k: int = 5,
-                 query_pred: str | None = None,
-                 dim: int = EMB_DIM) -> DataFrame:
+def hamming_topk(df: DataFrame, k: int = 5,
+                 query_pred: str | None = None) -> DataFrame:
     """Approximate top-k in HAMMING space over sign-bit codes —
     multi-index hashing (Norouzi/Punjani/Fleet, "Fast Search in
     Hamming Space with Multi-Index Hashing", public): candidates must
@@ -1217,22 +1157,22 @@ def hamming_topk(df: DataFrame, id_col: str = "vec_id",
     per-candidate work is 2 xor + 2 popcount on 16 B of state. This
     is the cheapest serving tier the engine offers: 32× less vector
     state than floats, integer-only distance."""
-    query_pred = query_pred or f"{id_col} < 10"
-    coded = with_binary_codes(df, id_col, emb_col, dim)
+    query_pred = query_pred or QUERY_PRED
+    coded = with_binary_codes(df)
     bands = F.array(*[
         F.struct(F.lit(b).cast("int").alias("band_id"),
                  F.col(f"band{b}").alias("key"))
         for b in range(HAM_BANDS)])
     melted = (coded.withColumn("bk", F.explode(bands))
-                   .select(id_col, "hash_hi", "hash_lo",
+                   .select("vec_id", "hash_hi", "hash_lo",
                            F.col("bk.band_id").alias("band_id"),
                            F.col("bk.key").alias("key")))
     q = melted.where(query_pred).select(
-        F.col(id_col).alias("query_id"),
+        F.col("vec_id").alias("query_id"),
         F.col("hash_hi").alias("q_hi"), F.col("hash_lo").alias("q_lo"),
         "band_id", "key")
     c = melted.select(
-        F.col(id_col).alias("neighbor_id"),
+        F.col("vec_id").alias("neighbor_id"),
         F.col("hash_hi").alias("c_hi"), F.col("hash_lo").alias("c_lo"),
         "band_id", "key")
     cand = (q.join(c, ["band_id", "key"])
@@ -1260,9 +1200,7 @@ def hamming_topk(df: DataFrame, id_col: str = "vec_id",
 KMEANS_MEAN_OFF = 4 * QUANT_SCALE
 
 
-def kmeans_assign(df: DataFrame, id_col: str = "vec_id",
-                  emb_col: str = "embedding", k: int = 8,
-                  rounds: int = 3, dim: int = EMB_DIM) -> DataFrame:
+def kmeans_assign(df: DataFrame, k: int = 8, rounds: int = 3) -> DataFrame:
     """DISTRIBUTED Lloyd k-means over the full corpus — the training
     loop itself as DataFrame ops, complementing `train_ivf_centroids`
     (which k-means a driver-side SAMPLE into plan literals; right for
@@ -1306,11 +1244,10 @@ def kmeans_assign(df: DataFrame, id_col: str = "vec_id",
     evaluates inside the scan projection. Empty cells keep their
     previous centroid (the driver-side merge defaults), so the cell
     count never silently shrinks."""
-    vecs = (with_quantized(
-                spread(df.where(F.size(F.col(emb_col)) == dim)
-                         .select(id_col, emb_col)),
-                emb_col)
-            .select(F.col(id_col).alias("vid"), "qvec")
+    vecs = (with_quantized(spread(
+                df.where(F.size(F.col("embedding")) == EMB_DIM)
+                  .select("vec_id", "embedding")))
+            .select(F.col("vec_id").alias("vid"), "qvec")
             .localCheckpoint(eager=True))  # scanned once per round
     init = vecs.orderBy("vid").limit(k).select("qvec").collect()
     cents: list[tuple[int, list[int]]] = [
@@ -1346,19 +1283,15 @@ def kmeans_assign(df: DataFrame, id_col: str = "vec_id",
                         if cell in got else c)
                  for cell, c in cents]
     return (assign(cents)
-            .select(F.col("vid").alias(id_col), "cell", "dist2"))
+            .select(F.col("vid").alias("vec_id"), "cell", "dist2"))
 
 
 DENSITY_TARGET_PPB = 500_000_000   # keep ~half the corpus, density-tilted
 DENSITY_SALT = "dsample-v1"
 
 
-def density_sample(df: DataFrame, id_col: str = "vec_id",
-                   emb_col: str = "embedding", k: int = 5,
-                   dim: int = EMB_DIM, n_planes: int = N_PLANES,
-                   n_bands: int = 3,
-                   target_ppb: int = DENSITY_TARGET_PPB,
-                   salt: str = DENSITY_SALT,
+def density_sample(df: DataFrame, k: int = 5, dim: int = EMB_DIM,
+                   n_planes: int = N_PLANES, n_bands: int = 3,
                    graph: DataFrame | None = None) -> DataFrame:
     """DENSITY-INVERSE diversity sampling — the soft cousin of
     SemDeDup's hard drop: instead of deleting near-duplicates, keep
@@ -1375,8 +1308,8 @@ def density_sample(df: DataFrame, id_col: str = "vec_id",
     Vectors with no kNN edges (no band collision) take density 0 —
     maximally isolated, maximally kept. weight = max(1, 10⁶ −
     dens_ppm); inclusion follows `weighted_sample`'s πps coin:
-    p_ppb = min(10⁹, w·target_ppb div mean_w), keep iff
-    h60(salt:id) mod 10⁹ < p_ppb.
+    p_ppb = min(10⁹, w·DENSITY_TARGET_PPB div mean_w), keep iff
+    h60(DENSITY_SALT:id) mod 10⁹ < p_ppb.
 
     Returns ONE VERDICT ROW PER VECTOR: (id, n_nbrs, dens_ppm, w,
     p_ppb, keep 0/1) — the auditable form; filter keep=1 downstream.
@@ -1389,18 +1322,18 @@ def density_sample(df: DataFrame, id_col: str = "vec_id",
     catalog graph skip re-running the banded-candidate + rerank pass.
     """
     from ..functions import h60
-    g = graph if graph is not None else knn_graph(
-        df, id_col, emb_col, k=k, dim=dim,
-        n_planes=n_planes, n_bands=n_bands)
-    dens = (g.groupBy(id_col)
+    g = graph if graph is not None else knn_graph(df, k=k, dim=dim,
+                                                  n_planes=n_planes,
+                                                  n_bands=n_bands)
+    dens = (g.groupBy("vec_id")
              .agg(F.count(F.lit(1)).cast("long").alias("n_nbrs"),
                   F.expr("CAST(sum(1000000 + CAST(round(cosine * 1000000)"
                          " AS BIGINT)) div count(*) - 1000000 AS BIGINT)")
                    .alias("dens_ppm")))
-    base = (df.where(F.size(F.col(emb_col)) == dim)
-              .select(id_col)
-              .join(dens, id_col, "left")
-              .select(F.col(id_col),
+    base = (df.where(F.size(F.col("embedding")) == dim)
+              .select("vec_id")
+              .join(dens, "vec_id", "left")
+              .select(F.col("vec_id"),
                       F.coalesce("n_nbrs", F.lit(0)).cast("long")
                        .alias("n_nbrs"),
                       F.coalesce("dens_ppm", F.lit(0)).cast("long")
@@ -1409,15 +1342,15 @@ def density_sample(df: DataFrame, id_col: str = "vec_id",
                   "greatest(CAST(1 AS BIGINT), 1000000 - dens_ppm)")))
     tot = base.agg(F.expr("CAST(sum(w) AS BIGINT)").alias("tw"),
                    F.count(F.lit(1)).cast("long").alias("n"))
-    coin = h60(F.concat(F.lit(salt + ":"),
-                        F.col(id_col).cast("string"))) % 1_000_000_000
+    coin = h60(F.concat(F.lit(DENSITY_SALT + ":"),
+                        F.col("vec_id").cast("string"))) % 1_000_000_000
     return (base.crossJoin(F.broadcast(tot))
                 .withColumn("p_ppb", F.expr(
                     f"least(CAST(1000000000 AS BIGINT), "
-                    f"w * {target_ppb} div (tw div n))"))
+                    f"w * {DENSITY_TARGET_PPB} div (tw div n))"))
                 .withColumn("keep", (coin < F.col("p_ppb"))
                              .cast("long"))
-                .select(id_col, "n_nbrs", "dens_ppm", "w", "p_ppb",
+                .select("vec_id", "n_nbrs", "dens_ppm", "w", "p_ppb",
                         "keep"))
 
 
@@ -1427,8 +1360,7 @@ PCA_SCALE = 1_000_000   # component quantization (1e-6 resolution)
 PCA_ITERS = 32          # fixed power-iteration count (deterministic)
 
 
-def train_pca_component(vectors: "list[list[float]]",
-                        iters: int = PCA_ITERS
+def train_pca_component(vectors: "list[list[float]]"
                         ) -> tuple[list[int], list[int]]:
     """Plan-time top principal component via power iteration on the
     centered sample (numpy float64, deterministic: max-energy-axis
@@ -1449,7 +1381,7 @@ def train_pca_component(vectors: "list[list[float]]",
     # e₀ start can be exactly orthogonal to the data and never leave
     v = np.zeros(x.shape[1], dtype=np.float64)
     v[int((xc * xc).sum(axis=0).argmax())] = 1.0
-    for _ in range(iters):
+    for _ in range(PCA_ITERS):
         w = xc.T @ (xc @ v)
         n = float(np.linalg.norm(w))
         if n == 0.0:
@@ -1465,9 +1397,8 @@ def train_pca_component(vectors: "list[list[float]]",
     return ([int(a) for a in mean_q], [int(a) for a in comp_q])
 
 
-def pca_scores(df: DataFrame, mean_q: list[int], comp_q: list[int],
-               id_col: str = "vec_id", emb_col: str = "embedding",
-               dim: int = EMB_DIM) -> DataFrame:
+def pca_scores(df: DataFrame, mean_q: list[int],
+               comp_q: list[int]) -> DataFrame:
     """Project every embedding onto the trained top component:
     score_e10 = Σᵢ (qᵢ − meanᵢ)·compᵢ, exact int64 (|q−mean| ≤ 2·10⁴,
     |comp| ≤ 10⁶, dim 64 → ≤ 1.3·10¹² per row). The double `pc1` is
@@ -1476,15 +1407,14 @@ def pca_scores(df: DataFrame, mean_q: list[int], comp_q: list[int],
     Scale: one narrow projection scan, zero shuffles — whole-stage
     codegen over two plan literals."""
     m, c = matrix_lit(mean_q), matrix_lit(comp_q)
-    base = (with_quantized(
-                df.where(F.size(emb_col) == dim), emb_col)
-            .select(id_col, "qvec"))
+    base = (with_quantized(df.where(F.size("embedding") == EMB_DIM))
+            .select("vec_id", "qvec"))
     diff = F.zip_with(F.col("qvec"), m, lambda x, y: x - y)
     score = F.aggregate(F.zip_with(diff, c, lambda x, y: x * y),
                         F.lit(0).cast("long"), lambda acc, x: acc + x)
     denom = float(QUANT_SCALE) * float(PCA_SCALE)
     return (base.withColumn("pc1_e10", score)
-                .select(id_col, "pc1_e10",
+                .select("vec_id", "pc1_e10",
                         (F.col("pc1_e10").cast("double") / F.lit(denom))
                         .alias("pc1")))
 
@@ -1494,10 +1424,8 @@ def pca_scores(df: DataFrame, mean_q: list[int], comp_q: list[int],
 MMR_POOL = 20   # stage-1 candidate pool per query (top-`pool` cosine)
 
 
-def mmr_rerank(df: DataFrame, id_col: str = "vec_id",
-               emb_col: str = "embedding", k: int = 5,
-               pool: int = MMR_POOL, query_pred: str | None = None,
-               dim: int = EMB_DIM) -> DataFrame:
+def mmr_rerank(df: DataFrame, k: int = 5, pool: int = MMR_POOL,
+               query_pred: str | None = None) -> DataFrame:
     """Maximal Marginal Relevance re-ranking (Carbonell & Goldstein
     1998), λ = 0.5: greedily pick k results per query trading
     relevance against redundancy — step 1 takes the top-cosine
@@ -1515,17 +1443,15 @@ def mmr_rerank(df: DataFrame, id_col: str = "vec_id",
     and reused by every stage; per-query state is O(pool), so the op
     scales linearly in the number of queries with no wide shuffle —
     the stage-1 pool bound is what keeps MMR's quadratic term local."""
-    query_pred = query_pred or f"{id_col} < 10"
+    query_pred = query_pred or QUERY_PRED
     from pyspark.sql import Window
-    base = (with_quantized(
-                spread(df.where(F.size(emb_col) == dim)
-                         .select(id_col, emb_col)),
-                emb_col)
-            .select(id_col, "qvec", "n2"))
+    base = (with_quantized(spread(df.where(F.size("embedding") == EMB_DIM)
+                         .select("vec_id", "embedding")))
+            .select("vec_id", "qvec", "n2"))
     q = (base.where(query_pred)
-             .select(F.col(id_col).alias("query_id"),
+             .select(F.col("vec_id").alias("query_id"),
                      F.col("qvec").alias("qv"), F.col("n2").alias("qn2")))
-    c = (base.select(F.col(id_col).alias("cand_id"),
+    c = (base.select(F.col("vec_id").alias("cand_id"),
                      F.col("qvec").alias("cv"), F.col("n2").alias("cn2")))
     w = (Window.partitionBy("query_id")
                .orderBy(F.col("cos_q").desc(), F.col("cand_id").asc()))
@@ -1598,11 +1524,7 @@ def mmr_rerank(df: DataFrame, id_col: str = "vec_id",
                       "cos_q", "mmr")
 
 
-def ivf_recall_report(df: DataFrame, centroids: list[list[int]],
-                      k: int = 5, id_col: str = "vec_id",
-                      emb_col: str = "embedding",
-                      query_pred: str | None = None,
-                      dim: int = EMB_DIM,
+def ivf_recall_report(df: DataFrame, centroids: list[list[int]], k: int = 5,
                       exact: DataFrame | None = None) -> DataFrame:
     """`ann_recall_report`'s IVF sibling — recall@k of the nprobe=1
     IVF path against the exact top-k, the measurement that tunes the
@@ -1612,21 +1534,14 @@ def ivf_recall_report(df: DataFrame, centroids: list[list[int]],
     contract: bounded query sample, set membership not rank
     agreement, recall_ppm = n_hits·10⁶ div k, exact integers — and
     the same shared-ground-truth `exact` hook as `ann_recall_report`."""
-    query_pred = query_pred or f"{id_col} < 10"
     if exact is None:
-        exact = brute_force_topk(df, id_col, emb_col, k=k,
-                                 query_pred=query_pred)
-    approx = ivf_topk(df, centroids, id_col, emb_col, k=k,
-                      query_pred=query_pred, dim=dim)
+        exact = brute_force_topk(df, k=k)
+    approx = ivf_topk(df, centroids, k=k)
     return _recall_vs_exact(exact, approx, k)
 
 
 def pq_recall_report(df: DataFrame, centroids: list[list[int]],
-                     codebooks: list[list[list[int]]],
-                     k: int = 5, id_col: str = "vec_id",
-                     emb_col: str = "embedding",
-                     query_pred: str | None = None,
-                     dim: int = EMB_DIM,
+                     codebooks: list[list[list[int]]], k: int = 5,
                      exact: DataFrame | None = None) -> DataFrame:
     """Completes the recall-measurement trio (LSH bands →
     `ann_recall_report`, IVF cells → `ivf_recall_report`, PQ codes →
@@ -1636,10 +1551,7 @@ def pq_recall_report(df: DataFrame, centroids: list[list[int]],
     against `ivf_recall_report` at the same centroids). Same
     contract: bounded query sample, set membership, exact ppm — and
     the same shared-ground-truth `exact` hook as `ann_recall_report`."""
-    query_pred = query_pred or f"{id_col} < 10"
     if exact is None:
-        exact = brute_force_topk(df, id_col, emb_col, k=k,
-                                 query_pred=query_pred)
-    approx = ivfpq_topk(df, centroids, codebooks, id_col, emb_col,
-                        k=k, query_pred=query_pred, dim=dim)
+        exact = brute_force_topk(df, k=k)
+    approx = ivfpq_topk(df, centroids, codebooks, k=k)
     return _recall_vs_exact(exact, approx, k)

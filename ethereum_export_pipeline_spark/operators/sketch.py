@@ -45,12 +45,11 @@ def _estimate(kth_col: str, n_col: str, k: int):
                 / F.col(kth_col).cast("double"))
 
 
-def kmv_sketch(df: DataFrame, group_col: str = "source",
-               key_col: str = "text", k: int = 32,
-               merged_label: str = "__ALL__") -> DataFrame:
+def kmv_sketch(df: DataFrame, group_col: str = "source", key_col: str = "text",
+               k: int = 32) -> DataFrame:
     """Per-group KMV distinct-count sketch + the merged global sketch.
 
-    Returns one row per group plus one `merged_label` row:
+    Returns one row per group plus one `__ALL__` row:
     (group, n_kept, kth_min, est_distinct) where `n_kept` = |sketch|
     (= min(k, distinct keys)), `kth_min` = largest retained hash, and
     `est_distinct` the KMV estimate (exact when n_kept < k).
@@ -78,7 +77,7 @@ def kmv_sketch(df: DataFrame, group_col: str = "source",
                        .where(F.col("rk") <= k))
     merged = (merged_kept.agg(F.count(F.lit(1)).alias("n_kept"),
                               F.max("h").alias("kth_min"))
-                         .withColumn("grp", F.lit(merged_label)))
+                         .withColumn("grp", F.lit("__ALL__")))
     out = per_group.unionByName(merged.select("grp", "n_kept", "kth_min"))
     return out.select(
         F.col("grp").alias(group_col),
@@ -87,9 +86,7 @@ def kmv_sketch(df: DataFrame, group_col: str = "source",
         _estimate("kth_min", "n_kept", k).alias("est_distinct"))
 
 
-def kmv_sketch_sql(table: str = "documents", group_expr: str = "source",
-                   key_expr: str = "text", k: int = 32,
-                   merged_label: str = "__ALL__") -> str:
+def kmv_sketch_sql(k: int = 32) -> str:
     """DuckDB twin of `kmv_sketch` — identical hashes, order
     statistics, and the single estimator float expression."""
     est = (f"CASE WHEN n_kept < {k} THEN CAST(n_kept AS DOUBLE) "
@@ -97,8 +94,8 @@ def kmv_sketch_sql(table: str = "documents", group_expr: str = "source",
            f" / CAST(kth_min AS DOUBLE) END")
     return f"""
 WITH hashes AS (
-  SELECT DISTINCT {group_expr} AS grp, {h60_sql(key_expr)} AS h
-  FROM {table} WHERE {key_expr} IS NOT NULL
+  SELECT DISTINCT source AS grp, {h60_sql('text')} AS h
+  FROM documents WHERE text IS NOT NULL
 ), kept AS (
   SELECT grp, h FROM (
     SELECT grp, h, row_number() OVER (PARTITION BY grp ORDER BY h) AS rk
@@ -106,12 +103,12 @@ WITH hashes AS (
 ), per_group AS (
   SELECT grp, count(*) AS n_kept, max(h) AS kth_min FROM kept GROUP BY 1
 ), merged AS (
-  SELECT '{merged_label}' AS grp, count(*) AS n_kept, max(h) AS kth_min
+  SELECT '__ALL__' AS grp, count(*) AS n_kept, max(h) AS kth_min
   FROM (SELECT h FROM (
           SELECT h, row_number() OVER (ORDER BY h) AS rk
           FROM (SELECT DISTINCT h FROM kept)) WHERE rk <= {k})
 )
-SELECT grp AS {group_expr}, CAST(n_kept AS BIGINT) AS n_kept,
+SELECT grp AS source, CAST(n_kept AS BIGINT) AS n_kept,
        CAST(kth_min AS BIGINT) AS kth_min, {est} AS est_distinct
 FROM (SELECT * FROM per_group UNION ALL SELECT * FROM merged)
 """
@@ -143,8 +140,7 @@ def _positions(c):
                      for a, b in BLOOM_FAMILY])
 
 
-def bloom_build(keys: DataFrame, key_col: str = "key",
-                m: int = BLOOM_M) -> DataFrame:
+def bloom_build(keys: DataFrame, key_col: str = "key") -> DataFrame:
     """Build the filter as (limb, bits) rows — m/32 rows total, the
     relational form of the bit array. The build is one explode (k
     rows per key) + one tiny hash agg with map-side bit_or partials;
@@ -157,19 +153,18 @@ def bloom_build(keys: DataFrame, key_col: str = "key",
                      .alias("bits")))
 
 
-def bloom_probe(df: DataFrame, limbs: DataFrame, key_col: str = "key",
-                keep_cols: tuple[str, ...] = ()) -> DataFrame:
+def bloom_probe(df: DataFrame, limbs: DataFrame) -> DataFrame:
     """Probe: a row passes iff ALL k bits are set. Implemented as the
     k-position explode joined (broadcast) against the limb rows, then
     an all-bits-present agg per input row — no shuffle of `df` wider
     than its own k-row fan-out, and the limb table is m/32 rows
     however large the built-from set was.
 
-    Returns df's (keep_cols, key_col) plus `bloom_hit` (0/1)."""
-    probe = (df.select(*keep_cols, F.col(key_col),
-                       F.posexplode(_positions(F.col(key_col)))
+    Returns df's `key` plus `bloom_hit` (0/1)."""
+    probe = (df.select(F.col("key"),
+                       F.posexplode(_positions(F.col("key")))
                         .alias("_i", "p"))
-               .select(*keep_cols, key_col, "_i",
+               .select("key", "_i",
                        F.expr(f"p div {_LIMB_BITS}").alias("limb"),
                        F.expr(f"shiftleft(CAST(1 AS BIGINT), "
                               f"CAST(p % {_LIMB_BITS} AS INT))")
@@ -179,7 +174,7 @@ def bloom_probe(df: DataFrame, limbs: DataFrame, key_col: str = "key",
                                ((F.coalesce(F.col("bits"), F.lit(0))
                                  .bitwiseAND(F.col("mask")))
                                 == F.col("mask")).cast("int")))
-    return (joined.groupBy(*keep_cols, key_col)
+    return (joined.groupBy("key")
                   .agg((F.min("_ok") == 1).cast("long").alias("bloom_hit")))
 
 
@@ -191,14 +186,14 @@ def bloom_positions_sql(expr: str) -> str:
         for a, b in BLOOM_FAMILY) + "]")
 
 
-def bloom_bits(limbs: DataFrame, m: int = BLOOM_M) -> list[int]:
+def bloom_bits(limbs: DataFrame) -> list[int]:
     """Collapse the (limb, bits) rows to a dense limb list — m/32
     ints, the whole filter. This is the plan-build step of the inline
     probe: collecting 128 longs is the point of a Bloom filter (the
     authoritative set may be billions of keys; its filter is ~512 B
     and becomes a plan LITERAL, like the IVF centroid matrix)."""
     rows = {r["limb"]: r["bits"] for r in limbs.collect()}
-    return [int(rows.get(i, 0)) for i in range(m // _LIMB_BITS)]
+    return [int(rows.get(i, 0)) for i in range(BLOOM_M // _LIMB_BITS)]
 
 
 def bloom_hit_expr(key_expr: str, bits: list[int]):
@@ -249,15 +244,14 @@ CMS_FAMILY = hash_family(CMS_D, seed=29)
 CMS_TOPK = 20
 
 
-def cms_cells(key_hash, d: int = CMS_D, w: int = CMS_W):
+def cms_cells(key_hash):
     """array<long> of the D cell columns a key hashes to (one affine
     hash per row, reduced mod W)."""
     return F.array(*[
-        affine_hash(key_hash, a, b) % w for a, b in CMS_FAMILY[:d]])
+        affine_hash(key_hash, a, b) % CMS_W for a, b in CMS_FAMILY[:CMS_D]])
 
 
-def cms_build(occ: DataFrame, key_col: str = "tok",
-              d: int = CMS_D, w: int = CMS_W) -> DataFrame:
+def cms_build(occ: DataFrame) -> DataFrame:
     """Build the D×W sketch from an occurrence frame (one row per key
     OCCURRENCE): returns (r, c, cnt) with at most d·w rows.
 
@@ -267,32 +261,28 @@ def cms_build(occ: DataFrame, key_col: str = "tok",
     d·w·n_tasks rows regardless of corpus size, and the result is
     d·w rows. That boundedness (plus cell-wise mergeability) is the
     whole point of the sketch at 100 TB."""
-    return (occ.select(F.posexplode(cms_cells(h32(F.col(key_col)), d, w))
+    return (occ.select(F.posexplode(cms_cells(h32(F.col("tok"))))
                         .alias("r", "c"))
                .groupBy("r", "c")
                .agg(F.count(F.lit(1)).cast("long").alias("cnt")))
 
 
-def cms_estimate(keys: DataFrame, sketch: DataFrame,
-                 key_col: str = "tok",
-                 d: int = CMS_D, w: int = CMS_W) -> DataFrame:
+def cms_estimate(keys: DataFrame, sketch: DataFrame) -> DataFrame:
     """Point-query the sketch for each key in `keys`: estimate =
     min over rows r of sketch[r][h_r(key)] — an OVERESTIMATE of the
     true count by construction (hash collisions only ever add).
     Adds `cms_cnt` to `keys`. The ≤ d·w-row sketch broadcasts; probes
     are a map-side join + a d-row min per key."""
-    cells = keys.select(key_col,
-                        F.posexplode(cms_cells(h32(F.col(key_col)), d, w))
+    cells = keys.select("tok",
+                        F.posexplode(cms_cells(h32(F.col("tok"))))
                          .alias("r", "c"))
     return (cells.join(F.broadcast(sketch), ["r", "c"], "left")
-                 .groupBy(key_col)
+                 .groupBy("tok")
                  .agg(F.min(F.coalesce("cnt", F.lit(0)))
                        .cast("long").alias("cms_cnt")))
 
 
-def cms_heavy_hitters(df: DataFrame, text_col: str = "text",
-                      k: int = CMS_TOPK, d: int = CMS_D,
-                      w: int = CMS_W) -> DataFrame:
+def cms_heavy_hitters(df: DataFrame, k: int = CMS_TOPK) -> DataFrame:
     """Heavy-hitter report: the corpus's exact top-k tokens next to
     their count-min estimates — (rank, tok, exact_cnt, cms_cnt,
     overcount). The catalog hash PINS the CMS guarantee on every row:
@@ -310,14 +300,13 @@ def cms_heavy_hitters(df: DataFrame, text_col: str = "text",
     token stream in the graded report, ONE (the sketch build) in
     production."""
     from pyspark.sql import Window
-    occ = (df.where(F.col(text_col).isNotNull())
-             .select(F.explode(tokens(text_col)).alias("tok")))
+    occ = (df.where(F.col("text").isNotNull())
+             .select(F.explode(tokens("text")).alias("tok")))
     exact = occ.groupBy("tok").agg(
         F.count(F.lit(1)).cast("long").alias("exact_cnt"))
     top = (exact.orderBy(F.col("exact_cnt").desc(), F.col("tok").asc())
                 .limit(k))
-    est = cms_estimate(top.select("tok"), cms_build(occ, "tok", d, w),
-                       "tok", d, w)
+    est = cms_estimate(top.select("tok"), cms_build(occ))
     wrk = Window.orderBy(F.col("exact_cnt").desc(), F.col("tok").asc())
     return (top.join(est, "tok")
                .withColumn("rank", F.row_number().over(wrk).cast("long"))
@@ -326,25 +315,22 @@ def cms_heavy_hitters(df: DataFrame, text_col: str = "text",
                         .alias("overcount")))
 
 
-def cms_heavy_hitters_sql(table: str = "documents",
-                          text_expr: str = "text",
-                          k: int = CMS_TOPK, d: int = CMS_D,
-                          w: int = CMS_W) -> str:
+def cms_heavy_hitters_sql() -> str:
     """DuckDB twin of `cms_heavy_hitters`: identical affine cell
     hashes (UNION ALL per row r), identical min-over-rows estimate."""
     from ..functions import tokens_sql
     cell_selects = "\n  UNION ALL\n".join(
-        f"  SELECT {r} AS r, ({affine_hash_sql('h', a, b)}) % {w} AS c "
+        f"  SELECT {r} AS r, ({affine_hash_sql('h', a, b)}) % {CMS_W} AS c "
         "FROM hashed"
-        for r, (a, b) in enumerate(CMS_FAMILY[:d]))
+        for r, (a, b) in enumerate(CMS_FAMILY[:CMS_D]))
     probe_cells = "\n  UNION ALL\n".join(
         f"  SELECT tok, exact_cnt, {r} AS r, "
-        f"({affine_hash_sql('h', a, b)}) % {w} AS c FROM top"
-        for r, (a, b) in enumerate(CMS_FAMILY[:d]))
+        f"({affine_hash_sql('h', a, b)}) % {CMS_W} AS c FROM top"
+        for r, (a, b) in enumerate(CMS_FAMILY[:CMS_D]))
     return f"""
 WITH occ AS (
-  SELECT unnest({tokens_sql(text_expr)}) AS tok
-  FROM {table} WHERE {text_expr} IS NOT NULL
+  SELECT unnest({tokens_sql('text')}) AS tok
+  FROM documents WHERE text IS NOT NULL
 ),
 hashed AS (SELECT {h32_sql('tok')} AS h FROM occ),
 cells AS (
@@ -356,7 +342,7 @@ exact AS (SELECT tok, CAST(count(*) AS BIGINT) AS exact_cnt
           FROM occ GROUP BY tok),
 top AS (
   SELECT tok, exact_cnt, {h32_sql('tok')} AS h
-  FROM exact ORDER BY exact_cnt DESC, tok ASC LIMIT {k}
+  FROM exact ORDER BY exact_cnt DESC, tok ASC LIMIT {CMS_TOPK}
 ),
 probe AS (
 {probe_cells}
@@ -395,8 +381,7 @@ AMS_CELL_FAMILY = hash_family(AMS_D, seed=41)
 AMS_SIGN_FAMILY = hash_family(AMS_D, seed=53)
 
 
-def ams_sketch(df: DataFrame, key_col: str = "k",
-               d: int = AMS_D, w: int = AMS_W) -> DataFrame:
+def ams_sketch(df: DataFrame, key_col: str = "k") -> DataFrame:
     """Build the d×w signed sketch from a key-occurrence frame (one
     row per key OCCURRENCE, multiplicities included): returns
     (r, c, s) with at most d·w rows, where s = Σ sign(key) over the
@@ -417,11 +402,11 @@ def ams_sketch(df: DataFrame, key_col: str = "k",
     hc = F.col("__h")
     entries = F.array(*[
         F.struct(
-            (affine_hash(hc, ca, cb) % w).cast("long").alias("c"),
+            (affine_hash(hc, ca, cb) % AMS_W).cast("long").alias("c"),
             (F.lit(1) - F.lit(2) * (affine_hash(hc, sa, sb) % 2))
             .cast("long").alias("s"))
-        for (ca, cb), (sa, sb) in zip(AMS_CELL_FAMILY[:d],
-                                      AMS_SIGN_FAMILY[:d])])
+        for (ca, cb), (sa, sb) in zip(AMS_CELL_FAMILY[:AMS_D],
+                                      AMS_SIGN_FAMILY[:AMS_D])])
     return (df.select(h32(F.col(key_col)).alias("__h"))
               .select(F.posexplode(entries).alias("r", "e"))
               .select("r", "e.c", "e.s")
@@ -429,17 +414,16 @@ def ams_sketch(df: DataFrame, key_col: str = "k",
               .agg(F.sum("s").cast("long").alias("s")))
 
 
-def ams_inner_product(a: DataFrame, b: DataFrame,
-                      key_a: str, key_b: str,
-                      d: int = AMS_D, w: int = AMS_W) -> DataFrame:
+def ams_inner_product(a: DataFrame, b: DataFrame, key_a: str,
+                      key_b: str) -> DataFrame:
     """The PRODUCTION path of the join-size estimator: one row
     (est_pairs) — median over depths of the signed-counter inner
     product, from the two bounded sketch builds alone. No audit, no
     key-wise shuffle of either input: this is everything a 100 TB
     deployment runs to size a join before committing to it."""
-    dots = (ams_sketch(a.select(F.col(key_a).alias("k")), "k", d, w)
+    dots = (ams_sketch(a.select(F.col(key_a).alias("k")))
             .withColumnRenamed("s", "sa")
-            .join(ams_sketch(b.select(F.col(key_b).alias("k")), "k", d, w)
+            .join(ams_sketch(b.select(F.col(key_b).alias("k")))
                   .withColumnRenamed("s", "sb"),
                   ["r", "c"], "full")
             .groupBy("r")
@@ -447,13 +431,12 @@ def ams_inner_product(a: DataFrame, b: DataFrame,
                         "AS BIGINT)").alias("dot")))
     return (dots
             .withColumn("_rk", F.expr("row_number() OVER (ORDER BY dot)"))
-            .where(F.col("_rk") == (d + 1) // 2)
+            .where(F.col("_rk") == (AMS_D + 1) // 2)
             .select(F.col("dot").alias("est_pairs")))
 
 
-def ams_join_size(a: DataFrame, b: DataFrame,
-                  key_a: str, key_b: str,
-                  d: int = AMS_D, w: int = AMS_W) -> DataFrame:
+def ams_join_size(a: DataFrame, b: DataFrame, key_a: str,
+                  key_b: str) -> DataFrame:
     """Join-cardinality estimation report: ONE row
     (est_pairs, exact_pairs, abs_err_ppm) — the count-sketch estimate
     of |a ⋈ b| on key_a = key_b next to the exact answer. Estimate =
@@ -470,7 +453,7 @@ def ams_join_size(a: DataFrame, b: DataFrame,
     contribute 0), a d-row median. The exact twin shuffles each side
     once on the key — exactly the cost the estimator exists to
     predict, paid here only for the audit."""
-    est = ams_inner_product(a, b, key_a, key_b, d, w)
+    est = ams_inner_product(a, b, key_a, key_b)
     na = (a.groupBy(F.col(key_a).alias("k"))
            .agg(F.count(F.lit(1)).cast("long").alias("na")))
     nb = (b.groupBy(F.col(key_b).alias("k"))
@@ -485,29 +468,28 @@ def ams_join_size(a: DataFrame, b: DataFrame,
                               "div exact_pairs END").alias("abs_err_ppm")))
 
 
-def _ams_cells_sql(src: str, d: int, w: int) -> str:
+def _ams_cells_sql(src: str) -> str:
     """UNION ALL per depth over `src` (must expose h = h32(key)):
     the (r, c, s) occurrence entries."""
     return "\n  UNION ALL\n".join(
-        f"  SELECT {r} AS r, ({affine_hash_sql('h', ca, cb)}) % {w} AS c, "
-        f"1 - 2 * (({affine_hash_sql('h', sa, sb)}) % 2) AS s FROM {src}"
+        f"  SELECT {r} AS r, ({affine_hash_sql('h', ca, cb)}) % {AMS_W} "
+        f"AS c, 1 - 2 * (({affine_hash_sql('h', sa, sb)}) % 2) AS s FROM {src}"
         for r, ((ca, cb), (sa, sb))
-        in enumerate(zip(AMS_CELL_FAMILY[:d], AMS_SIGN_FAMILY[:d])))
+        in enumerate(zip(AMS_CELL_FAMILY[:AMS_D], AMS_SIGN_FAMILY[:AMS_D])))
 
 
-def ams_join_size_sql(table_a: str, key_a: str,
-                      table_b: str, key_b: str,
-                      d: int = AMS_D, w: int = AMS_W) -> str:
+def ams_join_size_sql(table_a: str, key_a: str, table_b: str,
+                      key_b: str) -> str:
     """DuckDB twin of `ams_join_size`: identical affine cell/sign
     hashes, identical median-of-depths element."""
     return f"""
 WITH ha AS (SELECT {h32_sql(key_a)} AS h FROM {table_a}),
 hb AS (SELECT {h32_sql(key_b)} AS h FROM {table_b}),
 ca AS (
-{_ams_cells_sql('ha', d, w)}
+{_ams_cells_sql('ha')}
 ),
 cb AS (
-{_ams_cells_sql('hb', d, w)}
+{_ams_cells_sql('hb')}
 ),
 sa AS (SELECT r, c, CAST(sum(s) AS BIGINT) AS s FROM ca GROUP BY r, c),
 sb AS (SELECT r, c, CAST(sum(s) AS BIGINT) AS s FROM cb GROUP BY r, c),
@@ -518,7 +500,7 @@ dots AS (
 e AS (
   SELECT dot AS est_pairs FROM (
     SELECT dot, row_number() OVER (ORDER BY dot) AS rk FROM dots)
-  WHERE rk = {(d + 1) // 2}),
+  WHERE rk = {(AMS_D + 1) // 2}),
 x AS (
   SELECT CAST(COALESCE(sum(na.n * nb.n), 0) AS BIGINT) AS exact_pairs
   FROM (SELECT {key_a} AS k, CAST(count(*) AS BIGINT) AS n
@@ -565,6 +547,7 @@ FROM e, x
 
 HLL_P = 4                       # 2^4 = 16 buckets
 HLL_M = 1 << HLL_P
+HLL_WINDOW_DAYS = 7             # rolling distinct: trailing 7 days
 HLL_RCAP = 40                   # register cap: keeps 2^(RCAP-M) exact
 HLL_ALPHA = 0.673               # standard alpha for m=16
 #: the estimator numerator α·m²·2^RCAP, ONE Python float so both
@@ -583,10 +566,9 @@ def _hll_rho(suffix):
 
 
 def hll_sketch(df: DataFrame, group_col: str = "source",
-               key_col: str = "tok",
-               merged_label: str = "__ALL__") -> DataFrame:
+               key_col: str = "tok") -> DataFrame:
     """Per-group HLL register table + raw estimate + exact distinct,
-    plus the `merged_label` row whose registers are the BUCKET-WISE
+    plus the `__ALL__` row whose registers are the BUCKET-WISE
     MAX of the per-group registers (HLL's merge — no rescan).
 
     Input `df` is an OCCURRENCE frame (group_col, key_col); duplicate
@@ -613,7 +595,7 @@ def hll_sketch(df: DataFrame, group_col: str = "source",
                       .cast("long").alias("reg")))
     merged_regs = (regs.groupBy("bucket")
                        .agg(F.max("reg").alias("reg"))
-                       .withColumn("grp", F.lit(merged_label))
+                       .withColumn("grp", F.lit("__ALL__"))
                        .select("grp", "bucket", "reg"))
     all_regs = regs.unionByName(merged_regs)
     # empty buckets (register 0) contribute 2^RCAP each: m·2^RCAP
@@ -631,7 +613,7 @@ def hll_sketch(df: DataFrame, group_col: str = "source",
     exact_all = (hashes.select("h").distinct()
                  .agg(F.count(F.lit(1)).cast("long")
                        .alias("exact_distinct"))
-                 .withColumn("grp", F.lit(merged_label)))
+                 .withColumn("grp", F.lit("__ALL__")))
     exact = exact_g.unionByName(exact_all.select("grp", "exact_distinct"))
     return (summed.join(exact, "grp")
                   .select(F.col("grp").alias(group_col),
@@ -642,18 +624,14 @@ def hll_sketch(df: DataFrame, group_col: str = "source",
                           "exact_distinct"))
 
 
-def hll_sketch_sql(table: str = "documents", group_expr: str = "source",
-                   key_sql: str = "tok", occ_cte: str | None = None,
-                   merged_label: str = "__ALL__") -> str:
-    """DuckDB twin of `hll_sketch`. `occ_cte` supplies the occurrence
-    relation as SQL (producing columns grp, k); defaults to per-token
-    occurrences of `documents.text`."""
+def hll_sketch_sql() -> str:
+    """DuckDB twin of `hll_sketch` over the per-token occurrences of
+    `documents.text`, grouped by `source`."""
     from ..functions import tokens_sql
-    if occ_cte is None:
-        occ_cte = (f"SELECT {group_expr} AS grp, "
-                   f"unnest({tokens_sql('text')}) AS k "
-                   f"FROM {table} WHERE text IS NOT NULL "
-                   f"AND {group_expr} IS NOT NULL")
+    occ_cte = ("SELECT source AS grp, "
+               f"unnest({tokens_sql('text')}) AS k "
+               "FROM documents WHERE text IS NOT NULL "
+               "AND source IS NOT NULL")
     rcap, m = HLL_RCAP, HLL_M
     return f"""
 WITH occ AS ({occ_cte}),
@@ -671,7 +649,7 @@ regs AS (
 all_regs AS (
   SELECT * FROM regs
   UNION ALL
-  SELECT '{merged_label}' AS grp, bucket, max(reg) AS reg
+  SELECT '__ALL__' AS grp, bucket, max(reg) AS reg
   FROM regs GROUP BY 2
 ),
 summed AS (
@@ -684,9 +662,9 @@ exact AS (
   SELECT grp, CAST(count(*) AS BIGINT) AS exact_distinct FROM hashes
   GROUP BY 1
   UNION ALL
-  SELECT '{merged_label}', CAST(count(DISTINCT h) AS BIGINT) FROM hashes
+  SELECT '__ALL__', CAST(count(DISTINCT h) AS BIGINT) FROM hashes
 )
-SELECT s.grp AS {group_expr},
+SELECT s.grp AS source,
        CAST({m} - n_filled AS BIGINT) AS n_zero,
        CAST(({m} - n_filled) * ({1 << rcap}::BIGINT) + filled_fp
             AS BIGINT) AS sum_fp,
@@ -697,8 +675,7 @@ FROM summed s JOIN exact e USING (grp)
 """
 
 
-def kmv_pair_overlap(df: DataFrame, group_col: str = "source",
-                     key_col: str = "text", k: int = 32) -> DataFrame:
+def kmv_pair_overlap(df: DataFrame, k: int = 32) -> DataFrame:
     """Pairwise set-INTERSECTION estimates between groups from their
     KMV sketches alone — the sketch-algebra capability that makes
     sketches a corpus-accounting tool rather than a single statistic
@@ -721,10 +698,10 @@ def kmv_pair_overlap(df: DataFrame, group_col: str = "source",
     exchange); everything pairwise happens on groups·k rows. 20
     sources × k=32 = 640 rows feeding 190 pair estimates."""
     from pyspark.sql import Window
-    hashes = (df.where(F.col(key_col).isNotNull()
-                       & F.col(group_col).isNotNull())
-                .select(F.col(group_col).alias("grp"),
-                        h60(F.col(key_col)).alias("h"))
+    hashes = (df.where(F.col("text").isNotNull()
+                       & F.col("source").isNotNull())
+                .select(F.col("source").alias("grp"),
+                        h60(F.col("text")).alias("h"))
                 .distinct())
     w = Window.partitionBy("grp").orderBy("h")
     kept = (hashes.withColumn("rk", F.row_number().over(w))
@@ -767,9 +744,7 @@ def kmv_pair_overlap(df: DataFrame, group_col: str = "source",
                        "n_both", "est_union", "est_inter"))
 
 
-def kmv_pair_overlap_sql(table: str = "documents",
-                         group_expr: str = "source",
-                         key_expr: str = "text", k: int = 32) -> str:
+def kmv_pair_overlap_sql(k: int = 32) -> str:
     """DuckDB twin of `kmv_pair_overlap` — identical order statistics
     and the same two fixed float expressions."""
     est_u = (f"CASE WHEN n_union_kept < {k} "
@@ -778,9 +753,9 @@ def kmv_pair_overlap_sql(table: str = "documents",
              f" / CAST(kth_min AS DOUBLE) END")
     return f"""
 WITH hashes AS (
-  SELECT DISTINCT {group_expr} AS grp, {h60_sql(key_expr)} AS h
-  FROM {table}
-  WHERE {key_expr} IS NOT NULL AND {group_expr} IS NOT NULL
+  SELECT DISTINCT source AS grp, {h60_sql('text')} AS h
+  FROM documents
+  WHERE text IS NOT NULL AND source IS NOT NULL
 ),
 kept AS (
   SELECT grp, h FROM (
@@ -819,9 +794,7 @@ FROM agg
 """
 
 
-def hll_rolling_distinct(df: DataFrame, day_col: str = "day",
-                         key_col: str = "user_id",
-                         window_days: int = 7) -> DataFrame:
+def hll_rolling_distinct(df: DataFrame) -> DataFrame:
     """ROLLING-WINDOW distinct counting via HLL register algebra — the
     "7-day active users" query, the capability that makes the register
     form worth keeping: exact sliding distinct needs a full rescan of
@@ -845,10 +818,10 @@ def hll_rolling_distinct(df: DataFrame, day_col: str = "day",
     register rows; the exact column is the only corpus-revisiting
     part and is explicitly the harness."""
     from pyspark.sql import Window
-    hashes = (df.where(F.col(key_col).isNotNull()
-                       & F.col(day_col).isNotNull())
-                .select(F.col(day_col).cast("long").alias("day"),
-                        h60(F.col(key_col)).alias("h"))
+    hashes = (df.where(F.col("user_id").isNotNull()
+                       & F.col("day").isNotNull())
+                .select(F.col("day").cast("long").alias("day"),
+                        h60(F.col("user_id")).alias("h"))
                 .distinct())
     rhos = hashes.select(
         "day", (F.col("h") % HLL_M).cast("long").alias("bucket"),
@@ -864,7 +837,7 @@ def hll_rolling_distinct(df: DataFrame, day_col: str = "day",
                   .withColumn("reg", F.coalesce("reg", F.lit(0))
                                .cast("long")))
     w = (Window.partitionBy("bucket").orderBy("day")
-               .rangeBetween(-(window_days - 1), 0))
+               .rangeBetween(-(HLL_WINDOW_DAYS - 1), 0))
     windowed = dense.withColumn("wreg", F.max("reg").over(w))
     summed = (windowed.groupBy("day")
               .agg(F.expr(f"CAST(sum(CASE WHEN wreg = 0 THEN 1 ELSE 0 "
@@ -876,7 +849,7 @@ def hll_rolling_distinct(df: DataFrame, day_col: str = "day",
     # window width — precisely what the registers exist to avoid)
     d2 = hashes.select(F.col("day").alias("d2"), "h")
     exact = (days.join(d2, (F.col("d2") <= F.col("day"))
-                       & (F.col("d2") > F.col("day") - window_days))
+                       & (F.col("d2") > F.col("day") - HLL_WINDOW_DAYS))
                  .groupBy("day")
                  .agg(F.count_distinct("h").cast("long")
                        .alias("exact_distinct")))
@@ -886,20 +859,16 @@ def hll_rolling_distinct(df: DataFrame, day_col: str = "day",
                           est.alias("est_hll"), "exact_distinct"))
 
 
-def hll_rolling_distinct_sql(table: str = "events",
-                             day_expr: str | None = None,
-                             key_expr: str = "user_id",
-                             window_days: int = 7) -> str:
+def hll_rolling_distinct_sql() -> str:
     """DuckDB twin of `hll_rolling_distinct` (default: events days
     from epoch_us(ts))."""
-    day_expr = day_expr or "epoch_us(ts) // 86400000000"
     rcap, m = HLL_RCAP, HLL_M
     return f"""
 WITH hashes AS (
-  SELECT DISTINCT CAST({day_expr} AS BIGINT) AS day,
-         {h60_sql(key_expr)} AS h
-  FROM {table}
-  WHERE {key_expr} IS NOT NULL
+  SELECT DISTINCT CAST(epoch_us(ts) // 86400000000 AS BIGINT) AS day,
+         {h60_sql('user_id')} AS h
+  FROM events
+  WHERE user_id IS NOT NULL
 ),
 rhos AS (
   SELECT day, h % {m} AS bucket,
@@ -920,7 +889,7 @@ dense AS (
 windowed AS (
   SELECT day, bucket,
          max(reg) OVER (PARTITION BY bucket ORDER BY day
-                        RANGE BETWEEN {window_days - 1} PRECEDING
+                        RANGE BETWEEN {HLL_WINDOW_DAYS - 1} PRECEDING
                         AND CURRENT ROW) AS wreg
   FROM dense
 ),
@@ -935,7 +904,7 @@ summed AS (
 exact AS (
   SELECT d.day, CAST(count(DISTINCT h.h) AS BIGINT) AS exact_distinct
   FROM days d JOIN hashes h
-    ON h.day <= d.day AND h.day > d.day - {window_days}
+    ON h.day <= d.day AND h.day > d.day - {HLL_WINDOW_DAYS}
   GROUP BY 1
 )
 SELECT s.day, n_zero, sum_fp,

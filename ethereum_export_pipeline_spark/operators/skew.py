@@ -26,8 +26,7 @@ DEFAULT_SALTS = 16
 
 
 def with_salt(df: DataFrame, salt_src: str | Column | None = None,
-              n_salts: int = DEFAULT_SALTS,
-              salt_col: str = "__salt") -> DataFrame:
+              n_salts: int = DEFAULT_SALTS) -> DataFrame:
     """Deterministic salt in [0, n_salts) (NOT rand(): task retries
     must recompute the same salt or lineage recovery double-counts).
 
@@ -38,16 +37,16 @@ def with_salt(df: DataFrame, salt_src: str | Column | None = None,
         c = F.xxhash64(*[F.col(x) for x in df.columns])
     else:
         c = F.xxhash64(F.col(salt_src) if isinstance(salt_src, str) else salt_src)
-    return df.withColumn(salt_col, F.pmod(c, F.lit(n_salts)))
+    return df.withColumn("__salt", F.pmod(c, F.lit(n_salts)))
 
 
 def salted_agg(df: DataFrame, key: str, partials: list[tuple[Column, str]],
-               finals: list[tuple[Column, str]], salt_src: str | None = None,
-               n_salts: int = DEFAULT_SALTS) -> DataFrame:
+               finals: list[tuple[Column, str]],
+               salt_src: str | None = None) -> DataFrame:
     """Two-phase aggregate: phase 1 groups (key, salt) computing
     `partials` (each (expr, alias)); phase 2 groups key merging with
     `finals` (each (expr over the partial aliases, alias))."""
-    phase1 = (with_salt(df, salt_src, n_salts)
+    phase1 = (with_salt(df, salt_src)
               .groupBy(key, "__salt")
               .agg(*[e.alias(a) for e, a in partials]))
     return phase1.groupBy(key).agg(*[e.alias(a) for e, a in finals])

@@ -39,8 +39,8 @@ STOPWORDS = {
 TOKENS_COL = "toks"
 
 
-def with_tokens(df: DataFrame, text_col: str = "text") -> DataFrame:
-    return df.withColumn(TOKENS_COL, tokens(text_col))
+def with_tokens(df: DataFrame) -> DataFrame:
+    return df.withColumn(TOKENS_COL, tokens("text"))
 
 
 def _in_list(col: str, words: list[str]) -> str:
@@ -48,9 +48,7 @@ def _in_list(col: str, words: list[str]) -> str:
     return f"size(filter({col}, x -> x IN ({quoted})))"
 
 
-def language_id(df: DataFrame, id_col: str = "doc_id",
-                text_col: str = "text",
-                keep: tuple[str, ...] = ()) -> DataFrame:
+def language_id(df: DataFrame, keep: tuple[str, ...] = ()) -> DataFrame:
     """Stopword-vote language ID. Per language: count of tokens in its
     lexicon; prediction = argmax, ties broken by language code
     ascending, 'und' when no stopword hits at all.
@@ -58,11 +56,11 @@ def language_id(df: DataFrame, id_col: str = "doc_id",
     `keep` carries extra input columns through unchanged — the
     streaming crawl gate needs language + quality in ONE pass (a
     stream can't self-join on doc_id the way the batch funnel does)."""
-    d = with_tokens(df, text_col)
+    d = with_tokens(df)
     langs = sorted(STOPWORDS)  # tie-break order: code ascending
     hits = [F.expr(_in_list(TOKENS_COL, STOPWORDS[lg])).cast("long").alias(f"hits_{lg}")
             for lg in langs]
-    d = d.select(F.col(id_col), *hits, *[F.col(c) for c in keep])
+    d = d.select(F.col("doc_id"), *hits, *[F.col(c) for c in keep])
     best = F.greatest(*[F.col(f"hits_{lg}") for lg in langs])
     # CASE evaluates in code order, so listing languages ascending
     # implements the tie-break (first max wins).
@@ -71,26 +69,24 @@ def language_id(df: DataFrame, id_col: str = "doc_id",
         cases = cases.when((best > 0) & (F.col(f"hits_{lg}") == best), F.lit(lg))
     pred = cases.otherwise(F.lit("und"))
     return d.select(
-        id_col, pred.alias("pred_lang"),
+        "doc_id", pred.alias("pred_lang"),
         *[F.col(f"hits_{lg}") for lg in langs],
         *[F.col(c) for c in keep])
 
 
-def quality_score(df: DataFrame, id_col: str = "doc_id",
-                  text_col: str = "text",
-                  keep: tuple[str, ...] = ()) -> DataFrame:
+def quality_score(df: DataFrame, keep: tuple[str, ...] = ()) -> DataFrame:
     """Heuristic document quality: length, token stats, alnum ratio,
     stopword ratio, composite score. All ratios are double arithmetic
     over exact integers → engine-identical. `keep` carries extra
     input columns through unchanged (see `language_id`)."""
-    d = with_tokens(df, text_col)
-    n_chars = F.length(F.col(text_col)).cast("long")
+    d = with_tokens(df)
+    n_chars = F.length(F.col("text")).cast("long")
     n_tokens = F.size(F.col(TOKENS_COL)).cast("long")
     tok_chars = F.expr(f"aggregate({TOKENS_COL}, 0L, (a, x) -> a + length(x))")
-    alnum = F.length(F.regexp_replace(F.lower(F.col(text_col)), "[^a-z0-9]", ""))
+    alnum = F.length(F.regexp_replace(F.lower(F.col("text")), "[^a-z0-9]", ""))
     stop_hits = F.expr(_in_list(TOKENS_COL, STOPWORDS["en"])).cast("long")
     d = d.select(
-        F.col(id_col),
+        F.col("doc_id"),
         n_chars.alias("n_chars"),
         n_tokens.alias("n_tokens"),
         tok_chars.cast("long").alias("n_token_chars"),
@@ -110,7 +106,8 @@ def quality_score(df: DataFrame, id_col: str = "doc_id",
         + F.when((avg_tok >= 3.0) & (avg_tok <= 10.0), 0.25).otherwise(0.0)
     )
     return d.select(
-        id_col, "n_chars", "n_tokens", "n_token_chars", "n_alnum", "n_stopwords",
+        "doc_id", "n_chars", "n_tokens", "n_token_chars", "n_alnum",
+        "n_stopwords",
         avg_tok.alias("avg_token_len"),
         alnum_ratio.alias("alnum_ratio"),
         stop_ratio.alias("stopword_ratio"),
@@ -119,22 +116,20 @@ def quality_score(df: DataFrame, id_col: str = "doc_id",
     )
 
 
-def token_counts(df: DataFrame, id_col: str = "doc_id",
-                 text_col: str = "text") -> DataFrame:
+def token_counts(df: DataFrame) -> DataFrame:
     """Token counting two ways: whitespace split and a BPE-ish regex
     ([a-z0-9]+ word pieces), plus char length — the cheap
     size-accounting pass a training-data pipeline runs first."""
-    ws = F.expr(f"size(filter(split({text_col}, '\\\\s+'), x -> x <> ''))")
-    return with_tokens(df, text_col).select(
-        F.col(id_col),
-        F.length(text_col).cast("long").alias("n_chars"),
+    ws = F.expr("size(filter(split(text, '\\\\s+'), x -> x <> ''))")
+    return with_tokens(df).select(
+        F.col("doc_id"),
+        F.length("text").cast("long").alias("n_chars"),
         ws.cast("long").alias("ws_tokens"),
         F.size(F.col(TOKENS_COL)).cast("long").alias("re_tokens"),
     )
 
 
-def fingerprint(df: DataFrame, id_col: str = "doc_id",
-                text_col: str = "text") -> DataFrame:
+def fingerprint(df: DataFrame) -> DataFrame:
     """Order-sensitive document fingerprint: a positional polynomial
     hash over word tokens, fp = Σ_i ((i+1)·h32(tok_i)) mod p. Stays in
     [0, p); products < 2^51 and the running sum < 2^48 — exact int64
@@ -145,44 +140,44 @@ def fingerprint(df: DataFrame, id_col: str = "doc_id",
         f"((CAST(i + 1 AS BIGINT) * (CAST(conv(substring(md5(x), 1, 8), 16, 10) AS BIGINT) % {p})) % {p})"
         f"), 0L, (a, b) -> a + b) % {p}"
     )
-    return with_tokens(df, text_col).select(
-        F.col(id_col),
+    return with_tokens(df).select(
+        F.col("doc_id"),
         F.expr(expr).cast("long").alias("fingerprint"),
         F.size(F.col(TOKENS_COL)).cast("long").alias("re_tokens"),
     )
 
 
-def top_terms(df: DataFrame, id_col: str = "doc_id",
-              text_col: str = "text", k: int = 3) -> DataFrame:
+def top_terms(df: DataFrame, k: int = 3) -> DataFrame:
     """Keyword extraction: the k most frequent tokens per document,
     ties broken lexicographically (deterministic on both engines).
     Output: (id, term, n, rank). Explode → per-(doc,term) count →
     partitioned top-k window; the window shuffles on the doc key only."""
     from pyspark.sql import Window
     counts = (
-        spread(df).select(F.col(id_col), F.explode(tokens(text_col)).alias("term"))
-          .groupBy(id_col, "term")
+        spread(df).select(F.col("doc_id"),
+                          F.explode(tokens("text")).alias("term"))
+          .groupBy("doc_id", "term")
           .agg(F.count(F.lit(1)).alias("n"))
     )
-    w = (Window.partitionBy(id_col)
+    w = (Window.partitionBy("doc_id")
                .orderBy(F.col("n").desc(), F.col("term").asc()))
     return (counts.withColumn("rank", F.row_number().over(w).cast("long"))
                   .where(F.col("rank") <= k))
 
 
-def corpus_stats(df: DataFrame, id_col: str = "doc_id",
-                 text_col: str = "text") -> DataFrame:
+def corpus_stats(df: DataFrame) -> DataFrame:
     """One-row corpus accounting: documents, token volume, vocabulary
     size, exact-duplicate ratio — the first report a training-data
     pipeline prints. Two scans (token stats + dup grouping), both
     map-side-combining aggregates."""
-    toks = spread(df).select(F.col(id_col), F.explode(tokens(text_col)).alias("term"))
+    toks = spread(df).select(F.col("doc_id"),
+                             F.explode(tokens("text")).alias("term"))
     tok_stats = toks.agg(
         F.count(F.lit(1)).alias("total_tokens"),
         F.countDistinct("term").alias("vocab_size"))
     base = df.agg(
         F.count(F.lit(1)).alias("n_docs"),
-        F.countDistinct(F.md5(F.col(text_col))).alias("n_unique_texts"))
+        F.countDistinct(F.md5(F.col("text"))).alias("n_unique_texts"))
     return (base.crossJoin(tok_stats)
                 .withColumn("avg_doc_tokens",
                             F.col("total_tokens") / F.col("n_docs"))
@@ -201,8 +196,7 @@ PII_PATTERNS: list[tuple[str, str, str]] = [
 ]
 
 
-def pii_scrub(df: DataFrame, id_col: str = "doc_id",
-              text_col: str = "text") -> DataFrame:
+def pii_scrub(df: DataFrame) -> DataFrame:
     """PII redaction — the compliance pass every training-data
     pipeline runs before text ships: emails, phone numbers, and IPv4
     addresses replaced with typed placeholder tokens, plus a per-kind
@@ -212,44 +206,43 @@ def pii_scrub(df: DataFrame, id_col: str = "doc_id",
     Counts are measured per pattern on the ORIGINAL text (overlapping
     kinds would each count on pathological inputs); the scrub itself
     is sequential, so an earlier replacement wins on overlap."""
-    cleaned = F.col(text_col)
+    cleaned = F.col("text")
     counts = []
     for name, pat, repl in PII_PATTERNS:
         counts.append(
-            F.coalesce(F.size(F.regexp_extract_all(F.col(text_col),
+            F.coalesce(F.size(F.regexp_extract_all(F.col("text"),
                                                    F.lit(pat), 0)),
                        F.lit(0)).cast("long").alias(f"n_{name}"))
         cleaned = F.regexp_replace(cleaned, pat, repl)
-    return df.select(F.col(id_col), *counts, cleaned.alias("clean_text"))
+    return df.select(F.col("doc_id"), *counts, cleaned.alias("clean_text"))
 
 
-def repetition_stats(df: DataFrame, id_col: str = "doc_id",
-                     text_col: str = "text") -> DataFrame:
+def repetition_stats(df: DataFrame) -> DataFrame:
     """Repetition signals (the Gopher-style quality gates): duplicate-
     token ratio and the hottest token's frequency share, per document
     with at least one token. Explode → per-(doc,term) count → one
     per-doc aggregate; both group-bys shuffle on the doc key, ratios
     are single divisions over exact ints (engine-identical doubles)."""
     counts = (
-        spread(df).select(F.col(id_col), F.explode(tokens(text_col)).alias("term"))
-          .groupBy(id_col, "term")
+        spread(df).select(F.col("doc_id"),
+                          F.explode(tokens("text")).alias("term"))
+          .groupBy("doc_id", "term")
           .agg(F.count(F.lit(1)).alias("n"))
     )
-    per_doc = counts.groupBy(id_col).agg(
+    per_doc = counts.groupBy("doc_id").agg(
         F.sum("n").cast("long").alias("n_tokens"),
         F.count(F.lit(1)).cast("long").alias("n_distinct"),
         F.max("n").cast("long").alias("top_n"))
     total = F.col("n_tokens").cast("double")
     return per_doc.select(
-        id_col, "n_tokens", "n_distinct", "top_n",
+        "doc_id", "n_tokens", "n_distinct", "top_n",
         ((F.col("n_tokens") - F.col("n_distinct")) / total)
         .alias("dup_token_ratio"),
         (F.col("top_n") / total).alias("top_token_share"),
     )
 
 
-def chunk_tokens(df: DataFrame, id_col: str = "doc_id",
-                 text_col: str = "text", chunk: int = 64,
+def chunk_tokens(df: DataFrame, chunk: int = 64,
                  stride: int = 48) -> DataFrame:
     """Training-sample chunking: split each document's token sequence
     into overlapping windows of `chunk` tokens every `stride` tokens
@@ -270,13 +263,13 @@ def chunk_tokens(df: DataFrame, id_col: str = "doc_id",
           f"(CAST(conv(substring(md5(x), 1, 8), 16, 10) AS BIGINT) % {p})) % {p}"
           f"), 0L, (a, b) -> a + b) % {p}")
     return (
-        with_tokens(df, text_col)
-        .select(F.col(id_col), F.col(TOKENS_COL),
+        with_tokens(df)
+        .select(F.col("doc_id"), F.col(TOKENS_COL),
                 F.explode(F.expr(n_chunks)).alias("chunk_idx"))
         .withColumn("chunk", F.expr(
             f"slice({TOKENS_COL}, chunk_idx * {stride} + 1, {chunk})"))
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.col("chunk_idx").cast("long").alias("chunk_idx"),
             (F.col("chunk_idx") * stride).cast("long").alias("chunk_start"),
             F.size("chunk").cast("long").alias("n_chunk_tokens"),
@@ -285,8 +278,7 @@ def chunk_tokens(df: DataFrame, id_col: str = "doc_id",
     )
 
 
-def tfidf_top_terms(df: DataFrame, id_col: str = "doc_id",
-                    text_col: str = "text", k: int = 5) -> DataFrame:
+def tfidf_top_terms(df: DataFrame, k: int = 5) -> DataFrame:
     """Corpus-weighted keyword extraction: the k highest-TF-IDF terms
     per document. Unlike `top_terms` (raw frequency), the score folds
     in the corpus document frequency, so ubiquitous terms sink.
@@ -312,11 +304,11 @@ def tfidf_top_terms(df: DataFrame, id_col: str = "doc_id",
     dedup inverted index. n_docs is a 1-row broadcast cross join whose
     scan prunes to the text column with no tokenize."""
     from pyspark.sql import Window
-    tf = (spread(df.where(F.col(text_col).isNotNull()))
-            .select(F.col(id_col), F.explode(tokens(text_col)).alias("term"))
-            .groupBy(id_col, "term")
+    tf = (spread(df.where(F.col("text").isNotNull()))
+            .select(F.col("doc_id"), F.explode(tokens("text")).alias("term"))
+            .groupBy("doc_id", "term")
             .agg(F.count(F.lit(1)).alias("tf")))
-    n_docs = (df.where(F.col(text_col).isNotNull())
+    n_docs = (df.where(F.col("text").isNotNull())
                 .agg(F.count(F.lit(1)).alias("n_docs")))
     scored = (tf.withColumn("df",
                             F.count(F.lit(1)).over(Window.partitionBy("term")))
@@ -324,17 +316,16 @@ def tfidf_top_terms(df: DataFrame, id_col: str = "doc_id",
                 .withColumn("tfidf",
                             (F.col("tf") * F.col("n_docs")).cast("double")
                             / F.col("df")))
-    w = (Window.partitionBy(id_col)
+    w = (Window.partitionBy("doc_id")
                .orderBy(F.col("tfidf").desc(), F.col("term").asc()))
     return (scored.withColumn("rank", F.row_number().over(w).cast("long"))
                   .where(F.col("rank") <= k)
-                  .select(id_col, "term", F.col("tf").cast("long").alias("tf"),
+                  .select("doc_id", "term", F.col("tf").cast("long").alias("tf"),
                           F.col("df").cast("long").alias("df"),
                           "tfidf", "rank"))
 
 
-def pack_sequences(df: DataFrame, id_col: str = "doc_id",
-                   text_col: str = "text", seq_len: int = 256,
+def pack_sequences(df: DataFrame, seq_len: int = 256,
                    bucket: int = 1024) -> DataFrame:
     """Sequence packing for training batches: lay every document's
     tokens end-to-end in id order and cut the stream into fixed
@@ -356,10 +347,10 @@ def pack_sequences(df: DataFrame, id_col: str = "doc_id",
     which AQE reuses (its subtree carries no aggregate buffers), so
     the corpus is scanned and tokenized exactly once."""
     from pyspark.sql import Window
-    n = (with_tokens(df.where(F.col(text_col).isNotNull()), text_col)
-         .select(F.col(id_col),
+    n = (with_tokens(df.where(F.col("text").isNotNull()))
+         .select(F.col("doc_id"),
                  F.size(F.col(TOKENS_COL)).cast("long").alias("n_tokens"),
-                 F.expr(f"CAST({id_col} AS BIGINT) div {bucket}")
+                 F.expr(f"CAST(doc_id AS BIGINT) div {bucket}")
                  .alias("_bkt"))
          # explicit, though implied by the join: with it BOTH consumers
          # of the bucket exchange (per-bucket window, bucket totals)
@@ -367,7 +358,7 @@ def pack_sequences(df: DataFrame, id_col: str = "doc_id",
          # it the join branch alone gets an inferred isnotnull(_bkt)
          # and the corpus is scanned+tokenized twice
          .where(F.col("_bkt").isNotNull()))
-    w_local = (Window.partitionBy("_bkt").orderBy(id_col)
+    w_local = (Window.partitionBy("_bkt").orderBy("doc_id")
                      .rowsBetween(Window.unboundedPreceding, -1))
     local = n.withColumn(
         "_local_before",
@@ -385,7 +376,7 @@ def pack_sequences(df: DataFrame, id_col: str = "doc_id",
                                (F.col("_bkt_before") + F.col("_local_before"))
                                .cast("long")))
     return packed.select(
-        id_col, "n_tokens", "global_start",
+        "doc_id", "n_tokens", "global_start",
         F.expr(f"global_start div {seq_len}").cast("long").alias("bin_id"),
         (F.col("global_start") % seq_len).cast("long").alias("bin_offset"),
         F.when(F.col("n_tokens") == 0, F.lit(0)).otherwise(
@@ -394,32 +385,30 @@ def pack_sequences(df: DataFrame, id_col: str = "doc_id",
          .cast("long").alias("n_bins"))
 
 
-def mix_sample(df: DataFrame, id_col: str = "doc_id",
-               source_col: str = "source", salt: str = "mix-v1",
-               rate_salt: str = "rate-v1") -> DataFrame:
+def mix_sample(df: DataFrame) -> DataFrame:
     """Stratified deterministic sampling — the data-mixing step that
     downweights or upweights sources when composing a training corpus.
     Each stratum (source) gets a keep rate in [10, 99]% derived from a
     salted hash of its name (stands in for a configured weights table
     — swap `rate_pct` for a broadcast-joined dim to use real weights);
     each document keeps or drops by its own salted hash against that
-    rate. Same salt → same sample, across runs, machines, and engines.
+    rate. Same salts ("rate-v1", "mix-v1") → same sample, across runs,
+    machines, and engines.
 
     Scale notes: two codegen'd md5 projections and a filter — no
     shuffle, no state, no sampling RNG (rand() would break retry
     determinism); composes with any upstream dedup/quality gate."""
     from ..functions import h32
-    rate = (h32(F.concat(F.lit(rate_salt + ":"), F.col(source_col))) % 90
+    rate = (h32(F.concat(F.lit("rate-v1:"), F.col("source"))) % 90
             + 10).cast("long")
-    keep = h32(F.concat(F.lit(salt + ":"), F.col(id_col).cast("string"))) % 100
-    return (df.select(F.col(id_col), F.col(source_col),
+    keep = h32(F.concat(F.lit("mix-v1:"), F.col("doc_id").cast("string"))) % 100
+    return (df.select(F.col("doc_id"), F.col("source"),
                       rate.alias("rate_pct"), keep.alias("_keep"))
               .where(F.col("_keep") < F.col("rate_pct"))
               .drop("_keep"))
 
 
-def hash_split(df: DataFrame, id_col: str = "doc_id",
-               salt: str = "split-v1", train_pct: int = 90) -> DataFrame:
+def hash_split(df: DataFrame, salt: str = "split-v1") -> DataFrame:
     """Deterministic train/val holdout assignment: hash the document
     id (salted, so re-splitting with a new salt is a one-line change)
     and bucket by percentile. Reproducible across runs, machines, and
@@ -429,17 +418,14 @@ def hash_split(df: DataFrame, id_col: str = "doc_id",
     Scale notes: pure projection (md5 + modulo, JVM codegen), no
     shuffle, no state; composes with any upstream filter/dedup."""
     from ..functions import h32
-    h = h32(F.concat(F.lit(salt + ":"), F.col(id_col).cast("string")))
+    h = h32(F.concat(F.lit(salt + ":"), F.col("doc_id").cast("string")))
     return df.select(
-        F.col(id_col),
-        F.when(h % 100 < train_pct, "train").otherwise("val").alias("split"),
+        F.col("doc_id"),
+        F.when(h % 100 < 90, "train").otherwise("val").alias("split"),
     )
 
 
-def leakage_split(df: DataFrame, clusters: DataFrame,
-                  id_col: str = "doc_id",
-                  salt: str = "gsplit-v1",
-                  train_pct: int = 90) -> DataFrame:
+def leakage_split(df: DataFrame, clusters: DataFrame) -> DataFrame:
     """LEAKAGE-SAFE train/val split — the correctness upgrade over
     `hash_split` that eval-set hygiene actually requires: hashing raw
     doc ids puts two near-duplicates on opposite sides of the split
@@ -452,32 +438,31 @@ def leakage_split(df: DataFrame, clusters: DataFrame,
     member's. Singletons (docs in no cluster) fall back to their own
     id — for them the group IS the doc.
 
-    `clusters` is any (id_col, cluster_id) frame — typically
+    `clusters` is any (doc_id, cluster_id) frame — typically
     `connected_components` over MinHash-LSH pairs, but anything
     group-shaped works (URL-normalized dup groups, exact-hash groups).
-    Output: (id_col, group_id, split).
+    Output: (doc_id, group_id, split).
 
     Scale shape: one left equi-join corpus ⋈ clusters on the id key —
     the cluster frame is dup-graph-sized (usually ≪ corpus; AQE picks
     broadcast vs shuffle), then the same pure-projection salted-hash
     bucketing as `hash_split`. No extra exchange beyond the join."""
     from ..functions import h32
-    joined = (df.select(F.col(id_col))
-                .join(clusters.select(F.col(id_col),
+    joined = (df.select(F.col("doc_id"))
+                .join(clusters.select(F.col("doc_id"),
                                       F.col("cluster_id")),
-                      id_col, "left")
-                .select(F.col(id_col),
-                        F.coalesce(F.col("cluster_id"), F.col(id_col))
+                      "doc_id", "left")
+                .select(F.col("doc_id"),
+                        F.coalesce(F.col("cluster_id"), F.col("doc_id"))
                          .cast("long").alias("group_id")))
-    h = h32(F.concat(F.lit(salt + ":"), F.col("group_id").cast("string")))
+    h = h32(F.concat(F.lit("gsplit-v1:"), F.col("group_id").cast("string")))
     return joined.select(
-        id_col, "group_id",
-        F.when(h % 100 < train_pct, "train").otherwise("val").alias("split"),
+        "doc_id", "group_id",
+        F.when(h % 100 < 90, "train").otherwise("val").alias("split"),
     )
 
 
-def token_rarity(df: DataFrame, id_col: str = "doc_id",
-                 text_col: str = "text") -> DataFrame:
+def token_rarity(df: DataFrame) -> DataFrame:
     """Corpus-relative rarity signal per document (the cheap stand-in
     for an LM-perplexity quality score, CCNet-style): document
     frequency of each of the doc's distinct tokens, aggregated to
@@ -494,24 +479,22 @@ def token_rarity(df: DataFrame, id_col: str = "doc_id",
     mean_df is the single double division over exact BIGINTs
     (cross-engine exact)."""
     tok = spread(df).select(
-        F.col(id_col),
-        F.explode(F.array_distinct(tokens(text_col))).alias("tok"))
+        F.col("doc_id"),
+        F.explode(F.array_distinct(tokens("text"))).alias("tok"))
     dfreq = tok.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
     return (
         tok.join(dfreq, "tok")
-           .groupBy(id_col)
+           .groupBy("doc_id")
            .agg(F.count(F.lit(1)).alias("n_distinct_toks"),
                 F.sum("df").alias("sum_df"),
                 F.sum((F.col("df") == 1).cast("long")).alias("n_hapax"))
-           .select(id_col, "n_distinct_toks", "sum_df", "n_hapax",
+           .select("doc_id", "n_distinct_toks", "sum_df", "n_hapax",
                    (F.col("sum_df").cast("double")
                     / F.col("n_distinct_toks")).alias("mean_df"))
     )
 
 
-def duplicated_sentences(df: DataFrame, id_col: str = "doc_id",
-                         text_col: str = "text",
-                         min_chars: int = 20) -> DataFrame:
+def duplicated_sentences(df: DataFrame, min_chars: int = 20) -> DataFrame:
     """Sub-document exact dedup: sentences (split on '.') that occur
     in ≥2 distinct documents — the signal behind boilerplate /
     template removal (headers, disclaimers, navigation chrome repeat
@@ -524,27 +507,25 @@ def duplicated_sentences(df: DataFrame, id_col: str = "doc_id",
     HAVING on the aggregate, so singleton sentences — the vast
     majority — die in the combiner."""
     sent = (
-        spread(df).select(F.col(id_col),
-                  F.explode(F.split(F.col(text_col), "[.]")).alias("s"))
-          .select(id_col, F.trim(F.lower(F.col("s"))).alias("s"))
+        spread(df).select(F.col("doc_id"),
+                  F.explode(F.split(F.col("text"), "[.]")).alias("s"))
+          .select("doc_id", F.trim(F.lower(F.col("s"))).alias("s"))
           .where(F.length("s") >= min_chars)
-          .select(id_col, F.md5("s").alias("sent_key"))
+          .select("doc_id", F.md5("s").alias("sent_key"))
     )
     return (
         sent.groupBy("sent_key")
             .agg(F.count(F.lit(1)).alias("n_occ"),
-                 F.countDistinct(id_col).alias("n_docs"),
-                 F.min(id_col).alias("first_doc"))
+                 F.countDistinct("doc_id").alias("n_docs"),
+                 F.min("doc_id").alias("first_doc"))
             .where(F.col("n_docs") >= 2)
             .select("sent_key", "n_docs", "n_occ", "first_doc")
     )
 
 
-def length_order_stats(df: DataFrame, id_col: str = "doc_id",
-                       len_col: str = "n_chars",
-                       by_col: str = "source") -> DataFrame:
+def length_order_stats(df: DataFrame) -> DataFrame:
     """Per-source length distribution as EXACT order statistics —
-    min / p25 / p50 / p75 / max of `len_col` at index
+    min / p25 / p50 / p75 / max of `n_chars` at index
     floor((n-1)·p) of the ascending sort. Interpolating percentile
     functions differ subtly between engines (and approx_percentile is
     nondeterministic by design), so the quantile is defined by integer
@@ -557,12 +538,12 @@ def length_order_stats(df: DataFrame, id_col: str = "doc_id",
     rows per task — at 100 TB swap the global sort-per-stratum for a
     two-pass histogram if a single source dominates."""
     from pyspark.sql import Window
-    w_rank = (Window.partitionBy(by_col)
-                    .orderBy(F.col(len_col).asc(), F.col(id_col).asc()))
-    w_all = Window.partitionBy(by_col)
+    w_rank = (Window.partitionBy("source")
+                    .orderBy(F.col("n_chars").asc(), F.col("doc_id").asc()))
+    w_all = Window.partitionBy("source")
     ranked = (
-        df.select(by_col, id_col, len_col)
-          .where(F.col(len_col).isNotNull())
+        df.select("source", "doc_id", "n_chars")
+          .where(F.col("n_chars").isNotNull())
           .withColumn("rn", F.row_number().over(w_rank) - 1)
           .withColumn("n", F.count(F.lit(1)).over(w_all))
     )
@@ -570,33 +551,31 @@ def length_order_stats(df: DataFrame, id_col: str = "doc_id",
     def at(pct: int) -> Column:
         # integer index arithmetic (div), never float-divide-then-floor
         idx = F.expr(f"((n - 1) * {pct}) div 100")
-        return F.max(F.when(F.col("rn") == idx, F.col(len_col)))
+        return F.max(F.when(F.col("rn") == idx, F.col("n_chars")))
 
     return (
-        ranked.groupBy(by_col)
+        ranked.groupBy("source")
               .agg(F.max("n").alias("n_docs"),
-                   F.min(len_col).alias("len_min"),
+                   F.min("n_chars").alias("len_min"),
                    at(25).alias("len_p25"),
                    at(50).alias("len_p50"),
                    at(75).alias("len_p75"),
-                   F.max(len_col).alias("len_max"))
+                   F.max("n_chars").alias("len_max"))
     )
 
 
 PPB = 1_000_000_000  # parts-per-billion fixed point for drift freqs
 
 
-def token_drift(df: DataFrame, id_col: str = "doc_id",
-                text_col: str = "text",
-                side_col=None) -> DataFrame:
+def token_drift(df: DataFrame) -> DataFrame:
     """Token-distribution drift between two corpus slices — the
     DISTRIBUTION-level monitor that complements `snapshot_diff`'s
     row-level one (a refreshed crawl can keep every doc_id yet shift
     its language mix; per-row diffs won't see it, frequency drift
     will).
 
-    `side_col` is a 0/1 Column splitting the corpus (default:
-    doc_id parity, standing in for snapshot tags). Per token:
+    The corpus splits into two sides by doc_id parity, standing in
+    for snapshot tags. Per token:
     occurrence counts in each side, fixed-point ppb frequencies
     (freq = cnt·1e9 div side_total — truncating division, engine-
     identical), and `drift_ppb` = |freq_a − freq_b|. Σ drift_ppb / 2
@@ -611,9 +590,8 @@ def token_drift(df: DataFrame, id_col: str = "doc_id",
     vocabulary-sized count table and enter as a broadcast cross join
     (2 ints). At 100 TB the bill is the token-key exchange, same as
     tf-idf's, bounded by vocabulary size after map-side combine."""
-    side = side_col if side_col is not None \
-        else (F.col(id_col) % 2 == 0).cast("int")
-    occ = (with_tokens(spread(df.where(F.col(text_col).isNotNull())), text_col)
+    side = (F.col("doc_id") % 2 == 0).cast("int")
+    occ = (with_tokens(spread(df.where(F.col("text").isNotNull())))
            .select(side.alias("_a"), F.explode(TOKENS_COL).alias("tok")))
     counts = (occ.groupBy("tok")
                  .agg(F.sum("_a").cast("long").alias("cnt_a"),
@@ -635,8 +613,7 @@ BM25_TOPK = 20
 BM25_QTERMS = 3
 
 
-def bm25_topk(df: DataFrame, id_col: str = "doc_id",
-              text_col: str = "text", k: int = BM25_TOPK,
+def bm25_topk(df: DataFrame, k: int = BM25_TOPK,
               n_query_terms: int = BM25_QTERMS) -> DataFrame:
     """BM25-shaped retrieval scoring in EXACT fixed-point integers —
     the lexical-search counterpart of the ANN tier (the other half of
@@ -687,18 +664,18 @@ def bm25_topk(df: DataFrame, id_col: str = "doc_id",
     corpus, unlike the window it replaces. The two-window form is the
     measured keeper at both sf0.1 and ×10."""
     from pyspark.sql import Window
-    tf = (spread(df.where(F.col(text_col).isNotNull()))
-            .select(F.col(id_col), F.explode(tokens(text_col)).alias("term"))
-            .groupBy(id_col, "term")
+    tf = (spread(df.where(F.col("text").isNotNull()))
+            .select(F.col("doc_id"), F.explode(tokens("text")).alias("term"))
+            .groupBy("doc_id", "term")
             .agg(F.count(F.lit(1)).alias("tf")))
-    tot = (spread(df.where(F.col(text_col).isNotNull()))
+    tot = (spread(df.where(F.col("text").isNotNull()))
            .agg(F.count(F.lit(1)).cast("long").alias("n"),
-                F.sum(F.size(tokens(text_col))).cast("long")
+                F.sum(F.size(tokens("text"))).cast("long")
                  .alias("t_tokens")))
     stats = (tf.withColumn("df", F.count(F.lit(1)).over(
                  Window.partitionBy("term")).cast("long"))
                .withColumn("dl", F.sum("tf").over(
-                 Window.partitionBy(id_col)).cast("long")))
+                 Window.partitionBy("doc_id")).cast("long")))
     qterms = (stats.select("term", "df").distinct()
                    .withColumn("_qr", F.row_number().over(
                        Window.orderBy(F.col("df").desc(),
@@ -712,20 +689,19 @@ def bm25_topk(df: DataFrame, id_col: str = "doc_id",
                        "(20 * t_tokens * tf + 6 * t_tokens + 18 * dl * n)"))
                    .withColumn("contrib",
                                F.expr("(sat_ppm * n) div df")))
-    agg = (scored.groupBy(id_col)
+    agg = (scored.groupBy("doc_id")
                  .agg(F.count(F.lit(1)).cast("long").alias("n_hit_terms"),
                       F.max("dl").alias("dl"),
                       F.expr("CAST(sum(contrib) AS BIGINT)").alias("score")))
     # orderBy+limit plans as TakeOrderedAndProject (per-partition
     # top-k + driver merge); the rank window then runs over the k
     # surviving rows only — never a global sort of the match set
-    top = agg.orderBy(F.col("score").desc(), F.col(id_col).asc()).limit(k)
-    w = Window.orderBy(F.col("score").desc(), F.col(id_col).asc())
+    top = agg.orderBy(F.col("score").desc(), F.col("doc_id").asc()).limit(k)
+    w = Window.orderBy(F.col("score").desc(), F.col("doc_id").asc())
     return top.withColumn("rank", F.row_number().over(w).cast("long"))
 
 
-def bigram_fluency(df: DataFrame, id_col: str = "doc_id",
-                   text_col: str = "text") -> DataFrame:
+def bigram_fluency(df: DataFrame) -> DataFrame:
     """Corpus-conditional bigram typicality score per document — the
     n-gram-LM quality signal of CCNet-style pipelines (Wenzek et al.
     2020 score documents with a KenLM 5-gram; the statistic here is
@@ -756,31 +732,28 @@ def bigram_fluency(df: DataFrame, id_col: str = "doc_id",
     way hot terms skew tf-idf's df window — the same salt/df-cut
     mitigations apply."""
     from pyspark.sql import Window
-    bg = (with_tokens(spread(df.where(F.col(text_col).isNotNull())), text_col)
+    bg = (with_tokens(spread(df.where(F.col("text").isNotNull())))
           .where(F.size(TOKENS_COL) >= 2)
-          .select(F.col(id_col),
+          .select(F.col("doc_id"),
                   F.explode(F.expr(
                       f"transform(sequence(0, size({TOKENS_COL}) - 2), "
                       f"i -> struct({TOKENS_COL}[i] AS w1, "
                       f"{TOKENS_COL}[i+1] AS w2))")).alias("b"))
-          .select(id_col, "b.w1", "b.w2"))
+          .select("doc_id", "b.w1", "b.w2"))
     stats = (bg.withColumn("c2", F.count(F.lit(1)).over(
                   Window.partitionBy("w1", "w2")).cast("long"))
                .withColumn("c1", F.count(F.lit(1)).over(
                   Window.partitionBy("w1")).cast("long")))
-    return (stats.groupBy(id_col)
+    return (stats.groupBy("doc_id")
                  .agg(F.count(F.lit(1)).cast("long").alias("n_bigrams"),
                       F.expr(f"CAST(sum(c2 * {PPB} div c1) AS BIGINT)")
                        .alias("sum_prob_ppb"))
-                 .select(id_col, "n_bigrams", "sum_prob_ppb",
+                 .select("doc_id", "n_bigrams", "sum_prob_ppb",
                          F.expr("sum_prob_ppb div n_bigrams")
                           .alias("fluency_ppb")))
 
 
-def weighted_sample(df: DataFrame, id_col: str = "doc_id",
-                    weight_col: str = "n_chars",
-                    target_ppb: int = 100_000_000,
-                    salt: str = "wsample-v1") -> DataFrame:
+def weighted_sample(df: DataFrame, target_ppb: int = 100_000_000) -> DataFrame:
     """Deterministic WEIGHTED (Poisson) sampling — inclusion
     probability proportional to a per-row weight, the sampling design
     behind length-proportional corpus subsets and importance-weighted
@@ -792,7 +765,7 @@ def weighted_sample(df: DataFrame, id_col: str = "doc_id",
         p_i = min(1, f · w_i / mean(w))      with f = target_ppb/1e9,
     computed in truncating fixed point (p_ppb = w·target_ppb div
     mean_w, capped at 1e9), so E[sample weight share] ≈ f and heavy
-    rows are proportionally favored. The coin is `h60(salt:id) mod
+    rows are proportionally favored. The coin is `h60(wsample-v1:id) mod
     1e9` — uniform on [0,1e9) up to a 2^-60-level bias from 2^60 not
     dividing 1e9, identical in both engines (documented, not a
     correctness risk). Returns the kept rows as (id, w, p_ppb).
@@ -805,24 +778,23 @@ def weighted_sample(df: DataFrame, id_col: str = "doc_id",
     Poisson sampling is the standard scale substitute and what
     VarOpt/priority sampling degrade to per-partition.)"""
     from ..functions import h60
-    base = (df.where(F.col(weight_col).isNotNull()
-                     & (F.col(weight_col) > 0))
-              .select(F.col(id_col), F.col(weight_col).cast("long")
+    base = (df.where(F.col("n_chars").isNotNull()
+                     & (F.col("n_chars") > 0))
+              .select(F.col("doc_id"), F.col("n_chars").cast("long")
                        .alias("w")))
     tot = base.agg(F.expr("CAST(sum(w) AS BIGINT)").alias("tw"),
                    F.count(F.lit(1)).cast("long").alias("n"))
-    coin = h60(F.concat(F.lit(salt + ":"),
-                        F.col(id_col).cast("string"))) % PPB
+    coin = h60(F.concat(F.lit("wsample-v1:"),
+                        F.col("doc_id").cast("string"))) % PPB
     return (base.crossJoin(F.broadcast(tot))
                 .withColumn("p_ppb",
                             F.expr(f"least(CAST({PPB} AS BIGINT), "
                                    f"w * {target_ppb} div (tw div n))"))
                 .where(coin < F.col("p_ppb"))
-                .select(id_col, "w", "p_ppb"))
+                .select("doc_id", "w", "p_ppb"))
 
 
-def stratified_reservoir(df: DataFrame, id_col: str = "doc_id",
-                         stratum_col: str = "source", k: int = 5,
+def stratified_reservoir(df: DataFrame, k: int = 5,
                          salt: str = "reservoir-v1") -> DataFrame:
     """EXACT-k-per-stratum deterministic sample — the fixed-size
     counterpart of `mix_sample` (rate-based) and `weighted_sample`
@@ -842,22 +814,21 @@ def stratified_reservoir(df: DataFrame, id_col: str = "doc_id",
     exchange is the group-by any per-stratum statistic pays.)"""
     from pyspark.sql import Window
     from ..functions import h60
-    coin = h60(F.concat(F.lit(salt + ":"), F.col(id_col).cast("string")))
-    return (df.where(F.col(stratum_col).isNotNull())
-              .select(F.col(stratum_col).alias("stratum"),
-                      F.col(id_col), coin.alias("_coin"))
+    coin = h60(F.concat(F.lit(salt + ":"), F.col("doc_id").cast("string")))
+    return (df.where(F.col("source").isNotNull())
+              .select(F.col("source").alias("stratum"),
+                      F.col("doc_id"), coin.alias("_coin"))
               .withColumn("pick", F.row_number().over(
                   Window.partitionBy("stratum")
                         .orderBy(F.col("_coin").asc(),
-                                 F.col(id_col).asc())).cast("long"))
+                                 F.col("doc_id").asc())).cast("long"))
               .where(F.col("pick") <= k)
-              .select("stratum", id_col, "pick"))
+              .select("stratum", "doc_id", "pick"))
 
 
 BPE_ROUNDS = 6
 
-def bpe_train(df: DataFrame, text_col: str = "text",
-              rounds: int = BPE_ROUNDS) -> DataFrame:
+def bpe_train(df: DataFrame, rounds: int = BPE_ROUNDS) -> DataFrame:
     """BPE tokenizer-merge training (Sennrich et al. 2016) as an
     iterative DataFrame computation — the TOKENIZER-side artifact of
     a training-data pipeline, next to the corpus-side gates: learn
@@ -900,8 +871,8 @@ def bpe_train(df: DataFrame, text_col: str = "text",
     from pyspark.sql import types as T
     from ..functions import tokens
     words = checkpoint(
-        spread(df.where(F.col(text_col).isNotNull()))
-        .select(F.explode(tokens(text_col)).alias("word"))
+        spread(df.where(F.col("text").isNotNull()))
+        .select(F.explode(tokens("text")).alias("word"))
         .groupBy("word")
         .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
         .select(F.expr("concat(' ', regexp_replace(word, '(.)', "
@@ -938,9 +909,7 @@ def bpe_train(df: DataFrame, text_col: str = "text",
     return spark.createDataFrame(merge_rows, schema)
 
 
-def bpe_encode_counts(df: DataFrame, text_col: str = "text",
-                      id_col: str = "doc_id",
-                      rounds: int = BPE_ROUNDS,
+def bpe_encode_counts(df: DataFrame, rounds: int = BPE_ROUNDS,
                       merges: list | None = None) -> DataFrame:
     """Apply the corpus-trained BPE merges back to the corpus and
     account per-document BPE token counts — the other half of the
@@ -966,27 +935,26 @@ def bpe_encode_counts(df: DataFrame, text_col: str = "text",
     re-runs the training job `doc_bpe_merges` already ran."""
     from ..functions import tokens
     if merges is None:
-        merges = (bpe_train(df, text_col, rounds)
+        merges = (bpe_train(df, rounds=rounds)
                   .orderBy("round").collect())
     expr = "concat(' ', regexp_replace(word, '(.)', '$1 '))"
     for m in merges:
         expr = (f"replace({expr}, ' {m.x} {m.y} ', ' {m.x}{m.y} ')")
-    occ = (df.where(F.col(text_col).isNotNull())
-             .select(F.col(id_col), F.explode(tokens(text_col))
+    occ = (df.where(F.col("text").isNotNull())
+             .select(F.col("doc_id"), F.explode(tokens("text"))
                       .alias("word")))
     word_map = (occ.select("word").distinct()
                    .select("word",
                            F.expr(f"size(split(trim({expr}), ' '))")
                             .cast("long").alias("n_sym")))
     return (occ.join(F.broadcast(word_map), "word")
-               .groupBy(id_col)
+               .groupBy("doc_id")
                .agg(F.count(F.lit(1)).cast("long").alias("n_words"),
                     F.expr("CAST(sum(n_sym) AS BIGINT)")
                      .alias("n_bpe_tokens")))
 
 
-def shingle_novelty(df: DataFrame, id_col: str = "doc_id",
-                    text_col: str = "text") -> DataFrame:
+def shingle_novelty(df: DataFrame) -> DataFrame:
     """Ordered-corpus novelty — the dedup-ROI estimator: treating
     doc_id as ingestion order, what fraction of each document's
     shingles has ALREADY appeared in an earlier document? A corpus
@@ -1005,21 +973,21 @@ def shingle_novelty(df: DataFrame, id_col: str = "doc_id",
     roll-up exchanges on the doc key. No joins, two exchanges."""
     from pyspark.sql import Window
     from ..operators.dedup import shingles
-    sh = shingles(spread(df.select(id_col, text_col)), id_col, text_col)
+    sh = shingles(spread(df.select("doc_id", "text")))
     w = Window.partitionBy("shingle")
-    flagged = sh.withColumn("first_seen", F.min(id_col).over(w))
-    return (flagged.groupBy(id_col)
+    flagged = sh.withColumn("first_seen", F.min("doc_id").over(w))
+    return (flagged.groupBy("doc_id")
             .agg(F.count(F.lit(1)).cast("long").alias("n_shingles"),
-                 F.expr(f"CAST(sum(CASE WHEN first_seen < {id_col} "
+                 F.expr("CAST(sum(CASE WHEN first_seen < doc_id "
                         "THEN 1 ELSE 0 END) AS BIGINT)")
                   .alias("n_redundant"))
-            .select(id_col, "n_shingles", "n_redundant",
+            .select("doc_id", "n_shingles", "n_redundant",
                     F.expr("(n_shingles - n_redundant) * 1000000 "
                            "div n_shingles").alias("novelty_ppm")))
 
 
-def collocations(df: DataFrame, text_col: str = "text",
-                 min_count: int = 5, top_k: int = 100) -> DataFrame:
+def collocations(df: DataFrame, min_count: int = 5,
+                 top_k: int = 100) -> DataFrame:
     """Corpus collocation extraction — top-k bigrams by POINTWISE
     MUTUAL INFORMATION lift: lift(x,y) = p(xy) / (p(x·)·p(·y)), with
     positional marginals (x as bigram-first, y as bigram-second).
@@ -1046,7 +1014,7 @@ def collocations(df: DataFrame, text_col: str = "text",
     global window) over candidates surviving the min_count cut —
     at web scale the cut is what keeps that input small."""
     from pyspark.sql import Window
-    bg = (with_tokens(spread(df.where(F.col(text_col).isNotNull())), text_col)
+    bg = (with_tokens(spread(df.where(F.col("text").isNotNull())))
           .where(F.size(TOKENS_COL) >= 2)
           .select(F.explode(F.expr(
                       f"transform(sequence(0, size({TOKENS_COL}) - 2), "
@@ -1073,8 +1041,7 @@ def collocations(df: DataFrame, text_col: str = "text",
                  .select("w1", "w2", "n_xy", "n_x", "n_y", "lift", "rank"))
 
 
-def mixture_weights(df: DataFrame, group_col: str = "source",
-                    budget: int = 1_000_000) -> DataFrame:
+def mixture_weights(df: DataFrame, budget: int = 1_000_000) -> DataFrame:
     """Training-mix apportionment — temperature-flattened sampling
     targets per source with EXACT integer budget accounting: the step
     between "we have n_i documents per source" and "sample exactly
@@ -1096,22 +1063,22 @@ def mixture_weights(df: DataFrame, group_col: str = "source",
     map-side combined); everything after runs on the sources-sized
     frame (two unpartitioned windows over ≤ thousands of rows)."""
     from pyspark.sql import Window
-    counts = (df.where(F.col(group_col).isNotNull())
-                .groupBy(group_col)
+    counts = (df.where(F.col("source").isNotNull())
+                .groupBy("source")
                 .agg(F.count(F.lit(1)).cast("long").alias("n_docs"))
                 .withColumn("weight", F.expr(
                     "CAST(floor(sqrt(CAST(n_docs AS DOUBLE))) AS BIGINT)")))
     wall = Window.rowsBetween(Window.unboundedPreceding,
                               Window.unboundedFollowing)
     wrem = Window.orderBy(F.expr(f"(weight * {budget}) % total_w").desc(),
-                          F.col(group_col).asc())
+                          F.col("source").asc())
     return (counts
             .withColumn("total_w", F.sum("weight").over(wall).cast("long"))
             .withColumn("quota", F.expr(f"weight * {budget} div total_w"))
             .withColumn("n_left",
                         F.lit(budget) - F.sum("quota").over(wall))
             .withColumn("seat_rank", F.row_number().over(wrem))
-            .select(group_col, "n_docs", "weight",
+            .select("source", "n_docs", "weight",
                     F.expr("CAST(quota + CASE WHEN seat_rank <= n_left "
                            "THEN 1 ELSE 0 END AS BIGINT)")
                      .alias("target_docs")))
@@ -1123,8 +1090,7 @@ CLF_BUCKETS = 64
 CLF_BIAS = -1_500          # milli-units: threshold ≈ 1.5 mean weight
 
 
-def classifier_weights(n_buckets: int = CLF_BUCKETS,
-                       seed: int = 41) -> list[int]:
+def classifier_weights() -> list[int]:
     """Deterministic fixed-point weight table for the hashing-trick
     classifier, in milli-units ∈ [-500, 500] via the same fixed LCG
     as `functions.hash_family`. In production these weights come from
@@ -1133,20 +1099,17 @@ def classifier_weights(n_buckets: int = CLF_BUCKETS,
     the INFERENCE plan — the part that runs at 100 TB — is real and
     hash-verifiable. Swapping in trained weights changes only this
     list."""
-    w, x = [], seed
-    for _ in range(n_buckets):
+    w, x = [], 41  # LCG seed
+    for _ in range(CLF_BUCKETS):
         x = (x * 1_103_515_245 + 12_345) % MERSENNE31
         w.append(x % 1001 - 500)
     return w
 
 
-def classifier_score(df: DataFrame, id_col: str = "doc_id",
-                     text_col: str = "text",
-                     n_buckets: int = CLF_BUCKETS,
-                     bias: int = CLF_BIAS) -> DataFrame:
+def classifier_score(df: DataFrame) -> DataFrame:
     """Hashing-trick linear text-classifier INFERENCE (the fastText /
-    Vowpal-Wabbit shape): each token hashes to one of `n_buckets`
-    weight slots, logit = bias + Σ w[h(tok) mod B] in exact
+    Vowpal-Wabbit shape): each token hashes to one of `CLF_BUCKETS`
+    weight slots, logit = CLF_BIAS + Σ w[h(tok) mod B] in exact
     fixed-point milli-units (BIGINT — floats would make the sum
     order-sensitive), verdict = sign. This is the quality-classifier
     gate of a pretraining pipeline (keep/drop per doc) with the model
@@ -1157,14 +1120,14 @@ def classifier_score(df: DataFrame, id_col: str = "doc_id",
     one `aggregate` lambda over the token array; no explode, no
     shuffle, no UDF. Per-doc cost is O(tokens); 100 TB runs as a
     single scan."""
-    w = classifier_weights(n_buckets)
+    w = classifier_weights()
     arr = "array(" + ", ".join(f"{v}L" for v in w) + ")"
     h = f"(CAST(conv(substring(md5(x), 1, 8), 16, 10) AS BIGINT) % {MERSENNE31})"
-    logit = (f"aggregate({TOKENS_COL}, CAST({bias} AS BIGINT), "
+    logit = (f"aggregate({TOKENS_COL}, CAST({CLF_BIAS} AS BIGINT), "
              f"(acc, x) -> acc + element_at({arr}, "
-             f"CAST({h} % {n_buckets} AS INT) + 1))")
-    return (with_tokens(df.where(F.col(text_col).isNotNull()), text_col)
-            .select(F.col(id_col),
+             f"CAST({h} % {CLF_BUCKETS} AS INT) + 1))")
+    return (with_tokens(df.where(F.col("text").isNotNull()))
+            .select(F.col("doc_id"),
                     F.size(TOKENS_COL).cast("long").alias("n_tokens"),
                     F.expr(logit).alias("logit_milli"))
             .withColumn("verdict",
@@ -1178,9 +1141,7 @@ DSIR_BUCKETS = 128
 DSIR_SCALE = 1_000_000     # ppm fixed point; see overflow note below
 
 
-def dsir_bucket_scores(df: DataFrame, target_pred: str,
-                       text_col: str = "text",
-                       n_buckets: int = DSIR_BUCKETS) -> list[int]:
+def dsir_bucket_scores(df: DataFrame, target_pred: str) -> list[int]:
     """Bucket→score table for hashed-feature importance sampling
     (DSIR, Xie et al. 2023: weight raw-corpus docs by how target-like
     their hashed n-gram profile is). score[b] = tcnt[b]·SCALE div
@@ -1196,23 +1157,21 @@ def dsir_bucket_scores(df: DataFrame, target_pred: str,
     artifact discipline (IVF centroids, Bloom bits): B counters
     however big the corpus. Overflow: tcnt·SCALE stays in int64 up to
     ~9e12 target tokens per bucket; shrink SCALE past that."""
-    d = with_tokens(spread(df.where(F.col(text_col).isNotNull())), text_col)
+    d = with_tokens(spread(df.where(F.col("text").isNotNull())))
     h = f"(CAST(conv(substring(md5(x), 1, 8), 16, 10) AS BIGINT) % {MERSENNE31})"
     cnt = (d.select(F.expr(f"CAST({target_pred} AS INT)").alias("is_t"),
                     F.explode(F.expr(
                         f"transform({TOKENS_COL}, x -> "
-                        f"CAST({h} % {n_buckets} AS INT))")).alias("bucket"))
+                        f"CAST({h} % {DSIR_BUCKETS} AS INT))")).alias("bucket"))
              .groupBy("bucket")
              .agg(F.count(F.lit(1)).cast("long").alias("rcnt"),
                   F.expr("CAST(sum(is_t) AS BIGINT)").alias("tcnt")))
     rows = {r["bucket"]: (r["tcnt"], r["rcnt"]) for r in cnt.collect()}
     return [int((rows[b][0] * DSIR_SCALE) // rows[b][1]) if b in rows else 0
-            for b in range(n_buckets)]
+            for b in range(DSIR_BUCKETS)]
 
 
-def dsir_weights(df: DataFrame, scores: list[int],
-                 id_col: str = "doc_id", text_col: str = "text",
-                 n_buckets: int = DSIR_BUCKETS) -> DataFrame:
+def dsir_weights(df: DataFrame, scores: list[int]) -> DataFrame:
     """Per-doc DSIR importance weight: Σ score[h(tok) mod B] over the
     doc's tokens (with repetition), exact BIGINT ppm. Docs with no
     tokens carry no evidence and are excluded (matches the oracle's
@@ -1227,17 +1186,15 @@ def dsir_weights(df: DataFrame, scores: list[int],
     h = f"(CAST(conv(substring(md5(x), 1, 8), 16, 10) AS BIGINT) % {MERSENNE31})"
     wexpr = (f"aggregate({TOKENS_COL}, CAST(0 AS BIGINT), "
              f"(acc, x) -> acc + element_at({arr}, "
-             f"CAST({h} % {n_buckets} AS INT) + 1))")
-    return (with_tokens(df.where(F.col(text_col).isNotNull()), text_col)
+             f"CAST({h} % {DSIR_BUCKETS} AS INT) + 1))")
+    return (with_tokens(df.where(F.col("text").isNotNull()))
             .where(F.size(TOKENS_COL) > 0)
-            .select(F.col(id_col),
+            .select(F.col("doc_id"),
                     F.size(TOKENS_COL).cast("long").alias("n_tokens"),
                     F.expr(wexpr).alias("dsir_weight_ppm")))
 
 
-def phrase_hits(df: DataFrame, phrase: list[str],
-                id_col: str = "doc_id",
-                text_col: str = "text") -> DataFrame:
+def phrase_hits(df: DataFrame, phrase: list[str]) -> DataFrame:
     """Exact phrase search — all occurrences of a consecutive-token
     phrase, entirely INSIDE the scan (the Spark-first form: a
     higher-order `filter` over candidate start offsets of the token
@@ -1252,7 +1209,7 @@ def phrase_hits(df: DataFrame, phrase: list[str],
     per corpus token up front (`substring_dup_spans`' exchange
     class), this costs nothing but the scan it rides.
 
-    Returns (id_col, n_hits, first_pos) for documents with ≥1 hit;
+    Returns (doc_id, n_hits, first_pos) for documents with ≥1 hit;
     `first_pos` is the 0-based token offset of the first occurrence.
     """
     if not phrase:
@@ -1267,7 +1224,7 @@ def phrase_hits(df: DataFrame, phrase: list[str],
     # variable forces single evaluation; there is no `let` in Spark
     # SQL, so transform(array(x), _t -> ...)[0] is the idiom.
     from ..functions import TOKEN_RE
-    toks_sql = f"regexp_extract_all(lower({text_col}), '{TOKEN_RE}', 0)"
+    toks_sql = f"regexp_extract_all(lower(text), '{TOKEN_RE}', 0)"
     starts = (f"transform(array({toks_sql}), _t -> "
               f"CASE WHEN size(_t) < {len(phrase)} THEN array() "
               f"ELSE filter(sequence(0, size(_t) - {len(phrase)}), "
@@ -1281,14 +1238,12 @@ def phrase_hits(df: DataFrame, phrase: list[str],
            f"'n_hits', CAST(size(_s) AS BIGINT), "
            f"'first_pos', CAST(_s[0] AS BIGINT))) "
            f"ELSE array() END)[0])")
-    return (df.where(F.col(text_col).isNotNull())
-              .select(F.col(id_col), F.expr(row).alias("_r"))
-              .select(id_col, "_r.n_hits", "_r.first_pos"))
+    return (df.where(F.col("text").isNotNull())
+              .select(F.col("doc_id"), F.expr(row).alias("_r"))
+              .select("doc_id", "_r.n_hits", "_r.first_pos"))
 
 
-def phrase_hits_sql(phrase: list[str], table: str = "documents",
-                    id_expr: str = "doc_id",
-                    text_expr: str = "text") -> str:
+def phrase_hits_sql(phrase: list[str]) -> str:
     """DuckDB twin of `phrase_hits` — same candidate-offset lambda,
     1-based list indexing (i runs over 1-based starts; emitted
     first_pos converts back to the 0-based contract)."""
@@ -1297,8 +1252,8 @@ def phrase_hits_sql(phrase: list[str], table: str = "documents",
         f"_t[i + {j}] = '{w}'" for j, w in enumerate(phrase))
     return f"""
 WITH toked AS (
-  SELECT {id_expr} AS doc_id, {tokens_sql(text_expr)} AS _t
-  FROM {table} WHERE {text_expr} IS NOT NULL
+  SELECT doc_id AS doc_id, {tokens_sql('text')} AS _t
+  FROM documents WHERE text IS NOT NULL
 ),
 hits AS (
   SELECT doc_id,
@@ -1306,20 +1261,18 @@ hits AS (
                      i -> {conds}) AS _s
   FROM toked WHERE len(_t) >= {len(phrase)}
 )
-SELECT doc_id AS {id_expr}, CAST(len(_s) AS BIGINT) AS n_hits,
+SELECT doc_id AS doc_id, CAST(len(_s) AS BIGINT) AS n_hits,
        CAST(_s[1] - 1 AS BIGINT) AS first_pos
 FROM hits WHERE len(_s) > 0
 """
 
 
-def blocklist_hits(df: DataFrame, phrases: list[str],
-                   id_col: str = "doc_id",
-                   text_col: str = "text") -> DataFrame:
+def blocklist_hits(df: DataFrame, phrases: list[str]) -> DataFrame:
     """Multi-phrase blocklist tagging — the content-policy /
     compliance gate of a training-data pipeline: K banned phrases
     (plan-time constants: slurs, license markers, boilerplate
     fragments, contamination strings), each doc tagged with WHICH of
-    them it contains as a whole-token sequence. Output: (id_col,
+    them it contains as a whole-token sequence. Output: (doc_id,
     n_hits, hits) for docs with ≥1 hit; `hits` is the matched
     phrases joined by '|' in blocklist order (deterministic — filter
     preserves the literal array's order on both engines).
@@ -1344,7 +1297,7 @@ def blocklist_hits(df: DataFrame, phrases: list[str],
     from ..functions import TOKEN_RE
     lits = ", ".join(f"' {p} '" for p in phrases)
     padded = (f"concat(' ', array_join("
-              f"regexp_extract_all(lower({text_col}), '{TOKEN_RE}', 0),"
+              f"regexp_extract_all(lower(text), '{TOKEN_RE}', 0),"
               f" ' '), ' ')")
     hits = (f"transform(array({padded}), _pad -> "
             f"filter(array({lits}), p -> contains(_pad, p)))[0]")
@@ -1360,14 +1313,12 @@ def blocklist_hits(df: DataFrame, phrases: list[str],
            f"'n_hits', CAST(size(_h) AS BIGINT), "
            f"'hits', array_join(transform(_h, p -> trim(p)), '|'))) "
            f"ELSE array() END)[0])")
-    return (df.where(F.col(text_col).isNotNull())
-              .select(F.col(id_col), F.expr(row).alias("_r"))
-              .select(id_col, "_r.n_hits", "_r.hits"))
+    return (df.where(F.col("text").isNotNull())
+              .select(F.col("doc_id"), F.expr(row).alias("_r"))
+              .select("doc_id", "_r.n_hits", "_r.hits"))
 
 
-def vocab_coverage(df: DataFrame, vocab_size: int = 16,
-                   id_col: str = "doc_id",
-                   text_col: str = "text") -> DataFrame:
+def vocab_coverage(df: DataFrame, vocab_size: int = 16) -> DataFrame:
     """Vocabulary-coverage / OOV-rate audit — the pre-tokenizer-
     training question "how much of each document does a top-V
     vocabulary actually cover?" (high OOV docs are the ones a
@@ -1375,7 +1326,7 @@ def vocab_coverage(df: DataFrame, vocab_size: int = 16,
     drives vocab-size choice and flags encoding rot / wrong-language
     residue the langid pass scored borderline). Vocabulary = the V
     corpus-wide most frequent tokens (ties broken by term asc, the
-    deterministic convention). Output per non-empty doc: (id_col,
+    deterministic convention). Output per non-empty doc: (doc_id,
     n_tokens, n_oov, oov_ppm) — all exact BIGINTs (ppm via integer
     div; no float rates to flap the cross-engine hash).
 
@@ -1387,10 +1338,10 @@ def vocab_coverage(df: DataFrame, vocab_size: int = 16,
     joined to anything corpus-sized."""
     from pyspark.sql import Window
     from ..functions import tokens
-    tc = (df.where(F.col(text_col).isNotNull())
-            .select(F.col(id_col),
-                    F.explode(tokens(text_col)).alias("term"))
-            .groupBy(id_col, "term")
+    tc = (df.where(F.col("text").isNotNull())
+            .select(F.col("doc_id"),
+                    F.explode(tokens("text")).alias("term"))
+            .groupBy("doc_id", "term")
             .agg(F.count(F.lit(1)).cast("long").alias("n")))
     vc = tc.groupBy("term").agg(F.sum("n").cast("long").alias("cnt"))
     w = Window.orderBy(F.col("cnt").desc(), F.col("term").asc())
@@ -1398,24 +1349,22 @@ def vocab_coverage(df: DataFrame, vocab_size: int = 16,
                .where(F.col("_rk") <= vocab_size)
                .select("term", F.lit(1).alias("_in_vocab")))
     return (tc.join(F.broadcast(vocab), "term", "left")
-              .groupBy(id_col)
+              .groupBy("doc_id")
               .agg(F.sum("n").cast("long").alias("n_tokens"),
                    F.sum(F.when(F.col("_in_vocab").isNull(), F.col("n"))
                           .otherwise(F.lit(0))).cast("long").alias("n_oov"))
-              .select(F.col(id_col), "n_tokens", "n_oov",
+              .select(F.col("doc_id"), "n_tokens", "n_oov",
                       F.expr("n_oov * 1000000L div n_tokens")
                        .alias("oov_ppm")))
 
 
-def vocab_coverage_sql(vocab_size: int = 16, table: str = "documents",
-                       id_expr: str = "doc_id",
-                       text_expr: str = "text") -> str:
+def vocab_coverage_sql(vocab_size: int = 16) -> str:
     """DuckDB twin of `vocab_coverage` — same top-V convention."""
     from ..functions import tokens_sql
     return f"""
 WITH toked AS (
-  SELECT {id_expr} AS doc_id, {tokens_sql(text_expr)} AS _t
-  FROM {table} WHERE {text_expr} IS NOT NULL
+  SELECT doc_id AS doc_id, {tokens_sql('text')} AS _t
+  FROM documents WHERE text IS NOT NULL
 ),
 tc AS (SELECT doc_id, unnest(_t) AS term FROM toked),
 tcc AS (SELECT doc_id, term, CAST(count(*) AS BIGINT) AS n
@@ -1429,39 +1378,35 @@ agg AS (
          CAST(sum(CASE WHEN v.term IS NULL THEN n ELSE 0 END) AS BIGINT)
            AS n_oov
   FROM tcc LEFT JOIN vocab v USING (term) GROUP BY 1)
-SELECT doc_id AS {id_expr}, n_tokens, n_oov,
+SELECT doc_id AS doc_id, n_tokens, n_oov,
        n_oov * 1000000 // n_tokens AS oov_ppm
 FROM agg
 """
 
 
-def blocklist_hits_sql(phrases: list[str], table: str = "documents",
-                       id_expr: str = "doc_id",
-                       text_expr: str = "text") -> str:
+def blocklist_hits_sql(phrases: list[str]) -> str:
     """DuckDB twin of `blocklist_hits` — same padded-token-join
     containment over the same literal list."""
     from ..functions import tokens_sql
     lits = ", ".join(f"' {p} '" for p in phrases)
     return f"""
 WITH pad AS (
-  SELECT {id_expr} AS doc_id,
-         ' ' || array_to_string({tokens_sql(text_expr)}, ' ') || ' ' AS _pad
-  FROM {table} WHERE {text_expr} IS NOT NULL
+  SELECT doc_id AS doc_id,
+         ' ' || array_to_string({tokens_sql('text')}, ' ') || ' ' AS _pad
+  FROM documents WHERE text IS NOT NULL
 ),
 h AS (
   SELECT doc_id,
          list_filter([{lits}], p -> contains(_pad, p)) AS _h
   FROM pad
 )
-SELECT doc_id AS {id_expr}, CAST(len(_h) AS BIGINT) AS n_hits,
+SELECT doc_id AS doc_id, CAST(len(_h) AS BIGINT) AS n_hits,
        array_to_string(list_transform(_h, p -> trim(p)), '|') AS hits
 FROM h WHERE len(_h) > 0
 """
 
 
-def pseudonymize_terms(df: DataFrame, terms: list[str],
-                       id_col: str = "doc_id",
-                       text_col: str = "text") -> DataFrame:
+def pseudonymize_terms(df: DataFrame, terms: list[str]) -> DataFrame:
     """Dictionary-driven deterministic pseudonymization — the GDPR
     Art. 4(5) release transform `blocklist_hits` only AUDITS: every
     occurrence of a dictionary term (usernames, project codenames,
@@ -1471,7 +1416,7 @@ def pseudonymize_terms(df: DataFrame, terms: list[str],
     per-ENTITY: the same term maps to the same token in every
     document, so co-occurrence structure, entity linking, and dedup
     keys survive the scrub — pseudonymization, not redaction.
-    Output per non-null doc: (id_col, n_hits, n_entities, clean_text)
+    Output per non-null doc: (doc_id, n_hits, n_entities, clean_text)
     over the normalized token stream (exact BIGINT counts;
     n_entities = distinct dictionary terms present).
 
@@ -1489,7 +1434,7 @@ def pseudonymize_terms(df: DataFrame, terms: list[str],
             raise ValueError(f"term {t!r} contains a quote")
     from ..functions import TOKEN_RE
     lits = ", ".join(f"'{t}'" for t in terms)
-    toked = (f"regexp_extract_all(lower({text_col}), '{TOKEN_RE}', 0)")
+    toked = (f"regexp_extract_all(lower(text), '{TOKEN_RE}', 0)")
     # One Generate-free projection: transform(array(toked), ...) [0]
     # let-binds the tokenize so CollapseProject can't duplicate it
     # into the three outputs.
@@ -1500,15 +1445,13 @@ def pseudonymize_terms(df: DataFrame, terms: list[str],
            f"'clean_text', array_join(transform(_t, t -> "
            f"CASE WHEN t IN ({lits}) THEN concat('<ENT_', "
            f"substr(md5(t), 1, 10), '>') ELSE t END), ' ')))[0]")
-    return (df.where(F.col(text_col).isNotNull())
-              .select(F.col(id_col), F.expr(row).alias("_r"))
-              .select(id_col, "_r.n_hits", "_r.n_entities",
+    return (df.where(F.col("text").isNotNull())
+              .select(F.col("doc_id"), F.expr(row).alias("_r"))
+              .select("doc_id", "_r.n_hits", "_r.n_entities",
                       "_r.clean_text"))
 
 
-def pseudonymize_terms_sql(terms: list[str], table: str = "documents",
-                           id_expr: str = "doc_id",
-                           text_expr: str = "text") -> str:
+def pseudonymize_terms_sql(terms: list[str]) -> str:
     """DuckDB twin of `pseudonymize_terms` — same tokenize, same IN
     probe, same md5 surrogates (1-based list lambdas; empty-list
     array_to_string coalesced: DuckDB returns NULL, Spark '')."""
@@ -1516,10 +1459,10 @@ def pseudonymize_terms_sql(terms: list[str], table: str = "documents",
     lits = ", ".join(f"'{t}'" for t in terms)
     return f"""
 WITH b AS (
-  SELECT {id_expr} AS doc_id, {tokens_sql(text_expr)} AS _t
-  FROM {table} WHERE {text_expr} IS NOT NULL
+  SELECT doc_id AS doc_id, {tokens_sql('text')} AS _t
+  FROM documents WHERE text IS NOT NULL
 )
-SELECT doc_id AS {id_expr},
+SELECT doc_id AS doc_id,
        CAST(len(list_filter(_t, t -> t IN ({lits}))) AS BIGINT) AS n_hits,
        CAST(len(list_distinct(list_filter(_t, t -> t IN ({lits}))))
          AS BIGINT) AS n_entities,
@@ -1534,8 +1477,7 @@ RRF_C = 60                 # the standard Cormack/Clarke offset
 RRF_SCALE = 1_000_000      # integer RRF: contribution = SCALE div (C + rank)
 
 
-def rrf_fuse(sides: dict[str, DataFrame], id_col: str = "doc_id",
-             k: int = 20) -> DataFrame:
+def rrf_fuse(sides: dict[str, DataFrame], k: int = 20) -> DataFrame:
     """Reciprocal-rank fusion (Cormack et al., SIGIR'09) — the hybrid-
     retrieval combiner that merges a lexical ranking (BM25) with a
     dense ranking (ANN cosine) without score calibration: each list
@@ -1543,8 +1485,8 @@ def rrf_fuse(sides: dict[str, DataFrame], id_col: str = "doc_id",
     score is an order-insensitive BIGINT sum (the float 1/(60+r) form
     would sum in shuffle order and flap the cross-engine hash).
 
-    `sides` maps a side name to a ranked frame carrying (id_col,
-    rank); output is the fused top-k: (rank, id_col, rrf_score,
+    `sides` maps a side name to a ranked frame carrying (doc_id,
+    rank); output is the fused top-k: (rank, doc_id, rrf_score,
     n_lists, <name>_rank per side — NULL where that side missed the
     document).
 
@@ -1553,7 +1495,7 @@ def rrf_fuse(sides: dict[str, DataFrame], id_col: str = "doc_id",
     the corpus: one union, one id hash-agg, one TakeOrdered."""
     from pyspark.sql import Window
     names = list(sides)
-    tagged = [s.select(F.col(id_col), F.col("rank").alias("_r"),
+    tagged = [s.select(F.col("doc_id"), F.col("rank").alias("_r"),
                        F.lit(n).alias("_side"))
               for n, s in sides.items()]
     u = tagged[0]
@@ -1564,17 +1506,16 @@ def rrf_fuse(sides: dict[str, DataFrame], id_col: str = "doc_id",
             F.count(F.lit(1)).cast("long").alias("n_lists")]
     aggs += [F.max(F.when(F.col("_side") == n, F.col("_r")))
               .cast("long").alias(f"{n}_rank") for n in names]
-    fused = u.groupBy(id_col).agg(*aggs)
+    fused = u.groupBy("doc_id").agg(*aggs)
     top = fused.orderBy(F.col("rrf_score").desc(),
-                        F.col(id_col).asc()).limit(k)
-    w = Window.orderBy(F.col("rrf_score").desc(), F.col(id_col).asc())
+                        F.col("doc_id").asc()).limit(k)
+    w = Window.orderBy(F.col("rrf_score").desc(), F.col("doc_id").asc())
     return top.withColumn("rank", F.row_number().over(w).cast("long")) \
-              .select("rank", id_col, "rrf_score", "n_lists",
+              .select("rank", "doc_id", "rrf_score", "n_lists",
                       *[f"{n}_rank" for n in names])
 
 
-def textrank_keywords(df: DataFrame, text_col: str = "text",
-                      iters: int = 4, min_count: int = 3,
+def textrank_keywords(df: DataFrame, iters: int = 4, min_count: int = 3,
                       top_k: int = 30) -> DataFrame:
     """Corpus-level TextRank keyword salience (Mihalcea & Tarau,
     EMNLP'04): PageRank over the word co-occurrence graph — the
@@ -1597,7 +1538,7 @@ def textrank_keywords(df: DataFrame, text_col: str = "text",
     per iteration regardless of corpus bytes."""
     from pyspark.sql import Window
     from .graph import pagerank_exact
-    bg = (with_tokens(spread(df.where(F.col(text_col).isNotNull())), text_col)
+    bg = (with_tokens(spread(df.where(F.col("text").isNotNull())))
           .where(F.size(TOKENS_COL) >= 2)
           .select(F.explode(F.expr(
                       f"transform(sequence(0, size({TOKENS_COL}) - 2), "
@@ -1627,10 +1568,8 @@ RAKE_MAX_PHRASE = 4   # candidate cap (standard RAKE practice)
 RAKE_TOPK = 50
 
 
-def rake_keywords(df: DataFrame, id_col: str = "doc_id",
-                  text_col: str = "text",
-                  max_phrase: int = RAKE_MAX_PHRASE,
-                  k: int = RAKE_TOPK) -> DataFrame:
+def rake_keywords(df: DataFrame,
+                  max_phrase: int = RAKE_MAX_PHRASE) -> DataFrame:
     """RAKE keyword extraction (Rose et al. 2010): candidate phrases
     are maximal stopword-free token runs (gaps-and-islands over the
     token stream), word score = degree/frequency where degree sums
@@ -1649,26 +1588,26 @@ def rake_keywords(df: DataFrame, id_col: str = "doc_id",
     mega-phrase."""
     from pyspark.sql import Window
     stop = STOPWORDS["en"]
-    u = (with_tokens(spread(df.where(F.col(text_col).isNotNull())), text_col)
-         .select(id_col, F.posexplode(TOKENS_COL).alias("pos", "w")))
+    u = (with_tokens(spread(df.where(F.col("text").isNotNull())))
+         .select("doc_id", F.posexplode(TOKENS_COL).alias("pos", "w")))
     ns = u.where(~F.col("w").isin(*stop))
-    wi = Window.partitionBy(id_col).orderBy("pos")
+    wi = Window.partitionBy("doc_id").orderBy("pos")
     isl = ns.withColumn("grp",
                         F.col("pos") - F.row_number().over(wi))
-    ph = (isl.groupBy(id_col, "grp")
+    ph = (isl.groupBy("doc_id", "grp")
           .agg(F.count(F.lit(1)).cast("long").alias("plen"),
                F.expr("array_join(transform(array_sort("
                       "collect_list(struct(pos, w))), s -> s.w), ' ')")
                 .alias("phrase"))
           .where(F.col("plen") <= max_phrase))
-    occ = isl.join(ph, [id_col, "grp"])
+    occ = isl.join(ph, ["doc_id", "grp"])
     ws = (occ.groupBy("w")
              .agg(F.count(F.lit(1)).cast("long").alias("freq"),
                   F.expr("CAST(sum(plen) AS BIGINT)").alias("deg")))
     wsc = ws.select("w", F.expr("deg * 1000000 div freq")
                           .alias("wscore_e6"))
     po = (occ.join(wsc, "w")
-             .groupBy(id_col, "grp", "phrase", "plen")
+             .groupBy("doc_id", "grp", "phrase", "plen")
              .agg(F.expr("CAST(sum(wscore_e6) AS BIGINT)")
                    .alias("pscore")))
     return (po.groupBy("phrase")
@@ -1676,11 +1615,10 @@ def rake_keywords(df: DataFrame, id_col: str = "doc_id",
                    F.count(F.lit(1)).cast("long").alias("occurrences"),
                    F.expr("CAST(max(pscore) AS BIGINT)").alias("score_e6"))
               .orderBy(F.desc("score_e6"), F.asc("phrase"))
-              .limit(k))
+              .limit(RAKE_TOPK))
 
 
-def rake_keywords_sql(max_phrase: int = RAKE_MAX_PHRASE,
-                      k: int = RAKE_TOPK) -> str:
+def rake_keywords_sql() -> str:
     """DuckDB twin of rake_keywords (same stoplist, same fixed point)."""
     stoplist = ", ".join(f"'{w}'" for w in STOPWORDS["en"])
     return f"""
@@ -1701,7 +1639,7 @@ ph AS (
   SELECT doc_id, grp, CAST(count(*) AS BIGINT) AS plen,
          string_agg(w, ' ' ORDER BY pos) AS phrase
   FROM isl GROUP BY 1, 2
-  HAVING count(*) <= {max_phrase}),
+  HAVING count(*) <= {RAKE_MAX_PHRASE}),
 occ AS (SELECT isl.doc_id, isl.grp, isl.w, ph.plen, ph.phrase
         FROM isl JOIN ph USING (doc_id, grp)),
 ws AS (
@@ -1720,7 +1658,7 @@ SELECT phrase, CAST(max(plen) AS BIGINT) AS n_words,
 FROM po
 GROUP BY 1
 ORDER BY score_e6 DESC, phrase ASC
-LIMIT {k}
+LIMIT {RAKE_TOPK}
 """
 
 
@@ -1729,8 +1667,7 @@ LIMIT {k}
 TRIGRAM_W3, TRIGRAM_W2, TRIGRAM_W1 = 70, 25, 5  # interpolation ×100
 
 
-def trigram_fluency(df: DataFrame, id_col: str = "doc_id",
-                    text_col: str = "text") -> DataFrame:
+def trigram_fluency(df: DataFrame) -> DataFrame:
     """Interpolated trigram LM typicality per document — the backoff
     step up from `bigram_fluency` (Jelinek-Mercer interpolation, the
     mechanism KenLM-style scorers rely on, in corpus-self-trained
@@ -1750,15 +1687,15 @@ def trigram_fluency(df: DataFrame, id_col: str = "doc_id",
     plus one 1-row total broadcast, then the per-doc hash agg — the
     bigram op's shape with one extra vocabulary-keyed exchange."""
     from pyspark.sql import Window
-    tg = (with_tokens(spread(df.where(F.col(text_col).isNotNull())), text_col)
+    tg = (with_tokens(spread(df.where(F.col("text").isNotNull())))
           .where(F.size(TOKENS_COL) >= 3)
-          .select(F.col(id_col),
+          .select(F.col("doc_id"),
                   F.explode(F.expr(
                       f"transform(sequence(0, size({TOKENS_COL}) - 3), "
                       f"i -> struct({TOKENS_COL}[i] AS w1, "
                       f"{TOKENS_COL}[i+1] AS w2, "
                       f"{TOKENS_COL}[i+2] AS w3))")).alias("t"))
-          .select(id_col, "t.w1", "t.w2", "t.w3"))
+          .select("doc_id", "t.w1", "t.w2", "t.w3"))
     stats = (tg.withColumn("c123", F.count(F.lit(1)).over(
                    Window.partitionBy("w1", "w2", "w3")).cast("long"))
                .withColumn("c12", F.count(F.lit(1)).over(
@@ -1775,11 +1712,11 @@ def trigram_fluency(df: DataFrame, id_col: str = "doc_id",
                Window.partitionBy("w3")).cast("long"))
                 .crossJoin(F.broadcast(total)))
     return (c3w.withColumn("p_ppb", F.expr(interp))
-               .groupBy(id_col)
+               .groupBy("doc_id")
                .agg(F.count(F.lit(1)).cast("long").alias("n_trigrams"),
                     F.expr("CAST(sum(p_ppb) AS BIGINT)")
                      .alias("sum_prob_ppb"))
-               .select(id_col, "n_trigrams", "sum_prob_ppb",
+               .select("doc_id", "n_trigrams", "sum_prob_ppb",
                        F.expr("sum_prob_ppb div n_trigrams")
                         .alias("fluency_ppb")))
 
@@ -1827,8 +1764,7 @@ SCRIPT_OTHER_MAX_PPM = 100_000   # >10% outside ASCII classes → suspect
 _WS_CLS = "[ \\t\\r\\n]"   # whitespace class, shared literal
 
 
-def script_census(df: DataFrame, id_col: str = "doc_id",
-                  text_col: str = "text") -> DataFrame:
+def script_census(df: DataFrame) -> DataFrame:
     """Character-class / script census per document — the
     encoding-rot and wrong-script detector that runs BEFORE language
     ID can be trusted (mojibake, binary-pasted-as-text, and
@@ -1846,10 +1782,10 @@ def script_census(df: DataFrame, id_col: str = "doc_id",
         return f"({n} - char_length(regexp_replace(text0, '{cls}', '')))"
 
     alpha, digit, space = cnt("[A-Za-z]"), cnt("[0-9]"), cnt(_WS_CLS)
-    return (df.where(F.col(text_col).isNotNull())
-              .select(F.col(id_col), F.col(text_col).alias("text0"))
+    return (df.where(F.col("text").isNotNull())
+              .select(F.col("doc_id"), F.col("text").alias("text0"))
               .select(
-                  id_col,
+                  "doc_id",
                   F.expr(f"CAST({n} AS BIGINT)").alias("n_chars"),
                   F.expr(f"CAST({alpha} AS BIGINT)").alias("n_alpha"),
                   F.expr(f"CAST({digit} AS BIGINT)").alias("n_digit"),

@@ -86,11 +86,6 @@ def partition_path(table: str, start: int, end: int, root: str = "") -> str:
     return f"{root.rstrip('/')}/{table}/start_block={pad8(start)}/end_block={pad8(end)}"
 
 
-def range_bucket_bounds(plan: list[tuple[int, int]]) -> tuple[list[int], list[int]]:
-    """(starts, ends) arrays for `range_cols`."""
-    return [s for s, _ in plan], [e for _, e in plan]
-
-
 def range_cols(number: Column | str, plan: list[tuple[int, int]]) -> tuple[Column, Column]:
     """(start_block, end_block) padded-string columns assigning each row's
     block number to its plan range — pure Catalyst expressions, no UDF.

@@ -58,7 +58,7 @@ def qty(col: str) -> str:
     return f"CAST(round({col}) AS BIGINT)"
 
 
-def revenue_e4(price: str = "l_extendedprice", disc: str = "l_discount") -> str:
+def revenue_e4() -> str:
     """price·(1-disc) in units of 10^-4 dollars, exact int64:
     cents · (100 - disc_pct). Sum then divide once for a double."""
-    return f"({cents(price)} * (100 - {cents(disc)}))"
+    return f"({cents('l_extendedprice')} * (100 - {cents('l_discount')}))"

@@ -744,12 +744,8 @@ def _training_sample_path() -> str:
     """Where the quantizer-training sample lives, by convention: the
     sf0.01 embeddings under the corpus root (the smallest graded
     corpus — IVF/PQ training is always a sample). The root derives
-    from $SPARK_GRAFT_SF_DIR's parent when set; the whole path can be
-    overridden with $SPARK_GRAFT_IVF_SAMPLE."""
+    from $SPARK_GRAFT_SF_DIR's parent when set."""
     import os
-    override = os.environ.get("SPARK_GRAFT_IVF_SAMPLE")
-    if override:
-        return override
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR")
     root = (os.path.dirname(sf_dir.rstrip("/")) if sf_dir
             else "/root/testdata")
@@ -3531,8 +3527,7 @@ def _phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return multimodal.ahash_dup_groups(media)
 
 
-def _ahash_bits_ctes(neardup_mod: int | None = None,
-                     neardup_offset: int = 1_000_000) -> str:
+def _ahash_bits_ctes(neardup_mod: int | None = None) -> str:
     """CTE chain recomputing every aHash bit from the fixture's
     deterministic text→pixel tiling, ending in
     bits(doc_id, hash_hi, hash_lo) — shared by the exact-hash dedup
@@ -3540,7 +3535,7 @@ def _ahash_bits_ctes(neardup_mod: int | None = None,
 
     `neardup_mod` mirrors `documents_as_ppm_media`'s injected
     near-dup copies: for every doc with id % mod == 0, a copy at
-    doc_id + `neardup_offset` whose FIRST PIXEL is forced white.
+    doc_id + NEARDUP_ID_OFFSET whose FIRST PIXEL is forced white.
     Dimensions come from the ORIGINAL id (the fixture reuses them),
     and pixel (0,0) feeds exactly aHash grid cell k = 0 (cell k
     samples source pixel ((k div 8)·h div 8, (k mod 8)·w div 8),
@@ -3555,7 +3550,7 @@ def _ahash_bits_ctes(neardup_mod: int | None = None,
               f" + vals[({src} + 2) % nb + 1]) // 3")
     inj = "" if neardup_mod is None else f"""
   UNION ALL
-  SELECT doc_id + {neardup_offset} AS doc_id, 1 AS inj,
+  SELECT doc_id + {multimodal.NEARDUP_ID_OFFSET} AS doc_id, 1 AS inj,
          hex(encode(text)) AS hx, octet_length(encode(text)) AS nb,
          CAST(8 + doc_id % 9 AS BIGINT) AS w,
          CAST(8 + doc_id % 7 AS BIGINT) AS h
@@ -3663,10 +3658,11 @@ def _audio_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return multimodal.audio_fingerprint_groups(media)
 
 
-def _audio_dedup_sql(grid: int = 64) -> str:
+def _audio_dedup_sql() -> str:
     digit = "strpos('0123456789ABCDEF', hx[{i}]) - 1"
     byte_at = (f"16 * ({digit.format(i='2*p+1')}) "
                f"+ ({digit.format(i='2*p+2')})")
+    grid = multimodal.AUDIO_FP_POINTS
     pt_k = f"vals[(k * nb) // {grid} + 1]"
     return f"""
 WITH m AS (
@@ -3760,11 +3756,12 @@ words0 AS MATERIALIZED (
   FROM occ GROUP BY 1),{','.join(steps)}"""
 
 
-def _bpe_sql(rounds: int = text.BPE_ROUNDS) -> str:
+def _bpe_sql() -> str:
     union = "\nUNION ALL\n".join(
-        f"SELECT round, x, y, pair_n FROM best{r}" for r in range(rounds))
+        f"SELECT round, x, y, pair_n FROM best{r}"
+        for r in range(text.BPE_ROUNDS))
     return f"""
-WITH {_bpe_chain(rounds)}
+WITH {_bpe_chain(text.BPE_ROUNDS)}
 {union}
 """
 
@@ -3787,18 +3784,18 @@ def _bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
                                   merges=_get_bpe_merges(spark, sf_dir))
 
 
-def _bpe_encode_sql(rounds: int = text.BPE_ROUNDS) -> str:
+def _bpe_encode_sql() -> str:
     # word→segmentation map rewritten by the same best{r} chain the
     # training oracle derives, then per-doc symbol accounting
     maps = []
-    for r in range(rounds):
+    for r in range(text.BPE_ROUNDS):
         maps.append(f"""
 map{r + 1} AS MATERIALIZED (
   SELECT word, replace(w, ' ' || x || ' ' || y || ' ',
                        ' ' || x || y || ' ') AS w
   FROM map{r}, best{r})""")
     return f"""
-WITH {_bpe_chain(rounds)},
+WITH {_bpe_chain(text.BPE_ROUNDS)},
 map0 AS MATERIALIZED (
   SELECT DISTINCT word,
          ' ' || regexp_replace(word, '(.)', '\\1 ', 'g') AS w
@@ -3806,7 +3803,7 @@ map0 AS MATERIALIZED (
 SELECT o.doc_id AS doc_id, CAST(count(*) AS BIGINT) AS n_words,
        CAST(sum(len(string_split(trim(m.w), ' '))) AS BIGINT)
          AS n_bpe_tokens
-FROM occ o JOIN map{rounds} m USING (word)
+FROM occ o JOIN map{text.BPE_ROUNDS} m USING (word)
 GROUP BY 1
 """
 
@@ -4045,22 +4042,22 @@ def _dup_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
         k=KCORE_K, rounds=KCORE_ROUNDS)
 
 
-def _dup_kcore_sql(k: int = KCORE_K, rounds: int = KCORE_ROUNDS) -> str:
+def _dup_kcore_sql() -> str:
     # unrolled peel, same determinism contract as _pagerank_sql: each
-    # round keeps edges whose BOTH endpoints have degree >= k in the
+    # round keeps edges whose BOTH endpoints have degree >= KCORE_K in the
     # previous round's subgraph; survivors are the final endpoints.
     # Every e{r} is referenced FOUR times by the next round (degree
     # union + two IN probes) — MATERIALIZED keeps DuckDB's CTE
     # inlining from re-expanding the minhash pipeline 4^rounds times
     peel = []
-    for r in range(rounds):
+    for r in range(KCORE_ROUNDS):
         prev, cur = f"e{r}", f"e{r + 1}"
         peel.append(f"""
 k{r} AS MATERIALIZED (
   SELECT node FROM (
     SELECT node, count(*) AS deg FROM (
       SELECT a AS node FROM {prev} UNION ALL SELECT b FROM {prev})
-    GROUP BY 1) WHERE deg >= {k}),
+    GROUP BY 1) WHERE deg >= {KCORE_K}),
 {cur} AS MATERIALIZED (
   SELECT a, b FROM {prev}
   WHERE a IN (SELECT node FROM k{r})
@@ -4074,7 +4071,7 @@ e0 AS MATERIALIZED (
 nodes AS (SELECT a AS node FROM e0 UNION SELECT b FROM e0),
 {','.join(peel)},
 core AS (SELECT node, CAST(count(*) AS BIGINT) AS core_deg FROM (
-  SELECT a AS node FROM e{rounds} UNION ALL SELECT b FROM e{rounds})
+  SELECT a AS node FROM e{KCORE_ROUNDS} UNION ALL SELECT b FROM e{KCORE_ROUNDS})
   GROUP BY 1)
 SELECT n.node AS node,
        CAST(CASE WHEN c.node IS NOT NULL THEN 1 ELSE 0 END AS BIGINT)
@@ -4264,11 +4261,11 @@ def _dup_lpa(spark: SparkSession, sf_dir: str) -> DataFrame:
                      F.col("doc_b").alias("dst")), rounds=LPA_ROUNDS)
 
 
-def _dup_lpa_sql(rounds: int = LPA_ROUNDS) -> str:
+def _dup_lpa_sql() -> str:
     # synchronous unrolled rounds; lab{r} feeds both the vote join and
     # nothing else, but ed is referenced every round → MATERIALIZED
     steps = []
-    for r in range(rounds):
+    for r in range(LPA_ROUNDS):
         steps.append(f"""
 lab{r + 1} AS MATERIALIZED (
   SELECT node, label FROM (
@@ -4289,9 +4286,9 @@ ed AS MATERIALIZED (
 lab0 AS MATERIALIZED (
   SELECT DISTINCT s AS node, s AS label FROM ed),{','.join(steps)},
 sizes AS (SELECT label, CAST(count(*) AS BIGINT) AS n_members
-          FROM lab{rounds} GROUP BY 1)
+          FROM lab{LPA_ROUNDS} GROUP BY 1)
 SELECT l.node AS node, l.label AS community, s.n_members AS n_members
-FROM lab{rounds} l JOIN sizes s USING (label)
+FROM lab{LPA_ROUNDS} l JOIN sizes s USING (label)
 """
 
 

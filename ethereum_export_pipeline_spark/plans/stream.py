@@ -7,7 +7,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..streaming import (WINDOW_US, stream_chain_counts,
+from ..streaming import (CHAIN_BUCKET, HOP_US, TRENDING_K, WINDOW_US,
+                         stream_chain_counts,
                          stream_dedup_within_watermark,
                          stream_exact_dedup, stream_hopping_counts,
                          stream_interval_join,
@@ -34,9 +35,6 @@ _STREAM_DEDUP_SQL = """
 SELECT DISTINCT md5(text) AS content_key
 FROM documents WHERE text IS NOT NULL
 """
-
-
-HOP_US = WINDOW_US // 2
 
 
 def _stream_hopping(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -129,7 +127,7 @@ def _stream_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: size = 500 + n % 1000 (sources/datasource.py _fake_block) — pure
 #: integer functions DuckDB recomputes from range()
 _STREAM_CHAIN_SQL = f"""
-SELECT n // 100 AS bucket,
+SELECT n // {CHAIN_BUCKET} AS bucket,
        CAST(count(*) AS BIGINT) AS n_blocks,
        CAST(sum(n % 8000000) AS BIGINT) AS gas_used,
        CAST(sum(n % 200) AS BIGINT) AS tx_count,
@@ -415,7 +413,7 @@ SELECT win, event_type, n, rnk FROM (
               ORDER BY count(*) DESC, event_type ASC) AS BIGINT) AS rnk
   FROM (SELECT epoch_us(ts) // {WINDOW_US} AS win, event_type FROM events)
   GROUP BY 1, 2)
-WHERE rnk <= 2
+WHERE rnk <= {TRENDING_K}
 """
 
 

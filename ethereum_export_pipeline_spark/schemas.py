@@ -109,19 +109,19 @@ PARTITION_COLS = [("start_block", T.StringType()), ("end_block", T.StringType())
 TABLES = tuple(_TABLE_COLUMNS)
 
 
-def table_schema(name: str, partitioned: bool = False) -> T.StructType:
-    """StructType for a table; `partitioned=True` prepends the Hive cols."""
-    cols = (PARTITION_COLS if partitioned else []) + _TABLE_COLUMNS[name]
-    return T.StructType([T.StructField(c, t, True) for c, t in cols])
+def table_schema(name: str) -> T.StructType:
+    """StructType for a table."""
+    return T.StructType([T.StructField(c, t, True)
+                         for c, t in _TABLE_COLUMNS[name]])
 
 
-def csv_schema(name: str, partitioned: bool = False) -> T.StructType:
+def csv_schema(name: str) -> T.StructType:
     """Schema for the stage-1 CSV form of a table: everything is read as
     string (the reference's CSVs are untyped; typing happens in the
     convert step — `apply_mapping`). Matches the Glue flow where the
     catalog crawler sees strings and ApplyMapping casts."""
-    cols = (PARTITION_COLS if partitioned else []) + _TABLE_COLUMNS[name]
-    return T.StructType([T.StructField(c, T.StringType(), True) for c, t in cols])
+    return T.StructType([T.StructField(c, T.StringType(), True)
+                         for c, _ in _TABLE_COLUMNS[name]])
 
 
 @dataclass(frozen=True)
@@ -161,8 +161,7 @@ def apply_mapping(df: DataFrame, mapping: list[ColumnMapping],
 
 
 def apply_mapping_dual_precision(df: DataFrame,
-                                 mapping: list[ColumnMapping],
-                                 safe: bool = True) -> DataFrame:
+                                 mapping: list[ColumnMapping]) -> DataFrame:
     """`apply_mapping` with the FULL-PRECISION wei option (SURVEY hard
     part (a)): every WEI-typed column additionally lands as
     `<dst>_limbs` — eight exact 32-bit BIGINT limbs decoded from the
@@ -178,15 +177,14 @@ def apply_mapping_dual_precision(df: DataFrame,
     cols: list[Column] = []
     for m in mapping:
         c = F.col(m.src)
-        cols.append(c.try_cast(m.dtype).alias(m.dst) if safe
-                    else c.cast(m.dtype).alias(m.dst))
+        cols.append(c.try_cast(m.dtype).alias(m.dst))
         if isinstance(m.dtype, T.DecimalType) and m.dtype == WEI:
             cols.append(F.expr(dec_uint256_limb32_expr(m.src))
                          .alias(f"{m.dst}_limbs"))
     return df.select(*cols)
 
 
-def parse_topics(df: DataFrame, col: str = "topics") -> DataFrame:
+def parse_topics(df: DataFrame) -> DataFrame:
     """logs.topics travels comma-joined in CSV; expose it typed as
     ArrayType(StringType) post-parse (FIXTURES.md `logs`)."""
-    return df.withColumn(col, F.split(F.col(col), ","))
+    return df.withColumn("topics", F.split(F.col("topics"), ","))

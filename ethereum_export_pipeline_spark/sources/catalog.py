@@ -39,11 +39,10 @@ def ensure_database(spark: SparkSession, database: str = DATABASE) -> None:
 
 
 def register_fixture_tables(spark: SparkSession, root: str,
-                            database: str = DATABASE,
-                            tables: tuple[str, ...] = TABLES) -> None:
+                            database: str = DATABASE) -> None:
     """Register one external parquet table per fixture file."""
     ensure_database(spark, database)
-    for t in tables:
+    for t in TABLES:
         spark.sql(f"DROP TABLE IF EXISTS {database}.{t}")
         spark.sql(
             f"CREATE TABLE {database}.{t} ({_ddl_columns(t)}) "

@@ -27,18 +27,14 @@ from ..partitioning import pad8
 from ..schemas import csv_schema
 
 
-def read_table_csv(spark: SparkSession, root: str, table: str,
-                   schema: T.StructType | None = None,
-                   with_corrupt_record: bool = False) -> DataFrame:
+def read_table_csv(spark: SparkSession, root: str, table: str) -> DataFrame:
     """Read every partition CSV of `table` under `root` as one DataFrame.
 
     `root/{table}/start_block=*/end_block=*/*.csv` — Spark derives the
     two partition columns from the directory names (string-typed, as
     the reference's zero-padded layout intends).
     """
-    schema = schema or csv_schema(table)
-    if with_corrupt_record:
-        schema = schema.add(T.StructField("_corrupt_record", T.StringType(), True))
+    schema = csv_schema(table)
     reader = (
         spark.read.option("header", True)
         .option("mode", "PERMISSIVE")

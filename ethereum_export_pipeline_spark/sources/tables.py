@@ -70,13 +70,11 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def load_tables(spark: SparkSession, sf_dir: str,
-                names: tuple[str, ...] = TESTDATA_TABLES) -> dict[str, DataFrame]:
-    return {n: load_table(spark, sf_dir, n) for n in names}
+def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
+    return {n: load_table(spark, sf_dir, n) for n in TESTDATA_TABLES}
 
 
-def register_views(spark: SparkSession, sf_dir: str,
-                   names: tuple[str, ...] = TESTDATA_TABLES) -> None:
+def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Temp views over the corpus; idempotent per (session, sf_dir) —
     repeated catalog queries skip the 10 parquet-footer reads."""
     marker = "spark_graft.registered_dir"
@@ -85,6 +83,6 @@ def register_views(spark: SparkSession, sf_dir: str,
             return
     except Exception:
         pass
-    for n in names:
+    for n in TESTDATA_TABLES:
         load_table(spark, sf_dir, n).createOrReplaceTempView(n)
     spark.conf.set(marker, sf_dir)

@@ -33,6 +33,11 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from ..session import isolated_session
 
 WINDOW_US = 600_000_000  # 10-minute tumbling windows, µs
+HOP_US = WINDOW_US // 2  # hopping windows advance by half a window
+TRENDING_K = 2  # stream_trending keeps the top 2 event types per window
+CHAIN_BUCKET = 100  # stream_chain_counts groups blocks by number div this
+#: a bounded stream gets one state partition per this many input bytes
+STREAM_BYTES_PER_PARTITION = 4 << 20
 
 
 def _chain_session(spark: SparkSession) -> tuple[SparkSession, bool]:
@@ -93,8 +98,7 @@ def read_stream(spark: SparkSession, path: str,
     return reader.parquet(path)
 
 
-def bounded_stream_width(spark: SparkSession, path: str,
-                         bytes_per_partition: int = 4 << 20) -> int | None:
+def bounded_stream_width(spark: SparkSession, path: str) -> int | None:
     """State-partition width for a BOUNDED streaming run, sized to the
     input: every stateful operator commits one state store PER SHUFFLE
     PARTITION per micro-batch, so running a 2 MB fixture at the
@@ -114,19 +118,18 @@ def bounded_stream_width(spark: SparkSession, path: str,
     except OSError:
         return None
     sess_width = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    width = max(4, size // bytes_per_partition)
+    width = max(4, size // STREAM_BYTES_PER_PARTITION)
     return int(width) if width < sess_width else None
 
 
-def run_available_now(agg: DataFrame, name: str | None = None,
-                      output_mode: str = "complete",
+def run_available_now(agg: DataFrame, output_mode: str = "complete",
                       width: int | None = None) -> DataFrame:
     """Run a (possibly aggregating) streaming DataFrame to completion
     with availableNow + memory sink; return the result. ``width``
     overrides the state-partition count for this query (read from
     spark.sql.shuffle.partitions at query START; restored after)."""
     spark = agg.sparkSession
-    name = name or f"stream_sink_{uuid.uuid4().hex[:8]}"
+    name = f"stream_sink_{uuid.uuid4().hex[:8]}"
     old_width = spark.conf.get("spark.sql.shuffle.partitions")
     if width is not None:
         spark.conf.set("spark.sql.shuffle.partitions", str(width))
@@ -140,8 +143,7 @@ def run_available_now(agg: DataFrame, name: str | None = None,
     return spark.table(name)
 
 
-def stream_tumbling_counts(spark: SparkSession, events_path: str,
-                           window_us: int = WINDOW_US) -> DataFrame:
+def stream_tumbling_counts(spark: SparkSession, events_path: str) -> DataFrame:
     """Tumbling-window event counts computed BY THE STREAMING ENGINE —
     integer microsecond arithmetic on the normalized `ts_ns` (see
     `sources.tables.with_event_time`), grouped per window.
@@ -149,7 +151,7 @@ def stream_tumbling_counts(spark: SparkSession, events_path: str,
     from ..sources.tables import with_event_time
     sdf = with_event_time(read_stream(spark, events_path))
     agg = (
-        sdf.groupBy(F.expr(f"(ts_ns div 1000) div {window_us}").alias("win"))
+        sdf.groupBy(F.expr(f"(ts_ns div 1000) div {WINDOW_US}").alias("win"))
            .agg(F.count(F.lit(1)).alias("n"),
                 F.min("event_id").alias("first_event"),
                 F.max("event_id").alias("last_event"))
@@ -158,22 +160,20 @@ def stream_tumbling_counts(spark: SparkSession, events_path: str,
                              width=bounded_stream_width(spark, events_path))
 
 
-def stream_hopping_counts(spark: SparkSession, events_path: str,
-                          window_us: int = WINDOW_US,
-                          hop_us: int = WINDOW_US // 2) -> DataFrame:
+def stream_hopping_counts(spark: SparkSession, events_path: str) -> DataFrame:
     """Hopping (sliding) window counts by the streaming engine: each
-    event lands in window_us/hop_us overlapping windows, expressed as
+    event lands in WINDOW_US/HOP_US overlapping windows, expressed as
     an integer-arithmetic explode BEFORE the keyed aggregation (the
     same fan-out `F.window(slideDuration=...)` performs internally,
     kept in µs integers so the DuckDB oracle is exact)."""
-    n = window_us // hop_us
+    n = WINDOW_US // HOP_US
     from ..sources.tables import with_event_time
     sdf = with_event_time(read_stream(spark, events_path))
     fanned = sdf.select(
         "event_id",
         F.explode(F.expr(
             f"transform(sequence(0, {n - 1}), "
-            f"k -> ((ts_ns div 1000) div {hop_us} - k) * {hop_us})"))
+            f"k -> ((ts_ns div 1000) div {HOP_US} - k) * {HOP_US})"))
          .alias("win_start"),
     ).where(F.col("win_start") >= 0)
     agg = (fanned.groupBy("win_start")
@@ -185,7 +185,6 @@ def stream_hopping_counts(spark: SparkSession, events_path: str,
 
 
 def stream_watermark_counts(spark: SparkSession, events_path: str,
-                            window_us: int = WINDOW_US,
                             delay_s: int = 1800) -> DataFrame:
     """APPEND-mode tumbling counts behind a watermark — the
     bounded-state recipe for infinite streams (complete mode keeps
@@ -203,7 +202,7 @@ def stream_watermark_counts(spark: SparkSession, events_path: str,
     evt = sdf.select(F.expr("timestamp_micros(ts_ns div 1000)").alias("evt_ts"),
                      "event_id")
     agg = (evt.withWatermark("evt_ts", f"{delay_s} seconds")
-              .groupBy(F.window("evt_ts", f"{window_us // 1_000_000} seconds")
+              .groupBy(F.window("evt_ts", f"{WINDOW_US // 1_000_000} seconds")
                         .alias("w"))
               .agg(F.count(F.lit(1)).alias("n"),
                    F.min("event_id").alias("first_event"),
@@ -299,15 +298,14 @@ def incremental_convert(spark: SparkSession, src_dir: str, dest_dir: str,
     return spark.read.parquet(dest_dir).count() - n_before
 
 
-def windowed_counts_with_watermark(sdf: DataFrame, window: str = "10 minutes",
-                                   watermark: str = "30 minutes") -> DataFrame:
-    """Append-mode tumbling window counts with a watermark: rows later
-    than `watermark` behind the max seen event time are dropped, and a
+def windowed_counts_with_watermark(sdf: DataFrame) -> DataFrame:
+    """Append-mode 10-minute window counts with a 30-minute watermark:
+    rows later than that behind the max seen event time are dropped, and a
     window only emits once the watermark passes its end — the bounded-
     state recipe for infinite streams (complete mode would keep every
     window forever). Expects an event-time `ts` TIMESTAMP column."""
-    return (sdf.withWatermark("ts", watermark)
-               .groupBy(F.window("ts", window).alias("win"))
+    return (sdf.withWatermark("ts", "30 minutes")
+               .groupBy(F.window("ts", "10 minutes").alias("win"))
                .agg(F.count(F.lit(1)).alias("n"))
                .select(F.col("win.start").alias("win_start"), "n"))
 
@@ -315,7 +313,6 @@ def windowed_counts_with_watermark(sdf: DataFrame, window: str = "10 minutes",
 def stream_chain_export(spark: SparkSession, dest_dir: str,
                         checkpoint_dir: str, head: int,
                         plan: list[tuple[int, int]] | None = None,
-                        batch_size: int = 100,
                         timeout_s: float = 120.0) -> None:
     """Streaming form of the whole export (S1-stream → A2 layout):
     tail the chain source and land blocks into the reference's
@@ -331,7 +328,7 @@ def stream_chain_export(spark: SparkSession, dest_dir: str,
     spark, _ = _chain_session(spark)
     sdf = (spark.readStream.format("ethereum_chain")
                 .option("start", 0).option("head", head)
-                .option("batch_size", batch_size).load())
+                .option("batch_size", 100).load())
     start, end = range_cols("number", plan or default_export_plan())
     q = (sdf.select("*", start, end)
             .writeStream.format("parquet")
@@ -361,8 +358,7 @@ def stream_chain_export(spark: SparkSession, dest_dir: str,
 
 
 def stream_static_enrich(spark: SparkSession, events_path: str,
-                         dim: DataFrame, key: str = "user_id",
-                         seg_col: str = "segment") -> DataFrame:
+                         dim: DataFrame) -> DataFrame:
     """STREAM-STATIC enrichment join — the production shape where a
     fact stream is joined to a slowly-changing dimension table held as
     a broadcast (no state store involved: the static side is re-read
@@ -371,8 +367,8 @@ def stream_static_enrich(spark: SparkSession, events_path: str,
     the same inputs is the oracle."""
     from ..sources.tables import with_event_time
     sdf = with_event_time(read_stream(spark, events_path))
-    joined = sdf.join(F.broadcast(dim), key)
-    agg = (joined.groupBy(seg_col)
+    joined = sdf.join(F.broadcast(dim), "user_id")
+    agg = (joined.groupBy("segment")
                  .agg(F.count(F.lit(1)).alias("n"),
                       F.min("event_id").alias("first_event"),
                       F.max("event_id").alias("last_event")))
@@ -380,9 +376,7 @@ def stream_static_enrich(spark: SparkSession, events_path: str,
                              width=bounded_stream_width(spark, events_path))
 
 
-def stream_chain_counts(spark: SparkSession, head: int = 999,
-                        batch_size: int = 100,
-                        bucket: int = 100) -> DataFrame:
+def stream_chain_counts(spark: SparkSession, head: int = 999) -> DataFrame:
     """Streaming aggregation whose source is NOT a file directory: the
     registered `ethereum_chain` Python DataSourceStreamReader
     (sources/datasource.py) tails the chain — offsets are block
@@ -398,8 +392,8 @@ def stream_chain_counts(spark: SparkSession, head: int = 999,
     spark, isolated = _chain_session(spark)
     sdf = (spark.readStream.format("ethereum_chain")
                 .option("start", 0).option("head", head)
-                .option("batch_size", batch_size).load())
-    agg = (sdf.groupBy(F.expr(f"number div {bucket}").alias("bucket"))
+                .option("batch_size", 100).load())
+    agg = (sdf.groupBy(F.expr(f"number div {CHAIN_BUCKET}").alias("bucket"))
               .agg(F.count(F.lit(1)).alias("n_blocks"),
                    F.sum("gas_used").cast("long").alias("gas_used"),
                    F.sum("transaction_count").cast("long").alias("tx_count"),
@@ -511,8 +505,8 @@ def stream_interval_join_outer(spark: SparkSession, events_path: str,
                              width=bounded_stream_width(spark, events_path))
 
 
-def stream_dedup_within_watermark(spark: SparkSession, events_path: str,
-                                  delay_s: int = 3600) -> DataFrame:
+def stream_dedup_within_watermark(spark: SparkSession,
+                                  events_path: str) -> DataFrame:
     """Bounded-state streaming dedup via `dropDuplicatesWithinWatermark`
     — the production form of `stream_exact_dedup`: state for a key is
     DROPPED once the watermark passes its event time + delay, so an
@@ -528,7 +522,7 @@ def stream_dedup_within_watermark(spark: SparkSession, events_path: str,
     keyed = (sdf.select("user_id", "event_type",
                         F.expr("timestamp_micros(ts_ns div 1000)")
                          .alias("evt_ts"))
-                .withWatermark("evt_ts", f"{delay_s} seconds")
+                .withWatermark("evt_ts", "3600 seconds")
                 .dropDuplicatesWithinWatermark(["user_id", "event_type"])
                 .select("user_id", "event_type"))
     return run_available_now(keyed, output_mode="append",
@@ -536,9 +530,7 @@ def stream_dedup_within_watermark(spark: SparkSession, events_path: str,
 
 
 def incremental_rollup(spark: SparkSession, src_dir: str, dest_dir: str,
-                       checkpoint_dir: str,
-                       window_us: int = WINDOW_US,
-                       range_width: int = 1000) -> None:
+                       checkpoint_dir: str, range_width: int = 1000) -> None:
     """Incrementally-maintained rollup table (materialized-view
     maintenance without a table format): a streaming tumbling-count in
     UPDATE mode emits, per micro-batch, the windows whose totals
@@ -565,7 +557,7 @@ def incremental_rollup(spark: SparkSession, src_dir: str, dest_dir: str,
     AGGREGATE."""
     from ..sources.tables import with_event_time
     sdf = with_event_time(read_stream(spark, src_dir))
-    agg = (sdf.groupBy(F.expr(f"(ts_ns div 1000) div {window_us}")
+    agg = (sdf.groupBy(F.expr(f"(ts_ns div 1000) div {WINDOW_US}")
                         .alias("win"))
               .agg(F.count(F.lit(1)).alias("n")))
 
@@ -608,9 +600,8 @@ def incremental_rollup(spark: SparkSession, src_dir: str, dest_dir: str,
     q.awaitTermination()
 
 
-def stream_decontaminate(spark: SparkSession, docs_path: str,
-                         bits: list[int], bench_mod: int = 97,
-                         n: int = 3) -> DataFrame:
+def stream_decontaminate(spark: SparkSession, docs_path: str, bits: list[int],
+                         bench_mod: int = 97) -> DataFrame:
     """STATELESS streaming decontamination: documents stream in, each
     doc's distinct word n-gram shingles are built map-side as an
     ARRAY (no explode — the batch twin's exploded inverted index
@@ -627,8 +618,10 @@ def stream_decontaminate(spark: SparkSession, docs_path: str,
     nothing to evict), and throughput is the file-source scan rate.
     Benchmark docs themselves (doc_id % bench_mod == 0) are excluded
     from the stream: they define the filter."""
+    from ..operators.dedup import NGRAM_N
     from ..operators.sketch import bloom_hit_pred
     sdf = read_stream(spark, docs_path)
+    n = NGRAM_N  # the batch `shingles` width the benchmark filter holds
     joined = ", ".join(f"element_at(t, i + {k + 1})" for k in range(n))
     sh = (f"CASE WHEN size(t) < {n} THEN array() "
           f"ELSE array_distinct(transform(sequence(0, size(t) - {n}), "
@@ -684,8 +677,7 @@ def stream_crawl_gate(spark: SparkSession, docs_path: str,
                              width=bounded_stream_width(spark, docs_path))
 
 
-def stream_value_histogram(spark: SparkSession, events_path: str,
-                           window_us: int = WINDOW_US) -> DataFrame:
+def stream_value_histogram(spark: SparkSession, events_path: str) -> DataFrame:
     """Streaming histogram SKETCH — the streaming form of
     `q_sketch_percentiles`: per tumbling window, the log2-bucket
     histogram of the event's cents amount (bucket = bit length of the
@@ -700,7 +692,7 @@ def stream_value_histogram(spark: SparkSession, events_path: str,
     sdf = (with_event_time(read_stream(spark, events_path))
            .where(F.col("value").isNotNull()))
     agg = (sdf.groupBy(
-              F.expr(f"(ts_ns div 1000) div {window_us}").alias("win"),
+              F.expr(f"(ts_ns div 1000) div {WINDOW_US}").alias("win"),
               F.length(F.expr("bin(greatest("
                               "CAST(round(value * 100) AS BIGINT), 0L))"))
                .cast("long").alias("b"))
@@ -709,8 +701,7 @@ def stream_value_histogram(spark: SparkSession, events_path: str,
                              width=bounded_stream_width(spark, events_path))
 
 
-def stream_trending(spark: SparkSession, events_path: str,
-                    window_us: int = WINDOW_US, k: int = 2) -> DataFrame:
+def stream_trending(spark: SparkSession, events_path: str) -> DataFrame:
     """TRENDING detector — per tumbling window, the top-k event types
     by count (the "trending hashtags" product shape). Two layers, as
     production runs it:
@@ -729,7 +720,7 @@ def stream_trending(spark: SparkSession, events_path: str,
     from ..sources.tables import with_event_time
     sdf = with_event_time(read_stream(spark, events_path))
     agg = (sdf.groupBy(
-              F.expr(f"(ts_ns div 1000) div {window_us}").alias("win"),
+              F.expr(f"(ts_ns div 1000) div {WINDOW_US}").alias("win"),
               F.col("event_type"))
               .agg(F.count(F.lit(1)).alias("n")))
     out = run_available_now(agg,
@@ -737,6 +728,6 @@ def stream_trending(spark: SparkSession, events_path: str,
     w = Window.partitionBy("win").orderBy(F.col("n").desc(),
                                           F.col("event_type").asc())
     return (out.withColumn("rnk", F.row_number().over(w).cast("long"))
-               .where(F.col("rnk") <= k)
+               .where(F.col("rnk") <= TRENDING_K)
                .select("win", "event_type",
                        F.col("n").cast("long").alias("n"), "rnk"))

@@ -172,8 +172,7 @@ def cusum_alert_stream(spark: SparkSession, events_path: str) -> DataFrame:
 
 
 def run_cusum_checkpointed(spark: SparkSession, events_dir: str,
-                           checkpoint_dir: str,
-                           width: int = 4) -> list:
+                           checkpoint_dir: str) -> list:
     """ONE availableNow run of the CUSUM stream against a PERSISTENT
     checkpoint; returns the alert rows this run emitted. Stop, land
     more files in `events_dir`, call again (a fresh session each
@@ -187,12 +186,12 @@ def run_cusum_checkpointed(spark: SparkSession, events_dir: str,
 
     Recovery cost at scale: proportional to STATE size (one BIGINT
     per user here) + one checkpoint read per state partition — never
-    to history length; `width` pins the state-partition count on
+    to history length; the state-partition count (4) is pinned on
     first start (the checkpoint re-pins it on every restart, which is
-    why it is an explicit argument and not the session default)."""
+    why it is set here and not left to the session default)."""
     agg = cusum_alert_stream(spark, events_dir)
     # read_stream isolated the session: clamping width there is safe
-    agg.sparkSession.conf.set("spark.sql.shuffle.partitions", str(width))
+    agg.sparkSession.conf.set("spark.sql.shuffle.partitions", "4")
     rows: list = []
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:

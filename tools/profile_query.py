@@ -1,15 +1,13 @@
 """Per-query profiling harness for optimization work.
 
 Times individual catalog queries (noop sink, min-of-N) on the bench's
-session settings and optionally dumps `.explain("formatted")` text.
+session settings. For a query's plan, use tools/dump_explain.py.
 
 Usage:
-  python tools/profile_query.py [--sf DIR] [--runs N] [--explain OUTDIR] \
-      [--artifacts] <query ...>
+  python tools/profile_query.py [--sf DIR] [--runs N] <query ...>
 
 `artifact:<name>` rows time the shared-artifact builders (bench.py
-names). With --explain, each query's formatted plan is written to
-OUTDIR/<query>.txt (the judge-facing evidence files live in plans/r11/).
+names).
 """
 
 from __future__ import annotations
@@ -26,7 +24,6 @@ def main() -> int:
     ap.add_argument("--sf", default=os.environ.get("SPARK_GRAFT_SF_DIR",
                                                    "/root/testdata/sf0.1"))
     ap.add_argument("--runs", type=int, default=3)
-    ap.add_argument("--explain", default=None)
     args = ap.parse_args()
 
     sys.path.insert(0, os.path.dirname(os.path.dirname(
@@ -55,12 +52,6 @@ def main() -> int:
             arts[name](spark, args.sf)
             print(f"{name}: {time.time() - t0:.3f}s (build, 1 run)")
             continue
-        if args.explain:
-            df = qs[name](spark, args.sf)
-            os.makedirs(args.explain, exist_ok=True)
-            with open(os.path.join(args.explain, f"{name}.txt"), "w") as fh:
-                fh.write(df._sc._jvm.PythonSQLUtils.explainString(
-                    df._jdf.queryExecution(), "formatted"))
         spark.sparkContext.setJobDescription(name)
         best, times = float("inf"), []
         for _ in range(args.runs):

@@ -86,5 +86,6 @@ def tokens(col_name: str) -> Column:
     return F.expr(f"regexp_extract_all(lower({col_name}), '{TOKEN_RE}', 0)")
 
 
-def tokens_sql(expr: str) -> str:
-    return f"regexp_extract_all(lower({expr}), '{TOKEN_RE}')"
+def tokens_sql() -> str:
+    """DuckDB twin of `tokens("text")`."""
+    return f"regexp_extract_all(lower(text), '{TOKEN_RE}')"

@@ -71,9 +71,8 @@ def dedup_exact(df: DataFrame) -> DataFrame:
 
 # ---------------------------------------------------------- shingles
 
-def shingles(df: DataFrame, id_col: str = "doc_id",
-             text_col: str = "text") -> DataFrame:
-    """Distinct word n-gram shingles per document: (id, shingle).
+def shingles(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+    """Distinct word n-gram shingles of `text` per document: (id, shingle).
     Docs with fewer than n tokens contribute no shingles.
 
     Dedup happens per-document with `array_distinct` BEFORE the
@@ -88,7 +87,7 @@ def shingles(df: DataFrame, id_col: str = "doc_id",
         f"i -> concat_ws(' ', {joined}))) END"
     )
     return (
-        df.select(F.col(id_col), tokens(text_col).alias("t"))
+        df.select(F.col(id_col), tokens("text").alias("t"))
           .select(id_col, F.explode(F.expr(expr)).alias("shingle"))
     )
 
@@ -143,7 +142,7 @@ def _sized_shingles(df: DataFrame, max_shingle_df: int | None) -> DataFrame:
                   .select("doc_id", F.explode(F.expr(gen)).alias("_s"))
                   .select("doc_id", F.col("_s.shingle").alias("shingle"),
                           F.col("_s.sz").alias("sz")))
-    sh = shingles(df, "doc_id", "text")
+    sh = shingles(df, "doc_id")
     w_sh = Window.partitionBy("shingle")
     sh = (sh.withColumn("df", F.count(F.lit(1)).over(w_sh))
             .where(F.col("df") <= max_shingle_df).drop("df"))

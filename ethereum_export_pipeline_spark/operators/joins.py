@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 
 _TAG = "__asof_is_right"
+FUZZY_MAX_DIST = 2  # fuzzy_pairs keeps names within this many edits
 
 
 def asof_join(left: DataFrame, right: DataFrame, key: str, time: str,
@@ -136,12 +137,11 @@ def asof_join_bucketed(left: DataFrame, right: DataFrame, key: str, time: str,
     return out
 
 
-def fuzzy_pairs(df: DataFrame, id_col: str, name_col: str,
-                block_col, max_dist: int = 2,
+def fuzzy_pairs(df: DataFrame, block_col,
                 max_block: int | None = 10_000) -> DataFrame:
     """Record linkage by BLOCKING + edit distance — the entity-
     resolution staple (Fellegi–Sunter style candidate generation):
-    pair up rows whose `name_col` values are within `max_dist`
+    pair up rows (`id`, `name`) whose names are within `FUZZY_MAX_DIST`
     Levenshtein edits, considering ONLY pairs that share a blocking
     key (`block_col`, any deterministic Column — first token, sorted
     character sketch, phonetic code …). Exact matches (distance 0)
@@ -168,9 +168,9 @@ def fuzzy_pairs(df: DataFrame, id_col: str, name_col: str,
     band only pays when strings are long, and names stay short at any
     corpus scale, so the unbounded DP is kept; identical output rows
     were verified before reverting (count MATCH + oracle)."""
-    base = (df.where(F.col(name_col).isNotNull())
-              .select(F.col(id_col).alias("_id"),
-                      F.col(name_col).alias("_name"),
+    base = (df.where(F.col("name").isNotNull())
+              .select(F.col("id").alias("_id"),
+                      F.col("name").alias("_name"),
                       block_col.alias("_blk"))
               .where(F.col("_blk").isNotNull()))
     if max_block is not None:
@@ -187,5 +187,6 @@ def fuzzy_pairs(df: DataFrame, id_col: str, name_col: str,
              .where(F.col("id_a") < F.col("id_b"))
              .withColumn("dist",
                          F.levenshtein("name_a", "name_b").cast("long"))
-             .where((F.col("dist") >= 1) & (F.col("dist") <= max_dist))
+             .where((F.col("dist") >= 1)
+                    & (F.col("dist") <= FUZZY_MAX_DIST))
              .select("id_a", "id_b", "name_a", "name_b", "dist"))

@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 
 Z_BITS = 16  # per-dimension bits; 2 dims × 16 bits fit easily in int64
+Z_FILES = 16  # write_zordered's output file count
 
 
 def z_value_expr(x: str, y: str) -> Column:
@@ -34,11 +35,12 @@ def z_value_expr(x: str, y: str) -> Column:
     return F.expr(terms)
 
 
-def z_value_sql(x: str, y: str) -> str:
-    """DuckDB twin of `z_value_expr` (same shifts, masks, adds)."""
+def z_value_sql() -> str:
+    """DuckDB twin of `z_value_expr("l_partkey", "l_suppkey")` (same
+    shifts, masks, adds)."""
     terms = " + ".join(
-        f"(((CAST({x} AS BIGINT) >> {i}) & 1) << {2 * i}) + "
-        f"(((CAST({y} AS BIGINT) >> {i}) & 1) << {2 * i + 1})"
+        f"(((CAST(l_partkey AS BIGINT) >> {i}) & 1) << {2 * i}) + "
+        f"(((CAST(l_suppkey AS BIGINT) >> {i}) & 1) << {2 * i + 1})"
         for i in range(Z_BITS))
     return f"CAST({terms} AS BIGINT)"
 
@@ -111,16 +113,16 @@ def compaction_plan(files: DataFrame, target_bytes: int,
                           "first_file", "last_file"))
 
 
-def write_zordered(df: DataFrame, path: str, x: str, y: str,
-                   n_files: int = 16) -> None:
-    """Write `df` as parquet clustered on the (x, y) Morton curve:
-    range-partition on the z-key (one compact curve segment — a small
-    rectangle cover — per output file) and sort within partitions so
-    row-group stats are tight too. Readers need no special support:
-    plain min/max pruning on x and y now skips most files for box
-    predicates on either dimension."""
-    keyed = df.withColumn("__z", z_value_expr(x, y))
-    (keyed.repartitionByRange(n_files, "__z")
+def write_zordered(df: DataFrame, path: str) -> None:
+    """Write `df` as parquet clustered on the Morton curve of its
+    columns `x` and `y`: range-partition on the z-key into `Z_FILES`
+    files (one compact curve segment — a small rectangle cover — per
+    output file) and sort within partitions so row-group stats are
+    tight too. Readers need no special support: plain min/max pruning
+    on x and y now skips most files for box predicates on either
+    dimension."""
+    keyed = df.withColumn("__z", z_value_expr("x", "y"))
+    (keyed.repartitionByRange(Z_FILES, "__z")
           .sortWithinPartitions("__z")
           .drop("__z")
           .write.mode("overwrite").parquet(path))

@@ -37,12 +37,12 @@ def extract_column(df: DataFrame, column: str) -> DataFrame:
     return df.select(F.col(column).alias(column))
 
 
-def distinct_keys(df: DataFrame, column: str) -> DataFrame:
-    """A1 — `sort | uniq` as a hash-aggregate distinct. Catalyst picks
-    hash-agg over sort-dedup; at scale this is a map-side-combining
-    shuffle on the key — strictly better than the reference's full
-    global sort(1)."""
-    return df.select(column).distinct()
+def distinct_keys(df: DataFrame) -> DataFrame:
+    """A1 — `sort | uniq` of `token_address` as a hash-aggregate
+    distinct. Catalyst picks hash-agg over sort-dedup; at scale this
+    is a map-side-combining shuffle on the key — strictly better than
+    the reference's full global sort(1)."""
+    return df.select("token_address").distinct()
 
 
 @dataclass
@@ -79,7 +79,7 @@ def run_export_dag(chain: FixtureChain, start: int, end: int,
             res.contracts = chain.export_contracts(addrs)            # J2
 
     if export_tokens:
-        token_addrs = distinct_keys(transfers, "token_address")      # A1
+        token_addrs = distinct_keys(transfers)                       # A1
         res.tokens = chain.export_tokens(token_addrs)                # J3
 
     res.tables = {k: v for k, v in {

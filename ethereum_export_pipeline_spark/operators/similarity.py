@@ -58,6 +58,8 @@ N_PLANES = 16
 EMB_DIM = 64
 #: the query set of every top-k and recall report: the first ten vectors
 QUERY_PRED = "vec_id < 10"
+#: k of the IVF / IVF-PQ recall reports (the catalog's top-k depth)
+TOPK_K = 5
 #: brute force broadcasts its query set: more queries than this raise
 MAX_QUERIES = 10_000
 
@@ -77,9 +79,9 @@ def plane_signs(n_planes: int = N_PLANES, dim: int = EMB_DIM,
             for p in range(n_planes)]
 
 
-def quantize_expr(col: str) -> str:
-    """array<float> → array<bigint> of round(x·10⁴)."""
-    return (f"transform({col}, x -> "
+def quantize_expr() -> str:
+    """`embedding` array<float> → array<bigint> of round(x·10⁴)."""
+    return (f"transform(embedding, x -> "
             f"CAST(round(CAST(x AS DOUBLE) * {QUANT_SCALE}.0) AS BIGINT))")
 
 
@@ -91,7 +93,7 @@ def dot_expr(a: str, b: str) -> str:
 def with_quantized(df: DataFrame) -> DataFrame:
     """Adds qvec (quantized ints) and n2 (exact squared norm)."""
     return (
-        df.withColumn("qvec", F.expr(quantize_expr("embedding")))
+        df.withColumn("qvec", F.expr(quantize_expr()))
           .withColumn("n2", F.expr(dot_expr("qvec", "qvec")))
     )
 
@@ -1099,13 +1101,13 @@ HAM_BAND_BITS = 8                     # substring width (multi-index)
 HAM_BANDS = EMB_DIM // HAM_BAND_BITS  # 8 bands cover all 64 bits
 
 
-def hamming_band_expr(qvec_col: str, band: int) -> str:
+def hamming_band_expr(band: int) -> str:
     """SQL for one band's key: bit j of band b is [qvec[b·w+j] > 0]
     packed at position j — static expression text (no lambdas), the
     `lsh_bucket_expr` discipline, parses in Spark SQL and (with
     1-based indexing handled by the caller) DuckDB."""
     terms = [
-        f"(CASE WHEN element_at({qvec_col}, "
+        f"(CASE WHEN element_at(qvec, "
         f"{band * HAM_BAND_BITS + j + 1}) > 0 THEN {1 << j}L ELSE 0L END)"
         for j in range(HAM_BAND_BITS)
     ]
@@ -1123,7 +1125,7 @@ def with_binary_codes(df: DataFrame) -> DataFrame:
     base = with_quantized(spread(
         df.where(F.size(F.col("embedding")) == EMB_DIM)
           .select("vec_id", "embedding")))
-    band_cols = [F.expr(hamming_band_expr("qvec", b)).alias(f"band{b}")
+    band_cols = [F.expr(hamming_band_expr(b)).alias(f"band{b}")
                  for b in range(HAM_BANDS)]
     coded = base.select("vec_id", *band_cols)
     half = HAM_BANDS // 2
@@ -1524,7 +1526,7 @@ def mmr_rerank(df: DataFrame, k: int = 5, pool: int = MMR_POOL,
                       "cos_q", "mmr")
 
 
-def ivf_recall_report(df: DataFrame, centroids: list[list[int]], k: int = 5,
+def ivf_recall_report(df: DataFrame, centroids: list[list[int]],
                       exact: DataFrame | None = None) -> DataFrame:
     """`ann_recall_report`'s IVF sibling — recall@k of the nprobe=1
     IVF path against the exact top-k, the measurement that tunes the
@@ -1535,13 +1537,13 @@ def ivf_recall_report(df: DataFrame, centroids: list[list[int]], k: int = 5,
     agreement, recall_ppm = n_hits·10⁶ div k, exact integers — and
     the same shared-ground-truth `exact` hook as `ann_recall_report`."""
     if exact is None:
-        exact = brute_force_topk(df, k=k)
-    approx = ivf_topk(df, centroids, k=k)
-    return _recall_vs_exact(exact, approx, k)
+        exact = brute_force_topk(df, k=TOPK_K)
+    approx = ivf_topk(df, centroids, k=TOPK_K)
+    return _recall_vs_exact(exact, approx, TOPK_K)
 
 
 def pq_recall_report(df: DataFrame, centroids: list[list[int]],
-                     codebooks: list[list[list[int]]], k: int = 5,
+                     codebooks: list[list[list[int]]],
                      exact: DataFrame | None = None) -> DataFrame:
     """Completes the recall-measurement trio (LSH bands →
     `ann_recall_report`, IVF cells → `ivf_recall_report`, PQ codes →
@@ -1552,6 +1554,6 @@ def pq_recall_report(df: DataFrame, centroids: list[list[int]],
     contract: bounded query sample, set membership, exact ppm — and
     the same shared-ground-truth `exact` hook as `ann_recall_report`."""
     if exact is None:
-        exact = brute_force_topk(df, k=k)
-    approx = ivfpq_topk(df, centroids, codebooks, k=k)
-    return _recall_vs_exact(exact, approx, k)
+        exact = brute_force_topk(df, k=TOPK_K)
+    approx = ivfpq_topk(df, centroids, codebooks, k=TOPK_K)
+    return _recall_vs_exact(exact, approx, TOPK_K)

@@ -33,20 +33,22 @@ from ..functions import (MERSENNE31, affine_hash, affine_hash_sql, h32,
 
 #: h60 draws 15 hex chars = 60 bits; hashes are uniform on [0, 2^60).
 H60_MAX = 1 << 60
+#: KMV sketch size (hashes kept per group)
+SKETCH_K = 32
 
 
-def _estimate(kth_col: str, n_col: str, k: int):
+def _estimate(k: int):
     """KMV estimator as ONE fixed float64 expression over exact ints
     (cross-engine deterministic per plans/base.py rules). Groups with
     fewer than k distinct keys are exact: the sketch IS the key set."""
     return F.when(
-        F.col(n_col) < k, F.col(n_col).cast("double")
+        F.col("n_kept") < k, F.col("n_kept").cast("double")
     ).otherwise(F.lit(float(k - 1)) * F.lit(float(H60_MAX))
-                / F.col(kth_col).cast("double"))
+                / F.col("kth_min").cast("double"))
 
 
 def kmv_sketch(df: DataFrame, group_col: str = "source", key_col: str = "text",
-               k: int = 32) -> DataFrame:
+               k: int = SKETCH_K) -> DataFrame:
     """Per-group KMV distinct-count sketch + the merged global sketch.
 
     Returns one row per group plus one `__ALL__` row:
@@ -83,14 +85,14 @@ def kmv_sketch(df: DataFrame, group_col: str = "source", key_col: str = "text",
         F.col("grp").alias(group_col),
         F.col("n_kept").cast("long").alias("n_kept"),
         F.col("kth_min").cast("long").alias("kth_min"),
-        _estimate("kth_min", "n_kept", k).alias("est_distinct"))
+        _estimate(k).alias("est_distinct"))
 
 
-def kmv_sketch_sql(k: int = 32) -> str:
+def kmv_sketch_sql() -> str:
     """DuckDB twin of `kmv_sketch` — identical hashes, order
     statistics, and the single estimator float expression."""
-    est = (f"CASE WHEN n_kept < {k} THEN CAST(n_kept AS DOUBLE) "
-           f"ELSE CAST({float(k - 1)} AS DOUBLE) * {float(H60_MAX)}"
+    est = (f"CASE WHEN n_kept < {SKETCH_K} THEN CAST(n_kept AS DOUBLE) "
+           f"ELSE CAST({float(SKETCH_K - 1)} AS DOUBLE) * {float(H60_MAX)}"
            f" / CAST(kth_min AS DOUBLE) END")
     return f"""
 WITH hashes AS (
@@ -99,14 +101,14 @@ WITH hashes AS (
 ), kept AS (
   SELECT grp, h FROM (
     SELECT grp, h, row_number() OVER (PARTITION BY grp ORDER BY h) AS rk
-    FROM hashes) WHERE rk <= {k}
+    FROM hashes) WHERE rk <= {SKETCH_K}
 ), per_group AS (
   SELECT grp, count(*) AS n_kept, max(h) AS kth_min FROM kept GROUP BY 1
 ), merged AS (
   SELECT '__ALL__' AS grp, count(*) AS n_kept, max(h) AS kth_min
   FROM (SELECT h FROM (
           SELECT h, row_number() OVER (ORDER BY h) AS rk
-          FROM (SELECT DISTINCT h FROM kept)) WHERE rk <= {k})
+          FROM (SELECT DISTINCT h FROM kept)) WHERE rk <= {SKETCH_K})
 )
 SELECT grp AS source, CAST(n_kept AS BIGINT) AS n_kept,
        CAST(kth_min AS BIGINT) AS kth_min, {est} AS est_distinct
@@ -178,9 +180,9 @@ def bloom_probe(df: DataFrame, limbs: DataFrame) -> DataFrame:
                   .agg((F.min("_ok") == 1).cast("long").alias("bloom_hit")))
 
 
-def bloom_positions_sql(expr: str) -> str:
-    """DuckDB list of the same k positions."""
-    h = h32_sql(expr)
+def bloom_positions_sql() -> str:
+    """DuckDB list of the same k positions of `shingle`."""
+    h = h32_sql("shingle")
     return ("[" + ", ".join(
         f"({affine_hash_sql(h, a, b)}) % {BLOOM_M}"
         for a, b in BLOOM_FAMILY) + "]")
@@ -196,7 +198,7 @@ def bloom_bits(limbs: DataFrame) -> list[int]:
     return [int(rows.get(i, 0)) for i in range(BLOOM_M // _LIMB_BITS)]
 
 
-def bloom_hit_expr(key_expr: str, bits: list[int]):
+def bloom_hit_expr(bits: list[int]):
     """MAP-SIDE probe: all-k-bits-set as one codegen'd boolean over
     the filter as a plan literal — zero joins, zero shuffle, the
     shape that makes bloom pre-filtering free at 100 TB (the
@@ -205,8 +207,9 @@ def bloom_hit_expr(key_expr: str, bits: list[int]):
     per-position verdict re-aggregation shuffles 768 MB where this
     form shuffles nothing). The all-literal array constant-folds to
     ONE Literal per occurrence — no per-row allocation (the
-    `ivf_cell_col` lesson). Returns a 0/1 long Column."""
-    return F.expr(f"CAST(({bloom_hit_pred(key_expr, bits)}) AS BIGINT)")
+    `ivf_cell_col` lesson). Returns a 0/1 long Column of `shingle`'s
+    verdict."""
+    return F.expr(f"CAST(({bloom_hit_pred('shingle', bits)}) AS BIGINT)")
 
 
 def bloom_hit_pred(key_expr: str, bits: list[int]) -> str:
@@ -329,7 +332,7 @@ def cms_heavy_hitters_sql() -> str:
         for r, (a, b) in enumerate(CMS_FAMILY[:CMS_D]))
     return f"""
 WITH occ AS (
-  SELECT unnest({tokens_sql('text')}) AS tok
+  SELECT unnest({tokens_sql()}) AS tok
   FROM documents WHERE text IS NOT NULL
 ),
 hashed AS (SELECT {h32_sql('tok')} AS h FROM occ),
@@ -381,9 +384,9 @@ AMS_CELL_FAMILY = hash_family(AMS_D, seed=41)
 AMS_SIGN_FAMILY = hash_family(AMS_D, seed=53)
 
 
-def ams_sketch(df: DataFrame, key_col: str = "k") -> DataFrame:
+def ams_sketch(df: DataFrame) -> DataFrame:
     """Build the d×w signed sketch from a key-occurrence frame (one
-    row per key OCCURRENCE, multiplicities included): returns
+    row per key `k` OCCURRENCE, multiplicities included): returns
     (r, c, s) with at most d·w rows, where s = Σ sign(key) over the
     occurrences hashing to cell (r, c).
 
@@ -407,7 +410,7 @@ def ams_sketch(df: DataFrame, key_col: str = "k") -> DataFrame:
             .cast("long").alias("s"))
         for (ca, cb), (sa, sb) in zip(AMS_CELL_FAMILY[:AMS_D],
                                       AMS_SIGN_FAMILY[:AMS_D])])
-    return (df.select(h32(F.col(key_col)).alias("__h"))
+    return (df.select(h32(F.col("k")).alias("__h"))
               .select(F.posexplode(entries).alias("r", "e"))
               .select("r", "e.c", "e.s")
               .groupBy("r", "c")
@@ -478,13 +481,13 @@ def _ams_cells_sql(src: str) -> str:
         in enumerate(zip(AMS_CELL_FAMILY[:AMS_D], AMS_SIGN_FAMILY[:AMS_D])))
 
 
-def ams_join_size_sql(table_a: str, key_a: str, table_b: str,
-                      key_b: str) -> str:
-    """DuckDB twin of `ams_join_size`: identical affine cell/sign
-    hashes, identical median-of-depths element."""
+def ams_join_size_sql() -> str:
+    """DuckDB twin of `ams_join_size` over orders.o_orderkey ⋈
+    lineitem.l_orderkey: identical affine cell/sign hashes, identical
+    median-of-depths element."""
     return f"""
-WITH ha AS (SELECT {h32_sql(key_a)} AS h FROM {table_a}),
-hb AS (SELECT {h32_sql(key_b)} AS h FROM {table_b}),
+WITH ha AS (SELECT {h32_sql('o_orderkey')} AS h FROM orders),
+hb AS (SELECT {h32_sql('l_orderkey')} AS h FROM lineitem),
 ca AS (
 {_ams_cells_sql('ha')}
 ),
@@ -503,10 +506,10 @@ e AS (
   WHERE rk = {(AMS_D + 1) // 2}),
 x AS (
   SELECT CAST(COALESCE(sum(na.n * nb.n), 0) AS BIGINT) AS exact_pairs
-  FROM (SELECT {key_a} AS k, CAST(count(*) AS BIGINT) AS n
-        FROM {table_a} GROUP BY 1) na(k, n)
-  JOIN (SELECT {key_b} AS k, CAST(count(*) AS BIGINT) AS n
-        FROM {table_b} GROUP BY 1) nb(k, n) ON na.k = nb.k)
+  FROM (SELECT o_orderkey AS k, CAST(count(*) AS BIGINT) AS n
+        FROM orders GROUP BY 1) na(k, n)
+  JOIN (SELECT l_orderkey AS k, CAST(count(*) AS BIGINT) AS n
+        FROM lineitem GROUP BY 1) nb(k, n) ON na.k = nb.k)
 SELECT est_pairs, exact_pairs,
        CASE WHEN exact_pairs = 0 THEN 0 ELSE
             abs(est_pairs - exact_pairs) * 1000000 // exact_pairs END
@@ -629,7 +632,7 @@ def hll_sketch_sql() -> str:
     `documents.text`, grouped by `source`."""
     from ..functions import tokens_sql
     occ_cte = ("SELECT source AS grp, "
-               f"unnest({tokens_sql('text')}) AS k "
+               f"unnest({tokens_sql()}) AS k "
                "FROM documents WHERE text IS NOT NULL "
                "AND source IS NOT NULL")
     rcap, m = HLL_RCAP, HLL_M
@@ -675,7 +678,7 @@ FROM summed s JOIN exact e USING (grp)
 """
 
 
-def kmv_pair_overlap(df: DataFrame, k: int = 32) -> DataFrame:
+def kmv_pair_overlap(df: DataFrame, k: int = SKETCH_K) -> DataFrame:
     """Pairwise set-INTERSECTION estimates between groups from their
     KMV sketches alone — the sketch-algebra capability that makes
     sketches a corpus-accounting tool rather than a single statistic
@@ -744,12 +747,12 @@ def kmv_pair_overlap(df: DataFrame, k: int = 32) -> DataFrame:
                        "n_both", "est_union", "est_inter"))
 
 
-def kmv_pair_overlap_sql(k: int = 32) -> str:
+def kmv_pair_overlap_sql() -> str:
     """DuckDB twin of `kmv_pair_overlap` — identical order statistics
     and the same two fixed float expressions."""
-    est_u = (f"CASE WHEN n_union_kept < {k} "
+    est_u = (f"CASE WHEN n_union_kept < {SKETCH_K} "
              f"THEN CAST(n_union_kept AS DOUBLE) "
-             f"ELSE CAST({float(k - 1)} AS DOUBLE) * {float(H60_MAX)}"
+             f"ELSE CAST({float(SKETCH_K - 1)} AS DOUBLE) * {float(H60_MAX)}"
              f" / CAST(kth_min AS DOUBLE) END")
     return f"""
 WITH hashes AS (
@@ -760,7 +763,7 @@ WITH hashes AS (
 kept AS (
   SELECT grp, h FROM (
     SELECT grp, h, row_number() OVER (PARTITION BY grp ORDER BY h) AS rk
-    FROM hashes) WHERE rk <= {k}
+    FROM hashes) WHERE rk <= {SKETCH_K}
 ),
 gs AS (SELECT DISTINCT grp FROM kept),
 pairs AS (SELECT a.grp AS grp_a, b.grp AS grp_b
@@ -778,7 +781,7 @@ sk AS (
   SELECT * FROM (
     SELECT grp_a, grp_b, h, in_a, in_b,
            row_number() OVER (PARTITION BY grp_a, grp_b ORDER BY h) AS rk
-    FROM u) WHERE rk <= {k}
+    FROM u) WHERE rk <= {SKETCH_K}
 ),
 agg AS (
   SELECT grp_a, grp_b, CAST(count(*) AS BIGINT) AS n_union_kept,

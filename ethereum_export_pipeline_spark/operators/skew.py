@@ -52,36 +52,36 @@ def salted_agg(df: DataFrame, key: str, partials: list[tuple[Column, str]],
     return phase1.groupBy(key).agg(*[e.alias(a) for e, a in finals])
 
 
-def salted_join(big: DataFrame, small: DataFrame, key: str,
+def salted_join(big: DataFrame, small: DataFrame,
                 hot_keys: DataFrame | None = None,
-                n_salts: int = DEFAULT_SALTS,
-                salt_src: str | None = None) -> DataFrame:
-    """Inner equi-join with hot keys spread over `n_salts` tasks.
+                n_salts: int = DEFAULT_SALTS) -> DataFrame:
+    """Inner equi-join on column `k` with hot keys spread over
+    `n_salts` tasks.
 
-    `hot_keys` (one column `key`) marks the keys to salt; None salts
+    `hot_keys` (one column `k`) marks the keys to salt; None salts
     everything (small side explodes n_salts-fold — only sensible when
     `small` is modest but above the broadcast threshold). The big side
-    gets one salted copy of itself (salt varies per ROW — `salt_src`
-    semantics as `with_salt`); the small side replicates hot rows
-    across all salts so every (key, salt) partition finds its match.
+    gets one salted copy of itself (salt varies per ROW — hashed from
+    its column `v` as in `with_salt`); the small side replicates hot
+    rows across all salts so every (k, salt) partition finds its match.
     """
-    b = with_salt(big, salt_src, n_salts)
+    b = with_salt(big, "v", n_salts)
     salts = F.array(*[F.lit(i) for i in range(n_salts)])
     if hot_keys is not None:
         # non-hot keys collapse to salt 0 on both sides (a NULL salt
         # would never equi-join); hot keys use the full salt range
-        hot = hot_keys.select(F.col(key)).distinct().withColumn("__hot", F.lit(1))
-        s = (small.join(F.broadcast(hot), key, "left")
+        hot = hot_keys.select(F.col("k")).distinct().withColumn("__hot", F.lit(1))
+        s = (small.join(F.broadcast(hot), "k", "left")
                   .withColumn("__salts",
                               F.when(F.col("__hot").isNotNull(), salts)
                                .otherwise(F.array(F.lit(0))))
                   .drop("__hot"))
-        hot_b = hot.select(F.col(key).alias("__hk"), "__hot")
-        b = (b.join(F.broadcast(hot_b), b[key] == F.col("__hk"), "left")
+        hot_b = hot.select(F.col("k").alias("__hk"), "__hot")
+        b = (b.join(F.broadcast(hot_b), b["k"] == F.col("__hk"), "left")
                .withColumn("__salt", F.when(F.col("__hot").isNotNull(),
                                             F.col("__salt")).otherwise(F.lit(0)))
                .drop("__hk", "__hot"))
     else:
         s = small.withColumn("__salts", salts)
     s = s.withColumn("__salt", F.explode("__salts")).drop("__salts")
-    return b.join(s, [key, "__salt"]).drop("__salt")
+    return b.join(s, ["k", "__salt"]).drop("__salt")

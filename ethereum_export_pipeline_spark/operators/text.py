@@ -43,9 +43,9 @@ def with_tokens(df: DataFrame) -> DataFrame:
     return df.withColumn(TOKENS_COL, tokens("text"))
 
 
-def _in_list(col: str, words: list[str]) -> str:
+def _in_list(words: list[str]) -> str:
     quoted = ", ".join(f"'{w}'" for w in words)
-    return f"size(filter({col}, x -> x IN ({quoted})))"
+    return f"size(filter({TOKENS_COL}, x -> x IN ({quoted})))"
 
 
 def language_id(df: DataFrame, keep: tuple[str, ...] = ()) -> DataFrame:
@@ -58,7 +58,7 @@ def language_id(df: DataFrame, keep: tuple[str, ...] = ()) -> DataFrame:
     stream can't self-join on doc_id the way the batch funnel does)."""
     d = with_tokens(df)
     langs = sorted(STOPWORDS)  # tie-break order: code ascending
-    hits = [F.expr(_in_list(TOKENS_COL, STOPWORDS[lg])).cast("long").alias(f"hits_{lg}")
+    hits = [F.expr(_in_list(STOPWORDS[lg])).cast("long").alias(f"hits_{lg}")
             for lg in langs]
     d = d.select(F.col("doc_id"), *hits, *[F.col(c) for c in keep])
     best = F.greatest(*[F.col(f"hits_{lg}") for lg in langs])
@@ -74,6 +74,11 @@ def language_id(df: DataFrame, keep: tuple[str, ...] = ()) -> DataFrame:
         *[F.col(c) for c in keep])
 
 
+#: the crawl funnel's admission gate (the batch funnel and the stream gate)
+FUNNEL_MIN_TOKENS = 20
+FUNNEL_MIN_QUALITY = 0.55
+
+
 def quality_score(df: DataFrame, keep: tuple[str, ...] = ()) -> DataFrame:
     """Heuristic document quality: length, token stats, alnum ratio,
     stopword ratio, composite score. All ratios are double arithmetic
@@ -84,7 +89,7 @@ def quality_score(df: DataFrame, keep: tuple[str, ...] = ()) -> DataFrame:
     n_tokens = F.size(F.col(TOKENS_COL)).cast("long")
     tok_chars = F.expr(f"aggregate({TOKENS_COL}, 0L, (a, x) -> a + length(x))")
     alnum = F.length(F.regexp_replace(F.lower(F.col("text")), "[^a-z0-9]", ""))
-    stop_hits = F.expr(_in_list(TOKENS_COL, STOPWORDS["en"])).cast("long")
+    stop_hits = F.expr(_in_list(STOPWORDS["en"])).cast("long")
     d = d.select(
         F.col("doc_id"),
         n_chars.alias("n_chars"),
@@ -1194,6 +1199,12 @@ def dsir_weights(df: DataFrame, scores: list[int]) -> DataFrame:
                     F.expr(wexpr).alias("dsir_weight_ppm")))
 
 
+#: The graded phrase — two high-df fixture tokens, so the query
+#: exercises real multi-hit documents (random token soup makes any
+#: fixed bigram appear ~1/|vocab|^2 per position).
+PHRASE = ["hash", "join"]
+
+
 def phrase_hits(df: DataFrame, phrase: list[str]) -> DataFrame:
     """Exact phrase search — all occurrences of a consecutive-token
     phrase, entirely INSIDE the scan (the Spark-first form: a
@@ -1243,28 +1254,33 @@ def phrase_hits(df: DataFrame, phrase: list[str]) -> DataFrame:
               .select("doc_id", "_r.n_hits", "_r.first_pos"))
 
 
-def phrase_hits_sql(phrase: list[str]) -> str:
-    """DuckDB twin of `phrase_hits` — same candidate-offset lambda,
-    1-based list indexing (i runs over 1-based starts; emitted
-    first_pos converts back to the 0-based contract)."""
+def phrase_hits_sql() -> str:
+    """DuckDB twin of `phrase_hits` over `PHRASE` — same candidate-
+    offset lambda, 1-based list indexing (i runs over 1-based starts;
+    emitted first_pos converts back to the 0-based contract)."""
     from ..functions import tokens_sql
     conds = " AND ".join(
-        f"_t[i + {j}] = '{w}'" for j, w in enumerate(phrase))
+        f"_t[i + {j}] = '{w}'" for j, w in enumerate(PHRASE))
     return f"""
 WITH toked AS (
-  SELECT doc_id AS doc_id, {tokens_sql('text')} AS _t
+  SELECT doc_id AS doc_id, {tokens_sql()} AS _t
   FROM documents WHERE text IS NOT NULL
 ),
 hits AS (
   SELECT doc_id,
-         list_filter(range(1, len(_t) - {len(phrase)} + 2),
+         list_filter(range(1, len(_t) - {len(PHRASE)} + 2),
                      i -> {conds}) AS _s
-  FROM toked WHERE len(_t) >= {len(phrase)}
+  FROM toked WHERE len(_t) >= {len(PHRASE)}
 )
 SELECT doc_id AS doc_id, CAST(len(_s) AS BIGINT) AS n_hits,
        CAST(_s[1] - 1 AS BIGINT) AS first_pos
 FROM hits WHERE len(_s) > 0
 """
+
+
+#: 4 phrases present in the fixture corpus + 1 absent (the miss path)
+BLOCKLIST = ["table hash", "customer join", "slow key",
+             "merge group", "quantum leap"]
 
 
 def blocklist_hits(df: DataFrame, phrases: list[str]) -> DataFrame:
@@ -1318,7 +1334,10 @@ def blocklist_hits(df: DataFrame, phrases: list[str]) -> DataFrame:
               .select("doc_id", "_r.n_hits", "_r.hits"))
 
 
-def vocab_coverage(df: DataFrame, vocab_size: int = 16) -> DataFrame:
+VOCAB_SIZE = 16  # fixture vocabulary is 31 terms; V=16 keeps OOV live
+
+
+def vocab_coverage(df: DataFrame, vocab_size: int = VOCAB_SIZE) -> DataFrame:
     """Vocabulary-coverage / OOV-rate audit — the pre-tokenizer-
     training question "how much of each document does a top-V
     vocabulary actually cover?" (high OOV docs are the ones a
@@ -1358,12 +1377,13 @@ def vocab_coverage(df: DataFrame, vocab_size: int = 16) -> DataFrame:
                        .alias("oov_ppm")))
 
 
-def vocab_coverage_sql(vocab_size: int = 16) -> str:
-    """DuckDB twin of `vocab_coverage` — same top-V convention."""
+def vocab_coverage_sql() -> str:
+    """DuckDB twin of `vocab_coverage` at `VOCAB_SIZE` — same top-V
+    convention."""
     from ..functions import tokens_sql
     return f"""
 WITH toked AS (
-  SELECT doc_id AS doc_id, {tokens_sql('text')} AS _t
+  SELECT doc_id AS doc_id, {tokens_sql()} AS _t
   FROM documents WHERE text IS NOT NULL
 ),
 tc AS (SELECT doc_id, unnest(_t) AS term FROM toked),
@@ -1372,7 +1392,7 @@ tcc AS (SELECT doc_id, term, CAST(count(*) AS BIGINT) AS n
 vc AS (SELECT term, CAST(sum(n) AS BIGINT) AS cnt FROM tcc GROUP BY 1),
 vocab AS (SELECT term FROM (
   SELECT term, row_number() OVER (ORDER BY cnt DESC, term ASC) AS rk
-  FROM vc) WHERE rk <= {vocab_size}),
+  FROM vc) WHERE rk <= {VOCAB_SIZE}),
 agg AS (
   SELECT tcc.doc_id, CAST(sum(n) AS BIGINT) AS n_tokens,
          CAST(sum(CASE WHEN v.term IS NULL THEN n ELSE 0 END) AS BIGINT)
@@ -1384,15 +1404,15 @@ FROM agg
 """
 
 
-def blocklist_hits_sql(phrases: list[str]) -> str:
-    """DuckDB twin of `blocklist_hits` — same padded-token-join
-    containment over the same literal list."""
+def blocklist_hits_sql() -> str:
+    """DuckDB twin of `blocklist_hits` over `BLOCKLIST` — same
+    padded-token-join containment over the same literal list."""
     from ..functions import tokens_sql
-    lits = ", ".join(f"' {p} '" for p in phrases)
+    lits = ", ".join(f"' {p} '" for p in BLOCKLIST)
     return f"""
 WITH pad AS (
   SELECT doc_id AS doc_id,
-         ' ' || array_to_string({tokens_sql('text')}, ' ') || ' ' AS _pad
+         ' ' || array_to_string({tokens_sql()}, ' ') || ' ' AS _pad
   FROM documents WHERE text IS NOT NULL
 ),
 h AS (
@@ -1404,6 +1424,10 @@ SELECT doc_id AS doc_id, CAST(len(_h) AS BIGINT) AS n_hits,
        array_to_string(list_transform(_h, p -> trim(p)), '|') AS hits
 FROM h WHERE len(_h) > 0
 """
+
+
+#: 3 entity terms present in the fixture corpus + 1 absent (miss path)
+PSEUDONYM_TERMS = ["customer", "supplier", "spark", "quantumleap"]
 
 
 def pseudonymize_terms(df: DataFrame, terms: list[str]) -> DataFrame:
@@ -1451,15 +1475,16 @@ def pseudonymize_terms(df: DataFrame, terms: list[str]) -> DataFrame:
                       "_r.clean_text"))
 
 
-def pseudonymize_terms_sql(terms: list[str]) -> str:
-    """DuckDB twin of `pseudonymize_terms` — same tokenize, same IN
-    probe, same md5 surrogates (1-based list lambdas; empty-list
-    array_to_string coalesced: DuckDB returns NULL, Spark '')."""
+def pseudonymize_terms_sql() -> str:
+    """DuckDB twin of `pseudonymize_terms` over `PSEUDONYM_TERMS` —
+    same tokenize, same IN probe, same md5 surrogates (1-based list
+    lambdas; empty-list array_to_string coalesced: DuckDB returns
+    NULL, Spark '')."""
     from ..functions import tokens_sql
-    lits = ", ".join(f"'{t}'" for t in terms)
+    lits = ", ".join(f"'{t}'" for t in PSEUDONYM_TERMS)
     return f"""
 WITH b AS (
-  SELECT doc_id AS doc_id, {tokens_sql('text')} AS _t
+  SELECT doc_id AS doc_id, {tokens_sql()} AS _t
   FROM documents WHERE text IS NOT NULL
 )
 SELECT doc_id AS doc_id,

@@ -48,17 +48,20 @@ def default_export_plan() -> list[tuple[int, int]]:
     return plan
 
 
-def volume_balanced_plan(end: int,
-                         tiers: list[tuple[int, int]] | None = None) -> list[tuple[int, int]]:
-    """Generalized constructor: ``tiers`` is a list of
-    (tier_upper_bound_exclusive, batch_width); e.g. the reference plan is
-    [(1_000_000, 1_000_000), (4_000_000, 100_000), (5_000_000, 10_000)].
-    """
-    if tiers is None:
-        tiers = [(1_000_000, 1_000_000), (4_000_000, 100_000), (5_000_000, 10_000)]
+#: (tier_upper_bound_exclusive, batch_width) of the volume-balanced
+#: plan over the o_orderkey domain — the same ragged-tier semantics as
+#: the reference's block plan (config.py:3-14, whose tiers would be
+#: [(1_000_000, 1_000_000), (4_000_000, 100_000), (5_000_000, 10_000)]):
+#: one wide leading range, then fixed-width tails.
+KEY_TIERS = [(65_536, 65_536), (2 ** 24, 4_096)]
+
+
+def volume_balanced_plan(end: int) -> list[tuple[int, int]]:
+    """`KEY_TIERS` as inclusive (lo, hi) ranges over [0, end]; past the
+    last tier the last width repeats."""
     plan: list[tuple[int, int]] = []
     lo = 0
-    for bound, width in tiers:
+    for bound, width in KEY_TIERS:
         hi = min(bound, end + 1)
         if lo < hi:
             plan += list(split_to_batches(lo, hi - 1, width))
@@ -66,7 +69,7 @@ def volume_balanced_plan(end: int,
         if lo > end:
             break
     if lo <= end:
-        plan += list(split_to_batches(lo, end, tiers[-1][1]))
+        plan += list(split_to_batches(lo, end, KEY_TIERS[-1][1]))
     return plan
 
 
@@ -80,7 +83,7 @@ def pad8_col(c: Column | str) -> Column:
     return F.lpad(F.col(c) if isinstance(c, str) else c, PAD, "0")
 
 
-def partition_path(table: str, start: int, end: int, root: str = "") -> str:
+def partition_path(table: str, start: int, end: int, root: str) -> str:
     """Hive-style path `{root}/{table}/start_block=%08d/end_block=%08d`
     (templates/export_pipeline_template.py:17-24 layout)."""
     return f"{root.rstrip('/')}/{table}/start_block={pad8(start)}/end_block={pad8(end)}"

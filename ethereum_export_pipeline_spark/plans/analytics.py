@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..artifacts import artifact
+from ..operators.joins import FUZZY_MAX_DIST, fuzzy_pairs
 from ..sources.tables import load_table, register_views
 from .base import Query, cents, qty, revenue_e4
 
@@ -36,7 +37,7 @@ def _pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.where(F.col("l_shipdate") <= F.lit(CUTOFF).cast("timestamp_ntz"))
           .groupBy("l_returnflag", "l_linestatus")
           .agg(
-              F.expr(f"CAST(sum({qty('l_quantity')}) AS BIGINT)").alias("sum_qty"),
+              F.expr(f"CAST(sum({qty()}) AS BIGINT)").alias("sum_qty"),
               F.expr(f"CAST(sum({cents('l_extendedprice')}) AS BIGINT)").alias("sum_base_cents"),
               F.expr(f"CAST(sum({revenue_e4()}) AS BIGINT)").alias("sum_disc_e4"),
               F.expr(f"CAST(sum({revenue_e4()} * (100 + {cents('l_tax')})) AS BIGINT)").alias("sum_charge_e6"),
@@ -58,7 +59,7 @@ SELECT l_returnflag, l_linestatus, sum_qty, sum_base_cents, sum_disc_e4,
        sum_base_cents / n_rows / 100.0 AS avg_price
 FROM (
   SELECT l_returnflag, l_linestatus,
-         CAST(sum({qty('l_quantity')}) AS BIGINT) AS sum_qty,
+         CAST(sum({qty()}) AS BIGINT) AS sum_qty,
          CAST(sum({cents('l_extendedprice')}) AS BIGINT) AS sum_base_cents,
          CAST(sum({revenue_e4()}) AS BIGINT) AS sum_disc_e4,
          CAST(sum({revenue_e4()} * (100 + {cents('l_tax')})) AS BIGINT) AS sum_charge_e6,
@@ -594,16 +595,16 @@ def _having_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     return (
         li.groupBy("l_partkey")
-          .agg(F.expr(f"CAST(sum({qty('l_quantity')}) AS BIGINT)").alias("total_qty"),
+          .agg(F.expr(f"CAST(sum({qty()}) AS BIGINT)").alias("total_qty"),
                F.count(F.lit(1)).alias("n_lines"))
           .where(F.col("total_qty") > 1000)
     )
 
 
 _HAVING_FILTER_SQL = f"""
-SELECT l_partkey, CAST(sum({qty('l_quantity')}) AS BIGINT) AS total_qty,
+SELECT l_partkey, CAST(sum({qty()}) AS BIGINT) AS total_qty,
        count(*) AS n_lines
-FROM lineitem GROUP BY 1 HAVING CAST(sum({qty('l_quantity')}) AS BIGINT) > 1000
+FROM lineitem GROUP BY 1 HAVING CAST(sum({qty()}) AS BIGINT) > 1000
 """
 
 
@@ -915,16 +916,12 @@ def _scd2_versions(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.temporal import scd2
     e = (load_table(spark, sf_dir, "events")
          .withColumn("ts_us", F.expr("ts_ns div 1000")))
-    return scd2(e, key_col="user_id", attr_col="event_type",
-                ts_us_col="ts_us", seq_col="event_id")
+    return scd2(e)
 
 
 def _scd2_versions_sql() -> str:
     from ..operators.temporal import scd2_sql
-    return scd2_sql(
-        "SELECT user_id, event_type, epoch_us(ts) AS us, event_id "
-        "FROM events",
-        key="user_id", attr="event_type", ts_us="us", seq="event_id")
+    return scd2_sql()
 
 
 # --------------------------------------------- interval overlap join
@@ -1032,8 +1029,7 @@ def _scd2_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.temporal import scd2
     e = (load_table(spark, sf_dir, "events")
          .withColumn("ts_us", F.expr("ts_ns div 1000")))
-    hist = scd2(e, key_col="user_id", attr_col="event_type",
-                ts_us_col="ts_us", seq_col="event_id")
+    hist = scd2(e)
     t = e.agg(F.expr("CAST((min(ts_us) + max(ts_us)) div 2 AS BIGINT)")
               .alias("t"))
     return (hist.crossJoin(F.broadcast(t))
@@ -1046,10 +1042,7 @@ def _scd2_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _scd2_asof_sql() -> str:
     from ..operators.temporal import scd2_sql
-    hist = scd2_sql(
-        "SELECT user_id, event_type, epoch_us(ts) AS us, event_id "
-        "FROM events",
-        key="user_id", attr="event_type", ts_us="us", seq="event_id")
+    hist = scd2_sql()
     return f"""
 WITH hist AS ({hist}),
 t AS (SELECT CAST((min(epoch_us(ts)) + max(epoch_us(ts))) // 2
@@ -1245,15 +1238,6 @@ _DIRTY_NAME = ("CASE WHEN p_partkey % 5 = 0 "
 _BLOCK = "concat(substr(name, 1, 2), substr(name, length(name) - 1, 2))"
 
 
-def _fuzzy_match(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Entity resolution over a deterministically-dirtied part-name
-    column (operators/joins.fuzzy_pairs): composite prefix+suffix
-    blocking (survives the injected char-drop typo), candidate
-    equi-join within blocks, Levenshtein 1..2 residual. Exact matches
-    are excluded by contract (dedup_exact's job)."""
-    return _fuzzy_candidate_pairs(spark, sf_dir)
-
-
 def _dirty_parts(spark: SparkSession, sf_dir: str):
     return load_table(spark, sf_dir, "part").select(
         F.col("p_partkey").alias("id"),
@@ -1266,10 +1250,8 @@ def _fuzzy_candidate_pairs(spark: SparkSession, sf_dir: str):
     corpus) and eagerly localCheckpointed — `q_fuzzy_match` and
     `q_entity_resolution` consume the SAME pair computation (the
     shared-artifact discipline, `artifacts.py`)."""
-    from ..operators.joins import fuzzy_pairs
-    return fuzzy_pairs(
-        _dirty_parts(spark, sf_dir), "id", "name",
-        F.expr(_BLOCK), max_dist=2).localCheckpoint(eager=True)
+    return fuzzy_pairs(_dirty_parts(spark, sf_dir),
+                       F.expr(_BLOCK)).localCheckpoint(eager=True)
 
 
 #: shared CTE chain: dirty names → blocked base (with the hot-block
@@ -1294,7 +1276,7 @@ fpairs AS (
          a.name AS name_a, b.name AS name_b,
          CAST(levenshtein(a.name, b.name) AS BIGINT) AS dist
   FROM base a JOIN base b ON a.blk = b.blk AND a.id < b.id
-  WHERE levenshtein(a.name, b.name) BETWEEN 1 AND 2
+  WHERE levenshtein(a.name, b.name) BETWEEN 1 AND {FUZZY_MAX_DIST}
 )"""
 
 _FUZZY_MATCH_SQL = f"""
@@ -1639,8 +1621,7 @@ def _join_size_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _join_size_estimate_sql() -> str:
     from ..operators import sketch
-    return sketch.ams_join_size_sql("orders", "o_orderkey",
-                                    "lineitem", "l_orderkey")
+    return sketch.ams_join_size_sql()
 
 
 # --------------------------------------------- market-basket pair lift
@@ -2814,7 +2795,7 @@ QUERIES: dict[str, Query] = {
                                   "d×w sketches before paying for it"),
     "q1_pricing_summary": Query(_pricing_summary, _PRICING_SUMMARY_SQL,
                                 "flagship scan→filter→agg"),
-    "q_fuzzy_match": Query(_fuzzy_match, _FUZZY_MATCH_SQL,
+    "q_fuzzy_match": Query(_fuzzy_candidate_pairs, _FUZZY_MATCH_SQL,
                            "blocked fuzzy record linkage (Levenshtein "
                            "residual over a typo-dirtied entity column)"),
     "q_activity_streaks": Query(_activity_streaks, _ACTIVITY_STREAKS_SQL,

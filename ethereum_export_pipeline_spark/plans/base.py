@@ -53,9 +53,9 @@ def cents(col: str) -> str:
     return f"CAST(round({col} * 100) AS BIGINT)"
 
 
-def qty(col: str) -> str:
-    """Integral-valued double → exact BIGINT."""
-    return f"CAST(round({col}) AS BIGINT)"
+def qty() -> str:
+    """Integral-valued `l_quantity` → exact BIGINT."""
+    return "CAST(round(l_quantity) AS BIGINT)"
 
 
 def revenue_e4() -> str:

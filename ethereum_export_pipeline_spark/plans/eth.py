@@ -19,16 +19,12 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
 from ..artifacts import artifact
-from ..partitioning import range_cols, volume_balanced_plan
+from ..partitioning import KEY_TIERS, range_cols, volume_balanced_plan
 from ..sources.tables import load_table, register_views
 from ..util import local_df, scratch_dir
 from .base import Query, cents
 
-# Volume-balanced plan over the o_orderkey domain — same ragged-tier
-# semantics as the reference's block plan (config.py:3-14): one wide
-# leading range, then fixed-width tails.
-KEY_TIERS = [(65_536, 65_536), (2 ** 24, 4_096)]
-KEY_PLAN = volume_balanced_plan(2 ** 24 - 1, tiers=KEY_TIERS)
+KEY_PLAN = volume_balanced_plan(2 ** 24 - 1)
 
 
 def _bucket_start_sql(key: str) -> str:
@@ -44,9 +40,9 @@ def _bucket_start_sql(key: str) -> str:
     return "CASE " + " ".join(arms) + " END"
 
 
-def _bucket_sql(key: str, str_type: str) -> tuple[str, str]:
-    """(start_expr, end_expr) — the padded range-bucket expressions.
-    `str_type` is STRING (Spark) or VARCHAR (DuckDB)."""
+def _bucket_sql(key: str) -> tuple[str, str]:
+    """(start_expr, end_expr) — the padded range-bucket expressions
+    (DuckDB)."""
     arms_e = []
     lo = 0
     for bound, width in KEY_TIERS:
@@ -55,7 +51,7 @@ def _bucket_sql(key: str, str_type: str) -> tuple[str, str]:
         lo = bound
     s = _bucket_start_sql(key)
     e = "CASE " + " ".join(arms_e) + " END"
-    pad = "lpad(CAST({x} AS %s), 8, '0')" % str_type
+    pad = "lpad(CAST({x} AS VARCHAR), 8, '0')"
     return pad.format(x=s), pad.format(x=e)
 
 
@@ -107,7 +103,7 @@ def _partition_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _partition_plan_sql() -> str:
-    s, e = _bucket_sql("o_orderkey", "VARCHAR")
+    s, e = _bucket_sql("o_orderkey")
     return f"""
 SELECT {s} AS start_block, {e} AS end_block,
        count(*) AS n_orders,
@@ -403,7 +399,7 @@ def _parquet_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _parquet_partitioned_sql() -> str:
-    s, e = _bucket_sql("l_orderkey", "VARCHAR")
+    s, e = _bucket_sql("l_orderkey")
     return f"""
 SELECT start_block, end_block, count(*) AS n_rows,
        CAST(sum({cents('l_extendedprice')}) AS BIGINT) AS price_cents
@@ -692,7 +688,7 @@ def _zorder_key_sql() -> str:
     from ..operators.layout import z_value_sql
     return f"""
 SELECT l_orderkey, l_linenumber, l_partkey, l_suppkey,
-       {z_value_sql('l_partkey', 'l_suppkey')} AS z_key
+       {z_value_sql()} AS z_key
 FROM lineitem
 """
 

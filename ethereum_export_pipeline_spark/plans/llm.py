@@ -27,6 +27,11 @@ from ..execution import checkpoint, spread
 from ..functions import (MERSENNE31, affine_hash_sql, h32_sql,
                           h60_sql, tokens_sql)
 from ..operators import dedup, multimodal, similarity, sketch, text
+from ..operators.similarity import TOPK_K
+from ..operators.sketch import SKETCH_K
+from ..operators.text import (BLOCKLIST, FUNNEL_MIN_QUALITY,
+                               FUNNEL_MIN_TOKENS, PHRASE, PSEUDONYM_TERMS,
+                               VOCAB_SIZE)
 from ..sources.tables import load_table
 from .base import Query, cents
 
@@ -38,7 +43,7 @@ def _toks_cte(rel: str = "documents") -> str:
     """The tokenization CTE over any documents-shaped relation —
     `rel` lets composed oracles (the crawl manifest) run the same
     chain over a derived CTE instead of the base table."""
-    return (f"SELECT doc_id, {tokens_sql('text')} AS t "
+    return (f"SELECT doc_id, {tokens_sql()} AS t "
             f"FROM {rel} WHERE text IS NOT NULL")
 
 
@@ -147,10 +152,6 @@ def _kmeans_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     return similarity.kmeans_assign(
         load_table(spark, sf_dir, "embeddings"),
         k=KMEANS_K, rounds=KMEANS_ROUNDS).localCheckpoint(eager=True)
-
-
-def _minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _lsh_pairs(spark, sf_dir)
 
 
 def _minhash_pairs_sql(rel: str = "documents") -> str:
@@ -493,7 +494,6 @@ FROM toks LEFT JOIN s ON s.doc_id = toks.doc_id
 
 # ------------------------------------------------------- similarity search
 
-TOPK_K = 5
 NEARDUP_COS = 0.3   # corpus max pairwise cosine is ~0.51; 0.3 keeps a tail
 LSH_PLANES = 8      # 2^8 buckets suits the 500-5000-vector corpus
                     # (production default of 16 would leave buckets empty)
@@ -530,14 +530,14 @@ def _banded_bucket_list_sql(n_bands: int) -> str:
         for b in range(n_bands)) + "]"
 
 
-def _topk_tail(k: int) -> str:
+def _topk_tail() -> str:
     return f"""
 SELECT query_id, neighbor_id, cosine, rk AS "rank" FROM (
   SELECT query_id, neighbor_id, cosine,
          CAST(row_number() OVER (PARTITION BY query_id
               ORDER BY cosine DESC, neighbor_id ASC) AS BIGINT) AS rk
   FROM cos
-) WHERE rk <= {k}
+) WHERE rk <= {TOPK_K}
 """
 
 
@@ -574,10 +574,6 @@ def _exact_topk_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
             .localCheckpoint(eager=True))
 
 
-def _brute_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _exact_topk(spark, sf_dir)
-
-
 def _brute_topk_sql() -> str:
     return f"""
 WITH {_BASE_CTES},
@@ -586,7 +582,7 @@ c AS (SELECT vec_id AS neighbor_id, q AS cv, n2 AS cn2 FROM wn),
 scored AS (SELECT query_id, neighbor_id, {_DOT} AS dot, qn2, cn2
            FROM q CROSS JOIN c WHERE neighbor_id <> query_id),
 cos AS (SELECT query_id, neighbor_id, {_COS} AS cosine FROM scored)
-{_topk_tail(TOPK_K)}
+{_topk_tail()}
 """
 
 
@@ -669,7 +665,7 @@ wnp AS (SELECT cand.query_id, cand.neighbor_id,
                   JOIN wn wc ON wc.vec_id = cand.neighbor_id),
 scored AS (SELECT query_id, neighbor_id, {_DOT} AS dot, qn2, cn2 FROM wnp),
 cos AS (SELECT query_id, neighbor_id, {_COS} AS cosine FROM scored)
-{_topk_tail(TOPK_K)}
+{_topk_tail()}
 """
 
 
@@ -689,7 +685,7 @@ c AS (SELECT vec_id AS neighbor_id, q AS cv, n2 AS cn2, bucket FROM bkt),
 scored AS (SELECT query_id, neighbor_id, {_DOT} AS dot, qn2, cn2
            FROM q JOIN c USING (bucket) WHERE neighbor_id <> query_id),
 cos AS (SELECT query_id, neighbor_id, {_COS} AS cosine FROM scored)
-{_topk_tail(TOPK_K)}
+{_topk_tail()}
 """
 
 
@@ -706,10 +702,6 @@ def _emb_neardup_memo(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_table(spark, sf_dir, "embeddings"),
         threshold=NEARDUP_COS, n_planes=LSH_PLANES,
         n_bands=NEARDUP_BANDS).localCheckpoint(eager=True)
-
-
-def _emb_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _emb_neardup_memo(spark, sf_dir)
 
 
 def _emb_neardup_multiband(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -823,7 +815,7 @@ c AS (SELECT vec_id AS neighbor_id, q AS cv, n2 AS cn2, cell FROM cells),
 scored AS (SELECT query_id, neighbor_id, {_DOT} AS dot, qn2, cn2
            FROM qq JOIN c USING (cell) WHERE neighbor_id <> query_id),
 cos AS (SELECT query_id, neighbor_id, {_COS} AS cosine FROM scored)
-{_topk_tail(TOPK_K)}
+{_topk_tail()}
 """
 
 
@@ -1244,13 +1236,6 @@ FROM f
 
 # ------------------------------------------------- duplicate clusters
 
-def _dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash near-dup pairs collapsed into duplicate clusters via
-    iterative min-label connected components (the genuinely iterative
-    operator of the catalog — each round is a join + min-agg)."""
-    return _cc(spark, sf_dir)
-
-
 def _dedup_clusters_sql() -> str:
     # min-reachable-id per node as a recursive CTE: UNION (set
     # semantics) makes the fixpoint finite; min(lbl) per node is the
@@ -1462,7 +1447,7 @@ def _repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _REPETITION_SQL = f"""
-WITH toks AS (SELECT doc_id, unnest({tokens_sql('text')}) AS term
+WITH toks AS (SELECT doc_id, unnest({tokens_sql()}) AS term
               FROM documents WHERE text IS NOT NULL),
 c AS (SELECT doc_id, term, count(*) AS n FROM toks GROUP BY 1, 2),
 d AS (SELECT doc_id, CAST(sum(n) AS BIGINT) AS n_tokens,
@@ -1477,10 +1462,6 @@ FROM d
 
 
 # ------------------------------------------------------- filter funnel
-
-FUNNEL_MIN_TOKENS = 20
-FUNNEL_MIN_QUALITY = 0.55
-
 
 def _filter_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The training-data gate: per-document first-matching reject
@@ -1631,7 +1612,7 @@ def _crawl_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     nothing collects, nothing is O(N²)."""
     rr = lambda x, p, r: f"regexp_replace({x}, '{p}', '{r}')"
     wrapped = _html_wrap_sql("STRING")
-    stripped = _html_strip_sql("html", rr)
+    stripped = _html_strip_sql(rr)
     # scan-width spread BEFORE the six regexp passes (optimization
     # r11, guide §2.5): a one-file corpus runs the whole strip on one
     # core otherwise; the checkpointed frame then hands its width to
@@ -1675,7 +1656,7 @@ def _crawl_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _crawl_manifest_sql() -> str:
     rr = lambda x, p, r: f"regexp_replace({x}, '{p}', '{r}', 'g')"
     wrapped = _html_wrap_sql("VARCHAR")
-    stripped = _html_strip_sql("html", rr)
+    stripped = _html_strip_sql(rr)
     rate_h = h32_sql("'rate-v1:' || source")
     keep_h = h32_sql("'mix-v1:' || CAST(doc_id AS VARCHAR)")
     split_h = h32_sql("'split-v1:' || CAST(g.doc_id AS VARCHAR)")
@@ -2490,7 +2471,7 @@ def _bloom_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # this form shuffles nothing before the per-doc aggregate
     bits = bloom_bits(bloom_build(bench_sh, key_col="shingle"))
     probed = (sh.where(~is_bench).select("doc_id", "shingle")
-                .withColumn("bloom_hit", bloom_hit_expr("shingle", bits)))
+                .withColumn("bloom_hit", bloom_hit_expr(bits)))
     exact = probed.join(F.broadcast(bench_sh.withColumn("_hit", F.lit(1))),
                         "shingle", "left")
     return (exact.groupBy("doc_id")
@@ -2513,7 +2494,7 @@ def _bloom_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _bloom_decontaminate_sql() -> str:
     from ..operators.sketch import bloom_positions_sql
-    pos = bloom_positions_sql("shingle")
+    pos = bloom_positions_sql()
     return f"""
 WITH toks AS ({TOKS_CTE}),
 sh AS ({SHINGLES_CTE}),
@@ -2705,9 +2686,6 @@ FROM counts, tot
 
 
 # ---------------------------------------------------- KMV distinct sketch
-
-SKETCH_K = 32
-
 
 def _distinct_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source + merged distinct-document cardinality via the
@@ -3013,7 +2991,7 @@ def _textrank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _textrank_sql() -> str:
     edges_cte = f"""toked AS (
-  SELECT {tokens_sql('text')} AS t FROM documents WHERE text IS NOT NULL
+  SELECT {tokens_sql()} AS t FROM documents WHERE text IS NOT NULL
 ),
 bgr AS (
   SELECT b.w1 AS w1, b.w2 AS w2 FROM (
@@ -3102,12 +3080,6 @@ FROM fused ORDER BY rrf_score DESC, doc_id LIMIT 20
 """
 
 
-#: The graded phrase — two high-df fixture tokens, so the query
-#: exercises real multi-hit documents (random token soup makes any
-#: fixed bigram appear ~1/|vocab|^2 per position).
-PHRASE = ["hash", "join"]
-
-
 def _phrase_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact phrase occurrences of "hash join" across the corpus —
     the map-only higher-order-filter form (operators/text.phrase_hits):
@@ -3118,11 +3090,6 @@ def _phrase_search(spark: SparkSession, sf_dir: str) -> DataFrame:
                             PHRASE)
 
 
-#: 4 phrases present in the fixture corpus + 1 absent (the miss path)
-BLOCKLIST = ["table hash", "customer join", "slow key",
-             "merge group", "quantum leap"]
-
-
 def _blocklist_tag(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Content-policy blocklist gate (operators/text.blocklist_hits):
     which of K plan-time banned phrases each doc contains as a
@@ -3130,10 +3097,6 @@ def _blocklist_tag(spark: SparkSession, sf_dir: str) -> DataFrame:
     tokenize runs once per doc however many phrases probe it."""
     return text.blocklist_hits(load_table(spark, sf_dir, "documents"),
                                BLOCKLIST)
-
-
-#: 3 entity terms present in the fixture corpus + 1 absent (miss path)
-PSEUDONYM_TERMS = ["customer", "supplier", "spark", "quantumleap"]
 
 
 def _pseudonymize(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3469,20 +3432,6 @@ SELECT query_id, neighbor_id, hamming, rk AS "rank" FROM (
 
 # --------------------------------- exact set-similarity (prefix filter)
 
-def _ssjoin_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact 3-gram-Jaccard pairs via PPJoin-style prefix filtering
-    (operators/dedup.ssjoin_prefix_pairs): the EXACT cell of the
-    near-dup matrix over the same shingle universe as
-    `doc_ngram_pairs` — no df-cut recall loss, no MinHash
-    probability; pruning comes from the global df-ascending shingle
-    order (only each doc's rare prefix enters the candidate index)
-    plus the length filter. The superset relation vs the df-cut
-    variant is pinned in tests. Serves the memoized shared pair list
-    (`_ssjoin_pairs`) — `doc_neardup_recall` ranks against the same
-    computation."""
-    return _ssjoin_pairs(spark, sf_dir)
-
-
 def _ssjoin_prefix_sql() -> str:
     return f"""
 WITH toks AS ({TOKS_CTE}),
@@ -3725,14 +3674,14 @@ def _bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
         [(r["round"], r["x"], r["y"], r["pair_n"]) for r in rows], schema)
 
 
-def _bpe_chain(rounds: int = text.BPE_ROUNDS) -> str:
+def _bpe_chain() -> str:
     # unrolled rounds, MATERIALIZED (each words{r} feeds both the pair
     # count and the rewrite; plain inlining re-expands the corpus
     # tokenization once per reference). DuckDB's replace() is
     # left-to-right non-overlapping like Spark's — BPE's greedy
     # application. Shared by the training and encoding oracles.
     steps = []
-    for r in range(rounds):
+    for r in range(text.BPE_ROUNDS):
         steps.append(f"""
 pairs{r} AS MATERIALIZED (
   SELECT x, y, CAST(sum(cnt) AS BIGINT) AS pair_n FROM (
@@ -3748,7 +3697,7 @@ words{r + 1} AS MATERIALIZED (
                  ' ' || x || y || ' ') AS w, cnt
   FROM words{r}, best{r})""")
     return f"""occ AS MATERIALIZED (
-  SELECT doc_id, unnest({tokens_sql('text')}) AS word
+  SELECT doc_id, unnest({tokens_sql()}) AS word
   FROM documents WHERE text IS NOT NULL),
 words0 AS MATERIALIZED (
   SELECT ' ' || regexp_replace(word, '(.)', '\\1 ', 'g') AS w,
@@ -3761,7 +3710,7 @@ def _bpe_sql() -> str:
         f"SELECT round, x, y, pair_n FROM best{r}"
         for r in range(text.BPE_ROUNDS))
     return f"""
-WITH {_bpe_chain(text.BPE_ROUNDS)}
+WITH {_bpe_chain()}
 {union}
 """
 
@@ -3795,7 +3744,7 @@ map{r + 1} AS MATERIALIZED (
                        ' ' || x || y || ' ') AS w
   FROM map{r}, best{r})""")
     return f"""
-WITH {_bpe_chain(text.BPE_ROUNDS)},
+WITH {_bpe_chain()},
 map0 AS MATERIALIZED (
   SELECT DISTINCT word,
          ' ' || regexp_replace(word, '(.)', '\\1 ', 'g') AS w
@@ -4412,13 +4361,6 @@ def _knn_graph_memo(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_bands=MULTIBAND_BANDS).localCheckpoint(eager=True)
 
 
-def _knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Approximate kNN graph (operators/similarity.knn_graph):
-    lsh_topk with every vector as a query — the neighbor structure
-    graph-based semantic dedup and diversity sampling start from."""
-    return _knn_graph_memo(spark, sf_dir)
-
-
 def _knn_graph_sql() -> str:
     return f"""
 WITH {_BASE_CTES},
@@ -4514,13 +4456,6 @@ FROM seats
 
 KMEANS_K = 8
 KMEANS_ROUNDS = 3
-
-
-def _kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distributed 3-round Lloyd k-means over the full embeddings
-    table (operators/similarity.kmeans_assign) — the clustering-as-
-    the-product path next to the sample-trained IVF quantizer."""
-    return _kmeans_cells(spark, sf_dir)
 
 
 def _kmeans_assign_sql() -> str:
@@ -4658,9 +4593,6 @@ SELECT cell, "rank", term, n_ct, n_c, n_t, lift FROM (
   FROM lifted)
 WHERE "rank" <= {CLUSTER_LABEL_TOPK}
 """
-
-
-VOCAB_SIZE = 16  # fixture vocabulary is 31 terms; V=16 keeps OOV live
 
 
 def _vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5090,7 +5022,7 @@ def _dsir_weights_sql() -> str:
     h = h32_sql("x")
     B, S = text.DSIR_BUCKETS, text.DSIR_SCALE
     return f"""
-WITH toks AS (SELECT doc_id, {tokens_sql('text')} AS t, lang
+WITH toks AS (SELECT doc_id, {tokens_sql()} AS t, lang
               FROM documents WHERE text IS NOT NULL),
 tok AS (SELECT doc_id, CAST({DSIR_TARGET_PRED} AS INT) AS is_t,
                CAST({h} % {B} AS INT) AS bucket
@@ -5272,7 +5204,7 @@ def _ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     tuning measurement next to `emb_ann_recall`'s band/plane one."""
     return similarity.ivf_recall_report(
         load_table(spark, sf_dir, "embeddings"), get_quantizers()[0],
-        k=TOPK_K, exact=_exact_topk(spark, sf_dir))
+        exact=_exact_topk(spark, sf_dir))
 
 
 def _ivf_recall_sql() -> str:
@@ -5326,7 +5258,7 @@ def _pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents, books = get_quantizers()
     return similarity.pq_recall_report(
         load_table(spark, sf_dir, "embeddings"), cents, books,
-        k=TOPK_K, exact=_exact_topk(spark, sf_dir))
+        exact=_exact_topk(spark, sf_dir))
 
 
 def _pq_recall_sql() -> str:
@@ -5582,7 +5514,7 @@ b AS (SELECT min(doc_id) AS mn, max(doc_id) AS mx FROM d),
 db AS (SELECT least({n - 1}, ((doc_id - mn) * {n}) // (mx - mn + 1))
          AS bucket, text
        FROM d, b),
-toks AS (SELECT bucket, unnest({tokens_sql('text')}) AS term FROM db),
+toks AS (SELECT bucket, unnest({tokens_sql()}) AS term FROM db),
 tokb AS (SELECT bucket, CAST(count(*) AS BIGINT) AS n_tokens
          FROM toks GROUP BY 1),
 docb AS (SELECT bucket, CAST(count(*) AS BIGINT) AS n_docs
@@ -5636,14 +5568,14 @@ def _url_raw_sql(div: str, str_t: str) -> str:
         "|| '?page=2' END")
 
 
-def _canon_url_sql(url: str, rr) -> str:
-    """Canonicalization pipeline as one nested expression; `rr(x, pat,
-    rep)` is the engine's REPLACE-ALL regexp spelling (Spark
+def _canon_url_sql(rr) -> str:
+    """`raw_url`'s canonicalization pipeline as one nested expression;
+    `rr(x, pat, rep)` is the engine's REPLACE-ALL regexp spelling (Spark
     regexp_replace replaces all; DuckDB needs the 'g' flag). Steps:
     strip scheme → strip #fragment → drop tracking params
     (utm_*/fbclid) → repair dangling ?/& separators → lowercase +
     de-www + de-port the host → strip trailing slash."""
-    s = rr(url, "^[A-Za-z]+://", "")            # scheme
+    s = rr("raw_url", "^[A-Za-z]+://", "")      # scheme
     s = rr(s, "#.*$", "")                       # fragment
     s = rr(s, "(utm_[a-z]+|fbclid)=[^&#]*", "")  # tracking params
     s = rr(s, "[?][&]+", "?")                   # '?&' → '?'
@@ -5674,7 +5606,7 @@ def _url_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     of the hash."""
     rr = lambda x, p, r: f"regexp_replace({x}, '{p}', '{r}')"
     raw = _url_raw_sql("div", "STRING")
-    canon = _canon_url_sql("raw_url", rr)
+    canon = _canon_url_sql(rr)
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
     u = docs.selectExpr(f"{raw} AS raw_url").selectExpr(
         "raw_url", f"{canon} AS canon_url")
@@ -5697,7 +5629,7 @@ def _url_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _url_dedup_sql() -> str:
     rr = lambda x, p, r: f"regexp_replace({x}, '{p}', '{r}', 'g')"
     raw = _url_raw_sql("//", "VARCHAR")
-    canon = _canon_url_sql("raw_url", rr)
+    canon = _canon_url_sql(rr)
     return f"""
 WITH u0 AS (SELECT {raw} AS raw_url FROM documents),
 u AS (SELECT raw_url, {canon} AS canon_url FROM u0),
@@ -5731,15 +5663,15 @@ def _html_wrap_sql(str_t: str) -> str:
         "</body></html>'")
 
 
-def _html_strip_sql(html: str, rr) -> str:
-    """Boilerplate removal as one nested expression; `rr` is the
-    engine's replace-all regexp spelling. Block elements whose INNER
+def _html_strip_sql(rr) -> str:
+    """`html`'s boilerplate removal as one nested expression; `rr` is
+    the engine's replace-all regexp spelling. Block elements whose INNER
     TEXT must not survive (head/title/style, script, nav, footer) are
     removed wholesale BEFORE the generic tag strip — a tag-only strip
     would leak 'Home | About' and the copyright line into the
     training text, which is exactly the failure mode this op exists
     to catch. Then tags → '', whitespace collapsed, trimmed."""
-    s = rr(html, "<head>.*?</head>", "")
+    s = rr("html", "<head>.*?</head>", "")
     s = rr(s, "<script>.*?</script>", "")
     s = rr(s, "<nav>.*?</nav>", "")
     s = rr(s, "<footer>.*?</footer>", "")
@@ -5763,7 +5695,7 @@ def _html_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
     text, and it runs at input bandwidth."""
     rr = lambda x, p, r: f"regexp_replace({x}, '{p}', '{r}')"
     wrapped = _html_wrap_sql("STRING")
-    stripped = _html_strip_sql("html", rr)
+    stripped = _html_strip_sql(rr)
     d = (load_table(spark, sf_dir, "documents")
          .where("text IS NOT NULL")
          .selectExpr("doc_id", "source", "text", f"{wrapped} AS html"))
@@ -5786,7 +5718,7 @@ def _html_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _html_strip_oracle() -> str:
     rr = lambda x, p, r: f"regexp_replace({x}, '{p}', '{r}', 'g')"
     wrapped = _html_wrap_sql("VARCHAR")
-    stripped = _html_strip_sql("html", rr)
+    stripped = _html_strip_sql(rr)
     return f"""
 WITH w AS (SELECT doc_id, source, text, {wrapped} AS html
            FROM documents WHERE text IS NOT NULL),
@@ -5818,7 +5750,7 @@ def _url_text_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     small frame, not the text column."""
     rr = lambda x, p, r: f"regexp_replace({x}, '{p}', '{r}')"
     raw = _url_raw_sql("div", "STRING")
-    canon = _canon_url_sql("raw_url", rr)
+    canon = _canon_url_sql(rr)
     u = (load_table(spark, sf_dir, "documents")
          .where("text IS NOT NULL")
          .selectExpr("doc_id", "md5(text) AS ck", f"{raw} AS raw_url")
@@ -5852,7 +5784,7 @@ def _url_text_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _url_text_agreement_sql() -> str:
     rr = lambda x, p, r: f"regexp_replace({x}, '{p}', '{r}', 'g')"
     raw = _url_raw_sql("//", "VARCHAR")
-    canon = _canon_url_sql("raw_url", rr)
+    canon = _canon_url_sql(rr)
     return f"""
 WITH u0 AS (SELECT md5(text) AS ck, {raw} AS raw_url
             FROM documents WHERE text IS NOT NULL),
@@ -6066,11 +5998,11 @@ QUERIES: dict[str, Query] = {
                               "weights: B-bounded counting pass → "
                               "literal score table → map-only "
                               "weighting pass"),
-    "emb_kmeans_assign": Query(_kmeans_assign, _kmeans_assign_sql(),
+    "emb_kmeans_assign": Query(_kmeans_cells, _kmeans_assign_sql(),
                                "distributed 3-round Lloyd k-means, "
                                "integer fixed point, unrolled-CTE "
                                "oracle"),
-    "emb_knn_graph": Query(_knn_graph, _knn_graph_sql(),
+    "emb_knn_graph": Query(_knn_graph_memo, _knn_graph_sql(),
                            "approximate kNN graph: banded-LSH "
                            "candidates + exact rerank, every vector "
                            "a query"),
@@ -6084,9 +6016,9 @@ QUERIES: dict[str, Query] = {
                              "exact dedup via md5 hash-agg"),
     "doc_ngram_pairs": Query(_ngram_pairs, _ngram_pairs_sql(),
                              "n-gram Jaccard inverted-index near-dup"),
-    "doc_minhash_pairs": Query(_minhash_pairs, _minhash_pairs_sql(),
+    "doc_minhash_pairs": Query(_lsh_pairs, _minhash_pairs_sql(),
                                "MinHash+LSH banded near-dup"),
-    "doc_dedup_clusters": Query(_dedup_clusters, _dedup_clusters_sql(),
+    "doc_dedup_clusters": Query(_cc, _dedup_clusters_sql(),
                                 "near-dup pairs → connected-component "
                                 "clusters (iterative label propagation)"),
     "doc_dedup_canonical": Query(_dedup_canonical, _dedup_canonical_sql(),
@@ -6138,7 +6070,7 @@ QUERIES: dict[str, Query] = {
                                 "the crawl funnel from RAW HTML: strip "
                                 "+ gates + dedup tiers + decontaminate "
                                 "+ mix + split + chunks, one oracle"),
-    "emb_bruteforce_topk": Query(_brute_topk, _brute_topk_sql(),
+    "emb_bruteforce_topk": Query(_exact_topk, _brute_topk_sql(),
                                  "exact cosine top-k baseline"),
     "emb_lsh_topk": Query(_lsh_topk, _lsh_topk_sql(),
                           "hyperplane-LSH bucketed top-k "
@@ -6157,7 +6089,7 @@ QUERIES: dict[str, Query] = {
                               "IVF-PQ with the candidate codes packed "
                               "into ONE BIGINT (8 B on the wire); "
                               "identical ranks, packing value-pinned"),
-    "emb_neardup_pairs": Query(_emb_neardup,
+    "emb_neardup_pairs": Query(_emb_neardup_memo,
                                _emb_neardup_banded_sql(NEARDUP_BANDS),
                                f"embedding-cosine near-dup pairs "
                                f"({NEARDUP_BANDS}-band)"),
@@ -6237,7 +6169,7 @@ QUERIES: dict[str, Query] = {
                                       "embedding cosine (threshold "
                                       "calibration report)"),
     "doc_distinct_sketch": Query(_distinct_sketch,
-                                 sketch.kmv_sketch_sql(k=SKETCH_K),
+                                 sketch.kmv_sketch_sql(),
                                  "KMV distinct-count sketch per source "
                                  "+ merged — the cross-engine-"
                                  "verifiable cardinality sketch"),
@@ -6251,7 +6183,7 @@ QUERIES: dict[str, Query] = {
                                 "per k-means cell (BERTopic-style "
                                 "class-based TF-IDF corpus map)"),
     "doc_vocab_coverage": Query(_vocab_coverage,
-                                text.vocab_coverage_sql(VOCAB_SIZE),
+                                text.vocab_coverage_sql(),
                                 "OOV-rate audit vs the top-V corpus "
                                 "vocabulary (single tokenize scan, "
                                 "all-BIGINT ppm output)"),
@@ -6310,19 +6242,19 @@ QUERIES: dict[str, Query] = {
                             "LSH-ANN top-20 fused by integer "
                             "reciprocal-rank fusion"),
     "doc_phrase_search": Query(_phrase_search,
-                               text.phrase_hits_sql(PHRASE),
+                               text.phrase_hits_sql(),
                                "exact phrase search (map-only "
                                "higher-order offset filter — the "
                                "contamination-string gate shape, "
                                "zero shuffle)"),
     "doc_blocklist_tag": Query(_blocklist_tag,
-                               text.blocklist_hits_sql(BLOCKLIST),
+                               text.blocklist_hits_sql(),
                                "multi-phrase blocklist tagging "
                                "(content-policy gate: K banned "
                                "phrases as whole-token runs, "
                                "map-only, let-bound tokenize)"),
     "doc_pseudonymize": Query(_pseudonymize,
-                              text.pseudonymize_terms_sql(PSEUDONYM_TERMS),
+                              text.pseudonymize_terms_sql(),
                               "deterministic entity pseudonymization: "
                               "dictionary terms to stable per-entity "
                               "md5 surrogates (referential integrity "
@@ -6433,7 +6365,7 @@ QUERIES: dict[str, Query] = {
                                 "missed-pairs audit estimator quality "
                                 "can't see"),
     "doc_source_overlap": Query(_source_overlap,
-                                sketch.kmv_pair_overlap_sql(k=SKETCH_K),
+                                sketch.kmv_pair_overlap_sql(),
                                 "pairwise source-overlap estimates "
                                 "from KMV sketch algebra (union/"
                                 "intersection, no per-pair rescan)"),
@@ -6503,7 +6435,7 @@ QUERIES: dict[str, Query] = {
                               "Hamming top-k: 8-byte vectors, "
                               "XOR+popcount distance, pigeonhole-"
                               "exact within radius 7"),
-    "doc_ssjoin_prefix": Query(_ssjoin_prefix, _ssjoin_prefix_sql(),
+    "doc_ssjoin_prefix": Query(_ssjoin_pairs, _ssjoin_prefix_sql(),
                                "EXACT token-Jaccard pairs via PPJoin "
                                "prefix filtering: df-ascending order, "
                                "rare-half candidate index, length "

@@ -7,8 +7,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..streaming import (CHAIN_BUCKET, HOP_US, TRENDING_K, WINDOW_US,
-                         stream_chain_counts,
+from ..streaming import (CHAIN_BUCKET, CHAIN_HEAD, HOP_US, IJ_DELAY_S,
+                         TRENDING_K, WINDOW_US, stream_chain_counts,
                          stream_dedup_within_watermark,
                          stream_exact_dedup, stream_hopping_counts,
                          stream_interval_join,
@@ -92,7 +92,6 @@ HAVING win_start + {WINDOW_US} <=
 
 
 IJ_GAP_S = 3600
-IJ_DELAY_S = 7200   # the streaming op's default watermark delay
 
 
 def _stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -112,14 +111,11 @@ WHERE a.event_type = 'click' AND b.event_type = 'purchase'
 """
 
 
-CHAIN_HEAD = 999  # blocks 0..999 in the synthetic chain stream
-
-
 def _stream_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Non-file streaming source: the `ethereum_chain` Python
     DataSourceStreamReader aggregated by the streaming engine;
     `sf_dir` is unused — the chain IS the source."""
-    return stream_chain_counts(spark, head=CHAIN_HEAD)
+    return stream_chain_counts(spark)
 
 
 #: batch twin of the chain-source aggregate: the synthetic block at
@@ -318,7 +314,7 @@ def _stream_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _stream_decontaminate_sql() -> str:
     from ..operators.sketch import bloom_positions_sql
     from .llm import BENCH_MOD, SHINGLES_CTE, TOKS_CTE
-    pos = bloom_positions_sql("shingle")
+    pos = bloom_positions_sql()
     return f"""
 WITH toks AS ({TOKS_CTE}),
 sh AS ({SHINGLES_CTE}),
@@ -362,14 +358,12 @@ def _stream_crawl_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     the DuckDB twin re-derives every verdict from the same stripped
     relation."""
     from ..streaming import stream_crawl_gate
-    from .llm import (FUNNEL_MIN_QUALITY, FUNNEL_MIN_TOKENS,
-                      _html_strip_sql, _html_wrap_sql)
+    from .llm import _html_strip_sql, _html_wrap_sql
     rr = lambda x, p, r: f"regexp_replace({x}, '{p}', '{r}')"
     return stream_crawl_gate(
         spark, f"{sf_dir.rstrip('/')}/documents.parquet",
         wrap_sql=_html_wrap_sql("STRING"),
-        strip_sql=_html_strip_sql("html", rr),
-        min_tokens=FUNNEL_MIN_TOKENS, min_quality=FUNNEL_MIN_QUALITY)
+        strip_sql=_html_strip_sql(rr))
 
 
 def _stream_crawl_gate_sql() -> str:
@@ -378,7 +372,7 @@ def _stream_crawl_gate_sql() -> str:
                       _quality_sql)
     rr = lambda x, p, r: f"regexp_replace({x}, '{p}', '{r}', 'g')"
     wrapped = _html_wrap_sql("VARCHAR")
-    stripped = _html_strip_sql("html", rr)
+    stripped = _html_strip_sql(rr)
     return f"""
 WITH crawl AS (
   SELECT doc_id, source, {stripped} AS text FROM (

@@ -113,12 +113,12 @@ def _small_qty_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
             .where(F.col("p_brand") == "Brand#23").select("p_partkey"))
     per_part = (li.groupBy("l_partkey")
                   .agg(F.count(F.lit(1)).alias("cnt"),
-                       F.expr(f"CAST(sum({qty('l_quantity')}) AS BIGINT)").alias("sum_qty"))
+                       F.expr(f"CAST(sum({qty()}) AS BIGINT)").alias("sum_qty"))
                   .select(F.col("l_partkey").alias("pk"), "cnt", "sum_qty"))
     probe = (li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
                .select("l_partkey", "l_quantity", "l_extendedprice"))
     small = (probe.join(per_part, probe.l_partkey == per_part.pk)
-                  .where(F.expr(f"{qty('l_quantity')} * 5 * cnt < sum_qty")))
+                  .where(F.expr(f"{qty()} * 5 * cnt < sum_qty")))
     return small.agg(
         F.count(F.lit(1)).alias("n_small"),
         F.expr(f"CAST(coalesce(sum({cents('l_extendedprice')}), 0) AS BIGINT)").alias("rev_cents"),
@@ -136,10 +136,10 @@ FROM (
     ON l_partkey = p.p_partkey
   JOIN (
     SELECT l_partkey AS pk, CAST(count(*) AS BIGINT) AS cnt,
-           CAST(sum({qty('l_quantity')}) AS BIGINT) AS sum_qty
+           CAST(sum({qty()}) AS BIGINT) AS sum_qty
     FROM lineitem GROUP BY 1
   ) ON l_partkey = pk
-  WHERE {qty('l_quantity')} * 5 * cnt < sum_qty
+  WHERE {qty()} * 5 * cnt < sum_qty
 )
 """
 
@@ -156,7 +156,7 @@ def _large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     customer is a broadcast dim."""
     li = load_table(spark, sf_dir, "lineitem")
     big = (li.groupBy("l_orderkey")
-             .agg(F.expr(f"CAST(sum({qty('l_quantity')}) AS BIGINT)").alias("total_qty"))
+             .agg(F.expr(f"CAST(sum({qty()}) AS BIGINT)").alias("total_qty"))
              .where(F.col("total_qty") > 150))
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderdate", "o_totalprice")
@@ -175,7 +175,7 @@ SELECT c_name, o_orderkey, strftime(o_orderdate, '%Y-%m-%d') AS orderdate,
        {cents('o_totalprice')} AS totalprice_cents, total_qty
 FROM orders
 JOIN (
-  SELECT l_orderkey, CAST(sum({qty('l_quantity')}) AS BIGINT) AS total_qty
+  SELECT l_orderkey, CAST(sum({qty()}) AS BIGINT) AS total_qty
   FROM lineitem GROUP BY 1 HAVING total_qty > 150
 ) ON o_orderkey = l_orderkey
 JOIN customer ON o_custkey = c_custkey
@@ -388,7 +388,7 @@ def _dominant_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     superset key, so only the coarser side reshuffles. The supplier
     dimension broadcasts into the final count."""
     li = load_table(spark, sf_dir, "lineitem").select(
-        "l_partkey", "l_suppkey", F.expr(qty("l_quantity")).alias("q"))
+        "l_partkey", "l_suppkey", F.expr(qty()).alias("q"))
     sp = li.groupBy("l_partkey", "l_suppkey").agg(F.sum("q").alias("sp_qty"))
     tot = li.groupBy("l_partkey").agg(F.sum("q").alias("tot_qty"))
     dom = (sp.join(tot, "l_partkey")
@@ -402,7 +402,7 @@ def _dominant_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _DOMINANT_SUPPLIERS_SQL = f"""
-WITH li AS (SELECT l_partkey, l_suppkey, {qty('l_quantity')} AS q
+WITH li AS (SELECT l_partkey, l_suppkey, {qty()} AS q
             FROM lineitem),
 sp AS (SELECT l_partkey, l_suppkey, CAST(sum(q) AS BIGINT) AS sp_qty
        FROM li GROUP BY 1, 2),

@@ -106,7 +106,7 @@ def _product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey", F.year("o_orderdate").cast("bigint").alias("o_year"))
     li = load_table(spark, sf_dir, "lineitem")
     profit = (f"({revenue_e4()} - {cents('p_retailprice')} * 100 * "
-              f"{qty('l_quantity')})")
+              f"{qty()})")
     return (li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
             .join(F.broadcast(sup), li.l_suppkey == sup.s_suppkey)
             .join(orders, li.l_orderkey == orders.o_orderkey)
@@ -118,7 +118,7 @@ def _product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
 _PRODUCT_PROFIT_SQL = f"""
 SELECT n_name AS nation,
        CAST(year(o_orderdate) AS BIGINT) AS o_year,
-       CAST(sum({revenue_e4()} - {cents('p_retailprice')} * 100 * {qty('l_quantity')}) AS BIGINT) AS profit_e4
+       CAST(sum({revenue_e4()} - {cents('p_retailprice')} * 100 * {qty()}) AS BIGINT) AS profit_e4
 FROM lineitem
 JOIN part     ON l_partkey = p_partkey
 JOIN supplier ON l_suppkey = s_suppkey

@@ -138,26 +138,20 @@ def mapping_for(name: str, partitioned: bool = True) -> list[ColumnMapping]:
     return [ColumnMapping(c, c, t) for c, t in cols]
 
 
-def apply_mapping(df: DataFrame, mapping: list[ColumnMapping],
-                  safe: bool = True) -> DataFrame:
+def apply_mapping(df: DataFrame, mapping: list[ColumnMapping]) -> DataFrame:
     """The reference's `ApplyMapping` as a Catalyst projection
     (convert_blocks_to_parquet.py:26-46 equivalent).
 
-    One `select` of `cast(...).alias(...)` per column — column pruning
-    and the casts stay inside whole-stage codegen; no UDFs. With
-    ``safe=True`` uses try_cast so rows whose observed value conflicts
-    with the declared type yield NULL instead of failing the job — the
-    engine's answer to Glue's ResolveChoice(make_struct)
+    One `select` of `try_cast(...).alias(...)` per column — column
+    pruning and the casts stay inside whole-stage codegen; no UDFs.
+    try_cast makes rows whose observed value conflicts with the
+    declared type yield NULL instead of failing the job — the engine's
+    answer to Glue's ResolveChoice(make_struct)
     (convert_blocks_to_parquet.py:52-53): enforce-at-read instead of
     widen-to-struct.
     """
-    def one(m: ColumnMapping) -> Column:
-        c = F.col(m.src)
-        if safe:
-            return c.try_cast(m.dtype).alias(m.dst)
-        return c.cast(m.dtype).alias(m.dst)
-
-    return df.select(*[one(m) for m in mapping])
+    return df.select(*[F.col(m.src).try_cast(m.dtype).alias(m.dst)
+                       for m in mapping])
 
 
 def apply_mapping_dual_precision(df: DataFrame,

@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
-from ..partitioning import pad8
+from ..partitioning import partition_path
 from ..schemas import csv_schema
 
 
@@ -75,6 +75,6 @@ def write_partition_csv(df: DataFrame, root: str, table: str,
     in fixtures — large-scale writes should instead leave Spark's file
     count alone and rely on the directory as the unit.)
     """
-    path = f"{root.rstrip('/')}/{table}/start_block={pad8(start)}/end_block={pad8(end)}"
+    path = partition_path(table, start, end, root)
     df.coalesce(1).write.mode("overwrite").option("header", True).csv(path)
     return path

@@ -36,6 +36,10 @@ WINDOW_US = 600_000_000  # 10-minute tumbling windows, µs
 HOP_US = WINDOW_US // 2  # hopping windows advance by half a window
 TRENDING_K = 2  # stream_trending keeps the top 2 event types per window
 CHAIN_BUCKET = 100  # stream_chain_counts groups blocks by number div this
+CHAIN_HEAD = 999  # stream_chain_counts aggregates blocks 0..999
+EXPORT_HEAD = 249  # stream_chain_export lands blocks 0..249
+IJ_DELAY_S = 7200  # the interval joins' watermark delay
+ROLLUP_RANGE = 25  # incremental_rollup partitions windows by win div this
 #: a bounded stream gets one state partition per this many input bytes
 STREAM_BYTES_PER_PARTITION = 4 << 20
 
@@ -108,7 +112,6 @@ def bounded_stream_width(spark: SparkSession, path: str) -> int | None:
     production stream the checkpoint pins the width at first start and
     the operator sizes it to expected key cardinality explicitly; this
     heuristic only shapes fresh checkpointless runs."""
-    import os
     try:
         if os.path.isdir(path):
             size = sum(os.path.getsize(os.path.join(r, f))
@@ -311,12 +314,12 @@ def windowed_counts_with_watermark(sdf: DataFrame) -> DataFrame:
 
 
 def stream_chain_export(spark: SparkSession, dest_dir: str,
-                        checkpoint_dir: str, head: int,
+                        checkpoint_dir: str,
                         plan: list[tuple[int, int]] | None = None,
                         timeout_s: float = 120.0) -> None:
     """Streaming form of the whole export (S1-stream → A2 layout):
-    tail the chain source and land blocks into the reference's
-    Hive range layout with exactly-once checkpointing. Blocks keep
+    tail the chain source up to `EXPORT_HEAD` and land blocks into the
+    reference's Hive range layout with exactly-once checkpointing. Blocks keep
     arriving → new partition dirs appear; a restart resumes from the
     committed offset.
 
@@ -327,7 +330,7 @@ def stream_chain_export(spark: SparkSession, dest_dir: str,
     from ..partitioning import default_export_plan, range_cols
     spark, _ = _chain_session(spark)
     sdf = (spark.readStream.format("ethereum_chain")
-                .option("start", 0).option("head", head)
+                .option("start", 0).option("head", EXPORT_HEAD)
                 .option("batch_size", 100).load())
     start, end = range_cols("number", plan or default_export_plan())
     q = (sdf.select("*", start, end)
@@ -345,15 +348,15 @@ def stream_chain_export(spark: SparkSession, dest_dir: str,
             landed = spark.read.parquet(dest_dir).count()
         except Exception:
             landed = 0
-        if landed >= head + 1:
+        if landed >= EXPORT_HEAD + 1:
             break
         time.sleep(0.5)
     q.stop()
     q.awaitTermination()
-    if landed < head + 1:
+    if landed < EXPORT_HEAD + 1:
         raise TimeoutError(
-            f"stream_chain_export: only {landed}/{head + 1} blocks landed "
-            f"within {timeout_s}s; the checkpoint holds the committed "
+            f"stream_chain_export: only {landed}/{EXPORT_HEAD + 1} blocks "
+            f"landed within {timeout_s}s; the checkpoint holds the committed "
             f"offset — rerun with a larger timeout_s to resume")
 
 
@@ -376,22 +379,22 @@ def stream_static_enrich(spark: SparkSession, events_path: str,
                              width=bounded_stream_width(spark, events_path))
 
 
-def stream_chain_counts(spark: SparkSession, head: int = 999) -> DataFrame:
+def stream_chain_counts(spark: SparkSession) -> DataFrame:
     """Streaming aggregation whose source is NOT a file directory: the
     registered `ethereum_chain` Python DataSourceStreamReader
     (sources/datasource.py) tails the chain — offsets are block
-    numbers, each micro-batch covers (committed, head] split into
+    numbers, each micro-batch covers (committed, CHAIN_HEAD] split into
     range partitions — and the streaming engine aggregates per
     block-range bucket. Proves the stateful operators compose with a
     custom streaming source, not just the parquet file source.
 
     The synthetic blocks are deterministic integer functions of the
     block number, so the batch-equivalent oracle recomputes the exact
-    aggregate from `range(head+1)` — a full value-hash check with no
-    files involved on either side."""
+    aggregate from `range(CHAIN_HEAD + 1)` — a full value-hash check
+    with no files involved on either side."""
     spark, isolated = _chain_session(spark)
     sdf = (spark.readStream.format("ethereum_chain")
-                .option("start", 0).option("head", head)
+                .option("start", 0).option("head", CHAIN_HEAD)
                 .option("batch_size", 100).load())
     agg = (sdf.groupBy(F.expr(f"number div {CHAIN_BUCKET}").alias("bucket"))
               .agg(F.count(F.lit(1)).alias("n_blocks"),
@@ -400,17 +403,16 @@ def stream_chain_counts(spark: SparkSession, head: int = 999) -> DataFrame:
                    F.max("size").cast("long").alias("max_size")))
     # bounded synthetic head: size the state width to the row count —
     # but ONLY when the stream runs on an isolated child (the clamp
-    # mutates session conf; on the caller's session that would race a
-    # concurrently-planning query, the exact leak ask #4 removed)
+    # mutates session conf; on the caller's session it would race a
+    # concurrently-planning query)
     sess_w = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    width = max(4, (head + 1) // 100_000)
+    width = max(4, (CHAIN_HEAD + 1) // 100_000)
     return run_available_now(
         agg, width=width if isolated and width < sess_w else None)
 
 
 def stream_interval_join(spark: SparkSession, events_path: str,
                          gap_s: int = 3600,
-                         delay_s: int = 7200,
                          max_files_per_trigger: int | None = None
                          ) -> DataFrame:
     """STREAM-STREAM inner join with watermarks and a time-interval
@@ -438,12 +440,12 @@ def stream_interval_join(spark: SparkSession, events_path: str,
                   .select(F.col("event_id").alias("click_id"),
                           F.col("user_id").alias("click_user"),
                           F.col("evt_ts").alias("click_ts"))
-                  .withWatermark("click_ts", f"{delay_s} seconds"))
+                  .withWatermark("click_ts", f"{IJ_DELAY_S} seconds"))
     buys = (base.where("event_type = 'purchase'")
                 .select(F.col("event_id").alias("buy_id"),
                         F.col("user_id").alias("buy_user"),
                         F.col("evt_ts").alias("buy_ts"))
-                .withWatermark("buy_ts", f"{delay_s} seconds"))
+                .withWatermark("buy_ts", f"{IJ_DELAY_S} seconds"))
     j = clicks.join(
         buys,
         F.expr(f"click_user = buy_user AND buy_ts >= click_ts AND "
@@ -459,7 +461,7 @@ def stream_interval_join(spark: SparkSession, events_path: str,
 
 def stream_interval_join_outer(spark: SparkSession, events_path: str,
                                gap_s: int = 3600,
-                               delay_s: int = 7200) -> DataFrame:
+                               delay_s: int = IJ_DELAY_S) -> DataFrame:
     """LEFT OUTER stream-stream interval join — the attribution join
     that also reports the NON-converting clicks (the rows an inner
     join silently drops are usually the business question). Same
@@ -530,14 +532,14 @@ def stream_dedup_within_watermark(spark: SparkSession,
 
 
 def incremental_rollup(spark: SparkSession, src_dir: str, dest_dir: str,
-                       checkpoint_dir: str, range_width: int = 1000) -> None:
+                       checkpoint_dir: str) -> None:
     """Incrementally-maintained rollup table (materialized-view
     maintenance without a table format): a streaming tumbling-count in
     UPDATE mode emits, per micro-batch, the windows whose totals
     changed — with their FULL cumulative values, because the agg state
     (restored from the checkpoint across runs) carries prior batches —
     and `foreachBatch` upserts exactly those keys into a parquet
-    rollup PARTITIONED BY `win_range` (`win div range_width`).
+    rollup PARTITIONED BY `win_range` (`win div ROLLUP_RANGE`).
 
     The upsert physically rewrites ONLY the partition directories
     containing a touched window: read back just those partitions
@@ -565,7 +567,7 @@ def incremental_rollup(spark: SparkSession, src_dir: str, dest_dir: str,
         sess = batch_df.sparkSession
         new = (batch_df.select("win", "n")
                        .withColumn("win_range",
-                                   F.expr(f"win div {range_width}")))
+                                   F.expr(f"win div {ROLLUP_RANGE}")))
         if os.path.isdir(dest_dir):
             ranges = [r[0] for r in
                       new.select("win_range").distinct().collect()]
@@ -642,8 +644,7 @@ def stream_decontaminate(spark: SparkSession, docs_path: str, bits: list[int],
 
 
 def stream_crawl_gate(spark: SparkSession, docs_path: str,
-                      wrap_sql: str, strip_sql: str,
-                      min_tokens: int, min_quality: float) -> DataFrame:
+                      wrap_sql: str, strip_sql: str) -> DataFrame:
     """STATELESS streaming crawl gate — the live-ingest shape of the
     `doc_crawl_manifest` funnel head: every arriving RAW page is
     boilerplate-stripped and language/quality-gated in ONE pass.
@@ -659,7 +660,8 @@ def stream_crawl_gate(spark: SparkSession, docs_path: str,
     columns through their `keep` parameter instead — the scoring
     expressions stay the operators' own, byte-identical to what the
     batch funnel grades."""
-    from ..operators.text import language_id, quality_score
+    from ..operators.text import (FUNNEL_MIN_QUALITY, FUNNEL_MIN_TOKENS,
+                                  language_id, quality_score)
     sdf = read_stream(spark, docs_path)
     d = (sdf.where("text IS NOT NULL")
             .selectExpr("doc_id", "source", f"{wrap_sql} AS html")
@@ -668,11 +670,12 @@ def stream_crawl_gate(spark: SparkSession, docs_path: str,
     lang = language_id(q, keep=("source", "n_tokens", "quality_score"))
     out = lang.selectExpr(
         "doc_id", "source", "n_tokens", "pred_lang", "quality_score",
-        f"CAST(n_tokens >= {min_tokens} AS BIGINT) AS pass_tokens",
+        f"CAST(n_tokens >= {FUNNEL_MIN_TOKENS} AS BIGINT) AS pass_tokens",
         "CAST(pred_lang = 'en' AS BIGINT) AS pass_lang",
-        f"CAST(quality_score >= {min_quality!r} AS BIGINT) AS pass_quality",
-        f"CAST(n_tokens >= {min_tokens} AND pred_lang = 'en' AND "
-        f"quality_score >= {min_quality!r} AS BIGINT) AS admitted")
+        f"CAST(quality_score >= {FUNNEL_MIN_QUALITY!r} AS BIGINT) "
+        "AS pass_quality",
+        f"CAST(n_tokens >= {FUNNEL_MIN_TOKENS} AND pred_lang = 'en' AND "
+        f"quality_score >= {FUNNEL_MIN_QUALITY!r} AS BIGINT) AS admitted")
     return run_available_now(out, output_mode="append",
                              width=bounded_stream_width(spark, docs_path))
 

@@ -941,8 +941,7 @@ def test_fuzzy_pairs_blocking_and_threshold(spark):
          Row(id=5, name="acme corporation"),    # too far (dist > 2)
          Row(id=6, name=None)],
         "id long, name string")
-    out = fuzzy_pairs(df, "id", "name", F.expr("substr(name, 1, 2)"),
-                      max_dist=2).collect()
+    out = fuzzy_pairs(df, F.expr("substr(name, 1, 2)")).collect()
     pairs = {(r.id_a, r.id_b): r.dist for r in out}
     assert pairs == {(1, 2): 1, (2, 3): 1}   # exact (1,3) excluded
     assert all(r.id_a < r.id_b for r in out)
@@ -953,11 +952,9 @@ def test_fuzzy_pairs_hot_block_cap(spark):
     from pyspark.sql import Row
     rows = [Row(id=i, name=f"aa{i:03d}") for i in range(50)]
     df = spark.createDataFrame(rows, "id long, name string")
-    capped = fuzzy_pairs(df, "id", "name", F.expr("substr(name, 1, 2)"),
-                         max_dist=2, max_block=10)
+    capped = fuzzy_pairs(df, F.expr("substr(name, 1, 2)"), max_block=10)
     assert capped.count() == 0               # 50-row block dropped
-    free = fuzzy_pairs(df, "id", "name", F.expr("substr(name, 1, 2)"),
-                       max_dist=2, max_block=None)
+    free = fuzzy_pairs(df, F.expr("substr(name, 1, 2)"), max_block=None)
     assert free.count() > 0
 
 

@@ -368,7 +368,7 @@ def test_stream_chain_export_reference_layout(spark, tmp_path):
     from ethereum_export_pipeline_spark.streaming import stream_chain_export
     dest, ckpt = str(tmp_path / "chain_pq"), str(tmp_path / "chain_ckpt")
     plan = [(0, 99), (100, 199), (200, 299)]
-    stream_chain_export(spark, dest, ckpt, head=249, plan=plan)
+    stream_chain_export(spark, dest, ckpt, plan=plan)
     df = spark.read.parquet(dest)
     assert df.count() == 250
     assert os.path.isdir(f"{dest}/start_block=00000200/end_block=00000299")
@@ -567,10 +567,10 @@ def test_incremental_rollup_upserts_only_touched_windows(spark, tmp_path):
         return {f: os.path.getmtime(f)
                 for f in sorted(glob.glob(f"{dest}/{pattern}/*.parquet"))}
 
-    # range_width=25 → events 0..499 (windows 0..74) fill partitions
+    # ROLLUP_RANGE=25 → events 0..499 (windows 0..74) fill partitions
     # win_range=0,1,2; the f2 tail (windows 75..119) lands in 3,4
     write_file("f1", 0, 500)
-    incremental_rollup(spark, str(src), dest, ckpt, range_width=25)
+    incremental_rollup(spark, str(src), dest, ckpt)
     got1 = {r.win: r.n for r in spark.read.parquet(dest).collect()}
     assert got1 == expected(500)
     assert {os.path.basename(d) for d in glob.glob(f"{dest}/win_range=*")} \
@@ -578,7 +578,7 @@ def test_incremental_rollup_upserts_only_touched_windows(spark, tmp_path):
     untouched_before = mtimes("win_range=*")
 
     # second run, no new data: rollup unchanged (checkpoint = bookmark)
-    incremental_rollup(spark, str(src), dest, ckpt, range_width=25)
+    incremental_rollup(spark, str(src), dest, ckpt)
     assert {r.win: r.n
             for r in spark.read.parquet(dest).collect()} == expected(500)
     assert mtimes("win_range=*") == untouched_before  # zero rewrites
@@ -588,7 +588,7 @@ def test_incremental_rollup_upserts_only_touched_windows(spark, tmp_path):
     # partition directories stay byte-identical — the physical rewrite
     # now matches the 'only touched windows' claim
     write_file("f2", 500, 300)
-    incremental_rollup(spark, str(src), dest, ckpt, range_width=25)
+    incremental_rollup(spark, str(src), dest, ckpt)
     got2 = {r.win: r.n for r in spark.read.parquet(dest).collect()}
     assert got2 == expected(800)
     for rng in (0, 1, 2):
@@ -633,7 +633,6 @@ def test_stream_interval_join_cross_batch_state(spark, tmp_path):
     ])
     got = sorted((r.click_id, r.buy_id, r.delta_us) for r in
                  stream_interval_join(spark, str(src), gap_s=600,
-                                      delay_s=7200,
                                       max_files_per_trigger=1).collect())
     assert got == [(1, 3, 300_000_000), (2, 4, 100_000_000)]
 
@@ -657,7 +656,7 @@ def test_incremental_rollup_replay_after_crash_mid_upsert(spark, tmp_path):
     pq.write_table(pa.table({"event_id": ids,
                              "ts": [i * 90_000_000_000 for i in ids]}),
                    src / "f1")
-    incremental_rollup(spark, str(src), dest, ckpt, range_width=25)
+    incremental_rollup(spark, str(src), dest, ckpt)
     before = {r.win: r.n for r in spark.read.parquet(dest).collect()}
     exp = {}
     for i in ids:
@@ -675,7 +674,7 @@ def test_incremental_rollup_replay_after_crash_mid_upsert(spark, tmp_path):
     if os.path.exists(crc):
         os.remove(crc)
 
-    incremental_rollup(spark, str(src), dest, ckpt, range_width=25)
+    incremental_rollup(spark, str(src), dest, ckpt)
     after = {r.win: r.n for r in spark.read.parquet(dest).collect()}
     assert after == exp                     # replay converged, no dupes
 

@@ -53,6 +53,6 @@ def test_semi_join_is_broadcast(spark, eth_fixture_dir):
 def test_distinct_keys(spark, eth_fixture_dir):
     chain = FixtureChain(spark, eth_fixture_dir)
     tt = chain.export_token_transfers(0, 39)
-    dk = distinct_keys(tt, "token_address")
+    dk = distinct_keys(tt)
     assert dk.columns == ["token_address"]
     assert dk.count() == tt.select("token_address").distinct().count()

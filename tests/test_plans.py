@@ -262,8 +262,7 @@ def test_fuzzy_match_is_equi_join_on_block_key(spark, catalog):
     from ethereum_export_pipeline_spark.operators.joins import fuzzy_pairs
     from ethereum_export_pipeline_spark.plans.analytics import (
         _BLOCK, _dirty_parts)
-    plan = plan_of(fuzzy_pairs(_dirty_parts(spark, SF_DIR), "id", "name",
-                               F.expr(_BLOCK), max_dist=2))
+    plan = plan_of(fuzzy_pairs(_dirty_parts(spark, SF_DIR), F.expr(_BLOCK)))
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert "levenshtein" in plan.lower()

@@ -132,10 +132,10 @@ def test_ams_sketch_merges_cellwise(spark):
     a = spark.range(0, 500).select(F.col("id").alias("k"))
     b = spark.range(300, 900).select(F.col("id").alias("k"))
     whole = {(r.r, r.c): r.s
-             for r in ams_sketch(a.union(b), "k").collect()}
+             for r in ams_sketch(a.union(b)).collect()}
     merged: dict[tuple, int] = {}
     for part in (a, b):
-        for r in ams_sketch(part, "k").collect():
+        for r in ams_sketch(part).collect():
             merged[(r.r, r.c)] = merged.get((r.r, r.c), 0) + r.s
     merged = {k: v for k, v in merged.items() if v != 0}
     whole = {k: v for k, v in whole.items() if v != 0}

@@ -139,7 +139,7 @@ def test_url_canonicalization_variants_collapse(spark):
     df = spark.range(8).selectExpr("id AS doc_id").selectExpr(
         "doc_id", f"{_url_raw_sql('div', 'STRING')} AS raw_url")
     out = {r["doc_id"]: r["canon"] for r in df.selectExpr(
-        "doc_id", f"{_canon_url_sql('raw_url', rr)} AS canon").collect()}
+        "doc_id", f"{_canon_url_sql(rr)} AS canon").collect()}
     # docs 0,1,2 are entity 0 in three disguises -> identical canonical
     assert out[0] == out[1] == out[2] == "cdn0.example.com/item/0"
     # doc 3 carries a REAL param that must survive
@@ -260,7 +260,7 @@ def test_html_strip_removes_all_chrome_keeps_params(spark):
         [Row(doc_id=5, text="pure article body text 42")])
     out = df.selectExpr(
         "text", f"{_html_wrap_sql('STRING')} AS html").selectExpr(
-        "text", "html", f"{_html_strip_sql('html', rr)} AS stripped")
+        "text", "html", f"{_html_strip_sql(rr)} AS stripped")
     r = out.collect()[0]
     assert "Home" in r["html"] and "Example Corp" in r["html"]
     assert r["stripped"] == r["text"]     # nav/title/footer/script gone

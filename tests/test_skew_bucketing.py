@@ -46,8 +46,8 @@ def test_salted_join_matches_plain_join(spark, skewed):
                    skewed.join(dim, "k").collect())
     hot = spark.createDataFrame([(0,)], "k long")
     got = sorted((r.k, r.v, r.label) for r in
-                 salted_join(skewed, dim, "k", hot_keys=hot,
-                             n_salts=8, salt_src="v").collect())
+                 salted_join(skewed, dim, hot_keys=hot,
+                             n_salts=8).collect())
     assert got == plain
 
 
@@ -56,8 +56,7 @@ def test_salted_join_all_keys_variant(spark, skewed):
     dim = spark.range(12).select(F.col("id").alias("k"),
                                  (F.col("id") + 1000).alias("label"))
     plain = skewed.join(dim, "k").count()
-    assert salted_join(skewed, dim, "k", n_salts=4,
-                       salt_src="v").count() == plain
+    assert salted_join(skewed, dim, n_salts=4).count() == plain
 
 
 def test_bucketed_join_avoids_shuffle(spark, tmp_path):
@@ -100,7 +99,7 @@ def test_zorder_layout_skips_files_on_the_second_dimension(spark, tmp_path):
                        F.expr("id div 128").alias("y"),
                        F.col("id").alias("v")))
     zdir, ldir = str(tmp_path / "zorder"), str(tmp_path / "linear")
-    write_zordered(df, zdir, "x", "y", n_files=16)
+    write_zordered(df, zdir)
     (df.repartitionByRange(16, "x").sortWithinPartitions("x")
        .write.mode("overwrite").parquet(ldir))
 

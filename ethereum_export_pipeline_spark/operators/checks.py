@@ -24,6 +24,13 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+#: the lineitem columns `profile_table` profiles (exact-typed: four
+#: BIGINTs + two VARCHARs)
+PROFILE_INT = ("l_orderkey", "l_partkey", "l_suppkey", "l_linenumber")
+PROFILE_STR = ("l_returnflag", "l_linestatus")
+HIST_BINS = 10  # bins of the per-source n_chars histograms
+OUTLIER_K = 3  # robust_outlier_census flags |x − median| > k·MAD
+
 
 def check_rules(df: DataFrame, rules: dict[str, str]) -> DataFrame:
     """Evaluate per-row boolean SQL predicates; one scan for all
@@ -40,15 +47,15 @@ def check_rules(df: DataFrame, rules: dict[str, str]) -> DataFrame:
         f"stack({len(rules)}, {pairs}) AS (rule, n_violations)")
 
 
-def check_unique(df: DataFrame, key: str) -> DataFrame:
-    """Key-uniqueness check: violations = duplicate non-null keys
-    (count − distinct count) + NULL keys (a NULL key can never be a
-    valid unique identifier)."""
+def check_unique(df: DataFrame) -> DataFrame:
+    """Key-uniqueness check of `o_orderkey`: violations = duplicate
+    non-null keys (count − distinct count) + NULL keys (a NULL key can
+    never be a valid unique identifier)."""
     return df.agg(
-        F.lit(f"unique_{key}").alias("rule"),
-        F.expr(f"CAST(count({key}) - count(DISTINCT {key}) "
-               f"+ sum(CASE WHEN {key} IS NULL THEN 1 ELSE 0 END) "
-               f"AS BIGINT)").alias("n_violations"))
+        F.lit("unique_o_orderkey").alias("rule"),
+        F.expr("CAST(count(o_orderkey) - count(DISTINCT o_orderkey) "
+               "+ sum(CASE WHEN o_orderkey IS NULL THEN 1 ELSE 0 END) "
+               "AS BIGINT)").alias("n_violations"))
 
 
 def check_ref(child: DataFrame, parent: DataFrame, child_key: str,
@@ -74,8 +81,7 @@ def audit(parts: list[DataFrame]) -> DataFrame:
     return out
 
 
-def profile_table(df: DataFrame, int_cols: tuple[str, ...] = (),
-                  str_cols: tuple[str, ...] = ()) -> DataFrame:
+def profile_table(df: DataFrame) -> DataFrame:
     """Column profiling in ONE scan — the Deequ/dbt-docs statistics
     pass that feeds schema docs, drift alarms, and optimizer-style
     stats: per column (n_nonnull, n_distinct, min, max), melted to
@@ -98,7 +104,7 @@ def profile_table(df: DataFrame, int_cols: tuple[str, ...] = (),
     differs between engines; profile exact-typed columns or
     pre-quantize)."""
     plain, dist = [], []
-    for c in int_cols + str_cols:
+    for c in PROFILE_INT + PROFILE_STR:
         plain += [
             F.expr(f"CAST(count({c}) AS BIGINT)").alias(f"_nn_{c}"),
             F.expr(f"CAST(min({c}) AS STRING)").alias(f"_mn_{c}"),
@@ -107,7 +113,7 @@ def profile_table(df: DataFrame, int_cols: tuple[str, ...] = (),
         dist.append(
             F.expr(f"CAST(count(DISTINCT {c}) AS BIGINT)").alias(f"_nd_{c}"))
     wide = df.agg(*plain).crossJoin(F.broadcast(df.agg(*dist)))
-    cols = int_cols + str_cols
+    cols = PROFILE_INT + PROFILE_STR
     pairs = ", ".join(
         f"'{c}', `_nn_{c}`, `_nd_{c}`, `_mn_{c}`, `_mx_{c}`" for c in cols)
     return wide.selectExpr(
@@ -115,8 +121,7 @@ def profile_table(df: DataFrame, int_cols: tuple[str, ...] = (),
         "(column, n_nonnull, n_distinct, min_value, max_value)")
 
 
-def equiwidth_histogram(df: DataFrame, group_col: str, value_col: str,
-                        n_bins: int = 10) -> DataFrame:
+def equiwidth_histogram(df: DataFrame) -> DataFrame:
     """Per-group equi-width histogram of an integer column — the
     distribution-SHAPE profile next to `profile_table`'s point stats
     and text.length_order_stats' quantiles (a bimodal length
@@ -135,26 +140,25 @@ def equiwidth_histogram(df: DataFrame, group_col: str, value_col: str,
     scans, both map-side combined; output is ≤ groups·n_bins rows.
     Overflow: (x-lo)·n_bins must stay under 2^63 — fine for any
     physical quantity binned into ≤ 10^6 bins."""
-    vals = (df.where(F.col(value_col).isNotNull())
-              .select(F.col(group_col).alias("grp"),
-                      F.col(value_col).cast("long").alias("x")))
+    vals = (df.where(F.col("n_chars").isNotNull())
+              .select(F.col("source").alias("grp"),
+                      F.col("n_chars").cast("long").alias("x")))
     rng = vals.agg(F.min("x").alias("lo"), F.max("x").alias("hi"))
     return (vals.crossJoin(F.broadcast(rng))
                 .withColumn("bin", F.expr(
-                    f"least({n_bins - 1} , "
-                    f"(x - lo) * {n_bins} div (hi - lo + 1))"))
+                    f"least({HIST_BINS - 1} , "
+                    f"(x - lo) * {HIST_BINS} div (hi - lo + 1))"))
                 .groupBy("grp", "bin")
                 .agg(F.count(F.lit(1)).cast("long").alias("n"),
-                     F.expr(f"min(lo + bin * (hi - lo + 1) div {n_bins})")
+                     F.expr(f"min(lo + bin * (hi - lo + 1) div {HIST_BINS})")
                       .alias("bin_lo"),
                      F.expr(f"min(lo + (bin + 1) * (hi - lo + 1) "
-                            f"div {n_bins} - 1)").alias("bin_hi"))
-                .select(F.col("grp").alias(group_col), "bin",
+                            f"div {HIST_BINS} - 1)").alias("bin_hi"))
+                .select(F.col("grp").alias("source"), "bin",
                         "bin_lo", "bin_hi", "n"))
 
 
-def robust_outlier_census(df: DataFrame, group_col: str, value_col: str,
-                          k: int = 3) -> DataFrame:
+def robust_outlier_census(df: DataFrame) -> DataFrame:
     """Per-group robust outlier census via median/MAD — the
     distribution-drift tripwire that mean/stddev can't be (one
     pathological crawl shard with 10^8-char documents drags the mean
@@ -177,9 +181,9 @@ def robust_outlier_census(df: DataFrame, group_col: str, value_col: str,
     EXACT deviants as inliers: |x−med| > 0 flags every non-median
     value, the standard degenerate-MAD behavior, documented here."""
     from pyspark.sql import Window
-    vals = (df.where(F.col(value_col).isNotNull())
-              .select(F.col(group_col).alias("grp"),
-                      F.col(value_col).cast("long").alias("x")))
+    vals = (df.where(F.col("n_chars").isNotNull())
+              .select(F.col("source").alias("grp"),
+                      F.col("n_chars").cast("long").alias("x")))
     w = Window.partitionBy("grp").orderBy("x")
     med = (vals.withColumn("_rn", F.row_number().over(w))
                .withColumn("_n", F.count(F.lit(1)).over(
@@ -199,17 +203,16 @@ def robust_outlier_census(df: DataFrame, group_col: str, value_col: str,
                .agg(F.count(F.lit(1)).cast("long").alias("n"),
                     F.min("median").alias("median"),
                     F.min("mad").alias("mad"),
-                    F.expr(f"CAST(sum(CASE WHEN d > {k} * mad "
+                    F.expr(f"CAST(sum(CASE WHEN d > {OUTLIER_K} * mad "
                            "THEN 1 ELSE 0 END) AS BIGINT)")
                      .alias("n_outliers"))
-               .select(F.col("grp").alias(group_col), "n", "median",
+               .select(F.col("grp").alias("source"), "n", "median",
                        "mad", "n_outliers",
                        F.expr("n_outliers * 1000000 div n")
                         .alias("outlier_ppm")))
 
 
-def equidepth_histogram(df: DataFrame, group_col: str, value_col: str,
-                        n_bins: int = 10) -> DataFrame:
+def equidepth_histogram(df: DataFrame) -> DataFrame:
     """Per-group equi-DEPTH histogram — the quantile-bin complement of
     `equiwidth_histogram` (equi-width shows shape on a fixed scale;
     equi-depth shows WHERE the mass sits: bin boundaries ARE the
@@ -231,16 +234,16 @@ def equidepth_histogram(df: DataFrame, group_col: str, value_col: str,
     range partitioning — documented, same trade as any exact global
     quantile), one (grp, bin) roll-up."""
     from pyspark.sql import Window
-    vals = (df.where(F.col(value_col).isNotNull())
-              .select(F.col(group_col).alias("grp"),
-                      F.col(value_col).cast("long").alias("x"))
+    vals = (df.where(F.col("n_chars").isNotNull())
+              .select(F.col("source").alias("grp"),
+                      F.col("n_chars").cast("long").alias("x"))
               .groupBy("grp", "x")
               .agg(F.count(F.lit(1)).cast("long").alias("cnt")))
     w = Window.orderBy(F.col("x").asc(), F.col("grp").asc())
-    binned = vals.withColumn("bin", (F.ntile(n_bins).over(w) - 1)
+    binned = vals.withColumn("bin", (F.ntile(HIST_BINS).over(w) - 1)
                              .cast("long"))
     return (binned.groupBy("grp", "bin")
                   .agg(F.min("x").alias("lo"), F.max("x").alias("hi"),
                        F.expr("CAST(sum(cnt) AS BIGINT)").alias("n"))
-                  .select(F.col("grp").alias(group_col), "bin",
+                  .select(F.col("grp").alias("source"), "bin",
                           "lo", "hi", "n"))

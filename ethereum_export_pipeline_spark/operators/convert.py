@@ -54,4 +54,4 @@ def convert_to_parquet(spark: SparkSession, csv_root: str, table: str,
 def typed_projection(df: DataFrame, table: str) -> DataFrame:
     """ApplyMapping parity (P1–P3): select + per-column try_cast, with
     the wei columns landing as decimal(38,0)."""
-    return apply_mapping(df, mapping_for(table, partitioned=True))
+    return apply_mapping(df, mapping_for(table))

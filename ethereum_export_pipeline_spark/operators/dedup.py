@@ -38,6 +38,8 @@ from ..functions import (MERSENNE31, affine_hash, h32, h60, hash_family,
 
 NGRAM_N = 3          # words per shingle
 MINHASH_K = 16       # signature length
+NGRAM_THRESHOLD = 0.5  # verified-Jaccard floor of every near-dup pair
+BENCH_MOD = 97       # doc_id % 97 == 0 stands in for the eval suite
 MINHASH_BANDS = 8    # 8 bands × 2 rows
 SIMHASH_BITS = 48
 SIMHASH_BANDS = 4    # 4 × 12 bits
@@ -259,9 +261,8 @@ def ssjoin_prefix_pairs(df: DataFrame) -> DataFrame:
     # O(docs × 16 B), far smaller than re-scanning text. rep is 1:1
     # with the md5 group key, so the group self-join below keys on
     # the 8-byte rep, not the 32-byte digest.
-    members = (grp.join(reps, "ck").select(F.col("doc").alias("member"),
-                                           "rep")
-                  .localCheckpoint(eager=True))
+    members = checkpoint(grp.join(reps, "ck")
+                            .select(F.col("doc").alias("member"), "rep"))
     rep_docs = base.join(reps.select(F.col("rep").alias("doc")),
                          "doc", "left_semi")
 
@@ -279,10 +280,10 @@ def ssjoin_prefix_pairs(df: DataFrame) -> DataFrame:
     # re-executes per consumer (no automatic exchange reuse across
     # self-joins of derived frames — see CLAUDE.md); payload is
     # O(docs × avg_doc × ~60 B), executor-local.
-    per_doc = (keyed.groupBy("doc")
-                    .agg(F.array_sort(F.collect_list("k")).alias("ks"),
-                         F.collect_list("h").alias("hs"))
-                    .localCheckpoint(eager=True))
+    per_doc = checkpoint(
+        keyed.groupBy("doc")
+             .agg(F.array_sort(F.collect_list("k")).alias("ks"),
+                  F.collect_list("h").alias("hs")))
     # probe prefix for Jaccard ≥ tn/td, l-extended: sz − ⌈sz·tn/td⌉ + l;
     # index prefix: sz − ⌈2·sz·tn/(tn+td)⌉ + l (≤ probe prefix)
     ext = 2  # the adaptive-filter l
@@ -358,13 +359,14 @@ def ssjoin_prefix_pairs(df: DataFrame) -> DataFrame:
     return cross.unionByName(within)
 
 
-def ngram_jaccard_pairs(df: DataFrame, threshold: float = 0.5,
-                        max_shingle_df: int | None = DEFAULT_MAX_DF) -> DataFrame:
-    """Near-dup pairs by exact n-gram Jaccard via an inverted-index
-    self-join. Output: (doc_a, doc_b, n_common, jaccard). Tokenize
-    runs at scan width (spread-first, no-op on well-split input)."""
+def ngram_jaccard_pairs(df: DataFrame) -> DataFrame:
+    """Near-dup pairs (Jaccard ≥ `NGRAM_THRESHOLD`) by exact n-gram
+    Jaccard via an inverted-index self-join over the `DEFAULT_MAX_DF`
+    df-cut shingles. Output: (doc_a, doc_b, n_common, jaccard).
+    Tokenize runs at scan width (spread-first, no-op on well-split
+    input)."""
     df = spread(df.select("doc_id", "text"))
-    sh = _sized_shingles(df, max_shingle_df)
+    sh = _sized_shingles(df, DEFAULT_MAX_DF)
     a = sh.select(F.col("doc_id").alias("doc_a"), "shingle",
                   F.col("sz").alias("sz_a"))
     b = sh.select(F.col("doc_id").alias("doc_b"), "shingle",
@@ -375,7 +377,7 @@ def ngram_jaccard_pairs(df: DataFrame, threshold: float = 0.5,
          .groupBy("doc_a", "doc_b", "sz_a", "sz_b")  # sizes ride the group key
          .agg(F.count(F.lit(1)).alias("n_common"))
     )
-    return _jaccard_from_pairs(inter, threshold)
+    return _jaccard_from_pairs(inter, NGRAM_THRESHOLD)
 
 
 # ----------------------------------------------------------- minhash
@@ -412,10 +414,10 @@ def _banded_buckets(sig: DataFrame) -> DataFrame:
          .alias("bucket"))
 
 
-def minhash_lsh_pairs(df: DataFrame, threshold: float = 0.5) -> DataFrame:
+def minhash_lsh_pairs(df: DataFrame) -> DataFrame:
     """MinHash LSH near-dup pairs, verified with exact Jaccard.
     Output: (doc_a, doc_b, n_common, jaccard) for candidates whose
-    verified Jaccard ≥ threshold.
+    verified Jaccard ≥ `NGRAM_THRESHOLD`.
 
     Scan width (optimization r11, guide §2.5 input skew): the
     tokenize+shingle pass runs in the SCAN stage, so a narrow input
@@ -442,8 +444,7 @@ def minhash_lsh_pairs(df: DataFrame, threshold: float = 0.5) -> DataFrame:
     # reliable copy, so a lost executor fails the job instead of
     # recomputing. At that scale use a reliable `checkpoint()` to a
     # checkpoint dir sized for it.
-    sh = (_sized_shingles(df, max_shingle_df=None)
-          .localCheckpoint(eager=True))
+    sh = checkpoint(_sized_shingles(df, max_shingle_df=None))
     sig = _signatures_from_shingles(sh)
     melted = _banded_buckets(sig)
     l = melted.select(F.col("doc_id").alias("doc_a"), "bucket")
@@ -465,11 +466,10 @@ def minhash_lsh_pairs(df: DataFrame, threshold: float = 0.5) -> DataFrame:
          .groupBy("doc_a", "doc_b", "sz_a", "sz_b")
          .agg(F.count(F.lit(1)).alias("n_common"))
     )
-    return _jaccard_from_pairs(inter, threshold)
+    return _jaccard_from_pairs(inter, NGRAM_THRESHOLD)
 
 
-def incremental_neardup(new_df: DataFrame, seen_df: DataFrame,
-                        threshold: float = 0.5) -> DataFrame:
+def incremental_neardup(new_df: DataFrame, seen_df: DataFrame) -> DataFrame:
     """CROSS-BATCH near-dup gate — the operator an INCREMENTAL
     ingest pipeline actually runs: today's batch (`new_df`) checked
     against the already-ingested corpus (`seen_df`), per-new-doc
@@ -502,10 +502,8 @@ def incremental_neardup(new_df: DataFrame, seen_df: DataFrame,
     # each side's inverted index is materialized once and feeds both
     # its signature aggregate and its verify join side, instead of
     # re-tokenizing per consumer (was 4 full text passes, 2 per side).
-    sh_new = (_sized_shingles(new_s, max_shingle_df=None)
-              .localCheckpoint(eager=True))
-    sh_seen = (_sized_shingles(seen_s, max_shingle_df=None)
-               .localCheckpoint(eager=True))
+    sh_new = checkpoint(_sized_shingles(new_s, max_shingle_df=None))
+    sh_seen = checkpoint(_sized_shingles(seen_s, max_shingle_df=None))
     mn = (_banded_buckets(_signatures_from_shingles(sh_new))
           .select(F.col("doc_id").alias("new_id"), "bucket"))
     ms = (_banded_buckets(_signatures_from_shingles(sh_seen))
@@ -529,7 +527,7 @@ def incremental_neardup(new_df: DataFrame, seen_df: DataFrame,
         (F.col("n_common")
          / (F.col("sz_a") + F.col("sz_b") - F.col("n_common")))
         .cast("double"))
-        .where(F.col("jaccard") >= threshold))
+        .where(F.col("jaccard") >= NGRAM_THRESHOLD))
     from pyspark.sql import Window
     w = (Window.partitionBy("new_id")
                .orderBy(F.col("jaccard").desc(), F.col("seen_id").asc()))
@@ -590,8 +588,7 @@ def simhash_pairs(df: DataFrame) -> DataFrame:
     full corpus scans in the dumped plan; measured 2.9 → 2.5 s at
     sf0.1, and at 100 TB the second tokenize scan is the whole
     bill)."""
-    fps = (simhash_fingerprints(df)
-           .localCheckpoint(eager=True))
+    fps = checkpoint(simhash_fingerprints(df))
     width = SIMHASH_BITS // SIMHASH_BANDS
     melted = fps.select(
         F.col("doc_id"), F.col("fingerprint"),
@@ -623,9 +620,12 @@ def simhash_pairs(df: DataFrame) -> DataFrame:
 
 # ----------------------------------------------- duplicate clusters
 
+CC_MAX_ITER = 20  # propagation rounds before `connected_components` raises
+
+
 def connected_components(pairs: DataFrame, src: str = "doc_a",
-                         dst: str = "doc_b", id_out: str = "doc_id",
-                         max_iter: int = 20) -> DataFrame:
+                         dst: str = "doc_b",
+                         id_out: str = "doc_id") -> DataFrame:
     """Collapse near-dup PAIRS into duplicate CLUSTERS: connected
     components of the undirected pair graph, labelled by the minimum
     member id. Output: (id_out, cluster_id) for every node that
@@ -638,7 +638,7 @@ def connected_components(pairs: DataFrame, src: str = "doc_a",
     a node carries the min id within graph distance k — convergence in
     diameter(G) rounds, detected by a changed-label count. Dup
     clusters are short-diameter (near-cliques from LSH banding), so
-    this terminates in 2-4 rounds in practice; `max_iter` bounds
+    this terminates in 2-4 rounds in practice; `CC_MAX_ITER` bounds
     pathological chains. This is the simple half of the large-star /
     small-star MapReduce CC algorithm (Kiveris et al., "Connected
     Components in MapReduce and Beyond", SoCC'14); at 100 TB swap the
@@ -655,7 +655,7 @@ def connected_components(pairs: DataFrame, src: str = "doc_a",
     magnitude smaller than the corpus.
 
     Raises RuntimeError if the propagation has not reached its fixpoint
-    after `max_iter` rounds — partial labels would silently disagree
+    after `CC_MAX_ITER` rounds — partial labels would silently disagree
     with the exact-fixpoint oracle (and with themselves across runs)."""
     # materialize the edge list ONCE before iterating: the pair frame's
     # lineage is the whole upstream candidate pipeline (LSH banding +
@@ -681,7 +681,7 @@ def connected_components(pairs: DataFrame, src: str = "doc_a",
                    .select(F.col("u").alias("node"),
                            F.least("u", "mv").alias("lbl")))
     changed = None
-    for _ in range(max_iter):
+    for _ in range(CC_MAX_ITER):
         nbr = (edges.join(labels, edges.v == labels.node)
                     .select(F.col("u").alias("node"), "lbl",
                             F.lit(False).alias("is_old")))
@@ -700,8 +700,8 @@ def connected_components(pairs: DataFrame, src: str = "doc_a",
     if changed != 0:
         raise RuntimeError(
             f"connected_components: min-label propagation did not converge "
-            f"within max_iter={max_iter} rounds (graph diameter exceeds the "
-            f"bound); raise max_iter or switch to star-contraction")
+            f"within {CC_MAX_ITER} rounds (graph diameter exceeds the "
+            f"bound); raise CC_MAX_ITER or switch to star-contraction")
     return labels.select(F.col("node").alias(id_out),
                          F.col("lbl").alias("cluster_id"))
 
@@ -716,7 +716,7 @@ def connected_components_star(pairs: DataFrame, src: str = "doc_a",
     et al., "Connected Components in MapReduce and Beyond", SoCC'14):
     the O(log n)-round alternative to `connected_components` for
     graphs with LONG CHAINS, where min-label propagation needs
-    O(diameter) rounds and raises past `max_iter`. Same contract:
+    O(diameter) rounds and raises past `CC_MAX_ITER`. Same contract:
     (id_out, cluster_id = component min) for every node appearing in
     a pair.
 
@@ -817,12 +817,12 @@ def keep_canonical(df: DataFrame, clusters: DataFrame) -> DataFrame:
               .drop("_cc_id", "_cc_lbl"))
 
 
-def decontaminate(df: DataFrame, bench_mod: int = 97) -> DataFrame:
+def decontaminate(df: DataFrame) -> DataFrame:
     """Benchmark decontamination: per training document, how many of
     its word n-gram shingles also appear in the held-out benchmark
     set. Docs whose n-grams overlap an eval benchmark leak test data
     into training — the standard mitigation is n-gram-overlap removal.
-    The "benchmark" here is the deterministic slice id % bench_mod == 0
+    The "benchmark" here is the deterministic slice id % BENCH_MOD == 0
     (stands in for a real eval-suite table: swap the predicate for a
     join against it).
 
@@ -837,7 +837,7 @@ def decontaminate(df: DataFrame, bench_mod: int = 97) -> DataFrame:
     the doc key computes totals and hits together (a semi-join +
     separate aggregates would scan and shuffle the corpus twice)."""
     sh = shingles(spread(df.select("doc_id", "text")))
-    is_bench = (F.col("doc_id") % bench_mod) == 0
+    is_bench = (F.col("doc_id") % BENCH_MOD) == 0
     bench_sh = (sh.where(is_bench).select("shingle").distinct()
                   .withColumn("_hit", F.lit(1)))
     return (
@@ -860,10 +860,10 @@ def decontaminate(df: DataFrame, bench_mod: int = 97) -> DataFrame:
 SUBSTR_GRAM_LEN = 20  # chars per gram (the "min duplicated length")
 
 
-def substring_dup_spans(df: DataFrame,
-                        gram_len: int = SUBSTR_GRAM_LEN) -> DataFrame:
+def substring_dup_spans(df: DataFrame) -> DataFrame:
     """EXACT duplicated-substring census — per document, the merged
-    character spans covered by any length-`gram_len` substring that
+    character spans covered by any length-`SUBSTR_GRAM_LEN` (L)
+    substring that
     occurs at least twice anywhere in the corpus (including twice in
     the same document: self-repetition is duplication too).
 
@@ -872,15 +872,15 @@ def substring_dup_spans(df: DataFrame,
     re-expressed for a shared-nothing engine: where the paper builds
     a single-machine suffix array, here every overlapping character
     gram becomes an inverted-index posting — the standard MapReduce
-    equivalent. A span duplicated for >= gram_len chars necessarily
+    equivalent. A span duplicated for >= L chars necessarily
     contains a duplicated gram, so merged gram hits recover the
     duplicated regions (granularity: span boundaries are gram-aligned,
-    the standard over-approximation by < gram_len chars per edge).
+    the standard over-approximation by < L chars per edge).
 
     Pipeline (exact integer arithmetic; the OUTPUT spans are
     oracle-twinned — the posting key is engine-internal, so it uses
     the fastest JVM hash rather than a cross-engine md5):
-      1. positions: explode 1..len-gram_len+1, key = TWO independent
+      1. positions: explode 1..len-L+1, key = TWO independent
          xxhash64 values of the gram (128 bits total: a 32-char md5
          hex STRING key measured 11.4 GB shuffle at the ×100 smoke
          and md5+conv dominated CPU; xxhash64 is codegen-native and
@@ -893,8 +893,8 @@ def substring_dup_spans(df: DataFrame,
       2. duplicated keys: hash-agg on key HAVING count >= 2.
       3. hit positions: semi join positions x duplicated keys.
       4. span merge per doc: ascending positions, new-island flag when
-         the gap >= gram_len (equal-length spans: the running island
-         end is lag(pos)+gram_len-1), island id = running sum, then
+         the gap >= L (equal-length spans: the running island
+         end is lag(pos)+L-1), island id = running sum, then
          min/max per island.
     Returns one row per doc: (doc_id, n_chars, n_dup_spans, dup_chars,
     dup_frac_ppm) — truncating-division ppm, exact BIGINTs throughout.
@@ -909,7 +909,7 @@ def substring_dup_spans(df: DataFrame,
     longest document, not the corpus.
     """
     from pyspark.sql import Window
-    L = gram_len
+    L = SUBSTR_GRAM_LEN
     # the posting explosion (one row per corpus char) happens in the
     # scan stage — a one-file fixture would serialize it on one task
     df = spread(df)
@@ -965,15 +965,15 @@ KR_MOD = 1_000_000_007  # 31-bit prime modulus: keeps every Horner
                         # regime as MERSENNE31-reduced h32
 
 
-def winnow_fingerprints(df: DataFrame, k: int = WINNOW_K,
-                        w: int = WINNOW_W) -> DataFrame:
+def winnow_fingerprints(df: DataFrame) -> DataFrame:
     """Winnowing document fingerprints (Schleimer, Wilkerson, Aiken,
-    SIGMOD'03 — the MOSS algorithm): hash every overlapping `k`-char
-    gram, slide a window of `w` hashes, select each window's MINIMUM
-    (rightmost on ties, the paper's rule); the selected (pos, hash)
-    set is the fingerprint. Guarantees: any exact substring match of
-    length ≥ w + k − 1 shares a fingerprint (local window minima
-    agree), and expected density is 2/(w+1) — the SAMPLED exact-match
+    SIGMOD'03 — the MOSS algorithm): hash every overlapping k-char
+    gram (k = `WINNOW_K`), slide a window of w = `WINNOW_W` hashes,
+    select each window's MINIMUM (rightmost on ties, the paper's
+    rule); the selected (pos, hash) set is the fingerprint.
+    Guarantees: any exact substring match of length ≥ w + k − 1
+    shares a fingerprint (local window minima agree), and expected
+    density is 2/(w+1) — the SAMPLED exact-match
     detector between the two extremes already in the engine: hashing
     EVERY gram (`substring_dup_spans` — exact spans, one posting per
     corpus char) and one hash per doc (`dedup_exact`).
@@ -999,30 +999,30 @@ def winnow_fingerprints(df: DataFrame, k: int = WINNOW_K,
     the 1-based gram position, fp the gram hash. Docs shorter than
     `k` chars yield no rows; docs with fewer than `w` grams winnow a
     single window over all their grams."""
-    hexpr = (f"aggregate(slice(cs, CAST(p AS INT), {k}), "
+    hexpr = (f"aggregate(slice(cs, CAST(p AS INT), {WINNOW_K}), "
              f"CAST(0 AS BIGINT), "
              f"(a, c) -> (a * {KR_BASE} + c) % {KR_MOD})")
     # the whole op is compute-bound INSIDE the scan — a one-file
     # fixture would pin it to a single task (same knob as ivf_topk)
     df = spread(df)
     base = (df.where(F.col("text").isNotNull()
-                     & (F.length("text") >= k))
+                     & (F.length("text") >= WINNOW_K))
               .select(F.col("doc_id"),
                       F.expr("transform(split(text, ''), "
                              f"c -> CAST(ascii(c) AS BIGINT))")
                        .alias("cs"))
               .select(F.col("doc_id"),
                       F.expr(f"transform(sequence(1, size(cs) "
-                             f"- {k} + 1), p -> {hexpr})")
+                             f"- {WINNOW_K} + 1), p -> {hexpr})")
                        .alias("hs")))
     # slice + array_min per window: measured FASTER than the
     # "allocation-free" struct-accumulator aggregate (whose per-step
     # named_struct allocation cost 8× the slice form at ×10) —
     # array_min/slice are specialized codegen, interpreted lambdas
     # are not. Rightmost tie via reverse+array_position (paper rule).
-    wins = (f"transform(sequence(1, greatest(size(hs) - {w} + 1, 1)), "
+    wins = (f"transform(sequence(1, greatest(size(hs) - {WINNOW_W} + 1, 1)), "
             f"i -> named_struct('i', i, 's', slice(hs, CAST(i AS INT), "
-            f"CAST(least({w}, size(hs) - i + 1) AS INT))))")
+            f"CAST(least({WINNOW_W}, size(hs) - i + 1) AS INT))))")
     fps = (f"array_distinct(transform({wins}, x -> named_struct("
            f"'pos', CAST(x.i + size(x.s) "
            f"- array_position(reverse(x.s), array_min(x.s)) AS BIGINT), "
@@ -1033,8 +1033,7 @@ def winnow_fingerprints(df: DataFrame, k: int = WINNOW_K,
                         F.col("f.fp").cast("long").alias("fp")))
 
 
-def winnow_shared_census(df: DataFrame, k: int = WINNOW_K,
-                         w: int = WINNOW_W) -> DataFrame:
+def winnow_shared_census(df: DataFrame) -> DataFrame:
     """Per-doc cross-document fingerprint-sharing census over the
     winnowed fingerprints: n_fp distinct fingerprint hashes per doc,
     n_shared of them appearing in ≥ 2 DISTINCT docs (cross-doc reuse
@@ -1044,8 +1043,7 @@ def winnow_shared_census(df: DataFrame, k: int = WINNOW_K,
     same first_seen shape as shingle_novelty, on an 8×-sampled
     stream."""
     from pyspark.sql import Window
-    fp = (winnow_fingerprints(df, k=k, w=w)
-          .select("doc_id", "fp").distinct())
+    fp = winnow_fingerprints(df).select("doc_id", "fp").distinct()
     w_fp = Window.partitionBy("fp")
     flagged = fp.withColumn(
         "shared", (F.count(F.lit(1)).over(w_fp) >= 2).cast("long"))
@@ -1069,8 +1067,7 @@ def winnow_shared_census(df: DataFrame, k: int = WINNOW_K,
 CONTAINMENT_PPM = 800_000  # flag pairs where ≥80% of one side is shared
 
 
-def containment_pairs(df: DataFrame,
-                      threshold_ppm: int = CONTAINMENT_PPM) -> DataFrame:
+def containment_pairs(df: DataFrame) -> DataFrame:
     """ASYMMETRIC near-dup detection: shingle containment
     |S_A ∩ S_B| / |S_A| — the excerpt/superset signal Jaccard
     structurally misses (a 100-shingle quote inside a 10,000-shingle
@@ -1082,7 +1079,8 @@ def containment_pairs(df: DataFrame,
     Same candidate machinery as `ngram_jaccard_pairs` (one sized-
     shingle lineage, df-cut, equi-join — ReusedExchange pinned by the
     jaccard twin's plan test), but thresholded on the MAX directional
-    containment, in exact ppm fixed point. Output per (a<b) pair:
+    containment, in exact ppm fixed point (≥ `CONTAINMENT_PPM`).
+    Output per (a<b) pair:
     (doc_a, doc_b, n_common, sz_a, sz_b, cont_a_ppm, cont_b_ppm)
     where cont_a_ppm = 1e6·n_common div sz_a (share of A inside B).
 
@@ -1105,7 +1103,7 @@ def containment_pairs(df: DataFrame,
             .withColumn("cont_b_ppm",
                         F.expr("n_common * 1000000 div sz_b"))
             .where(F.greatest("cont_a_ppm", "cont_b_ppm")
-                   >= threshold_ppm)
+                   >= CONTAINMENT_PPM)
             .select("doc_a", "doc_b",
                     F.col("n_common").cast("long").alias("n_common"),
                     F.col("sz_a").cast("long").alias("sz_a"),
@@ -1113,8 +1111,7 @@ def containment_pairs(df: DataFrame,
                     "cont_a_ppm", "cont_b_ppm"))
 
 
-def minhash_estimator_quality(df: DataFrame, threshold: float = 0.5,
-                              pairs: DataFrame | None = None) -> DataFrame:
+def minhash_estimator_quality(df: DataFrame, pairs: DataFrame) -> DataFrame:
     """MinHash estimator-quality report — `emb_ann_recall`'s text-side
     twin: for every verified near-dup pair, the Jaccard ESTIMATE the
     signatures imply (matching components / K — the statistic whose
@@ -1131,16 +1128,14 @@ def minhash_estimator_quality(df: DataFrame, threshold: float = 0.5,
     banded candidates, semi-join-restricted exact verify) and adds
     two broadcast-ish joins of the K-column signature frame onto the
     (small) verified pair list — the pair list never re-scans the
-    corpus. Pass `pairs` (e.g. the catalog's memoized pair graph) to
-    reuse an already-materialized candidate list."""
-    if pairs is None:
-        pairs = minhash_lsh_pairs(df, threshold=threshold)
+    corpus. `pairs` is the `minhash_lsh_pairs(df)` frame (the
+    catalog's memoized pair graph), so the candidate list is not
+    rebuilt here."""
     df = spread(df.select("doc_id", "text"))
     # ONE tokenize+shingle pass (optimization r12, guide §2.4): the
     # materialized index feeds the two sz join sides AND the signature
     # aggregate (was 3 full text passes — sz consumed twice, sig once)
-    sh = (_sized_shingles(df, max_shingle_df=None)
-          .localCheckpoint(eager=True))
+    sh = checkpoint(_sized_shingles(df, max_shingle_df=None))
     sz = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
     pairs = (pairs
              .join(sz.select(F.col("doc_id").alias("doc_a"),

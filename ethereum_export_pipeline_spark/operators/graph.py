@@ -169,7 +169,11 @@ def triangle_counts(edges: DataFrame) -> DataFrame:
                           .cast("long").alias("n_triangles")))
 
 
-def kcore_peel(edges: DataFrame, k: int = 2, rounds: int = 4) -> DataFrame:
+KCORE_K = 2  # kcore_peel keeps nodes with >= 2 surviving neighbors
+KCORE_ROUNDS = 4
+
+
+def kcore_peel(edges: DataFrame) -> DataFrame:
     """k-core membership by iterative peeling — the cohesion metric
     BETWEEN degree and triangles: a node survives the k-core iff it
     keeps >= k neighbors after everyone below k is recursively
@@ -179,26 +183,26 @@ def kcore_peel(edges: DataFrame, k: int = 2, rounds: int = 4) -> DataFrame:
     at least one cycle", the classic template/boilerplate-cluster
     signal (Seidman '83; distributed peeling à la Montresor et al.).
 
-    Runs EXACTLY `rounds` peel rounds (not to convergence): each round
-    recomputes degrees over the surviving subgraph and semi-joins the
-    edge list to nodes with deg >= k. A fixed round count keeps the
-    operator twinnable against an unrolled-CTE oracle — the same
-    determinism contract as `pagerank_exact`. Once the peel reaches a
-    fixed point the remaining rounds are no-ops, so `rounds` only
-    needs to exceed the peel DEPTH (max cascade length), not the node
-    count; pass more rounds for long chains (a length-L path at k=2
-    peels from both ends in ceil(L/2) rounds).
+    Runs EXACTLY `KCORE_ROUNDS` peel rounds (not to convergence): each
+    round recomputes degrees over the surviving subgraph and semi-joins
+    the edge list to nodes with deg >= k (`KCORE_K`). A fixed round
+    count keeps the operator twinnable against an unrolled-CTE oracle —
+    the same determinism contract as `pagerank_exact`. Once the peel
+    reaches a fixed point the remaining rounds are no-ops, so
+    `KCORE_ROUNDS` only needs to exceed the peel DEPTH (max cascade
+    length), not the node count; raise it for long chains (a length-L
+    path at k=2 peels from both ends in ceil(L/2) rounds).
 
     Returns (node, in_core, core_deg) for every node of the ORIGINAL
-    graph: in_core ∈ {0,1} after `rounds`, core_deg the node's degree
-    within the surviving subgraph (0 when peeled).
+    graph: in_core ∈ {0,1} after `KCORE_ROUNDS`, core_deg the node's
+    degree within the surviving subgraph (0 when peeled).
 
     Scale shape: per round one degree hash-agg (|E'| rows, map-side
     combined) + two semi joins on node keys — all exchanges bounded by
     the CURRENT subgraph, which only shrinks. Iteration discipline as
     `pagerank_exact`: the canonical edge list materializes once, each
     round's survivor list is eagerly checkpointed (the loop otherwise
-    stacks 2·rounds lazy joins onto the upstream pair-generation
+    stacks 2·KCORE_ROUNDS lazy joins onto the upstream pair-generation
     lineage)."""
     e0 = (edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
                .where(F.col("a").isNotNull() & F.col("b").isNotNull()
@@ -216,11 +220,11 @@ def kcore_peel(edges: DataFrame, k: int = 2, rounds: int = 4) -> DataFrame:
     # session-global conf mutation — a concurrent query on the
     # shared session must never plan under a clamped width.
     e = e0
-    for _ in range(rounds):
+    for _ in range(KCORE_ROUNDS):
         deg = (e.select(F.col("a").alias("node"))
                 .unionAll(e.select(F.col("b").alias("node")))
                 .groupBy("node").agg(F.count(F.lit(1)).alias("deg")))
-        keep = (deg.where(F.col("deg") >= k).select("node")
+        keep = (deg.where(F.col("deg") >= KCORE_K).select("node")
                    .transform(checkpoint))
         e = (e.join(keep.select(F.col("node").alias("a")), "a",
                     "left_semi")
@@ -239,7 +243,10 @@ def kcore_peel(edges: DataFrame, k: int = 2, rounds: int = 4) -> DataFrame:
                           .alias("core_deg")))
 
 
-def lpa_communities(edges: DataFrame, rounds: int = 4) -> DataFrame:
+LPA_ROUNDS = 4
+
+
+def lpa_communities(edges: DataFrame) -> DataFrame:
     """Community detection by synchronous label propagation (Raghavan
     et al. 2007) — the modularity-flavored grouping BETWEEN connected
     components (which merge everything reachable) and k-core (which
@@ -251,11 +258,11 @@ def lpa_communities(edges: DataFrame, rounds: int = 4) -> DataFrame:
     Determinism contract (engine-identical, oracle-twinnable):
     synchronous rounds (all nodes update from the PREVIOUS round's
     labels), argmax tie-break (count desc, label asc), labels start
-    as node ids, EXACTLY `rounds` rounds — `pagerank_exact`'s
+    as node ids, EXACTLY `LPA_ROUNDS` rounds — `pagerank_exact`'s
     fixed-iteration discipline; oscillation (LPA's known bipartite
     flip-flop) is repeatable rather than hidden.
 
-    Returns (node, community, n_members) after `rounds`.
+    Returns (node, community, n_members) after `LPA_ROUNDS`.
 
     Scale shape: per round one edges⋈labels shuffle on the node key
     (|E| rows) + a (node, label) hash-agg + a per-node argmax window
@@ -285,7 +292,7 @@ def lpa_communities(edges: DataFrame, rounds: int = 4) -> DataFrame:
             .transform(checkpoint))
     w = Window.partitionBy("node").orderBy(
         F.col("c").desc(), F.col("label").asc())
-    for _ in range(rounds):
+    for _ in range(LPA_ROUNDS):
         votes = (e.join(lab, e.s == lab.node)
                   .select(F.col("d").alias("node"), "label")
                   .groupBy("node", "label")
@@ -385,9 +392,10 @@ def ancestor_closure(parents: DataFrame, rounds: int = 4) -> DataFrame:
     return reach
 
 
-def hierarchy_aggregates(parents: DataFrame, values: DataFrame,
-                         id_col: str = "node", val_col: str = "val",
-                         rounds: int = 6) -> DataFrame:
+HIERARCHY_ROUNDS = 4  # 2^4 covers the customer hierarchy's depth
+
+
+def hierarchy_aggregates(parents: DataFrame, values: DataFrame) -> DataFrame:
     """Depth + proper-descendant count + subtree value sum for every
     node of a parent-pointer forest — the aggregates `WITH RECURSIVE`
     hierarchies (org charts, BOMs, category trees) are actually asked
@@ -408,14 +416,14 @@ def hierarchy_aggregates(parents: DataFrame, values: DataFrame,
        log-many (each round is frontier-sized; at 100 TB the rounds
        are cheap, the closure-sized exchange is not).
 
-    `values` supplies (id_col, val_col) for every node, including
+    `values` supplies (c_custkey, bal_cents) for every node, including
     roots that never appear as a child. Returns (node, depth, n_desc,
-    desc_sum). Pick `rounds` so 2^rounds covers the true max depth:
-    phase 1's depth clamps at 2^rounds (the `ancestor_closure(rounds)`
-    contract) and phase 2 schedules BY depth, so a clamped depth would
-    merge levels and drop their sends. One bounded 1-row collect reads
-    the observed max depth. Exact-integer end to end: hash-gradable
-    against the recursive-CTE oracle.
+    desc_sum). `HIERARCHY_ROUNDS` is sized so 2^rounds covers the true
+    max depth: phase 1's depth clamps at 2^rounds (the
+    `ancestor_closure(rounds)` contract) and phase 2 schedules BY depth,
+    so a clamped depth would merge levels and drop their sends. One
+    bounded 1-row collect reads the observed max depth. Exact-integer
+    end to end: hash-gradable against the recursive-CTE oracle.
 
     Checkpoint cadence: per-round EAGER checkpoints cost one Spark
     job each — on a shallow hierarchy (the graded digit hierarchy is
@@ -429,15 +437,15 @@ def hierarchy_aggregates(parents: DataFrame, values: DataFrame,
     fixture −20…−33%, deep 64-level ×100 chain neutral within noise
     with the O(|V|) exchange byte-identical (job launches were never
     the binding cost at depth), results hash-identical."""
-    base = values.select(F.col(id_col).alias("node"),
-                         F.col(val_col).alias("val"))
+    base = values.select(F.col("c_custkey").alias("node"),
+                         F.col("bal_cents").alias("val"))
     edges = checkpoint(parents.select(F.col("child").alias("node"),
                                       F.col("parent").alias("par")))
 
     # phase 1: depth by doubling with carried distance
     state = checkpoint(edges.select("node", F.col("par").alias("ptr"),
                                     F.lit(1).cast("long").alias("d")))
-    for i in range(rounds):
+    for i in range(HIERARCHY_ROUNDS):
         b = state.select(F.col("node").alias("ptr"),
                          F.col("ptr").alias("ptr2"),
                          F.col("d").alias("d2"))

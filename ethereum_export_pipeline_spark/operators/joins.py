@@ -25,25 +25,19 @@ from pyspark.sql import DataFrame, Window, functions as F
 
 _TAG = "__asof_is_right"
 FUZZY_MAX_DIST = 2  # fuzzy_pairs keeps names within this many edits
+FUZZY_MAX_BLOCK = 10_000  # fuzzy_pairs drops blocks larger than this
+ASOF_BUCKET_US = 86_400_000_000  # asof_join_bucketed's time bucket: 1 day
 
 
-def asof_join(left: DataFrame, right: DataFrame, key: str, time: str,
-              payload: list[str], tiebreak: str | None = None) -> DataFrame:
-    """Left as-of-backward join: every `left` row gains
-    ``{p}_r`` columns from the latest `right` row with the same
-    `key` and ``right.time <= left.time`` (NULL when none precedes).
-
-    `right` must be unique per (key, time) — pass `tiebreak` (a column
-    name) to keep the row with the greatest tiebreak value instead of
-    requiring uniqueness.
+def asof_join(left: DataFrame, right: DataFrame,
+              payload: list[str]) -> DataFrame:
+    """Left as-of-backward join on `user_id` / `ts_us`: every `left`
+    row gains ``{p}_r`` columns from the latest `right` row with the
+    same `user_id` and ``right.ts_us <= left.ts_us`` (NULL when none
+    precedes). `right` must be unique per (user_id, ts_us).
     """
-    r = right.select(key, time, *payload)
-    if tiebreak is not None:
-        w_t = Window.partitionBy(key, time).orderBy(F.col(tiebreak).desc())
-        r = (right.select(key, time, tiebreak, *payload)
-                  .withColumn("__rn", F.row_number().over(w_t))
-                  .where(F.col("__rn") == 1).drop("__rn", tiebreak))
-    r = r.select(
+    key, time = "user_id", "ts_us"
+    r = right.select(
         F.col(key), F.col(time),
         *[F.col(p).alias(f"{p}_r") for p in payload],
         F.lit(1).alias(_TAG))
@@ -65,10 +59,10 @@ def asof_join(left: DataFrame, right: DataFrame, key: str, time: str,
     return out
 
 
-def asof_join_bucketed(left: DataFrame, right: DataFrame, key: str, time: str,
-                       payload: list[str], bucket_width: int) -> DataFrame:
+def asof_join_bucketed(left: DataFrame, right: DataFrame,
+                       payload: list[str]) -> DataFrame:
     """`asof_join` with HOT-KEY SKEW defused: identical semantics,
-    but the window partitions on (key, time div `bucket_width`)
+    but the window partitions on (key, time div `ASOF_BUCKET_US`)
     instead of (key) alone — a key holding 50% of the corpus becomes
     as many sort groups as time buckets it spans, so no single task
     ever sorts the hot key's whole history (the plain path's failure
@@ -89,16 +83,17 @@ def asof_join_bucketed(left: DataFrame, right: DataFrame, key: str, time: str,
 
     Exchange: one shuffle of |L|+|R| on (key, bucket) + one
     |key×bucket|-sized carry frame — vs the plain path's one shuffle
-    on (key) with an unbounded sort group. Pick `bucket_width` so a
-    hot key's densest bucket fits a task (time-uniform hot keys: span
-    / cores; bursty: smaller)."""
+    on (key) with an unbounded sort group. `ASOF_BUCKET_US` is sized so
+    a hot key's densest bucket fits a task (time-uniform hot keys:
+    span / cores; bursty: smaller)."""
+    key, time = "user_id", "ts_us"
     r = right.select(
         F.col(key), F.col(time),
         *[F.col(p).alias(f"{p}_r") for p in payload],
         F.lit(1).alias(_TAG))
     l = left.withColumn(_TAG, F.lit(0))
     u = (l.unionByName(r, allowMissingColumns=True)
-          .withColumn("__bkt", F.floor(F.col(time) / F.lit(bucket_width))
+          .withColumn("__bkt", F.floor(F.col(time) / F.lit(ASOF_BUCKET_US))
                       .cast("long")))
 
     w_in = (Window.partitionBy(key, "__bkt")
@@ -137,8 +132,7 @@ def asof_join_bucketed(left: DataFrame, right: DataFrame, key: str, time: str,
     return out
 
 
-def fuzzy_pairs(df: DataFrame, block_col,
-                max_block: int | None = 10_000) -> DataFrame:
+def fuzzy_pairs(df: DataFrame, block_col) -> DataFrame:
     """Record linkage by BLOCKING + edit distance — the entity-
     resolution staple (Fellegi–Sunter style candidate generation):
     pair up rows (`id`, `name`) whose names are within `FUZZY_MAX_DIST`
@@ -154,10 +148,10 @@ def fuzzy_pairs(df: DataFrame, block_col,
     any scale; blocking makes candidate generation an EQUI-join on
     the block key, so pairs only materialize within blocks —
     quadratic in the largest block, not the table. That makes hot
-    blocks the skew risk (the empty/default name!), so `max_block`
-    drops blocks larger than the cap before the self-join — the same
-    df-cut discipline as `dedup.DEFAULT_MAX_DF`. levenshtein runs
-    post-join on the residual, JVM codegen (no UDF).
+    blocks the skew risk (the empty/default name!), so `FUZZY_MAX_BLOCK`
+    drops blocks larger than the cap before the self-join — the same df-
+    cut discipline as `dedup.DEFAULT_MAX_DF`. levenshtein runs post-join
+    on the residual, JVM codegen (no UDF).
 
     Per-pair cost (optimization r11, guide §1.2 step 2 — measured,
     then REVERTED): the banded form (length pre-filter + Spark ≥3.5's
@@ -173,12 +167,11 @@ def fuzzy_pairs(df: DataFrame, block_col,
                       F.col("name").alias("_name"),
                       block_col.alias("_blk"))
               .where(F.col("_blk").isNotNull()))
-    if max_block is not None:
-        small = (base.groupBy("_blk")
-                     .agg(F.count(F.lit(1)).alias("_c"))
-                     .where(F.col("_c") <= max_block)
-                     .select("_blk"))
-        base = base.join(small, "_blk", "left_semi")
+    small = (base.groupBy("_blk")
+                 .agg(F.count(F.lit(1)).alias("_c"))
+                 .where(F.col("_c") <= FUZZY_MAX_BLOCK)
+                 .select("_blk"))
+    base = base.join(small, "_blk", "left_semi")
     a = base.select(F.col("_blk"), F.col("_id").alias("id_a"),
                     F.col("_name").alias("name_a"))
     b = base.select(F.col("_blk"), F.col("_id").alias("id_b"),

@@ -19,8 +19,12 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from ..execution import checkpoint
+
 Z_BITS = 16  # per-dimension bits; 2 dims × 16 bits fit easily in int64
 Z_FILES = 16  # write_zordered's output file count
+COMPACT_TARGET = 1 << 16  # 64 KiB target output files (fixture-scaled)
+COMPACT_BUCKET = 1024  # file ids per prefix-sum bucket
 
 
 def z_value_expr(x: str, y: str) -> Column:
@@ -45,8 +49,7 @@ def z_value_sql() -> str:
     return f"CAST({terms} AS BIGINT)"
 
 
-def compaction_plan(files: DataFrame, target_bytes: int,
-                    bucket: int = 1024) -> DataFrame:
+def compaction_plan(files: DataFrame) -> DataFrame:
     """Small-file compaction planning as a distributed query — the
     OPTIMIZE/bin-packing step every long-lived 100 TB lake needs once
     ingestion has dribbled millions of under-sized files.
@@ -55,14 +58,14 @@ def compaction_plan(files: DataFrame, target_bytes: int,
     planned output file (bin): (bin, n_files, total_bytes, first_file,
     last_file). Policy is ORDER-PRESERVING offset binning: walk files
     in key order and assign bin(f) = floor(bytes_before(f) /
-    `target_bytes`) — each bin covers one target-sized byte interval
+    `COMPACT_TARGET`) — each bin covers one target-sized byte interval
     of the ordered stream, so bins hold ~target bytes (overshooting
     only by the tail of their boundary-straddling last file). Real
     compactors (Delta OPTIMIZE, Iceberg binpack) make the same
     order-preserving choice: key locality is what min/max data
     skipping relies on; first-fit-decreasing packs marginally tighter
     but scrambles key ranges and is inherently sequential. A file
-    larger than `target_bytes` lands alone — the bins its tail spans
+    larger than `COMPACT_TARGET` lands alone — the bins its tail spans
     stay empty (files are never split).
 
     The prefix sum is computed DISTRIBUTED via the same two-level
@@ -74,7 +77,7 @@ def compaction_plan(files: DataFrame, target_bytes: int,
     n = (files.where(F.col("file_id").isNotNull())
               .select(F.col("file_id").alias("f"),
                       F.col("bytes").cast("long").alias("sz"),
-                      F.expr(f"CAST(file_id AS BIGINT) div {bucket}")
+                      F.expr(f"CAST(file_id AS BIGINT) div {COMPACT_BUCKET}")
                        .alias("_bkt"))
               # explicit, though implied by the join: both consumers of
               # the bucket exchange (window, totals) then canonicalize
@@ -100,7 +103,7 @@ def compaction_plan(files: DataFrame, target_bytes: int,
                                (F.col("_bkt_before") + F.col("_before_local"))
                                .cast("long"))
                    .withColumn("bin",
-                               F.expr(f"_before div {target_bytes}")
+                               F.expr(f"_before div {COMPACT_TARGET}")
                                 .cast("long")))
     return (binned.groupBy("bin")
                   .agg(F.count(F.lit(1)).alias("n_files"),
@@ -129,8 +132,7 @@ def write_zordered(df: DataFrame, path: str) -> None:
 
 
 def global_rank(df: DataFrame, order_cols: list[Column],
-                rank_col: str = "global_rank",
-                n_parts: int | None = None) -> DataFrame:
+                rank_col: str = "global_rank") -> DataFrame:
     """EXACT global ranking at scale — the distributed form of
     ``row_number() OVER (ORDER BY …)``, which Spark plans as an
     `Exchange SinglePartition` + one task sorting the WORLD (the
@@ -154,11 +156,9 @@ def global_rank(df: DataFrame, order_cols: list[Column],
     partitioning (re-evaluated range sampling is not contractually
     stable across subtree recomputations)."""
     from pyspark.sql import Window
-    spark = df.sparkSession
-    n = n_parts or spark.sparkContext.defaultParallelism
-    keyed = (df.repartitionByRange(n, *order_cols)
-               .withColumn("_pid", F.spark_partition_id())
-               .localCheckpoint(eager=True))
+    n = df.sparkSession.sparkContext.defaultParallelism
+    keyed = checkpoint(df.repartitionByRange(n, *order_cols)
+                         .withColumn("_pid", F.spark_partition_id()))
     w_in = Window.partitionBy("_pid").orderBy(*order_cols)
     w_off = (Window.orderBy("_pid")
                    .rowsBetween(Window.unboundedPreceding, -1))

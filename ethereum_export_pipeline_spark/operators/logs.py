@@ -66,8 +66,8 @@ def hex_uint_expr(col: str) -> str:
     )
 
 
-def hex_uint256_limb32_exprs(col: str) -> list[str]:
-    """SQL texts: 0x-hex uint256 in `col` → eight exact 32-bit limbs
+def hex_uint256_limb32_exprs() -> list[str]:
+    """SQL texts: 0x-hex uint256 in `value_hex` → eight exact 32-bit limbs
     (big-endian: index 0 most significant) as BIGINT.
 
     This is the FULL-PRECISION path the reference gives up on — its
@@ -84,7 +84,7 @@ def hex_uint256_limb32_exprs(col: str) -> list[str]:
     Malformed inputs — longer than 32 bytes or non-hex — decode as
     NULL limbs (`_hex64_guard`: the check runs on the STRIPPED input
     because lpad truncates and conv swallows garbage)."""
-    h, guard = _hex64_guard(col)
+    h, guard = _hex64_guard("value_hex")
     return [f"CASE WHEN {guard} THEN "
             f"CAST(conv(substring({h}, {1 + 8 * i}, 8), 16, 10) AS BIGINT) "
             f"ELSE CAST(NULL AS BIGINT) END"

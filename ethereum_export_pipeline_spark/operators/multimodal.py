@@ -368,12 +368,12 @@ def encode_bmp(pixels) -> bytes:
 PNG_SIG = b"\x89PNG\r\n\x1a\n"
 
 
-def encode_png(pixels, filters=None) -> bytes:
+def encode_png(pixels) -> bytes:
     """uint8 pixel array → real PNG bytes: h×w×3 → color type 2
     (truecolor), h×w / h×w×1 → color type 0 (grayscale), bit depth 8,
-    no interlace. ``filters`` picks the per-scanline filter type; the
-    default cycles y % 5 so every fixture image exercises ALL FIVE
-    spec filters (None/Sub/Up/Average/Paeth). Filtering is fully
+    no interlace. The per-scanline filter type cycles y % 5 so every
+    fixture image exercises ALL FIVE spec filters
+    (None/Sub/Up/Average/Paeth). Filtering is fully
     vectorized — the encoder predicts from ORIGINAL neighbor pixels,
     so unlike decoding it has no sequential dependency."""
     import struct
@@ -394,7 +394,7 @@ def encode_png(pixels, filters=None) -> bytes:
     ul[1:, c:] = rows[:-1, :-c]
     out = bytearray()
     for y in range(h):
-        ft = int(filters[y]) if filters is not None else y % 5
+        ft = y % 5
         r, l, p, q = rows[y], left[y], prior[y], ul[y]
         if ft == 0:
             f = r
@@ -1030,8 +1030,10 @@ def extract_features(media: DataFrame) -> DataFrame:
                     FEATURE_SCHEMA)
 
 
-def resize_media(media: DataFrame, target_w: int = 64,
-                 target_h: int = 64) -> DataFrame:
+RESIZE_PX = 64  # resize_media's output width and height
+
+
+def resize_media(media: DataFrame) -> DataFrame:
     """REAL nearest-neighbor image resize, Arrow-batched: decode the
     netpbm payload, gather source pixels with a vectorized numpy index
     (out[y, x] = src[y·h // H, x·w // W] — no per-pixel Python loop),
@@ -1046,10 +1048,10 @@ def resize_media(media: DataFrame, target_w: int = 64,
         if dec is None:
             return [(mid, None, None, None, 0)]
         w, h, _, px = dec
-        ys = (np.arange(target_h) * h) // target_h
-        xs = (np.arange(target_w) * w) // target_w
+        ys = (np.arange(RESIZE_PX) * h) // RESIZE_PX
+        xs = (np.arange(RESIZE_PX) * w) // RESIZE_PX
         enc = encode_netpbm(px[ys[:, None], xs[None, :], :])
-        return [(mid, enc, target_w, target_h, len(enc))]
+        return [(mid, enc, RESIZE_PX, RESIZE_PX, len(enc))]
 
     return map_rows(media.select("media_id", "payload"), resize,
                     "media_id long, payload binary, width int, "
@@ -1210,13 +1212,17 @@ def audio_silence_runs(media: DataFrame) -> DataFrame:
     return map_rows(media.select("media_id", "payload"), runs, VAD_SCHEMA)
 
 
-def resample_audio(media: DataFrame, target_rate: int = 8_000) -> DataFrame:
+AUDIO_TARGET_RATE = 6_000   # non-divisor of the fixture's 16 kHz:
+#                             the gather is i·8 div 3, not a stride
+
+
+def resample_audio(media: DataFrame) -> DataFrame:
     """REAL nearest-neighbor audio resample, Arrow-batched — the audio
     twin of `resize_media`'s decode→gather→re-encode pipeline: decode
     PCM (`decode_wav`), gather the mono track at the target rate with
     a vectorized integer index (out[i] = mono[i·rate div target] —
     the zero-order hold; n_out = n·target div rate), re-encode as
-    8/16-bit mono WAV at `target_rate`. NULL/undecodable payloads
+    8/16-bit mono WAV at `AUDIO_TARGET_RATE`. NULL/undecodable payloads
     yield NULL payload rows. A production pipeline swaps the gather
     for a windowed-sinc filter; the plumbing — Arrow batches, binary
     in/out, codec roundtrip — is identical.
@@ -1231,9 +1237,9 @@ def resample_audio(media: DataFrame, target_rate: int = 8_000) -> DataFrame:
             return [(mid, None)]
         rate, _, _, samples = dec
         mono = samples[:, 0]
-        n_out = (mono.shape[0] * target_rate) // rate
-        idx = (np.arange(n_out) * rate) // target_rate
-        return [(mid, encode_wav(mono[idx], target_rate))]
+        n_out = (mono.shape[0] * AUDIO_TARGET_RATE) // rate
+        idx = (np.arange(n_out) * rate) // AUDIO_TARGET_RATE
+        return [(mid, encode_wav(mono[idx], AUDIO_TARGET_RATE))]
 
     return map_rows(media.select("media_id", "payload"), resample,
                     PAYLOAD_SCHEMA)
@@ -1271,10 +1277,14 @@ FRAME_SCHEMA = T.StructType([
 ])
 
 
-def sample_frames(media: DataFrame, n_frames: int = 4) -> DataFrame:
+SAMPLE_FRAMES = 2  # frames sample_frames picks per stream
+
+
+def sample_frames(media: DataFrame) -> DataFrame:
     """REAL frame sampling over multi-frame payloads: demux the
     concatenated-netpbm stream (`demux_netpbm_stream`), pick
-    `n_frames` evenly-spaced frame indices — src_frame k·total//n, or
+    n = `SAMPLE_FRAMES` evenly-spaced frame indices — src_frame
+    k·total//n, or
     every frame when the clip is shorter — DECODE the chosen frames,
     and emit one row per sampled frame with exact per-channel pixel
     sums: the 1→N fan-out shape video feature extraction needs, with
@@ -1287,8 +1297,9 @@ def sample_frames(media: DataFrame, n_frames: int = 4) -> DataFrame:
     def frames_of(mid, payload):
         frames = demux_netpbm_stream(payload) or []
         total = len(frames)
-        picks = (range(total) if total <= n_frames else
-                 [(k * total) // n_frames for k in range(n_frames)])
+        n = SAMPLE_FRAMES
+        picks = (range(total) if total <= n else
+                 [(k * total) // n for k in range(n)])
         for k, fi in enumerate(picks):
             w, h, _, px = frames[fi]
             yield (mid, k, fi, w, h,
@@ -1446,11 +1457,14 @@ def audio_fingerprint_groups(media: DataFrame) -> DataFrame:
         "media_id long, hash_hi long, hash_lo long"))
 
 
-def ahash_neardup_pairs(media: DataFrame, max_hamming: int = 6) -> DataFrame:
+IMG_MAX_HAMMING = 6  # ahash_neardup_pairs' hamming verify cut
+
+
+def ahash_neardup_pairs(media: DataFrame) -> DataFrame:
     """Image NEAR-duplicate pairs: aHash per image, then banded
     hamming search — the 64-bit hash splits into 8 one-byte bands,
     candidates pair on any identical band (equi-join on (band, key)),
-    and the popcount hamming distance verifies ≤ `max_hamming`. The
+    and the popcount hamming distance verifies ≤ `IMG_MAX_HAMMING`. The
     pigeonhole guarantee: ≤ 7 differing bits cannot touch all 8
     bands, so recall is EXACT for hamming ≤ 7 ⊇ the verify cut — no
     probabilistic misses at this radius (tighter radii than the band
@@ -1488,7 +1502,7 @@ def ahash_neardup_pairs(media: DataFrame, max_hamming: int = 6) -> DataFrame:
                             "bit_count(lo_a ^ lo_b) AS BIGINT)")
                       .alias("hamming"))
              .distinct()
-             .where(F.col("hamming") <= max_hamming))
+             .where(F.col("hamming") <= IMG_MAX_HAMMING))
 
 
 def patch_grid_stats(media: DataFrame) -> DataFrame:

@@ -6,17 +6,17 @@ ORPHANED fork blocks near the tip, mark which block at each height is
 canonical.
 
 Algorithm: fork choice by parent-walk from the tip. The tip is the
-max-height block (ties: min hash — deterministic); walking `max_depth`
+max-height block (ties: min hash — deterministic); walking `REORG_DEPTH`
 parent pointers yields the canonical suffix; every other block in that
-height window is an orphan. Heights older than tip − max_depth are
+height window is an orphan. Heights older than tip − REORG_DEPTH are
 ASSUMED FINAL and not judged — exactly the bounded-finality contract
 real exporters run with (Ethereum reorg depth is single digits;
-max_depth bounds both the state and the iteration count, where a
+REORG_DEPTH bounds both the state and the iteration count, where a
 full-history walk would be O(chain length) rounds and is the wrong
 tool — historical canonicity is what the finalized export already
 stored).
 
-Scale shape: one max-height aggregate (tip), then `max_depth`
+Scale shape: one max-height aggregate (tip), then `REORG_DEPTH`
 iterations each joining a ONE-ROW frame (the current walk head,
 broadcast) against the block table's hash key — with a hash-bucketed
 or indexed block store each step is a point lookup; the final verdict
@@ -31,11 +31,14 @@ from pyspark.sql import DataFrame, functions as F
 from ..execution import checkpoint
 
 
-def resolve_reorgs(blocks: DataFrame, max_depth: int = 16) -> DataFrame:
-    """Canonical/orphan verdicts for the last `max_depth` heights.
+REORG_DEPTH = 16     # fork-choice window (bounded finality)
+
+
+def resolve_reorgs(blocks: DataFrame) -> DataFrame:
+    """Canonical/orphan verdicts for the last `REORG_DEPTH` heights.
 
     `blocks`: (height, hash, parent). Returns (height, block_hash,
-    canonical) for every block with height > tip_height − max_depth,
+    canonical) for every block with height > tip_height − REORG_DEPTH,
     canonical ∈ {0,1}; exactly one canonical block per height in the
     window (the tip's ancestry)."""
     b = checkpoint(blocks.select(  # referenced every walk step
@@ -44,7 +47,7 @@ def resolve_reorgs(blocks: DataFrame, max_depth: int = 16) -> DataFrame:
     # step 1): each head_i is referenced twice (the canon union AND
     # the next step's join), so WITHOUT a checkpoint the unrolled
     # lineage re-executes O(depth²) one-row joins — but the EAGER
-    # form paid one blocking Spark job per step (~max_depth job
+    # form paid one blocking Spark job per step (~REORG_DEPTH job
     # launches for ~1-row frames). eager=False keeps the plan-level
     # truncation (LogicalRDD, computed once, persisted) while the
     # whole walk fuses into the final action's single job. (With a
@@ -55,7 +58,7 @@ def resolve_reorgs(blocks: DataFrame, max_depth: int = 16) -> DataFrame:
                       .select("height", "bhash", "parent"), eager=False)
     canon = tip.select("bhash")
     head = tip
-    for _ in range(max_depth - 1):
+    for _ in range(REORG_DEPTH - 1):
         head = checkpoint(
             b.join(F.broadcast(head.select(F.col("parent").alias("_want"))),
                    F.col("bhash") == F.col("_want"))
@@ -65,7 +68,7 @@ def resolve_reorgs(blocks: DataFrame, max_depth: int = 16) -> DataFrame:
     chashes = (canon.select(F.col("bhash").alias("_chash"))
                     .withColumn("_c", F.lit(1)))
     return (b.crossJoin(F.broadcast(tip_h))
-             .where(F.col("height") > F.col("tip_h") - max_depth)
+             .where(F.col("height") > F.col("tip_h") - REORG_DEPTH)
              .join(F.broadcast(chashes),
                    F.col("bhash") == F.col("_chash"), "left")
              .select(F.col("height"),

@@ -17,6 +17,8 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..execution import checkpoint
+
 #: Spark/Hive's directory name for a NULL partition value.
 HIVE_NULL_PART = "__HIVE_DEFAULT_PARTITION__"
 
@@ -103,8 +105,8 @@ def delete_ids(spark: SparkSession, corpus_dir: str, ids: DataFrame) -> dict:
         cond = cond | F.col("source").isNull()
     hit = corpus.where(cond)
     n_before = hit.count()
-    remaining = (hit.join(F.broadcast(ids), "doc_id", "left_anti")
-                    .localCheckpoint(eager=True))  # break source lineage
+    # break source lineage
+    remaining = checkpoint(hit.join(F.broadcast(ids), "doc_id", "left_anti"))
     n_after = remaining.count()
 
     # dynamic overwrite replaces only partitions PRESENT in the output:

@@ -30,7 +30,8 @@ from functools import lru_cache
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from ..execution import spread
+from ..execution import checkpoint, spread
+from .dedup import BENCH_MOD
 
 
 def _freeze(x):
@@ -54,12 +55,22 @@ def matrix_lit(m) -> Column:
     return _matrix_lit_cached(_freeze(m))
 
 QUANT_SCALE = 10_000
-N_PLANES = 16
+#: hyperplanes per LSH band: 2^8 buckets suits the 500-5000-vector
+#: corpus (a 10^7+-row corpus wants 16)
+LSH_PLANES = 8
 EMB_DIM = 64
 #: the query set of every top-k and recall report: the first ten vectors
 QUERY_PRED = "vec_id < 10"
-#: k of the IVF / IVF-PQ recall reports (the catalog's top-k depth)
+#: the catalog's top-k depth (every top-k, graph and recall report)
 TOPK_K = 5
+#: cosine floor of the embedding near-dup pairs, the SemDeDup cells and
+#: the cross-modal agreement flag: the corpus max pairwise cosine is
+#: ~0.51, 0.3 keeps a tail
+NEARDUP_COS = 0.3
+#: LSH bands of the graded top-k and its recall report (OR-amplified)
+LSH_TOPK_BANDS = 2
+#: LSH bands of the kNN graph and the semantic decontamination
+MULTIBAND_BANDS = 3
 #: brute force broadcasts its query set: more queries than this raise
 MAX_QUERIES = 10_000
 
@@ -69,14 +80,13 @@ def py_h32(s: str) -> int:
     return int(hashlib.md5(s.encode()).hexdigest()[:8], 16) % 2_147_483_647
 
 
-def plane_signs(n_planes: int = N_PLANES, dim: int = EMB_DIM,
-                offset: int = 0) -> list[list[int]]:
+def plane_signs(offset: int) -> list[list[int]]:
     """Deterministic ±1 hyperplanes: sign(p,d) from md5('plane:p:d').
     `offset` shifts the plane indices — band b of a multi-band scheme
     uses planes [b·n, (b+1)·n), so bands are independent projections."""
     return [[1 if py_h32(f"plane:{p + offset}:{d}") % 2 == 0 else -1
-             for d in range(dim)]
-            for p in range(n_planes)]
+             for d in range(EMB_DIM)]
+            for p in range(LSH_PLANES)]
 
 
 def quantize_expr() -> str:
@@ -104,11 +114,10 @@ def _cosine(dot: Column, n2a: Column, n2b: Column) -> Column:
     return dot.cast("double") / F.sqrt(n2a.cast("double") * n2b.cast("double"))
 
 
-def brute_force_topk(df: DataFrame, k: int = 5,
-                     query_pred: str | None = None) -> DataFrame:
-    """Exact cosine top-k for the rows matching `query_pred` (default:
-    ``{id_col} < 10``) against the whole table. Output: (query_id,
-    neighbor_id, cosine, rank).
+def brute_force_topk(df: DataFrame) -> DataFrame:
+    """Exact cosine top-`TOPK_K` for the rows matching `QUERY_PRED`
+    against the whole table. Output: (query_id, neighbor_id, cosine,
+    rank).
 
     This is the O(Q·N) exactness BASELINE — the broadcast side is the
     query set, which MUST stay small. `MAX_QUERIES` enforces that with
@@ -119,15 +128,14 @@ def brute_force_topk(df: DataFrame, k: int = 5,
     The candidate side's Q·dim multiply-adds per row evaluate in the
     scan stage — same scan-width spread as `lsh_topk` (no-op on
     well-split input)."""
-    query_pred = query_pred or QUERY_PRED
     base = with_quantized(spread(df.select("vec_id", "embedding"))).select(
         "vec_id", "qvec", "n2")
-    q = (base.where(query_pred)
+    q = (base.where(QUERY_PRED)
              .select(F.col("vec_id").alias("query_id"),
                      F.col("qvec").alias("qv"), F.col("n2").alias("qn2")))
     if q.limit(MAX_QUERIES + 1).count() > MAX_QUERIES:
         raise ValueError(
-            f"brute_force_topk: query_pred selects > {MAX_QUERIES} rows; "
+            f"brute_force_topk: QUERY_PRED selects > {MAX_QUERIES} rows; "
             "this path broadcasts the query set — use lsh_topk instead")
     c = (base.select(F.col("vec_id").alias("neighbor_id"),
                      F.col("qvec").alias("cv"), F.col("n2").alias("cn2")))
@@ -142,15 +150,14 @@ def brute_force_topk(df: DataFrame, k: int = 5,
                .orderBy(F.col("cosine").desc(), F.col("neighbor_id").asc()))
     return (
         scored.withColumn("rank", F.row_number().over(w))
-              .where(F.col("rank") <= k)
+              .where(F.col("rank") <= TOPK_K)
               .select("query_id", "neighbor_id", "cosine",
                       F.col("rank").cast("long").alias("rank"))
     )
 
 
-def lsh_bucket_expr(planes: list[list[int]] | None = None) -> str:
+def lsh_bucket_expr(planes: list[list[int]]) -> str:
     """bucket = Σ_p [proj_p ≥ 0]·2^p with proj_p = Σ_d sign(p,d)·qvec[d]."""
-    planes = planes or plane_signs()
     terms = []
     for p, signs in enumerate(planes):
         lit = "array(" + ", ".join(f"{s}L" for s in signs) + ")"
@@ -160,37 +167,34 @@ def lsh_bucket_expr(planes: list[list[int]] | None = None) -> str:
     return " + ".join(terms)
 
 
-def banded_buckets(base: DataFrame, dim: int, n_planes: int,
-                   n_bands: int) -> DataFrame:
+def banded_buckets(base: DataFrame, n_bands: int) -> DataFrame:
     """Melt a quantized frame into one row per band with a string
     bucket 'band:value' — OR-amplified LSH (candidates share ANY
     band's bucket). `n_bands` is the recall knob (independent
-    projections), `n_planes` the per-band selectivity knob."""
+    projections), `LSH_PLANES` the per-band selectivity."""
     buckets = [
         F.concat_ws(":", F.lit(str(b)),
-                    F.expr(lsh_bucket_expr(
-                        planes=plane_signs(n_planes, dim, offset=b * n_planes)))
+                    F.expr(lsh_bucket_expr(plane_signs(offset=b * LSH_PLANES)))
                      .cast("string"))
         for b in range(n_bands)
     ]
     return base.withColumn("bucket", F.explode(F.array(*buckets)))
 
 
-def lsh_topk(df: DataFrame, k: int = 5, query_pred: str | None = None,
-             dim: int = EMB_DIM, n_planes: int = N_PLANES,
-             n_bands: int = 1) -> DataFrame:
+def lsh_topk(df: DataFrame, k: int, n_bands: int,
+             query_pred: str = QUERY_PRED) -> DataFrame:
     """Approximate top-k: exact cosine, but only among candidates that
     share an LSH bucket in ≥1 band. Output: (query_id, neighbor_id,
     cosine, rank).
 
-    `dim` must match the embedding width: rows of any other size are
-    filtered out up front (zip_with against the plane literals would
-    NULL-pad and silently send every row to bucket 0 — a degenerate
-    cross join — instead of erroring).
+    Rows whose embedding is not `EMB_DIM` wide are filtered out up
+    front (zip_with against the plane literals would NULL-pad and
+    silently send every row to bucket 0 — a degenerate cross join —
+    instead of erroring).
 
-    `n_planes` trades recall for bucket size per band: 2^n_planes
-    buckets (default 16 suits 10^7+ rows); `n_bands` multiplies recall
-    (and candidate count) by OR-ing independent projections.
+    `LSH_PLANES` sets the bucket size per band (2^LSH_PLANES
+    buckets); `n_bands` multiplies recall (and candidate count) by
+    OR-ing independent projections.
 
     Scan width (optimization r11, guide §2.5): the quantize + plane
     projections (n_bands·n_planes·dim multiply-adds per row) evaluate
@@ -198,12 +202,10 @@ def lsh_topk(df: DataFrame, k: int = 5, query_pred: str | None = None,
     runs them on one core; `execution.spread` spreads the (id, emb)
     projection first — a no-op when file splits already provide the
     parallelism (the 100 TB case)."""
-    query_pred = query_pred or QUERY_PRED
-    narrowed = spread(df.where(F.size(F.col("embedding")) == dim)
+    narrowed = spread(df.where(F.size(F.col("embedding")) == EMB_DIM)
                         .select("vec_id", "embedding"))
     base = banded_buckets(
-        with_quantized(narrowed)
-        .select("vec_id", "qvec", "n2"), dim, n_planes, n_bands)
+        with_quantized(narrowed).select("vec_id", "qvec", "n2"), n_bands)
     q = (base.where(query_pred)
              .select(F.col("vec_id").alias("query_id"),
                      F.col("qvec").alias("qv"),
@@ -231,11 +233,16 @@ def lsh_topk(df: DataFrame, k: int = 5, query_pred: str | None = None,
     )
 
 
-def range_search(df: DataFrame, radius: float = 0.8,
-                 query_pred: str | None = None, n_planes: int = N_PLANES,
-                 n_bands: int = 2) -> DataFrame:
+#: radius search: cosine floor (corpus max pairwise ~0.51; 0.25 keeps
+#: a tail), query set, and the graded top-k's OR-amplified banding
+RANGE_COS = 0.25
+RANGE_QUERY_PRED = "vec_id < 50"
+RANGE_BANDS = 2
+
+
+def range_search(df: DataFrame) -> DataFrame:
     """RADIUS similarity search — the ANN surface's other half: all
-    neighbors with cosine ≥ `radius` for each query row, not a fixed
+    neighbors with cosine ≥ `RANGE_COS` for each query row, not a fixed
     top-k. Candidates come from the same OR-amplified LSH banding as
     `lsh_topk`; exact cosine verifies each candidate against the
     radius. Output: (query_id, neighbor_id, cosine).
@@ -244,43 +251,41 @@ def range_search(df: DataFrame, radius: float = 0.8,
     no rank means no partitionBy-query sort at all, just the bucket
     join + a filter, so the radius path is strictly cheaper than
     top-k at the same banding and never materializes more than the
-    bucket-join candidates. Recall follows the banding knobs; a
-    production radius query tightens/widens `n_bands`, never falls
-    back to all-pairs."""
-    query_pred = query_pred or QUERY_PRED
+    bucket-join candidates. Recall follows the banding; a production
+    radius query tightens/widens `RANGE_BANDS`, never falls back to
+    all-pairs."""
     narrowed = spread(df.where(F.size(F.col("embedding")) == EMB_DIM)
                         .select("vec_id", "embedding"))
     base = banded_buckets(
-        with_quantized(narrowed)
-        .select("vec_id", "qvec", "n2"), EMB_DIM, n_planes, n_bands)
-    q = (base.where(query_pred)
+        with_quantized(narrowed).select("vec_id", "qvec", "n2"), RANGE_BANDS)
+    q = (base.where(RANGE_QUERY_PRED)
              .select(F.col("vec_id").alias("query_id"),
                      F.col("qvec").alias("qv"),
                      F.col("n2").alias("qn2"), "bucket"))
     c = (base.select(F.col("vec_id").alias("neighbor_id"),
                      F.col("qvec").alias("cv"),
                      F.col("n2").alias("cn2"), "bucket"))
-    cand = q.join(c, "bucket").where(F.col("neighbor_id") != F.col("query_id"))
-    if n_bands > 1:
-        cand = cand.dropDuplicates(["query_id", "neighbor_id"])
+    cand = (q.join(c, "bucket")
+             .where(F.col("neighbor_id") != F.col("query_id"))
+             .dropDuplicates(["query_id", "neighbor_id"]))
     return (
         cand.withColumn("dot", F.expr(dot_expr("qv", "cv")))
             .withColumn("cosine",
                         _cosine(F.col("dot"), F.col("qn2"), F.col("cn2")))
-            .where(F.col("cosine") >= radius)
+            .where(F.col("cosine") >= RANGE_COS)
             .select("query_id", "neighbor_id", "cosine")
     )
 
 
-def knn_graph(df: DataFrame, k: int = 5, dim: int = EMB_DIM,
-              n_planes: int = N_PLANES, n_bands: int = 3) -> DataFrame:
+def knn_graph(df: DataFrame) -> DataFrame:
     """Approximate k-nearest-neighbor GRAPH: `lsh_topk` with EVERY
     vector as a query — the corpus-wide neighbor structure that
     graph-based semantic dedup, diversity-aware sampling, and
     label-propagation-over-embeddings consume (each of those starts
     from "who are my k closest points", not from a handful of query
-    rows). Output: (vec_id, neighbor_id, cosine, rank), k rows per
-    vector that shares ≥1 band bucket with anything.
+    rows). Output: (vec_id, neighbor_id, cosine, rank), `TOPK_K` rows
+    per vector that shares ≥1 of `MULTIBAND_BANDS` band buckets with
+    anything.
 
     Scale shape: identical to `lsh_topk` — candidates exist only
     within band buckets (2^n_planes buckets per band bounds bucket
@@ -288,16 +293,13 @@ def knn_graph(df: DataFrame, k: int = 5, dim: int = EMB_DIM,
     Σ_buckets |b|², never N². The rerank is exact integer dot
     products; the per-node top-k window partitions on the SAME key
     the candidate join emits. An all-queries graph at 100 TB is the
-    one case where bucket skew matters most — `n_planes` is the knob
-    that keeps the hottest bucket sub-quadratic."""
-    out = lsh_topk(df, k=k, query_pred="true", dim=dim, n_planes=n_planes,
-                   n_bands=n_bands)
+    one case where bucket skew matters most — `LSH_PLANES` is what
+    keeps the hottest bucket sub-quadratic."""
+    out = lsh_topk(df, k=TOPK_K, n_bands=MULTIBAND_BANDS, query_pred="true")
     return out.withColumnRenamed("query_id", "vec_id")
 
 
-def hard_negatives(df: DataFrame, k: int = 5, n_planes: int = N_PLANES,
-                   n_bands: int = 3,
-                   graph: DataFrame | None = None) -> DataFrame:
+def hard_negatives(df: DataFrame, graph: DataFrame) -> DataFrame:
     """Hard-negative mining for contrastive / embedding training: for
     every labeled vector, the single most-similar neighbor carrying a
     DIFFERENT label — the negatives that actually move a contrastive
@@ -311,22 +313,21 @@ def hard_negatives(df: DataFrame, k: int = 5, n_planes: int = N_PLANES,
     On top of the N·k-row graph: two id-equi shuffle joins to attach
     both endpoints' labels (label table = the corpus, NOT broadcast)
     and one per-anchor top-1 window partitioned on the same anchor
-    key the graph already carries. Widening `k` is the recall knob —
-    an anchor whose entire k-list shares its label yields no row.
+    key the graph already carries. Widening `TOPK_K` is the recall
+    knob — an anchor whose entire k-list shares its label yields no
+    row.
 
-    `graph` (optimization r11, guide §2.4 reuse): an already-computed
-    `knn_graph(df, k=k, ...)` frame — callers holding the memoized
-    catalog graph skip re-running the banded-candidate + rerank pass."""
+    `graph` (optimization r11, guide §2.4 reuse): the `knn_graph(df)`
+    frame — the catalog holds it memoized, so the banded-candidate +
+    rerank pass is not re-run here."""
     from pyspark.sql import Window
-    g = graph if graph is not None else knn_graph(df, k=k, n_planes=n_planes,
-                                                  n_bands=n_bands)
     lab = df.select(F.col("vec_id"), F.col("label").cast("long"))
     anchored = (
-        g.join(lab.select(F.col("vec_id"),
-                          F.col("label").alias("_lab_a")), "vec_id")
-         .join(lab.select(F.col("vec_id").alias("neighbor_id"),
-                          F.col("label").alias("_lab_n")), "neighbor_id")
-         .where(F.col("_lab_a") != F.col("_lab_n")))
+        graph.join(lab.select(F.col("vec_id"),
+                              F.col("label").alias("_lab_a")), "vec_id")
+             .join(lab.select(F.col("vec_id").alias("neighbor_id"),
+                              F.col("label").alias("_lab_n")), "neighbor_id")
+             .where(F.col("_lab_a") != F.col("_lab_n")))
     w = (Window.partitionBy("vec_id")
                .orderBy(F.col("cosine").desc(), F.col("neighbor_id").asc()))
     return (anchored.withColumn("_rk", F.row_number().over(w))
@@ -338,17 +339,21 @@ def hard_negatives(df: DataFrame, k: int = 5, n_planes: int = N_PLANES,
                             "cosine"))
 
 
-def semantic_decontaminate(df: DataFrame, bench_mod: int = 97,
-                           threshold: float = 0.3, n_planes: int = N_PLANES,
-                           n_bands: int = 3) -> DataFrame:
+#: cosine floor of the semantic decontamination (corpus max pairwise
+#: ~0.51; 0.15 yields a dozen flagged docs at sf0.01, both verdict
+#: paths live)
+SEMDECON_COS = 0.15
+
+
+def semantic_decontaminate(df: DataFrame) -> DataFrame:
     """EMBEDDING-space train/eval decontamination — the leak the
     n-gram pass (`dedup.decontaminate`) cannot see: a paraphrased or
     re-worded benchmark item shares no 5-gram with its source but
     sits right next to it in embedding space. Rows with
-    `vec_id % bench_mod == 0` stand in for the eval suite (the
-    `BENCH_MOD` convention of the n-gram twin); every OTHER vector is
-    audited: contaminated iff some benchmark vector in a shared LSH
-    band bucket has cosine ≥ threshold. Output: one row per corpus
+    `vec_id % BENCH_MOD == 0` stand in for the eval suite (the
+    convention of the n-gram twin); every OTHER vector is audited:
+    contaminated iff some benchmark vector in a shared LSH band
+    bucket has cosine ≥ `SEMDECON_COS`. Output: one row per corpus
     vector — (vec_id, contaminated 0/1, n_matches, top_bench_id,
     max_cosine); misses carry (0, 0, -1, 0.0).
 
@@ -362,12 +367,12 @@ def semantic_decontaminate(df: DataFrame, bench_mod: int = 97,
     narrowed = spread(df.where(F.size(F.col("embedding")) == EMB_DIM)
                         .select("vec_id", "embedding"))
     base = banded_buckets(
-        with_quantized(narrowed)
-        .select("vec_id", "qvec", "n2"), EMB_DIM, n_planes, n_bands)
-    bench = base.where(F.col("vec_id") % bench_mod == 0).select(
+        with_quantized(narrowed).select("vec_id", "qvec", "n2"),
+        MULTIBAND_BANDS)
+    bench = base.where(F.col("vec_id") % BENCH_MOD == 0).select(
         F.col("vec_id").alias("bench_id"), F.col("qvec").alias("cv"),
         F.col("n2").alias("cn2"), "bucket")
-    corp = base.where(F.col("vec_id") % bench_mod != 0).select(
+    corp = base.where(F.col("vec_id") % BENCH_MOD != 0).select(
         "vec_id", F.col("qvec").alias("qv"), F.col("n2").alias("qn2"),
         "bucket")
     cand = (corp.join(bench, "bucket")
@@ -375,7 +380,7 @@ def semantic_decontaminate(df: DataFrame, bench_mod: int = 97,
     hits = (cand.withColumn("dot", F.expr(dot_expr("qv", "cv")))
                 .withColumn("cosine", _cosine(F.col("dot"), F.col("qn2"),
                                               F.col("cn2")))
-                .where(F.col("cosine") >= threshold))
+                .where(F.col("cosine") >= SEMDECON_COS))
     w = (Window.partitionBy("vec_id")
                .orderBy(F.col("cosine").desc(), F.col("bench_id").asc()))
     per = (hits.withColumn("_rk", F.row_number().over(w))
@@ -387,7 +392,7 @@ def semantic_decontaminate(df: DataFrame, bench_mod: int = 97,
                        F.col("bench_id").alias("top_bench_id"),
                        F.col("cosine").alias("max_cosine")))
     corpus_ids = (df.where(F.size(F.col("embedding")) == EMB_DIM)
-                    .where(F.col("vec_id") % bench_mod != 0)
+                    .where(F.col("vec_id") % BENCH_MOD != 0)
                     .select("vec_id"))
     return (corpus_ids.join(per, "vec_id", "left")
             .select(F.col("vec_id"),
@@ -401,31 +406,27 @@ def semantic_decontaminate(df: DataFrame, bench_mod: int = 97,
                      .alias("max_cosine")))
 
 
-def embedding_neardup_pairs(df: DataFrame, threshold: float = 0.9,
-                            dim: int = EMB_DIM, n_planes: int = N_PLANES,
-                            n_bands: int = 1) -> DataFrame:
+def embedding_neardup_pairs(df: DataFrame, n_bands: int) -> DataFrame:
     """Embedding-cosine near-duplicate pairs via LSH buckets: pairs
-    sharing a bucket in ≥1 band with cosine ≥ threshold (the scale
+    sharing a bucket in ≥1 band with cosine ≥ `NEARDUP_COS` (the scale
     path — exact all-pairs would be O(N²)). Output: (id_a, id_b,
-    cosine). Same `dim` guard and `n_planes`/`n_bands` trade-offs as
+    cosine). Same `EMB_DIM` guard and `n_bands` trade-off as
     `lsh_topk`, and the same scan-width spread before the quantize +
     plane projections."""
-    narrowed = spread(df.where(F.size(F.col("embedding")) == dim)
+    narrowed = spread(df.where(F.size(F.col("embedding")) == EMB_DIM)
                         .select("vec_id", "embedding"))
     base = banded_buckets(
-        with_quantized(narrowed)
-        .select("vec_id", "qvec", "n2"), dim, n_planes, n_bands)
+        with_quantized(narrowed).select("vec_id", "qvec", "n2"), n_bands)
     a = base.select(F.col("vec_id").alias("id_a"), F.col("qvec").alias("va"),
                     F.col("n2").alias("na"), "bucket")
     b = base.select(F.col("vec_id").alias("id_b"), F.col("qvec").alias("vb"),
                     F.col("n2").alias("nb"), "bucket")
-    pairs = a.join(b, "bucket").where(F.col("id_a") < F.col("id_b"))
-    if n_bands > 1:
-        pairs = pairs.dropDuplicates(["id_a", "id_b"])
+    pairs = (a.join(b, "bucket").where(F.col("id_a") < F.col("id_b"))
+              .dropDuplicates(["id_a", "id_b"]))
     return (
         pairs.withColumn("dot", F.expr(dot_expr("va", "vb")))
              .withColumn("cosine", _cosine(F.col("dot"), F.col("na"), F.col("nb")))
-             .where(F.col("cosine") >= threshold)
+             .where(F.col("cosine") >= NEARDUP_COS)
              .select("id_a", "id_b", "cosine")
     )
 
@@ -483,13 +484,13 @@ def ivf_cell_col(centroids: list[list[int]]) -> Column:
     return F.array_position(dists, F.array_min(dists))
 
 
-def ivf_topk(df: DataFrame, centroids: list[list[int]], k: int = 5,
-             query_pred: str | None = None, dim: int = EMB_DIM) -> DataFrame:
-    """IVF(nprobe=1) top-k: exact cosine among candidates in the
-    query's coarse-quantizer cell. The data-adaptive sibling of
-    `lsh_topk`: cells follow the density of the corpus instead of
-    random hyperplanes, so candidate lists are balanced where the
-    data is. The cell join is an equi-shuffle on a small int key.
+def ivf_topk(df: DataFrame, centroids: list[list[int]]) -> DataFrame:
+    """IVF(nprobe=1) top-`TOPK_K` for the `QUERY_PRED` rows: exact
+    cosine among candidates in the query's coarse-quantizer cell. The
+    data-adaptive sibling of `lsh_topk`: cells follow the density of the
+    corpus instead of random hyperplanes, so candidate lists are
+    balanced where the data is. The cell join is an equi-shuffle on a
+    small int key.
 
     Cell assignment (n_cells × dim lambda evals per row; Catalyst
     higher-order functions run interpreted, not codegen'd) is the
@@ -497,12 +498,11 @@ def ivf_topk(df: DataFrame, centroids: list[list[int]], k: int = 5,
     the SCAN's parallelism: `execution.spread` widens a one-small-file
     scan and leaves an already-well-split input untouched — no
     shuffle at 100 TB."""
-    query_pred = query_pred or QUERY_PRED
-    narrowed = spread(df.where(F.size(F.col("embedding")) == dim))
+    narrowed = spread(df.where(F.size(F.col("embedding")) == EMB_DIM))
     base = (with_quantized(narrowed)
             .withColumn("cell", ivf_cell_col(centroids).cast("long"))
             .select("vec_id", "qvec", "n2", "cell"))
-    q = (base.where(query_pred)
+    q = (base.where(QUERY_PRED)
              .select(F.col("vec_id").alias("query_id"),
                      F.col("qvec").alias("qv"),
                      F.col("n2").alias("qn2"), "cell"))
@@ -520,26 +520,23 @@ def ivf_topk(df: DataFrame, centroids: list[list[int]], k: int = 5,
                .orderBy(F.col("cosine").desc(), F.col("neighbor_id").asc()))
     return (
         scored.withColumn("rank", F.row_number().over(w))
-              .where(F.col("rank") <= k)
+              .where(F.col("rank") <= TOPK_K)
               .select("query_id", "neighbor_id", "cosine",
                       F.col("rank").cast("long").alias("rank"))
     )
 
 
-def train_pq_codebooks(vectors: "list[list[float]]",
-                       m: int = PQ_SUBSPACES,
-                       k: int = PQ_CODEBOOK) -> list[list[list[int]]]:
+def train_pq_codebooks(vectors: "list[list[float]]") -> list[list[list[int]]]:
     """Plan-time product-quantization codebooks: the vector is split
-    into `m` subvectors and each subspace gets its own `k`-centroid
-    k-means (deterministic, same regime as `train_ivf_centroids`).
-    Returns QUANTIZED int centroids, shape m × k × (dim/m), inlined as
-    one literal in both engines' plans."""
-    dim = len(vectors[0])
-    sub = dim // m
+    into `PQ_SUBSPACES` subvectors and each subspace gets its own
+    `PQ_CODEBOOK`-centroid k-means (deterministic, same regime as
+    `train_ivf_centroids`). Returns QUANTIZED int centroids, shape
+    M × K × (dim/M), inlined as one literal in both engines' plans."""
+    sub = len(vectors[0]) // PQ_SUBSPACES
     return [
         train_ivf_centroids([v[s * sub:(s + 1) * sub] for v in vectors],
-                            n_cells=k)
-        for s in range(m)
+                            n_cells=PQ_CODEBOOK)
+        for s in range(PQ_SUBSPACES)
     ]
 
 
@@ -624,8 +621,7 @@ def pq_adc_packed_col(codebooks: list[list[list[int]]]) -> Column:
 
 
 def ivfpq_packed_topk(df: DataFrame, centroids: list[list[int]],
-                      codebooks: list[list[list[int]]],
-                      k: int = 5) -> DataFrame:
+                      codebooks: list[list[list[int]]]) -> DataFrame:
     """`ivfpq_topk` with the candidate side compressed to ONE BIGINT
     per row: the cell join ships (neighbor_id, packed, cell) — 8 B of
     code payload instead of the m-int array (~72 B serialized) or the
@@ -654,17 +650,17 @@ def ivfpq_packed_topk(df: DataFrame, centroids: list[list[int]],
                .orderBy(F.col("adc_dist").asc(), F.col("neighbor_id").asc()))
     return (
         scored.withColumn("rank", F.row_number().over(w))
-              .where(F.col("rank") <= k)
+              .where(F.col("rank") <= TOPK_K)
               .select("query_id", "neighbor_id", "packed", "adc_dist",
                       F.col("rank").cast("long").alias("rank"))
     )
 
 
 def ivfpq_topk(df: DataFrame, centroids: list[list[int]],
-               codebooks: list[list[list[int]]], k: int = 5,
-               query_pred: str | None = None, dim: int = EMB_DIM) -> DataFrame:
-    """IVF-PQ top-k — the memory-compressed scale path: candidates are
-    pruned to the query's IVF cell (equi-join on a small int key, as in
+               codebooks: list[list[list[int]]]) -> DataFrame:
+    """IVF-PQ top-`TOPK_K` for the `QUERY_PRED` rows — the
+    memory-compressed scale path: candidates are pruned to the query's
+    IVF cell (equi-join on a small int key, as in
     `ivf_topk`) and then RANKED BY ADC distance computed from the
     candidates' PQ codes alone. The candidate side never ships its
     vectors past the code assignment: at 100 TB the shuffled payload is
@@ -673,11 +669,10 @@ def ivfpq_topk(df: DataFrame, centroids: list[list[int]],
     point of PQ. Output: (query_id, neighbor_id, adc_dist, rank), rank
     by ADC ascending then neighbor id (exact ints, engine-identical).
     """
-    query_pred = query_pred or QUERY_PRED
-    narrowed = spread(df.where(F.size(F.col("embedding")) == dim))
+    narrowed = spread(df.where(F.size(F.col("embedding")) == EMB_DIM))
     base = (with_quantized(narrowed)
             .withColumn("cell", ivf_cell_col(centroids).cast("long")))
-    q = (base.where(query_pred)
+    q = (base.where(QUERY_PRED)
              .select(F.col("vec_id").alias("query_id"),
                      F.col("qvec").alias("qv"), "cell"))
     c = (base.withColumn("codes", pq_codes_col(codebooks))
@@ -692,18 +687,18 @@ def ivfpq_topk(df: DataFrame, centroids: list[list[int]],
                .orderBy(F.col("adc_dist").asc(), F.col("neighbor_id").asc()))
     return (
         scored.withColumn("rank", F.row_number().over(w))
-              .where(F.col("rank") <= k)
+              .where(F.col("rank") <= TOPK_K)
               .select("query_id", "neighbor_id", "adc_dist",
                       F.col("rank").cast("long").alias("rank"))
     )
 
 
-def crossmodal_agreement(pairs: DataFrame, emb: DataFrame,
-                         cos_threshold: float) -> DataFrame:
+def crossmodal_agreement(pairs: DataFrame, emb: DataFrame) -> DataFrame:
     """Cross-modal dedup diagnostic: for every TEXT near-dup candidate
     pair, the EMBEDDING cosine of the same items and whether the two
-    signals agree — the report a curation pipeline uses to calibrate
-    thresholds before trusting one tier to prune for the other.
+    signals agree (cosine ≥ `NEARDUP_COS`) — the report a curation
+    pipeline uses to calibrate thresholds before trusting one tier to
+    prune for the other.
 
     Scale notes: the pair list is LSH-pruned (orders of magnitude
     smaller than the corpus), so it BROADCASTS into two hash joins
@@ -727,7 +722,7 @@ def crossmodal_agreement(pairs: DataFrame, emb: DataFrame,
              .withColumn("cosine",
                          _cosine(F.col("dot"), F.col("n2a"), F.col("n2b")))
              .select("doc_a", "doc_b", "jaccard", "cosine",
-                     (F.col("cosine") >= cos_threshold).cast("long")
+                     (F.col("cosine") >= NEARDUP_COS).cast("long")
                      .alias("emb_agrees"))
     )
 
@@ -751,11 +746,10 @@ def jl_signs() -> list[list[int]]:
             for j in range(JL_DIM)]
 
 
-def jl_rerank_topk(df: DataFrame, k: int = 5,
-                   n_cand: int = JL_CAND) -> DataFrame:
+def jl_rerank_topk(df: DataFrame) -> DataFrame:
     """Two-stage retrieval: rank candidates on a low-dim JL PROJECTION
     (cheaper dot products, ±1 sign matrix — distances preserved to
-    1±ε with ε ≈ √(ln n / out_dim)), keep `n_cand` per query, then
+    1±ε with ε ≈ √(ln n / out_dim)), keep `JL_CAND` per query, then
     EXACT-rerank only those on the full vectors — the coarse-then-
     rerank pattern every production ANN stack uses (IVF-PQ's ADC is
     the quantization flavor; this is the projection flavor, and the
@@ -770,8 +764,8 @@ def jl_rerank_topk(df: DataFrame, k: int = 5,
     Scale shape: stage 1 scans the corpus once computing the
     projection in-scan (out_dim × dim integer lambda ops per row) and
     ranks per query on 16-int dots; stage 2 broadcasts the pruned
-    (Q × n_cand) candidate list back into ONE corpus scan for full
-    vectors — the 64-dim arithmetic runs on Q × n_cand rows, not
+    (Q × JL_CAND) candidate list back into ONE corpus scan for full
+    vectors — the 64-dim arithmetic runs on Q × JL_CAND rows, not
     Q × N. The stage-1 candidate join is the same broadcast-queries
     shape as `brute_force_topk` (and shares its `MAX_QUERIES` guard);
     at corpus scale compose with `ivf_topk`/`lsh_topk` cells for
@@ -810,7 +804,7 @@ def jl_rerank_topk(df: DataFrame, k: int = 5,
               .withColumn("pcos", _cosine(F.col("pdot"), F.col("pqn2"),
                                           F.col("pcn2")))
               .withColumn("p_rank", F.row_number().over(w1).cast("long"))
-              .where(F.col("p_rank") <= n_cand)
+              .where(F.col("p_rank") <= JL_CAND)
               .select("query_id", "neighbor_id", "p_rank"))
     qfull = (base.where(QUERY_PRED)
                  .select(F.col("vec_id").alias("query_id"),
@@ -825,12 +819,11 @@ def jl_rerank_topk(df: DataFrame, k: int = 5,
              .withColumn("cosine", _cosine(F.col("dot"), F.col("qn2"),
                                            F.col("cn2")))
              .withColumn("rank", F.row_number().over(w2).cast("long"))
-             .where(F.col("rank") <= k)
+             .where(F.col("rank") <= TOPK_K)
              .select("query_id", "neighbor_id", "cosine", "p_rank", "rank"))
 
 
-def semdedup_cells(df: DataFrame, centroids: list[list[int]],
-                   threshold: float = 0.3, dim: int = EMB_DIM) -> DataFrame:
+def semdedup_cells(df: DataFrame, centroids: list[list[int]]) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023):
     assign every vector to its k-means cell, compare pairs ONLY
     within a cell, and greedily drop any vector that has an
@@ -843,8 +836,8 @@ def semdedup_cells(df: DataFrame, centroids: list[list[int]],
     adapt to density, LSH bands are data-independent.
 
     Returns one row per vector: (vec_id, cell, n_dups, keep) —
-    n_dups = over-threshold in-cell neighbors (either direction),
-    keep = 0 iff some over-threshold neighbor has a smaller id.
+    n_dups = in-cell neighbors at cosine ≥ `NEARDUP_COS` (either
+    direction), keep = 0 iff such a neighbor has a smaller id.
 
     Scale shape: cell assignment is a pre-shuffle codegen/interpreted
     projection at the scan's own width (not `execution.spread`: the
@@ -853,11 +846,11 @@ def semdedup_cells(df: DataFrame, centroids: list[list[int]],
     only WITHIN a cell — the whole point of clustering first (at 100
     TB: cap cell population via more centroids, the paper's k ∝ √n).
     One cosine per candidate pair, one hash-agg back to vectors."""
-    narrowed = df.where(F.size(F.col("embedding")) == dim)
-    base = (with_quantized(narrowed)
-            .withColumn("cell", ivf_cell_col(centroids).cast("long"))
-            .select("vec_id", "qvec", "n2", "cell")
-            .localCheckpoint(eager=True))  # referenced by 3 consumers
+    narrowed = df.where(F.size(F.col("embedding")) == EMB_DIM)
+    base = checkpoint(  # referenced by 3 consumers
+        with_quantized(narrowed)
+        .withColumn("cell", ivf_cell_col(centroids).cast("long"))
+        .select("vec_id", "qvec", "n2", "cell"))
     a = base.select(F.col("vec_id").alias("id_a"), F.col("qvec").alias("qv"),
                     F.col("n2").alias("qn2"), "cell")
     b = base.select(F.col("vec_id").alias("id_b"), F.col("qvec").alias("cv"),
@@ -867,7 +860,7 @@ def semdedup_cells(df: DataFrame, centroids: list[list[int]],
               .withColumn("dot", F.expr(dot_expr("qv", "cv")))
               .withColumn("cosine", _cosine(F.col("dot"), F.col("qn2"),
                                             F.col("cn2")))
-              .where(F.col("cosine") >= threshold)
+              .where(F.col("cosine") >= NEARDUP_COS)
               .select("id_a", "id_b"))
     dup_counts = (pairs.select(F.col("id_a").alias("node"))
                        .unionAll(pairs.select(F.col("id_b").alias("node")))
@@ -887,11 +880,11 @@ def semdedup_cells(df: DataFrame, centroids: list[list[int]],
                          .cast("long").alias("keep")))
 
 
-def _recall_vs_exact(exact: DataFrame, approx: DataFrame,
-                     k: int) -> DataFrame:
-    """Shared recall@k tail for the three recall reports (LSH bands /
-    IVF cells / PQ codes): set-membership hits per query, recall_ppm
-    = n_hits·10⁶ div k, missing queries surfaced as zero."""
+def _recall_vs_exact(exact: DataFrame, approx: DataFrame) -> DataFrame:
+    """Shared recall@k tail for the recall reports (LSH bands / IVF
+    cells / PQ codes / prefixes / SQ8): set-membership hits per query,
+    recall_ppm = n_hits·10⁶ div `TOPK_K`, missing queries surfaced as
+    zero."""
     hits = (approx.join(exact.select("query_id", "neighbor_id"),
                         ["query_id", "neighbor_id"], "left_semi")
                   .groupBy("query_id")
@@ -901,14 +894,11 @@ def _recall_vs_exact(exact: DataFrame, approx: DataFrame,
               .select("query_id",
                       F.coalesce("n_hits", F.lit(0)).cast("long")
                        .alias("n_hits"),
-                      F.expr(f"coalesce(n_hits, 0) * 1000000 div {k}")
+                      F.expr(f"coalesce(n_hits, 0) * 1000000 div {TOPK_K}")
                        .alias("recall_ppm")))
 
 
-def ann_recall_report(df: DataFrame, k: int = 5, query_pred: str | None = None,
-                      dim: int = EMB_DIM, n_planes: int = N_PLANES,
-                      n_bands: int = 1,
-                      exact: DataFrame | None = None) -> DataFrame:
+def ann_recall_report(df: DataFrame, exact: DataFrame) -> DataFrame:
     """recall@k of the LSH path against the exact top-k — the metric
     that TUNES an ANN deployment (how many bands/planes buy how much
     recall) turned into a first-class query: per query,
@@ -926,23 +916,18 @@ def ann_recall_report(df: DataFrame, k: int = 5, query_pred: str | None = None,
     production path; the LSH side and the final per-query join/agg
     are the production plans themselves.
 
-    `exact` (optimization r11, guide §2.4 reuse): an already-computed
-    `brute_force_topk(df, k=k, query_pred=query_pred)` frame — the
-    recall trio (LSH / IVF / PQ) shares ONE ground-truth computation
-    instead of each report re-running the O(Q·N) pass."""
-    query_pred = query_pred or QUERY_PRED
-    if exact is None:
-        exact = brute_force_topk(df, k=k, query_pred=query_pred)
-    approx = lsh_topk(df, k=k, query_pred=query_pred, dim=dim,
-                      n_planes=n_planes, n_bands=n_bands)
-    return _recall_vs_exact(exact, approx, k)
+    `exact` (optimization r11, guide §2.4 reuse): the
+    `brute_force_topk(df)` frame — the recall trio (LSH / IVF / PQ)
+    shares ONE ground-truth computation instead of each report
+    re-running the O(Q·N) pass."""
+    approx = lsh_topk(df, k=TOPK_K, n_bands=LSH_TOPK_BANDS)
+    return _recall_vs_exact(exact, approx)
 
 
 MRL_PREFIXES = (16, 32, 64)   # Matryoshka evaluation points
 
 
-def matryoshka_recall_report(df: DataFrame, k: int = 5,
-                             exact: DataFrame | None = None) -> DataFrame:
+def matryoshka_recall_report(df: DataFrame, exact: DataFrame) -> DataFrame:
     """recall@k of PREFIX-dimension retrieval against the full-width
     exact top-k — the Matryoshka-representation question ("how many
     leading dims does serving actually need?") as a first-class
@@ -959,23 +944,15 @@ def matryoshka_recall_report(df: DataFrame, k: int = 5,
     the cheapest prefix whose recall clears the bar, cutting vector
     state and wire bytes proportionally.
 
-    `exact` (optimization r11, guide §2.4 reuse): an already-computed
-    `brute_force_topk(df.where(size(embedding) = EMB_DIM), k=k)` frame
-    — the DIM-FILTERED ground truth
-    (same expression this function builds itself), so callers holding
-    the memoized filtered exact pass skip the O(Q·N) rebuild."""
-    # the ground-truth frame is Q·k rows consumed by every prefix's
-    # recall tail (2 consumers each) — eager-checkpoint it or each
-    # consumer re-runs the full-width brute-force corpus pass
-    # (measured: 21 parquet scans / 9 nested-loop joins in the dumped
-    # plan without the cut)
-    # filter the exact pass to full-width rows, matching the prefix
-    # sides and the oracle's len(embedding)=dim guard — otherwise a
-    # wrong-dim/NULL embedding row makes ground truth diverge
-    if exact is None:
-        exact = (brute_force_topk(
-                     df.where(F.size(F.col("embedding")) == EMB_DIM), k=k)
-                 .localCheckpoint(eager=True))
+    `exact` (optimization r11, guide §2.4 reuse): the DIM-FILTERED
+    ground truth `brute_force_topk(df.where(size(embedding) =
+    EMB_DIM))`, checkpointed — it is Q·k rows consumed by every
+    prefix's recall tail (2 consumers each), and each consumer would
+    otherwise re-run the full-width brute-force corpus pass (measured:
+    21 parquet scans / 9 nested-loop joins in the dumped plan without
+    the cut). It is filtered to full-width rows to match the prefix
+    sides and the oracle's len(embedding)=dim guard — otherwise a
+    wrong-dim/NULL embedding row makes ground truth diverge."""
     reports = []
     for p in MRL_PREFIXES:
         if p == EMB_DIM:
@@ -986,16 +963,16 @@ def matryoshka_recall_report(df: DataFrame, k: int = 5,
             # sanity floor either way)
             approx = exact
             reports.append(
-                _recall_vs_exact(exact, approx, k)
+                _recall_vs_exact(exact, approx)
                 .select(F.lit(p).cast("long").alias("prefix_dim"),
                         "query_id", "n_hits", "recall_ppm"))
             continue
         sliced = (df.where(F.size(F.col("embedding")) == EMB_DIM)
                     .select("vec_id", F.slice(F.col("embedding"), 1, p)
                                        .alias("embedding")))
-        approx = brute_force_topk(sliced, k=k)
+        approx = brute_force_topk(sliced)
         reports.append(
-            _recall_vs_exact(exact, approx, k)
+            _recall_vs_exact(exact, approx)
             .select(F.lit(p).cast("long").alias("prefix_dim"),
                     "query_id", "n_hits", "recall_ppm"))
     out = reports[0]
@@ -1042,8 +1019,7 @@ def sq8_bounds(df: DataFrame) -> DataFrame:
                 F.expr("transform(mxs, s -> s.mx)").alias("mx")))
 
 
-def sq8_recall_report(df: DataFrame, k: int = 5,
-                      exact: DataFrame | None = None) -> DataFrame:
+def sq8_recall_report(df: DataFrame, exact: DataFrame) -> DataFrame:
     """recall@k of int8 SCALAR-quantized serving against the exact
     top-k — the quantization tier between full-width floats and PQ
     codes (4 B/dim → 1 B/dim, no codebook training): per dimension,
@@ -1058,15 +1034,12 @@ def sq8_recall_report(df: DataFrame, k: int = 5,
     Scale shape: evaluation harness over a bounded query sample (the
     brute-force guard applies); the production path is the candidate
     side — one scan that encodes against a broadcast 1-row bounds
-    frame, 16× smaller vector state, no exchange added."""
+    frame, 16× smaller vector state, no exchange added.
+
+    `exact` (optimization r11, guide §2.4 reuse): the DIM-FILTERED
+    ground truth `brute_force_topk(df.where(size(embedding) =
+    EMB_DIM))`, checkpointed — the recall tail consumes it twice."""
     full = df.where(F.size(F.col("embedding")) == EMB_DIM)
-    # ground truth consumed by the recall tail twice — checkpoint the
-    # Q·k frame or each consumer re-runs the brute-force corpus pass.
-    # `exact` (optimization r11, guide §2.4 reuse): callers holding
-    # the memoized DIM-FILTERED ground truth (the same
-    # brute_force_topk(full, ...) expression) skip the rebuild.
-    if exact is None:
-        exact = brute_force_topk(full, k=k).localCheckpoint(eager=True)
     base = with_quantized(full).select("vec_id", "qvec", "n2")
     bounds = sq8_bounds(full)
     recon_expr = (f"transform(code, (c, i) -> mn[i] + "
@@ -1090,9 +1063,9 @@ def sq8_recall_report(df: DataFrame, k: int = 5,
     w = (Window.partitionBy("query_id")
                .orderBy(F.col("cosine").desc(), F.col("neighbor_id").asc()))
     approx = (scored.withColumn("rank", F.row_number().over(w))
-                    .where(F.col("rank") <= k)
+                    .where(F.col("rank") <= TOPK_K)
                     .select("query_id", "neighbor_id"))
-    return _recall_vs_exact(exact, approx, k).orderBy("query_id")
+    return _recall_vs_exact(exact, approx).orderBy("query_id")
 
 
 # ------------------------------------- binary codes / Hamming serving
@@ -1140,8 +1113,7 @@ def with_binary_codes(df: DataFrame) -> DataFrame:
                  .withColumn("hash_hi", hi.cast("long")))
 
 
-def hamming_topk(df: DataFrame, k: int = 5,
-                 query_pred: str | None = None) -> DataFrame:
+def hamming_topk(df: DataFrame) -> DataFrame:
     """Approximate top-k in HAMMING space over sign-bit codes —
     multi-index hashing (Norouzi/Punjani/Fleet, "Fast Search in
     Hamming Space with Multi-Index Hashing", public): candidates must
@@ -1150,8 +1122,9 @@ def hamming_topk(df: DataFrame, k: int = 5,
     beyond that recall decays gracefully. Distance itself is two
     XOR+popcount words (`bit_count`), wholly JVM codegen.
 
-    Output (query_id, neighbor_id, hamming, rank) — all exact
-    integers, rank ties broken by neighbor_id.
+    Output (query_id, neighbor_id, hamming, rank) for the `QUERY_PRED`
+    rows' top-`TOPK_K` — all exact integers, rank ties broken by
+    neighbor_id.
 
     Scale shape: the band join is the LSH-bucket join shape (never
     all-pairs — candidates only inside shared 1-byte buckets, skew
@@ -1159,7 +1132,6 @@ def hamming_topk(df: DataFrame, k: int = 5,
     per-candidate work is 2 xor + 2 popcount on 16 B of state. This
     is the cheapest serving tier the engine offers: 32× less vector
     state than floats, integer-only distance."""
-    query_pred = query_pred or QUERY_PRED
     coded = with_binary_codes(df)
     bands = F.array(*[
         F.struct(F.lit(b).cast("int").alias("band_id"),
@@ -1169,7 +1141,7 @@ def hamming_topk(df: DataFrame, k: int = 5,
                    .select("vec_id", "hash_hi", "hash_lo",
                            F.col("bk.band_id").alias("band_id"),
                            F.col("bk.key").alias("key")))
-    q = melted.where(query_pred).select(
+    q = melted.where(QUERY_PRED).select(
         F.col("vec_id").alias("query_id"),
         F.col("hash_hi").alias("q_hi"), F.col("hash_lo").alias("q_lo"),
         "band_id", "key")
@@ -1192,7 +1164,7 @@ def hamming_topk(df: DataFrame, k: int = 5,
                .orderBy(F.col("hamming").asc(),
                         F.col("neighbor_id").asc()))
     return (scored.withColumn("rank", F.row_number().over(w))
-                  .where(F.col("rank") <= k)
+                  .where(F.col("rank") <= TOPK_K)
                   .select("query_id", "neighbor_id", "hamming",
                           F.col("rank").cast("long").alias("rank")))
 
@@ -1200,9 +1172,12 @@ def hamming_topk(df: DataFrame, k: int = 5,
 #: shift making every per-component mean numerator non-negative, so
 #: floor div (DuckDB //) and truncating div (Spark div) agree
 KMEANS_MEAN_OFF = 4 * QUANT_SCALE
+#: cells and Lloyd rounds of `kmeans_assign`
+KMEANS_K = 8
+KMEANS_ROUNDS = 3
 
 
-def kmeans_assign(df: DataFrame, k: int = 8, rounds: int = 3) -> DataFrame:
+def kmeans_assign(df: DataFrame) -> DataFrame:
     """DISTRIBUTED Lloyd k-means over the full corpus — the training
     loop itself as DataFrame ops, complementing `train_ivf_centroids`
     (which k-means a driver-side SAMPLE into plan literals; right for
@@ -1222,8 +1197,8 @@ def kmeans_assign(df: DataFrame, k: int = 8, rounds: int = 3) -> DataFrame:
     is hash-gradable against an unrolled-CTE oracle (float k-means
     never is: mean order flaps the hash).
 
-    Init: first k vectors by id (deterministic, the
-    `train_ivf_centroids` convention). Per round:
+    Init: first `KMEANS_K` vectors by id (deterministic, the
+    `train_ivf_centroids` convention). Per round (`KMEANS_ROUNDS`):
       1. assign — the k·dim centroid INTS are plan literals (the
          `ivf_cell_col` convention): argmin over a k-element literal
          struct array via array_min on struct(dist2, cell), ties →
@@ -1246,12 +1221,12 @@ def kmeans_assign(df: DataFrame, k: int = 8, rounds: int = 3) -> DataFrame:
     evaluates inside the scan projection. Empty cells keep their
     previous centroid (the driver-side merge defaults), so the cell
     count never silently shrinks."""
-    vecs = (with_quantized(spread(
-                df.where(F.size(F.col("embedding")) == EMB_DIM)
-                  .select("vec_id", "embedding")))
-            .select(F.col("vec_id").alias("vid"), "qvec")
-            .localCheckpoint(eager=True))  # scanned once per round
-    init = vecs.orderBy("vid").limit(k).select("qvec").collect()
+    vecs = checkpoint(  # scanned once per round
+        with_quantized(spread(
+            df.where(F.size(F.col("embedding")) == EMB_DIM)
+              .select("vec_id", "embedding")))
+        .select(F.col("vec_id").alias("vid"), "qvec"))
+    init = vecs.orderBy("vid").limit(KMEANS_K).select("qvec").collect()
     cents: list[tuple[int, list[int]]] = [
         (i + 1, [int(v) for v in row["qvec"]]) for i, row in enumerate(init)]
 
@@ -1271,7 +1246,7 @@ def kmeans_assign(df: DataFrame, k: int = 8, rounds: int = 3) -> DataFrame:
                             F.col("_am.cell").alias("cell"),
                             F.col("_am.dist2").alias("dist2")))
 
-    for _ in range(rounds):
+    for _ in range(KMEANS_ROUNDS):
         comp = (assign(cents)
                 .select("cell", F.posexplode("qvec").alias("pos", "v"))
                 .groupBy("cell", "pos")
@@ -1292,9 +1267,7 @@ DENSITY_TARGET_PPB = 500_000_000   # keep ~half the corpus, density-tilted
 DENSITY_SALT = "dsample-v1"
 
 
-def density_sample(df: DataFrame, k: int = 5, dim: int = EMB_DIM,
-                   n_planes: int = N_PLANES, n_bands: int = 3,
-                   graph: DataFrame | None = None) -> DataFrame:
+def density_sample(df: DataFrame, graph: DataFrame) -> DataFrame:
     """DENSITY-INVERSE diversity sampling — the soft cousin of
     SemDeDup's hard drop: instead of deleting near-duplicates, keep
     every vector with probability inversely proportional to its local
@@ -1319,20 +1292,17 @@ def density_sample(df: DataFrame, k: int = 5, dim: int = EMB_DIM,
     Scale shape: `knn_graph`'s banded-candidate exchange dominates;
     density is one vec-keyed agg over the k·N edge rows; the weight
     normalizer is a 1-row broadcast; the coin is a map-side filter.
-    `graph` (optimization r11, guide §2.4 reuse): an already-computed
-    `knn_graph(df, k=k, ...)` frame — callers holding the memoized
-    catalog graph skip re-running the banded-candidate + rerank pass.
+    `graph` (optimization r11, guide §2.4 reuse): the `knn_graph(df)`
+    frame — the catalog holds it memoized, so the banded-candidate +
+    rerank pass is not re-run here.
     """
     from ..functions import h60
-    g = graph if graph is not None else knn_graph(df, k=k, dim=dim,
-                                                  n_planes=n_planes,
-                                                  n_bands=n_bands)
-    dens = (g.groupBy("vec_id")
+    dens = (graph.groupBy("vec_id")
              .agg(F.count(F.lit(1)).cast("long").alias("n_nbrs"),
                   F.expr("CAST(sum(1000000 + CAST(round(cosine * 1000000)"
                          " AS BIGINT)) div count(*) - 1000000 AS BIGINT)")
                    .alias("dens_ppm")))
-    base = (df.where(F.size(F.col("embedding")) == dim)
+    base = (df.where(F.size(F.col("embedding")) == EMB_DIM)
               .select("vec_id")
               .join(dens, "vec_id", "left")
               .select(F.col("vec_id"),
@@ -1424,19 +1394,20 @@ def pca_scores(df: DataFrame, mean_q: list[int],
 # ------------------------------------------------------------------ MMR
 
 MMR_POOL = 20   # stage-1 candidate pool per query (top-`pool` cosine)
+MMR_K = 5       # results picked per query
 
 
-def mmr_rerank(df: DataFrame, k: int = 5, pool: int = MMR_POOL,
-               query_pred: str | None = None) -> DataFrame:
+def mmr_rerank(df: DataFrame) -> DataFrame:
     """Maximal Marginal Relevance re-ranking (Carbonell & Goldstein
-    1998), λ = 0.5: greedily pick k results per query trading
+    1998), λ = 0.5: greedily pick `MMR_K` results per `QUERY_PRED`
+    query trading
     relevance against redundancy — step 1 takes the top-cosine
     candidate, step i maximizes 0.5·(cos(q,c) − max over picked p of
     cos(c,p)). Output: (query_id, step, neighbor_id, cosine, mmr).
 
     The greedy loop is UNROLLED into k−1 static stages (no driver
     iteration on data): each stage is a bounded join — candidates ×
-    picked within a query, both ≤ `pool` rows per query — followed by
+    picked within a query, both ≤ `MMR_POOL` rows per query — followed by
     a row_number pick. All cosines derive from exact int dots, so the
     double comparisons are bit-identical cross-engine; ties break on
     neighbor_id.
@@ -1445,48 +1416,47 @@ def mmr_rerank(df: DataFrame, k: int = 5, pool: int = MMR_POOL,
     and reused by every stage; per-query state is O(pool), so the op
     scales linearly in the number of queries with no wide shuffle —
     the stage-1 pool bound is what keeps MMR's quadratic term local."""
-    query_pred = query_pred or QUERY_PRED
     from pyspark.sql import Window
     base = (with_quantized(spread(df.where(F.size("embedding") == EMB_DIM)
                          .select("vec_id", "embedding")))
             .select("vec_id", "qvec", "n2"))
-    q = (base.where(query_pred)
+    q = (base.where(QUERY_PRED)
              .select(F.col("vec_id").alias("query_id"),
                      F.col("qvec").alias("qv"), F.col("n2").alias("qn2")))
     c = (base.select(F.col("vec_id").alias("cand_id"),
                      F.col("qvec").alias("cv"), F.col("n2").alias("cn2")))
     w = (Window.partitionBy("query_id")
                .orderBy(F.col("cos_q").desc(), F.col("cand_id").asc()))
-    pool_df = (
+    # |Q|·pool rows, re-read by every unrolled stage: without the
+    # cut, stage i re-evaluates the pool subtree 2i+1 times and
+    # the plan grows combinatorially (19 s → ~2 s at sf0.01).
+    # LAZY (optimization r11, guide §1.2 step 1): the lineage is
+    # truncated at plan-build either way (LogicalRDD); eager
+    # materialization was one blocking job per checkpoint — with
+    # all of them lazy the whole unrolled greedy loop fuses into
+    # the ONE job of the final action, each persisted frame
+    # computing exactly once inside it.
+    pool_df = checkpoint(
         F.broadcast(q).crossJoin(c)
          .where(F.col("cand_id") != F.col("query_id"))
          .withColumn("dot", F.expr(dot_expr("qv", "cv")))
          .withColumn("cos_q", _cosine(F.col("dot"), F.col("qn2"),
                                       F.col("cn2")))
          .withColumn("rk", F.row_number().over(w))
-         .where(F.col("rk") <= pool)
-         .select("query_id", "cand_id", "cv", "cn2", "cos_q")
-         # |Q|·pool rows, re-read by every unrolled stage: without the
-         # cut, stage i re-evaluates the pool subtree 2i+1 times and
-         # the plan grows combinatorially (19 s → ~2 s at sf0.01).
-         # LAZY (optimization r11, guide §1.2 step 1): the lineage is
-         # truncated at plan-build either way (LogicalRDD); eager
-         # materialization was one blocking job per checkpoint — with
-         # all of them lazy the whole unrolled greedy loop fuses into
-         # the ONE job of the final action, each persisted frame
-         # computing exactly once inside it.
-         .localCheckpoint(eager=False))
+         .where(F.col("rk") <= MMR_POOL)
+         .select("query_id", "cand_id", "cv", "cn2", "cos_q"),
+        eager=False)
     a = pool_df.select("query_id", "cand_id", "cv", "cn2")
     b = pool_df.select(F.col("query_id").alias("query_id_b"),
                        F.col("cand_id").alias("other_id"),
                        F.col("cv").alias("ov"), F.col("cn2").alias("on2"))
-    pairs = (a.join(b, (a.query_id == b.query_id_b)
-                       & (a.cand_id != b.other_id))
-              .withColumn("pdot", F.expr(dot_expr("cv", "ov")))
-              .withColumn("cos_ab", _cosine(F.col("pdot"), F.col("cn2"),
-                                            F.col("on2")))
-              .select("query_id", "cand_id", "other_id", "cos_ab")
-              .localCheckpoint(eager=False))  # |Q|·pool² rows, reused k−1×
+    pairs = checkpoint(  # |Q|·pool² rows, reused k−1×
+        a.join(b, (a.query_id == b.query_id_b) & (a.cand_id != b.other_id))
+         .withColumn("pdot", F.expr(dot_expr("cv", "ov")))
+         .withColumn("cos_ab", _cosine(F.col("pdot"), F.col("cn2"),
+                                       F.col("on2")))
+         .select("query_id", "cand_id", "other_id", "cos_ab"),
+        eager=False)
     cands = pool_df.select("query_id", "cand_id", "cos_q")
     wp = (Window.partitionBy("query_id")
                 .orderBy(F.col("mmr").desc(), F.col("cand_id").asc()))
@@ -1496,7 +1466,7 @@ def mmr_rerank(df: DataFrame, k: int = 5, pool: int = MMR_POOL,
                    .select("query_id", "cand_id", "cos_q", "mmr",
                            F.lit(1).cast("long").alias("step")))
     steps = [picked]
-    for step in range(2, k + 1):
+    for step in range(2, MMR_K + 1):
         chosen = steps[0]
         for s in steps[1:]:
             chosen = chosen.unionByName(s)
@@ -1508,15 +1478,16 @@ def mmr_rerank(df: DataFrame, k: int = 5, pool: int = MMR_POOL,
         msim = (pairs.join(chosen_ids, ["query_id", "other_id"])
                      .groupBy("query_id", "cand_id")
                      .agg(F.max("cos_ab").alias("max_sim")))
-        nxt = (remaining.join(msim, ["query_id", "cand_id"])
-               .withColumn("mmr", F.lit(0.5) * (F.col("cos_q")
-                                                - F.col("max_sim")))
-               .withColumn("rk", F.row_number().over(wp))
-               .where(F.col("rk") == 1)
-               .select("query_id", "cand_id", "cos_q", "mmr",
-                       F.lit(step).cast("long").alias("step"))
-               # |Q| rows; later stages re-read every earlier pick
-               .localCheckpoint(eager=False))
+        # |Q| rows; later stages re-read every earlier pick
+        nxt = checkpoint(
+            remaining.join(msim, ["query_id", "cand_id"])
+            .withColumn("mmr", F.lit(0.5) * (F.col("cos_q")
+                                             - F.col("max_sim")))
+            .withColumn("rk", F.row_number().over(wp))
+            .where(F.col("rk") == 1)
+            .select("query_id", "cand_id", "cos_q", "mmr",
+                    F.lit(step).cast("long").alias("step")),
+            eager=False)
         steps.append(nxt)
     out = steps[0]
     for s in steps[1:]:
@@ -1527,7 +1498,7 @@ def mmr_rerank(df: DataFrame, k: int = 5, pool: int = MMR_POOL,
 
 
 def ivf_recall_report(df: DataFrame, centroids: list[list[int]],
-                      exact: DataFrame | None = None) -> DataFrame:
+                      exact: DataFrame) -> DataFrame:
     """`ann_recall_report`'s IVF sibling — recall@k of the nprobe=1
     IVF path against the exact top-k, the measurement that tunes the
     CELL COUNT / nprobe trade the way the LSH report tunes bands and
@@ -1535,16 +1506,13 @@ def ivf_recall_report(df: DataFrame, centroids: list[list[int]],
     differs from the query's; this counts them). Same evaluation
     contract: bounded query sample, set membership not rank
     agreement, recall_ppm = n_hits·10⁶ div k, exact integers — and
-    the same shared-ground-truth `exact` hook as `ann_recall_report`."""
-    if exact is None:
-        exact = brute_force_topk(df, k=TOPK_K)
-    approx = ivf_topk(df, centroids, k=TOPK_K)
-    return _recall_vs_exact(exact, approx, TOPK_K)
+    the same shared ground truth `exact` as `ann_recall_report`."""
+    return _recall_vs_exact(exact, ivf_topk(df, centroids))
 
 
 def pq_recall_report(df: DataFrame, centroids: list[list[int]],
                      codebooks: list[list[list[int]]],
-                     exact: DataFrame | None = None) -> DataFrame:
+                     exact: DataFrame) -> DataFrame:
     """Completes the recall-measurement trio (LSH bands →
     `ann_recall_report`, IVF cells → `ivf_recall_report`, PQ codes →
     THIS): recall@k of the full IVF-PQ path — cell pruning PLUS the
@@ -1552,8 +1520,5 @@ def pq_recall_report(df: DataFrame, centroids: list[list[int]],
     code compression costs on top of the cell miss rate (compare
     against `ivf_recall_report` at the same centroids). Same
     contract: bounded query sample, set membership, exact ppm — and
-    the same shared-ground-truth `exact` hook as `ann_recall_report`."""
-    if exact is None:
-        exact = brute_force_topk(df, k=TOPK_K)
-    approx = ivfpq_topk(df, centroids, codebooks, k=TOPK_K)
-    return _recall_vs_exact(exact, approx, TOPK_K)
+    the same shared ground truth `exact` as `ann_recall_report`."""
+    return _recall_vs_exact(exact, ivfpq_topk(df, centroids, codebooks))

@@ -37,18 +37,18 @@ H60_MAX = 1 << 60
 SKETCH_K = 32
 
 
-def _estimate(k: int):
+def _estimate():
     """KMV estimator as ONE fixed float64 expression over exact ints
     (cross-engine deterministic per plans/base.py rules). Groups with
-    fewer than k distinct keys are exact: the sketch IS the key set."""
+    fewer than `SKETCH_K` distinct keys are exact: the sketch IS the
+    key set."""
     return F.when(
-        F.col("n_kept") < k, F.col("n_kept").cast("double")
-    ).otherwise(F.lit(float(k - 1)) * F.lit(float(H60_MAX))
+        F.col("n_kept") < SKETCH_K, F.col("n_kept").cast("double")
+    ).otherwise(F.lit(float(SKETCH_K - 1)) * F.lit(float(H60_MAX))
                 / F.col("kth_min").cast("double"))
 
 
-def kmv_sketch(df: DataFrame, group_col: str = "source", key_col: str = "text",
-               k: int = SKETCH_K) -> DataFrame:
+def kmv_sketch(df: DataFrame) -> DataFrame:
     """Per-group KMV distinct-count sketch + the merged global sketch.
 
     Returns one row per group plus one `__ALL__` row:
@@ -61,13 +61,13 @@ def kmv_sketch(df: DataFrame, group_col: str = "source", key_col: str = "text",
     one distinct key), demonstrating the property that makes sketches
     the 100 TB tool: partial results combine without revisiting data.
     """
-    hashes = (df.where(F.col(key_col).isNotNull())
-                .select(F.col(group_col).alias("grp"),
-                        h60(F.col(key_col)).alias("h"))
+    hashes = (df.where(F.col("text").isNotNull())
+                .select(F.col("source").alias("grp"),
+                        h60(F.col("text")).alias("h"))
                 .distinct())
     w = Window.partitionBy("grp").orderBy("h")
     kept = (hashes.withColumn("rk", F.row_number().over(w))
-                  .where(F.col("rk") <= k))
+                  .where(F.col("rk") <= SKETCH_K))
     per_group = (kept.groupBy("grp")
                      .agg(F.count(F.lit(1)).alias("n_kept"),
                           F.max("h").alias("kth_min")))
@@ -76,16 +76,16 @@ def kmv_sketch(df: DataFrame, group_col: str = "source", key_col: str = "text",
     merged_kept = (kept.select("h").distinct()
                        .withColumn("rk", F.row_number().over(
                            Window.orderBy("h")))
-                       .where(F.col("rk") <= k))
+                       .where(F.col("rk") <= SKETCH_K))
     merged = (merged_kept.agg(F.count(F.lit(1)).alias("n_kept"),
                               F.max("h").alias("kth_min"))
                          .withColumn("grp", F.lit("__ALL__")))
     out = per_group.unionByName(merged.select("grp", "n_kept", "kth_min"))
     return out.select(
-        F.col("grp").alias(group_col),
+        F.col("grp").alias("source"),
         F.col("n_kept").cast("long").alias("n_kept"),
         F.col("kth_min").cast("long").alias("kth_min"),
-        _estimate(k).alias("est_distinct"))
+        _estimate().alias("est_distinct"))
 
 
 def kmv_sketch_sql() -> str:
@@ -142,12 +142,12 @@ def _positions(c):
                      for a, b in BLOOM_FAMILY])
 
 
-def bloom_build(keys: DataFrame, key_col: str = "key") -> DataFrame:
+def bloom_build(keys: DataFrame) -> DataFrame:
     """Build the filter as (limb, bits) rows — m/32 rows total, the
     relational form of the bit array. The build is one explode (k
     rows per key) + one tiny hash agg with map-side bit_or partials;
     the result broadcasts anywhere a probe runs."""
-    pos = (keys.select(F.explode(_positions(F.col(key_col))).alias("p"))
+    pos = (keys.select(F.explode(_positions(F.col("shingle"))).alias("p"))
                .select(F.expr(f"p div {_LIMB_BITS}").alias("limb"),
                        F.expr(f"CAST(p % {_LIMB_BITS} AS INT)").alias("bit")))
     return (pos.groupBy("limb")
@@ -285,7 +285,7 @@ def cms_estimate(keys: DataFrame, sketch: DataFrame) -> DataFrame:
                        .cast("long").alias("cms_cnt")))
 
 
-def cms_heavy_hitters(df: DataFrame, k: int = CMS_TOPK) -> DataFrame:
+def cms_heavy_hitters(df: DataFrame) -> DataFrame:
     """Heavy-hitter report: the corpus's exact top-k tokens next to
     their count-min estimates — (rank, tok, exact_cnt, cms_cnt,
     overcount). The catalog hash PINS the CMS guarantee on every row:
@@ -308,7 +308,7 @@ def cms_heavy_hitters(df: DataFrame, k: int = CMS_TOPK) -> DataFrame:
     exact = occ.groupBy("tok").agg(
         F.count(F.lit(1)).cast("long").alias("exact_cnt"))
     top = (exact.orderBy(F.col("exact_cnt").desc(), F.col("tok").asc())
-                .limit(k))
+                .limit(CMS_TOPK))
     est = cms_estimate(top.select("tok"), cms_build(occ))
     wrk = Window.orderBy(F.col("exact_cnt").desc(), F.col("tok").asc())
     return (top.join(est, "tok")
@@ -417,16 +417,16 @@ def ams_sketch(df: DataFrame) -> DataFrame:
               .agg(F.sum("s").cast("long").alias("s")))
 
 
-def ams_inner_product(a: DataFrame, b: DataFrame, key_a: str,
-                      key_b: str) -> DataFrame:
+def ams_inner_product(a: DataFrame, b: DataFrame) -> DataFrame:
     """The PRODUCTION path of the join-size estimator: one row
     (est_pairs) — median over depths of the signed-counter inner
-    product, from the two bounded sketch builds alone. No audit, no
+    product of `a.o_orderkey` and `b.l_orderkey`, from the two bounded
+    sketch builds alone. No audit, no
     key-wise shuffle of either input: this is everything a 100 TB
     deployment runs to size a join before committing to it."""
-    dots = (ams_sketch(a.select(F.col(key_a).alias("k")))
+    dots = (ams_sketch(a.select(F.col("o_orderkey").alias("k")))
             .withColumnRenamed("s", "sa")
-            .join(ams_sketch(b.select(F.col(key_b).alias("k")))
+            .join(ams_sketch(b.select(F.col("l_orderkey").alias("k")))
                   .withColumnRenamed("s", "sb"),
                   ["r", "c"], "full")
             .groupBy("r")
@@ -438,13 +438,13 @@ def ams_inner_product(a: DataFrame, b: DataFrame, key_a: str,
             .select(F.col("dot").alias("est_pairs")))
 
 
-def ams_join_size(a: DataFrame, b: DataFrame, key_a: str,
-                  key_b: str) -> DataFrame:
+def ams_join_size(a: DataFrame, b: DataFrame) -> DataFrame:
     """Join-cardinality estimation report: ONE row
     (est_pairs, exact_pairs, abs_err_ppm) — the count-sketch estimate
-    of |a ⋈ b| on key_a = key_b next to the exact answer. Estimate =
-    median over depths r of Σ_c s_a[r][c]·s_b[r][c] (median of d odd
-    depths = an exact middle element, deterministic both engines).
+    of |a ⋈ b| on o_orderkey = l_orderkey next to the exact answer.
+    Estimate = median over depths r of Σ_c s_a[r][c]·s_b[r][c] (median
+    of d odd depths = an exact middle element, deterministic both
+    engines).
 
     (The exact side — per-key count aggs joined and Σ n_a·n_b, which
     sizes the join WITHOUT materializing it — is the fixture-scale
@@ -456,10 +456,10 @@ def ams_join_size(a: DataFrame, b: DataFrame, key_a: str,
     contribute 0), a d-row median. The exact twin shuffles each side
     once on the key — exactly the cost the estimator exists to
     predict, paid here only for the audit."""
-    est = ams_inner_product(a, b, key_a, key_b)
-    na = (a.groupBy(F.col(key_a).alias("k"))
+    est = ams_inner_product(a, b)
+    na = (a.groupBy(F.col("o_orderkey").alias("k"))
            .agg(F.count(F.lit(1)).cast("long").alias("na")))
-    nb = (b.groupBy(F.col(key_b).alias("k"))
+    nb = (b.groupBy(F.col("l_orderkey").alias("k"))
            .agg(F.count(F.lit(1)).cast("long").alias("nb")))
     exact = (na.join(nb, "k")
                .agg(F.expr("CAST(coalesce(sum(na * nb), 0) AS BIGINT)")
@@ -568,8 +568,7 @@ def _hll_rho(suffix):
         F.lit(57) - F.length(F.bin(suffix))).cast("long")
 
 
-def hll_sketch(df: DataFrame, group_col: str = "source",
-               key_col: str = "tok") -> DataFrame:
+def hll_sketch(df: DataFrame) -> DataFrame:
     """Per-group HLL register table + raw estimate + exact distinct,
     plus the `__ALL__` row whose registers are the BUCKET-WISE
     MAX of the per-group registers (HLL's merge — no rescan).
@@ -585,10 +584,10 @@ def hll_sketch(df: DataFrame, group_col: str = "source",
     on m rows per group. Merging ships m registers per group, never
     keys. The exact column is ONE extra count-distinct agg for the
     graded comparison; production drops it."""
-    hashes = (df.where(F.col(key_col).isNotNull()
-                       & F.col(group_col).isNotNull())
-                .select(F.col(group_col).alias("grp"),
-                        h60(F.col(key_col)).alias("h"))
+    hashes = (df.where(F.col("tok").isNotNull()
+                       & F.col("source").isNotNull())
+                .select(F.col("source").alias("grp"),
+                        h60(F.col("tok")).alias("h"))
                 .distinct())
     rhos = hashes.select(
         "grp", (F.col("h") % HLL_M).cast("long").alias("bucket"),
@@ -619,7 +618,7 @@ def hll_sketch(df: DataFrame, group_col: str = "source",
                  .withColumn("grp", F.lit("__ALL__")))
     exact = exact_g.unionByName(exact_all.select("grp", "exact_distinct"))
     return (summed.join(exact, "grp")
-                  .select(F.col("grp").alias(group_col),
+                  .select(F.col("grp").alias("source"),
                           (F.lit(HLL_M) - F.col("n_filled"))
                           .cast("long").alias("n_zero"),
                           sum_fp.alias("sum_fp"),
@@ -678,7 +677,7 @@ FROM summed s JOIN exact e USING (grp)
 """
 
 
-def kmv_pair_overlap(df: DataFrame, k: int = SKETCH_K) -> DataFrame:
+def kmv_pair_overlap(df: DataFrame) -> DataFrame:
     """Pairwise set-INTERSECTION estimates between groups from their
     KMV sketches alone — the sketch-algebra capability that makes
     sketches a corpus-accounting tool rather than a single statistic
@@ -708,7 +707,7 @@ def kmv_pair_overlap(df: DataFrame, k: int = SKETCH_K) -> DataFrame:
                 .distinct())
     w = Window.partitionBy("grp").orderBy("h")
     kept = (hashes.withColumn("rk", F.row_number().over(w))
-                  .where(F.col("rk") <= k).select("grp", "h"))
+                  .where(F.col("rk") <= SKETCH_K).select("grp", "h"))
     groups = kept.select("grp").distinct()
     pairs = (groups.select(F.col("grp").alias("grp_a"))
              .join(groups.select(F.col("grp").alias("grp_b")),
@@ -728,15 +727,16 @@ def kmv_pair_overlap(df: DataFrame, k: int = SKETCH_K) -> DataFrame:
                    F.max("in_b").alias("in_b")))
     wu = Window.partitionBy("grp_a", "grp_b").orderBy("h")
     sk = (u.withColumn("rk", F.row_number().over(wu))
-           .where(F.col("rk") <= k))
+           .where(F.col("rk") <= SKETCH_K))
     agg = (sk.groupBy("grp_a", "grp_b")
              .agg(F.count(F.lit(1)).cast("long").alias("n_union_kept"),
                   F.max("h").alias("kth_min"),
                   F.expr("CAST(sum(in_a * in_b) AS BIGINT)")
                    .alias("n_both")))
     est_u = F.when(
-        F.col("n_union_kept") < k, F.col("n_union_kept").cast("double")
-    ).otherwise(F.lit(float(k - 1)) * F.lit(float(H60_MAX))
+        F.col("n_union_kept") < SKETCH_K,
+        F.col("n_union_kept").cast("double")
+    ).otherwise(F.lit(float(SKETCH_K - 1)) * F.lit(float(H60_MAX))
                 / F.col("kth_min").cast("double"))
     return (agg.withColumn("est_union", est_u)
                .withColumn("est_inter",

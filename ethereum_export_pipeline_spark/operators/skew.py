@@ -40,16 +40,17 @@ def with_salt(df: DataFrame, salt_src: str | Column | None = None,
     return df.withColumn("__salt", F.pmod(c, F.lit(n_salts)))
 
 
-def salted_agg(df: DataFrame, key: str, partials: list[tuple[Column, str]],
-               finals: list[tuple[Column, str]],
-               salt_src: str | None = None) -> DataFrame:
-    """Two-phase aggregate: phase 1 groups (key, salt) computing
-    `partials` (each (expr, alias)); phase 2 groups key merging with
-    `finals` (each (expr over the partial aliases, alias))."""
-    phase1 = (with_salt(df, salt_src)
-              .groupBy(key, "__salt")
+def salted_agg(df: DataFrame, partials: list[tuple[Column, str]],
+               finals: list[tuple[Column, str]]) -> DataFrame:
+    """Two-phase aggregate on the hot key `event_type`, salted by
+    `event_id`: phase 1 groups (key, salt) computing `partials` (each
+    (expr, alias)); phase 2 groups key merging with `finals` (each
+    (expr over the partial aliases, alias))."""
+    phase1 = (with_salt(df, "event_id")
+              .groupBy("event_type", "__salt")
               .agg(*[e.alias(a) for e, a in partials]))
-    return phase1.groupBy(key).agg(*[e.alias(a) for e, a in finals])
+    return phase1.groupBy("event_type").agg(
+        *[e.alias(a) for e, a in finals])
 
 
 def salted_join(big: DataFrame, small: DataFrame,

@@ -152,7 +152,10 @@ def fingerprint(df: DataFrame) -> DataFrame:
     )
 
 
-def top_terms(df: DataFrame, k: int = 3) -> DataFrame:
+TOP_TERMS_K = 3  # keywords per document
+
+
+def top_terms(df: DataFrame) -> DataFrame:
     """Keyword extraction: the k most frequent tokens per document,
     ties broken lexicographically (deterministic on both engines).
     Output: (id, term, n, rank). Explode → per-(doc,term) count →
@@ -167,7 +170,7 @@ def top_terms(df: DataFrame, k: int = 3) -> DataFrame:
     w = (Window.partitionBy("doc_id")
                .orderBy(F.col("n").desc(), F.col("term").asc()))
     return (counts.withColumn("rank", F.row_number().over(w).cast("long"))
-                  .where(F.col("rank") <= k))
+                  .where(F.col("rank") <= TOP_TERMS_K))
 
 
 def corpus_stats(df: DataFrame) -> DataFrame:
@@ -247,11 +250,15 @@ def repetition_stats(df: DataFrame) -> DataFrame:
     )
 
 
-def chunk_tokens(df: DataFrame, chunk: int = 64,
-                 stride: int = 48) -> DataFrame:
+CHUNK_TOKENS = 64  # tokens per training chunk
+CHUNK_STRIDE = 48  # a new chunk starts every 48 tokens
+
+
+def chunk_tokens(df: DataFrame) -> DataFrame:
     """Training-sample chunking: split each document's token sequence
-    into overlapping windows of `chunk` tokens every `stride` tokens
-    (the example-preparation step between cleaning and batching).
+    into overlapping windows of `CHUNK_TOKENS` tokens every
+    `CHUNK_STRIDE` tokens (the example-preparation step between
+    cleaning and batching).
     One row per chunk: (id, chunk_idx, chunk_start, n_chunk_tokens,
     chunk_fp) where chunk_fp is the positional polynomial hash of the
     chunk's tokens — so chunk CONTENT, not just counts, is verifiable.
@@ -262,7 +269,7 @@ def chunk_tokens(df: DataFrame, chunk: int = 64,
     chunks."""
     p = MERSENNE31
     n_chunks = (f"CASE WHEN coalesce(size({TOKENS_COL}), 0) = 0 THEN array() "
-                f"ELSE sequence(0, CAST(floor((size({TOKENS_COL}) - 1) / {stride}.0) AS INT)) END")
+                f"ELSE sequence(0, CAST(floor((size({TOKENS_COL}) - 1) / {CHUNK_STRIDE}.0) AS INT)) END")
     fp = (f"aggregate(transform(chunk, (x, i) -> "
           f"((CAST(i AS BIGINT) + 1) * "
           f"(CAST(conv(substring(md5(x), 1, 8), 16, 10) AS BIGINT) % {p})) % {p}"
@@ -272,18 +279,21 @@ def chunk_tokens(df: DataFrame, chunk: int = 64,
         .select(F.col("doc_id"), F.col(TOKENS_COL),
                 F.explode(F.expr(n_chunks)).alias("chunk_idx"))
         .withColumn("chunk", F.expr(
-            f"slice({TOKENS_COL}, chunk_idx * {stride} + 1, {chunk})"))
+            f"slice({TOKENS_COL}, chunk_idx * {CHUNK_STRIDE} + 1, {CHUNK_TOKENS})"))
         .select(
             F.col("doc_id"),
             F.col("chunk_idx").cast("long").alias("chunk_idx"),
-            (F.col("chunk_idx") * stride).cast("long").alias("chunk_start"),
+            (F.col("chunk_idx") * CHUNK_STRIDE).cast("long").alias("chunk_start"),
             F.size("chunk").cast("long").alias("n_chunk_tokens"),
             F.expr(fp).cast("long").alias("chunk_fp"),
         )
     )
 
 
-def tfidf_top_terms(df: DataFrame, k: int = 5) -> DataFrame:
+TFIDF_K = 5  # tf-idf keywords per document
+
+
+def tfidf_top_terms(df: DataFrame) -> DataFrame:
     """Corpus-weighted keyword extraction: the k highest-TF-IDF terms
     per document. Unlike `top_terms` (raw frequency), the score folds
     in the corpus document frequency, so ubiquitous terms sink.
@@ -324,26 +334,29 @@ def tfidf_top_terms(df: DataFrame, k: int = 5) -> DataFrame:
     w = (Window.partitionBy("doc_id")
                .orderBy(F.col("tfidf").desc(), F.col("term").asc()))
     return (scored.withColumn("rank", F.row_number().over(w).cast("long"))
-                  .where(F.col("rank") <= k)
+                  .where(F.col("rank") <= TFIDF_K)
                   .select("doc_id", "term", F.col("tf").cast("long").alias("tf"),
                           F.col("df").cast("long").alias("df"),
                           "tfidf", "rank"))
 
 
-def pack_sequences(df: DataFrame, seq_len: int = 256,
-                   bucket: int = 1024) -> DataFrame:
+PACK_SEQ_LEN = 256  # tokens per packed training sequence
+PACK_BUCKET = 1024  # doc ids per prefix-sum bucket
+
+
+def pack_sequences(df: DataFrame) -> DataFrame:
     """Sequence packing for training batches: lay every document's
     tokens end-to-end in id order and cut the stream into fixed
-    `seq_len` bins — each doc learns its global token offset, its
+    `PACK_SEQ_LEN` bins — each doc learns its global token offset, its
     first bin, its offset inside that bin, and how many bins it spans
     (the example-packing bookkeeping an LLM pretraining pipeline
     computes before writing shards).
 
     The global prefix sum is computed DISTRIBUTED, not with a
-    single-partition global window: per-bucket (id div `bucket`)
+    single-partition global window: per-bucket (id div `PACK_BUCKET`)
     running sums in parallel, a tiny per-bucket totals frame whose own
-    prefix sum is one small-task window, broadcast back. Choose
-    `bucket` so #buckets fits one task (or apply the same two-level
+    prefix sum is one small-task window, broadcast back. Size
+    `PACK_BUCKET` so #buckets fits one task (or apply the same two-level
     trick again); no stage ever sees a global sort.
 
     Bucket totals are read OFF the per-bucket window output
@@ -355,7 +368,7 @@ def pack_sequences(df: DataFrame, seq_len: int = 256,
     n = (with_tokens(df.where(F.col("text").isNotNull()))
          .select(F.col("doc_id"),
                  F.size(F.col(TOKENS_COL)).cast("long").alias("n_tokens"),
-                 F.expr(f"CAST(doc_id AS BIGINT) div {bucket}")
+                 F.expr(f"CAST(doc_id AS BIGINT) div {PACK_BUCKET}")
                  .alias("_bkt"))
          # explicit, though implied by the join: with it BOTH consumers
          # of the bucket exchange (per-bucket window, bucket totals)
@@ -382,11 +395,11 @@ def pack_sequences(df: DataFrame, seq_len: int = 256,
                                .cast("long")))
     return packed.select(
         "doc_id", "n_tokens", "global_start",
-        F.expr(f"global_start div {seq_len}").cast("long").alias("bin_id"),
-        (F.col("global_start") % seq_len).cast("long").alias("bin_offset"),
+        F.expr(f"global_start div {PACK_SEQ_LEN}").cast("long").alias("bin_id"),
+        (F.col("global_start") % PACK_SEQ_LEN).cast("long").alias("bin_offset"),
         F.when(F.col("n_tokens") == 0, F.lit(0)).otherwise(
-            F.expr(f"(global_start + n_tokens - 1) div {seq_len}"
-                   f" - global_start div {seq_len} + 1"))
+            F.expr(f"(global_start + n_tokens - 1) div {PACK_SEQ_LEN}"
+                   f" - global_start div {PACK_SEQ_LEN} + 1"))
          .cast("long").alias("n_bins"))
 
 
@@ -413,7 +426,10 @@ def mix_sample(df: DataFrame) -> DataFrame:
               .drop("_keep"))
 
 
-def hash_split(df: DataFrame, salt: str = "split-v1") -> DataFrame:
+SPLIT_SALT = "split-v1"  # the train/val holdout salt
+
+
+def hash_split(df: DataFrame) -> DataFrame:
     """Deterministic train/val holdout assignment: hash the document
     id (salted, so re-splitting with a new salt is a one-line change)
     and bucket by percentile. Reproducible across runs, machines, and
@@ -423,7 +439,7 @@ def hash_split(df: DataFrame, salt: str = "split-v1") -> DataFrame:
     Scale notes: pure projection (md5 + modulo, JVM codegen), no
     shuffle, no state; composes with any upstream filter/dedup."""
     from ..functions import h32
-    h = h32(F.concat(F.lit(salt + ":"), F.col("doc_id").cast("string")))
+    h = h32(F.concat(F.lit(SPLIT_SALT + ":"), F.col("doc_id").cast("string")))
     return df.select(
         F.col("doc_id"),
         F.when(h % 100 < 90, "train").otherwise("val").alias("split"),
@@ -499,7 +515,10 @@ def token_rarity(df: DataFrame) -> DataFrame:
     )
 
 
-def duplicated_sentences(df: DataFrame, min_chars: int = 20) -> DataFrame:
+SENT_MIN_CHARS = 20  # sentence-dedup normalization floor
+
+
+def duplicated_sentences(df: DataFrame) -> DataFrame:
     """Sub-document exact dedup: sentences (split on '.') that occur
     in ≥2 distinct documents — the signal behind boilerplate /
     template removal (headers, disclaimers, navigation chrome repeat
@@ -515,7 +534,7 @@ def duplicated_sentences(df: DataFrame, min_chars: int = 20) -> DataFrame:
         spread(df).select(F.col("doc_id"),
                   F.explode(F.split(F.col("text"), "[.]")).alias("s"))
           .select("doc_id", F.trim(F.lower(F.col("s"))).alias("s"))
-          .where(F.length("s") >= min_chars)
+          .where(F.length("s") >= SENT_MIN_CHARS)
           .select("doc_id", F.md5("s").alias("sent_key"))
     )
     return (
@@ -618,8 +637,7 @@ BM25_TOPK = 20
 BM25_QTERMS = 3
 
 
-def bm25_topk(df: DataFrame, k: int = BM25_TOPK,
-              n_query_terms: int = BM25_QTERMS) -> DataFrame:
+def bm25_topk(df: DataFrame) -> DataFrame:
     """BM25-shaped retrieval scoring in EXACT fixed-point integers —
     the lexical-search counterpart of the ANN tier (the other half of
     a retrieval stack: sparse keyword scoring next to dense vectors).
@@ -640,7 +658,7 @@ def bm25_topk(df: DataFrame, k: int = BM25_TOPK,
         tf·T < ~2·10¹¹ keeps 44·tf·T·10⁶ inside int64 — at larger
         corpora drop the 10⁶ to 10³.
 
-    The query is the corpus's `n_query_terms` highest-df terms
+    The query is the corpus's `BM25_QTERMS` highest-df terms
     (deterministic fixture stand-in for a user query — swap the
     `qterms` frame for a literal list in real use; high-df terms are
     deliberately the WORST case for BM25's saturation, which the
@@ -649,7 +667,7 @@ def bm25_topk(df: DataFrame, k: int = BM25_TOPK,
     Scale shape: identical to `tfidf_top_terms` — ONE tokenize scan
     into the (doc, term) tf aggregate; df and dl are windows over
     that frame (term-key and doc-key exchanges); the query terms
-    broadcast as `n_query_terms` rows; final top-k is a TakeOrdered,
+    broadcast as `BM25_QTERMS` rows; final top-k is a TakeOrdered,
     not a global sort. N and T come from ONE 1-row scan subtree
     (optimization r12, guide §1.2: T = Σ_docs size(tokens) ≡ Σ tf, so
     the old totals subtree's second (doc, term) aggregate pass and
@@ -685,7 +703,7 @@ def bm25_topk(df: DataFrame, k: int = BM25_TOPK,
                    .withColumn("_qr", F.row_number().over(
                        Window.orderBy(F.col("df").desc(),
                                       F.col("term").asc())))
-                   .where(F.col("_qr") <= n_query_terms)
+                   .where(F.col("_qr") <= BM25_QTERMS)
                    .select("term"))
     scored = (stats.join(F.broadcast(qterms), "term")
                    .crossJoin(F.broadcast(tot))
@@ -701,7 +719,8 @@ def bm25_topk(df: DataFrame, k: int = BM25_TOPK,
     # orderBy+limit plans as TakeOrderedAndProject (per-partition
     # top-k + driver merge); the rank window then runs over the k
     # surviving rows only — never a global sort of the match set
-    top = agg.orderBy(F.col("score").desc(), F.col("doc_id").asc()).limit(k)
+    top = (agg.orderBy(F.col("score").desc(), F.col("doc_id").asc())
+              .limit(BM25_TOPK))
     w = Window.orderBy(F.col("score").desc(), F.col("doc_id").asc())
     return top.withColumn("rank", F.row_number().over(w).cast("long"))
 
@@ -758,7 +777,10 @@ def bigram_fluency(df: DataFrame) -> DataFrame:
                           .alias("fluency_ppb")))
 
 
-def weighted_sample(df: DataFrame, target_ppb: int = 100_000_000) -> DataFrame:
+WSAMPLE_PPB = 100_000_000  # target expected weight share: 10%
+
+
+def weighted_sample(df: DataFrame) -> DataFrame:
     """Deterministic WEIGHTED (Poisson) sampling — inclusion
     probability proportional to a per-row weight, the sampling design
     behind length-proportional corpus subsets and importance-weighted
@@ -794,13 +816,16 @@ def weighted_sample(df: DataFrame, target_ppb: int = 100_000_000) -> DataFrame:
     return (base.crossJoin(F.broadcast(tot))
                 .withColumn("p_ppb",
                             F.expr(f"least(CAST({PPB} AS BIGINT), "
-                                   f"w * {target_ppb} div (tw div n))"))
+                                   f"w * {WSAMPLE_PPB} div (tw div n))"))
                 .where(coin < F.col("p_ppb"))
                 .select("doc_id", "w", "p_ppb"))
 
 
-def stratified_reservoir(df: DataFrame, k: int = 5,
-                         salt: str = "reservoir-v1") -> DataFrame:
+RESERVOIR_K = 5  # docs per stratum
+RESERVOIR_SALT = "reservoir-v1"
+
+
+def stratified_reservoir(df: DataFrame) -> DataFrame:
     """EXACT-k-per-stratum deterministic sample — the fixed-size
     counterpart of `mix_sample` (rate-based) and `weighted_sample`
     (Poisson): eval sets and human-review batches need exactly k
@@ -819,7 +844,8 @@ def stratified_reservoir(df: DataFrame, k: int = 5,
     exchange is the group-by any per-stratum statistic pays.)"""
     from pyspark.sql import Window
     from ..functions import h60
-    coin = h60(F.concat(F.lit(salt + ":"), F.col("doc_id").cast("string")))
+    coin = h60(F.concat(F.lit(RESERVOIR_SALT + ":"),
+                        F.col("doc_id").cast("string")))
     return (df.where(F.col("source").isNotNull())
               .select(F.col("source").alias("stratum"),
                       F.col("doc_id"), coin.alias("_coin"))
@@ -827,17 +853,17 @@ def stratified_reservoir(df: DataFrame, k: int = 5,
                   Window.partitionBy("stratum")
                         .orderBy(F.col("_coin").asc(),
                                  F.col("doc_id").asc())).cast("long"))
-              .where(F.col("pick") <= k)
+              .where(F.col("pick") <= RESERVOIR_K)
               .select("stratum", "doc_id", "pick"))
 
 
 BPE_ROUNDS = 6
 
-def bpe_train(df: DataFrame, rounds: int = BPE_ROUNDS) -> DataFrame:
+def bpe_train(df: DataFrame) -> DataFrame:
     """BPE tokenizer-merge training (Sennrich et al. 2016) as an
     iterative DataFrame computation — the TOKENIZER-side artifact of
     a training-data pipeline, next to the corpus-side gates: learn
-    the first `rounds` merge rules by repeatedly fusing the corpus's
+    the first `BPE_ROUNDS` merge rules by repeatedly fusing the corpus's
     most frequent adjacent symbol pair.
 
     State lives in the standard BPE word-frequency table, NOT the
@@ -885,7 +911,7 @@ def bpe_train(df: DataFrame, rounds: int = BPE_ROUNDS) -> DataFrame:
                 "cnt"))
     spark = df.sparkSession
     merge_rows: list[tuple[int, str, str, int]] = []
-    for r in range(rounds):
+    for r in range(BPE_ROUNDS):
         pairs = (words
                  .select(F.expr("split(trim(w), ' ')").alias("s"), "cnt")
                  .where(F.size("s") >= 2)
@@ -914,8 +940,7 @@ def bpe_train(df: DataFrame, rounds: int = BPE_ROUNDS) -> DataFrame:
     return spark.createDataFrame(merge_rows, schema)
 
 
-def bpe_encode_counts(df: DataFrame, rounds: int = BPE_ROUNDS,
-                      merges: list | None = None) -> DataFrame:
+def bpe_encode_counts(df: DataFrame, merges: list) -> DataFrame:
     """Apply the corpus-trained BPE merges back to the corpus and
     account per-document BPE token counts — the other half of the
     tokenizer loop (`bpe_train` learns the merges; this is what a
@@ -923,7 +948,7 @@ def bpe_encode_counts(df: DataFrame, rounds: int = BPE_ROUNDS,
     "how many TOKENS is this document under OUR tokenizer", which
     whitespace/regex counts only approximate).
 
-    The learned merge list (`rounds` rows) is a plan-time artifact:
+    The learned merge list (`BPE_ROUNDS` rows) is a plan-time artifact:
     collected once (the IVF-centroid literal discipline — 6 rows, not
     data) and folded into ONE nested-`replace` codegen projection
     over the distinct-word map, applied in training order. Per doc:
@@ -933,15 +958,11 @@ def bpe_encode_counts(df: DataFrame, rounds: int = BPE_ROUNDS,
     Scale shape: the word MAP is vocabulary-sized and broadcasts into
     the per-occurrence join — the corpus's token stream never
     shuffles on the word key; the only corpus exchange is the per-doc
-    count aggregate. Training cost is `bpe_train`'s (vocabulary-sized
-    rounds after one corpus scan) — pass `merges` (rows with .x/.y in
-    training order) to reuse an already-trained list instead; the
-    catalog memoizes it per corpus so the graded encode entry never
-    re-runs the training job `doc_bpe_merges` already ran."""
+    count aggregate. `merges` is `bpe_train`'s list (rows with .x/.y
+    in training order); the catalog memoizes it per corpus, so the
+    graded encode entry never re-runs the training job
+    `doc_bpe_merges` already ran."""
     from ..functions import tokens
-    if merges is None:
-        merges = (bpe_train(df, rounds=rounds)
-                  .orderBy("round").collect())
     expr = "concat(' ', regexp_replace(word, '(.)', '$1 '))"
     for m in merges:
         expr = (f"replace({expr}, ' {m.x} {m.y} ', ' {m.x}{m.y} ')")
@@ -991,8 +1012,11 @@ def shingle_novelty(df: DataFrame) -> DataFrame:
                            "div n_shingles").alias("novelty_ppm")))
 
 
-def collocations(df: DataFrame, min_count: int = 5,
-                 top_k: int = 100) -> DataFrame:
+COLLOC_MIN_COUNT = 5  # bigram count floor
+COLLOC_TOP_K = 100
+
+
+def collocations(df: DataFrame) -> DataFrame:
     """Corpus collocation extraction — top-k bigrams by POINTWISE
     MUTUAL INFORMATION lift: lift(x,y) = p(xy) / (p(x·)·p(·y)), with
     positional marginals (x as bigram-first, y as bigram-second).
@@ -1026,27 +1050,29 @@ def collocations(df: DataFrame, min_count: int = 5,
                       f"i -> struct({TOKENS_COL}[i] AS w1, "
                       f"{TOKENS_COL}[i+1] AS w2))")).alias("b"))
           .select("b.w1", "b.w2"))
-    bgc = (bg.groupBy("w1", "w2")
-             .agg(F.count(F.lit(1)).cast("long").alias("n_xy"))
-             .localCheckpoint(eager=True))
+    bgc = checkpoint(bg.groupBy("w1", "w2")
+                       .agg(F.count(F.lit(1)).cast("long").alias("n_xy")))
     tot = bgc.agg(F.expr("CAST(sum(n_xy) AS BIGINT)").alias("n_bi"))
     stats = (bgc.withColumn("n_x", F.sum("n_xy")
                             .over(Window.partitionBy("w1")).cast("long"))
                 .withColumn("n_y", F.sum("n_xy")
                             .over(Window.partitionBy("w2")).cast("long"))
                 .crossJoin(F.broadcast(tot))
-                .where(F.col("n_xy") >= min_count)
+                .where(F.col("n_xy") >= COLLOC_MIN_COUNT)
                 .withColumn("lift", F.expr(
                     "CAST(n_xy AS DOUBLE) * CAST(n_bi AS DOUBLE) / "
                     "(CAST(n_x AS DOUBLE) * CAST(n_y AS DOUBLE))")))
     w = Window.orderBy(F.col("lift").desc(), F.col("w1").asc(),
                        F.col("w2").asc())
     return (stats.withColumn("rank", F.row_number().over(w).cast("long"))
-                 .where(F.col("rank") <= top_k)
+                 .where(F.col("rank") <= COLLOC_TOP_K)
                  .select("w1", "w2", "n_xy", "n_x", "n_y", "lift", "rank"))
 
 
-def mixture_weights(df: DataFrame, budget: int = 1_000_000) -> DataFrame:
+MIX_BUDGET = 1_000_000  # documents the mix apportions
+
+
+def mixture_weights(df: DataFrame) -> DataFrame:
     """Training-mix apportionment — temperature-flattened sampling
     targets per source with EXACT integer budget accounting: the step
     between "we have n_i documents per source" and "sample exactly
@@ -1075,13 +1101,13 @@ def mixture_weights(df: DataFrame, budget: int = 1_000_000) -> DataFrame:
                     "CAST(floor(sqrt(CAST(n_docs AS DOUBLE))) AS BIGINT)")))
     wall = Window.rowsBetween(Window.unboundedPreceding,
                               Window.unboundedFollowing)
-    wrem = Window.orderBy(F.expr(f"(weight * {budget}) % total_w").desc(),
+    wrem = Window.orderBy(F.expr(f"(weight * {MIX_BUDGET}) % total_w").desc(),
                           F.col("source").asc())
     return (counts
             .withColumn("total_w", F.sum("weight").over(wall).cast("long"))
-            .withColumn("quota", F.expr(f"weight * {budget} div total_w"))
+            .withColumn("quota", F.expr(f"weight * {MIX_BUDGET} div total_w"))
             .withColumn("n_left",
-                        F.lit(budget) - F.sum("quota").over(wall))
+                        F.lit(MIX_BUDGET) - F.sum("quota").over(wall))
             .withColumn("seat_rank", F.row_number().over(wrem))
             .select("source", "n_docs", "weight",
                     F.expr("CAST(quota + CASE WHEN seat_rank <= n_left "
@@ -1146,12 +1172,15 @@ DSIR_BUCKETS = 128
 DSIR_SCALE = 1_000_000     # ppm fixed point; see overflow note below
 
 
-def dsir_bucket_scores(df: DataFrame, target_pred: str) -> list[int]:
+DSIR_TARGET_PRED = "lang = 'en'"  # the DSIR target slice
+
+
+def dsir_bucket_scores(df: DataFrame) -> list[int]:
     """Bucket→score table for hashed-feature importance sampling
     (DSIR, Xie et al. 2023: weight raw-corpus docs by how target-like
     their hashed n-gram profile is). score[b] = tcnt[b]·SCALE div
     rcnt[b], both counts over ONE tokenize scan (tcnt = tokens from
-    docs matching `target_pred`, rcnt = all docs). Exact integer
+    docs matching `DSIR_TARGET_PRED`, rcnt = all docs). Exact integer
     ratio in ppm — the log-likelihood-ratio of real DSIR needs floats
     whose per-doc sum would be order-sensitive; the plain ratio keeps
     the same ranking signal hash-verifiable. The global
@@ -1164,7 +1193,7 @@ def dsir_bucket_scores(df: DataFrame, target_pred: str) -> list[int]:
     ~9e12 target tokens per bucket; shrink SCALE past that."""
     d = with_tokens(spread(df.where(F.col("text").isNotNull())))
     h = f"(CAST(conv(substring(md5(x), 1, 8), 16, 10) AS BIGINT) % {MERSENNE31})"
-    cnt = (d.select(F.expr(f"CAST({target_pred} AS INT)").alias("is_t"),
+    cnt = (d.select(F.expr(f"CAST({DSIR_TARGET_PRED} AS INT)").alias("is_t"),
                     F.explode(F.expr(
                         f"transform({TOKENS_COL}, x -> "
                         f"CAST({h} % {DSIR_BUCKETS} AS INT))")).alias("bucket"))
@@ -1205,7 +1234,7 @@ def dsir_weights(df: DataFrame, scores: list[int]) -> DataFrame:
 PHRASE = ["hash", "join"]
 
 
-def phrase_hits(df: DataFrame, phrase: list[str]) -> DataFrame:
+def phrase_hits(df: DataFrame) -> DataFrame:
     """Exact phrase search — all occurrences of a consecutive-token
     phrase, entirely INSIDE the scan (the Spark-first form: a
     higher-order `filter` over candidate start offsets of the token
@@ -1223,10 +1252,8 @@ def phrase_hits(df: DataFrame, phrase: list[str]) -> DataFrame:
     Returns (doc_id, n_hits, first_pos) for documents with ≥1 hit;
     `first_pos` is the 0-based token offset of the first occurrence.
     """
-    if not phrase:
-        raise ValueError("phrase must be non-empty")
     conds = " AND ".join(
-        f"_t[CAST(i + {j} AS INT)] = '{w}'" for j, w in enumerate(phrase))
+        f"_t[CAST(i + {j} AS INT)] = '{w}'" for j, w in enumerate(PHRASE))
     # LET-BINDING via a 1-element transform: naming the token array in
     # a projection and referencing it inside the filter lambda lets
     # CollapseProject INLINE the tokenize regex into the lambda — it
@@ -1237,8 +1264,8 @@ def phrase_hits(df: DataFrame, phrase: list[str]) -> DataFrame:
     from ..functions import TOKEN_RE
     toks_sql = f"regexp_extract_all(lower(text), '{TOKEN_RE}', 0)"
     starts = (f"transform(array({toks_sql}), _t -> "
-              f"CASE WHEN size(_t) < {len(phrase)} THEN array() "
-              f"ELSE filter(sequence(0, size(_t) - {len(phrase)}), "
+              f"CASE WHEN size(_t) < {len(PHRASE)} THEN array() "
+              f"ELSE filter(sequence(0, size(_t) - {len(PHRASE)}), "
               f"i -> {conds}) END)[0]")
     # filter-fusion via explode — see blocklist_hits: a post-`where`
     # on the computed array duplicates the tokenize+filter expression
@@ -1283,7 +1310,7 @@ BLOCKLIST = ["table hash", "customer join", "slow key",
              "merge group", "quantum leap"]
 
 
-def blocklist_hits(df: DataFrame, phrases: list[str]) -> DataFrame:
+def blocklist_hits(df: DataFrame) -> DataFrame:
     """Multi-phrase blocklist tagging — the content-policy /
     compliance gate of a training-data pipeline: K banned phrases
     (plan-time constants: slurs, license markers, boilerplate
@@ -1305,13 +1332,8 @@ def blocklist_hits(df: DataFrame, phrases: list[str]) -> DataFrame:
     K-element literal array filter via JVM `contains`, zero joins,
     zero shuffle. At 100 TB the gate runs at scan rate; K scales to
     thousands of phrases before the per-row cost rivals tokenize."""
-    if not phrases:
-        raise ValueError("phrases must be non-empty")
-    for p in phrases:
-        if "'" in p:
-            raise ValueError(f"phrase {p!r} contains a quote")
     from ..functions import TOKEN_RE
-    lits = ", ".join(f"' {p} '" for p in phrases)
+    lits = ", ".join(f"' {p} '" for p in BLOCKLIST)
     padded = (f"concat(' ', array_join("
               f"regexp_extract_all(lower(text), '{TOKEN_RE}', 0),"
               f" ' '), ' ')")
@@ -1337,7 +1359,7 @@ def blocklist_hits(df: DataFrame, phrases: list[str]) -> DataFrame:
 VOCAB_SIZE = 16  # fixture vocabulary is 31 terms; V=16 keeps OOV live
 
 
-def vocab_coverage(df: DataFrame, vocab_size: int = VOCAB_SIZE) -> DataFrame:
+def vocab_coverage(df: DataFrame) -> DataFrame:
     """Vocabulary-coverage / OOV-rate audit — the pre-tokenizer-
     training question "how much of each document does a top-V
     vocabulary actually cover?" (high OOV docs are the ones a
@@ -1365,7 +1387,7 @@ def vocab_coverage(df: DataFrame, vocab_size: int = VOCAB_SIZE) -> DataFrame:
     vc = tc.groupBy("term").agg(F.sum("n").cast("long").alias("cnt"))
     w = Window.orderBy(F.col("cnt").desc(), F.col("term").asc())
     vocab = (vc.withColumn("_rk", F.row_number().over(w))
-               .where(F.col("_rk") <= vocab_size)
+               .where(F.col("_rk") <= VOCAB_SIZE)
                .select("term", F.lit(1).alias("_in_vocab")))
     return (tc.join(F.broadcast(vocab), "term", "left")
               .groupBy("doc_id")
@@ -1430,7 +1452,7 @@ FROM h WHERE len(_h) > 0
 PSEUDONYM_TERMS = ["customer", "supplier", "spark", "quantumleap"]
 
 
-def pseudonymize_terms(df: DataFrame, terms: list[str]) -> DataFrame:
+def pseudonymize_terms(df: DataFrame) -> DataFrame:
     """Dictionary-driven deterministic pseudonymization — the GDPR
     Art. 4(5) release transform `blocklist_hits` only AUDITS: every
     occurrence of a dictionary term (usernames, project codenames,
@@ -1451,13 +1473,8 @@ def pseudonymize_terms(df: DataFrame, terms: list[str]) -> DataFrame:
     surrogate is deterministic ON PURPOSE (referential integrity);
     a keyed deployment swaps md5(t) for md5(secret || t) — same
     plan, the dictionary stays plan-side."""
-    if not terms:
-        raise ValueError("terms must be non-empty")
-    for t in terms:
-        if "'" in t:
-            raise ValueError(f"term {t!r} contains a quote")
     from ..functions import TOKEN_RE
-    lits = ", ".join(f"'{t}'" for t in terms)
+    lits = ", ".join(f"'{t}'" for t in PSEUDONYM_TERMS)
     toked = (f"regexp_extract_all(lower(text), '{TOKEN_RE}', 0)")
     # One Generate-free projection: transform(array(toked), ...) [0]
     # let-binds the tokenize so CollapseProject can't duplicate it
@@ -1502,7 +1519,10 @@ RRF_C = 60                 # the standard Cormack/Clarke offset
 RRF_SCALE = 1_000_000      # integer RRF: contribution = SCALE div (C + rank)
 
 
-def rrf_fuse(sides: dict[str, DataFrame], k: int = 20) -> DataFrame:
+RRF_K = 20  # length of the fused list
+
+
+def rrf_fuse(sides: dict[str, DataFrame]) -> DataFrame:
     """Reciprocal-rank fusion (Cormack et al., SIGIR'09) — the hybrid-
     retrieval combiner that merges a lexical ranking (BM25) with a
     dense ranking (ANN cosine) without score calibration: each list
@@ -1533,15 +1553,19 @@ def rrf_fuse(sides: dict[str, DataFrame], k: int = 20) -> DataFrame:
               .cast("long").alias(f"{n}_rank") for n in names]
     fused = u.groupBy("doc_id").agg(*aggs)
     top = fused.orderBy(F.col("rrf_score").desc(),
-                        F.col("doc_id").asc()).limit(k)
+                        F.col("doc_id").asc()).limit(RRF_K)
     w = Window.orderBy(F.col("rrf_score").desc(), F.col("doc_id").asc())
     return top.withColumn("rank", F.row_number().over(w).cast("long")) \
               .select("rank", "doc_id", "rrf_score", "n_lists",
                       *[f"{n}_rank" for n in names])
 
 
-def textrank_keywords(df: DataFrame, iters: int = 4, min_count: int = 3,
-                      top_k: int = 30) -> DataFrame:
+TEXTRANK_ITERS = 4  # PageRank rounds
+TEXTRANK_MIN_COUNT = 3  # adjacency-count edge cut
+TEXTRANK_TOPK = 30
+
+
+def textrank_keywords(df: DataFrame) -> DataFrame:
     """Corpus-level TextRank keyword salience (Mihalcea & Tarau,
     EMNLP'04): PageRank over the word co-occurrence graph — the
     graph-centrality complement of tf-idf/collocations (a term is
@@ -1549,7 +1573,7 @@ def textrank_keywords(df: DataFrame, iters: int = 4, min_count: int = 3,
     merely when it is frequent).
 
     Graph: adjacent-token pairs (window 2), self-loops dropped, kept
-    when the adjacency occurs ≥ `min_count` times corpus-wide (the
+    when the adjacency occurs ≥ `TEXTRANK_MIN_COUNT` times corpus-wide (the
     hot-pair cut that bounds the graph at web scale), both directions
     (TextRank's undirected form). Ranks via the exact fixed-point
     integer `graph.pagerank_exact` recurrence, so the DuckDB
@@ -1573,16 +1597,16 @@ def textrank_keywords(df: DataFrame, iters: int = 4, min_count: int = 3,
           .where(F.col("w1") != F.col("w2"))
           .groupBy("w1", "w2")
           .agg(F.count(F.lit(1)).alias("n"))
-          .where(F.col("n") >= min_count))
+          .where(F.col("n") >= TEXTRANK_MIN_COUNT))
     edges = (bg.select(F.explode(F.array(
                 F.struct(F.col("w1").alias("src"), F.col("w2").alias("dst")),
                 F.struct(F.col("w2").alias("src"), F.col("w1").alias("dst"))))
                 .alias("e"))
                .select("e.src", "e.dst"))
-    r = pagerank_exact(edges, iters=iters)
+    r = pagerank_exact(edges, iters=TEXTRANK_ITERS)
     w = Window.orderBy(F.col("rank").desc(), F.col("node").asc())
     return (r.withColumn("kw_rank", F.row_number().over(w).cast("long"))
-             .where(F.col("kw_rank") <= top_k)
+             .where(F.col("kw_rank") <= TEXTRANK_TOPK)
              .select("kw_rank", F.col("node").alias("term"), "rank",
                      (F.col("rank") / F.lit(1e9)).alias("rank_norm")))
 
@@ -1593,8 +1617,7 @@ RAKE_MAX_PHRASE = 4   # candidate cap (standard RAKE practice)
 RAKE_TOPK = 50
 
 
-def rake_keywords(df: DataFrame,
-                  max_phrase: int = RAKE_MAX_PHRASE) -> DataFrame:
+def rake_keywords(df: DataFrame) -> DataFrame:
     """RAKE keyword extraction (Rose et al. 2010): candidate phrases
     are maximal stopword-free token runs (gaps-and-islands over the
     token stream), word score = degree/frequency where degree sums
@@ -1609,7 +1632,7 @@ def rake_keywords(df: DataFrame,
     exchange, the sessionize shape) → three vocabulary/phrase-bounded
     hash aggs. The stopword filter happens before the window, so hot
     tokens never enter an exchange; candidate length is capped at
-    `max_phrase` so no degenerate unbroken document becomes a
+    `RAKE_MAX_PHRASE` so no degenerate unbroken document becomes a
     mega-phrase."""
     from pyspark.sql import Window
     stop = STOPWORDS["en"]
@@ -1624,7 +1647,7 @@ def rake_keywords(df: DataFrame,
                F.expr("array_join(transform(array_sort("
                       "collect_list(struct(pos, w))), s -> s.w), ' ')")
                 .alias("phrase"))
-          .where(F.col("plen") <= max_phrase))
+          .where(F.col("plen") <= RAKE_MAX_PHRASE))
     occ = isl.join(ph, ["doc_id", "grp"])
     ws = (occ.groupBy("w")
              .agg(F.count(F.lit(1)).cast("long").alias("freq"),

@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..artifacts import artifact
+from ..execution import checkpoint
 from ..operators.joins import FUZZY_MAX_DIST, fuzzy_pairs
 from ..sources.tables import load_table, register_views
 from .base import Query, cents, qty, revenue_e4
@@ -332,8 +333,7 @@ def _asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
                  .groupBy("user_id", "ts_us")
                  .agg(F.max("event_id").alias("signup_event")))
     from ..operators.joins import asof_join
-    out = asof_join(clicks, signups, key="user_id", time="ts_us",
-                    payload=["signup_event"])
+    out = asof_join(clicks, signups, payload=["signup_event"])
     return out.select(
         "event_id", "user_id", "ts_us",
         F.coalesce(F.col("signup_event_r"), F.lit(-1)).alias("signup_event"))
@@ -355,9 +355,7 @@ def _asof_join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
                  .groupBy("user_id", "ts_us")
                  .agg(F.max("event_id").alias("signup_event")))
     from ..operators.joins import asof_join_bucketed
-    out = asof_join_bucketed(clicks, signups, key="user_id",
-                             time="ts_us", payload=["signup_event"],
-                             bucket_width=86_400_000_000)
+    out = asof_join_bucketed(clicks, signups, payload=["signup_event"])
     return out.select(
         "event_id", "user_id", "ts_us",
         F.coalesce(F.col("signup_event_r"), F.lit(-1)).alias("signup_event"))
@@ -1250,8 +1248,8 @@ def _fuzzy_candidate_pairs(spark: SparkSession, sf_dir: str):
     corpus) and eagerly localCheckpointed — `q_fuzzy_match` and
     `q_entity_resolution` consume the SAME pair computation (the
     shared-artifact discipline, `artifacts.py`)."""
-    return fuzzy_pairs(_dirty_parts(spark, sf_dir),
-                       F.expr(_BLOCK)).localCheckpoint(eager=True)
+    return checkpoint(fuzzy_pairs(_dirty_parts(spark, sf_dir),
+                                  F.expr(_BLOCK)))
 
 
 #: shared CTE chain: dirty names → blocked base (with the hot-block
@@ -1613,10 +1611,8 @@ def _join_size_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     primitive that sizes a shuffle before paying for it — next to the
     exact Σ n_a·n_b audit."""
     from ..operators import sketch
-    return sketch.ams_join_size(
-        load_table(spark, sf_dir, "orders"),
-        load_table(spark, sf_dir, "lineitem"),
-        "o_orderkey", "l_orderkey")
+    return sketch.ams_join_size(load_table(spark, sf_dir, "orders"),
+                                load_table(spark, sf_dir, "lineitem"))
 
 
 def _join_size_estimate_sql() -> str:
@@ -1963,8 +1959,7 @@ def _attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
                .groupBy("user_id", "ts_us")
                .agg(F.max("k").alias("k"))
                .withColumn("cts", F.col("ts_us")))
-    j = asof_join(purchases, clicks, key="user_id", time="ts_us",
-                  payload=["k", "cts"])
+    j = asof_join(purchases, clicks, payload=["k", "cts"])
     campaign = F.expr(
         f"CASE WHEN cts_r IS NULL OR k_r IS NULL "
         f"OR ts_us - cts_r > {ATTR_LOOKBACK_US} "
@@ -2010,12 +2005,11 @@ def _salted_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
           .select("event_type", "event_id",
                   F.expr(cents("value")).alias("v")))
     return salted_agg(
-        ev, key="event_type",
+        ev,
         partials=[(F.count(F.lit(1)), "n_p"),
                   (F.expr("CAST(sum(v) AS BIGINT)"), "s_p")],
         finals=[(F.expr("CAST(sum(n_p) AS BIGINT)"), "n_events"),
-                (F.expr("CAST(sum(s_p) AS BIGINT)"), "value_cents")],
-        salt_src="event_id")
+                (F.expr("CAST(sum(s_p) AS BIGINT)"), "value_cents")])
 
 
 _SALTED_AGG_SQL = f"""
@@ -2610,8 +2604,7 @@ def _hierarchy_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = (bal.where("c_custkey >= 10")
                 .select(F.col("c_custkey").alias("child"),
                         F.expr("c_custkey div 10").alias("parent")))
-    agg = hierarchy_aggregates(edges, bal, id_col="c_custkey",
-                               val_col="bal_cents", rounds=4)
+    agg = hierarchy_aggregates(edges, bal)
     return (bal.join(agg, bal.c_custkey == agg.node, "left")
                .select("c_custkey",
                        F.coalesce("depth", F.lit(0)).cast("long")

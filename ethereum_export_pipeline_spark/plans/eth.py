@@ -19,6 +19,9 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
 from ..artifacts import artifact
+from ..operators.checks import PROFILE_INT, PROFILE_STR
+from ..operators.layout import COMPACT_TARGET
+from ..operators.reorg import REORG_DEPTH
 from ..partitioning import KEY_TIERS, range_cols, volume_balanced_plan
 from ..sources.tables import load_table, register_views
 from ..util import local_df, scratch_dir
@@ -623,7 +626,7 @@ def _quality_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "o_orderpriority IN ('1-URGENT','2-HIGH','3-MEDIUM',"
                 "'4-NOT SPECIFIED','5-LOW')",
         }),
-        check_unique(o, "o_orderkey"),
+        check_unique(o),
         check_ref(li, o, "l_orderkey", "o_orderkey"),
         check_ref(o, c, "o_custkey", "c_custkey"),
     ])
@@ -695,7 +698,6 @@ FROM lineitem
 
 # ------------------------------------------------------ compaction plan
 
-COMPACT_TARGET = 1 << 16  # 64 KiB target output files (fixture-scaled)
 COMPACT_GROUP = 100       # orderkeys per synthetic input file
 
 
@@ -714,7 +716,7 @@ def _compaction_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
                        .cast("long").alias("file_id"))
              .agg(F.expr("CAST(sum(48 + l_partkey % 64 + l_suppkey % 32) "
                          "AS BIGINT)").alias("bytes")))
-    return compaction_plan(inv, target_bytes=COMPACT_TARGET)
+    return compaction_plan(inv)
 
 
 _COMPACTION_PLAN_SQL = f"""
@@ -739,17 +741,12 @@ FROM pre GROUP BY 1
 
 # -------------------------------------------------------- table profile
 
-_PROFILE_INT = ("l_orderkey", "l_partkey", "l_suppkey", "l_linenumber")
-_PROFILE_STR = ("l_returnflag", "l_linestatus")
-
-
 def _table_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One-scan column profiling of lineitem (exact-typed columns:
     four BIGINTs + two VARCHARs) — `operators/checks.profile_table`;
     the statistics pass behind schema docs and drift alarms."""
     from ..operators.checks import profile_table
-    return profile_table(load_table(spark, sf_dir, "lineitem"),
-                         int_cols=_PROFILE_INT, str_cols=_PROFILE_STR)
+    return profile_table(load_table(spark, sf_dir, "lineitem"))
 
 
 _TABLE_PROFILE_SQL = "\nUNION ALL\n".join(
@@ -757,7 +754,7 @@ _TABLE_PROFILE_SQL = "\nUNION ALL\n".join(
        CAST(count(DISTINCT {c}) AS BIGINT) AS n_distinct,
        CAST(min({c}) AS VARCHAR) AS min_value,
        CAST(max({c}) AS VARCHAR) AS max_value FROM lineitem"""
-    for c in _PROFILE_INT + _PROFILE_STR)
+    for c in PROFILE_INT + PROFILE_STR)
 
 
 # --------------------------------------------------- gap audit
@@ -810,7 +807,6 @@ WHERE prev IS NOT NULL AND k - prev > 1
 # --------------------------------------------------- reorg resolution
 
 REORG_H = 1000       # synthetic chain tip height
-REORG_DEPTH = 16     # fork-choice window (bounded finality)
 
 
 def _reorg_resolve(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -839,7 +835,7 @@ def _reorg_resolve(spark: SparkSession, sf_dir: str) -> DataFrame:
          .alias("hash"),
         F.md5(F.concat(F.lit("b"), (F.col("h") - 1).cast("string")))
          .alias("parent")))
-    return resolve_reorgs(main.unionAll(uncles), max_depth=REORG_DEPTH)
+    return resolve_reorgs(main.unionAll(uncles))
 
 
 _REORG_RESOLVE_SQL = f"""
@@ -1063,7 +1059,7 @@ def _wei_limbs(spark: SparkSession, sf_dir: str) -> DataFrame:
         "concat('0x', lpad(lower(hex(a)), 16, '0'),"
         " lpad(lower(hex(b)), 16, '0'), lpad(lower(hex(c)), 16, '0'),"
         " lpad(lower(hex(d)), 16, '0')) AS value_hex")
-    limbs = hex_uint256_limb32_exprs("value_hex")
+    limbs = hex_uint256_limb32_exprs()
     decoded = hexed.selectExpr(
         "bucket",
         *[f"{w} AS w{i}" for i, w in enumerate(limbs)],

@@ -27,11 +27,22 @@ from ..execution import checkpoint, spread
 from ..functions import (MERSENNE31, affine_hash_sql, h32_sql,
                           h60_sql, tokens_sql)
 from ..operators import dedup, multimodal, similarity, sketch, text
-from ..operators.similarity import TOPK_K
-from ..operators.sketch import SKETCH_K
-from ..operators.text import (BLOCKLIST, FUNNEL_MIN_QUALITY,
-                               FUNNEL_MIN_TOKENS, PHRASE, PSEUDONYM_TERMS,
-                               VOCAB_SIZE)
+from ..operators.checks import HIST_BINS, OUTLIER_K
+from ..operators.dedup import BENCH_MOD, NGRAM_THRESHOLD
+from ..operators.graph import KCORE_K, KCORE_ROUNDS, LPA_ROUNDS
+from ..operators.multimodal import AUDIO_TARGET_RATE, IMG_MAX_HAMMING
+from ..operators.similarity import (KMEANS_K, KMEANS_ROUNDS, LSH_PLANES,
+                                    LSH_TOPK_BANDS, MMR_K, MULTIBAND_BANDS,
+                                    NEARDUP_COS, RANGE_BANDS, RANGE_COS,
+                                    SEMDECON_COS, TOPK_K)
+from ..operators.text import (CHUNK_STRIDE, CHUNK_TOKENS, COLLOC_MIN_COUNT,
+                               COLLOC_TOP_K, DSIR_TARGET_PRED,
+                               FUNNEL_MIN_QUALITY, FUNNEL_MIN_TOKENS,
+                               MIX_BUDGET, PACK_SEQ_LEN, RESERVOIR_K,
+                               RESERVOIR_SALT, RRF_K, SENT_MIN_CHARS,
+                               SPLIT_SALT, TEXTRANK_ITERS,
+                               TEXTRANK_MIN_COUNT, TEXTRANK_TOPK, TFIDF_K,
+                               TOP_TERMS_K, WSAMPLE_PPB)
 from ..sources.tables import load_table
 from .base import Query, cents
 
@@ -79,11 +90,8 @@ FROM documents WHERE text IS NOT NULL GROUP BY 1
 
 # ---------------------------------------------------------- n-gram pairs
 
-NGRAM_THRESHOLD = 0.5
-
 def _ngram_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return dedup.ngram_jaccard_pairs(load_table(spark, sf_dir, "documents"),
-                                     threshold=NGRAM_THRESHOLD)
+    return dedup.ngram_jaccard_pairs(load_table(spark, sf_dir, "documents"))
 
 
 def _ngram_pairs_sql() -> str:
@@ -118,9 +126,8 @@ inter AS (
 
 @artifact("minhash_pair_graph")
 def _lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return (dedup.minhash_lsh_pairs(load_table(spark, sf_dir, "documents"),
-                                    threshold=NGRAM_THRESHOLD)
-            .localCheckpoint(eager=True))
+    return checkpoint(dedup.minhash_lsh_pairs(
+        load_table(spark, sf_dir, "documents")))
 
 
 @artifact("ssjoin_pairs")
@@ -131,8 +138,8 @@ def _ssjoin_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact-Jaccard computation — before the memo each ran the full
     prefix-filter join independently (the recall audit's exact side
     was the single most expensive recomputation in the catalog)."""
-    return (dedup.ssjoin_prefix_pairs(load_table(spark, sf_dir, "documents"))
-            .localCheckpoint(eager=True))
+    return checkpoint(dedup.ssjoin_prefix_pairs(
+        load_table(spark, sf_dir, "documents")))
 
 
 @artifact("cc_labels")
@@ -141,17 +148,15 @@ def _cc(spark: SparkSession, sf_dir: str) -> DataFrame:
     (clusters / canonical / manifest / leakage split all consume the
     SAME labels; `doc_dedup_clusters_star` deliberately recomputes via
     star contraction — two algorithms, one oracle)."""
-    return dedup.connected_components(
-        _lsh_pairs(spark, sf_dir)).localCheckpoint(eager=True)
+    return checkpoint(dedup.connected_components(_lsh_pairs(spark, sf_dir)))
 
 
 @artifact("kmeans_cells")
 def _kmeans_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The graded 3-round Lloyd assignment, shared by the cluster-
     labeling / outlier / drift consumers."""
-    return similarity.kmeans_assign(
-        load_table(spark, sf_dir, "embeddings"),
-        k=KMEANS_K, rounds=KMEANS_ROUNDS).localCheckpoint(eager=True)
+    return checkpoint(similarity.kmeans_assign(
+        load_table(spark, sf_dir, "embeddings")))
 
 
 def _minhash_pairs_sql(rel: str = "documents") -> str:
@@ -264,9 +269,7 @@ def _incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     one verdict row per new doc."""
     docs = load_table(spark, sf_dir, "documents")
     return dedup.incremental_neardup(
-        docs.where(NEW_BATCH_PRED),
-        docs.where(f"NOT ({NEW_BATCH_PRED})"),
-        threshold=NGRAM_THRESHOLD)
+        docs.where(NEW_BATCH_PRED), docs.where(f"NOT ({NEW_BATCH_PRED})"))
 
 
 def _incremental_neardup_sql() -> str:
@@ -435,11 +438,9 @@ FROM documents
 
 # -------------------------------------------------------------- top terms
 
-TOP_TERMS_K = 3
 
 def _top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return text.top_terms(load_table(spark, sf_dir, "documents"),
-                          k=TOP_TERMS_K)
+    return text.top_terms(load_table(spark, sf_dir, "documents"))
 
 
 def _top_terms_sql() -> str:
@@ -494,10 +495,6 @@ FROM toks LEFT JOIN s ON s.doc_id = toks.doc_id
 
 # ------------------------------------------------------- similarity search
 
-NEARDUP_COS = 0.3   # corpus max pairwise cosine is ~0.51; 0.3 keeps a tail
-LSH_PLANES = 8      # 2^8 buckets suits the 500-5000-vector corpus
-                    # (production default of 16 would leave buckets empty)
-
 _QUANT = ("list_transform(embedding, x -> "
           f"CAST(round(CAST(x AS DOUBLE) * {similarity.QUANT_SCALE}.0) AS BIGINT))")
 
@@ -515,7 +512,7 @@ _COS = "CAST(dot AS DOUBLE) / sqrt(CAST(qn2 AS DOUBLE) * CAST(cn2 AS DOUBLE))"
 def _bucket_sql_expr(offset: int = 0) -> str:
     """DuckDB twin of similarity.lsh_bucket_expr — same inlined planes."""
     terms = []
-    for p, signs in enumerate(similarity.plane_signs(LSH_PLANES, offset=offset)):
+    for p, signs in enumerate(similarity.plane_signs(offset)):
         lit = "[" + ", ".join(str(s) for s in signs) + "]"
         proj = f"list_sum(list_transform(list_zip(q, {lit}), s -> s[1] * s[2]))"
         terms.append(f"(CASE WHEN ({proj}) >= 0 THEN {1 << p} ELSE 0 END)")
@@ -550,9 +547,8 @@ def _exact_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     `emb_ivf_recall`, `emb_pq_recall`) all rank against this SAME
     O(Q·N) ground-truth pass — before the memo each of the four ran
     it independently."""
-    return (similarity.brute_force_topk(
-                load_table(spark, sf_dir, "embeddings"), k=TOPK_K)
-            .localCheckpoint(eager=True))
+    return checkpoint(similarity.brute_force_topk(
+        load_table(spark, sf_dir, "embeddings")))
 
 
 @artifact("exact_topk_dim")
@@ -568,10 +564,8 @@ def _exact_topk_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
     (every row dim-64) the two frames hold identical rows, but the
     memo keys the CONTRACT, not the coincidence."""
     emb = load_table(spark, sf_dir, "embeddings")
-    return (similarity.brute_force_topk(
-                emb.where(F.size(F.col("embedding")) == similarity.EMB_DIM),
-                k=TOPK_K)
-            .localCheckpoint(eager=True))
+    return checkpoint(similarity.brute_force_topk(
+        emb.where(F.size(F.col("embedding")) == similarity.EMB_DIM)))
 
 
 def _brute_topk_sql() -> str:
@@ -591,8 +585,7 @@ def _jl_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact rerank on full vectors (operators/similarity.jl_rerank_topk
     — the coarse-then-rerank production ANN pattern; `p_rank` ≠
     `rank` rows are the reorderings the rerank fixes)."""
-    return similarity.jl_rerank_topk(load_table(spark, sf_dir,
-                                                "embeddings"), k=TOPK_K)
+    return similarity.jl_rerank_topk(load_table(spark, sf_dir, "embeddings"))
 
 
 def _jl_rerank_sql() -> str:
@@ -641,13 +634,9 @@ SELECT query_id, neighbor_id, cosine, p_rank, rk AS "rank" FROM (
 """
 
 
-LSH_TOPK_BANDS = 2  # graded default: OR-amplified recall (≥2 bands)
-
-
 def _lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return similarity.lsh_topk(load_table(spark, sf_dir, "embeddings"),
-                               k=TOPK_K, n_planes=LSH_PLANES,
-                               n_bands=LSH_TOPK_BANDS)
+                               k=TOPK_K, n_bands=LSH_TOPK_BANDS)
 
 
 def _lsh_topk_sql() -> str:
@@ -673,7 +662,7 @@ def _lsh_topk_1band(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Single-band labeled variant (the weakest-recall configuration,
     kept for comparison against the ≥2-band graded default)."""
     return similarity.lsh_topk(load_table(spark, sf_dir, "embeddings"),
-                               k=TOPK_K, n_planes=LSH_PLANES, n_bands=1)
+                               k=TOPK_K, n_bands=1)
 
 
 def _lsh_topk_1band_sql() -> str:
@@ -690,7 +679,6 @@ cos AS (SELECT query_id, neighbor_id, {_COS} AS cosine FROM scored)
 
 
 NEARDUP_BANDS = 2    # graded default: ≥2 bands (OR-amplified recall)
-MULTIBAND_BANDS = 3  # the wider-recall labeled variant
 
 
 @artifact("emb_neardup_pairs")
@@ -698,16 +686,13 @@ def _emb_neardup_memo(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The graded-default (2-band) cosine near-dup pair list, memoized
     per (session, corpus) like `_lsh_pairs` — `emb_neardup_pairs` and
     `emb_semantic_dedup` consume the SAME banded LSH computation."""
-    return similarity.embedding_neardup_pairs(
-        load_table(spark, sf_dir, "embeddings"),
-        threshold=NEARDUP_COS, n_planes=LSH_PLANES,
-        n_bands=NEARDUP_BANDS).localCheckpoint(eager=True)
+    return checkpoint(similarity.embedding_neardup_pairs(
+        load_table(spark, sf_dir, "embeddings"), n_bands=NEARDUP_BANDS))
 
 
 def _emb_neardup_multiband(spark: SparkSession, sf_dir: str) -> DataFrame:
     return similarity.embedding_neardup_pairs(
-        load_table(spark, sf_dir, "embeddings"), threshold=NEARDUP_COS,
-        n_planes=LSH_PLANES, n_bands=MULTIBAND_BANDS)
+        load_table(spark, sf_dir, "embeddings"), n_bands=MULTIBAND_BANDS)
 
 
 def _emb_neardup_banded_sql(n_bands: int) -> str:
@@ -791,8 +776,7 @@ def get_quantizers() -> tuple[list[list[int]], list[list[list[int]]]]:
 
 def _ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return similarity.ivf_topk(
-        load_table(spark, sf_dir, "embeddings"), get_quantizers()[0],
-        k=TOPK_K)
+        load_table(spark, sf_dir, "embeddings"), get_quantizers()[0])
 
 
 def _ivf_cell_sql() -> str:
@@ -824,7 +808,7 @@ cos AS (SELECT query_id, neighbor_id, {_COS} AS cosine FROM scored)
 def _ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents, books = get_quantizers()
     return similarity.ivfpq_topk(
-        load_table(spark, sf_dir, "embeddings"), cents, books, k=TOPK_K)
+        load_table(spark, sf_dir, "embeddings"), cents, books)
 
 
 def _ivfpq_packed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -836,7 +820,7 @@ def _ivfpq_packed(spark: SparkSession, sf_dir: str) -> DataFrame:
     the Horner nibble packing is value-pinned."""
     cents, books = get_quantizers()
     return similarity.ivfpq_packed_topk(
-        load_table(spark, sf_dir, "embeddings"), cents, books, k=TOPK_K)
+        load_table(spark, sf_dir, "embeddings"), cents, books)
 
 
 def _ivfpq_packed_sql() -> str:
@@ -1134,7 +1118,7 @@ def _resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     the hash."""
     media = multimodal.documents_as_ppm_media(
         load_table(spark, sf_dir, "documents"))
-    resized = multimodal.resize_media(media, 64, 64)
+    resized = multimodal.resize_media(media)
     feats = multimodal.extract_features(
         resized.select("media_id", "payload"))
     return feats.select(
@@ -1193,7 +1177,7 @@ def _frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash."""
     media = multimodal.documents_as_video_media(
         load_table(spark, sf_dir, "documents"))
-    out = multimodal.sample_frames(media, n_frames=2)
+    out = multimodal.sample_frames(media)
     return out.select(
         "media_id", "sample_idx", "src_frame", "width", "height",
         *[F.element_at("ch_sum", c + 1).alias(f"ch_sum_{c}")
@@ -1367,7 +1351,7 @@ def _hash_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _hash_split_sql() -> str:
-    h = h32_sql("'split-v1:' || CAST(doc_id AS VARCHAR)")
+    h = h32_sql(f"'{SPLIT_SALT}:' || CAST(doc_id AS VARCHAR)")
     return f"""
 SELECT CAST(doc_id AS BIGINT) AS doc_id,
        CASE WHEN {h} % 100 < 90 THEN 'train' ELSE 'val' END AS split
@@ -1377,13 +1361,10 @@ FROM documents
 
 # -------------------------------------------------------- token chunks
 
-CHUNK_TOKENS = 64
-CHUNK_STRIDE = 48
 
 
 def _chunk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return text.chunk_tokens(load_table(spark, sf_dir, "documents"),
-                             chunk=CHUNK_TOKENS, stride=CHUNK_STRIDE)
+    return text.chunk_tokens(load_table(spark, sf_dir, "documents"))
 
 
 def _chunk_sql() -> str:
@@ -1546,7 +1527,7 @@ def _training_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _training_manifest_sql() -> str:
     rate_h = h32_sql("'rate-v1:' || source")
     keep_h = h32_sql("'mix-v1:' || CAST(doc_id AS VARCHAR)")
-    split_h = h32_sql("'split-v1:' || CAST(g.doc_id AS VARCHAR)")
+    split_h = h32_sql(f"'{SPLIT_SALT}:' || CAST(g.doc_id AS VARCHAR)")
     return f"""
 WITH RECURSIVE q AS ({_quality_sql()}), l AS ({_language_id_sql()}),
 gated AS (
@@ -1617,12 +1598,12 @@ def _crawl_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r11, guide §2.5): a one-file corpus runs the whole strip on one
     # core otherwise; the checkpointed frame then hands its width to
     # all seven downstream consumers. No-op on well-split input.
-    crawl = (spread(load_table(spark, sf_dir, "documents")
-                    .where("text IS NOT NULL")
-                    .select("doc_id", "source", "text"))
-             .selectExpr("doc_id", "source", f"{wrapped} AS html")
-             .selectExpr("doc_id", "source", f"{stripped} AS text")
-             .localCheckpoint(eager=True))
+    crawl = checkpoint(
+        spread(load_table(spark, sf_dir, "documents")
+               .where("text IS NOT NULL")
+               .select("doc_id", "source", "text"))
+        .selectExpr("doc_id", "source", f"{wrapped} AS html")
+        .selectExpr("doc_id", "source", f"{stripped} AS text"))
     q = text.quality_score(crawl).select("doc_id", "n_tokens",
                                          "quality_score")
     lang = text.language_id(crawl).select("doc_id", "pred_lang")
@@ -1636,7 +1617,7 @@ def _crawl_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     canon = dedup.keep_canonical(
         crawl.select("doc_id"),
         dedup.connected_components(dedup.minhash_lsh_pairs(crawl)))
-    clean = (dedup.decontaminate(crawl, bench_mod=BENCH_MOD)
+    clean = (dedup.decontaminate(crawl)
              .where("contaminated = 0").select("doc_id"))
     sampled = text.mix_sample(crawl)
     split = text.hash_split(crawl)
@@ -1659,7 +1640,7 @@ def _crawl_manifest_sql() -> str:
     stripped = _html_strip_sql(rr)
     rate_h = h32_sql("'rate-v1:' || source")
     keep_h = h32_sql("'mix-v1:' || CAST(doc_id AS VARCHAR)")
-    split_h = h32_sql("'split-v1:' || CAST(g.doc_id AS VARCHAR)")
+    split_h = h32_sql(f"'{SPLIT_SALT}:' || CAST(g.doc_id AS VARCHAR)")
     return f"""
 WITH RECURSIVE crawl AS (
   SELECT doc_id, source, {stripped} AS text FROM (
@@ -1716,12 +1697,10 @@ WHERE g.doc_id IN (SELECT doc_id FROM ex)
 
 # ---------------------------------------------------------- TF-IDF
 
-TFIDF_K = 5
 
 
 def _tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return text.tfidf_top_terms(load_table(spark, sf_dir, "documents"),
-                                k=TFIDF_K)
+    return text.tfidf_top_terms(load_table(spark, sf_dir, "documents"))
 
 
 def _tfidf_sql() -> str:
@@ -1749,12 +1728,10 @@ SELECT doc_id, term, tf, df, tfidf, rank FROM (
 
 # -------------------------------------------------- sequence packing
 
-PACK_SEQ_LEN = 256
 
 
 def _pack(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return text.pack_sequences(load_table(spark, sf_dir, "documents"),
-                               seq_len=PACK_SEQ_LEN)
+    return text.pack_sequences(load_table(spark, sf_dir, "documents"))
 
 
 def _pack_sql() -> str:
@@ -1848,13 +1825,10 @@ FROM embeddings e LEFT JOIN clusters c ON e.vec_id = c.node
 
 # -------------------------------------------- decontamination / curation
 
-BENCH_MOD = 97          # doc_id % 97 == 0 stands in for the eval suite
-SENT_MIN_CHARS = 20     # sentence-dedup normalization floor
 
 
 def _decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return dedup.decontaminate(load_table(spark, sf_dir, "documents"),
-                               bench_mod=BENCH_MOD)
+    return dedup.decontaminate(load_table(spark, sf_dir, "documents"))
 
 
 def _decontaminate_sql() -> str:
@@ -1911,7 +1885,7 @@ def _sentence_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.concat(F.lit("Standard disclaimer for source "), F.col("source"),
                  F.lit(". "), F.col("text")).alias("text"))
-    return text.duplicated_sentences(seeded, min_chars=SENT_MIN_CHARS)
+    return text.duplicated_sentences(seeded)
 
 
 def _sentence_dedup_sql() -> str:
@@ -1957,8 +1931,7 @@ def _crossmodal(spark: SparkSession, sf_dir: str) -> DataFrame:
     (documents and embeddings are row-aligned: doc_id == vec_id)."""
     docs = load_table(spark, sf_dir, "documents")
     emb = load_table(spark, sf_dir, "embeddings")
-    return similarity.crossmodal_agreement(_lsh_pairs(spark, sf_dir),
-                                           emb, NEARDUP_COS)
+    return similarity.crossmodal_agreement(_lsh_pairs(spark, sf_dir), emb)
 
 
 def _crossmodal_sql() -> str:
@@ -2147,10 +2120,6 @@ FROM v
 """
 
 
-AUDIO_TARGET_RATE = 6_000   # non-divisor of the fixture's 16 kHz:
-#                             the gather is i·8 div 3, not a stride
-
-
 def _audio_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL audio resample pipeline, sample-verified (operators/
     multimodal.resample_audio): WAV fixture → decode → zero-order-hold
@@ -2161,7 +2130,7 @@ def _audio_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     the hash — the audio twin of `mm_resize`."""
     media = multimodal.documents_as_wav_media(
         load_table(spark, sf_dir, "documents"))
-    resampled = multimodal.resample_audio(media, AUDIO_TARGET_RATE)
+    resampled = multimodal.resample_audio(media)
     return multimodal.extract_audio_features(resampled)
 
 
@@ -2463,13 +2432,12 @@ def _bloom_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the bench shingle set feeds the filter build AND the exact
     # verdict — materialize the (eval-suite-sized) set once instead of
     # re-deriving it from a corpus tokenize scan per consumer
-    bench_sh = (sh.where(is_bench).select("shingle").distinct()
-                  .localCheckpoint(eager=True))
+    bench_sh = checkpoint(sh.where(is_bench).select("shingle").distinct())
     # the filter collapses to 128 longs at plan build and probes as a
     # map-side literal expression — the relational bloom_probe twin
     # shuffled 768 MB at ×100 re-aggregating per-position verdicts;
     # this form shuffles nothing before the per-doc aggregate
-    bits = bloom_bits(bloom_build(bench_sh, key_col="shingle"))
+    bits = bloom_bits(bloom_build(bench_sh))
     probed = (sh.where(~is_bench).select("doc_id", "shingle")
                 .withColumn("bloom_hit", bloom_hit_expr(bits)))
     exact = probed.join(F.broadcast(bench_sh.withColumn("_hit", F.lit(1))),
@@ -2694,9 +2662,7 @@ def _distinct_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     included. (KMV is exact below k — the right tool in this
     small-distinct regime; `doc_hll_distinct` is the register-form
     counterpart on the larger token universe.)"""
-    return sketch.kmv_sketch(load_table(spark, sf_dir, "documents"),
-                             group_col="source", key_col="text",
-                             k=SKETCH_K)
+    return sketch.kmv_sketch(load_table(spark, sf_dir, "documents"))
 
 
 def _scene_cuts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2924,7 +2890,6 @@ def _density_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     Rides the graded kNN graph (banded LSH + exact integer rerank)."""
     return similarity.density_sample(
         load_table(spark, sf_dir, "embeddings"),
-        k=TOPK_K, n_planes=LSH_PLANES, n_bands=MULTIBAND_BANDS,
         graph=_knn_graph_memo(spark, sf_dir))
 
 
@@ -3000,16 +2965,16 @@ bgr AS (
     FROM toked WHERE len(t) >= 2)
   WHERE b.w1 <> b.w2
 ),
-bg AS (SELECT w1, w2 FROM bgr GROUP BY 1, 2 HAVING count(*) >= 3),
+bg AS (SELECT w1, w2 FROM bgr GROUP BY 1, 2 HAVING count(*) >= {TEXTRANK_MIN_COUNT}),
 e AS (SELECT w1 AS src, w2 AS dst FROM bg
       UNION SELECT w2, w1 FROM bg)"""
-    inner = _pagerank_sql(edges_cte, iters=4)
+    inner = _pagerank_sql(edges_cte, iters=TEXTRANK_ITERS)
     return f"""
 SELECT CAST(row_number() OVER (ORDER BY rank DESC, node) AS BIGINT)
          AS kw_rank,
        node AS term, rank, rank_norm
 FROM ({inner})
-ORDER BY rank DESC, node LIMIT 30
+ORDER BY rank DESC, node LIMIT {TEXTRANK_TOPK}
 """
 
 
@@ -3026,8 +2991,7 @@ def _hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     emb = load_table(spark, sf_dir, "embeddings")
     bm25 = text.bm25_topk(docs).select("doc_id", "rank")
-    ann = (similarity.lsh_topk(emb, k=RRF_ANN_K, n_planes=LSH_PLANES,
-                               n_bands=LSH_TOPK_BANDS,
+    ann = (similarity.lsh_topk(emb, k=RRF_ANN_K, n_bands=LSH_TOPK_BANDS,
                                query_pred="vec_id = 0")
            .select(F.col("neighbor_id").alias("doc_id"), "rank"))
     return text.rrf_fuse({"bm25": bm25, "ann": ann})
@@ -3076,7 +3040,7 @@ fused AS (
 SELECT CAST(row_number() OVER (ORDER BY rrf_score DESC, doc_id) AS BIGINT)
          AS rank,
        doc_id, rrf_score, n_lists, bm25_rank, ann_rank
-FROM fused ORDER BY rrf_score DESC, doc_id LIMIT 20
+FROM fused ORDER BY rrf_score DESC, doc_id LIMIT {RRF_K}
 """
 
 
@@ -3086,8 +3050,7 @@ def _phrase_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate start offsets of the token array filtered INSIDE the
     scan, no postings, no joins — the contamination-string /
     boilerplate-marker gate shape at 100 TB."""
-    return text.phrase_hits(load_table(spark, sf_dir, "documents"),
-                            PHRASE)
+    return text.phrase_hits(load_table(spark, sf_dir, "documents"))
 
 
 def _blocklist_tag(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3095,8 +3058,7 @@ def _blocklist_tag(spark: SparkSession, sf_dir: str) -> DataFrame:
     which of K plan-time banned phrases each doc contains as a
     whole-token run — map-only, the padded token join LET-BOUND so
     tokenize runs once per doc however many phrases probe it."""
-    return text.blocklist_hits(load_table(spark, sf_dir, "documents"),
-                               BLOCKLIST)
+    return text.blocklist_hits(load_table(spark, sf_dir, "documents"))
 
 
 def _pseudonymize(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3106,8 +3068,8 @@ def _pseudonymize(spark: SparkSession, sf_dir: str) -> DataFrame:
     transform that preserves co-occurrence/linking structure where
     `doc_pii_scrub`'s fixed tags destroy it. Map-only, one tokenize
     per doc, zero shuffle."""
-    return text.pseudonymize_terms(load_table(spark, sf_dir, "documents"),
-                                   PSEUDONYM_TERMS)
+    return text.pseudonymize_terms(
+        load_table(spark, sf_dir, "documents"))
 
 
 def _hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3125,7 +3087,7 @@ def _hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     occ = (docs.where(F.col("text").isNotNull()
                       & F.col("source").isNotNull())
                .select("source", F.explode(tokens("text")).alias("tok")))
-    return sketch.hll_sketch(occ, group_col="source", key_col="tok")
+    return sketch.hll_sketch(occ)
 
 
 # --------------------------------------------------- dup-graph triangles
@@ -3175,8 +3137,7 @@ def _ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/similarity.ann_recall_report) — the band-tuning metric
     as a first-class query over the 10-query evaluation sample."""
     return similarity.ann_recall_report(
-        load_table(spark, sf_dir, "embeddings"), k=TOPK_K,
-        n_planes=LSH_PLANES, n_bands=LSH_TOPK_BANDS,
+        load_table(spark, sf_dir, "embeddings"),
         exact=_exact_topk(spark, sf_dir))
 
 
@@ -3242,7 +3203,7 @@ def _mrl_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     for MRL-trained embeddings. prefix 64 = full width, so its rows
     are the built-in sanity floor (recall 100%)."""
     return similarity.matryoshka_recall_report(
-        load_table(spark, sf_dir, "embeddings"), k=TOPK_K,
+        load_table(spark, sf_dir, "embeddings"),
         exact=_exact_topk_dim(spark, sf_dir))
 
 
@@ -3314,7 +3275,7 @@ def _sq8_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     quantizer). Completes the serving-compression ladder the catalog
     grades: float (exact) → MRL prefixes → SQ8 → PQ → binary."""
     return similarity.sq8_recall_report(
-        load_table(spark, sf_dir, "embeddings"), k=TOPK_K,
+        load_table(spark, sf_dir, "embeddings"),
         exact=_exact_topk_dim(spark, sf_dir))
 
 
@@ -3381,8 +3342,7 @@ def _hamming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     words. The cheapest serving tier the engine offers — 32× less
     vector state than floats, integer-only distance, LSH-bucket join
     shape."""
-    return similarity.hamming_topk(
-        load_table(spark, sf_dir, "embeddings"), k=TOPK_K)
+    return similarity.hamming_topk(load_table(spark, sf_dir, "embeddings"))
 
 
 def _hamming_topk_sql() -> str:
@@ -3553,7 +3513,6 @@ WINDOW w AS (PARTITION BY hash_hi, hash_lo)
 
 # ------------------------------------- banded image near-dup pairs
 
-IMG_MAX_HAMMING = 6
 IMG_NEARDUP_MOD = 10     # every 10th doc gets an injected near-dup copy
 
 
@@ -3572,8 +3531,7 @@ def _image_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     media = multimodal.documents_as_ppm_media(
         load_table(spark, sf_dir, "documents"),
         neardup_mod=IMG_NEARDUP_MOD)
-    return multimodal.ahash_neardup_pairs(media,
-                                          max_hamming=IMG_MAX_HAMMING)
+    return multimodal.ahash_neardup_pairs(media)
 
 
 def _image_neardup_sql() -> str:
@@ -3660,7 +3618,7 @@ def _bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     Serves the `_get_bpe_merges` memo (optimization r11, guide §2.4
     reuse): `doc_bpe_encode` already trained through the memo, so the
     old form ran the ENTIRE 6-round training a second time for this
-    row. The merge list is ≤ `rounds` rows by construction (the
+    row. The merge list is ≤ `BPE_ROUNDS` rows by construction (the
     quantizer discipline), so rebuilding the frame from the memoized
     rows is exact."""
     from pyspark.sql import types as T
@@ -3759,7 +3717,6 @@ GROUP BY 1
 
 # --------------------------------------- exact-k stratified sample
 
-RESERVOIR_K = 5
 
 
 def _stratified_reservoir(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3767,8 +3724,7 @@ def _stratified_reservoir(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/text.stratified_reservoir) — the fixed-size
     deterministic sampling design next to rate-based mix_sample and
     Poisson weighted_sample."""
-    return text.stratified_reservoir(
-        load_table(spark, sf_dir, "documents"), k=RESERVOIR_K)
+    return text.stratified_reservoir(load_table(spark, sf_dir, "documents"))
 
 
 _STRATIFIED_RESERVOIR_SQL = f"""
@@ -3776,7 +3732,7 @@ SELECT stratum, doc_id, pick FROM (
   SELECT source AS stratum, doc_id,
          CAST(row_number() OVER (
            PARTITION BY source
-           ORDER BY {h60_sql("'reservoir-v1:' || CAST(doc_id AS VARCHAR)")}
+           ORDER BY {h60_sql(f"'{RESERVOIR_SALT}:' || CAST(doc_id AS VARCHAR)")}
                     ASC, doc_id ASC) AS BIGINT) AS pick
   FROM documents WHERE source IS NOT NULL)
 WHERE pick <= {RESERVOIR_K}
@@ -3785,17 +3741,12 @@ WHERE pick <= {RESERVOIR_K}
 
 # ------------------------------------ distribution-shape profiling
 
-HIST_BINS = 10
-OUTLIER_K = 3
-
-
 def _length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source equi-width doc-length histogram over GLOBAL bin
     edges (operators/checks.equiwidth_histogram) — the shape profile
     next to the point stats of eth_table_profile."""
     from ..operators.checks import equiwidth_histogram
-    return equiwidth_histogram(load_table(spark, sf_dir, "documents"),
-                               "source", "n_chars", n_bins=HIST_BINS)
+    return equiwidth_histogram(load_table(spark, sf_dir, "documents"))
 
 
 _LENGTH_HISTOGRAM_SQL = f"""
@@ -3826,8 +3777,7 @@ def _length_quantile_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/checks.equidepth_histogram) — quantile boundaries
     next to the equi-width shape profile."""
     from ..operators.checks import equidepth_histogram
-    return equidepth_histogram(load_table(spark, sf_dir, "documents"),
-                               "source", "n_chars", n_bins=HIST_BINS)
+    return equidepth_histogram(load_table(spark, sf_dir, "documents"))
 
 
 _LENGTH_QUANTILE_BINS_SQL = f"""
@@ -3853,8 +3803,7 @@ def _length_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source robust outlier census (median/MAD, exact integer
     order statistics — operators/checks.robust_outlier_census)."""
     from ..operators.checks import robust_outlier_census
-    return robust_outlier_census(load_table(spark, sf_dir, "documents"),
-                                 "source", "n_chars", k=OUTLIER_K)
+    return robust_outlier_census(load_table(spark, sf_dir, "documents"))
 
 
 _LENGTH_OUTLIERS_SQL = f"""
@@ -3904,8 +3853,7 @@ def _semdedup_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     LSH-graph flavor is emb_semantic_dedup; this one's pair join is
     quadratic only within a cell."""
     return similarity.semdedup_cells(
-        load_table(spark, sf_dir, "embeddings"), get_quantizers()[0],
-        threshold=NEARDUP_COS)
+        load_table(spark, sf_dir, "embeddings"), get_quantizers()[0])
 
 
 def _semdedup_cells_sql() -> str:
@@ -3941,15 +3889,13 @@ LEFT JOIN dropped dr ON dr.node = c.vec_id
 
 # ---------------------------------------------- weighted sampling
 
-WSAMPLE_PPB = 100_000_000  # target expected weight share: 10%
 
 
 def _weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic Poisson πps sample, inclusion ∝ n_chars
     (operators/text.weighted_sample): one broadcast totals row into a
     codegen filter — no corpus shuffle, no rand()."""
-    return text.weighted_sample(load_table(spark, sf_dir, "documents"),
-                                target_ppb=WSAMPLE_PPB)
+    return text.weighted_sample(load_table(spark, sf_dir, "documents"))
 
 
 _WEIGHTED_SAMPLE_SQL = f"""
@@ -3973,8 +3919,6 @@ WHERE ({h60_sql("'wsample-v1:' || CAST(doc_id AS VARCHAR)")}) % {text.PPB}
 
 # --------------------------------------------------- k-core peel
 
-KCORE_K = 2
-KCORE_ROUNDS = 4
 
 
 def _dup_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3987,8 +3931,7 @@ def _dup_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = _lsh_pairs(spark, sf_dir)
     return kcore_peel(
         pairs.select(F.col("doc_a").alias("src"),
-                     F.col("doc_b").alias("dst")),
-        k=KCORE_K, rounds=KCORE_ROUNDS)
+                     F.col("doc_b").alias("dst")))
 
 
 def _dup_kcore_sql() -> str:
@@ -4064,7 +4007,7 @@ def _minhash_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     K-tuning metric (operators/dedup.minhash_estimator_quality),
     emb_ann_recall's text-side twin."""
     return dedup.minhash_estimator_quality(
-        load_table(spark, sf_dir, "documents"), threshold=NGRAM_THRESHOLD,
+        load_table(spark, sf_dir, "documents"),
         pairs=_lsh_pairs(spark, sf_dir))
 
 
@@ -4154,8 +4097,7 @@ def _source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     from KMV sketch algebra alone (operators/sketch.kmv_pair_overlap)
     — 190 pair estimates from k rows per source, zero per-pair corpus
     rescans."""
-    return sketch.kmv_pair_overlap(load_table(spark, sf_dir, "documents"),
-                                   k=SKETCH_K)
+    return sketch.kmv_pair_overlap(load_table(spark, sf_dir, "documents"))
 
 
 # ------------------------------------------ containment (excerpts)
@@ -4196,7 +4138,6 @@ FROM (
 
 # ------------------------------------------------ LPA communities
 
-LPA_ROUNDS = 4
 
 
 def _dup_lpa(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4207,7 +4148,7 @@ def _dup_lpa(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = _lsh_pairs(spark, sf_dir)
     return lpa_communities(
         pairs.select(F.col("doc_a").alias("src"),
-                     F.col("doc_b").alias("dst")), rounds=LPA_ROUNDS)
+                     F.col("doc_b").alias("dst")))
 
 
 def _dup_lpa_sql() -> str:
@@ -4355,10 +4296,8 @@ def _knn_graph_memo(spark: SparkSession, sf_dir: str) -> DataFrame:
     (session, corpus) like `_lsh_pairs` — `emb_knn_graph` and
     `emb_knn_linkpred` consume the SAME banded-candidates + exact-
     rerank computation."""
-    return similarity.knn_graph(
-        load_table(spark, sf_dir, "embeddings"),
-        k=TOPK_K, n_planes=LSH_PLANES,
-        n_bands=MULTIBAND_BANDS).localCheckpoint(eager=True)
+    return checkpoint(similarity.knn_graph(
+        load_table(spark, sf_dir, "embeddings")))
 
 
 def _knn_graph_sql() -> str:
@@ -4385,17 +4324,13 @@ SELECT query_id AS vec_id, neighbor_id, cosine, rk AS "rank" FROM (
 """
 
 
-COLLOC_MIN_COUNT = 5
-COLLOC_TOP_K = 100
 
 
 def _collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-k collocation bigrams by PMI lift
     (operators/text.collocations) — tokenizer-vocab candidates and
     boilerplate phrase discovery."""
-    return text.collocations(load_table(spark, sf_dir, "documents"),
-                             min_count=COLLOC_MIN_COUNT,
-                             top_k=COLLOC_TOP_K)
+    return text.collocations(load_table(spark, sf_dir, "documents"))
 
 
 _COLLOCATIONS_SQL = f"""
@@ -4420,15 +4355,13 @@ WHERE "rank" <= {COLLOC_TOP_K}
 """
 
 
-MIX_BUDGET = 1_000_000
 
 
 def _mixture_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Temperature (α=1/2) training-mix apportionment with exact
     largest-remainder budget accounting
     (operators/text.mixture_weights)."""
-    return text.mixture_weights(load_table(spark, sf_dir, "documents"),
-                                budget=MIX_BUDGET)
+    return text.mixture_weights(load_table(spark, sf_dir, "documents"))
 
 
 _MIXTURE_WEIGHTS_SQL = f"""
@@ -4452,10 +4385,6 @@ SELECT source, n_docs, weight,
 FROM seats
 """
 
-
-
-KMEANS_K = 8
-KMEANS_ROUNDS = 3
 
 
 def _kmeans_assign_sql() -> str:
@@ -4599,8 +4528,7 @@ def _vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """OOV-rate audit vs the top-{VOCAB_SIZE} corpus vocabulary
     (operators/text.vocab_coverage) — the pre-tokenizer-training
     coverage question; all-BIGINT output (ppm via integer div)."""
-    return text.vocab_coverage(load_table(spark, sf_dir, "documents"),
-                               vocab_size=VOCAB_SIZE)
+    return text.vocab_coverage(load_table(spark, sf_dir, "documents"))
 
 
 def _cluster_split(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4999,14 +4927,12 @@ FROM s
 #: target predicate for the graded entry: English docs are the
 #: "target distribution", the whole corpus is "raw" — the standard
 #: DSIR setup (weight raw docs by target-likeness)
-DSIR_TARGET_PRED = "lang = 'en'"
 
 @artifact("dsir_scores")
 def _get_dsir_scores(spark: SparkSession, sf_dir: str) -> list[int]:
     """Bucket-score table memoized per (session, corpus): one
     B-bounded counting scan per (session, sf_dir)."""
-    return text.dsir_bucket_scores(
-        load_table(spark, sf_dir, "documents"), DSIR_TARGET_PRED)
+    return text.dsir_bucket_scores(load_table(spark, sf_dir, "documents"))
 
 
 def _dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5098,7 +5024,6 @@ def _hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     learns from."""
     return similarity.hard_negatives(
         load_table(spark, sf_dir, "embeddings"),
-        k=TOPK_K, n_planes=LSH_PLANES, n_bands=MULTIBAND_BANDS,
         graph=_knn_graph_memo(spark, sf_dir))
 
 
@@ -5121,8 +5046,6 @@ WHERE rk = 1
 """
 
 
-SEMDECON_COS = 0.15  # corpus max pairwise ~0.51; 0.15 yields a dozen
-                     # flagged docs at sf0.01 (both verdict paths live)
 
 
 def _semantic_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5132,9 +5055,7 @@ def _semantic_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     vector (vec_id % {BENCH_MOD} — the n-gram twin's convention) —
     catches the paraphrase leak `doc_decontaminate`'s 5-grams miss."""
     return similarity.semantic_decontaminate(
-        load_table(spark, sf_dir, "embeddings"),
-        bench_mod=BENCH_MOD, threshold=SEMDECON_COS,
-        n_planes=LSH_PLANES, n_bands=MULTIBAND_BANDS)
+        load_table(spark, sf_dir, "embeddings"))
 
 
 def _semantic_decontaminate_sql() -> str:
@@ -5355,8 +5276,6 @@ SELECT vec_id, pc1_e10, CAST(pc1_e10 AS DOUBLE) / {denom} AS pc1 FROM s
 
 # ------------------------------------------------------------------ MMR
 
-MMR_K = 5
-
 
 def _mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Maximal Marginal Relevance diversity re-ranking
@@ -5364,8 +5283,7 @@ def _mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     into static join+window stages over a bounded per-query pool —
     the diversity-aware second stage retrieval pipelines put behind
     ANN candidates."""
-    return similarity.mmr_rerank(load_table(spark, sf_dir, "embeddings"),
-                                 k=MMR_K)
+    return similarity.mmr_rerank(load_table(spark, sf_dir, "embeddings"))
 
 
 def _mmr_rerank_sql() -> str:
@@ -5462,18 +5380,17 @@ def _heaps_law(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = HEAPS_BUCKETS
     docs = (load_table(spark, sf_dir, "documents")
             .where("text IS NOT NULL").select("doc_id", "text"))
-    bounds = (docs.agg(F.min("doc_id").alias("mn"),
-                       F.max("doc_id").alias("mx"))
-              .localCheckpoint(eager=True))
+    bounds = checkpoint(docs.agg(F.min("doc_id").alias("mn"),
+                                 F.max("doc_id").alias("mx")))
     bucket = F.expr(f"least({n - 1}, ((doc_id - mn) * {n}) "
                     f"div (mx - mn + 1))")
     db = (docs.crossJoin(F.broadcast(bounds))
               .withColumn("bucket", bucket)
               .select("bucket", "text"))
-    tb = (db.select("bucket", F.explode(tokens("text")).alias("term"))
-            .groupBy("bucket", "term")
-            .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-            .localCheckpoint(eager=True))
+    tb = checkpoint(
+        db.select("bucket", F.explode(tokens("text")).alias("term"))
+          .groupBy("bucket", "term")
+          .agg(F.count(F.lit(1)).cast("long").alias("cnt")))
     tokb = tb.groupBy("bucket").agg(
         F.expr("CAST(sum(cnt) AS BIGINT)").alias("n_tokens"))
     docb = (docs.select("doc_id").crossJoin(F.broadcast(bounds))
@@ -5751,13 +5668,13 @@ def _url_text_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     rr = lambda x, p, r: f"regexp_replace({x}, '{p}', '{r}')"
     raw = _url_raw_sql("div", "STRING")
     canon = _canon_url_sql(rr)
-    u = (load_table(spark, sf_dir, "documents")
-         .where("text IS NOT NULL")
-         .selectExpr("doc_id", "md5(text) AS ck", f"{raw} AS raw_url")
-         .selectExpr("ck", f"{canon} AS canon_url")
-         .selectExpr("ck", "canon_url",
-                     "regexp_extract(canon_url, '^[^/]+', 0) AS host")
-         .localCheckpoint(eager=True))
+    u = checkpoint(
+        load_table(spark, sf_dir, "documents")
+        .where("text IS NOT NULL")
+        .selectExpr("doc_id", "md5(text) AS ck", f"{raw} AS raw_url")
+        .selectExpr("ck", f"{canon} AS canon_url")
+        .selectExpr("ck", "canon_url",
+                    "regexp_extract(canon_url, '^[^/]+', 0) AS host"))
     pages = (u.groupBy("host", "canon_url")
               .agg(F.count(F.lit(1)).cast("long").alias("n_docs"),
                    F.countDistinct("ck").cast("long").alias("n_contents")))
@@ -5814,10 +5731,6 @@ ORDER BY pages.host
 
 # ------------------------------------------------ radius range search
 
-RANGE_COS = 0.25       # corpus max pairwise cosine ~0.51; 0.25 keeps a tail
-RANGE_BANDS = 2        # same OR-amplified banding as the graded top-k
-
-
 def _range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RADIUS similarity search (operators/similarity.range_search):
     every neighbor with cosine ≥ RANGE_COS for the first 50 query
@@ -5826,10 +5739,7 @@ def _range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     radius answers "everything this similar": dedup sweeps,
     recommendation pools, contamination nets). Strictly cheaper than
     top-k at equal banding: no per-query rank window at all."""
-    return similarity.range_search(
-        load_table(spark, sf_dir, "embeddings"), radius=RANGE_COS,
-        query_pred="vec_id < 50", n_planes=LSH_PLANES,
-        n_bands=RANGE_BANDS)
+    return similarity.range_search(load_table(spark, sf_dir, "embeddings"))
 
 
 def _range_search_sql() -> str:
@@ -5837,7 +5747,7 @@ def _range_search_sql() -> str:
 WITH {_BASE_CTES},
 melted AS (SELECT vec_id, q, n2,
            unnest({_banded_bucket_list_sql(RANGE_BANDS)}) AS bucket FROM wn),
-q AS (SELECT vec_id AS query_id, bucket FROM melted WHERE vec_id < 50),
+q AS (SELECT vec_id AS query_id, bucket FROM melted WHERE {similarity.RANGE_QUERY_PRED}),
 c AS (SELECT vec_id AS neighbor_id, bucket FROM melted),
 cand AS (SELECT DISTINCT query_id, neighbor_id FROM q JOIN c USING (bucket)
          WHERE neighbor_id <> query_id),

@@ -8,7 +8,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..streaming import (CHAIN_BUCKET, CHAIN_HEAD, HOP_US, IJ_DELAY_S,
-                         TRENDING_K, WINDOW_US, stream_chain_counts,
+                         IJ_GAP_S, SW_DELAY_S, SW_GAP_US, TRENDING_K,
+                         WINDOW_US, WM_DELAY_S, stream_chain_counts,
                          stream_dedup_within_watermark,
                          stream_exact_dedup, stream_hopping_counts,
                          stream_interval_join,
@@ -68,13 +69,9 @@ FROM events GROUP BY 1
 """
 
 
-WM_DELAY_S = 1800
-
-
 def _stream_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     return stream_watermark_counts(spark,
-                                   f"{sf_dir.rstrip('/')}/events.parquet",
-                                   delay_s=WM_DELAY_S)
+                                   f"{sf_dir.rstrip('/')}/events.parquet")
 
 
 #: append-mode semantics: only windows closed by the final watermark
@@ -91,13 +88,9 @@ HAVING win_start + {WINDOW_US} <=
 """
 
 
-IJ_GAP_S = 3600
-
-
 def _stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     return stream_interval_join(spark,
-                                f"{sf_dir.rstrip('/')}/events.parquet",
-                                gap_s=IJ_GAP_S)
+                                f"{sf_dir.rstrip('/')}/events.parquet")
 
 
 _STREAM_INTERVAL_JOIN_SQL = f"""
@@ -175,8 +168,7 @@ def _stream_interval_join_outer(spark: SparkSession,
     is withheld — the oracle pins that row)."""
     from ..streaming import stream_interval_join_outer
     return stream_interval_join_outer(
-        spark, f"{sf_dir.rstrip('/')}/events.parquet",
-        gap_s=IJ_GAP_S, delay_s=IJ_DELAY_S)
+        spark, f"{sf_dir.rstrip('/')}/events.parquet")
 
 
 def _stream_interval_join_outer_sql() -> str:
@@ -246,18 +238,13 @@ FROM c WHERE raw > {CUSUM_H}
 """
 
 
-SW_GAP_US = 1_800_000_000
-SW_DELAY_S = 1800
-
-
 def _stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Built-in `session_window` sessionization, append mode behind a
     watermark — the declarative twin of the applyInPandasWithState
     entry; only CLOSED sessions (end = last event + gap ≤ final
     watermark) emit."""
     return stream_session_window_counts(
-        spark, f"{sf_dir.rstrip('/')}/events.parquet",
-        gap_us=SW_GAP_US, delay_s=SW_DELAY_S)
+        spark, f"{sf_dir.rstrip('/')}/events.parquet")
 
 
 #: same gap sessionization as _EVENTS_SESSIONS_SQL plus the append-mode
@@ -297,23 +284,22 @@ def _stream_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch-side at plan build (the benchmark is static; the corpus is
     the stream) and probed per incoming doc as a literal-filter
     lambda — zero state, scan-rate throughput."""
-    from ..operators.dedup import shingles
+    from ..operators.dedup import BENCH_MOD, shingles
     from ..operators.sketch import bloom_bits, bloom_build
     from ..sources.tables import load_table
     from ..streaming import stream_decontaminate
-    from .llm import BENCH_MOD
     docs = load_table(spark, sf_dir, "documents")
     bench_sh = (shingles(docs.where(F.col("doc_id") % BENCH_MOD == 0))
                 .select("shingle").distinct())
-    bits = bloom_bits(bloom_build(bench_sh, key_col="shingle"))
+    bits = bloom_bits(bloom_build(bench_sh))
     return stream_decontaminate(
-        spark, f"{sf_dir.rstrip('/')}/documents.parquet", bits,
-        bench_mod=BENCH_MOD)
+        spark, f"{sf_dir.rstrip('/')}/documents.parquet", bits)
 
 
 def _stream_decontaminate_sql() -> str:
     from ..operators.sketch import bloom_positions_sql
-    from .llm import BENCH_MOD, SHINGLES_CTE, TOKS_CTE
+    from ..operators.dedup import BENCH_MOD
+    from .llm import SHINGLES_CTE, TOKS_CTE
     pos = bloom_positions_sql()
     return f"""
 WITH toks AS ({TOKS_CTE}),

@@ -133,9 +133,9 @@ class ColumnMapping:
     dtype: T.DataType
 
 
-def mapping_for(name: str, partitioned: bool = True) -> list[ColumnMapping]:
-    cols = (PARTITION_COLS if partitioned else []) + _TABLE_COLUMNS[name]
-    return [ColumnMapping(c, c, t) for c, t in cols]
+def mapping_for(name: str) -> list[ColumnMapping]:
+    return [ColumnMapping(c, c, t)
+            for c, t in PARTITION_COLS + _TABLE_COLUMNS[name]]
 
 
 def apply_mapping(df: DataFrame, mapping: list[ColumnMapping]) -> DataFrame:

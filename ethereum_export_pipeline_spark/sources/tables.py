@@ -70,10 +70,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {n: load_table(spark, sf_dir, n) for n in TESTDATA_TABLES}
-
-
 def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Temp views over the corpus; idempotent per (session, sf_dir) —
     repeated catalog queries skip the 10 parquet-footer reads."""

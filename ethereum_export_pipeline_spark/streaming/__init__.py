@@ -30,6 +30,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..execution import checkpoint
 from ..session import isolated_session
 
 WINDOW_US = 600_000_000  # 10-minute tumbling windows, µs
@@ -39,6 +40,10 @@ CHAIN_BUCKET = 100  # stream_chain_counts groups blocks by number div this
 CHAIN_HEAD = 999  # stream_chain_counts aggregates blocks 0..999
 EXPORT_HEAD = 249  # stream_chain_export lands blocks 0..249
 IJ_DELAY_S = 7200  # the interval joins' watermark delay
+IJ_GAP_S = 3600  # the interval joins' click → purchase window, seconds
+WM_DELAY_S = 1800  # stream_watermark_counts' watermark delay
+SW_GAP_US = 1_800_000_000  # stream_session_window_counts' session gap, µs
+SW_DELAY_S = 1800  # stream_session_window_counts' watermark delay
 ROLLUP_RANGE = 25  # incremental_rollup partitions windows by win div this
 #: a bounded stream gets one state partition per this many input bytes
 STREAM_BYTES_PER_PARTITION = 4 << 20
@@ -68,13 +73,9 @@ def _chain_session(spark: SparkSession) -> tuple[SparkSession, bool]:
     return spark, False
 
 
-def read_stream(spark: SparkSession, path: str,
-                max_files_per_trigger: int | None = None) -> DataFrame:
+def read_stream(spark: SparkSession, path: str) -> DataFrame:
     """File-source stream over parquet, schema pinned from a static
     read (streaming sources must never infer per-batch).
-    ``max_files_per_trigger`` bounds each micro-batch's file intake —
-    production backpressure, and the lever tests use to force
-    MULTI-batch runs that exercise cross-batch state.
 
     Spark's FileStreamSource forces ``basePath`` to the given path, so
     a single .parquet FILE cannot be streamed directly; we stage a
@@ -96,10 +97,7 @@ def read_stream(spark: SparkSession, path: str,
         os.symlink(os.path.abspath(path),
                    os.path.join(staged, os.path.basename(path)))
         path = staged
-    reader = spark.readStream.schema(static.schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.parquet(path)
+    return spark.readStream.schema(static.schema).parquet(path)
 
 
 def bounded_stream_width(spark: SparkSession, path: str) -> int | None:
@@ -187,12 +185,12 @@ def stream_hopping_counts(spark: SparkSession, events_path: str) -> DataFrame:
                              width=bounded_stream_width(spark, events_path))
 
 
-def stream_watermark_counts(spark: SparkSession, events_path: str,
-                            delay_s: int = 1800) -> DataFrame:
+def stream_watermark_counts(spark: SparkSession,
+                            events_path: str) -> DataFrame:
     """APPEND-mode tumbling counts behind a watermark — the
     bounded-state recipe for infinite streams (complete mode keeps
     every window forever). A window only emits once the watermark
-    (max seen event time − `delay_s`) passes its end; rows later than
+    (max seen event time − `WM_DELAY_S`) passes its end; rows later than
     the watermark would be dropped. With availableNow the engine runs
     a final no-data micro-batch that advances the watermark and
     flushes every closed window, so the output is deterministic:
@@ -204,7 +202,7 @@ def stream_watermark_counts(spark: SparkSession, events_path: str,
     sdf = with_event_time(read_stream(spark, events_path))
     evt = sdf.select(F.expr("timestamp_micros(ts_ns div 1000)").alias("evt_ts"),
                      "event_id")
-    agg = (evt.withWatermark("evt_ts", f"{delay_s} seconds")
+    agg = (evt.withWatermark("evt_ts", f"{WM_DELAY_S} seconds")
               .groupBy(F.window("evt_ts", f"{WINDOW_US // 1_000_000} seconds")
                         .alias("w"))
               .agg(F.count(F.lit(1)).alias("n"),
@@ -216,9 +214,8 @@ def stream_watermark_counts(spark: SparkSession, events_path: str,
                              width=bounded_stream_width(spark, events_path))
 
 
-def stream_session_window_counts(spark: SparkSession, events_path: str,
-                                 gap_us: int = 1_800_000_000,
-                                 delay_s: int = 1800) -> DataFrame:
+def stream_session_window_counts(spark: SparkSession,
+                                 events_path: str) -> DataFrame:
     """Per-user session aggregation with Spark's BUILT-IN
     `session_window` — the declarative sibling of the
     applyInPandasWithState sessionizer in `streaming.sessions` (same
@@ -227,11 +224,11 @@ def stream_session_window_counts(spark: SparkSession, events_path: str,
     are pinned against each other through their oracles).
 
     Merge rule measured on 4.1 and encoded in the oracle: an event
-    within OR AT exactly `gap_us` of the previous one extends the
+    within OR AT exactly `SW_GAP_US` of the previous one extends the
     session (split strictly beyond the gap) — matching the batch
     sessionizer's `diff > gap` new-session flag. APPEND mode behind a
     watermark: a session only emits once the watermark (max event
-    time − `delay_s`, ms-truncated) passes its end (last event +
+    time − `SW_DELAY_S`, ms-truncated) passes its end (last event +
     gap), so the output is exactly the CLOSED sessions — open tails
     are withheld, which is what bounds state on an infinite stream.
     Returns (user_id, start_us, n_events, first_event, last_event).
@@ -245,10 +242,10 @@ def stream_session_window_counts(spark: SparkSession, events_path: str,
     sdf = with_event_time(read_stream(spark, events_path))
     evt = sdf.select(F.expr("timestamp_micros(ts_ns div 1000)").alias("evt_ts"),
                      "user_id", "event_id")
-    agg = (evt.withWatermark("evt_ts", f"{delay_s} seconds")
+    agg = (evt.withWatermark("evt_ts", f"{SW_DELAY_S} seconds")
               .groupBy("user_id",
                        F.session_window("evt_ts",
-                                        f"{gap_us // 1_000_000} seconds")
+                                        f"{SW_GAP_US // 1_000_000} seconds")
                         .alias("sw"))
               .agg(F.count(F.lit(1)).alias("n_events"),
                    F.min("event_id").alias("first_event"),
@@ -411,13 +408,10 @@ def stream_chain_counts(spark: SparkSession) -> DataFrame:
         agg, width=width if isolated and width < sess_w else None)
 
 
-def stream_interval_join(spark: SparkSession, events_path: str,
-                         gap_s: int = 3600,
-                         max_files_per_trigger: int | None = None
-                         ) -> DataFrame:
+def stream_interval_join(spark: SparkSession, events_path: str) -> DataFrame:
     """STREAM-STREAM inner join with watermarks and a time-interval
     condition: click events joined to the same user's purchase events
-    landing within `gap_s` after the click — the attribution join, run
+    landing within `IJ_GAP_S` after the click — the attribution join, run
     by the streaming engine. Both sides carry watermarks and the join
     condition bounds event time in both directions, so state for rows
     older than the watermark is evicted — the recipe that keeps a
@@ -431,8 +425,7 @@ def stream_interval_join(spark: SparkSession, events_path: str,
     residual evaluates post-match. Skewed hot users concentrate state
     the same way any keyed stateful op does."""
     from ..sources.tables import with_event_time
-    sdf = with_event_time(read_stream(spark, events_path,
-                                      max_files_per_trigger))
+    sdf = with_event_time(read_stream(spark, events_path))
     base = sdf.select("event_id", "user_id", "event_type",
                       F.expr("timestamp_micros(ts_ns div 1000)")
                        .alias("evt_ts"))
@@ -449,7 +442,7 @@ def stream_interval_join(spark: SparkSession, events_path: str,
     j = clicks.join(
         buys,
         F.expr(f"click_user = buy_user AND buy_ts >= click_ts AND "
-               f"buy_ts <= click_ts + INTERVAL {gap_s} SECONDS"),
+               f"buy_ts <= click_ts + INTERVAL {IJ_GAP_S} SECONDS"),
         "inner")
     out = j.select("click_id", "buy_id",
                    F.col("click_user").alias("user_id"),
@@ -459,9 +452,8 @@ def stream_interval_join(spark: SparkSession, events_path: str,
                              width=bounded_stream_width(spark, events_path))
 
 
-def stream_interval_join_outer(spark: SparkSession, events_path: str,
-                               gap_s: int = 3600,
-                               delay_s: int = IJ_DELAY_S) -> DataFrame:
+def stream_interval_join_outer(spark: SparkSession,
+                               events_path: str) -> DataFrame:
     """LEFT OUTER stream-stream interval join — the attribution join
     that also reports the NON-converting clicks (the rows an inner
     join silently drops are usually the business question). Same
@@ -470,7 +462,7 @@ def stream_interval_join_outer(spark: SparkSession, events_path: str,
     the watermark proves no matching purchase can still arrive
     (watermark past click_ts + gap — measured on 4.1: the cutoff is
     the FINAL watermark, max event time ms-truncated − delay, and
-    clicks closer than `gap_s` to it stay withheld). Emitted columns
+    clicks closer than `IJ_GAP_S` to it stay withheld). Emitted columns
     carry `matched` ∈ {0,1} and delta_us NULL for non-conversions.
 
     Scale notes: identical state shape to the inner join (both sides
@@ -485,16 +477,16 @@ def stream_interval_join_outer(spark: SparkSession, events_path: str,
                   .select(F.col("event_id").alias("click_id"),
                           F.col("user_id").alias("click_user"),
                           F.col("evt_ts").alias("click_ts"))
-                  .withWatermark("click_ts", f"{delay_s} seconds"))
+                  .withWatermark("click_ts", f"{IJ_DELAY_S} seconds"))
     buys = (base.where("event_type = 'purchase'")
                 .select(F.col("event_id").alias("buy_id"),
                         F.col("user_id").alias("buy_user"),
                         F.col("evt_ts").alias("buy_ts"))
-                .withWatermark("buy_ts", f"{delay_s} seconds"))
+                .withWatermark("buy_ts", f"{IJ_DELAY_S} seconds"))
     j = clicks.join(
         buys,
         F.expr(f"click_user = buy_user AND buy_ts >= click_ts AND "
-               f"buy_ts <= click_ts + INTERVAL {gap_s} SECONDS"),
+               f"buy_ts <= click_ts + INTERVAL {IJ_GAP_S} SECONDS"),
         "leftOuter")
     out = j.select("click_id",
                    F.col("click_user").alias("user_id"),
@@ -577,9 +569,8 @@ def incremental_rollup(spark: SparkSession, src_dir: str, dest_dir: str,
                        .where(F.col("win_range").isin(ranges)))
             # localCheckpoint breaks lineage back to dest_dir — Spark
             # refuses to overwrite a path a plan is reading from
-            out = (cur.join(new.select("win"), "win", "left_anti")
-                      .unionByName(new)
-                      .localCheckpoint(eager=True))
+            out = checkpoint(cur.join(new.select("win"), "win", "left_anti")
+                                .unionByName(new))
         else:
             if new.isEmpty():
                 return
@@ -602,8 +593,8 @@ def incremental_rollup(spark: SparkSession, src_dir: str, dest_dir: str,
     q.awaitTermination()
 
 
-def stream_decontaminate(spark: SparkSession, docs_path: str, bits: list[int],
-                         bench_mod: int = 97) -> DataFrame:
+def stream_decontaminate(spark: SparkSession, docs_path: str,
+                         bits: list[int]) -> DataFrame:
     """STATELESS streaming decontamination: documents stream in, each
     doc's distinct word n-gram shingles are built map-side as an
     ARRAY (no explode — the batch twin's exploded inverted index
@@ -618,9 +609,9 @@ def stream_decontaminate(spark: SparkSession, docs_path: str, bits: list[int],
     large the benchmark set, the query keeps ZERO state between
     micro-batches (pure projection — no watermark, no state store,
     nothing to evict), and throughput is the file-source scan rate.
-    Benchmark docs themselves (doc_id % bench_mod == 0) are excluded
+    Benchmark docs themselves (doc_id % BENCH_MOD == 0) are excluded
     from the stream: they define the filter."""
-    from ..operators.dedup import NGRAM_N
+    from ..operators.dedup import BENCH_MOD, NGRAM_N
     from ..operators.sketch import bloom_hit_pred
     sdf = read_stream(spark, docs_path)
     n = NGRAM_N  # the batch `shingles` width the benchmark filter holds
@@ -629,7 +620,7 @@ def stream_decontaminate(spark: SparkSession, docs_path: str, bits: list[int],
           f"ELSE array_distinct(transform(sequence(0, size(t) - {n}), "
           f"i -> concat_ws(' ', {joined}))) END")
     pred = bloom_hit_pred("s", bits)
-    out = (sdf.where(f"text IS NOT NULL AND doc_id % {bench_mod} != 0")
+    out = (sdf.where(f"text IS NOT NULL AND doc_id % {BENCH_MOD} != 0")
               .selectExpr("doc_id",
                           "regexp_extract_all(lower(text), '[a-z0-9]+', 0) AS t")
               .selectExpr("doc_id", f"{sh} AS sh")

@@ -221,33 +221,39 @@ def test_quality_checks_known_violations(spark):
         audit, check_ref, check_rules, check_unique)
     df = spark.createDataFrame(
         [(1, 10, "ok"), (2, -5, "ok"), (2, 3, None), (None, 7, "ok")],
-        "k long, v long, s string")
+        "o_orderkey long, v long, s string")
     got = {r.rule: r.n_violations for r in audit([
         check_rules(df, {"v_nonneg": "v >= 0",
                          "s_not_null": "s IS NOT NULL",
-                         "k_small": "k < 100"}),   # NULL k → violation
-        check_unique(df, "k"),
+                         "k_small": "o_orderkey < 100"}),  # NULL → violation
+        check_unique(df),
     ]).collect()}
     assert got == {"v_nonneg": 1, "s_not_null": 1,
                    "k_small": 1,            # unknown is not a pass
-                   "unique_k": 2}           # one dup pair + one NULL
+                   "unique_o_orderkey": 2}  # one dup pair + one NULL
     parent = spark.createDataFrame([(1,), (2,)], "k long")
-    [orph] = check_ref(df, parent, "k", "k").collect()
-    assert (orph.rule, orph.n_violations) == ("ref_k", 0)
+    [orph] = check_ref(df, parent, "o_orderkey", "k").collect()
+    assert (orph.rule, orph.n_violations) == ("ref_o_orderkey", 0)
     parent2 = spark.createDataFrame([(1,)], "k long")
-    assert check_ref(df, parent2, "k", "k").collect()[0].n_violations == 2
+    assert check_ref(df, parent2, "o_orderkey",
+                     "k").collect()[0].n_violations == 2
 
 
 def test_profile_table_known_stats(spark):
     """One-scan profiling: exact nonnull/ndv/min/max per column,
     NULLs excluded from all four statistics."""
-    from ethereum_export_pipeline_spark.operators.checks import profile_table
+    from ethereum_export_pipeline_spark.operators.checks import (
+        PROFILE_INT, PROFILE_STR, profile_table)
     df = spark.createDataFrame(
         [(1, "a"), (2, "b"), (2, None), (None, "b"), (7, "a")],
-        "k long, s string")
-    out = {r["column"]: r for r in
-           profile_table(df, int_cols=("k",), str_cols=("s",)).collect()}
-    assert (out["k"]["n_nonnull"], out["k"]["n_distinct"],
-            out["k"]["min_value"], out["k"]["max_value"]) == (4, 3, "1", "7")
-    assert (out["s"]["n_nonnull"], out["s"]["n_distinct"],
-            out["s"]["min_value"], out["s"]["max_value"]) == (4, 2, "a", "b")
+        "l_orderkey long, l_returnflag string")
+    for c in PROFILE_INT + PROFILE_STR:       # the other lineitem columns
+        if c not in df.columns:
+            df = df.withColumn(c, F.lit(0 if c in PROFILE_INT else "x"))
+    out = {r["column"]: r for r in profile_table(df).collect()}
+    assert set(out) == set(PROFILE_INT + PROFILE_STR)
+    k, s = out["l_orderkey"], out["l_returnflag"]
+    assert (k["n_nonnull"], k["n_distinct"],
+            k["min_value"], k["max_value"]) == (4, 3, "1", "7")
+    assert (s["n_nonnull"], s["n_distinct"],
+            s["min_value"], s["max_value"]) == (4, 2, "a", "b")

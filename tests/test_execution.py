@@ -41,14 +41,14 @@ def _blocks(spark):
 def _hierarchy(spark):
     vals = spark.createDataFrame(
         [(n, n * 10) for n in list(range(11)) + [20, 21]],
-        "node long, val long")
-    return graph.hierarchy_aggregates(_parents(spark), vals, rounds=4)
+        "c_custkey long, bal_cents long")
+    return graph.hierarchy_aggregates(_parents(spark), vals)
 
 
 def _bpe(spark):
     df = spark.createDataFrame([(1, "aaab aaab abab"), (2, "ab ba")],
                                "doc_id long, text string")
-    return text.bpe_train(df, rounds=4)
+    return text.bpe_train(df)
 
 
 ITERATIVE = {
@@ -56,15 +56,15 @@ ITERATIVE = {
         _edges(s).selectExpr("CAST(src AS STRING) AS src",
                              "CAST(dst AS STRING) AS dst"), iters=9),
     "triangle_counts": lambda s: graph.triangle_counts(_edges(s)),
-    "kcore_peel": lambda s: graph.kcore_peel(_edges(s), k=2, rounds=3),
-    "lpa_communities": lambda s: graph.lpa_communities(_edges(s), rounds=3),
+    "kcore_peel": lambda s: graph.kcore_peel(_edges(s)),
+    "lpa_communities": lambda s: graph.lpa_communities(_edges(s)),
     "ancestor_closure": lambda s: graph.ancestor_closure(_parents(s),
                                                          rounds=4),
     "hierarchy_aggregates": _hierarchy,
     "connected_components": lambda s: dedup.connected_components(_pairs(s)),
     "connected_components_star": lambda s: dedup.connected_components_star(
         _pairs(s)),
-    "resolve_reorgs": lambda s: reorg.resolve_reorgs(_blocks(s), max_depth=4),
+    "resolve_reorgs": lambda s: reorg.resolve_reorgs(_blocks(s)),
     "bpe_train": _bpe,
 }
 

@@ -38,25 +38,28 @@ def test_ngram_jaccard_known_value(spark):
     from ethereum_export_pipeline_spark.operators.dedup import ngram_jaccard_pairs
     # doc1: shingles {abc, bcd, cde}; doc2: {abc, bcd, cdx} → J = 2/4
     df = docs(spark, [(1, "a b c d e"), (2, "a b c d x")])
-    [row] = ngram_jaccard_pairs(df, threshold=0.4).collect()
+    [row] = ngram_jaccard_pairs(df).collect()
     assert (row.doc_a, row.doc_b, row.n_common) == (1, 2, 2)
     assert row.jaccard == pytest.approx(0.5)
 
 
 def test_ngram_df_cut_drops_hot_shingles(spark):
-    from ethereum_export_pipeline_spark.operators.dedup import ngram_jaccard_pairs
-    # every doc shares the hot shingle "t t t"; with the cut at 2 the
-    # hot shingle is dropped and no candidate pairs survive
+    from ethereum_export_pipeline_spark.operators.dedup import (
+        DEFAULT_MAX_DF, ngram_jaccard_pairs)
+    # every doc shares the shingle "t t t": in more than DEFAULT_MAX_DF
+    # docs it is hot and dropped, so no candidate pairs survive; in 5
+    # docs it is kept and pairs all of them
+    hot = docs(spark, [(i, "t t t") for i in range(DEFAULT_MAX_DF + 1)])
+    assert ngram_jaccard_pairs(hot).count() == 0
     df = docs(spark, [(i, "t t t") for i in range(5)])
-    assert ngram_jaccard_pairs(df, threshold=0.1, max_shingle_df=2).count() == 0
-    assert ngram_jaccard_pairs(df, threshold=0.1, max_shingle_df=None).count() == 10
+    assert ngram_jaccard_pairs(df).count() == 10
 
 
 def test_minhash_finds_identical_docs(spark):
     from ethereum_export_pipeline_spark.operators.dedup import minhash_lsh_pairs
     text = "the quick brown fox jumps over the lazy dog again and again"
     df = docs(spark, [(1, text), (2, text), (3, "completely other words here")])
-    [row] = minhash_lsh_pairs(df, threshold=0.9).collect()
+    [row] = minhash_lsh_pairs(df).collect()
     assert (row.doc_a, row.doc_b) == (1, 2)
     assert row.jaccard == pytest.approx(1.0)
 
@@ -127,6 +130,13 @@ def embs(spark, rows):
         "vec_id long, embedding array<float>")
 
 
+def pad64(v):
+    """`v` zero-padded to the operators' 64 dims: cosines, quantized
+    dots and LSH projections are those of `v` itself."""
+    from ethereum_export_pipeline_spark.operators.similarity import EMB_DIM
+    return list(v) + [0.0] * (EMB_DIM - len(v))
+
+
 def test_brute_force_topk_ordering(spark):
     from ethereum_export_pipeline_spark.operators.similarity import brute_force_topk
     base = [1.0, 0.0, 0.0, 0.0]
@@ -134,14 +144,14 @@ def test_brute_force_topk_ordering(spark):
     far = [0.0, 1.0, 0.0, 0.0]
     df = embs(spark, [(0, base), (100, near), (200, far)])
     got = [(r.neighbor_id, r.rank) for r in
-           brute_force_topk(df, k=2, query_pred="vec_id = 0").collect()]
+           brute_force_topk(df).where("query_id = 0").collect()]
     assert got == [(100, 1), (200, 2)]
 
 
 def test_lsh_topk_dim_guard_filters_bad_rows(spark):
     from ethereum_export_pipeline_spark.operators.similarity import lsh_topk
-    df = embs(spark, [(0, [1.0] * 8), (1, [1.0] * 8), (2, [1.0] * 3)])
-    out = lsh_topk(df, k=5, query_pred="vec_id = 0", dim=8, n_planes=4).collect()
+    df = embs(spark, [(0, [1.0] * 64), (1, [1.0] * 64), (2, [1.0] * 3)])
+    out = lsh_topk(df, k=5, n_bands=1, query_pred="vec_id = 0").collect()
     ids = {r.neighbor_id for r in out}
     assert 2 not in ids            # wrong width filtered, not bucket-0'd
     assert ids == {1}
@@ -154,10 +164,9 @@ def test_embedding_neardup_pairs_threshold(spark):
     a = [1.0, 0.0, 0.0, 0.0]
     b = [0.999, 0.01, 0.0, 0.0]
     c = [-1.0, 0.0, 0.0, 0.0]
-    df = embs(spark, [(1, a), (2, b), (3, c)])
+    df = embs(spark, [(1, pad64(a)), (2, pad64(b)), (3, pad64(c))])
     pairs = {(r.id_a, r.id_b) for r in
-             embedding_neardup_pairs(df, threshold=0.99, dim=4,
-                                     n_planes=4).collect()}
+             embedding_neardup_pairs(df, n_bands=1).collect()}
     assert pairs == {(1, 2)}
 
 
@@ -222,26 +231,16 @@ def test_asof_join_backward_semantics(spark):
     from ethereum_export_pipeline_spark.operators.joins import asof_join
     left = spark.createDataFrame(
         [(1, 10, 100), (2, 10, 250), (3, 20, 50), (4, 20, 300)],
-        "id long, k long, t long")
+        "id long, user_id long, ts_us long")
     right = spark.createDataFrame(
         [(10, 100, 7), (10, 200, 8), (20, 301, 9)],
-        "k long, t long, v long")
+        "user_id long, ts_us long, v long")
     out = {r.id: r.v_r for r in
-           asof_join(left, right, key="k", time="t", payload=["v"]).collect()}
+           asof_join(left, right, payload=["v"]).collect()}
     assert out[1] == 7      # equal time counts (<=)
     assert out[2] == 8      # latest preceding, not first
     assert out[3] is None   # nothing precedes
     assert out[4] is None   # right row is later
-
-
-def test_asof_join_tiebreak_dedupes_right(spark):
-    from ethereum_export_pipeline_spark.operators.joins import asof_join
-    left = spark.createDataFrame([(1, 5, 100)], "id long, k long, t long")
-    right = spark.createDataFrame(
-        [(5, 100, 1, 70), (5, 100, 2, 80)], "k long, t long, seq long, v long")
-    [r] = asof_join(left, right, key="k", time="t", payload=["v"],
-                    tiebreak="seq").collect()
-    assert r.v_r == 80      # greatest tiebreak wins deterministically
 
 
 def test_multiband_lsh_recall_dominates_single_band(spark):
@@ -251,11 +250,9 @@ def test_multiband_lsh_recall_dominates_single_band(spark):
         embedding_neardup_pairs)
     df = (spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet"))
     one = {(r.id_a, r.id_b) for r in
-           embedding_neardup_pairs(df, threshold=0.2, n_planes=8,
-                                   n_bands=1).collect()}
+           embedding_neardup_pairs(df, n_bands=1).collect()}
     two = {(r.id_a, r.id_b) for r in
-           embedding_neardup_pairs(df, threshold=0.2, n_planes=8,
-                                   n_bands=2).collect()}
+           embedding_neardup_pairs(df, n_bands=2).collect()}
     assert one <= two
     assert len(two) >= len(one)
 
@@ -264,22 +261,22 @@ def test_resize_media_real_pixels(spark):
     import numpy as np
     from ethereum_export_pipeline_spark.operators.multimodal import (
         decode_image, encode_netpbm, resize_media)
-    # 2×2 RGB quadrants → upscale 4×4: nearest-neighbor must tile each
-    # source pixel into a 2×2 block
+    # 2×2 RGB quadrants → upscale RESIZE_PX² (64×64): nearest-neighbor
+    # must tile each source pixel into a 32×32 block
     px = np.array([[[255, 0, 0], [0, 255, 0]],
                    [[0, 0, 255], [9, 9, 9]]], dtype=np.uint8)
     media = spark.createDataFrame(
         [Row(media_id=1, payload=bytes(encode_netpbm(px))),
          Row(media_id=2, payload=None)],
         "media_id long, payload binary")
-    got = {r.media_id: r for r in resize_media(media, 4, 4).collect()}
+    got = {r.media_id: r for r in resize_media(media).collect()}
     r1 = got[1]
-    assert (r1.width, r1.height) == (4, 4)
+    assert (r1.width, r1.height) == (64, 64)
     w, h, c, out = decode_image(bytes(r1.payload))
-    assert (w, h, c) == (4, 4, 3)
-    assert (out[0, 0] == [255, 0, 0]).all() and (out[1, 1] == [255, 0, 0]).all()
-    assert (out[0, 3] == [0, 255, 0]).all() and (out[3, 0] == [0, 0, 255]).all()
-    assert (out[3, 3] == [9, 9, 9]).all()
+    assert (w, h, c) == (64, 64, 3)
+    assert (out[0, 0] == [255, 0, 0]).all() and (out[31, 31] == [255, 0, 0]).all()
+    assert (out[0, 32] == [0, 255, 0]).all() and (out[32, 0] == [0, 0, 255]).all()
+    assert (out[63, 63] == [9, 9, 9]).all()
     assert got[2].payload is None and got[2].n_bytes == 0
 
 
@@ -301,7 +298,7 @@ def test_sample_frames_demuxes_and_decodes(spark):
     import numpy as np
     from ethereum_export_pipeline_spark.operators.multimodal import (
         encode_netpbm, sample_frames)
-    # 3 frames with distinct constant fills: n_frames=2 must pick
+    # 3 frames with distinct constant fills: SAMPLE_FRAMES=2 must pick
     # src frames 0 and (1*3)//2 = 1 and sum the DECODED pixels
     mk = lambda v: encode_netpbm(np.full((2, 2, 3), v, np.uint8))
     stream = mk(1) + mk(2) + mk(3)
@@ -311,13 +308,13 @@ def test_sample_frames_demuxes_and_decodes(spark):
          Row(media_id=3, payload=b"garbage")],
         "media_id long, payload binary")
     got = sorted((r.media_id, r.sample_idx, r.src_frame, r.ch_sum)
-                 for r in sample_frames(media, n_frames=2).collect())
+                 for r in sample_frames(media).collect())
     assert got == [(1, 0, 0, [4, 4, 4]),      # frame 0: 4 px × 1
                    (1, 1, 1, [8, 8, 8])]      # frame 1: 4 px × 2
     # short clip: every frame sampled
     short = spark.createDataFrame([Row(media_id=9, payload=bytes(mk(5)))],
                                   "media_id long, payload binary")
-    [only] = sample_frames(short, n_frames=4).collect()
+    [only] = sample_frames(short).collect()
     assert (only.sample_idx, only.src_frame, only.ch_sum) == (0, 0, [20, 20, 20])
 
 
@@ -326,14 +323,15 @@ def test_ivf_cells_cluster_similar_vectors(spark):
         ivf_topk, train_ivf_centroids)
     import random
     rng = random.Random(7)
-    # two tight clusters around opposite corners
-    mk = lambda base: [base + rng.uniform(-0.01, 0.01) for _ in range(8)]
+    # two tight clusters around opposite corners; the queries
+    # (vec_id < 10) are cluster 0..4
+    mk = lambda base: [base + rng.uniform(-0.01, 0.01) for _ in range(64)]
     rows = [(i, mk(1.0)) for i in range(5)] + [(10 + i, mk(-1.0)) for i in range(5)]
     df = embs(spark, rows)
     cents = train_ivf_centroids([v for _, v in rows], n_cells=2)
-    out = ivf_topk(df, cents, k=3, query_pred="vec_id = 0", dim=8)
-    ids = {r.neighbor_id for r in out.collect()}
-    assert ids and ids <= {1, 2, 3, 4}   # only same-cluster candidates
+    out = ivf_topk(df, cents).collect()
+    assert {r.query_id for r in out} == {0, 1, 2, 3, 4}
+    assert all(r.neighbor_id in range(5) for r in out)   # same cluster only
 
 
 def test_top_terms_and_corpus_stats(spark):
@@ -341,7 +339,7 @@ def test_top_terms_and_corpus_stats(spark):
         corpus_stats, top_terms)
     df = docs(spark, [(1, "b a a b b c"), (2, "x x"), (3, "x x")])
     terms = {(r.doc_id, r.rank): (r.term, r.n)
-             for r in top_terms(df, k=2).collect()}
+             for r in top_terms(df).collect()}
     assert terms[(1, 1)] == ("b", 3)
     assert terms[(1, 2)] == ("a", 2)   # ties broken lexicographically
     assert terms[(2, 1)] == ("x", 2)
@@ -384,10 +382,6 @@ def test_hash_split_deterministic_and_ratioed(spark):
     assert a == b                                   # reproducible
     frac = sum(1 for s in a.values() if s == "train") / len(a)
     assert 0.85 <= frac <= 0.95                     # ~90/10
-    # a different salt reshuffles the assignment
-    c = {r.doc_id: r.split
-         for r in hash_split(docs, salt="split-v2").collect()}
-    assert c != a
 
 
 def test_pii_scrub_known_answers(spark):
@@ -428,22 +422,23 @@ def test_repetition_stats_known_answers(spark):
 
 def test_chunk_tokens_known_answers(spark):
     from ethereum_export_pipeline_spark.operators.text import chunk_tokens
+    # CHUNK_TOKENS=64-token chunks every CHUNK_STRIDE=48 tokens
     docs = spark.createDataFrame(
-        [(1, " ".join(f"w{i}" for i in range(10))),  # 10 toks: chunks @0,4,8
-         (2, "a b"),                                  # 2 toks: one chunk
-         (3, ""),                                     # none
+        [(1, " ".join(f"w{i}" for i in range(150))),  # chunks @0,48,96,144
+         (2, "a b"),                                   # 2 toks: one chunk
+         (3, ""),                                      # none
          (4, None)],
         "doc_id long, text string")
-    out = chunk_tokens(docs, chunk=5, stride=4).collect()
+    out = chunk_tokens(docs).collect()
     got = {(r.doc_id, r.chunk_idx): (r.chunk_start, r.n_chunk_tokens)
            for r in out}
-    assert got == {(1, 0): (0, 5), (1, 1): (4, 5), (1, 2): (8, 2),
-                   (2, 0): (0, 2)}
+    assert got == {(1, 0): (0, 64), (1, 1): (48, 64), (1, 2): (96, 54),
+                   (1, 3): (144, 6), (2, 0): (0, 2)}
     # identical token windows fingerprint identically, distinct differ
     fps = {(r.doc_id, r.chunk_idx): r.chunk_fp for r in out}
     assert len(set(fps.values())) == len(fps)  # all distinct here
     again = {(r.doc_id, r.chunk_idx): r.chunk_fp
-             for r in chunk_tokens(docs, chunk=5, stride=4).collect()}
+             for r in chunk_tokens(docs).collect()}
     assert fps == again                        # deterministic
 
 
@@ -452,8 +447,8 @@ def test_ivfpq_duplicate_is_nearest_by_adc(spark):
     from ethereum_export_pipeline_spark.operators.similarity import (
         ivfpq_topk, train_ivf_centroids, train_pq_codebooks)
     rng = np.random.RandomState(7)
-    dim, m = 8, 8
-    # two well-separated clusters; vec 0 has an exact duplicate (id 5)
+    dim = 64
+    # two well-separated clusters; vec 0 has an exact duplicate (id 10)
     a = rng.uniform(0.8, 1.2, (5, dim))
     b = rng.uniform(-1.2, -0.8, (5, dim))
     vecs = np.vstack([a, b]).tolist()
@@ -461,9 +456,9 @@ def test_ivfpq_duplicate_is_nearest_by_adc(spark):
     rows = [(i, [float(x) for x in v]) for i, v in enumerate(vecs)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     cents = train_ivf_centroids(vecs, n_cells=2)
-    books = train_pq_codebooks(vecs, m=m, k=4)
-    out = ivfpq_topk(df, cents, books, k=1, query_pred="vec_id = 0", dim=dim)
-    top = out.collect()
+    books = train_pq_codebooks(vecs)
+    top = ivfpq_topk(df, cents, books).where(
+        "query_id = 0 AND rank = 1").collect()
     assert len(top) == 1
     # the exact duplicate shares every PQ code -> minimal ADC distance
     assert top[0].neighbor_id == 10
@@ -473,12 +468,15 @@ def test_connected_components_raises_on_nonconvergence(spark, request):
     import pytest as _pytest
     from ethereum_export_pipeline_spark.operators.dedup import (
         connected_components)
-    # a 5-node path graph has diameter 4: max_iter=1 cannot reach the
-    # fixpoint and must raise rather than return partial labels
+    # a 41-node path graph has diameter 40: CC_MAX_ITER (20) rounds
+    # cannot reach the fixpoint and must raise rather than return
+    # partial labels
+    long_chain = spark.createDataFrame(
+        [(i, i + 1) for i in range(40)], "doc_a long, doc_b long")
+    with _pytest.raises(RuntimeError, match="did not converge"):
+        connected_components(long_chain)
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(5)], "doc_a long, doc_b long")
-    with _pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(chain, max_iter=1)
     # reliable-checkpoint path produces the same fixpoint
     request.getfixturevalue("reliable_checkpoint_dir")
     got = {r.doc_id: r.cluster_id
@@ -495,10 +493,10 @@ def test_tfidf_ubiquitous_term_sinks(spark):
     df = docs(spark, [(1, "rare filler pad1"), (2, "filler pad2"),
                       (3, "filler pad3")])
     out = {(r.term): r.rank for r in
-           tfidf_top_terms(df, k=10).where("doc_id = 1").collect()}
+           tfidf_top_terms(df).where("doc_id = 1").collect()}
     assert out["rare"] < out["filler"]
     row = {r.term: r for r in
-           tfidf_top_terms(df, k=10).where("doc_id = 1").collect()}
+           tfidf_top_terms(df).where("doc_id = 1").collect()}
     assert row["rare"].tf == 1 and row["rare"].df == 1
     assert row["filler"].df == 3
     # linear idf: tfidf = tf * n_docs / df
@@ -507,24 +505,24 @@ def test_tfidf_ubiquitous_term_sinks(spark):
 
 def test_pack_sequences_contiguous_and_multi_bucket(spark):
     from ethereum_export_pipeline_spark.operators.text import pack_sequences
-    rows = [(i, " ".join(["tok"] * (3 * i + 1))) for i in range(10)]
+    from ethereum_export_pipeline_spark.operators.text import (
+        PACK_BUCKET, PACK_SEQ_LEN)
+    # ids spread over 5 PACK_BUCKETs force the distributed two-level
+    # prefix-sum path
+    step = PACK_BUCKET // 2
+    rows = [(i * step, " ".join(["tok"] * (60 * i + 1))) for i in range(10)]
     df = docs(spark, rows)
-    # bucket=3 forces the distributed two-level prefix-sum path
-    out = sorted(pack_sequences(df, seq_len=7, bucket=3).collect(),
-                 key=lambda r: r.doc_id)
+    out = sorted(pack_sequences(df).collect(), key=lambda r: r.doc_id)
     # the packed stream is contiguous: each doc starts where the
     # previous one ended, starting at 0
+    n = PACK_SEQ_LEN
     expect_start = 0
     for r in out:
         assert r.global_start == expect_start
-        assert r.bin_id == r.global_start // 7
-        assert r.bin_offset == r.global_start % 7
-        assert r.n_bins == (r.global_start + r.n_tokens - 1) // 7 - r.bin_id + 1
+        assert r.bin_id == r.global_start // n
+        assert r.bin_offset == r.global_start % n
+        assert r.n_bins == (r.global_start + r.n_tokens - 1) // n - r.bin_id + 1
         expect_start += r.n_tokens
-    # single-bucket path agrees with the multi-bucket path
-    one = sorted(pack_sequences(df, seq_len=7, bucket=1000).collect(),
-                 key=lambda r: r.doc_id)
-    assert [tuple(r) for r in one] == [tuple(r) for r in out]
 
 
 def test_mix_sample_deterministic_stratified(spark):
@@ -564,7 +562,7 @@ def test_decontaminate_flags_benchmark_overlap(spark):
     df = docs(spark, [(0, "alpha beta gamma delta"),
                       (1, "alpha beta gamma zulu xray"),
                       (2, "one two three four")])
-    got = {r.doc_id: r for r in decontaminate(df, bench_mod=97).collect()}
+    got = {r.doc_id: r for r in decontaminate(df).collect()}
     assert set(got) == {1, 2}  # benchmark docs are not scored
     # doc1 shingles: {abg, bgz, gzx} — abg ∈ bench{abg, bgd}
     assert (got[1].n_shingles, got[1].n_hits, got[1].contaminated) == (3, 1, 1)
@@ -595,7 +593,7 @@ def test_duplicated_sentences_cross_doc_only(spark):
         (2, f"{boiler}.  {boiler}. Another unique body sentence."),
         (3, "No shared content in this one at all."),
     ])
-    [r] = duplicated_sentences(df, min_chars=20).collect()
+    [r] = duplicated_sentences(df).collect()
     import hashlib
     assert r.sent_key == hashlib.md5(boiler.lower().encode()).hexdigest()
     # 3 occurrences (doc2 has it twice) across 2 distinct docs
@@ -626,14 +624,14 @@ def test_crossmodal_agreement_identical_and_orthogonal(spark):
     text = "the quick brown fox jumps over the lazy dog again and again"
     d = docs(spark, [(0, text), (1, text), (2, text)])
     from ethereum_export_pipeline_spark.operators.dedup import minhash_lsh_pairs
-    pairs = minhash_lsh_pairs(d, threshold=0.9)  # (0,1),(0,2),(1,2)
+    pairs = minhash_lsh_pairs(d)  # (0,1),(0,2),(1,2)
     dim = 8
     e1 = [1.0] + [0.0] * (dim - 1)
     e2 = [0.0, 1.0] + [0.0] * (dim - 2)
     emb = spark.createDataFrame(
         [(0, e1), (1, e1), (2, e2)], "vec_id long, embedding array<float>")
     got = {(r.doc_a, r.doc_b): r for r in
-           crossmodal_agreement(pairs, emb, cos_threshold=0.3).collect()}
+           crossmodal_agreement(pairs, emb).collect()}
     assert set(got) == {(0, 1), (0, 2), (1, 2)}
     assert got[(0, 1)].cosine == pytest.approx(1.0)  # same vector
     assert got[(0, 1)].emb_agrees == 1
@@ -777,7 +775,7 @@ def test_star_contraction_matches_label_propagation(spark):
 
 def test_star_contraction_handles_long_chain(spark):
     """The case min-label propagation cannot: a 300-node chain has
-    diameter 300 (label propagation raises within max_iter=20), but
+    diameter 300 (label propagation raises within CC_MAX_ITER=20), but
     star contraction halves component height per round."""
     import pytest as _pytest
     from ethereum_export_pipeline_spark.operators.dedup import (
@@ -786,7 +784,7 @@ def test_star_contraction_handles_long_chain(spark):
     pairs = spark.createDataFrame([(i, i + 1) for i in range(n)],
                                   "doc_a long, doc_b long")
     with _pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(pairs, max_iter=20)
+        connected_components(pairs)
     got = {r.doc_id: r.cluster_id
            for r in connected_components_star(pairs).collect()}
     assert got == {i: 0 for i in range(n + 1)}
@@ -798,15 +796,15 @@ def test_substring_spans_known_answer(spark):
     from ethereum_export_pipeline_spark.operators.dedup import (
         substring_dup_spans)
     # 40-char shared prefix between docs 1 and 2; doc 3 unique;
-    # doc 4 shorter than the gram; gram_len=10.
+    # doc 4 shorter than the gram; SUBSTR_GRAM_LEN=20.
     shared = "ABCDEFGHIJKLMNOPQRSTUVWXYZ0123456789abcd"   # 40 chars
     df = docs(spark, [(1, shared + "-tail-one-xxxxx"),
                       (2, shared + "+tail-two-yyyyy"),
                       (3, "completely different text here!!"),
                       (4, "short"), (5, None)])
     out = {r.doc_id: r for r in
-           substring_dup_spans(df, gram_len=10).collect()}
-    # every 10-gram inside the 40-char prefix occurs in both docs →
+           substring_dup_spans(df).collect()}
+    # every 20-gram inside the 40-char prefix occurs in both docs →
     # one merged span of exactly 40 chars each
     for d in (1, 2):
         assert out[d].n_dup_spans == 1
@@ -820,10 +818,10 @@ def test_substring_spans_known_answer(spark):
 def test_substring_spans_self_repetition_and_merge(spark):
     from ethereum_export_pipeline_spark.operators.dedup import (
         substring_dup_spans)
-    # one doc, periodic text: "0123456789" * 4 — every 10-gram occurs
+    # one doc, periodic text: "0123456789" * 4 — every 20-gram occurs
     # at >= 2 positions within the SAME doc → whole doc is one span
     df = docs(spark, [(1, "0123456789" * 4)])
-    r = substring_dup_spans(df, gram_len=10).collect()[0]
+    r = substring_dup_spans(df).collect()[0]
     assert r.n_dup_spans == 1 and r.dup_chars == 40
     assert r.dup_frac_ppm == 1_000_000
 
@@ -831,13 +829,13 @@ def test_substring_spans_self_repetition_and_merge(spark):
 def test_substring_spans_two_disjoint_islands(spark):
     from ethereum_export_pipeline_spark.operators.dedup import (
         substring_dup_spans)
-    a, b = "AAAAAAAAAA", "BBBBBBBBBB"        # two shared 10-grams
+    a, b = "A" * 20, "B" * 20                # two shared 20-grams
     gap = "-x1-y2-z3-q4-w5-e6-r7-"           # 22 unique chars between
     df = docs(spark, [(1, a + gap + b), (2, a + "####unique####" + b)])
     r = {x.doc_id: x for x in
-         substring_dup_spans(df, gram_len=10).collect()}
-    # A-run and B-run each duplicated, separated by > gram_len → two
-    # islands of >= 10 chars each (runs of a repeated char self-match,
+         substring_dup_spans(df).collect()}
+    # A-run and B-run each duplicated, separated by > SUBSTR_GRAM_LEN
+    # → two islands of >= 20 chars each (runs of a repeated char self-match,
     # so the island extends across the whole run, not past the gap)
     assert r[1].n_dup_spans == 2
     assert r[2].n_dup_spans == 2
@@ -897,8 +895,7 @@ def test_kcore_triangle_survives_tail_peels(spark):
     # triangle 1-2-3 with a pendant path 3-4-5: peeling k=2 removes 5
     # (deg 1) then 4 (deg 1 after 5 leaves); the triangle stays intact
     out = {r.node: r for r in kcore_peel(
-        _edges(spark, [(1, 2), (2, 3), (1, 3), (3, 4), (4, 5)]),
-        k=2, rounds=3).collect()}
+        _edges(spark, [(1, 2), (2, 3), (1, 3), (3, 4), (4, 5)])).collect()}
     assert [out[n].in_core for n in (1, 2, 3)] == [1, 1, 1]
     assert [out[n].core_deg for n in (1, 2, 3)] == [2, 2, 2]
     assert [out[n].in_core for n in (4, 5)] == [0, 0]
@@ -906,26 +903,27 @@ def test_kcore_triangle_survives_tail_peels(spark):
 
 
 def test_kcore_cascade_needs_rounds(spark):
-    from ethereum_export_pipeline_spark.operators.graph import kcore_peel
-    # pure path 1-2-3-4-5-6 at k=2 peels entirely, from both ends
-    # inward — depth 3 > 1 round, exactly 0 survivors with enough
-    # rounds, and the fixed-round contract leaves the middle edge
-    # alive after round 1 (both endpoints still saw deg 2)
-    path = [(i, i + 1) for i in range(1, 6)]
-    full = kcore_peel(_edges(spark, path), k=2, rounds=3)
+    from ethereum_export_pipeline_spark.operators.graph import (
+        KCORE_ROUNDS, kcore_peel)
+    # a pure path at k=2 peels from both ends inward, one node per end
+    # per round: an 8-node path is gone within KCORE_ROUNDS (4), and
+    # the fixed-round contract leaves the middle 4 of a 12-node path
+    # alive (their degrees were still 2 in every round)
+    assert KCORE_ROUNDS == 4
+    short = [(i, i + 1) for i in range(1, 8)]
+    full = kcore_peel(_edges(spark, short))
     assert full.where("in_core = 1").count() == 0
-    one = kcore_peel(_edges(spark, path), k=2, rounds=1)
-    assert one.where("in_core = 1").count() == 4   # 2,3,4,5 remain
-    two = kcore_peel(_edges(spark, path), k=2, rounds=2)
-    assert two.where("in_core = 1").count() == 2   # 3,4 remain
+    long = [(i, i + 1) for i in range(1, 12)]
+    part = kcore_peel(_edges(spark, long))
+    assert sorted(r.node for r in part.where("in_core = 1").collect()) == [
+        5, 6, 7, 8]
 
 
 def test_kcore_dedup_insensitive_to_direction_and_self_loops(spark):
     from ethereum_export_pipeline_spark.operators.graph import kcore_peel
     a = kcore_peel(_edges(spark, [(1, 2), (2, 1), (1, 1), (2, 3),
-                                  (1, 3)]), k=2, rounds=2)
-    b = kcore_peel(_edges(spark, [(1, 2), (2, 3), (1, 3)]),
-                   k=2, rounds=2)
+                                  (1, 3)]))
+    b = kcore_peel(_edges(spark, [(1, 2), (2, 3), (1, 3)]))
     assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
 
 
@@ -948,34 +946,36 @@ def test_fuzzy_pairs_blocking_and_threshold(spark):
 
 
 def test_fuzzy_pairs_hot_block_cap(spark):
-    from ethereum_export_pipeline_spark.operators.joins import fuzzy_pairs
+    from ethereum_export_pipeline_spark.operators.joins import (
+        FUZZY_MAX_BLOCK, fuzzy_pairs)
     from pyspark.sql import Row
-    rows = [Row(id=i, name=f"aa{i:03d}") for i in range(50)]
+    # block "aa" holds FUZZY_MAX_BLOCK + 1 rows and is dropped; block
+    # "bb" is small and pairs
+    rows = ([Row(id=i, name=f"aa{i:05d}") for i in range(FUZZY_MAX_BLOCK + 1)]
+            + [Row(id=10**6 + i, name=f"bb{i:03d}") for i in range(50)])
     df = spark.createDataFrame(rows, "id long, name string")
-    capped = fuzzy_pairs(df, F.expr("substr(name, 1, 2)"), max_block=10)
-    assert capped.count() == 0               # 50-row block dropped
-    free = fuzzy_pairs(df, F.expr("substr(name, 1, 2)"), max_block=None)
-    assert free.count() > 0
+    out = fuzzy_pairs(df, F.expr("substr(name, 1, 2)")).collect()
+    assert out and all(r.name_a.startswith("bb") for r in out)
 
 
 # ---------------------------------------------- weighted sampling
 
 def test_weighted_sample_deterministic_and_proportional(spark):
     from ethereum_export_pipeline_spark.operators.text import (
-        PPB, weighted_sample)
+        WSAMPLE_PPB, weighted_sample)
     from pyspark.sql import Row
     rows = ([Row(doc_id=i, n_chars=10) for i in range(500)]
             + [Row(doc_id=i, n_chars=90) for i in range(500, 1000)])
     df = spark.createDataFrame(rows, "doc_id long, n_chars long")
-    a = weighted_sample(df, target_ppb=200_000_000)
-    b = weighted_sample(df, target_ppb=200_000_000)
+    a = weighted_sample(df)
+    b = weighted_sample(df)
     sa = sorted(map(tuple, a.collect()))
     assert sa == sorted(map(tuple, b.collect()))   # same salt → same rows
-    # mean w = 50; p(light) = 10*0.2/50 = 4%, p(heavy) = 36%
+    # mean w = 50; p(light) = 10*0.1/50 = 2%, p(heavy) = 18%
     light = sum(1 for d, w, p in sa if w == 10)
     heavy = sum(1 for d, w, p in sa if w == 90)
-    assert {p for d, w, p in sa if w == 10} == {10 * 200_000_000 // 50}
-    assert {p for d, w, p in sa if w == 90} == {90 * 200_000_000 // 50}
+    assert {p for d, w, p in sa if w == 10} == {10 * WSAMPLE_PPB // 50}
+    assert {p for d, w, p in sa if w == 90} == {90 * WSAMPLE_PPB // 50}
     assert heavy > 4 * light                       # 9x expected ratio
 
 
@@ -983,11 +983,12 @@ def test_weighted_sample_cap_and_exclusions(spark):
     from ethereum_export_pipeline_spark.operators.text import (
         PPB, weighted_sample)
     from pyspark.sql import Row
-    rows = [Row(doc_id=1, n_chars=10**9), Row(doc_id=2, n_chars=0),
-            Row(doc_id=3, n_chars=None), Row(doc_id=4, n_chars=1)]
+    # doc 1 weighs ~11× the mean: past the 10% target it is capped
+    rows = ([Row(doc_id=1, n_chars=10**9), Row(doc_id=2, n_chars=0),
+             Row(doc_id=3, n_chars=None)]
+            + [Row(doc_id=i, n_chars=1) for i in range(4, 14)])
     df = spark.createDataFrame(rows, "doc_id long, n_chars long")
-    out = {r.doc_id: r for r in
-           weighted_sample(df, target_ppb=500_000_000).collect()}
+    out = {r.doc_id: r for r in weighted_sample(df).collect()}
     assert out[1].p_ppb == PPB                     # capped → always kept
     assert 2 not in out and 3 not in out           # zero/null excluded
 
@@ -1002,10 +1003,9 @@ def test_semdedup_cells_greedy_survivor(spark):
     a = [1.0, 0.0, 0.0, 0.0]
     a2 = [0.99, 0.01, 0.0, 0.0]
     b = [0.0, 1.0, 0.0, 0.0]
-    df = embs(spark, [(1, a), (2, a2), (3, b)])
-    cents = [[10_000, 0, 0, 0], [0, 10_000, 0, 0]]   # quantized scale
-    out = {r.vec_id: r for r in
-           semdedup_cells(df, cents, threshold=0.9, dim=4).collect()}
+    df = embs(spark, [(1, pad64(a)), (2, pad64(a2)), (3, pad64(b))])
+    cents = [[10_000] + [0] * 63, [0, 10_000] + [0] * 62]   # quantized
+    out = {r.vec_id: r for r in semdedup_cells(df, cents).collect()}
     assert out[1].keep == 1 and out[1].n_dups == 1
     assert out[2].keep == 0 and out[2].n_dups == 1   # dropped by 1
     assert out[3].keep == 1 and out[3].n_dups == 0
@@ -1017,17 +1017,15 @@ def test_semdedup_cells_cross_cell_pairs_never_compared(spark):
         semdedup_cells)
     # identical vectors forced into DIFFERENT cells never pair — the
     # recall cost of cell partitioning (documented, by design)
-    v = [1.0, 1.0, 0.0, 0.0]
+    v = pad64([1.0, 1.0])
     df = embs(spark, [(1, v), (2, v)])
-    cents = [[10_000, 9_999, 0, 0], [9_999, 10_000, 0, 0]]
-    out = semdedup_cells(df, cents, threshold=0.5, dim=4).collect()
+    cents = [[10_000, 9_999] + [0] * 62, [9_999, 10_000] + [0] * 62]
+    out = semdedup_cells(df, cents).collect()
     # both land in cell argmin — same distances → tie broken to first
     # centroid for BOTH (deterministic), so they DO pair here; instead
     # separate them explicitly:
-    df2 = embs(spark, [(1, [1.0, 0.9, 0.0, 0.0]),
-                       (2, [0.9, 1.0, 0.0, 0.0])])
-    out2 = {r.vec_id: r for r in
-            semdedup_cells(df2, cents, threshold=0.5, dim=4).collect()}
+    df2 = embs(spark, [(1, pad64([1.0, 0.9])), (2, pad64([0.9, 1.0]))])
+    out2 = {r.vec_id: r for r in semdedup_cells(df2, cents).collect()}
     assert out2[1].cell != out2[2].cell
     assert out2[1].keep == 1 and out2[2].keep == 1   # never compared
     assert all(r.keep == 0 or r.n_dups >= 0 for r in out)
@@ -1043,7 +1041,7 @@ def test_stratified_reservoir_exact_k_and_deterministic(spark):
             + [Row(doc_id=i, source="b") for i in range(40, 43)]
             + [Row(doc_id=99, source=None)])
     df = spark.createDataFrame(rows, "doc_id long, source string")
-    out = stratified_reservoir(df, k=5).collect()
+    out = stratified_reservoir(df).collect()
     by_src = {}
     for r in out:
         by_src.setdefault(r.stratum, []).append((r.pick, r.doc_id))
@@ -1051,11 +1049,8 @@ def test_stratified_reservoir_exact_k_and_deterministic(spark):
     assert len(by_src["b"]) == 3                    # stratum smaller than k
     assert sorted(p for p, _ in by_src["a"]) == [1, 2, 3, 4, 5]
     assert all(r.stratum is not None for r in out)  # NULL stratum dropped
-    again = stratified_reservoir(df, k=5).collect()
+    again = stratified_reservoir(df).collect()
     assert sorted(map(tuple, out)) == sorted(map(tuple, again))
-    redraw = stratified_reservoir(df, k=5, salt="other").collect()
-    assert {r.doc_id for r in redraw if r.stratum == "a"} != \
-           {r.doc_id for r in out if r.stratum == "a"}
 
 
 # ------------------------------------------------------ BPE training
@@ -1065,10 +1060,11 @@ def test_bpe_train_hand_computed_merges(spark):
     # vocab: aaab x2, ab x1.
     # r1: (a,a)=4 beats (a,b)=3 → 'aa a b'/'a b'
     # r2: (a,b)=3 beats (aa,a)=2 → 'aa ab'/'ab'
-    # r3: (aa,ab)=2 → 'aaab'
+    # r3: (aa,ab)=2 → 'aaab'; no pair is left, so training stops
+    # before BPE_ROUNDS
     df = docs(spark, [(1, "aaab aaab"), (2, "ab")])
     got = [(r.round, r.x, r.y, r.pair_n) for r in
-           bpe_train(df, rounds=3).orderBy("round").collect()]
+           bpe_train(df).orderBy("round").collect()]
     assert got == [(1, "a", "a", 4), (2, "a", "b", 3),
                    (3, "aa", "ab", 2)]
 
@@ -1079,7 +1075,7 @@ def test_bpe_greedy_nonoverlapping_application(spark):
     # LEFT pair → next round the top pair is (aa,a), not (a,a)
     df = docs(spark, [(1, "aaa aaa aaa")])
     got = [(r.round, r.x, r.y) for r in
-           bpe_train(df, rounds=2).orderBy("round").collect()]
+           bpe_train(df).orderBy("round").collect()]
     assert got == [(1, "a", "a"), (2, "aa", "a")]
 
 
@@ -1135,15 +1131,16 @@ def test_ahash_bits_hand_computed(spark):
 
 def test_bpe_encode_counts_hand_computed(spark):
     from ethereum_export_pipeline_spark.operators.text import (
-        bpe_encode_counts)
-    # merges (rounds=3, from test_bpe_train): (a,a), (a,b), (aa,ab)
+        bpe_encode_counts, bpe_train)
+    # merges (from test_bpe_train's corpus): (a,a), (a,b), (aa,ab)
     # doc 1 'aaab aaab' → each word: a a a b →(a,a) aa a b →(a,b)
     # aa ab →(aa,ab) aaab = 1 symbol → 2 words, 2 bpe tokens
     # doc 2 'ab' → a b →(a,b) ab = 1 symbol
     # doc 3 'ba' → b a : no merge applies → 2 symbols
     df = docs(spark, [(1, "aaab aaab"), (2, "ab"), (3, "ba")])
-    out = {r.doc_id: r for r in
-           bpe_encode_counts(df, rounds=3).collect()}
+    merges = (bpe_train(docs(spark, [(1, "aaab aaab"), (2, "ab")]))
+              .orderBy("round").collect())
+    out = {r.doc_id: r for r in bpe_encode_counts(df, merges).collect()}
     assert (out[1].n_words, out[1].n_bpe_tokens) == (2, 2)
     assert (out[2].n_words, out[2].n_bpe_tokens) == (1, 1)
     assert (out[3].n_words, out[3].n_bpe_tokens) == (1, 2)
@@ -1151,23 +1148,20 @@ def test_bpe_encode_counts_hand_computed(spark):
 
 def test_ann_recall_report_bounds_and_perfect_case(spark):
     from ethereum_export_pipeline_spark.operators.similarity import (
-        ann_recall_report)
-    import math
-    # 16 well-separated vectors: with enough bands LSH recall can
-    # only be in [0, 1e6]; with n_bands high the candidate set covers
-    # everything → recall 1e6 exactly
+        TOPK_K, ann_recall_report, brute_force_topk)
+    # 16 well-separated vectors: LSH recall can only be in [0, 1e6],
+    # one row per query (vec_id < 10)
     vecs = []
     for i in range(16):
         v = [0.0] * 8
         v[i % 8] = 1.0
         v[(i + 1) % 8] = 0.5 if i >= 8 else 0.0
-        vecs.append((i, v))
+        vecs.append((i, pad64(v)))
     df = embs2(spark, vecs)
-    out = ann_recall_report(df, k=3, query_pred="vec_id < 4", dim=8,
-                            n_planes=4, n_bands=4).collect()
-    assert len(out) == 4
+    out = ann_recall_report(df, brute_force_topk(df)).collect()
+    assert len(out) == 10
     assert all(0 <= r.recall_ppm <= 1_000_000 for r in out)
-    assert all(r.recall_ppm == r.n_hits * 1_000_000 // 3 for r in out)
+    assert all(r.recall_ppm == r.n_hits * 1_000_000 // TOPK_K for r in out)
 
 
 def embs2(spark, rows):
@@ -1213,7 +1207,7 @@ def test_lpa_two_cliques_one_bridge(spark):
     tri1 = [(1, 2), (2, 3), (1, 3)]
     tri2 = [(7, 8), (8, 9), (7, 9)]
     out = {r.node: r.community for r in lpa_communities(
-        _edges(spark, tri1 + tri2 + [(3, 7)]), rounds=4).collect()}
+        _edges(spark, tri1 + tri2 + [(3, 7)])).collect()}
     assert out[1] == out[2] == out[3]
     assert out[7] == out[8] == out[9]
     assert out[1] != out[7]
@@ -1224,10 +1218,10 @@ def test_lpa_deterministic_across_runs(spark):
         lpa_communities)
     edges = [(i, i + 1) for i in range(1, 12)] + [(1, 6), (4, 9)]
     a = sorted(map(tuple,
-                   lpa_communities(_edges(spark, edges), rounds=3)
+                   lpa_communities(_edges(spark, edges))
                    .collect()))
     b = sorted(map(tuple,
-                   lpa_communities(_edges(spark, edges), rounds=3)
+                   lpa_communities(_edges(spark, edges))
                    .collect()))
     assert a == b
 
@@ -1238,50 +1232,51 @@ def test_containment_detects_excerpt_jaccard_misses(spark):
     quote = "alpha beta gamma delta epsilon zeta"
     page = quote + " " + " ".join(f"w{i}" for i in range(60))
     df = docs(spark, [(1, quote), (2, page), (3, "unrelated text here")])
-    out = containment_pairs(df, threshold_ppm=800_000).collect()
+    out = containment_pairs(df).collect()
     [r] = out
     assert (r.doc_a, r.doc_b) == (1, 2)
     assert r.cont_a_ppm == 1_000_000       # every quote shingle in page
     assert r.cont_b_ppm < 200_000          # tiny share of the page
     # the same pair is INVISIBLE to symmetric jaccard at 0.5
-    assert ngram_jaccard_pairs(df, threshold=0.5).count() == 0
+    assert ngram_jaccard_pairs(df).count() == 0
 
 
 def test_containment_directional_values(spark):
     from ethereum_export_pipeline_spark.operators.dedup import (
         containment_pairs)
-    # A: 4 shingles, B: 6 shingles, sharing 3 ("b c d e f" run)
-    a = "a b c d e f"          # shingles: abc bcd cde def -> 4
-    b = "b c d e f g h"        # shingles: bcd cde def efg fgh -> 5
+    # A: 5 shingles, B: 6 shingles, sharing 4 ("b c d e f g" run):
+    # A's containment is exactly CONTAINMENT_PPM, B's is below it
+    a = "b c d e f g x"        # shingles: bcd cde def efg fgx -> 5
+    b = "b c d e f g h i"      # shingles: bcd cde def efg fgh ghi -> 6
     df = docs(spark, [(1, a), (2, b)])
-    [r] = containment_pairs(df, threshold_ppm=500_000).collect()
-    assert (r.n_common, r.sz_a, r.sz_b) == (3, 4, 5)
-    assert r.cont_a_ppm == 3 * 1_000_000 // 4
-    assert r.cont_b_ppm == 3 * 1_000_000 // 5
+    [r] = containment_pairs(df).collect()
+    assert (r.n_common, r.sz_a, r.sz_b) == (4, 5, 6)
+    assert r.cont_a_ppm == 4 * 1_000_000 // 5
+    assert r.cont_b_ppm == 4 * 1_000_000 // 6
 
 
 def test_resolve_reorgs_competing_fork_and_window(spark):
     from pyspark.sql import Row
     from ethereum_export_pipeline_spark.operators.reorg import (
         resolve_reorgs)
-    # heights 0..5 main chain m0..m5; a COMPETING branch f4..f5 forking
-    # at height 3 but one block SHORTER tip... make the fork reach the
-    # same max height: tie at height 5 → tip tie-break = min hash.
+    # heights 0..20 main chain m0..m20; a COMPETING branch f19..f20
+    # forking at height 18 reaches the same max height: tie at height
+    # 20 → tip tie-break = min hash. REORG_DEPTH=16 judges 5..20.
     rows = []
-    for h in range(6):
+    for h in range(21):
         rows.append(Row(height=h, hash=f"m{h}", parent=f"m{h-1}"))
-    rows.append(Row(height=4, hash=f"f4", parent="m3"))
-    rows.append(Row(height=5, hash=f"f5", parent="f4"))
+    rows.append(Row(height=19, hash="f19", parent="m18"))
+    rows.append(Row(height=20, hash="f20", parent="f19"))
     df = spark.createDataFrame(rows, "height long, hash string, parent string")
     out = {(r.height, r.block_hash): r.canonical
-           for r in resolve_reorgs(df, max_depth=4).collect()}
-    # tip tie at height 5: 'f5' < 'm5' → the FORK wins fork-choice
-    assert out[(5, "f5")] == 1 and out[(5, "m5")] == 0
-    assert out[(4, "f4")] == 1 and out[(4, "m4")] == 0
-    assert out[(3, "m3")] == 1          # shared ancestor canonical
-    assert out[(2, "m2")] == 1
-    assert (1, "m1") not in out         # below the window: not judged
-    assert len(out) == 6
+           for r in resolve_reorgs(df).collect()}
+    # tip tie at height 20: 'f20' < 'm20' → the FORK wins fork-choice
+    assert out[(20, "f20")] == 1 and out[(20, "m20")] == 0
+    assert out[(19, "f19")] == 1 and out[(19, "m19")] == 0
+    assert out[(18, "m18")] == 1        # shared ancestor canonical
+    assert out[(5, "m5")] == 1
+    assert (4, "m4") not in out         # below the window: not judged
+    assert len(out) == 18
 
 
 def test_audio_fingerprint_rate_invariant_groups(spark):
@@ -1312,11 +1307,11 @@ def test_audio_fingerprint_rate_invariant_groups(spark):
 
 def test_minhash_estimator_quality_identical_docs(spark):
     from ethereum_export_pipeline_spark.operators.dedup import (
-        MINHASH_K, minhash_estimator_quality)
+        MINHASH_K, minhash_estimator_quality, minhash_lsh_pairs)
     text = "the quick brown fox jumps over the lazy dog again and again"
     df = docs(spark, [(1, text), (2, text),
                       (3, "completely different words here entirely")])
-    [r] = minhash_estimator_quality(df, threshold=0.9).collect()
+    [r] = minhash_estimator_quality(df, minhash_lsh_pairs(df)).collect()
     # identical docs: every signature component matches, both ppm exact
     assert (r.doc_a, r.doc_b) == (1, 2)
     assert r.sig_matches == MINHASH_K
@@ -1403,7 +1398,7 @@ def test_collocations_hand_computed(spark):
     from ethereum_export_pipeline_spark.operators.text import collocations
     rows = [(i, "new york of the") for i in range(1, 7)]
     rows += [(10, "of new"), (11, "the of"), (12, "york the of")]
-    out = collocations(docs(spark, rows), min_count=2, top_k=50).collect()
+    out = collocations(docs(spark, rows)).collect()
     by_rank = {r.rank: (r.w1, r.w2) for r in out}
     assert by_rank[1] == ("new", "york")
     ny = next(r for r in out if (r.w1, r.w2) == ("new", "york"))
@@ -1415,8 +1410,9 @@ def test_collocations_hand_computed(spark):
 
 
 def test_mixture_weights_largest_remainder_exact_budget(spark):
-    """counts 100/9/4 → weights 10/3/2, budget 10: quotas 6/2/1 and
-    the single leftover seat goes to the largest remainder (a)."""
+    """counts 100/9/4 → weights 10/3/2, MIX_BUDGET 10⁶: quotas
+    666666/200000/133333 (remainders 10/0/5 of 15) and the single
+    leftover seat goes to the largest remainder (a)."""
     from pyspark.sql import Row
     from ethereum_export_pipeline_spark.operators.text import mixture_weights
     rows = ([Row(doc_id=i, source="a") for i in range(100)]
@@ -1424,10 +1420,11 @@ def test_mixture_weights_largest_remainder_exact_budget(spark):
             + [Row(doc_id=i, source="c") for i in range(4)]
             + [Row(doc_id=0, source=None)])
     df = spark.createDataFrame(rows, "doc_id long, source string")
-    out = {r.source: r for r in mixture_weights(df, budget=10).collect()}
+    out = {r.source: r for r in mixture_weights(df).collect()}
     assert {s: r.weight for s, r in out.items()} == {"a": 10, "b": 3, "c": 2}
-    assert {s: r.target_docs for s, r in out.items()} == {"a": 7, "b": 2, "c": 1}
-    assert sum(r.target_docs for r in out.values()) == 10  # exact budget
+    assert {s: r.target_docs for s, r in out.items()} == {
+        "a": 666_667, "b": 200_000, "c": 133_333}
+    assert sum(r.target_docs for r in out.values()) == 1_000_000  # exact
     assert None not in out
 
 
@@ -1439,9 +1436,9 @@ def test_mixture_weights_upsampling_visible(spark):
     rows = ([Row(doc_id=i, source="big") for i in range(10000)]
             + [Row(doc_id=i, source="tiny") for i in range(1)])
     df = spark.createDataFrame(rows, "doc_id long, source string")
-    out = {r.source: r for r in mixture_weights(df, budget=1000).collect()}
+    out = {r.source: r for r in mixture_weights(df).collect()}
     assert out["tiny"].target_docs > out["tiny"].n_docs
-    assert sum(r.target_docs for r in out.values()) == 1000
+    assert sum(r.target_docs for r in out.values()) == 1_000_000
 
 
 def test_knn_graph_every_vector_queried_and_ranked(spark):
@@ -1454,7 +1451,7 @@ def test_knn_graph_every_vector_queried_and_ranked(spark):
         return [math.sin(seed * 31 + d) for d in range(EMB_DIM)]
     rows = [(i, vec(i % 4)) for i in range(12)]   # 4 groups of triples
     df = spark.createDataFrame(rows, f"vec_id long, embedding array<float>")
-    out = knn_graph(df, k=3, n_bands=3).collect()
+    out = knn_graph(df).collect()
     by_node = {}
     for r in out:
         by_node.setdefault(r.vec_id, []).append(r)
@@ -1468,9 +1465,9 @@ def test_knn_graph_every_vector_queried_and_ranked(spark):
 
 
 def test_kmeans_assign_recovers_clear_clusters(spark):
-    """Two tight groups far apart: 3 Lloyd rounds must put each group
-    in one cell, exactly-zero dist2 only for points equal to their
-    centroid, and the run must be deterministic."""
+    """Two tight groups far apart: KMEANS_ROUNDS Lloyd rounds over
+    KMEANS_K cells must never put the two groups in one cell, and the
+    run must be deterministic."""
     from ethereum_export_pipeline_spark.operators.similarity import (
         EMB_DIM, kmeans_assign)
     a = [1.0] * EMB_DIM
@@ -1478,11 +1475,10 @@ def test_kmeans_assign_recovers_clear_clusters(spark):
     rows = ([(i, [x + (i % 3) * 1e-4 for x in a]) for i in range(6)]
             + [(i, [x - (i % 3) * 1e-4 for x in b]) for i in range(6, 12)])
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    out = {r.vec_id: r for r in kmeans_assign(df, k=2, rounds=3).collect()}
+    out = {r.vec_id: r for r in kmeans_assign(df).collect()}
     cells_a = {out[i].cell for i in range(6)}
     cells_b = {out[i].cell for i in range(6, 12)}
-    assert len(cells_a) == 1 and len(cells_b) == 1
-    assert cells_a != cells_b
+    assert cells_a and cells_b and not (cells_a & cells_b)
     out2 = {r.vec_id: (r.cell, r.dist2)
-            for r in kmeans_assign(df, k=2, rounds=3).collect()}
+            for r in kmeans_assign(df).collect()}
     assert out2 == {i: (r.cell, r.dist2) for i, r in out.items()}

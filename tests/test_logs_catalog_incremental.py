@@ -409,17 +409,16 @@ def test_malformed_long_data_decodes_to_null(spark):
 def test_streaming_watermark_withholds_open_windows(spark, tmp_path):
     import pyspark.sql.functions as F
     from ethereum_export_pipeline_spark.streaming import (
-        WINDOW_US, stream_watermark_counts)
+        WINDOW_US, WM_DELAY_S, stream_watermark_counts)
     path = str(tmp_path / "wm_events")
     n = 100
     (spark.range(n)
           .select(F.col("id").alias("event_id"),
                   (F.col("id") * 90_000_000_000).alias("ts"))  # 90 s apart, ns
           .write.parquet(path))
-    delay_s = 1800
+    delay_s = WM_DELAY_S
     got = {r.win_start: r.n
-           for r in stream_watermark_counts(spark, path,
-                                            delay_s=delay_s).collect()}
+           for r in stream_watermark_counts(spark, path).collect()}
     # append mode: only windows closed by the final watermark emit
     max_us = (n - 1) * 90_000_000
     cutoff = (max_us // 1000 - delay_s * 1000) * 1000
@@ -453,8 +452,7 @@ def test_stream_interval_join_boundaries(spark, tmp_path):
     ]
     spark.createDataFrame(rows).write.parquet(path)
     got = sorted((r.click_id, r.buy_id, r.delta_us)
-                 for r in stream_interval_join(spark, path,
-                                               gap_s=3600).collect())
+                 for r in stream_interval_join(spark, path).collect())
     # inclusive upper bound (<= click_ts + gap); cross-user never joins
     assert got == [(1, 2, 600_000_000), (1, 3, 3_600_000_000)]
 
@@ -599,8 +597,18 @@ def test_incremental_rollup_upserts_only_touched_windows(spark, tmp_path):
     assert glob.glob(f"{dest}/win_range=4/*.parquet")
 
 
-def test_stream_interval_join_cross_batch_state(spark, tmp_path):
-    """maxFilesPerTrigger=1 forces clicks (batch 1) and purchases
+def _read_one_file_per_trigger(spark, path):
+    """`streaming.read_stream` over a directory, one file per
+    micro-batch: the multi-batch runs that exercise cross-batch state."""
+    from ethereum_export_pipeline_spark.session import isolated_session
+    child = isolated_session(spark)
+    return (child.readStream.schema(child.read.parquet(path).schema)
+            .option("maxFilesPerTrigger", 1).parquet(path))
+
+
+def test_stream_interval_join_cross_batch_state(spark, tmp_path,
+                                                monkeypatch):
+    """One file per trigger forces clicks (batch 1) and purchases
     (batch 2) into separate micro-batches: every match below requires
     the join to CARRY click state across the batch boundary — a
     stateless per-batch join would emit nothing. (WHEN evicted state
@@ -609,7 +617,8 @@ def test_stream_interval_join_cross_batch_state(spark, tmp_path):
     import time
     import pyarrow as pa
     import pyarrow.parquet as pq
-    from ethereum_export_pipeline_spark.streaming import stream_interval_join
+    from ethereum_export_pipeline_spark import streaming
+    monkeypatch.setattr(streaming, "read_stream", _read_one_file_per_trigger)
     src = tmp_path / "ij_batches"; src.mkdir()
     s = 1_000_000_000  # 1 s in ns
     day = 86_400 * s
@@ -629,11 +638,10 @@ def test_stream_interval_join_cross_batch_state(spark, tmp_path):
     write("f2.parquet", [
         (3, 1, "purchase", day + 300 * s),     # in click 1's gap
         (4, 2, "purchase", day + 10_100 * s),  # in click 2's gap
-        (5, 2, "purchase", day + 20_000 * s),  # beyond any gap
+        (5, 2, "purchase", day + 20_000 * s),  # beyond IJ_GAP_S (1 h)
     ])
     got = sorted((r.click_id, r.buy_id, r.delta_us) for r in
-                 stream_interval_join(spark, str(src), gap_s=600,
-                                      max_files_per_trigger=1).collect())
+                 streaming.stream_interval_join(spark, str(src)).collect())
     assert got == [(1, 3, 300_000_000), (2, 4, 100_000_000)]
 
 
@@ -691,18 +699,18 @@ def test_session_window_boundary_and_withheld_tail(spark, tmp_path):
         return (eid, base + datetime.timedelta(seconds=secs), uid,
                 "click", 0.0, "{}")
 
-    rows = [ev(1, 1, 0), ev(2, 1, 30),        # merge at exactly gap=30s
-            ev(3, 2, 0), ev(4, 2, 31),        # split beyond gap
+    # SW_GAP_US = 30 min, SW_DELAY_S = 30 min
+    rows = [ev(1, 1, 0), ev(2, 1, 1_800),     # merge at exactly the gap
+            ev(3, 2, 0), ev(4, 2, 1_801),     # split beyond gap
             ev(5, 3, 9_000)]                  # open tail at stream end
     df = spark.createDataFrame(
         rows, "event_id long, ts timestamp_ntz, user_id long, "
               "event_type string, value double, props string")
     p = str(tmp_path / "events_dir")      # plain dir: the production
     df.coalesce(1).write.parquet(p)       # file-stream layout
-    out = stream_session_window_counts(spark, p, gap_us=30_000_000,
-                                       delay_s=60)
+    out = stream_session_window_counts(spark, p)
     got = [(r.user_id, r.n_events) for r in out.collect()]
-    # watermark = max(9000s) - 60s → closes every session but user 3's
+    # watermark = max(9000s) - 1800s → closes every session but user 3's
     assert (1, 2) in got                      # exact-gap pair merged
     assert got.count((2, 1)) == 2             # split into two singletons
     assert all(u != 3 for u, _ in got)        # open tail withheld
@@ -721,9 +729,10 @@ def test_interval_join_outer_unmatched_and_withheld(spark, tmp_path):
         return (eid, base + datetime.timedelta(seconds=secs), uid, typ,
                 0.0, "{}")
 
+    # IJ_GAP_S = 1 h, IJ_DELAY_S = 2 h
     rows = [ev(1, 1, 0, "click"), ev(2, 1, 60, "purchase"),   # match
             ev(3, 2, 0, "click"),                              # no buy
-            ev(4, 3, 90_000, "click"),                         # near end
+            ev(4, 3, 80_000, "click"),                         # near end
             ev(5, 9, 100_000, "purchase"),                     # advances wm
             ev(6, 9, 100_000, "click"),                        # matches 5
             ev(7, 10, 100_000, "click")]                       # open tail
@@ -733,13 +742,13 @@ def test_interval_join_outer_unmatched_and_withheld(spark, tmp_path):
     p = str(tmp_path / "ev_outer")
     df.coalesce(1).write.parquet(p)
     out = {r.click_id: r for r in stream_interval_join_outer(
-        spark, p, gap_s=120, delay_s=60).collect()}
+        spark, p).collect()}
     assert out[1].matched == 1 and out[1].delta_us == 60_000_000
     assert out[3].matched == 0 and out[3].buy_id is None
-    # wm = min(click max, buy max) - 60 s = 100_000 - 60 = 99_940 s;
-    # click 4 at 90_000: 90_000+120 < 99_940 → closed, emits unmatched;
+    # wm = min(click max, buy max) - 7_200 s = 100_000 - 7_200 = 92_800 s;
+    # click 4 at 80_000: 80_000+3_600 < 92_800 → closed, emits unmatched;
     # click 6 matches purchase 5 instantly (matches ignore the wm);
-    # click 7 at 100_000 unmatched: 100_120 > wm → withheld
+    # click 7 at 100_000 unmatched: 103_600 > wm → withheld
     assert out[4].matched == 0
     assert out[6].matched == 1 and out[6].delta_us == 0
     assert 7 not in out
@@ -772,13 +781,12 @@ def test_cusum_cross_batch_state_carry(spark, tmp_path):
     for f in glob.glob(f"{b2}/part-*.parquet"):
         shutil.move(f, os.path.join(p, "zz-" + os.path.basename(f)))
 
-    from ethereum_export_pipeline_spark.streaming import read_stream
     from ethereum_export_pipeline_spark.sources.tables import (
         with_event_time)
     from pyspark.sql.streaming.state import GroupStateTimeout
     # force two batches: one file per trigger (file order = name order,
     # so batch 1 = events 1-2, batch 2 = event 3)
-    sdf = with_event_time(read_stream(spark, p, max_files_per_trigger=1))
+    sdf = with_event_time(_read_one_file_per_trigger(spark, p))
     from ethereum_export_pipeline_spark.streaming.sessions import (
         ALERT_SCHEMA, CUSUM_STATE, _cusum_key)
     from ethereum_export_pipeline_spark.streaming import (

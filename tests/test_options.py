@@ -2,10 +2,12 @@
 different values.
 
 AST scan of the package's top-level functions against every call
-site. Call sites are searched in the package, `bench.py`, `tools/`,
-`tests/` and `perfbench/`; a call matches by the function's name (or
-an import alias of it), so a name shared by two functions counts for
-both. Two rules:
+site. Call sites are searched in the package, `bench.py`, `tools/`
+and `perfbench/` — NOT in `tests/`: a value only a test passes does
+not justify a knob, so a test runs the operator at its constants. A
+call matches by the function's name (or an import alias of it), so a
+name shared by two functions counts for both. A function no non-test
+code calls is not judged. Two rules:
 
 * never set: a defaulted parameter that no call site passes (by
   keyword, by position, or through a `*args` / `**kw` splat);
@@ -30,16 +32,14 @@ import os
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PACKAGE = "ethereum_export_pipeline_spark"
-CALLER_ROOTS = (PACKAGE, "bench.py", "tools", "tests", "perfbench")
+CALLER_ROOTS = (PACKAGE, "bench.py", "tools", "perfbench")
 
 #: "module.function.parameter" -> why it stays
 ALLOWED = {
-    "streaming.stream_chain_export.timeout_s":
-        "deployment: how long an export waits for its stream to drain",
-    "sources.catalog.register_fixture_tables.database":
-        "deployment: the metastore database a run registers its tables in",
     "sources.csv_source.read_table_parquet.table":
         "deployment: the table a run reads",
+    "incremental.run_incremental.table":
+        "deployment: the manifest table a run records its ranges under",
 }
 
 
@@ -147,7 +147,8 @@ def _scan() -> tuple[list[str], list[str]]:
         sites = calls.get(fn.name, [])
         for idx, param, default in _params(fn):
             args = [_argument(c, idx, param, default) for c in sites]
-            if default is not None and all(a is default for a in args):
+            if (sites and default is not None
+                    and all(a is default for a in args)):
                 never.append(f"{qual}.{param}")
             elif (sites and fn.name not in values
                     and all(a is not None and _constant(a) for a in args)

@@ -148,30 +148,3 @@ def test_type_diverse_arrow_batch_does_not_inflate_py_path(spark):
     assert after < max(before, 0.5) * 2.5, \
         (f"type-diverse Arrow batch re-inflated the py path: "
          f"{before:.2f} → {after:.2f} JVM CPU-s")
-
-
-# ------- shared ground truth: exact= hook equals the internal pass
-
-def test_recall_reports_with_shared_exact_match_internal(spark):
-    """Optimization r11 (guide §2.4 reuse): `matryoshka_recall_report`
-    and `sq8_recall_report` accept an already-computed DIM-FILTERED
-    `brute_force_topk` frame via `exact=`. The hooked path — including
-    MRL's p == dim branch, which reuses the ground-truth frame as the
-    full-width "prefix" ranking instead of re-running the brute pass —
-    must produce row-for-row the same report as the internal build."""
-    from pyspark.sql import functions as F
-    from ethereum_export_pipeline_spark.operators.similarity import (
-        EMB_DIM, brute_force_topk, matryoshka_recall_report,
-        sq8_recall_report)
-    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    shared = (brute_force_topk(
-                  emb.where(F.size(F.col("embedding")) == EMB_DIM), k=3)
-              .localCheckpoint(eager=True))
-
-    def rows(df):
-        return sorted(tuple(r) for r in df.collect())
-
-    assert rows(matryoshka_recall_report(emb, k=3, exact=shared)) == \
-        rows(matryoshka_recall_report(emb, k=3))
-    assert rows(sq8_recall_report(emb, k=3, exact=shared)) == \
-        rows(sq8_recall_report(emb, k=3))

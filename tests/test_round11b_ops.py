@@ -62,22 +62,23 @@ def test_pseudonymize_referential_integrity(spark):
     fixed-tag redaction); non-dictionary tokens pass through."""
     from ethereum_export_pipeline_spark.operators.text import (
         pseudonymize_terms)
+    # PSEUDONYM_TERMS holds "customer" and "supplier"
     df = spark.createDataFrame(
-        [(1, "alice met bob"), (2, "bob met carol"), (3, "no names")],
+        [(1, "customer met supplier"), (2, "supplier met carol"),
+         (3, "no names")],
         ["doc_id", "text"])
-    out = {r.doc_id: r for r in
-           pseudonymize_terms(df, ["alice", "bob"]).collect()}
+    out = {r.doc_id: r for r in pseudonymize_terms(df).collect()}
     tok = {t: "<ENT_" + hashlib.md5(t.encode()).hexdigest()[:10] + ">"
-           for t in ("alice", "bob")}
-    assert out[1].clean_text == f"{tok['alice']} met {tok['bob']}"
-    assert out[2].clean_text == f"{tok['bob']} met carol"
+           for t in ("customer", "supplier")}
+    assert out[1].clean_text == f"{tok['customer']} met {tok['supplier']}"
+    assert out[2].clean_text == f"{tok['supplier']} met carol"
     assert out[3].clean_text == "no names"
     assert (out[1].n_hits, out[1].n_entities) == (2, 2)
     assert (out[2].n_hits, out[2].n_entities) == (1, 1)
     assert (out[3].n_hits, out[3].n_entities) == (0, 0)
-    # referential integrity across docs: bob's surrogate is identical
-    assert tok["bob"] in out[1].clean_text
-    assert tok["bob"] in out[2].clean_text
+    # referential integrity across docs: supplier's surrogate is identical
+    assert tok["supplier"] in out[1].clean_text
+    assert tok["supplier"] in out[2].clean_text
 
 
 def test_pseudonymize_counts_multiplicity(spark):
@@ -85,10 +86,10 @@ def test_pseudonymize_counts_multiplicity(spark):
     text yields an empty clean_text, not NULL (cross-engine rule)."""
     from ethereum_export_pipeline_spark.operators.text import (
         pseudonymize_terms)
-    df = spark.createDataFrame([(1, "bob bob bob alice"), (2, "")],
-                               ["doc_id", "text"])
-    out = {r.doc_id: r for r in
-           pseudonymize_terms(df, ["alice", "bob"]).collect()}
+    df = spark.createDataFrame(
+        [(1, "supplier supplier supplier customer"), (2, "")],
+        ["doc_id", "text"])
+    out = {r.doc_id: r for r in pseudonymize_terms(df).collect()}
     assert (out[1].n_hits, out[1].n_entities) == (4, 2)
     assert out[2].clean_text == ""
 
@@ -98,7 +99,7 @@ def test_pseudonymize_zero_shuffle(spark):
     from ethereum_export_pipeline_spark.operators.text import (
         pseudonymize_terms)
     df = spark.read.parquet(f"{SF}/documents.parquet")
-    assert "Exchange" not in _plan(pseudonymize_terms(df, ["spark"]))
+    assert "Exchange" not in _plan(pseudonymize_terms(df))
 
 
 # ------------------------------------------ AMS join-size sketch
@@ -112,11 +113,11 @@ def test_ams_join_size_accuracy_on_skew(spark):
         ams_join_size)
     a = spark.range(1, 201).select(
         F.explode(F.expr("array_repeat(id, CAST(id % 40 + 1 AS INT))"))
-         .alias("k"))
+         .alias("o_orderkey"))
     b = spark.range(100, 301).select(
         F.explode(F.expr("array_repeat(id, CAST(id % 8 + 1 AS INT))"))
-         .alias("k"))
-    row = ams_join_size(a, b, "k", "k").collect()[0]
+         .alias("l_orderkey"))
+    row = ams_join_size(a, b).collect()[0]
     exact = sum((k % 40 + 1) * (k % 8 + 1) for k in range(100, 201))
     assert row.exact_pairs == exact
     assert row.abs_err_ppm <= 100_000, row
@@ -148,8 +149,8 @@ def test_ams_join_size_empty_side(spark):
     either engine)."""
     from ethereum_export_pipeline_spark.operators.sketch import (
         ams_join_size)
-    a = spark.range(1, 100).select(F.col("id").alias("k"))
-    b = a.where(F.lit(False))
-    row = ams_join_size(a, b, "k", "k").collect()[0]
+    a = spark.range(1, 100).select(F.col("id").alias("o_orderkey"))
+    b = a.where(F.lit(False)).withColumnRenamed("o_orderkey", "l_orderkey")
+    row = ams_join_size(a, b).collect()[0]
     assert row.exact_pairs == 0
     assert row.abs_err_ppm == 0

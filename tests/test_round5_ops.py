@@ -58,7 +58,7 @@ def test_dsir_scores_and_weights_hand_computed(spark):
     docs = spark.createDataFrame(
         [Row(doc_id=1, lang="en", text="alpha alpha"),
          Row(doc_id=2, lang="de", text="alpha beta")])
-    scores = T.dsir_bucket_scores(docs, "lang = 'en'")
+    scores = T.dsir_bucket_scores(docs)
     ba = _h32("alpha") % T.DSIR_BUCKETS
     bb = _h32("beta") % T.DSIR_BUCKETS
     assert ba != bb  # fixture chosen collision-free
@@ -73,10 +73,11 @@ def test_dsir_scores_and_weights_hand_computed(spark):
 
 
 def test_dsir_uniform_target_scores_scale(spark):
+    # every doc is in the target slice: each live bucket scores SCALE
     docs = spark.createDataFrame(
         [Row(doc_id=1, lang="en", text="x y z"),
          Row(doc_id=2, lang="en", text="p q")])
-    scores = T.dsir_bucket_scores(docs, "true")
+    scores = T.dsir_bucket_scores(docs)
     assert all(s in (0, T.DSIR_SCALE) for s in scores)
     assert sum(1 for s in scores if s == T.DSIR_SCALE) >= 1
 
@@ -142,7 +143,7 @@ def test_ahash_neardup_small_edit_found_far_rejected(spark):
 def test_bloom_hit_pred_inside_filter_lambda(spark):
     from ethereum_export_pipeline_spark.operators.sketch import (
         bloom_bits, bloom_build, bloom_hit_pred)
-    keys = spark.createDataFrame([Row(key=k) for k in
+    keys = spark.createDataFrame([Row(shingle=k) for k in
                                   ("foo", "bar", "baz qux")])
     bits = bloom_bits(bloom_build(keys))
     pred = bloom_hit_pred("s", bits)
@@ -178,7 +179,7 @@ def test_stream_decontaminate_flags_mid_stream(spark, tmp_path):
     docs.write.parquet(path)
     bench = (shingles(docs.where("doc_id % 97 = 0"))
              .select("shingle").distinct())
-    bits = bloom_bits(bloom_build(bench, key_col="shingle"))
+    bits = bloom_bits(bloom_build(bench))
     got = {r["doc_id"]: r.asDict()
            for r in stream_decontaminate(spark, path, bits).collect()}
     assert set(got) == {1, 2, 3}   # benchmark doc excluded from stream
@@ -252,31 +253,31 @@ def _winnow_py(text, k, w):
 
 def test_winnow_matches_reference_including_ties(spark):
     from ethereum_export_pipeline_spark.operators.dedup import (
-        winnow_fingerprints)
+        WINNOW_K, WINNOW_W, winnow_fingerprints)
     texts = {1: "the winnowing algorithm selects local minima",
              2: "ab" * 20,             # repeated grams force hash ties
              3: "short str"}           # fewer grams than the window
     df = spark.createDataFrame(
         [Row(doc_id=i, text=t) for i, t in texts.items()])
     got = {}
-    for r in winnow_fingerprints(df, k=4, w=5).collect():
+    for r in winnow_fingerprints(df).collect():
         got.setdefault(r["doc_id"], set()).add((r["pos"], r["fp"]))
     for i, t in texts.items():
-        assert got[i] == _winnow_py(t, 4, 5), f"doc {i}"
+        assert got[i] == _winnow_py(t, WINNOW_K, WINNOW_W), f"doc {i}"
 
 
 def test_winnow_guarantee_shared_match_detected(spark):
     # any common substring of length >= w + k - 1 must share a fp
     from ethereum_export_pipeline_spark.operators.dedup import (
-        winnow_shared_census)
-    k, w = 4, 5
-    common = "zqxjvkwpfyhgbdmn"          # length 16 >= w + k - 1 = 8
+        WINNOW_K, WINNOW_W, winnow_shared_census)
+    common = "zqxjvkwpfyhgbdmnrtslcaeuoi"  # 26 chars >= w + k - 1 = 23
+    assert len(common) >= WINNOW_W + WINNOW_K - 1
     df = spark.createDataFrame(
         [Row(doc_id=1, text="prefix one " + common + " tail a"),
          Row(doc_id=2, text="other start " + common + " end bb"),
          Row(doc_id=3, text="entirely disjoint content here")])
     got = {r["doc_id"]: r["n_shared"]
-           for r in winnow_shared_census(df, k=k, w=w).collect()}
+           for r in winnow_shared_census(df).collect()}
     assert got[1] >= 1 and got[2] >= 1
     assert got[3] == 0
 
@@ -294,7 +295,7 @@ def test_resample_audio_gather_and_roundtrip(spark):
          Row(media_id=3, payload=bytearray(b"not a wav at all......"
                                            b"......................"))])
     got = {r["media_id"]: r["payload"]
-           for r in resample_audio(media, 6_000).collect()}
+           for r in resample_audio(media).collect()}
     assert got[2] is None and got[3] is None
     rate, ch, bits, out = decode_wav(bytes(got[1]))
     assert (rate, ch, bits) == (6_000, 1, 8)
@@ -313,12 +314,13 @@ def test_resample_audio_16bit_and_empty(spark):
          Row(media_id=2, payload=bytearray(
              encode_wav(np.zeros(0, np.uint8), 16_000)))])
     got = {r["media_id"]: r["payload"]
-           for r in resample_audio(media, 8_000).collect()}
+           for r in resample_audio(media).collect()}
     rate, _, bits, out = decode_wav(bytes(got[1]))
-    assert (rate, bits) == (8_000, 16)          # dtype preserved
-    assert out[:, 0].tolist() == s16[::2].tolist()
+    assert (rate, bits) == (6_000, 16)          # dtype preserved
+    # 8 samples at 16 kHz → 3 at 6 kHz: out[i] = s16[i·16000 div 6000]
+    assert out[:, 0].tolist() == s16[[0, 2, 5]].tolist()
     rate2, _, _, out2 = decode_wav(bytes(got[2]))
-    assert rate2 == 8_000 and out2.shape[0] == 0   # empty stays empty
+    assert rate2 == 6_000 and out2.shape[0] == 0   # empty stays empty
 
 
 # ---------------------------------------------------- phrase search
@@ -333,21 +335,11 @@ def test_phrase_hits_known_positions(spark):
     ]
     df = spark.createDataFrame(rows)
     out = {r["doc_id"]: r for r in
-           T.phrase_hits(df, ["hash", "join"]).collect()}
+           T.phrase_hits(df).collect()}
     assert set(out) == {1, 3}
     assert out[1]["n_hits"] == 2 and out[1]["first_pos"] == 0
     # tokenization lowercases and strips punctuation
     assert out[3]["n_hits"] == 1 and out[3]["first_pos"] == 0
-
-
-def test_phrase_hits_overlapping_and_triple(spark):
-    """Overlapping starts all count ('a a a' has two 'a a' starts);
-    a 3-token phrase matches only full consecutive runs."""
-    df = spark.createDataFrame([Row(doc_id=1, text="a a a b c a b c")])
-    out2 = T.phrase_hits(df, ["a", "a"]).collect()[0]
-    assert out2["n_hits"] == 2 and out2["first_pos"] == 0
-    out3 = T.phrase_hits(df, ["a", "b", "c"]).collect()
-    assert out3[0]["n_hits"] == 2 and out3[0]["first_pos"] == 2
 
 
 # ------------------------------------------------------- RRF fusion
@@ -362,7 +354,7 @@ def test_rrf_fuse_hand_computed(spark):
     b = spark.createDataFrame([(20, 1), (11, 2), (21, 3)],
                               "doc_id long, rank long")
     out = {r["doc_id"]: r for r in
-           rrf_fuse({"bm25": a, "ann": b}, k=10).collect()}
+           rrf_fuse({"bm25": a, "ann": b}).collect()}
     assert out[11]["rrf_score"] == RRF_SCALE // (RRF_C + 2) * 2
     assert out[11]["n_lists"] == 2
     assert out[11]["bm25_rank"] == 2 and out[11]["ann_rank"] == 2
@@ -374,13 +366,13 @@ def test_rrf_fuse_hand_computed(spark):
 
 
 def test_rrf_fuse_respects_k(spark):
-    from ethereum_export_pipeline_spark.operators.text import rrf_fuse
-    a = spark.createDataFrame([(i, i + 1) for i in range(30)],
+    from ethereum_export_pipeline_spark.operators.text import RRF_K, rrf_fuse
+    a = spark.createDataFrame([(i, i + 1) for i in range(RRF_K + 10)],
                               "doc_id long, rank long")
-    out = rrf_fuse({"only": a}, k=5).collect()
-    assert len(out) == 5
+    out = rrf_fuse({"only": a}).collect()
+    assert len(out) == RRF_K
     assert [r["doc_id"] for r in sorted(out, key=lambda r: r["rank"])] \
-        == [0, 1, 2, 3, 4]
+        == list(range(RRF_K))
 
 
 # ---------------------------------------------------- TextRank keywords
@@ -392,7 +384,7 @@ def test_textrank_hub_outranks_leaf(spark):
     for w in ("alpha", "beta", "gamma", "delta"):
         rows += [Row(text=f"hub {w} hub {w} hub {w}")]
     df = spark.createDataFrame(rows)
-    out = T.textrank_keywords(df, min_count=2, iters=3, top_k=10).collect()
+    out = T.textrank_keywords(df).collect()
     by_rank = sorted(out, key=lambda r: r["kw_rank"])
     assert by_rank[0]["term"] == "hub"
     assert all(r["rank"] > 0 for r in out)
@@ -400,11 +392,12 @@ def test_textrank_hub_outranks_leaf(spark):
 
 
 def test_textrank_min_count_cuts_rare_edges(spark):
-    """A pair seen once never enters the graph at min_count=2."""
+    """A pair seen once never enters the graph (TEXTRANK_MIN_COUNT=3);
+    (a, b), seen 3 times, does."""
     df = spark.createDataFrame(
         [Row(text="a b a b a b"), Row(text="rare pair")])
     terms = {r["term"] for r in
-             T.textrank_keywords(df, min_count=2, iters=2).collect()}
+             T.textrank_keywords(df).collect()}
     assert terms == {"a", "b"}
 
 
@@ -415,8 +408,8 @@ def test_density_sample_isolated_point_favored(spark):
     weight; an isolated orthogonal point gets density ≤ cluster's and
     weight ≥ — and every vector gets exactly one verdict row."""
     from ethereum_export_pipeline_spark.operators.similarity import (
-        density_sample)
-    dim = 8
+        EMB_DIM, density_sample, knn_graph)
+    dim = EMB_DIM
     base = [1.0] + [0.0] * (dim - 1)
     rows = []
     for i in range(6):                      # near-identical cluster
@@ -428,8 +421,7 @@ def test_density_sample_isolated_point_favored(spark):
     rows.append((99, iso))
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     out = {r["vec_id"]: r for r in
-           density_sample(df, k=3, dim=dim, n_planes=4,
-                          n_bands=2).collect()}
+           density_sample(df, knn_graph(df)).collect()}
     assert len(out) == 7
     clus_d = out[0]["dens_ppm"]
     assert clus_d > 900_000                 # ~cos 1.0 neighbors
@@ -486,8 +478,7 @@ def test_global_rank_matches_reference_with_ties(spark):
     from ethereum_export_pipeline_spark.operators.layout import global_rank
     rows = [(i, (i * 7) % 5) for i in range(200)]   # heavy ties
     df = spark.createDataFrame(rows, "id long, score long")
-    out = global_rank(df, [F2.col("score").desc(), F2.col("id").asc()],
-                      n_parts=8)
+    out = global_rank(df, [F2.col("score").desc(), F2.col("id").asc()])
     got = {r["id"]: r["global_rank"] for r in out.collect()}
     ref = sorted(rows, key=lambda t: (-t[1], t[0]))
     assert got == {id_: i + 1 for i, (id_, _) in enumerate(ref)}
@@ -504,8 +495,8 @@ def test_blocklist_hits_whole_token_runs_only(spark):
          Row(doc_id=3, text="customer join then table hash"),
          Row(doc_id=4, text="tablet hashes"),       # substring trap
          Row(doc_id=5, text=None)])
-    got = {r["doc_id"]: r.asDict() for r in T.blocklist_hits(
-        docs, ["table hash", "customer join", "zzz qqq"]).collect()}
+    # BLOCKLIST: "table hash", "customer join", "slow key", ...
+    got = {r["doc_id"]: r.asDict() for r in T.blocklist_hits(docs).collect()}
     assert set(got) == {1, 3}
     assert got[1]["hits"] == "table hash" and got[1]["n_hits"] == 1
     # hits reported in BLOCKLIST order, not document order
@@ -513,20 +504,13 @@ def test_blocklist_hits_whole_token_runs_only(spark):
     assert got[3]["n_hits"] == 2
 
 
-def test_blocklist_hits_rejects_bad_input(spark):
-    docs = spark.createDataFrame([Row(doc_id=1, text="x")])
-    with pytest.raises(ValueError):
-        T.blocklist_hits(docs, [])
-    with pytest.raises(ValueError):
-        T.blocklist_hits(docs, ["o'brien rule"])
-
-
 # ------------------------------------------- hard-negative mining
 
 def test_hard_negatives_top_cross_label_from_knn(spark):
     from ethereum_export_pipeline_spark.operators import similarity as S
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    g = S.knn_graph(emb, k=5, n_planes=8, n_bands=3).toPandas()
+    graph = S.knn_graph(emb)
+    g = graph.toPandas()
     labels = {r["vec_id"]: r["label"]
               for r in emb.select("vec_id", "label").collect()}
     # expected: per anchor, best (cosine desc, neighbor asc) neighbor
@@ -538,7 +522,7 @@ def test_hard_negatives_top_cross_label_from_knn(spark):
         a, n = row.vec_id, row.neighbor_id
         if a not in exp and labels[n] != labels[a]:
             exp[a] = (n, labels[a], labels[n])
-    out = S.hard_negatives(emb, k=5, n_planes=8, n_bands=3).collect()
+    out = S.hard_negatives(emb, graph).collect()
     got = {r["vec_id"]: (r["neg_id"], r["label"], r["neg_label"])
            for r in out}
     assert got == exp
@@ -550,8 +534,7 @@ def test_hard_negatives_top_cross_label_from_knn(spark):
 def test_semantic_decontaminate_verdict_contract(spark):
     from ethereum_export_pipeline_spark.operators import similarity as S
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    out = S.semantic_decontaminate(emb, bench_mod=97, threshold=0.15,
-                                   n_planes=8, n_bands=3).collect()
+    out = S.semantic_decontaminate(emb).collect()
     n_corpus = emb.where("vec_id % 97 != 0").count()
     assert len(out) == n_corpus            # one verdict per corpus vec
     assert {r["vec_id"] % 97 for r in out} != {0}
@@ -561,7 +544,7 @@ def test_semantic_decontaminate_verdict_contract(spark):
     for r in hits:
         assert r["n_matches"] >= 1
         assert r["top_bench_id"] % 97 == 0  # the match IS a bench vec
-        assert r["max_cosine"] >= 0.15
+        assert r["max_cosine"] >= S.SEMDECON_COS
     for r in misses:
         assert (r["n_matches"], r["top_bench_id"]) == (0, -1)
         assert r["max_cosine"] == 0.0
@@ -570,15 +553,19 @@ def test_semantic_decontaminate_verdict_contract(spark):
 # ------------------------------------------- vocabulary coverage
 
 def test_vocab_coverage_hand_computed(spark):
+    # VOCAB_SIZE=16: the top-16 by count are a(17), b(16) and t0..t13
+    # (2 each, term order); c and zz (1 each) are OOV
+    assert T.VOCAB_SIZE == 16
+    filler = " ".join(f"t{i:02d} t{i:02d}" for i in range(14))
     docs = spark.createDataFrame(
         [Row(doc_id=1, text="a a b c"),
          Row(doc_id=2, text="a b"),
          Row(doc_id=3, text="zz"),
-         Row(doc_id=4, text=None)])
+         Row(doc_id=4, text=None),
+         Row(doc_id=5, text=" ".join(["a"] * 14 + ["b"] * 14) + " " + filler)])
     got = {r["doc_id"]: r.asDict()
-           for r in T.vocab_coverage(docs, vocab_size=2).collect()}
-    assert set(got) == {1, 2, 3}   # NULL text excluded
-    # vocab = top-2 by count: a(3), b(2); c and zz are OOV
+           for r in T.vocab_coverage(docs).collect()}
+    assert set(got) == {1, 2, 3, 5}   # NULL text excluded
     assert (got[1]["n_tokens"], got[1]["n_oov"]) == (4, 1)
     assert got[1]["oov_ppm"] == 250_000
     assert (got[2]["n_oov"], got[2]["oov_ppm"]) == (0, 0)
@@ -586,10 +573,12 @@ def test_vocab_coverage_hand_computed(spark):
 
 
 def test_vocab_coverage_tie_break_on_term(spark):
-    # b and c tie at 1; V=2 keeps a + b (term asc), so c is OOV
-    docs = spark.createDataFrame([Row(doc_id=1, text="a a b c")])
-    got = T.vocab_coverage(docs, vocab_size=2).collect()[0]
-    assert (got["n_tokens"], got["n_oov"]) == (4, 1)
+    # a leads; 16 single-count terms tie for the last 15 vocabulary
+    # slots: term order keeps b00..b14, so b15 is OOV
+    docs = spark.createDataFrame([Row(
+        doc_id=1, text="a a " + " ".join(f"b{i:02d}" for i in range(16)))])
+    got = T.vocab_coverage(docs).collect()[0]
+    assert (got["n_tokens"], got["n_oov"]) == (18, 1)
 
 
 # --------------------------------------------- cluster labeling
@@ -685,13 +674,12 @@ def test_leakage_split_cluster_members_share_side(spark):
 def test_cluster_split_never_splits_a_minhash_cluster(spark):
     from ethereum_export_pipeline_spark.plans import ALL_QUERIES
     from ethereum_export_pipeline_spark.operators import dedup
-    from ethereum_export_pipeline_spark.plans.llm import NGRAM_THRESHOLD
     from ethereum_export_pipeline_spark.sources.tables import load_table
     sf = "/root/testdata/sf0.001"
     out = ALL_QUERIES["doc_cluster_split"].fn(spark, sf).collect()
     split_of = {r["doc_id"]: r["split"] for r in out}
     docs = load_table(spark, sf, "documents")
-    pairs = dedup.minhash_lsh_pairs(docs, threshold=NGRAM_THRESHOLD)
+    pairs = dedup.minhash_lsh_pairs(docs)
     linked = pairs.collect()
     assert linked  # fixture must exercise the non-singleton path
     for p in linked:
@@ -737,16 +725,13 @@ def test_curriculum_rank_follows_quality(spark):
 
 def test_snapshot_drift_counts_and_tv_bounds(spark):
     from ethereum_export_pipeline_spark.plans import ALL_QUERIES
-    from ethereum_export_pipeline_spark.plans.llm import (KMEANS_K,
-                                                          KMEANS_ROUNDS)
     from ethereum_export_pipeline_spark.operators import similarity
     from ethereum_export_pipeline_spark.sources.tables import load_table
     sf = "/root/testdata/sf0.001"
     rows = ALL_QUERIES["emb_snapshot_drift"].fn(spark, sf).collect()
     assert rows
     cells = {r["cell"]: r for r in rows}
-    a = similarity.kmeans_assign(load_table(spark, sf, "embeddings"),
-                                 k=KMEANS_K, rounds=KMEANS_ROUNDS)
+    a = similarity.kmeans_assign(load_table(spark, sf, "embeddings"))
     sizes = {r["cell"]: r["n"] for r in
              a.groupBy("cell").agg(F.count(F.lit(1)).alias("n")).collect()}
     assert set(cells) == set(sizes)
@@ -863,9 +848,7 @@ def test_shared_artifact_memos_are_per_session_and_corpus(spark):
     # and the memoized frames ARE the graded results
     from ethereum_export_pipeline_spark.operators import dedup
     from ethereum_export_pipeline_spark.sources.tables import load_table
-    fresh = dedup.minhash_lsh_pairs(
-        load_table(spark, sf, "documents"),
-        threshold=llm.NGRAM_THRESHOLD)
+    fresh = dedup.minhash_lsh_pairs(load_table(spark, sf, "documents"))
     assert sorted(map(tuple, p1.collect())) == \
         sorted(map(tuple, fresh.collect()))
 

@@ -88,7 +88,8 @@ def test_mmr_prefers_diverse_over_redundant(spark):
     c3[2] = 0.3
     rows = [Row(vec_id=0, embedding=q), Row(vec_id=11, embedding=c1),
             Row(vec_id=12, embedding=c2), Row(vec_id=13, embedding=c3)]
-    got = (S.mmr_rerank(spark.createDataFrame(rows), k=3)
+    # only 3 candidates: MMR_K=5 stages pick all 3, then run dry
+    got = (S.mmr_rerank(spark.createDataFrame(rows))
            .orderBy("step").collect())
     assert [r["step"] for r in got] == [1, 2, 3]
     assert got[0]["neighbor_id"] == 11      # cosine tie → low id
@@ -98,13 +99,15 @@ def test_mmr_prefers_diverse_over_redundant(spark):
 
 
 def test_mmr_respects_pool_bound(spark):
+    # 40 orthogonal vectors: every cosine ties at 0, so each query's
+    # pool is its MMR_POOL lowest-id candidates
     rows = [Row(vec_id=i, embedding=_vec(i % S.EMB_DIM, 1.0 + i))
-            for i in range(15)]
-    got = S.mmr_rerank(spark.createDataFrame(rows), k=2, pool=3,
-                       query_pred="vec_id < 1").collect()
-    # picks come only from the top-3 pool of query 0
-    assert len(got) == 2
-    assert all(r["query_id"] == 0 for r in got)
+            for i in range(40)]
+    got = S.mmr_rerank(spark.createDataFrame(rows)).collect()
+    assert len(got) == 10 * S.MMR_K           # queries vec_id < 10
+    for r in got:
+        pool = [i for i in range(40) if i != r["query_id"]][:S.MMR_POOL]
+        assert r["neighbor_id"] in pool
 
 
 # -------------------------------------------------------------- RAKE
@@ -128,8 +131,10 @@ def test_rake_hand_computed(spark):
 def test_rake_caps_phrase_length(spark):
     words = " ".join(f"w{i}" for i in range(6))   # one 6-word run
     docs = spark.createDataFrame([Row(doc_id=1, text=words)])
-    assert T.rake_keywords(docs).count() == 0     # > max_phrase → out
-    assert T.rake_keywords(docs, max_phrase=6).count() == 1
+    assert T.rake_keywords(docs).count() == 0     # > RAKE_MAX_PHRASE → out
+    run = " ".join(f"w{i}" for i in range(T.RAKE_MAX_PHRASE))
+    at_cap = spark.createDataFrame([Row(doc_id=1, text=run)])
+    assert T.rake_keywords(at_cap).count() == 1
 
 
 # -------------------------------------------------- trigram fluency

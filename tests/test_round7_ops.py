@@ -20,10 +20,11 @@ SF = "/root/testdata/sf0.001"
 # ------------------------------------------------- uint256 limb decode
 
 def _limb_rows(spark, values):
-    df = spark.createDataFrame([(v,) for v in values], "h string")
-    exprs = hex_uint256_limb32_exprs("h")
+    df = spark.createDataFrame([(v,) for v in values], "value_hex string")
+    exprs = hex_uint256_limb32_exprs()
     return df.selectExpr(
-        "h", *[f"{e} AS w{i}" for i, e in enumerate(exprs)]).collect()
+        "value_hex AS h",
+        *[f"{e} AS w{i}" for i, e in enumerate(exprs)]).collect()
 
 
 def _reassemble(row):
@@ -72,7 +73,7 @@ def test_range_search_radius_and_shape(spark):
         Row(vec_id=2, embedding=_vec(1)),         # orthogonal: cos 0
         Row(vec_id=3, embedding=[0.1] * 8),       # wrong dim: excluded
     ])
-    out = S.range_search(df, radius=0.8, query_pred="vec_id < 3")
+    out = S.range_search(df)   # cosine >= RANGE_COS for vec_id < 50
     assert out.columns == ["query_id", "neighbor_id", "cosine"]
     rows = {(r["query_id"], r["neighbor_id"]): r["cosine"]
             for r in out.collect()}
@@ -86,7 +87,7 @@ def test_range_search_radius_and_shape(spark):
 def test_range_search_self_excluded(spark):
     df = spark.createDataFrame([Row(vec_id=i, embedding=_vec(0))
                                 for i in range(3)])
-    rows = S.range_search(df, radius=0.5).collect()
+    rows = S.range_search(df).collect()
     assert rows and all(r["query_id"] != r["neighbor_id"] for r in rows)
 
 
@@ -225,9 +226,9 @@ def test_ivfpq_packed_matches_unpacked_ranks(spark):
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
     cents, books = get_quantizers()
     base = {(r["query_id"], r["rank"]): (r["neighbor_id"], r["adc_dist"])
-            for r in ivfpq_topk(emb, cents, books, k=3).collect()}
+            for r in ivfpq_topk(emb, cents, books).collect()}
     packed = {(r["query_id"], r["rank"]): (r["neighbor_id"], r["adc_dist"])
-              for r in ivfpq_packed_topk(emb, cents, books, k=3).collect()}
+              for r in ivfpq_packed_topk(emb, cents, books).collect()}
     assert base == packed and base
 
 
@@ -322,7 +323,7 @@ def test_apply_mapping_dual_precision_golden_schema(spark):
         ("0xcc", big),
     ]
     df = spark.createDataFrame(rows, "hash string, value string")
-    mapping = [m for m in mapping_for("transactions", partitioned=False)
+    mapping = [m for m in mapping_for("transactions")
                if m.dst in ("hash", "value")]
     out = apply_mapping_dual_precision(df, mapping)
     # golden schema: dec38 column AND the exact limb twin, in order
@@ -345,10 +346,13 @@ def test_apply_mapping_dual_precision_golden_schema(spark):
 # ------------------------------------------------ Matryoshka recall
 
 def test_mrl_full_prefix_is_perfect_recall(spark):
+    from pyspark.sql import functions as F
     from ethereum_export_pipeline_spark.operators.similarity import (
-        EMB_DIM, MRL_PREFIXES, matryoshka_recall_report)
+        EMB_DIM, MRL_PREFIXES, TOPK_K, brute_force_topk,
+        matryoshka_recall_report)
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    rows = matryoshka_recall_report(emb, k=3).collect()
+    exact = brute_force_topk(emb.where(F.size("embedding") == EMB_DIM))
+    rows = matryoshka_recall_report(emb, exact).collect()
     assert {r["prefix_dim"] for r in rows} == set(MRL_PREFIXES)
     by_p: dict[int, list] = {}
     for r in rows:
@@ -356,7 +360,7 @@ def test_mrl_full_prefix_is_perfect_recall(spark):
     # full-width prefix IS the exact ranking: recall must be 100%
     assert all(r["recall_ppm"] == 1_000_000 for r in by_p[EMB_DIM])
     # recall_ppm consistent with n_hits
-    assert all(r["recall_ppm"] == r["n_hits"] * 1_000_000 // 3
+    assert all(r["recall_ppm"] == r["n_hits"] * 1_000_000 // TOPK_K
                for r in rows)
     # truncation can only lose information: mean recall monotone
     # non-increasing as the prefix shrinks

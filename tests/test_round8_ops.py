@@ -37,11 +37,11 @@ def test_png_roundtrip_every_filter_and_shape():
     rng = np.random.RandomState(7)
     for shape in [(7, 9, 3), (1, 1, 3), (13, 8, 1), (4, 31, 3)]:
         px = rng.randint(0, 256, size=shape).astype(np.uint8)
-        for ft in [None, 0, 1, 2, 3, 4]:
-            filters = None if ft is None else [ft] * shape[0]
-            w, h, c, back = decode_png(encode_png(px, filters=filters))
-            assert (h, w, c) == shape
-            assert np.array_equal(back, px), (shape, ft)
+        # scanline filters cycle y % 5: the 7- and 13-row images
+        # exercise all five
+        w, h, c, back = decode_png(encode_png(px))
+        assert (h, w, c) == shape
+        assert np.array_equal(back, px), shape
 
 
 def test_png_dispatches_through_decode_image():
@@ -89,15 +89,16 @@ def test_png_rejects_malformed_never_raises():
 # ------------------------------------- hierarchy aggregates (no closure)
 
 def test_hierarchy_aggregates_matches_python_reference(spark):
-    """Deep chain (depth 19 — past the old rounds=3 closure reach),
-    a bushy star, and isolated roots: depth / n_desc / desc_sum must
-    equal a brute-force python walk."""
+    """Deep chain (depth 16 = 2^HIERARCHY_ROUNDS, the deepest the
+    closure reaches), a bushy star, and isolated roots: depth / n_desc
+    / desc_sum must equal a brute-force python walk."""
     from ethereum_export_pipeline_spark.operators.graph import (
-        hierarchy_aggregates)
-    # chain 1<-2<-...<-20 ; star 100<-{101..105} ; 200 isolated
-    parent = {i: i - 1 for i in range(2, 21)}
+        HIERARCHY_ROUNDS, hierarchy_aggregates)
+    # chain 1<-2<-...<-17 ; star 100<-{101..105} ; 200 isolated
+    depth = 2 ** HIERARCHY_ROUNDS
+    parent = {i: i - 1 for i in range(2, depth + 2)}
     parent.update({i: 100 for i in range(101, 106)})
-    nodes = list(range(1, 21)) + [100, 101, 102, 103, 104, 105, 200]
+    nodes = list(range(1, depth + 2)) + [100, 101, 102, 103, 104, 105, 200]
     val = {n: n * 7 for n in nodes}
 
     def anc(n):
@@ -115,9 +116,9 @@ def test_hierarchy_aggregates_matches_python_reference(spark):
     edges = spark.createDataFrame(
         [(c, p) for c, p in parent.items()], "child long, parent long")
     vals = spark.createDataFrame(
-        [(n, val[n]) for n in nodes], "node long, val long")
+        [(n, val[n]) for n in nodes], "c_custkey long, bal_cents long")
     got = {r["node"]: (r["depth"], r["n_desc"], r["desc_sum"])
-           for r in hierarchy_aggregates(edges, vals, rounds=5).collect()}
+           for r in hierarchy_aggregates(edges, vals).collect()}
     assert got == exp
 
 
@@ -211,13 +212,14 @@ def test_sq8_perfect_reconstruction_gives_full_recall(spark):
     query, including tie-heavy ones (cosine 0 everywhere, broken by
     neighbor_id in both passes)."""
     from ethereum_export_pipeline_spark.operators.similarity import (
-        sq8_recall_report)
+        brute_force_topk, sq8_recall_report)
     vecs = []
     for i in range(15):
         v = [0.0] * 64
         v[i] = 1.0
         vecs.append(v)
-    rep = sq8_recall_report(_emb_df(spark, vecs), k=5).collect()
+    df = _emb_df(spark, vecs)
+    rep = sq8_recall_report(df, brute_force_topk(df)).collect()
     assert [r.query_id for r in rep] == list(range(10))
     assert all(r.n_hits == 5 and r.recall_ppm == 1_000_000 for r in rep)
 
@@ -279,8 +281,7 @@ def test_hamming_topk_pigeonhole_finds_close_pair(spark):
         near[d] = -near[d]
     vecs = [base, near] + [
         [rng.choice([-0.3, 0.3]) for _ in range(64)] for _ in range(40)]
-    out = hamming_topk(_emb_df(spark, vecs), k=5,
-                       query_pred="vec_id < 1")
+    out = hamming_topk(_emb_df(spark, vecs)).where("query_id = 0")
     rows = {r.rank: r for r in out.collect()}
     assert rows, "no candidates found"
     assert rows[1].neighbor_id == 1 and rows[1].hamming == 3
@@ -410,17 +411,19 @@ def test_ssjoin_prefix_matches_bruteforce_exactly(spark):
 
 
 def test_ssjoin_prefix_finds_pairs_the_df_cut_misses(spark):
-    """Ten identical boilerplate-only docs: every shingle has df=10,
-    so a df-cut of 3 empties the inverted index and
+    """DEFAULT_MAX_DF + 1 identical boilerplate-only docs: every
+    shingle is past the df-cut, so the inverted index is empty and
     ngram_jaccard_pairs reports NOTHING — the prefix join must still
-    report all 45 pairs at jaccard 1.0 (hot shingles sit in the
-    suffix order-wise but identical docs share their whole prefix)."""
+    report every pair at jaccard 1.0 (hot shingles sit in the suffix
+    order-wise but identical docs share their whole prefix)."""
+    from pyspark.sql import functions as F
     from ethereum_export_pipeline_spark.operators import dedup
+    n = dedup.DEFAULT_MAX_DF + 1
     docs = spark.createDataFrame(
-        [(i, "terms of service apply to everything here") for i in range(10)],
+        [(i, "terms of service apply to everything here") for i in range(n)],
         "doc_id long, text string")
-    cut = dedup.ngram_jaccard_pairs(docs, max_shingle_df=3).collect()
-    assert cut == []
-    exact = dedup.ssjoin_prefix_pairs(docs).collect()
-    assert len(exact) == 45
-    assert all(r.jaccard == 1.0 for r in exact)
+    assert dedup.ngram_jaccard_pairs(docs).count() == 0
+    [r] = (dedup.ssjoin_prefix_pairs(docs)
+           .agg(F.count(F.lit(1)).alias("n"), F.min("jaccard").alias("j"))
+           .collect())
+    assert (r.n, r.j) == (n * (n - 1) // 2, 1.0)

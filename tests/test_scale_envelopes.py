@@ -104,10 +104,12 @@ def measured(tmp_path_factory):
 
     def hierarchy_aggregates():
         n = 10_000 * AMPLIFY
-        parents = (spark.range(n).where("id % 64 != 0")
+        # chains of depth 15 < 2^HIERARCHY_ROUNDS
+        parents = (spark.range(n).where("id % 16 != 0")
                         .selectExpr("id AS child", "id - 1 AS parent"))
-        vals = spark.range(n).selectExpr("id AS node", "id % 97 AS val")
-        return ha(parents, vals, rounds=6)
+        vals = spark.range(n).selectExpr("id AS c_custkey",
+                                         "id % 97 AS bal_cents")
+        return ha(parents, vals)
 
     qs = entry.queries()
     ops = {

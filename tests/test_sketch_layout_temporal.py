@@ -15,9 +15,8 @@ def test_kmv_exact_below_k(spark):
     rows = ([("a", f"k{i}") for i in range(5)]
             + [("a", "k0")]              # duplicate: distinct = 5
             + [("b", f"k{i}") for i in range(3, 10)])  # distinct = 7
-    df = spark.createDataFrame(rows, "grp string, key string")
-    out = {r["grp"]: r for r in
-           kmv_sketch(df, group_col="grp", key_col="key", k=32).collect()}
+    df = spark.createDataFrame(rows, "source string, text string")
+    out = {r["source"]: r for r in kmv_sketch(df).collect()}
     assert out["a"]["n_kept"] == 5 and out["a"]["est_distinct"] == 5.0
     assert out["b"]["n_kept"] == 7 and out["b"]["est_distinct"] == 7.0
     # union of the two key sets = k0..k9 → merged exact = 10
@@ -28,12 +27,12 @@ def test_kmv_exact_below_k(spark):
 def test_kmv_estimates_within_tolerance(spark):
     """For n >> k the estimate lands within the sketch's expected
     relative error envelope (σ ≈ 1/√(k−2); allow 4σ)."""
-    from ethereum_export_pipeline_spark.operators.sketch import kmv_sketch
-    k, n = 64, 5000
+    from ethereum_export_pipeline_spark.operators.sketch import (
+        SKETCH_K, kmv_sketch)
+    k, n = SKETCH_K, 5000
     df = spark.createDataFrame([("g", f"key-{i}") for i in range(n)],
-                               "grp string, key string")
-    row = {r["grp"]: r for r in
-           kmv_sketch(df, group_col="grp", key_col="key", k=k).collect()}
+                               "source string, text string")
+    row = {r["source"]: r for r in kmv_sketch(df).collect()}
     est = row["g"]["est_distinct"]
     assert row["g"]["n_kept"] == k
     assert abs(est - n) / n < 4 / (k - 2) ** 0.5, est
@@ -46,15 +45,12 @@ def test_kmv_merge_equals_sketch_of_union(spark):
     SAME sketch as hashing the union directly — the property that
     lets 1000 executors combine partials without a rescan."""
     from ethereum_export_pipeline_spark.operators.sketch import kmv_sketch
-    k = 16
     rows = ([("a", f"x{i}") for i in range(200)]
             + [("b", f"x{i}") for i in range(100, 300)])  # overlap 100..199
-    df = spark.createDataFrame(rows, "grp string, key string")
-    merged = {r["grp"]: r for r in
-              kmv_sketch(df, group_col="grp", key_col="key", k=k).collect()}
-    direct = {r["grp"]: r for r in
-              kmv_sketch(df.withColumn("grp", F.lit("u")),
-                         group_col="grp", key_col="key", k=k).collect()}
+    df = spark.createDataFrame(rows, "source string, text string")
+    merged = {r["source"]: r for r in kmv_sketch(df).collect()}
+    direct = {r["source"]: r for r in
+              kmv_sketch(df.withColumn("source", F.lit("u"))).collect()}
     assert merged["__ALL__"]["kth_min"] == direct["u"]["kth_min"]
     assert merged["__ALL__"]["est_distinct"] == direct["u"]["est_distinct"]
 
@@ -88,37 +84,42 @@ def test_compaction_plan_order_and_conservation(spark):
     """Offset binning: key order preserved (bins are contiguous key
     ranges), every file in exactly one bin, bytes conserved, and an
     oversized file leaves the bins its tail spans empty."""
-    from ethereum_export_pipeline_spark.operators.layout import compaction_plan
-    files = [(i, 10) for i in range(10)]          # 100 B of small files
-    files.append((10, 250))                       # oversized (target 100)
-    files += [(11 + i, 30) for i in range(6)]     # 180 B tail
+    from ethereum_export_pipeline_spark.operators.layout import (
+        COMPACT_TARGET, compaction_plan)
+    t = COMPACT_TARGET
+    files = [(i, t // 8) for i in range(8)]       # one target of small files
+    files.append((8, 5 * t // 2))                 # oversized: 2.5 targets
+    files += [(9 + i, t // 4) for i in range(6)]  # 1.5 targets of tail
     df = spark.createDataFrame(files, "file_id long, bytes long")
-    plan = (compaction_plan(df, target_bytes=100)
-            .orderBy("bin").collect())
+    plan = compaction_plan(df).orderBy("bin").collect()
     assert sum(r["n_files"] for r in plan) == len(files)
-    assert sum(r["total_bytes"] for r in plan) == 10 * 10 + 250 + 6 * 30
+    assert sum(r["total_bytes"] for r in plan) == 5 * t
     # bins cover disjoint, increasing key ranges
     for prev, cur in zip(plan, plan[1:]):
         assert prev["last_file"] < cur["first_file"]
-    # the oversized file starts at offset 100 → bin 1, alone; its tail
+    # the oversized file starts at offset t → bin 1, alone; its tail
     # spans bins 2 and 3 which therefore don't exist; next file starts
-    # at offset 350 → bin 3 exists for the tail files
+    # at offset 3.5t → bin 3 exists for the tail files
     by_bin = {r["bin"]: r for r in plan}
-    assert by_bin[1]["n_files"] == 1 and by_bin[1]["total_bytes"] == 250
+    assert by_bin[1]["n_files"] == 1 and by_bin[1]["total_bytes"] == 5 * t // 2
     assert 2 not in by_bin
-    assert by_bin[3]["first_file"] == 11
+    assert by_bin[3]["first_file"] == 9
 
 
 def test_compaction_plan_two_level_prefix_sum_crosses_buckets(spark):
     """The distributed prefix sum must be globally correct across
-    bucket boundaries (bucket=4 forces multiple buckets)."""
-    from ethereum_export_pipeline_spark.operators.layout import compaction_plan
-    df = spark.createDataFrame([(i, 7) for i in range(40)],
-                               "file_id long, bytes long")
-    plan = compaction_plan(df, target_bytes=70, bucket=4).orderBy("bin").collect()
-    # 40×7=280 bytes → exactly 4 bins of 10 files each
-    assert [r["n_files"] for r in plan] == [10, 10, 10, 10]
-    assert [r["first_file"] for r in plan] == [0, 10, 20, 30]
+    bucket boundaries (ids 128 apart span 4 COMPACT_BUCKETs)."""
+    from ethereum_export_pipeline_spark.operators.layout import (
+        COMPACT_BUCKET, COMPACT_TARGET, compaction_plan)
+    step = COMPACT_BUCKET // 8
+    df = spark.createDataFrame(
+        [(i * step, COMPACT_TARGET // 8) for i in range(32)],
+        "file_id long, bytes long")
+    plan = compaction_plan(df).orderBy("bin").collect()
+    # 32 eighth-target files → exactly 4 bins of 8 files each
+    assert [r["n_files"] for r in plan] == [8, 8, 8, 8]
+    assert [r["first_file"] for r in plan] == [0, 8 * step, 16 * step,
+                                               24 * step]
 
 
 # ------------------------------------------------------------------ SCD2
@@ -166,7 +167,7 @@ def test_bloom_no_false_negatives_and_rejects_most(spark):
         bloom_build, bloom_probe)
     members = spark.createDataFrame([(f"in-{i}",) for i in range(200)],
                                     "key string")
-    limbs = bloom_build(members)
+    limbs = bloom_build(members.withColumnRenamed("key", "shingle"))
     hits = bloom_probe(members, limbs).collect()
     assert all(r["bloom_hit"] == 1 for r in hits) and len(hits) == 200
     outsiders = spark.createDataFrame([(f"out-{i}",) for i in range(500)],
@@ -182,7 +183,7 @@ def test_bloom_limb_table_is_bounded(spark):
     from ethereum_export_pipeline_spark.operators.sketch import (
         BLOOM_M, bloom_build)
     big = spark.createDataFrame([(f"k{i}",) for i in range(5000)],
-                                "key string")
+                                "shingle string")
     assert bloom_build(big).count() <= BLOOM_M // 32
 
 
@@ -243,11 +244,12 @@ def test_bm25_saturation_and_length_normalization(spark):
     docs = [(1, "hot hot hot"),          # tf=3, dl=3
             (2, "hot hot hot pad pad pad pad pad pad"),  # tf=3, dl=9
             (3, "hot"),                  # tf=1
-            (4, "cold cold")]            # no query term (hot is top-df)
+            (4, "cold cold"),            # no query term
+            (5, "aa ab"), (6, "aa ab")]  # aa, ab: df=2
     df = spark.createDataFrame(docs, "doc_id long, text string")
-    out = {r["doc_id"]: r for r in
-           bm25_topk(df, n_query_terms=1, k=10).collect()}
-    assert 4 not in out  # 'hot' is the single query term (df=3 > others)
+    out = {r["doc_id"]: r for r in bm25_topk(df).collect()}
+    # the BM25_QTERMS=3 top-df query terms are hot (df=3), aa and ab
+    assert 4 not in out
     assert out[1]["score"] > out[2]["score"] > 0   # length normalization
     assert out[1]["score"] > out[3]["score"]       # tf monotone
     ranked = sorted(out.values(), key=lambda r: r["rank"])
@@ -266,8 +268,8 @@ def test_jl_rerank_scores_exact_and_recall(spark):
         brute_force_topk, jl_rerank_topk, JL_CAND)
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     exact = {(r["query_id"], r["neighbor_id"]): r["cosine"]
-             for r in brute_force_topk(emb, k=5).collect()}
-    rr = jl_rerank_topk(emb, k=5).collect()
+             for r in brute_force_topk(emb).collect()}
+    rr = jl_rerank_topk(emb).collect()
     got = {(r["query_id"], r["neighbor_id"]): r["cosine"] for r in rr}
     assert all(1 <= r["p_rank"] <= JL_CAND for r in rr)
     common = set(exact) & set(got)
@@ -278,11 +280,6 @@ def test_jl_rerank_scores_exact_and_recall(spark):
     # near-orthogonal random vectors are JL's worst case; the graded
     # config (out_dim=32, cand=80) measured 0.64 on this corpus
     assert recall >= 0.5, f"recall@5 collapsed: {recall}"
-    # degeneracy invariant: a candidate budget covering the corpus
-    # makes stage 2 a full exact rerank — recall exactly 1.0
-    full = {(r["query_id"], r["neighbor_id"]): r["cosine"]
-            for r in jl_rerank_topk(emb, k=5, n_cand=10_000).collect()}
-    assert full == exact
 
 
 # ------------------------------------------------- count-min sketch
@@ -343,7 +340,7 @@ def test_cms_heavy_hitters_report_shape(spark):
         [Row(doc_id=1, text="spark spark spark duck duck goose"),
          Row(doc_id=2, text="spark duck")],
         "doc_id long, text string")
-    rows = cms_heavy_hitters(df, k=3).orderBy("rank").collect()
+    rows = cms_heavy_hitters(df).orderBy("rank").collect()
     assert [r.tok for r in rows] == ["spark", "duck", "goose"]
     assert [r.exact_cnt for r in rows] == [4, 3, 1]
     assert all(r.overcount >= 0 for r in rows)
@@ -355,12 +352,12 @@ def test_equiwidth_histogram_known_bins(spark):
     from ethereum_export_pipeline_spark.operators.checks import (
         equiwidth_histogram)
     from pyspark.sql import Row
-    rows = [Row(src="a", v=0), Row(src="a", v=9), Row(src="a", v=10),
-            Row(src="b", v=99), Row(src="b", v=None)]
-    df = spark.createDataFrame(rows, "src string, v long")
-    out = {(r.src, r.bin): r for r in
-           equiwidth_histogram(df, "src", "v", n_bins=10).collect()}
-    # global range [0,99], width 10: v=0,9 → bin 0; 10 → bin 1; 99 → 9
+    rows = [Row(source="a", n_chars=0), Row(source="a", n_chars=9),
+            Row(source="a", n_chars=10), Row(source="b", n_chars=99),
+            Row(source="b", n_chars=None)]
+    df = spark.createDataFrame(rows, "source string, n_chars long")
+    out = {(r.source, r.bin): r for r in equiwidth_histogram(df).collect()}
+    # global range [0,99], width 10: n_chars=0,9 → bin 0; 10 → bin 1; 99 → 9
     assert out[("a", 0)].n == 2
     assert (out[("a", 0)].bin_lo, out[("a", 0)].bin_hi) == (0, 9)
     assert out[("a", 1)].n == 1
@@ -373,11 +370,12 @@ def test_equiwidth_histogram_counts_conserved(spark):
     from ethereum_export_pipeline_spark.operators.checks import (
         equiwidth_histogram)
     from pyspark.sql import Row
-    rows = [Row(src=str(i % 3), v=i * 7 % 101) for i in range(200)]
-    df = spark.createDataFrame(rows, "src string, v long")
-    out = equiwidth_histogram(df, "src", "v", n_bins=7)
+    rows = [Row(source=str(i % 3), n_chars=i * 7 % 101) for i in range(200)]
+    df = spark.createDataFrame(rows, "source string, n_chars long")
+    from ethereum_export_pipeline_spark.operators.checks import HIST_BINS
+    out = equiwidth_histogram(df)
     assert out.agg(F.sum("n")).collect()[0][0] == 200
-    assert out.where("bin < 0 OR bin > 6").count() == 0
+    assert out.where(f"bin < 0 OR bin > {HIST_BINS - 1}").count() == 0
 
 
 def test_robust_outlier_census_known_answer(spark):
@@ -386,9 +384,9 @@ def test_robust_outlier_census_known_answer(spark):
     from pyspark.sql import Row
     # group a: 1,2,3,4,100 → median 3 (idx 2), |d| = 2,1,0,1,97 →
     # MAD 1 (sorted 0,1,1,2,97 idx 2); outliers: d > 3 → only 100
-    rows = [Row(src="a", v=x) for x in (1, 2, 3, 4, 100)]
-    df = spark.createDataFrame(rows, "src string, v long")
-    [r] = robust_outlier_census(df, "src", "v", k=3).collect()
+    rows = [Row(source="a", n_chars=x) for x in (1, 2, 3, 4, 100)]
+    df = spark.createDataFrame(rows, "source string, n_chars long")
+    [r] = robust_outlier_census(df).collect()   # OUTLIER_K = 3
     assert (r.n, r.median, r.mad, r.n_outliers) == (5, 3, 1, 1)
     assert r.outlier_ppm == 1_000_000 // 5
 
@@ -398,9 +396,9 @@ def test_robust_outlier_zero_mad_degenerate(spark):
         robust_outlier_census)
     from pyspark.sql import Row
     # constant group: MAD 0 → any deviant flagged (documented)
-    rows = [Row(src="c", v=5)] * 6 + [Row(src="c", v=6)]
-    df = spark.createDataFrame(rows, "src string, v long")
-    [r] = robust_outlier_census(df, "src", "v").collect()
+    rows = [Row(source="c", n_chars=5)] * 6 + [Row(source="c", n_chars=6)]
+    df = spark.createDataFrame(rows, "source string, n_chars long")
+    [r] = robust_outlier_census(df).collect()
     assert (r.median, r.mad, r.n_outliers) == (5, 0, 1)
 
 
@@ -418,7 +416,7 @@ def test_kmv_pair_overlap_exact_small_sets(spark):
             + [Row(source="c", text=f"z{i}") for i in range(4)])
     df = spark.createDataFrame(rows, "source string, text string")
     out = {(r.grp_a, r.grp_b): r for r in
-           kmv_pair_overlap(df, k=32).collect()}
+           kmv_pair_overlap(df).collect()}
     ab = out[("a", "b")]
     assert ab.n_union_kept == 9 and ab.n_both == 3
     assert ab.est_union == 9.0
@@ -439,7 +437,7 @@ def test_kmv_pair_overlap_estimates_track_truth(spark):
             + [Row(source="b", text=f"s{i}") for i in range(400)]
             + [Row(source="b", text=f"b{i}") for i in range(400)])
     df = spark.createDataFrame(rows, "source string, text string")
-    [r] = kmv_pair_overlap(df, k=64).collect()
+    [r] = kmv_pair_overlap(df).collect()
     assert 150 <= r.est_inter <= 750
     assert 800 <= r.est_union <= 1800
 
@@ -449,18 +447,19 @@ def test_equidepth_histogram_decile_mass(spark):
     from ethereum_export_pipeline_spark.operators.checks import (
         equidepth_histogram)
     # 100 distinct values in one group → 10 bins of 10 values each
-    rows = [Row(src="a", v=i) for i in range(100)]
-    df = spark.createDataFrame(rows, "src string, v long")
-    out = sorted(equidepth_histogram(df, "src", "v", n_bins=10).collect(),
+    rows = [Row(source="a", n_chars=i) for i in range(100)]
+    df = spark.createDataFrame(rows, "source string, n_chars long")
+    out = sorted(equidepth_histogram(df).collect(),   # HIST_BINS = 10
                  key=lambda r: r.bin)
     assert [r.n for r in out] == [10] * 10
     assert out[0].lo == 0 and out[0].hi == 9
     assert out[9].lo == 90 and out[9].hi == 99
     # repeated values weight bin POPULATION, not bin assignment
-    rows2 = [Row(src="a", v=1)] * 50 + [Row(src="a", v=i + 10)
+    rows2 = [Row(source="a", n_chars=1)] * 50 + [
+        Row(source="a", n_chars=i + 10)
                                         for i in range(10)]
-    df2 = spark.createDataFrame(rows2, "src string, v long")
-    out2 = equidepth_histogram(df2, "src", "v", n_bins=2).collect()
+    df2 = spark.createDataFrame(rows2, "source string, n_chars long")
+    out2 = equidepth_histogram(df2).collect()
     assert sum(r.n for r in out2) == 60
 
 
@@ -482,9 +481,9 @@ def test_hll_register_matches_python_reference(spark):
     key; exact column counts the keys."""
     from ethereum_export_pipeline_spark.operators.sketch import (
         HLL_M, HLL_RCAP, hll_sketch)
-    df = spark.createDataFrame([("g", "hello")], "grp string, k string")
-    row = {r["grp"]: r for r in
-           hll_sketch(df, group_col="grp", key_col="k").collect()}
+    df = spark.createDataFrame([("g", "hello")], "source string, tok string")
+    row = {r["source"]: r for r in
+           hll_sketch(df).collect()}
     _, rho = _py_hll_parts("hello")
     reg = min(rho, HLL_RCAP)
     expect = (HLL_M - 1) * (1 << HLL_RCAP) + (1 << (HLL_RCAP - reg))
@@ -500,9 +499,9 @@ def test_hll_estimate_tracks_truth(spark):
     from ethereum_export_pipeline_spark.operators.sketch import hll_sketch
     n = 5000
     df = spark.createDataFrame([("g", f"key-{i}") for i in range(n)],
-                               "grp string, k string")
-    row = {r["grp"]: r for r in
-           hll_sketch(df, group_col="grp", key_col="k").collect()}
+                               "source string, tok string")
+    row = {r["source"]: r for r in
+           hll_sketch(df).collect()}
     est = row["g"]["est_hll"]
     assert abs(est - n) / n < 0.78, est
     assert row["g"]["exact_distinct"] == n
@@ -514,13 +513,13 @@ def test_hll_merge_equals_sketch_of_union(spark):
     from ethereum_export_pipeline_spark.operators.sketch import hll_sketch
     rows = ([("a", f"x{i}") for i in range(300)]
             + [("b", f"x{i}") for i in range(150, 450)])
-    df = spark.createDataFrame(rows, "grp string, k string")
-    merged = {r["grp"]: r for r in
-              hll_sketch(df, group_col="grp", key_col="k").collect()}
+    df = spark.createDataFrame(rows, "source string, tok string")
+    merged = {r["source"]: r for r in
+              hll_sketch(df).collect()}
     union = spark.createDataFrame([("u", k) for _, k in rows],
-                                  "grp string, k string")
-    direct = {r["grp"]: r for r in
-              hll_sketch(union, group_col="grp", key_col="k").collect()}
+                                  "source string, tok string")
+    direct = {r["source"]: r for r in
+              hll_sketch(union).collect()}
     assert merged["__ALL__"]["sum_fp"] == direct["u"]["sum_fp"]
     assert merged["__ALL__"]["est_hll"] == direct["u"]["est_hll"]
     assert merged["__ALL__"]["exact_distinct"] == 450

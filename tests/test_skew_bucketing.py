@@ -22,12 +22,14 @@ def test_salted_agg_matches_plain_agg(spark, skewed):
     plain = {r.k: (r.n, r.s) for r in
              skewed.groupBy("k").agg(F.count("*").alias("n"),
                                      F.sum("v").alias("s")).collect()}
+    # salted_agg groups on event_type, salted by event_id
+    ev = skewed.select(F.col("k").alias("event_type"),
+                       F.col("v").alias("event_id"), "v")
     salted = salted_agg(
-        skewed, "k",
+        ev,
         partials=[(F.count(F.lit(1)), "pn"), (F.sum("v"), "ps")],
-        finals=[(F.sum("pn"), "n"), (F.sum("ps"), "s")],
-        salt_src="v")
-    got = {r.k: (r.n, r.s) for r in salted.collect()}
+        finals=[(F.sum("pn"), "n"), (F.sum("ps"), "s")])
+    got = {r.event_type: (r.n, r.s) for r in salted.collect()}
     assert got == plain
 
 

@@ -62,9 +62,12 @@ MATERIALIZERS = ("localCheckpoint", "checkpoint")
 
 
 def _counts(df) -> list[int]:
+    """Node counts: the "formatted" explain gives every node one
+    `(id) Name` header in its details block (the tree names it again)."""
     txt = df._sc._jvm.PythonSQLUtils.explainString(
         df._jdf.queryExecution(), "formatted")
-    return [len(re.findall(rx, txt)) for rx in COUNTERS.values()]
+    nodes = "\n".join(re.findall(r"^\(\d+\) (.*)$", txt, re.M))
+    return [len(re.findall(rx, nodes)) for rx in COUNTERS.values()]
 
 
 def row_names() -> list[str]:

@@ -932,55 +932,32 @@ ORDER BY gen
 def _staged_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S8 — the two-phase staged export graded END-TO-END (reference
     export_all.sh + the S3 staging step; SURVEY §2.1): write customer
-    through the `ethereum_staged_csv` Python Data Source (executors
-    land parts into `_staging/`, the driver renames them in and
-    commits `_MANIFEST.json` LAST), verify the committed state
-    locally (manifest totals consistent, directory == manifest file
-    list, no staging residue), then READ THE EXPORT BACK through the
-    manifest's own file list with a declared schema. The oracle
-    selects the same rows straight from the source table, so a lost
-    part, a double-committed attempt, or a mis-quoted CSV cell flips
-    the hash."""
+    through `sources.staged_sink.write_staged_csv` (Spark's CSV writer
+    lands parts in `_staging/`, the driver cross-checks the row counts,
+    renames the parts in and commits `_MANIFEST.json`), verify the
+    committed state locally (manifest totals consistent, directory ==
+    manifest file list, no staging residue), then READ THE EXPORT BACK
+    through the manifest's own file list with a declared schema. The
+    oracle selects the same rows straight from the source table, so a
+    lost part, a double-committed attempt, or a mis-quoted CSV cell
+    flips the hash."""
     import os
-    from ..sources.staged_sink import (MANIFEST, StagedCsvDataSource,
-                                       read_manifest)
-
-    def _register(sess):
-        try:
-            sess.dataSource.register(StagedCsvDataSource)
-        except Exception as ex:  # registry is context-global (see
-            if "DATA_SOURCE_ALREADY_EXISTS" not in str(ex):  # datasource.register)
-                raise
-
-    def _write(sess):
-        c = load_table(sess, sf_dir, "customer")
-        (c.select("c_custkey", "c_name", "c_nationkey",
-                  F.expr("CAST(round(c_acctbal * 100) AS BIGINT)")
-                   .alias("acctbal_cents"))
-          .write.format("ethereum_staged_csv").mode("overwrite").save(out))
+    from ..sources.staged_sink import (STAGING, read_manifest,
+                                       write_staged_csv)
 
     out = scratch_dir("spark_graft_staged_")
-    _register(spark)
-    try:
-        _write(spark)
-    except Exception as ex:
-        # ALREADY_EXISTS above can mean a POISONED inherited registry
-        # entry (the documented Spark 4.1 trap: a child created after
-        # a parent registration re-registers as ALREADY_EXISTS yet
-        # resolves as NOT_FOUND). Mirror streaming._chain_session:
-        # rerun on a session that owns a live registration.
-        if "DATA_SOURCE_NOT_FOUND" not in str(ex):
-            raise
-        from ..session import isolated_session
-        child = isolated_session(spark)
-        _register(child)
-        _write(child)
+    c = load_table(spark, sf_dir, "customer")
+    write_staged_csv(
+        c.select("c_custkey", "c_name", "c_nationkey",
+                 F.expr("CAST(round(c_acctbal * 100) AS BIGINT)")
+                  .alias("acctbal_cents")),
+        out, "overwrite")
     m = read_manifest(out)
     if m["total_rows"] != sum(f["rows"] for f in m["files"]):
         raise AssertionError(f"manifest total inconsistent: {m}")
     on_disk = {f for f in os.listdir(out) if f.endswith(".csv")}
     listed = {f["file"] for f in m["files"]}
-    if on_disk != listed or os.path.isdir(os.path.join(out, "_staging")):
+    if on_disk != listed or os.path.isdir(os.path.join(out, STAGING)):
         raise AssertionError(
             f"committed directory != manifest: {on_disk ^ listed}")
     schema = T.StructType([
@@ -990,7 +967,8 @@ def _staged_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         T.StructField("acctbal_cents", T.LongType()),
     ])
     paths = [os.path.join(out, f["file"]) for f in m["files"]]
-    return (spark.read.option("header", True).schema(schema).csv(paths)
+    return (spark.read.option("header", True).option("escape", '"')
+                 .schema(schema).csv(paths)
                  .select("c_custkey", "c_name", "c_nationkey",
                          "acctbal_cents"))
 

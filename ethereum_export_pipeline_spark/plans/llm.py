@@ -30,7 +30,8 @@ from ..operators import dedup, multimodal, similarity, sketch, text
 from ..operators.checks import HIST_BINS, OUTLIER_K
 from ..operators.dedup import BENCH_MOD, NGRAM_THRESHOLD
 from ..operators.graph import KCORE_K, KCORE_ROUNDS, LPA_ROUNDS
-from ..operators.multimodal import AUDIO_TARGET_RATE, IMG_MAX_HAMMING
+from ..operators.multimodal import (AUDIO_TARGET_RATE, IMG_MAX_HAMMING,
+                                    RESIZE_PX, SAMPLE_FRAMES)
 from ..operators.similarity import (KMEANS_K, KMEANS_ROUNDS, LSH_PLANES,
                                     LSH_TOPK_BANDS, MMR_K, MULTIBAND_BANDS,
                                     NEARDUP_COS, RANGE_BANDS, RANGE_COS,
@@ -1129,15 +1130,18 @@ def _resize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _resize_sql() -> str:
     """DuckDB twin of decode(resize(decode(ppm)))): same source-pixel
-    gather over the tiled plane. Output n_bytes is the re-encoded
-    payload: 'P6\\n64 64\\n255\\n' (13) + 64·64·3 = 12301."""
+    gather over the tiled plane, RESIZE_PX square. Output n_bytes is the
+    re-encoded payload: the 'P6\\n{px} {px}\\n255\\n' header + px·px·3
+    (12301 at px = 64)."""
+    px = RESIZE_PX
+    n_bytes = len(f"P6\n{px} {px}\n255\n") + 3 * px * px
     digit = "strpos('0123456789ABCDEF', hx[{i}]) - 1"
     byte_at = (f"16 * ({digit.format(i='2*p+1')}) + ({digit.format(i='2*p+2')})")
-    idx = ("((((k // 64) * h // 64) * w + ((k % 64) * w // 64)) * 3 "
-           "+ {c}) % nb + 1")
+    idx = (f"((((k // {px}) * h // {px}) * w + ((k % {px}) * w // {px}))"
+           " * 3 + {c}) % nb + 1")
     ch_sums = ", ".join(
         "CASE WHEN nb IS NULL THEN NULL WHEN nb = 0 THEN CAST(0 AS BIGINT) "
-        f"ELSE CAST(list_sum(list_transform(range(4096), "
+        f"ELSE CAST(list_sum(list_transform(range({px * px}), "
         f"k -> vals[{idx.format(c=c)}])) AS BIGINT) END AS ch_sum_{c}"
         for c in range(3))
     return f"""
@@ -1158,9 +1162,9 @@ WITH m AS (
 )
 SELECT doc_id AS media_id,
        CASE WHEN nb IS NULL THEN CAST(0 AS BIGINT)
-            ELSE CAST(12301 AS BIGINT) END AS n_bytes,
-       CASE WHEN nb IS NULL THEN NULL ELSE CAST(64 AS INTEGER) END AS width,
-       CASE WHEN nb IS NULL THEN NULL ELSE CAST(64 AS INTEGER) END AS height,
+            ELSE CAST({n_bytes} AS BIGINT) END AS n_bytes,
+       CASE WHEN nb IS NULL THEN NULL ELSE CAST({px} AS INTEGER) END AS width,
+       CASE WHEN nb IS NULL THEN NULL ELSE CAST({px} AS INTEGER) END AS height,
        {ch_sums}
 FROM v
 """
@@ -1185,9 +1189,10 @@ def _frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _frame_sample_sql() -> str:
-    """DuckDB twin: total = 2 + id % 5 (≥ 2, so exactly 2 samples with
-    src_frame = k·total // 2); frame f's plane byte j = text byte
-    (j + f) mod nb; channel sums over the 8×8 frame."""
+    """DuckDB twin: total = 2 + id % 5 (≥ SAMPLE_FRAMES = 2, so exactly
+    SAMPLE_FRAMES samples with src_frame = k·total // SAMPLE_FRAMES);
+    frame f's plane byte j = text byte (j + f) mod nb; channel sums
+    over the 8×8 frame."""
     digit = "strpos('0123456789ABCDEF', hx[{i}]) - 1"
     byte_at = (f"16 * ({digit.format(i='2*p+1')}) + ({digit.format(i='2*p+2')})")
     ch_sums = ", ".join(
@@ -1208,8 +1213,8 @@ WITH m AS (
               ELSE list_transform(range(nb), p -> {byte_at}) END AS vals
   FROM m
 ), f AS (
-  SELECT doc_id, nb, vals, k, (k * total) // 2 AS fi
-  FROM v, UNNEST(range(2)) u(k)
+  SELECT doc_id, nb, vals, k, (k * total) // {SAMPLE_FRAMES} AS fi
+  FROM v, UNNEST(range({SAMPLE_FRAMES})) u(k)
 )
 SELECT doc_id AS media_id, k AS sample_idx, fi AS src_frame,
        CAST(8 AS INTEGER) AS width, CAST(8 AS INTEGER) AS height,

@@ -478,14 +478,13 @@ def test_stream_dedup_within_watermark_one_row_per_key(spark, tmp_path):
 def test_staged_csv_writer_two_phase_commit(spark, tmp_path):
     import json, os
     from ethereum_export_pipeline_spark.sources import staged_sink
-    staged_sink.register(spark)
     dest = str(tmp_path / "staged_out")
     df = (spark.range(100)
                .selectExpr("id AS number", "concat('0x', id) AS hash",
                            "CASE WHEN id = 7 THEN 'a,\"b\"' END AS memo")
                .repartition(4))
-    # the Python DataSource writer protocol supports append/overwrite
-    df.write.format("ethereum_staged_csv").mode("append").save(dest)
+    # append into a directory with no export yet starts one
+    staged_sink.write_staged_csv(df, dest, "append")
     man = staged_sink.read_manifest(dest)
     # manifest totals match, staging is gone, files exist as listed
     assert man["total_rows"] == 100
@@ -501,19 +500,19 @@ def test_staged_csv_writer_two_phase_commit(spark, tmp_path):
     assert back.count() == 100
     assert back.where("number = 7").collect()[0].memo == 'a,"b"'
     # overwrite mode replaces the previous export atomically
-    (spark.range(10).selectExpr("id AS number", "'h' AS hash",
-                                "'m' AS memo")
-          .repartition(2).write.format("ethereum_staged_csv")
-          .mode("overwrite").save(dest))
+    staged_sink.write_staged_csv(
+        spark.range(10).selectExpr("id AS number", "'h' AS hash",
+                                   "'m' AS memo").repartition(2),
+        dest, "overwrite")
     man2 = staged_sink.read_manifest(dest)
     assert man2["total_rows"] == 10
     assert spark.read.option("header", "true").csv(dest).count() == 10
     # append ACCUMULATES: run-unique part names never collide with a
     # prior run's files, and the manifest merges both runs
-    (spark.range(5).selectExpr("id AS number", "'h2' AS hash",
-                               "'m2' AS memo")
-          .repartition(1).write.format("ethereum_staged_csv")
-          .mode("append").save(dest))
+    staged_sink.write_staged_csv(
+        spark.range(5).selectExpr("id AS number", "'h2' AS hash",
+                                  "'m2' AS memo").repartition(1),
+        dest, "append")
     man3 = staged_sink.read_manifest(dest)
     assert man3["total_rows"] == 15
     assert len(man3["files"]) == 3  # 2 from overwrite run + 1 appended
@@ -526,14 +525,97 @@ def test_staged_csv_writer_two_phase_commit(spark, tmp_path):
     orphan = os.path.join(dest, "part-deadbeef-00000000.csv")
     with open(orphan, "w") as f:
         f.write("number,hash,memo\n1,0xdead,zombie\n")
-    (spark.range(2).selectExpr("id AS number", "'h3' AS hash",
-                               "'m3' AS memo")
-          .repartition(1).write.format("ethereum_staged_csv")
-          .mode("append").save(dest))
+    staged_sink.write_staged_csv(
+        spark.range(2).selectExpr("id AS number", "'h3' AS hash",
+                                  "'m3' AS memo").repartition(1),
+        dest, "append")
     man4 = staged_sink.read_manifest(dest)
     assert man4["total_rows"] == 17
     assert not os.path.exists(orphan)
     assert spark.read.option("header", "true").csv(dest).count() == 17
+
+
+def test_staged_csv_quoted_newline_counts_one_row(spark, tmp_path):
+    """A quoted cell may hold a newline: the per-file `rows` count
+    records, not lines, and the value round-trips."""
+    import os
+    from ethereum_export_pipeline_spark.sources.staged_sink import (
+        read_manifest, write_staged_csv)
+    dest = str(tmp_path / "nl_out")
+    df = (spark.range(40)
+               .selectExpr("id AS number",
+                           "CASE WHEN id % 10 = 3 THEN concat('x', char(10), "
+                           "'y,\"z\"') ELSE 'plain' END AS memo")
+               .repartition(2, "number"))
+    write_staged_csv(df, dest, "overwrite")
+    man = read_manifest(dest)
+    assert man["total_rows"] == 40
+    lines = 0
+    for f in man["files"]:
+        back = (spark.read.option("header", True).option("escape", '"')
+                     .option("multiLine", True)
+                     .csv(os.path.join(dest, f["file"])))
+        assert back.count() == f["rows"]
+        with open(os.path.join(dest, f["file"])) as fh:
+            lines += fh.read().count("\n")
+    # 4 rows span two lines each, beside one header line per file
+    assert lines == len(man["files"]) + 40 + 4
+    got = {int(r.number): r.memo for r in
+           spark.read.option("header", True).option("escape", '"')
+                .option("multiLine", True).csv(dest).collect()}
+    assert got[13] == 'x\ny,"z"' and got[14] == "plain" and len(got) == 40
+
+
+def test_staged_csv_failed_write_leaves_prior_export(spark, tmp_path):
+    """A task that raises aborts the run: the prior files and manifest
+    stay byte-identical and no `_staging` is left."""
+    import os
+    import pyspark.sql.functions as F
+    import pytest
+    from ethereum_export_pipeline_spark.sources.staged_sink import (
+        write_staged_csv)
+    dest = str(tmp_path / "abort_out")
+    write_staged_csv(spark.range(20).selectExpr("id AS number"), dest,
+                     "overwrite")
+
+    def snapshot():
+        out = {}
+        for name in sorted(os.listdir(dest)):
+            full = os.path.join(dest, name)
+            if os.path.isfile(full):
+                with open(full, "rb") as fh:
+                    out[name] = fh.read()
+            else:
+                out[name] = None  # a directory: `_staging` left behind
+        return out
+
+    before = snapshot()
+    bad = spark.range(30).select(
+        F.when(F.col("id") == 17, F.raise_error(F.lit("boom")))
+         .otherwise(F.col("id")).alias("number"))
+    for mode in ("overwrite", "append"):
+        with pytest.raises(Exception, match="boom"):
+            write_staged_csv(bad, dest, mode)
+        assert snapshot() == before
+        assert not os.path.exists(os.path.join(dest, "_staging"))
+
+
+def test_staged_csv_zero_rows(spark, tmp_path):
+    """A 0-row export commits: total_rows 0, reads back as 0 rows."""
+    import os
+    from ethereum_export_pipeline_spark.sources.staged_sink import (
+        read_manifest, write_staged_csv)
+    dest = str(tmp_path / "empty_out")
+    write_staged_csv(spark.range(10).where("id > 100")
+                          .selectExpr("id AS number", "'h' AS hash"),
+                     dest, "overwrite")
+    man = read_manifest(dest)
+    assert man["total_rows"] == 0
+    assert man["columns"] == ["number", "hash"]
+    assert all(f["rows"] == 0 for f in man["files"])
+    paths = [os.path.join(dest, f["file"]) for f in man["files"]]
+    assert spark.read.option("header", True).csv(paths).count() == 0
+    assert not os.path.isdir(os.path.join(dest, "_staging"))
 
 
 def test_incremental_rollup_upserts_only_touched_windows(spark, tmp_path):

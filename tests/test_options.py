@@ -13,7 +13,8 @@ code calls is not judged. Two rules:
   keyword, by position, or through a `*args` / `**kw` splat);
 * one value: a parameter that every call site gives the same
   constant-like expression — a literal, a tuple of literals, or an
-  UPPER_CASE module constant, compared as `ast.unparse` text. An
+  UPPER_CASE module constant, compared as `ast.unparse` text except
+  that `mod.NAME` and a bare `NAME` are the same constant. An
   omitted argument counts as its default; a splat that may cover the
   parameter counts as a value that varies. A function also used as a
   value is called where the scan cannot see — the `(spark, sf_dir)`
@@ -36,6 +37,8 @@ CALLER_ROOTS = (PACKAGE, "bench.py", "tools", "perfbench")
 
 #: "module.function.parameter" -> why it stays
 ALLOWED = {
+    "sources.staged_sink.write_staged_csv.mode":
+        "deployment: whether a run replaces or extends its export",
     "sources.csv_source.read_table_parquet.table":
         "deployment: the table a run reads",
     "incremental.run_incremental.table":
@@ -139,6 +142,14 @@ def _constant(node) -> bool:
     return False
 
 
+def _value(node) -> str:
+    """The text a constant-like argument compares by; `mod.NAME` reads
+    as `NAME`, so a qualified and a bare use of one constant agree."""
+    if isinstance(node, ast.Attribute) and node.attr.isupper():
+        return node.attr
+    return ast.unparse(node)
+
+
 def _scan() -> tuple[list[str], list[str]]:
     """(never set, one value) as `module.function.parameter` lists."""
     calls, values = _sites()
@@ -152,7 +163,7 @@ def _scan() -> tuple[list[str], list[str]]:
                 never.append(f"{qual}.{param}")
             elif (sites and fn.name not in values
                     and all(a is not None and _constant(a) for a in args)
-                    and len({ast.unparse(a) for a in args}) == 1):
+                    and len({_value(a) for a in args}) == 1):
                 one.append(f"{qual}.{param}")
     return never, one
 

@@ -94,12 +94,12 @@ def get_spark(app_name: str = "ethereum_export_pipeline_spark",
 
 def isolated_session(spark: SparkSession) -> SparkSession:
     """A child session (same SparkContext, same cached data, SEPARATE
-    runtime SQLConf) for work that must mutate session confs — the
-    streaming entry points clamp ``spark.sql.shuffle.partitions``
-    around stateful query start and flip ``partitionOverwriteMode``
-    for upsert sinks. Running those on a child keeps the mutation
-    invisible to any query concurrently planning on the caller's
-    session (set/restore on a SHARED session has a race window).
+    runtime SQLConf) for work that must mutate session confs — every
+    stream sets its own ``spark.sql.shuffle.partitions`` on the child
+    it is built on, and upsert sinks flip ``partitionOverwriteMode``.
+    Running those on a child keeps the mutation invisible to any query
+    concurrently planning on the caller's session (set/restore on a
+    SHARED session has a race window).
     The child starts from the caller's shuffle width and AQE keys (a
     bare new session would start from the SparkConf's), then gets the
     runtime confs `ensure_conf` guarantees."""

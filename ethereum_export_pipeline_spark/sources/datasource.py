@@ -67,22 +67,30 @@ def _fake_block(number: int) -> dict:
     }
 
 
-class ChainReader(DataSourceReader):
+class _RangeReader:
+    """What the batch and the stream reader share: one InputPartition
+    per `batch_size` blocks of an inclusive range, and the read of one
+    partition."""
+
     def __init__(self, schema: StructType, options: dict):
-        self.schema_ = schema
-        self.start = int(options.get("start", 0))
-        self.end = int(options.get("end", 999))
+        self.names = [f.name for f in schema.fields]
+        self.options = options
         self.batch_size = int(options.get("batch_size", 100))
 
-    def partitions(self):
+    def _split(self, lo: int, hi: int) -> list[ChainRange]:
         return [ChainRange(s, e) for s, e in
-                split_to_batches(self.start, self.end, self.batch_size)]
+                split_to_batches(lo, hi, self.batch_size)]
 
     def read(self, partition: ChainRange):
-        names = [f.name for f in self.schema_.fields]
         for n in range(partition.start, partition.end + 1):
             b = _fake_block(n)
-            yield tuple(b.get(c) for c in names)
+            yield tuple(b.get(c) for c in self.names)
+
+
+class ChainReader(_RangeReader, DataSourceReader):
+    def partitions(self):
+        return self._split(int(self.options.get("start", 0)),
+                           int(self.options.get("end", 999)))
 
 
 class ChainDataSource(DataSource):
@@ -102,23 +110,10 @@ class ChainDataSource(DataSource):
         return ChainStreamReader(schema, self.options)
 
 
-def register(spark) -> None:
-    """Idempotent: the Python data-source registry is shared across
-    sessions of one SparkContext, and a re-register from a DIFFERENT
-    session (streaming runs on isolated child sessions) raises
-    DATA_SOURCE_ALREADY_EXISTS — an already-present registration is
-    exactly the state we want."""
-    try:
-        spark.dataSource.register(ChainDataSource)
-    except Exception as ex:  # pragma: no cover - version-specific text
-        if "DATA_SOURCE_ALREADY_EXISTS" not in str(ex):
-            raise
-
-
 # ------------------------------------------------------------ streaming
 
 
-class ChainStreamReader(DataSourceStreamReader):
+class ChainStreamReader(_RangeReader, DataSourceStreamReader):
     """Chain-tailing stream: offsets are block numbers, each micro-batch
     covers (last_committed, head] split into range partitions — the
     streaming form of the reference's "rerun the pipeline for new block
@@ -126,30 +121,14 @@ class ChainStreamReader(DataSourceStreamReader):
     `latestOffset` polls the RPC head; here the head is an option so
     tests are deterministic."""
 
-    def __init__(self, schema: StructType, options: dict):
-        self.schema_ = schema
-        self.start = int(options.get("start", 0))
-        self.head = int(options.get("head", 999))
-        self.batch_size = int(options.get("batch_size", 100))
-
     def initialOffset(self) -> dict:
-        return {"block": self.start}
+        return {"block": int(self.options.get("start", 0))}
 
-    def latestOffset(self) -> dict:
-        return {"block": self.head + 1}  # exclusive upper bound
+    def latestOffset(self) -> dict:  # exclusive upper bound
+        return {"block": int(self.options.get("head", 999)) + 1}
 
     def partitions(self, start: dict, end: dict):
-        lo, hi = start["block"], end["block"] - 1
-        if lo > hi:
-            return []
-        return [ChainRange(s, e) for s, e in
-                split_to_batches(lo, hi, self.batch_size)]
-
-    def read(self, partition: ChainRange):
-        names = [f.name for f in self.schema_.fields]
-        for n in range(partition.start, partition.end + 1):
-            b = _fake_block(n)
-            yield tuple(b.get(c) for c in names)
+        return self._split(start["block"], end["block"] - 1)
 
     def commit(self, end: dict) -> None:
         pass  # offsets live in the stream checkpoint

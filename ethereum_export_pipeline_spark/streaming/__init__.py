@@ -13,6 +13,16 @@ directory as a real streaming query and returns the result table —
 semantically identical to the batch aggregate, which is what the
 DuckDB oracle checks.
 
+Every stream runs on its own isolated child session, built where the
+stream is created (`read_stream` for the file source, `_chain_session`
+for the chain source), and that is where its state width is set,
+once. Every stateful operator commits one state store per shuffle
+partition per micro-batch, so a bounded input gets
+``max(4, input bytes // STREAM_BYTES_PER_PARTITION)`` partitions when
+that is below the caller's width, and the caller's width otherwise;
+the chain source counts as zero bytes. A checkpointed stream records
+its width at first start and keeps it on every restart.
+
 Custom stateful operators use `applyInPandasWithState`
 (streaming/sessions.py). Spark 4's newer `transformWithStateInPandas`
 API is NOT used: its Python driver worker needs google.protobuf,
@@ -49,47 +59,64 @@ ROLLUP_RANGE = 25  # incremental_rollup partitions windows by win div this
 STREAM_BYTES_PER_PARTITION = 4 << 20
 
 
-def _chain_session(spark: SparkSession) -> tuple[SparkSession, bool]:
-    """Session for a chain-source stream: an isolated child when the
-    Python data source can register there, else the caller's session.
-
-    The fallback exists because the Python data-source registry
-    snapshot a child inherits from an already-registered parent is
-    POISONED (verified on Spark 4.1: re-register raises
-    DATA_SOURCE_ALREADY_EXISTS, yet load still fails with
-    DATA_SOURCE_NOT_FOUND) — so when the caller registered
-    `ethereum_chain` on their own session first, the stream must run
-    there. Returns (session, isolated): callers must not clamp
-    session confs when `isolated` is False."""
-    from ..sources import datasource
+def _stream_session(spark: SparkSession, size: int | None) -> SparkSession:
+    """An isolated child of `spark` for one stream of `size` input
+    bytes (None: not a local path, keep the caller's width), its
+    shuffle width set by the module's width rule. Measured on the
+    sf0.1 interval join: 32 state partitions 7.4 s, 4 partitions
+    2.0 s. Conf mutations on the child (this width, the upsert sinks'
+    ``partitionOverwriteMode``) cannot race a query planning on the
+    caller's session."""
     child = isolated_session(spark)
+    if size is not None:
+        width = max(4, size // STREAM_BYTES_PER_PARTITION)
+        if width < int(child.conf.get("spark.sql.shuffle.partitions")):
+            child.conf.set("spark.sql.shuffle.partitions", str(width))
+    return child
+
+
+def _chain_session(spark: SparkSession) -> SparkSession:
+    """Session for a chain-source stream: a fresh isolated child with
+    `ChainDataSource` registered on it, sized as a zero-byte input.
+
+    This is the one place the source is registered. The Python
+    data-source registry is per session, and a child created AFTER its
+    parent registered the source inherits a POISONED entry (verified on
+    Spark 4.1: re-register raises DATA_SOURCE_ALREADY_EXISTS, load
+    raises DATA_SOURCE_NOT_FOUND), so the source is never registered on
+    a session that later streams."""
+    from ..sources.datasource import ChainDataSource
+    child = _stream_session(spark, 0)
+    child.dataSource.register(ChainDataSource)
+    return child
+
+
+def _input_bytes(path: str) -> int | None:
+    """Bytes of a local file or directory tree; None when the driver
+    cannot stat it (an object-store URI)."""
     try:
-        child.dataSource.register(datasource.ChainDataSource)
-        return child, True
-    except Exception as ex:
-        if "DATA_SOURCE_ALREADY_EXISTS" not in str(ex):
-            raise
-    datasource.register(spark)  # idempotent
-    return spark, False
+        if os.path.isdir(path):
+            return sum(os.path.getsize(os.path.join(r, f))
+                       for r, _, fs in os.walk(path) for f in fs)
+        return os.path.getsize(path)
+    except OSError:
+        return None
 
 
 def read_stream(spark: SparkSession, path: str) -> DataFrame:
     """File-source stream over parquet, schema pinned from a static
-    read (streaming sources must never infer per-batch).
+    read (streaming sources must never infer per-batch), on an
+    isolated child session whose shuffle width is
+    ``max(4, bytes under path // STREAM_BYTES_PER_PARTITION)`` when
+    that is below the caller's width (see `_stream_session`).
 
     Spark's FileStreamSource forces ``basePath`` to the given path, so
     a single .parquet FILE cannot be streamed directly; we stage a
     symlink inside a temp directory and stream that directory — the
     production layout (a directory files land in) needs none of this.
-
-    The stream is built on an ISOLATED child session: the stateful
-    entry points clamp ``spark.sql.shuffle.partitions`` around query
-    start (`run_available_now`) and upsert sinks flip
-    ``partitionOverwriteMode`` — on a child session those mutations
-    cannot race a query concurrently planning on the caller's session
-    (cross-session joins against the caller's static frames still
-    work: same SparkContext, execution resolves on one session)."""
-    spark = isolated_session(spark)
+    Cross-session joins against the caller's static frames still work
+    (same SparkContext, execution resolves on one session)."""
+    spark = _stream_session(spark, _input_bytes(path))
     static = spark.read.parquet(path)
     if path.rstrip("/").endswith(".parquet") and os.path.isfile(path):
         from ..util import scratch_dir
@@ -100,47 +127,15 @@ def read_stream(spark: SparkSession, path: str) -> DataFrame:
     return spark.readStream.schema(static.schema).parquet(path)
 
 
-def bounded_stream_width(spark: SparkSession, path: str) -> int | None:
-    """State-partition width for a BOUNDED streaming run, sized to the
-    input: every stateful operator commits one state store PER SHUFFLE
-    PARTITION per micro-batch, so running a 2 MB fixture at the
-    session's 32-wide default pays 32 store commits × operators for a
-    handful of keys — measured 7.4 s → 2.0 s on the sf0.1 interval
-    join. Large inputs keep the session width (returns None). On a
-    production stream the checkpoint pins the width at first start and
-    the operator sizes it to expected key cardinality explicitly; this
-    heuristic only shapes fresh checkpointless runs."""
-    try:
-        if os.path.isdir(path):
-            size = sum(os.path.getsize(os.path.join(r, f))
-                       for r, _, fs in os.walk(path) for f in fs)
-        else:
-            size = os.path.getsize(path)
-    except OSError:
-        return None
-    sess_width = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    width = max(4, size // STREAM_BYTES_PER_PARTITION)
-    return int(width) if width < sess_width else None
-
-
-def run_available_now(agg: DataFrame, output_mode: str = "complete",
-                      width: int | None = None) -> DataFrame:
+def run_available_now(agg: DataFrame,
+                      output_mode: str = "complete") -> DataFrame:
     """Run a (possibly aggregating) streaming DataFrame to completion
-    with availableNow + memory sink; return the result. ``width``
-    overrides the state-partition count for this query (read from
-    spark.sql.shuffle.partitions at query START; restored after)."""
+    with availableNow + memory sink; return the result."""
     spark = agg.sparkSession
     name = f"stream_sink_{uuid.uuid4().hex[:8]}"
-    old_width = spark.conf.get("spark.sql.shuffle.partitions")
-    if width is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(width))
-    try:
-        q = (agg.writeStream.format("memory").queryName(name)
-                .outputMode(output_mode).trigger(availableNow=True).start())
-        q.awaitTermination()
-    finally:
-        if width is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", old_width)
+    q = (agg.writeStream.format("memory").queryName(name)
+            .outputMode(output_mode).trigger(availableNow=True).start())
+    q.awaitTermination()
     return spark.table(name)
 
 
@@ -157,8 +152,7 @@ def stream_tumbling_counts(spark: SparkSession, events_path: str) -> DataFrame:
                 F.min("event_id").alias("first_event"),
                 F.max("event_id").alias("last_event"))
     )
-    return run_available_now(agg,
-                             width=bounded_stream_width(spark, events_path))
+    return run_available_now(agg)
 
 
 def stream_hopping_counts(spark: SparkSession, events_path: str) -> DataFrame:
@@ -181,8 +175,7 @@ def stream_hopping_counts(spark: SparkSession, events_path: str) -> DataFrame:
                  .agg(F.count(F.lit(1)).alias("n"),
                       F.min("event_id").alias("first_event"),
                       F.max("event_id").alias("last_event")))
-    return run_available_now(agg,
-                             width=bounded_stream_width(spark, events_path))
+    return run_available_now(agg)
 
 
 def stream_watermark_counts(spark: SparkSession,
@@ -210,8 +203,7 @@ def stream_watermark_counts(spark: SparkSession,
                    F.max("event_id").alias("last_event"))
               .select(F.unix_micros("w.start").alias("win_start"),
                       "n", "first_event", "last_event"))
-    return run_available_now(agg, output_mode="append",
-                             width=bounded_stream_width(spark, events_path))
+    return run_available_now(agg, output_mode="append")
 
 
 def stream_session_window_counts(spark: SparkSession,
@@ -236,8 +228,8 @@ def stream_session_window_counts(spark: SparkSession,
     Scale shape: one shuffle on user_id into the session-merge state
     store; state is per OPEN session, evicted at emission — the
     watermark is the memory bound. Width sized to the bounded input
-    via `bounded_stream_width` (production: size to expected
-    concurrent-session cardinality)."""
+    by `read_stream` (production: size to expected concurrent-session
+    cardinality)."""
     from ..sources.tables import with_event_time
     sdf = with_event_time(read_stream(spark, events_path))
     evt = sdf.select(F.expr("timestamp_micros(ts_ns div 1000)").alias("evt_ts"),
@@ -253,8 +245,7 @@ def stream_session_window_counts(spark: SparkSession,
               .select("user_id",
                       F.unix_micros("sw.start").alias("start_us"),
                       "n_events", "first_event", "last_event"))
-    return run_available_now(agg, output_mode="append",
-                             width=bounded_stream_width(spark, events_path))
+    return run_available_now(agg, output_mode="append")
 
 
 def stream_exact_dedup(spark: SparkSession, docs_path: str) -> DataFrame:
@@ -268,8 +259,7 @@ def stream_exact_dedup(spark: SparkSession, docs_path: str) -> DataFrame:
     keyed = (sdf.where("text IS NOT NULL")
                 .selectExpr("md5(text) AS content_key")
                 .dropDuplicates(["content_key"]))
-    return run_available_now(keyed, output_mode="append",
-                             width=bounded_stream_width(spark, docs_path))
+    return run_available_now(keyed, output_mode="append")
 
 
 def incremental_convert(spark: SparkSession, src_dir: str, dest_dir: str,
@@ -279,53 +269,33 @@ def incremental_convert(spark: SparkSession, src_dir: str, dest_dir: str,
     reference convert_blocks_to_parquet.py:21,67): each call processes
     ONLY files the checkpoint has not seen, appends them to `dest_dir`,
     and stops (availableNow). Returns the number of rows written this
-    run.
+    run, read from the run's progress reports (the sink is a plain
+    append, so rows in = rows written) — never a scan of `dest_dir`,
+    whose history grows with every run.
 
     At scale this is the convert job run from cron: no manifest
     bookkeeping in user code, the stream checkpoint IS the bookmark."""
     sdf = read_stream(spark, src_dir)
-    n_before = 0
-    try:
-        n_before = spark.read.parquet(dest_dir).count()
-    except Exception:
-        pass
     q = (sdf.writeStream.format("parquet")
             .option("path", dest_dir)
             .option("checkpointLocation", checkpoint_dir)
             .outputMode("append")
             .trigger(availableNow=True).start())
     q.awaitTermination()
-    return spark.read.parquet(dest_dir).count() - n_before
-
-
-def windowed_counts_with_watermark(sdf: DataFrame) -> DataFrame:
-    """Append-mode 10-minute window counts with a 30-minute watermark:
-    rows later than that behind the max seen event time are dropped, and a
-    window only emits once the watermark passes its end — the bounded-
-    state recipe for infinite streams (complete mode would keep every
-    window forever). Expects an event-time `ts` TIMESTAMP column."""
-    return (sdf.withWatermark("ts", "30 minutes")
-               .groupBy(F.window("ts", "10 minutes").alias("win"))
-               .agg(F.count(F.lit(1)).alias("n"))
-               .select(F.col("win.start").alias("win_start"), "n"))
+    return sum(p["numInputRows"] for p in q.recentProgress)
 
 
 def stream_chain_export(spark: SparkSession, dest_dir: str,
                         checkpoint_dir: str,
-                        plan: list[tuple[int, int]] | None = None,
-                        timeout_s: float = 120.0) -> None:
+                        plan: list[tuple[int, int]] | None = None) -> None:
     """Streaming form of the whole export (S1-stream → A2 layout):
     tail the chain source up to `EXPORT_HEAD` and land blocks into the
-    reference's Hive range layout with exactly-once checkpointing. Blocks keep
-    arriving → new partition dirs appear; a restart resumes from the
-    committed offset.
-
-    Raises TimeoutError if the synthetic head has not fully landed
-    within `timeout_s` — a partial export must never return silently
-    (the checkpoint still holds the committed offset, so a retry with
-    a larger timeout resumes, not restarts)."""
+    reference's Hive range layout with exactly-once checkpointing. One
+    availableNow run lands every block past the committed offset and
+    returns; a rerun on the same checkpoint resumes from that offset
+    (nothing new lands until the head moves)."""
     from ..partitioning import default_export_plan, range_cols
-    spark, _ = _chain_session(spark)
+    spark = _chain_session(spark)
     sdf = (spark.readStream.format("ethereum_chain")
                 .option("start", 0).option("head", EXPORT_HEAD)
                 .option("batch_size", 100).load())
@@ -335,26 +305,8 @@ def stream_chain_export(spark: SparkSession, dest_dir: str,
             .option("path", dest_dir)
             .option("checkpointLocation", checkpoint_dir)
             .partitionBy("start_block", "end_block")
-            .outputMode("append").start())
-    # the synthetic head is finite: stop once everything committed
-    import time
-    deadline = time.time() + timeout_s
-    landed = 0
-    while time.time() < deadline:
-        try:
-            landed = spark.read.parquet(dest_dir).count()
-        except Exception:
-            landed = 0
-        if landed >= EXPORT_HEAD + 1:
-            break
-        time.sleep(0.5)
-    q.stop()
+            .outputMode("append").trigger(availableNow=True).start())
     q.awaitTermination()
-    if landed < EXPORT_HEAD + 1:
-        raise TimeoutError(
-            f"stream_chain_export: only {landed}/{EXPORT_HEAD + 1} blocks "
-            f"landed within {timeout_s}s; the checkpoint holds the committed "
-            f"offset — rerun with a larger timeout_s to resume")
 
 
 def stream_static_enrich(spark: SparkSession, events_path: str,
@@ -372,8 +324,7 @@ def stream_static_enrich(spark: SparkSession, events_path: str,
                  .agg(F.count(F.lit(1)).alias("n"),
                       F.min("event_id").alias("first_event"),
                       F.max("event_id").alias("last_event")))
-    return run_available_now(agg,
-                             width=bounded_stream_width(spark, events_path))
+    return run_available_now(agg)
 
 
 def stream_chain_counts(spark: SparkSession) -> DataFrame:
@@ -389,7 +340,7 @@ def stream_chain_counts(spark: SparkSession) -> DataFrame:
     block number, so the batch-equivalent oracle recomputes the exact
     aggregate from `range(CHAIN_HEAD + 1)` — a full value-hash check
     with no files involved on either side."""
-    spark, isolated = _chain_session(spark)
+    spark = _chain_session(spark)
     sdf = (spark.readStream.format("ethereum_chain")
                 .option("start", 0).option("head", CHAIN_HEAD)
                 .option("batch_size", 100).load())
@@ -398,14 +349,35 @@ def stream_chain_counts(spark: SparkSession) -> DataFrame:
                    F.sum("gas_used").cast("long").alias("gas_used"),
                    F.sum("transaction_count").cast("long").alias("tx_count"),
                    F.max("size").cast("long").alias("max_size")))
-    # bounded synthetic head: size the state width to the row count —
-    # but ONLY when the stream runs on an isolated child (the clamp
-    # mutates session conf; on the caller's session it would race a
-    # concurrently-planning query)
-    sess_w = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    width = max(4, (CHAIN_HEAD + 1) // 100_000)
-    return run_available_now(
-        agg, width=width if isolated and width < sess_w else None)
+    return run_available_now(agg)
+
+
+def _interval_join(spark: SparkSession, events_path: str,
+                   how: str) -> DataFrame:
+    """The interval joins' shared stream: watermarked clicks joined
+    (`how`) to the same user's watermarked purchases landing within
+    `IJ_GAP_S` after the click. Columns click_id, click_user,
+    click_ts, buy_id, buy_user, buy_ts."""
+    from ..sources.tables import with_event_time
+    sdf = with_event_time(read_stream(spark, events_path))
+    base = sdf.select("event_id", "user_id", "event_type",
+                      F.expr("timestamp_micros(ts_ns div 1000)")
+                       .alias("evt_ts"))
+    clicks = (base.where("event_type = 'click'")
+                  .select(F.col("event_id").alias("click_id"),
+                          F.col("user_id").alias("click_user"),
+                          F.col("evt_ts").alias("click_ts"))
+                  .withWatermark("click_ts", f"{IJ_DELAY_S} seconds"))
+    buys = (base.where("event_type = 'purchase'")
+                .select(F.col("event_id").alias("buy_id"),
+                        F.col("user_id").alias("buy_user"),
+                        F.col("evt_ts").alias("buy_ts"))
+                .withWatermark("buy_ts", f"{IJ_DELAY_S} seconds"))
+    return clicks.join(
+        buys,
+        F.expr(f"click_user = buy_user AND buy_ts >= click_ts AND "
+               f"buy_ts <= click_ts + INTERVAL {IJ_GAP_S} SECONDS"),
+        how)
 
 
 def stream_interval_join(spark: SparkSession, events_path: str) -> DataFrame:
@@ -424,32 +396,12 @@ def stream_interval_join(spark: SparkSession, events_path: str) -> DataFrame:
     Scale notes: the join shuffles both sides on user_id; the interval
     residual evaluates post-match. Skewed hot users concentrate state
     the same way any keyed stateful op does."""
-    from ..sources.tables import with_event_time
-    sdf = with_event_time(read_stream(spark, events_path))
-    base = sdf.select("event_id", "user_id", "event_type",
-                      F.expr("timestamp_micros(ts_ns div 1000)")
-                       .alias("evt_ts"))
-    clicks = (base.where("event_type = 'click'")
-                  .select(F.col("event_id").alias("click_id"),
-                          F.col("user_id").alias("click_user"),
-                          F.col("evt_ts").alias("click_ts"))
-                  .withWatermark("click_ts", f"{IJ_DELAY_S} seconds"))
-    buys = (base.where("event_type = 'purchase'")
-                .select(F.col("event_id").alias("buy_id"),
-                        F.col("user_id").alias("buy_user"),
-                        F.col("evt_ts").alias("buy_ts"))
-                .withWatermark("buy_ts", f"{IJ_DELAY_S} seconds"))
-    j = clicks.join(
-        buys,
-        F.expr(f"click_user = buy_user AND buy_ts >= click_ts AND "
-               f"buy_ts <= click_ts + INTERVAL {IJ_GAP_S} SECONDS"),
-        "inner")
+    j = _interval_join(spark, events_path, "inner")
     out = j.select("click_id", "buy_id",
                    F.col("click_user").alias("user_id"),
                    (F.unix_micros("buy_ts") - F.unix_micros("click_ts"))
                    .alias("delta_us"))
-    return run_available_now(out, output_mode="append",
-                             width=bounded_stream_width(spark, events_path))
+    return run_available_now(out, output_mode="append")
 
 
 def stream_interval_join_outer(spark: SparkSession,
@@ -468,26 +420,7 @@ def stream_interval_join_outer(spark: SparkSession,
     Scale notes: identical state shape to the inner join (both sides
     keyed on user, interval-bounded eviction); the outer rows add no
     state — they are emitted exactly at eviction time."""
-    from ..sources.tables import with_event_time
-    sdf = with_event_time(read_stream(spark, events_path))
-    base = sdf.select("event_id", "user_id", "event_type",
-                      F.expr("timestamp_micros(ts_ns div 1000)")
-                       .alias("evt_ts"))
-    clicks = (base.where("event_type = 'click'")
-                  .select(F.col("event_id").alias("click_id"),
-                          F.col("user_id").alias("click_user"),
-                          F.col("evt_ts").alias("click_ts"))
-                  .withWatermark("click_ts", f"{IJ_DELAY_S} seconds"))
-    buys = (base.where("event_type = 'purchase'")
-                .select(F.col("event_id").alias("buy_id"),
-                        F.col("user_id").alias("buy_user"),
-                        F.col("evt_ts").alias("buy_ts"))
-                .withWatermark("buy_ts", f"{IJ_DELAY_S} seconds"))
-    j = clicks.join(
-        buys,
-        F.expr(f"click_user = buy_user AND buy_ts >= click_ts AND "
-               f"buy_ts <= click_ts + INTERVAL {IJ_GAP_S} SECONDS"),
-        "leftOuter")
+    j = _interval_join(spark, events_path, "leftOuter")
     out = j.select("click_id",
                    F.col("click_user").alias("user_id"),
                    F.col("buy_id"),
@@ -495,8 +428,7 @@ def stream_interval_join_outer(spark: SparkSession,
                     .cast("long").alias("matched"),
                    (F.unix_micros("buy_ts") - F.unix_micros("click_ts"))
                    .alias("delta_us"))
-    return run_available_now(out, output_mode="append",
-                             width=bounded_stream_width(spark, events_path))
+    return run_available_now(out, output_mode="append")
 
 
 def stream_dedup_within_watermark(spark: SparkSession,
@@ -519,8 +451,7 @@ def stream_dedup_within_watermark(spark: SparkSession,
                 .withWatermark("evt_ts", "3600 seconds")
                 .dropDuplicatesWithinWatermark(["user_id", "event_type"])
                 .select("user_id", "event_type"))
-    return run_available_now(keyed, output_mode="append",
-                             width=bounded_stream_width(spark, events_path))
+    return run_available_now(keyed, output_mode="append")
 
 
 def incremental_rollup(spark: SparkSession, src_dir: str, dest_dir: str,
@@ -630,8 +561,7 @@ def stream_decontaminate(spark: SparkSession, docs_path: str,
                           "AS n_bloom_hits")
               .withColumn("contaminated",
                           F.expr("CAST(n_bloom_hits > 0 AS BIGINT)")))
-    return run_available_now(out, output_mode="append",
-                             width=bounded_stream_width(spark, docs_path))
+    return run_available_now(out, output_mode="append")
 
 
 def stream_crawl_gate(spark: SparkSession, docs_path: str,
@@ -667,8 +597,7 @@ def stream_crawl_gate(spark: SparkSession, docs_path: str,
         "AS pass_quality",
         f"CAST(n_tokens >= {FUNNEL_MIN_TOKENS} AND pred_lang = 'en' AND "
         f"quality_score >= {FUNNEL_MIN_QUALITY!r} AS BIGINT) AS admitted")
-    return run_available_now(out, output_mode="append",
-                             width=bounded_stream_width(spark, docs_path))
+    return run_available_now(out, output_mode="append")
 
 
 def stream_value_histogram(spark: SparkSession, events_path: str) -> DataFrame:
@@ -691,8 +620,7 @@ def stream_value_histogram(spark: SparkSession, events_path: str) -> DataFrame:
                               "CAST(round(value * 100) AS BIGINT), 0L))"))
                .cast("long").alias("b"))
               .agg(F.count(F.lit(1)).cast("long").alias("n")))
-    return run_available_now(agg,
-                             width=bounded_stream_width(spark, events_path))
+    return run_available_now(agg)
 
 
 def stream_trending(spark: SparkSession, events_path: str) -> DataFrame:
@@ -717,8 +645,7 @@ def stream_trending(spark: SparkSession, events_path: str) -> DataFrame:
               F.expr(f"(ts_ns div 1000) div {WINDOW_US}").alias("win"),
               F.col("event_type"))
               .agg(F.count(F.lit(1)).alias("n")))
-    out = run_available_now(agg,
-                            width=bounded_stream_width(spark, events_path))
+    out = run_available_now(agg)
     w = Window.partitionBy("win").orderBy(F.col("n").desc(),
                                           F.col("event_type").asc())
     return (out.withColumn("rnk", F.row_number().over(w).cast("long"))

@@ -92,9 +92,7 @@ def stream_sessionize(spark: SparkSession, events_path: str) -> DataFrame:
     agg = keyed.applyInPandasWithState(
         _sessionize_key, OUTPUT_SCHEMA, STATE_SCHEMA,
         outputMode="update", timeoutConf=GroupStateTimeout.NoTimeout)
-    from . import bounded_stream_width
-    return run_available_now(agg, output_mode="update",
-                             width=bounded_stream_width(spark, events_path))
+    return run_available_now(agg, output_mode="update")
 
 
 # ------------------------------------------------ CUSUM drift alarm
@@ -150,10 +148,8 @@ def stream_cusum_alerts(spark: SparkSession, events_path: str) -> DataFrame:
 
     Scale shape: one shuffle on user_id into per-key state (one int),
     Arrow-batched per-key work linear in the batch."""
-    from . import bounded_stream_width
     agg = cusum_alert_stream(spark, events_path)
-    return run_available_now(agg, output_mode="update",
-                             width=bounded_stream_width(spark, events_path))
+    return run_available_now(agg, output_mode="update")
 
 
 def cusum_alert_stream(spark: SparkSession, events_path: str) -> DataFrame:
@@ -186,12 +182,10 @@ def run_cusum_checkpointed(spark: SparkSession, events_dir: str,
 
     Recovery cost at scale: proportional to STATE size (one BIGINT
     per user here) + one checkpoint read per state partition — never
-    to history length; the state-partition count (4) is pinned on
-    first start (the checkpoint re-pins it on every restart, which is
-    why it is set here and not left to the session default)."""
+    to history length. The state-partition count is the width
+    `read_stream` gives the first run; the checkpoint records it and
+    every restart keeps it."""
     agg = cusum_alert_stream(spark, events_dir)
-    # read_stream isolated the session: clamping width there is safe
-    agg.sparkSession.conf.set("spark.sql.shuffle.partitions", "4")
     rows: list = []
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
@@ -309,7 +303,6 @@ def stream_ooo_census(spark: SparkSession, events_path: str) -> DataFrame:
     cross-shard running max)."""
     from ..functions import h32
     from ..sources.tables import with_event_time
-    from . import bounded_stream_width
     sdf = with_event_time(read_stream(spark, events_path))
     keyed = (sdf.selectExpr("event_type", "(ts_ns div 1000) AS ts_us",
                             "event_id")
@@ -322,8 +315,7 @@ def stream_ooo_census(spark: SparkSession, events_path: str) -> DataFrame:
     agg = keyed.applyInPandasWithState(
         _ooo_key, OOO_SCHEMA, OOO_STATE,
         outputMode="update", timeoutConf=GroupStateTimeout.NoTimeout)
-    out = run_available_now(agg, output_mode="update",
-                            width=bounded_stream_width(spark, events_path))
+    out = run_available_now(agg, output_mode="update")
     # update mode emits a REVISED cumulative row per type per batch
     # and the memory sink appends — keep only each type's final
     # revision (n_events is cumulative, so max = latest). Ordering
@@ -394,7 +386,6 @@ def stream_pattern_match(spark: SparkSession,
     longer pattern (A→B→C) adds fields to the state struct, not
     rows."""
     from ..sources.tables import with_event_time
-    from . import bounded_stream_width
     sdf = with_event_time(read_stream(spark, events_path))
     keyed = (sdf.selectExpr("user_id", "event_type",
                             "(ts_ns div 1000) AS ts_us", "event_id")
@@ -402,5 +393,4 @@ def stream_pattern_match(spark: SparkSession,
     agg = keyed.applyInPandasWithState(
         _cep_key, CEP_SCHEMA, CEP_STATE,
         outputMode="update", timeoutConf=GroupStateTimeout.NoTimeout)
-    return run_available_now(agg, output_mode="update",
-                             width=bounded_stream_width(spark, events_path))
+    return run_available_now(agg, output_mode="update")

@@ -164,8 +164,13 @@ def test_streaming_tumbling_equals_batch(spark, tmp_path):
 
 
 def test_python_datasource_chain_scan(spark):
-    from ethereum_export_pipeline_spark.sources import datasource
-    datasource.register(spark)
+    from ethereum_export_pipeline_spark.session import isolated_session
+    from ethereum_export_pipeline_spark.sources.datasource import (
+        ChainDataSource)
+    # registered on a child: a session created after its parent
+    # registered the source inherits a poisoned registry entry
+    spark = isolated_session(spark)
+    spark.dataSource.register(ChainDataSource)
     df = (spark.read.format("ethereum_chain")
                .option("start", 0).option("end", 249)
                .option("batch_size", 100).load())
@@ -290,25 +295,20 @@ def test_incremental_convert_processes_only_new_files(spark, tmp_path):
 
 
 def test_python_datasource_chain_stream(spark):
-    import time
-    from ethereum_export_pipeline_spark.sources import datasource
-    datasource.register(spark)
+    from ethereum_export_pipeline_spark.session import isolated_session
+    from ethereum_export_pipeline_spark.sources.datasource import (
+        ChainDataSource)
+    spark = isolated_session(spark)  # see test_python_datasource_chain_scan
+    spark.dataSource.register(ChainDataSource)
     sdf = (spark.readStream.format("ethereum_chain")
                 .option("start", 0).option("head", 249)
                 .option("batch_size", 100).load())
     q = (sdf.writeStream.format("memory").queryName("chain_tail")
-             .outputMode("append").start())
-    try:
-        deadline = time.time() + 60
-        while time.time() < deadline:
-            if spark.table("chain_tail").count() >= 250:
-                break
-            time.sleep(0.5)
-        got = spark.table("chain_tail")
-        assert got.count() == 250
-        assert got.selectExpr("max(number)").collect()[0][0] == 249
-    finally:
-        q.stop()
+             .outputMode("append").trigger(availableNow=True).start())
+    q.awaitTermination()
+    got = spark.table("chain_tail")
+    assert got.count() == 250
+    assert got.selectExpr("max(number)").collect()[0][0] == 249
 
 
 def test_chain_export_token_transfers_from_logs(spark, eth_fixture_dir):
@@ -336,29 +336,24 @@ def test_watermarked_window_drops_late_rows(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
     from ethereum_export_pipeline_spark.streaming import (
-        read_stream, run_available_now, windowed_counts_with_watermark)
-    import pyspark.sql.functions as F
+        WINDOW_US, stream_watermark_counts)
     src = tmp_path / "wm"; src.mkdir()
     base = 1_700_000_000_000_000  # µs epoch
 
     def write(name, rows):
-        pq.write_table(pa.table({"event_id": [r[0] for r in rows],
-                                 "ts_us": [base + r[1] for r in rows]}),
-                       src / name)
+        pq.write_table(pa.table({
+            "event_id": [r[0] for r in rows],
+            "ts": pa.array([base + r[1] for r in rows],
+                           pa.timestamp("us", tz="UTC"))}), src / name)
 
     minute = 60_000_000
     write("b1.parquet", [(1, 0), (2, 5 * minute),
                          (3, 120 * minute)])  # advances watermark far ahead
-    sdf = (read_stream(spark, str(src))
-           .select(F.expr("timestamp_micros(ts_us)").alias("ts")))
-    agg = windowed_counts_with_watermark(sdf)
     # append mode: only windows fully below the watermark emit
-    import calendar
-    out = run_available_now(agg, output_mode="append")
-    emitted = {calendar.timegm(r.win_start.timetuple()): r.n
-               for r in out.collect()}
-    first_win = (base // minute // 10) * 600   # epoch-aligned 10-min window
-    head_win = ((base + 120 * minute) // minute // 10) * 600
+    emitted = {r.win_start: r.n
+               for r in stream_watermark_counts(spark, str(src)).collect()}
+    first_win = base // WINDOW_US * WINDOW_US  # epoch-aligned 10-min window
+    head_win = (base + 120 * minute) // WINDOW_US * WINDOW_US
     assert emitted.get(first_win) == 2  # the closed early window emitted
     assert head_win not in emitted      # open head window withheld
 

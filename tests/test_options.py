@@ -14,12 +14,15 @@ code calls is not judged. Two rules:
 * one value: a parameter that every call site gives the same
   constant-like expression — a literal, a tuple of literals, or an
   UPPER_CASE module constant, compared as `ast.unparse` text except
-  that `mod.NAME` and a bare `NAME` are the same constant. An
-  omitted argument counts as its default; a splat that may cover the
-  parameter counts as a value that varies. A function also used as a
-  value is called where the scan cannot see — the `(spark, sf_dir)`
-  catalog builders stored in a `Query`, callbacks handed to Spark — so
-  this rule skips it.
+  that `mod.NAME` and a bare `NAME` are the same constant, and that
+  literals equal to the literal value of the one constant name among
+  the arguments are that constant (two different constant names never
+  compare by value: `IVF_CELLS` and `PQ_CODEBOOK` are both 16 but
+  separate settings). An omitted argument counts as its default; a
+  splat that may cover the parameter counts as a value that varies.
+  A function also used as a value is called where the scan cannot
+  see — the `(spark, sf_dir)` catalog builders stored in a `Query`,
+  callbacks handed to Spark — so this rule skips it.
 
 Either way the parameter is a constant with a name, and the function
 should use the constant. `ALLOWED` lists the parameters kept anyway:
@@ -150,9 +153,46 @@ def _value(node) -> str:
     return ast.unparse(node)
 
 
+def _constants() -> dict[str, str]:
+    """`NAME -> repr(value)` for every UPPER_CASE package constant bound
+    to a literal; a name bound to anything else, or to two values in
+    two modules, is left out."""
+    found: dict[str, set] = {}
+    for path in _py_files(PACKAGE):
+        for node in _parse(path).body:
+            if (isinstance(node, ast.Assign) and len(node.targets) == 1
+                    and isinstance(node.targets[0], ast.Name)
+                    and node.targets[0].id.isupper()):
+                try:
+                    v = repr(ast.literal_eval(node.value))
+                except ValueError:
+                    v = None
+                found.setdefault(node.targets[0].id, set()).add(v)
+    return {k: v.pop() for k, v in found.items()
+            if len(v) == 1 and None not in v}
+
+
+def _one_value(args: list, consts: dict[str, str]) -> bool:
+    """Whether constant-like arguments are one value: one text, or one
+    constant name and literals equal to its value."""
+    if len({_value(a) for a in args}) == 1:
+        return True
+    names = {_value(a) for a in args
+             if isinstance(a, (ast.Name, ast.Attribute))}
+    if len(names) != 1 or (name := names.pop()) not in consts:
+        return False
+    try:
+        lits = {repr(ast.literal_eval(a)) for a in args
+                if not isinstance(a, (ast.Name, ast.Attribute))}
+    except ValueError:
+        return False
+    return lits == {consts[name]}
+
+
 def _scan() -> tuple[list[str], list[str]]:
     """(never set, one value) as `module.function.parameter` lists."""
     calls, values = _sites()
+    consts = _constants()
     never, one = [], []
     for qual, fn in _functions():
         sites = calls.get(fn.name, [])
@@ -163,7 +203,7 @@ def _scan() -> tuple[list[str], list[str]]:
                 never.append(f"{qual}.{param}")
             elif (sites and fn.name not in values
                     and all(a is not None and _constant(a) for a in args)
-                    and len({_value(a) for a in args}) == 1):
+                    and _one_value(args, consts)):
                 one.append(f"{qual}.{param}")
     return never, one
 

@@ -80,19 +80,21 @@ def test_ensure_conf_keeps_caller_width_and_aqe(spark):
 def test_stream_child_keeps_caller_width_and_aqe(spark):
     """A stream row's isolated child starts from the caller's shuffle
     width and AQE keys, not the SparkConf's; the caller's confs stay
-    as set, and the answer equals the default-width one."""
+    as set, and the answer equals the default-width one. The caller's
+    width is below the stream width rule's floor of 4, so the rule
+    leaves it as it is."""
     import __spark_entry__ as e
     row = e.queries()["stream_tumbling_counts"]
     width = "spark.sql.shuffle.partitions"
     aqe = "spark.sql.adaptive.enabled"
     caller = spark.newSession()
-    caller.conf.set(width, "7")
+    caller.conf.set(width, "3")
     caller.conf.set(aqe, "false")
     got = row(caller, SF)
     child = got.sparkSession
     assert child is not caller
-    assert (child.conf.get(width), child.conf.get(aqe)) == ("7", "false")
-    assert (caller.conf.get(width), caller.conf.get(aqe)) == ("7", "false")
+    assert (child.conf.get(width), child.conf.get(aqe)) == ("3", "false")
+    assert (caller.conf.get(width), caller.conf.get(aqe)) == ("3", "false")
     assert sorted(got.collect()) == sorted(row(spark, SF).collect())
 
 

@@ -211,7 +211,11 @@ def test_stream_width_clamp_never_touches_caller_conf(spark):
     saved = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "13")
     try:
-        stream_tumbling_counts(spark, f"{SF}/events.parquet")
+        out = stream_tumbling_counts(spark, f"{SF}/events.parquet")
+        # a few hundred KB of events: the stream's own session runs at
+        # the floor of the width rule, the caller's keeps its width
+        assert out.sparkSession.conf.get(
+            "spark.sql.shuffle.partitions") == "4"
         assert spark.conf.get("spark.sql.shuffle.partitions") == "13"
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", saved)

@@ -481,8 +481,9 @@ def select_line(timings: dict[str, float], render,
 def _artifact_builders():
     """The memoized shared artifacts, timed as NAMED pseudo-queries
     before the main loop: the IVF/PQ quantizers plus every artifact in
-    the `artifacts` registry (pair graph → 11 consumers, CC labels,
-    k-means cells, kNN graph, fuzzy pairs, BPE merges, ...). Without
+    the `artifacts` registry (MinHash index → pair graph + quality
+    report, pair graph → 11 consumers, CC labels, k-means cells, kNN
+    graph, fuzzy pairs, BPE merges, ...). Without
     this, the first consumer in HEADLINE order silently pays the
     build — round-6's doc_minhash_quality "+48% regression" was
     exactly that first-touch cost migrating between queries as

@@ -2,12 +2,17 @@
 
 The reference builds each intermediate once and lets every downstream
 task read it (the staged CSVs feed every Glue convert). The catalog
-does the same with its data-sized intermediates — the MinHash pair
-graph, CC labels, k-means cells, exact top-k ground truth, scratch
-CSV landings, bucketed catalog tables, ... — through one decorator:
+does the same with its data-sized intermediates — the MinHash index
+(shingles + signatures), the MinHash pair graph, CC labels, k-means
+cells, exact top-k ground truth, scratch CSV landings, bucketed
+catalog tables, ... — through one decorator:
 
     @artifact("minhash_pair_graph")
     def _lsh_pairs(spark, sf_dir): ...
+
+A builder may read other artifacts: the pair graph and the MinHash
+estimator-quality report both read `minhash_index`, so the corpus is
+tokenized and signed once per (session, corpus).
 
 Every artifact is keyed by (applicationId, absolute corpus path), so a
 fresh session never sees another application's frames and path

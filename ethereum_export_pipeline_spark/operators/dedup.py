@@ -382,19 +382,29 @@ def ngram_jaccard_pairs(df: DataFrame) -> DataFrame:
 
 # ----------------------------------------------------------- minhash
 
-def _signatures_from_shingles(sh: DataFrame) -> DataFrame:
-    """K minhash values per doc from an already-built (id, shingle)
-    frame: m_k = min over shingles of (a_k·h32(shingle) + b_k) mod p.
-    Split out (optimization r12) so the LSH pair/incremental paths can
-    feed the SAME materialized shingle frame to both the signature agg
-    and the exact-Jaccard verify, instead of tokenizing the corpus
-    once per consumer."""
-    hashed = sh.select("doc_id", h32(F.col("shingle")).alias("h"))
-    aggs = [
-        F.min(affine_hash(F.col("h"), a, b)).alias(f"m{k}")
-        for k, (a, b) in enumerate(MINHASH_FAMILY)
-    ]
-    return hashed.groupBy("doc_id").agg(*aggs)
+def minhash_index(df: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """The MinHash index of a (doc_id, text) corpus, both halves
+    eagerly checkpointed: `sh` = (doc_id, shingle, sz), the inverted
+    index with each doc's distinct-shingle count, and `sig` = (doc_id,
+    sz, m0..m{K-1}), m_k = min over shingles of (a_k·h32(shingle) +
+    b_k) mod p. Docs with fewer than `NGRAM_N` tokens are in neither.
+
+    ONE tokenize+shingle pass at scan width (`execution.spread`
+    round-robins a narrow input up to default parallelism first; no-op
+    on well-split input) feeds every consumer: the LSH bands and the
+    estimator report read `sig`, the exact-Jaccard verify reads `sh`.
+    100 TB caveat: `sh` is ~3-4x the corpus text bytes in executor
+    block storage, and a localCheckpoint has no reliable copy (a lost
+    executor fails the job); at that scale use a reliable checkpoint
+    dir sized for it."""
+    sh = checkpoint(_sized_shingles(spread(df.select("doc_id", "text")),
+                                    max_shingle_df=None))
+    hashed = sh.select("doc_id", "sz", h32(F.col("shingle")).alias("h"))
+    aggs = [F.min(affine_hash(F.col("h"), a, b)).alias(f"m{k}")
+            for k, (a, b) in enumerate(MINHASH_FAMILY)]
+    sig = checkpoint(hashed.groupBy("doc_id")
+                           .agg(F.max("sz").alias("sz"), *aggs))
+    return sh, sig
 
 
 def _banded_buckets(sig: DataFrame) -> DataFrame:
@@ -414,38 +424,12 @@ def _banded_buckets(sig: DataFrame) -> DataFrame:
          .alias("bucket"))
 
 
-def minhash_lsh_pairs(df: DataFrame) -> DataFrame:
-    """MinHash LSH near-dup pairs, verified with exact Jaccard.
-    Output: (doc_a, doc_b, n_common, jaccard) for candidates whose
-    verified Jaccard ≥ `NGRAM_THRESHOLD`.
-
-    Scan width (optimization r11, guide §2.5 input skew): the
-    tokenize+shingle pass runs in the SCAN stage, so a narrow input
-    (one small parquet file = one task) serializes the whole
-    tokenize+md5 bill onto one core while the rest idle.
-    `execution.spread` round-robins the (id, text) projection up to
-    default parallelism FIRST; on a well-split input (the 100 TB
-    case) it is a no-op. Since optimization r12 that pass runs ONCE:
-    the shingle index is materialized (eager localCheckpoint) and
-    shared by the signature aggregate and both verify join sides —
-    before, each of the three consumers re-ran tokenize+shingle+
-    distinct above the shared repartition exchange."""
-    df = spread(df.select("doc_id", "text"))
-    # ONE tokenize+shingle pass (optimization r12, guide §2.4): the
-    # inverted index is materialized once (eager localCheckpoint, the
-    # multi-consumer discipline) and feeds all three consumers — the
-    # signature aggregate and both verify join sides. Before, each
-    # consumer re-ran tokenize+shingle+distinct above the shared scan
-    # exchange (three full text passes; count-agg subtrees never
-    # canonicalize for AQE stage reuse).
-    # 100 TB caveat: the index is (doc, shingle, sz) per distinct
-    # shingle, ~3-4x the corpus text bytes, held in executor block
-    # storage; and a localCheckpoint truncates lineage without a
-    # reliable copy, so a lost executor fails the job instead of
-    # recomputing. At that scale use a reliable `checkpoint()` to a
-    # checkpoint dir sized for it.
-    sh = checkpoint(_sized_shingles(df, max_shingle_df=None))
-    sig = _signatures_from_shingles(sh)
+def minhash_lsh_pairs(sh: DataFrame, sig: DataFrame) -> DataFrame:
+    """MinHash LSH near-dup pairs over a `minhash_index` (sh, sig):
+    candidates from band collisions of `sig`, verified with exact
+    Jaccard against `sh`; nothing here tokenizes. Output: (doc_a,
+    doc_b, n_common, jaccard) for candidates whose verified Jaccard ≥
+    `NGRAM_THRESHOLD`."""
     melted = _banded_buckets(sig)
     l = melted.select(F.col("doc_id").alias("doc_a"), "bucket")
     r = melted.select(F.col("doc_id").alias("doc_b"), "bucket")
@@ -491,22 +475,14 @@ def incremental_neardup(new_df: DataFrame, seen_df: DataFrame) -> DataFrame:
     (id, is_dup 0/1, matched_seen, n_common, jaccard) — match columns
     NULL for clean docs; ties broken (jaccard desc, seen id asc).
 
-    Each side tokenizes ONCE at scan width (spread-first discipline,
-    no-op on well-split input): the side's shingle index is
-    materialized and shared by its signature aggregate and its verify
-    join side (optimization r12 — see `minhash_lsh_pairs`)."""
-    new_s = spread(new_df.select("doc_id", "text"))
-    seen_s = spread(seen_df.select("doc_id", "text"))
-    # ONE tokenize+shingle pass per side (optimization r12, guide
-    # §2.4 — same shared-index discipline as `minhash_lsh_pairs`):
-    # each side's inverted index is materialized once and feeds both
-    # its signature aggregate and its verify join side, instead of
-    # re-tokenizing per consumer (was 4 full text passes, 2 per side).
-    sh_new = checkpoint(_sized_shingles(new_s, max_shingle_df=None))
-    sh_seen = checkpoint(_sized_shingles(seen_s, max_shingle_df=None))
-    mn = (_banded_buckets(_signatures_from_shingles(sh_new))
+    Each side is one `minhash_index` (one tokenize pass at scan
+    width): its `sig` feeds the band postings, its `sh` the verify
+    join side."""
+    sh_new, sig_new = minhash_index(new_df)
+    sh_seen, sig_seen = minhash_index(seen_df)
+    mn = (_banded_buckets(sig_new)
           .select(F.col("doc_id").alias("new_id"), "bucket"))
-    ms = (_banded_buckets(_signatures_from_shingles(sh_seen))
+    ms = (_banded_buckets(sig_seen)
           .select(F.col("doc_id").alias("seen_id"), "bucket"))
     cand = (mn.join(ms, "bucket")
               .select("new_id", "seen_id").distinct())
@@ -1111,7 +1087,7 @@ def containment_pairs(df: DataFrame) -> DataFrame:
                     "cont_a_ppm", "cont_b_ppm"))
 
 
-def minhash_estimator_quality(df: DataFrame, pairs: DataFrame) -> DataFrame:
+def minhash_estimator_quality(sig: DataFrame, pairs: DataFrame) -> DataFrame:
     """MinHash estimator-quality report — `emb_ann_recall`'s text-side
     twin: for every verified near-dup pair, the Jaccard ESTIMATE the
     signatures imply (matching components / K — the statistic whose
@@ -1124,29 +1100,15 @@ def minhash_estimator_quality(df: DataFrame, pairs: DataFrame) -> DataFrame:
     exact_jaccard_ppm, err_ppm) — all exact BIGINTs (the exact ppm is
     1e6·n_common div (union), truncating).
 
-    Scale shape: rides `minhash_lsh_pairs`' machinery (signature agg,
-    banded candidates, semi-join-restricted exact verify) and adds
-    two broadcast-ish joins of the K-column signature frame onto the
-    (small) verified pair list — the pair list never re-scans the
-    corpus. `pairs` is the `minhash_lsh_pairs(df)` frame (the
-    catalog's memoized pair graph), so the candidate list is not
-    rebuilt here."""
-    df = spread(df.select("doc_id", "text"))
-    # ONE tokenize+shingle pass (optimization r12, guide §2.4): the
-    # materialized index feeds the two sz join sides AND the signature
-    # aggregate (was 3 full text passes — sz consumed twice, sig once)
-    sh = checkpoint(_sized_shingles(df, max_shingle_df=None))
-    sz = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
-    pairs = (pairs
-             .join(sz.select(F.col("doc_id").alias("doc_a"),
-                             F.col("sz").alias("sz_a")), "doc_a")
-             .join(sz.select(F.col("doc_id").alias("doc_b"),
-                             F.col("sz").alias("sz_b")), "doc_b"))
-    sig = _signatures_from_shingles(sh)
+    Scale shape: `sig` is the `minhash_index` signature frame and
+    `pairs` the `minhash_lsh_pairs` frame built over the same index,
+    so the report is two joins of the K-column signature frame
+    (sz_a/sz_b and both signature sides) onto the small verified pair
+    list — no corpus pass."""
     k = MINHASH_K
-    sa = sig.select(F.col("doc_id").alias("doc_a"),
+    sa = sig.select(F.col("doc_id").alias("doc_a"), F.col("sz").alias("sz_a"),
                     *[F.col(f"m{i}").alias(f"a{i}") for i in range(k)])
-    sb = sig.select(F.col("doc_id").alias("doc_b"),
+    sb = sig.select(F.col("doc_id").alias("doc_b"), F.col("sz").alias("sz_b"),
                     *[F.col(f"m{i}").alias(f"b{i}") for i in range(k)])
     matches = sum(
         F.when(F.col(f"a{i}") == F.col(f"b{i}"), 1).otherwise(0)

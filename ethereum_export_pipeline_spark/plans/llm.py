@@ -115,7 +115,8 @@ inter AS (
 # --------------------------------------------------------- minhash pairs
 
 # Shared corpus artifacts (`artifacts.artifact`), the data-sized
-# intermediates the catalog reuses most: the MinHash-LSH candidate
+# intermediates the catalog reuses most: the MinHash index (the pair
+# graph and the estimator-quality report), the MinHash-LSH candidate
 # pair graph (11 consumers: pairs, clusters x2 algorithms, canonical,
 # triangles, k-core, LPA, source matrix, crossmodal, manifest, leakage
 # split), the k-means assignment (4 consumers) and the ones below.
@@ -125,10 +126,17 @@ inter AS (
 # each artifact is computed once per session+corpus and every
 # consumer plans over the same physical rows.
 
+@artifact("minhash_index")
+def _minhash_index(spark: SparkSession, sf_dir: str
+                   ) -> tuple[DataFrame, DataFrame]:
+    """The corpus's MinHash index (shingles, signatures): built once,
+    read by the pair graph and the estimator-quality report."""
+    return dedup.minhash_index(load_table(spark, sf_dir, "documents"))
+
+
 @artifact("minhash_pair_graph")
 def _lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return checkpoint(dedup.minhash_lsh_pairs(
-        load_table(spark, sf_dir, "documents")))
+    return checkpoint(dedup.minhash_lsh_pairs(*_minhash_index(spark, sf_dir)))
 
 
 @artifact("ssjoin_pairs")
@@ -1621,7 +1629,8 @@ def _crawl_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
                   .select(F.col("keep_doc_id").alias("doc_id")))
     canon = dedup.keep_canonical(
         crawl.select("doc_id"),
-        dedup.connected_components(dedup.minhash_lsh_pairs(crawl)))
+        dedup.connected_components(
+            dedup.minhash_lsh_pairs(*dedup.minhash_index(crawl))))
     clean = (dedup.decontaminate(crawl)
              .where("contaminated = 0").select("doc_id"))
     sampled = text.mix_sample(crawl)
@@ -4011,9 +4020,8 @@ def _minhash_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Signature-implied Jaccard vs exact per verified pair — the
     K-tuning metric (operators/dedup.minhash_estimator_quality),
     emb_ann_recall's text-side twin."""
-    return dedup.minhash_estimator_quality(
-        load_table(spark, sf_dir, "documents"),
-        pairs=_lsh_pairs(spark, sf_dir))
+    _, sig = _minhash_index(spark, sf_dir)
+    return dedup.minhash_estimator_quality(sig, _lsh_pairs(spark, sf_dir))
 
 
 def _minhash_quality_sql() -> str:

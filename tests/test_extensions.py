@@ -56,10 +56,11 @@ def test_ngram_df_cut_drops_hot_shingles(spark):
 
 
 def test_minhash_finds_identical_docs(spark):
-    from ethereum_export_pipeline_spark.operators.dedup import minhash_lsh_pairs
+    from ethereum_export_pipeline_spark.operators.dedup import (
+        minhash_index, minhash_lsh_pairs)
     text = "the quick brown fox jumps over the lazy dog again and again"
     df = docs(spark, [(1, text), (2, text), (3, "completely other words here")])
-    [row] = minhash_lsh_pairs(df).collect()
+    [row] = minhash_lsh_pairs(*minhash_index(df)).collect()
     assert (row.doc_a, row.doc_b) == (1, 2)
     assert row.jaccard == pytest.approx(1.0)
 
@@ -623,8 +624,9 @@ def test_crossmodal_agreement_identical_and_orthogonal(spark):
         crossmodal_agreement)
     text = "the quick brown fox jumps over the lazy dog again and again"
     d = docs(spark, [(0, text), (1, text), (2, text)])
-    from ethereum_export_pipeline_spark.operators.dedup import minhash_lsh_pairs
-    pairs = minhash_lsh_pairs(d)  # (0,1),(0,2),(1,2)
+    from ethereum_export_pipeline_spark.operators.dedup import (
+        minhash_index, minhash_lsh_pairs)
+    pairs = minhash_lsh_pairs(*minhash_index(d))  # (0,1),(0,2),(1,2)
     dim = 8
     e1 = [1.0] + [0.0] * (dim - 1)
     e2 = [0.0, 1.0] + [0.0] * (dim - 2)
@@ -1307,11 +1309,13 @@ def test_audio_fingerprint_rate_invariant_groups(spark):
 
 def test_minhash_estimator_quality_identical_docs(spark):
     from ethereum_export_pipeline_spark.operators.dedup import (
-        MINHASH_K, minhash_estimator_quality, minhash_lsh_pairs)
+        MINHASH_K, minhash_estimator_quality, minhash_index,
+        minhash_lsh_pairs)
     text = "the quick brown fox jumps over the lazy dog again and again"
     df = docs(spark, [(1, text), (2, text),
                       (3, "completely different words here entirely")])
-    [r] = minhash_estimator_quality(df, minhash_lsh_pairs(df)).collect()
+    sh, sig = minhash_index(df)
+    [r] = minhash_estimator_quality(sig, minhash_lsh_pairs(sh, sig)).collect()
     # identical docs: every signature component matches, both ppm exact
     assert (r.doc_a, r.doc_b) == (1, 2)
     assert r.sig_matches == MINHASH_K

@@ -679,7 +679,7 @@ def test_cluster_split_never_splits_a_minhash_cluster(spark):
     out = ALL_QUERIES["doc_cluster_split"].fn(spark, sf).collect()
     split_of = {r["doc_id"]: r["split"] for r in out}
     docs = load_table(spark, sf, "documents")
-    pairs = dedup.minhash_lsh_pairs(docs)
+    pairs = dedup.minhash_lsh_pairs(*dedup.minhash_index(docs))
     linked = pairs.collect()
     assert linked  # fixture must exercise the non-singleton path
     for p in linked:
@@ -848,9 +848,36 @@ def test_shared_artifact_memos_are_per_session_and_corpus(spark):
     # and the memoized frames ARE the graded results
     from ethereum_export_pipeline_spark.operators import dedup
     from ethereum_export_pipeline_spark.sources.tables import load_table
-    fresh = dedup.minhash_lsh_pairs(load_table(spark, sf, "documents"))
+    fresh = dedup.minhash_lsh_pairs(
+        *dedup.minhash_index(load_table(spark, sf, "documents")))
     assert sorted(map(tuple, p1.collect())) == \
         sorted(map(tuple, fresh.collect()))
+
+
+def test_minhash_quality_reads_the_memoized_index(spark):
+    """The pair graph and the estimator-quality report share one
+    MinHash index: once the pair graph is built, building the report
+    runs no Spark job, and it equals the report over a fresh index."""
+    from ethereum_export_pipeline_spark.plans import llm
+    from ethereum_export_pipeline_spark.operators import dedup
+    from ethereum_export_pipeline_spark.sources.tables import load_table
+    sf = "/root/testdata/sf0.001"
+    index = llm._minhash_index(spark, sf)
+    assert llm._minhash_index(spark, sf) is index
+    llm._lsh_pairs(spark, sf)
+    sc, group = spark.sparkContext, "minhash_quality_build"
+    sc.setJobGroup(group, group)
+    try:
+        report = llm._minhash_quality(spark, sf)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    sh, sig = dedup.minhash_index(load_table(spark, sf, "documents"))
+    fresh = dedup.minhash_estimator_quality(
+        sig, dedup.minhash_lsh_pairs(sh, sig))
+    got = sorted(map(tuple, report.collect()))
+    assert got and got == sorted(map(tuple, fresh.collect()))
 
 
 # ------------------------------------------------- audio VAD

@@ -114,7 +114,8 @@ def measured(tmp_path_factory):
     qs = entry.queries()
     ops = {
         "ssjoin_prefix": lambda: dedup.ssjoin_prefix_pairs(big_docs),
-        "minhash_pairs": lambda: dedup.minhash_lsh_pairs(big_docs),
+        "minhash_pairs": lambda: dedup.minhash_lsh_pairs(
+            *dedup.minhash_index(big_docs)),
         "kmeans_assign": lambda: similarity.kmeans_assign(big_emb),
         "trade_pagerank": lambda: qs["doc_trade_pagerank"](spark, out),
         "hierarchy_aggregates": hierarchy_aggregates,

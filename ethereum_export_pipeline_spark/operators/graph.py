@@ -12,8 +12,8 @@ address-graph analysis over the exported chain tables.
 * `triangle_counts`, `kcore_peel`, `lpa_communities`,
   `link_prediction` — cohesion and community structure of an
   undirected graph, each a fixed number of relational rounds.
-* `ancestor_closure`, `hierarchy_aggregates` — `WITH RECURSIVE`
-  hierarchies by pointer jumping and a level-synchronous rollup.
+* `hierarchy_aggregates` — the `WITH RECURSIVE` hierarchy rollup by
+  pointer jumping and a level-synchronous subtree pass.
 
 Every iterative operator is the Pregel step expressed relationally:
 per round a join on the node key and a hash agg, exchanges bounded
@@ -354,44 +354,6 @@ def link_prediction(edges: DataFrame) -> DataFrame:
                      .alias("jaccard")))
 
 
-# ------------------------------------------------- ancestor closure
-
-def ancestor_closure(parents: DataFrame, rounds: int = 4) -> DataFrame:
-    """Transitive ancestor closure of a parent-pointer forest by
-    POINTER-JUMPING doubling — the distributed answer to the
-    recursive-CTE hierarchy traversal (org charts, BOM explosions,
-    category trees) that SQL engines express with WITH RECURSIVE and
-    Spark has no native form for: after round i the reach set holds
-    every ancestor within distance 2^i, so a depth-D hierarchy needs
-    ⌈log₂ D⌉ rounds, not D — the reason this beats naive
-    frontier-following at 100 TB, where a deep corporate hierarchy or
-    category tree would otherwise serialize into D sequential joins.
-
-    Per round: one self equi-join of the reach set on (a.anc =
-    b.node) + a distinct — both exchanges bounded by the CLOSURE size
-    (Σ_n depth(n) ≤ n·D rows), never the corpus; eager
-    `execution.checkpoint` per round. Input must be acyclic (a parent
-    cycle never terminates logically; the fixed round count bounds
-    the damage to reach ≤ 2^rounds regardless).
-
-    Returns (node, anc) — every PROPER ancestor within 2^rounds
-    hops. NOTE: only consumers that need the PAIRS should pay for
-    this — the materialized closure is Σ depth(n) rows (7.3 GB
-    shuffle measured on a ×100 depth-64 forest), while the common
-    depth/descendant-count/subtree-sum rollups come from
-    `hierarchy_aggregates` with O(|V|)-row exchanges instead."""
-    reach = checkpoint(parents.select(F.col("child").alias("node"),
-                                      F.col("parent").alias("anc")))
-    for _ in range(rounds):
-        a = reach.select(F.col("node"), F.col("anc").alias("mid"))
-        b = reach.select(F.col("node").alias("mid"),
-                         F.col("anc").alias("anc2"))
-        hop = a.join(b, "mid").select("node",
-                                      F.col("anc2").alias("anc"))
-        reach = checkpoint(reach.unionByName(hop).distinct())
-    return reach
-
-
 HIERARCHY_ROUNDS = 4  # 2^4 covers the customer hierarchy's depth
 
 
@@ -419,11 +381,11 @@ def hierarchy_aggregates(parents: DataFrame, values: DataFrame) -> DataFrame:
     `values` supplies (c_custkey, bal_cents) for every node, including
     roots that never appear as a child. Returns (node, depth, n_desc,
     desc_sum). `HIERARCHY_ROUNDS` is sized so 2^rounds covers the true
-    max depth: phase 1's depth clamps at 2^rounds (the
-    `ancestor_closure(rounds)` contract) and phase 2 schedules BY depth,
-    so a clamped depth would merge levels and drop their sends. One
-    bounded 1-row collect reads the observed max depth. Exact-integer
-    end to end: hash-gradable against the recursive-CTE oracle.
+    max depth: phase 1's depth clamps at 2^rounds and phase 2
+    schedules BY depth, so a clamped depth would merge levels and drop
+    their sends. One bounded 1-row collect reads the observed max
+    depth. Exact-integer end to end: hash-gradable against the
+    recursive-CTE oracle.
 
     Checkpoint cadence: per-round EAGER checkpoints cost one Spark
     job each — on a shallow hierarchy (the graded digit hierarchy is

@@ -7,8 +7,8 @@ interleaving the bits of two columns into a Morton key and
 range-partitioning by it gives every file a compact rectangle in
 (x, y) space, so a box predicate on EITHER OR BOTH dimensions
 intersects few files — the technique behind Delta/Iceberg's OPTIMIZE
-ZORDER, expressed here with stock Spark primitives
-(`repartitionByRange` + `sortWithinPartitions` + parquet stats).
+ZORDER. A writer range-partitions and sorts within partitions on the
+key; plain parquet min/max stats then do the skipping.
 
 The key is exact integer bit arithmetic (shifts, masks, adds) — the
 same expression evaluates bit-identically in DuckDB, so the catalog
@@ -22,26 +22,24 @@ from pyspark.sql import Column, DataFrame, functions as F
 from ..execution import checkpoint
 
 Z_BITS = 16  # per-dimension bits; 2 dims × 16 bits fit easily in int64
-Z_FILES = 16  # write_zordered's output file count
 COMPACT_TARGET = 1 << 16  # 64 KiB target output files (fixture-scaled)
 COMPACT_BUCKET = 1024  # file ids per prefix-sum bucket
 
 
-def z_value_expr(x: str, y: str) -> Column:
-    """Morton key of two non-negative integer columns: bit i of `x`
-    lands at position 2i, bit i of `y` at 2i+1. Values are masked to
-    `Z_BITS` bits (callers with wider domains should bucket/scale
+def z_value_expr() -> Column:
+    """Morton key of (`l_partkey`, `l_suppkey`): bit i of the part key
+    lands at position 2i, bit i of the supplier key at 2i+1. Values
+    are masked to `Z_BITS` bits (wider domains should bucket/scale
     first). Pure codegen'd integer arithmetic — no UDF."""
     terms = " + ".join(
-        f"shiftleft((CAST({x} AS BIGINT) >> {i}) & 1, {2 * i}) + "
-        f"shiftleft((CAST({y} AS BIGINT) >> {i}) & 1, {2 * i + 1})"
+        f"shiftleft((CAST(l_partkey AS BIGINT) >> {i}) & 1, {2 * i}) + "
+        f"shiftleft((CAST(l_suppkey AS BIGINT) >> {i}) & 1, {2 * i + 1})"
         for i in range(Z_BITS))
     return F.expr(terms)
 
 
 def z_value_sql() -> str:
-    """DuckDB twin of `z_value_expr("l_partkey", "l_suppkey")` (same
-    shifts, masks, adds)."""
+    """DuckDB twin of `z_value_expr` (same shifts, masks, adds)."""
     terms = " + ".join(
         f"(((CAST(l_partkey AS BIGINT) >> {i}) & 1) << {2 * i}) + "
         f"(((CAST(l_suppkey AS BIGINT) >> {i}) & 1) << {2 * i + 1})"
@@ -114,21 +112,6 @@ def compaction_plan(files: DataFrame) -> DataFrame:
                           F.col("n_files").cast("long").alias("n_files"),
                           F.col("total_bytes").cast("long").alias("total_bytes"),
                           "first_file", "last_file"))
-
-
-def write_zordered(df: DataFrame, path: str) -> None:
-    """Write `df` as parquet clustered on the Morton curve of its
-    columns `x` and `y`: range-partition on the z-key into `Z_FILES`
-    files (one compact curve segment — a small rectangle cover — per
-    output file) and sort within partitions so row-group stats are
-    tight too. Readers need no special support: plain min/max pruning
-    on x and y now skips most files for box predicates on either
-    dimension."""
-    keyed = df.withColumn("__z", z_value_expr("x", "y"))
-    (keyed.repartitionByRange(Z_FILES, "__z")
-          .sortWithinPartitions("__z")
-          .drop("__z")
-          .write.mode("overwrite").parquet(path))
 
 
 def global_rank(df: DataFrame, order_cols: list[Column],

@@ -134,16 +134,6 @@ def _tiled_plane(mid: int, text: str):
     return plane.reshape(h, w, 3)
 
 
-def documents_as_media(df: DataFrame) -> DataFrame:
-    """Make an opaque-binary media table out of the documents fixture:
-    payload = utf-8 bytes, metadata struct alongside — the canonical
-    multimodal column layout."""
-    return _with_meta(
-        spread(_doc_rows(df)).select(
-            "media_id", F.encode("text", "utf-8").alias("payload")),
-        "text/plain")
-
-
 NEARDUP_ID_OFFSET = 1_000_000  # media_id of an injected near-dup copy
 
 
@@ -207,12 +197,11 @@ def decode_image(payload: bytes | None):
     allowed between them, exactly one whitespace byte after maxval,
     then the raw sample plane.
 
-    Dispatches on the magic bytes: netpbm here, 'BM' → `decode_bmp`
-    (uncompressed 24-bit Windows bitmaps), the 8-byte PNG signature →
-    `decode_png` (a REAL compressed codec: zlib inflate + per-scanline
-    unfilter), SOI 0xFFD8 → `decode_jpeg` (a REAL lossy codec:
-    Huffman + dequant + IDCT) — one decode entry point for every
-    format the engine understands.
+    Dispatches on the magic bytes: netpbm here, the 8-byte PNG
+    signature → `decode_png` (a REAL compressed codec: zlib inflate +
+    per-scanline unfilter), SOI 0xFFD8 → `decode_jpeg` (a REAL lossy
+    codec: Huffman + dequant + IDCT) — one decode entry point for
+    every format the engine understands.
 
     Returns None (never raises) for NULL/garbage/truncated payloads or
     unsupported variants (maxval > 255 needs 16-bit planes) — one bad
@@ -220,8 +209,6 @@ def decode_image(payload: bytes | None):
     import numpy as np
     if payload is None:
         return None
-    if bytes(payload[:2]) == b"BM":
-        return decode_bmp(payload)
     if bytes(payload[:8]) == PNG_SIG:
         return decode_png(payload)
     if bytes(payload[:2]) == JPEG_SOI:
@@ -302,58 +289,6 @@ def demux_netpbm_stream(payload: bytes | None):
                                      offset=data_start).reshape(h, w, c)))
         pos = data_start + need
     return frames
-
-
-def decode_bmp(payload: bytes | None):
-    """REAL BMP decode (pure numpy): uncompressed 24-bit BI_RGB
-    Windows bitmaps — 'BM' magic, BITMAPINFOHEADER, bottom-up rows
-    padded to 4-byte boundaries, BGR samples. Returns (width, height,
-    3, pixels) with pixels h×w×3 uint8 in RGB row-major (top-down) —
-    the same contract as `decode_image` — or None for anything else
-    (compressed/paletted/other depths), never an exception."""
-    import struct
-
-    import numpy as np
-    if payload is None or payload[:2] != b"BM" or len(payload) < 54:
-        return None
-    buf = bytes(payload)
-    data_off = struct.unpack_from("<I", buf, 10)[0]
-    hdr_size = struct.unpack_from("<I", buf, 14)[0]
-    if hdr_size < 40:  # BITMAPCOREHEADER etc. unsupported
-        return None
-    w, h = struct.unpack_from("<ii", buf, 18)
-    planes, bpp = struct.unpack_from("<HH", buf, 26)
-    compression = struct.unpack_from("<I", buf, 30)[0]
-    if planes != 1 or bpp != 24 or compression != 0 or w <= 0 or h == 0:
-        return None
-    top_down = h < 0
-    h = abs(h)
-    stride = (w * 3 + 3) & ~3
-    if len(buf) - data_off < stride * h:
-        return None
-    rows = (np.frombuffer(buf, np.uint8, count=stride * h, offset=data_off)
-              .reshape(h, stride)[:, :w * 3].reshape(h, w, 3))
-    if not top_down:
-        rows = rows[::-1]
-    return w, h, 3, rows[:, :, ::-1]  # BGR → RGB
-
-
-def encode_bmp(pixels) -> bytes:
-    """uint8 h×w×3 RGB array → uncompressed 24-bit bottom-up BMP."""
-    import struct
-
-    import numpy as np
-    a = np.asarray(pixels, dtype=np.uint8)
-    h, w, c = a.shape
-    if c != 3:
-        raise ValueError("encode_bmp wants h×w×3 RGB")
-    stride = (w * 3 + 3) & ~3
-    padded = np.zeros((h, stride), np.uint8)
-    padded[:, :w * 3] = a[::-1, :, ::-1].reshape(h, w * 3)  # flip+BGR
-    data = padded.tobytes()
-    return (b"BM" + struct.pack("<IHHI", 54 + len(data), 0, 0, 54)
-            + struct.pack("<IiiHHIIiiII", 40, w, h, 1, 24, 0,
-                          len(data), 2835, 2835, 0, 0) + data)
 
 
 # -------------------------------------------------------- png codec

@@ -143,8 +143,7 @@ def delete_ids(spark: SparkSession, corpus_dir: str, ids: DataFrame) -> dict:
 def apply_changes(base: DataFrame, changes: DataFrame) -> DataFrame:
     """CDC MERGE: apply a change feed (I/U/D rows with a sequence
     number) to a base snapshot and return the next snapshot — the
-    Delta/Iceberg ``MERGE INTO`` shape on plain DataFrames, and the
-    batch twin of the streaming `incremental_rollup` upsert.
+    Delta/Iceberg ``MERGE INTO`` shape on plain DataFrames.
 
     Semantics: per key, the HIGHEST-`seq` change wins (late feed
     entries supersede earlier ones — the multi-batch CDC compaction

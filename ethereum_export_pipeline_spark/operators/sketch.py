@@ -155,31 +155,6 @@ def bloom_build(keys: DataFrame) -> DataFrame:
                      .alias("bits")))
 
 
-def bloom_probe(df: DataFrame, limbs: DataFrame) -> DataFrame:
-    """Probe: a row passes iff ALL k bits are set. Implemented as the
-    k-position explode joined (broadcast) against the limb rows, then
-    an all-bits-present agg per input row — no shuffle of `df` wider
-    than its own k-row fan-out, and the limb table is m/32 rows
-    however large the built-from set was.
-
-    Returns df's `key` plus `bloom_hit` (0/1)."""
-    probe = (df.select(F.col("key"),
-                       F.posexplode(_positions(F.col("key")))
-                        .alias("_i", "p"))
-               .select("key", "_i",
-                       F.expr(f"p div {_LIMB_BITS}").alias("limb"),
-                       F.expr(f"shiftleft(CAST(1 AS BIGINT), "
-                              f"CAST(p % {_LIMB_BITS} AS INT))")
-                        .alias("mask")))
-    joined = (probe.join(F.broadcast(limbs), "limb", "left")
-                   .withColumn("_ok",
-                               ((F.coalesce(F.col("bits"), F.lit(0))
-                                 .bitwiseAND(F.col("mask")))
-                                == F.col("mask")).cast("int")))
-    return (joined.groupBy("key")
-                  .agg((F.min("_ok") == 1).cast("long").alias("bloom_hit")))
-
-
 def bloom_positions_sql() -> str:
     """DuckDB list of the same k positions of `shingle`."""
     h = h32_sql("shingle")
@@ -201,11 +176,10 @@ def bloom_bits(limbs: DataFrame) -> list[int]:
 def bloom_hit_expr(bits: list[int]):
     """MAP-SIDE probe: all-k-bits-set as one codegen'd boolean over
     the filter as a plan literal — zero joins, zero shuffle, the
-    shape that makes bloom pre-filtering free at 100 TB (the
-    relational `bloom_probe` twin exists for when the filter must be
-    built and probed inside one plan; measured at ×100, its
-    per-position verdict re-aggregation shuffles 768 MB where this
-    form shuffles nothing). The all-literal array constant-folds to
+    shape that makes bloom pre-filtering free at 100 TB (a
+    relational probe — explode the k positions, join the limb rows,
+    re-aggregate the verdicts per key — shuffled 768 MB at ×100 where
+    this form shuffles nothing). The all-literal array constant-folds to
     ONE Literal per occurrence — no per-row allocation (the
     `ivf_cell_col` lesson). Returns a 0/1 long Column of `shingle`'s
     verdict."""

@@ -2581,7 +2581,7 @@ FROM g
 
 def _hierarchy_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recursive-CTE hierarchy traversal, Spark-first
-    (operators/graph.ancestor_closure): customers form a
+    (operators/graph.hierarchy_aggregates): customers form a
     parent-pointer forest (parent = c_custkey div 10 — deterministic,
     ≤6 levels at any sf); per node: depth (ancestor count),
     proper-descendant count, and the SUBTREE balance rollup in exact

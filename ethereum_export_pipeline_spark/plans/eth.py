@@ -676,15 +676,14 @@ FROM orders WHERE o_custkey IS NOT NULL
 def _zorder_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The Morton clustering key (operators/layout.py) as a graded
     projection: exact integer bit-interleave of (l_partkey,
-    l_suppkey) — the key `write_zordered` range-partitions on so box
-    predicates on either dimension prune files. Pure codegen'd shifts
-    and masks, hash-identical in DuckDB."""
+    l_suppkey) — the key a Z-ordered write range-partitions on so
+    box predicates on either dimension prune files. Pure codegen'd
+    shifts and masks, hash-identical in DuckDB."""
     from ..operators.layout import z_value_expr
     li = load_table(spark, sf_dir, "lineitem")
     return li.select("l_orderkey", "l_linenumber", "l_partkey",
                      "l_suppkey",
-                     z_value_expr("l_partkey", "l_suppkey")
-                     .alias("z_key"))
+                     z_value_expr().alias("z_key"))
 
 
 def _zorder_key_sql() -> str:

@@ -2433,7 +2433,7 @@ FROM documents GROUP BY 1
 
 def _bloom_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Decontamination through a DETERMINISTIC Bloom filter
-    (operators/sketch.bloom_build/probe) instead of the broadcast
+    (operators/sketch.bloom_build/bloom_hit_expr) instead of the broadcast
     semi join — the membership pre-filter for when the authoritative
     set outgrows comfortable broadcast: the filter is m bits however
     large the set, probes are map-side. Output per doc: bloom verdict
@@ -2448,8 +2448,8 @@ def _bloom_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # re-deriving it from a corpus tokenize scan per consumer
     bench_sh = checkpoint(sh.where(is_bench).select("shingle").distinct())
     # the filter collapses to 128 longs at plan build and probes as a
-    # map-side literal expression — the relational bloom_probe twin
-    # shuffled 768 MB at ×100 re-aggregating per-position verdicts;
+    # map-side literal expression — a relational join probe shuffled
+    # 768 MB at ×100 re-aggregating per-position verdicts;
     # this form shuffles nothing before the per-doc aggregate
     bits = bloom_bits(bloom_build(bench_sh))
     probed = (sh.where(~is_bench).select("doc_id", "shingle")

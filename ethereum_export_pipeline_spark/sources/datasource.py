@@ -7,12 +7,13 @@ one OS process per block range. The Spark-4-native equivalent is the
 Python Data Source API: `spark.dataSource.register(ChainDataSource)`
 then
 
-    spark.read.format("ethereum_chain")
-         .option("start", 0).option("end", 4_999_999)
+    spark.readStream.format("ethereum_chain")
+         .option("start", 0).option("head", 4_999_999)
          .option("batch_size", 100_000).load()
 
-Each plan range becomes one InputPartition (the reference's `-w`
-parallelism maps to Spark task slots), and each partition's reader
+Offsets are block numbers. Each micro-batch's block range is split
+into one InputPartition per `batch_size` blocks (the reference's `-w`
+parallelism maps to Spark task slots), and each partition's read
 fetches its own range — against a real node that is the batched
 JSON-RPC loop; here it synthesizes deterministic fixture blocks so the
 partitioning/laziness/schema behavior is real and testable offline.
@@ -24,8 +25,8 @@ from __future__ import annotations
 
 import hashlib
 
-from pyspark.sql.datasource import (DataSource, DataSourceReader,
-                                    DataSourceStreamReader, InputPartition)
+from pyspark.sql.datasource import (DataSource, DataSourceStreamReader,
+                                    InputPartition)
 from pyspark.sql.types import StructType
 
 from ..partitioning import split_to_batches
@@ -67,32 +68,6 @@ def _fake_block(number: int) -> dict:
     }
 
 
-class _RangeReader:
-    """What the batch and the stream reader share: one InputPartition
-    per `batch_size` blocks of an inclusive range, and the read of one
-    partition."""
-
-    def __init__(self, schema: StructType, options: dict):
-        self.names = [f.name for f in schema.fields]
-        self.options = options
-        self.batch_size = int(options.get("batch_size", 100))
-
-    def _split(self, lo: int, hi: int) -> list[ChainRange]:
-        return [ChainRange(s, e) for s, e in
-                split_to_batches(lo, hi, self.batch_size)]
-
-    def read(self, partition: ChainRange):
-        for n in range(partition.start, partition.end + 1):
-            b = _fake_block(n)
-            yield tuple(b.get(c) for c in self.names)
-
-
-class ChainReader(_RangeReader, DataSourceReader):
-    def partitions(self):
-        return self._split(int(self.options.get("start", 0)),
-                           int(self.options.get("end", 999)))
-
-
 class ChainDataSource(DataSource):
     """`ethereum_chain` — blocks for a range, one partition per batch."""
 
@@ -103,17 +78,11 @@ class ChainDataSource(DataSource):
     def schema(self) -> StructType:
         return table_schema("blocks")
 
-    def reader(self, schema: StructType) -> ChainReader:
-        return ChainReader(schema, self.options)
-
     def streamReader(self, schema: StructType) -> "ChainStreamReader":
         return ChainStreamReader(schema, self.options)
 
 
-# ------------------------------------------------------------ streaming
-
-
-class ChainStreamReader(_RangeReader, DataSourceStreamReader):
+class ChainStreamReader(DataSourceStreamReader):
     """Chain-tailing stream: offsets are block numbers, each micro-batch
     covers (last_committed, head] split into range partitions — the
     streaming form of the reference's "rerun the pipeline for new block
@@ -121,14 +90,26 @@ class ChainStreamReader(_RangeReader, DataSourceStreamReader):
     `latestOffset` polls the RPC head; here the head is an option so
     tests are deterministic."""
 
+    def __init__(self, schema: StructType, options: dict):
+        self.names = [f.name for f in schema.fields]
+        self.options = options
+        self.batch_size = int(options.get("batch_size", 100))
+
     def initialOffset(self) -> dict:
         return {"block": int(self.options.get("start", 0))}
 
     def latestOffset(self) -> dict:  # exclusive upper bound
         return {"block": int(self.options.get("head", 999)) + 1}
 
-    def partitions(self, start: dict, end: dict):
-        return self._split(start["block"], end["block"] - 1)
+    def partitions(self, start: dict, end: dict) -> list[ChainRange]:
+        return [ChainRange(s, e) for s, e in
+                split_to_batches(start["block"], end["block"] - 1,
+                                 self.batch_size)]
+
+    def read(self, partition: ChainRange):
+        for n in range(partition.start, partition.end + 1):
+            b = _fake_block(n)
+            yield tuple(b.get(c) for c in self.names)
 
     def commit(self, end: dict) -> None:
         pass  # offsets live in the stream checkpoint

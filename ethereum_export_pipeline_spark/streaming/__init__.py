@@ -40,7 +40,6 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..execution import checkpoint
 from ..session import isolated_session
 
 WINDOW_US = 600_000_000  # 10-minute tumbling windows, µs
@@ -54,7 +53,6 @@ IJ_GAP_S = 3600  # the interval joins' click → purchase window, seconds
 WM_DELAY_S = 1800  # stream_watermark_counts' watermark delay
 SW_GAP_US = 1_800_000_000  # stream_session_window_counts' session gap, µs
 SW_DELAY_S = 1800  # stream_session_window_counts' watermark delay
-ROLLUP_RANGE = 25  # incremental_rollup partitions windows by win div this
 #: a bounded stream gets one state partition per this many input bytes
 STREAM_BYTES_PER_PARTITION = 4 << 20
 
@@ -452,76 +450,6 @@ def stream_dedup_within_watermark(spark: SparkSession,
                 .dropDuplicatesWithinWatermark(["user_id", "event_type"])
                 .select("user_id", "event_type"))
     return run_available_now(keyed, output_mode="append")
-
-
-def incremental_rollup(spark: SparkSession, src_dir: str, dest_dir: str,
-                       checkpoint_dir: str) -> None:
-    """Incrementally-maintained rollup table (materialized-view
-    maintenance without a table format): a streaming tumbling-count in
-    UPDATE mode emits, per micro-batch, the windows whose totals
-    changed — with their FULL cumulative values, because the agg state
-    (restored from the checkpoint across runs) carries prior batches —
-    and `foreachBatch` upserts exactly those keys into a parquet
-    rollup PARTITIONED BY `win_range` (`win div ROLLUP_RANGE`).
-
-    The upsert physically rewrites ONLY the partition directories
-    containing a touched window: read back just those partitions
-    (partition-pruned scan), anti-join out the stale rows, union the
-    new ones, dynamic-partition-overwrite — untouched directories are
-    never opened, never rewritten, so the write cost scales with the
-    batch's window spread, not the rollup's total history. Crash
-    safety is replay idempotency: the micro-batch only commits to the
-    checkpoint AFTER upsert returns, so a crash mid-write replays the
-    same deterministic batch and the per-partition overwrite
-    converges. With a table format (Delta/Iceberg) this is MERGE INTO;
-    on an object store the directory commit becomes a manifest flip
-    (see sources/staged_sink.py for that two-phase pattern).
-
-    Each availableNow run reads ONLY files the checkpoint has not
-    seen: the incremental convert job's discipline applied to an
-    AGGREGATE."""
-    from ..sources.tables import with_event_time
-    sdf = with_event_time(read_stream(spark, src_dir))
-    agg = (sdf.groupBy(F.expr(f"(ts_ns div 1000) div {WINDOW_US}")
-                        .alias("win"))
-              .agg(F.count(F.lit(1)).alias("n")))
-
-    def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        sess = batch_df.sparkSession
-        new = (batch_df.select("win", "n")
-                       .withColumn("win_range",
-                                   F.expr(f"win div {ROLLUP_RANGE}")))
-        if os.path.isdir(dest_dir):
-            ranges = [r[0] for r in
-                      new.select("win_range").distinct().collect()]
-            if not ranges:
-                return
-            cur = (sess.read.parquet(dest_dir)
-                       .where(F.col("win_range").isin(ranges)))
-            # localCheckpoint breaks lineage back to dest_dir — Spark
-            # refuses to overwrite a path a plan is reading from
-            out = checkpoint(cur.join(new.select("win"), "win", "left_anti")
-                                .unionByName(new))
-        else:
-            if new.isEmpty():
-                return
-            out = new
-        old_mode = sess.conf.get(
-            "spark.sql.sources.partitionOverwriteMode", "static")
-        sess.conf.set("spark.sql.sources.partitionOverwriteMode",
-                      "dynamic")
-        try:
-            (out.write.mode("overwrite").partitionBy("win_range")
-                .parquet(dest_dir))
-        finally:
-            sess.conf.set("spark.sql.sources.partitionOverwriteMode",
-                          old_mode)
-
-    q = (agg.writeStream.foreachBatch(upsert)
-            .outputMode("update")
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True).start())
-    q.awaitTermination()
 
 
 def stream_decontaminate(spark: SparkSession, docs_path: str,

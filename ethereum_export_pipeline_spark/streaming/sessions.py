@@ -148,54 +148,16 @@ def stream_cusum_alerts(spark: SparkSession, events_path: str) -> DataFrame:
 
     Scale shape: one shuffle on user_id into per-key state (one int),
     Arrow-batched per-key work linear in the batch."""
-    agg = cusum_alert_stream(spark, events_path)
-    return run_available_now(agg, output_mode="update")
-
-
-def cusum_alert_stream(spark: SparkSession, events_path: str) -> DataFrame:
-    """The CUSUM pipeline as an UN-started streaming DataFrame —
-    shared by `stream_cusum_alerts` (fresh availableNow run) and
-    `run_cusum_checkpointed` (persistent-checkpoint restart runs)."""
     from ..sources.tables import with_event_time
     sdf = with_event_time(read_stream(spark, events_path))
     keyed = (sdf.selectExpr(
                  "user_id", "(ts_ns div 1000) AS ts_us", "event_id",
                  "CAST(round(value * 100) AS BIGINT) AS x")
                 .groupBy("user_id"))
-    return keyed.applyInPandasWithState(
+    agg = keyed.applyInPandasWithState(
         _cusum_key, ALERT_SCHEMA, CUSUM_STATE,
         outputMode="update", timeoutConf=GroupStateTimeout.NoTimeout)
-
-
-def run_cusum_checkpointed(spark: SparkSession, events_dir: str,
-                           checkpoint_dir: str) -> list:
-    """ONE availableNow run of the CUSUM stream against a PERSISTENT
-    checkpoint; returns the alert rows this run emitted. Stop, land
-    more files in `events_dir`, call again (a fresh session each
-    time — `read_stream` builds a new isolated child): the restarted
-    query recovers per-user state from the checkpoint's state store
-    and resumes at the committed source offset, so files already
-    processed are never re-read and alarms whose accumulation SPANS
-    the restart still fire. This is the restart-recovery contract a
-    long-lived production stream leans on (driver loss, deploys,
-    nightly availableNow catch-up runs).
-
-    Recovery cost at scale: proportional to STATE size (one BIGINT
-    per user here) + one checkpoint read per state partition — never
-    to history length. The state-partition count is the width
-    `read_stream` gives the first run; the checkpoint records it and
-    every restart keeps it."""
-    agg = cusum_alert_stream(spark, events_dir)
-    rows: list = []
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        rows.extend(batch_df.collect())
-
-    q = (agg.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", checkpoint_dir)
-            .outputMode("update").trigger(availableNow=True).start())
-    q.awaitTermination()
-    return rows
+    return run_available_now(agg, output_mode="update")
 
 
 # ------------------------------------- out-of-orderness census (OOO)

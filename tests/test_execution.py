@@ -58,8 +58,6 @@ ITERATIVE = {
     "triangle_counts": lambda s: graph.triangle_counts(_edges(s)),
     "kcore_peel": lambda s: graph.kcore_peel(_edges(s)),
     "lpa_communities": lambda s: graph.lpa_communities(_edges(s)),
-    "ancestor_closure": lambda s: graph.ancestor_closure(_parents(s),
-                                                         rounds=4),
     "hierarchy_aggregates": _hierarchy,
     "connected_components": lambda s: dedup.connected_components(_pairs(s)),
     "connected_components_star": lambda s: dedup.connected_components_star(

@@ -219,9 +219,12 @@ def test_extract_features_decodes_real_pixels(spark):
 
 def test_binary_stats_accounting(spark):
     from ethereum_export_pipeline_spark.operators.multimodal import (
-        binary_stats, documents_as_media)
-    df = docs(spark, [(1, "abc"), (2, "defghi")])
-    [r] = binary_stats(documents_as_media(df)).collect()
+        binary_stats)
+    media = docs(spark, [(1, "abc"), (2, "defghi")]).select(
+        F.col("doc_id").alias("media_id"),
+        F.encode("text", "utf-8").alias("payload"),
+        F.struct(F.lit("text/plain").alias("format")).alias("meta"))
+    [r] = binary_stats(media).collect()
     assert (r.format, r.n_items, r.total_bytes, r.max_bytes, r.min_bytes) == (
         "text/plain", 2, 9, 6, 3)
 
@@ -651,25 +654,6 @@ def test_ensure_scan_width_skips_already_split_input(spark):
     assert spread(narrow).rdd.getNumPartitions() == par
     wide = spark.range(100).repartition(par * 2)
     assert spread(wide) is wide                       # untouched plan
-
-
-def test_bmp_roundtrip_and_dispatch():
-    import numpy as np
-    from ethereum_export_pipeline_spark.operators.multimodal import (
-        decode_bmp, decode_image, encode_bmp)
-    # width 3 → stride padding (3*3=9 → 12); asymmetric pattern catches
-    # a missed bottom-up flip or BGR swap
-    px = np.arange(2 * 3 * 3, dtype=np.uint8).reshape(2, 3, 3)
-    blob = encode_bmp(px)
-    w, h, c, back = decode_bmp(blob)
-    assert (w, h, c) == (3, 2, 3) and (back == px).all()
-    # decode_image dispatches on the 'BM' magic
-    assert (decode_image(blob)[3] == px).all()
-    assert decode_bmp(b"BM short") is None
-    assert decode_bmp(None) is None
-    # 8-bit / compressed variants rejected: flip bpp field to 8
-    bad = bytearray(blob); bad[28] = 8
-    assert decode_bmp(bytes(bad)) is None
 
 
 def test_wav_roundtrip_and_chunk_walk():

@@ -163,31 +163,6 @@ def test_streaming_tumbling_equals_batch(spark, tmp_path):
     assert got == {w: (c, lo, hi) for w, (lo, hi, c) in exp.items()}
 
 
-def test_python_datasource_chain_scan(spark):
-    from ethereum_export_pipeline_spark.session import isolated_session
-    from ethereum_export_pipeline_spark.sources.datasource import (
-        ChainDataSource)
-    # registered on a child: a session created after its parent
-    # registered the source inherits a poisoned registry entry
-    spark = isolated_session(spark)
-    spark.dataSource.register(ChainDataSource)
-    df = (spark.read.format("ethereum_chain")
-               .option("start", 0).option("end", 249)
-               .option("batch_size", 100).load())
-    # one InputPartition per plan batch (ragged last)
-    assert df.rdd.getNumPartitions() == 3
-    assert df.count() == 250
-    # deterministic chain linkage: parent_hash(n) == hash(n-1)
-    rows = {r.number: r for r in
-            df.select("number", "hash", "parent_hash").collect()}
-    assert rows[1].parent_hash == rows[0].hash
-    assert rows[0].parent_hash == "0x" + "0" * 64
-    # pruning-style predicate works through the source
-    assert df.where("number BETWEEN 100 AND 199").count() == 100
-    # wei schema survives (decimal(38,0) columns present, null here)
-    assert dict(df.dtypes)["difficulty"] == "decimal(38,0)"
-
-
 def test_stateful_stream_sessionize_equals_batch(spark, tmp_path):
     import pyspark.sql.functions as F
     from ethereum_export_pipeline_spark.streaming.sessions import stream_sessionize
@@ -294,11 +269,34 @@ def test_incremental_convert_processes_only_new_files(spark, tmp_path):
     assert spark.read.parquet(dest).count() == 130
 
 
+def test_python_datasource_chain_scan():
+    from ethereum_export_pipeline_spark.sources.datasource import (
+        ChainDataSource, ChainRange)
+    source = ChainDataSource({"batch_size": 100})
+    schema = source.schema()
+    reader = source.streamReader(schema)
+    # one InputPartition per batch_size blocks of a micro-batch (ragged
+    # last): blocks [0, 250) in batches of 100
+    assert [(p.start, p.end) for p in
+            reader.partitions({"block": 0}, {"block": 250})] == [
+        (0, 99), (100, 199), (200, 249)]
+    # deterministic chain linkage: parent_hash(n) == hash(n-1)
+    idx = [f.name for f in schema.fields].index
+    rows = list(reader.read(ChainRange(0, 1)))
+    assert rows[1][idx("parent_hash")] == rows[0][idx("hash")]
+    assert rows[0][idx("parent_hash")] == "0x" + "0" * 64
+    # wei schema survives (decimal(38,0) columns present, null here)
+    assert schema["difficulty"].dataType.simpleString() == "decimal(38,0)"
+    assert rows[0][idx("difficulty")] is None
+
+
 def test_python_datasource_chain_stream(spark):
     from ethereum_export_pipeline_spark.session import isolated_session
     from ethereum_export_pipeline_spark.sources.datasource import (
         ChainDataSource)
-    spark = isolated_session(spark)  # see test_python_datasource_chain_scan
+    # registered on a child: a session created after its parent
+    # registered the source inherits a poisoned registry entry
+    spark = isolated_session(spark)
     spark.dataSource.register(ChainDataSource)
     sdf = (spark.readStream.format("ethereum_chain")
                 .option("start", 0).option("head", 249)
@@ -613,67 +611,6 @@ def test_staged_csv_zero_rows(spark, tmp_path):
     assert not os.path.isdir(os.path.join(dest, "_staging"))
 
 
-def test_incremental_rollup_upserts_only_touched_windows(spark, tmp_path):
-    import pyspark.sql.functions as F
-    from ethereum_export_pipeline_spark.streaming import (
-        WINDOW_US, incremental_rollup)
-    src = tmp_path / "roll_src"; src.mkdir()
-    dest, ckpt = str(tmp_path / "roll_out"), str(tmp_path / "roll_ckpt")
-
-    def write_file(name, start, n):
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-        ids = list(range(start, start + n))
-        pq.write_table(
-            pa.table({"event_id": ids,
-                      "ts": [i * 90_000_000_000 for i in ids]}),
-            src / name)
-
-    def expected(upto):
-        exp = {}
-        for i in range(upto):
-            w = i * 90_000_000 // WINDOW_US
-            exp[w] = exp.get(w, 0) + 1
-        return exp
-
-    import glob, os
-
-    def mtimes(pattern):
-        return {f: os.path.getmtime(f)
-                for f in sorted(glob.glob(f"{dest}/{pattern}/*.parquet"))}
-
-    # ROLLUP_RANGE=25 → events 0..499 (windows 0..74) fill partitions
-    # win_range=0,1,2; the f2 tail (windows 75..119) lands in 3,4
-    write_file("f1", 0, 500)
-    incremental_rollup(spark, str(src), dest, ckpt)
-    got1 = {r.win: r.n for r in spark.read.parquet(dest).collect()}
-    assert got1 == expected(500)
-    assert {os.path.basename(d) for d in glob.glob(f"{dest}/win_range=*")} \
-        == {"win_range=0", "win_range=1", "win_range=2"}
-    untouched_before = mtimes("win_range=*")
-
-    # second run, no new data: rollup unchanged (checkpoint = bookmark)
-    incremental_rollup(spark, str(src), dest, ckpt)
-    assert {r.win: r.n
-            for r in spark.read.parquet(dest).collect()} == expected(500)
-    assert mtimes("win_range=*") == untouched_before  # zero rewrites
-
-    # new file appends windows in NEW ranges only: cumulative counts
-    # survive (agg state rides the checkpoint) and the untouched
-    # partition directories stay byte-identical — the physical rewrite
-    # now matches the 'only touched windows' claim
-    write_file("f2", 500, 300)
-    incremental_rollup(spark, str(src), dest, ckpt)
-    got2 = {r.win: r.n for r in spark.read.parquet(dest).collect()}
-    assert got2 == expected(800)
-    for rng in (0, 1, 2):
-        assert mtimes(f"win_range={rng}") == {
-            f: t for f, t in untouched_before.items()
-            if f"win_range={rng}/" in f}
-    assert glob.glob(f"{dest}/win_range=3/*.parquet")
-    assert glob.glob(f"{dest}/win_range=4/*.parquet")
-
-
 def _read_one_file_per_trigger(spark, path):
     """`streaming.read_stream` over a directory, one file per
     micro-batch: the multi-batch runs that exercise cross-batch state."""
@@ -720,48 +657,6 @@ def test_stream_interval_join_cross_batch_state(spark, tmp_path,
     got = sorted((r.click_id, r.buy_id, r.delta_us) for r in
                  streaming.stream_interval_join(spark, str(src)).collect())
     assert got == [(1, 3, 300_000_000), (2, 4, 100_000_000)]
-
-
-def test_incremental_rollup_replay_after_crash_mid_upsert(spark, tmp_path):
-    """Crash-safety contract: the micro-batch commits to the stream
-    checkpoint only AFTER the upsert returns, so a crash between the
-    sink write and the commit replays the same batch — and the
-    per-partition dynamic overwrite converges to the same rollup.
-    Simulated by deleting the checkpoint's last commit marker (the
-    state as-of a crash mid-upsert: sink written, batch uncommitted)
-    and re-running."""
-    import os
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-    from ethereum_export_pipeline_spark.streaming import (
-        WINDOW_US, incremental_rollup)
-    src = tmp_path / "crash_src"; src.mkdir()
-    dest, ckpt = str(tmp_path / "crash_out"), str(tmp_path / "crash_ckpt")
-    ids = list(range(400))
-    pq.write_table(pa.table({"event_id": ids,
-                             "ts": [i * 90_000_000_000 for i in ids]}),
-                   src / "f1")
-    incremental_rollup(spark, str(src), dest, ckpt)
-    before = {r.win: r.n for r in spark.read.parquet(dest).collect()}
-    exp = {}
-    for i in ids:
-        w = i * 90_000_000 // WINDOW_US
-        exp[w] = exp.get(w, 0) + 1
-    assert before == exp
-
-    # "crash": batch 0's sink write landed but the commit never did
-    # (the .crc sidecar must go too or the checkpoint manager reads
-    # the orphaned checksum as a concurrent modification)
-    cdir = os.path.join(ckpt, "commits")
-    last = sorted(f for f in os.listdir(cdir) if not f.startswith("."))[-1]
-    os.remove(os.path.join(cdir, last))
-    crc = os.path.join(cdir, f".{last}.crc")
-    if os.path.exists(crc):
-        os.remove(crc)
-
-    incremental_rollup(spark, str(src), dest, ckpt)
-    after = {r.win: r.n for r in spark.read.parquet(dest).collect()}
-    assert after == exp                     # replay converged, no dupes
 
 
 def test_session_window_boundary_and_withheld_tail(spark, tmp_path):

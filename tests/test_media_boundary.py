@@ -5,6 +5,8 @@ nothing, or only NULLs, converts to Arrow like a full one."""
 
 from __future__ import annotations
 
+import struct
+
 import pytest
 
 from ethereum_export_pipeline_spark.operators import multimodal as MM
@@ -43,11 +45,16 @@ KERNELS = {
     "scene_cuts": (MM.scene_cuts, MM.CUT_SCHEMA, 0),
 }
 
-# NULL text and empty text; NULL, empty and undecodable payloads
+# NULL text and empty text; NULL, empty and undecodable payloads —
+# the last a well-formed 1×1 24-bit BMP, a format no codec here reads
 BAD_DOCS = [(1, None), (2, "")]
+BMP_1PX = (b"BM" + struct.pack("<IHHI", 58, 0, 0, 54)
+           + struct.pack("<IiiHHIIiiII", 40, 1, 1, 1, 24, 0, 4,
+                         2835, 2835, 0, 0) + b"\x00\x00\xff\x00")
 BAD_MEDIA = [(1, None, None), (2, b"", None),
              (3, b"P6\n8 8\n255\ntruncated", ("image/x", 22, None, None)),
-             (4, b"RIFF\x00\x00\x00\x00WAVEjunk" * 4, None)]
+             (4, b"RIFF\x00\x00\x00\x00WAVEjunk" * 4, None),
+             (5, BMP_1PX, None)]
 
 
 def _simple(schema) -> str:
@@ -71,3 +78,7 @@ def test_media_function_empty_input(spark, name, case):
     out = fn(spark.createDataFrame(rows, in_schema))
     assert out.schema.simpleString() == _simple(schema)
     assert len(out.collect()) == per_row * len(rows)
+
+
+def test_bad_payloads_decode_to_none():
+    assert all(MM.decode_image(p) is None for _, p, _ in BAD_MEDIA)

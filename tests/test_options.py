@@ -1,13 +1,21 @@
-"""Guard: an operator parameter exists only when callers pass it
-different values.
+"""Guard: the package ships only code a workload runs, and an
+operator parameter exists only when callers pass it different values.
 
-AST scan of the package's top-level functions against every call
-site. Call sites are searched in the package, `bench.py`, `tools/`
-and `perfbench/` — NOT in `tests/`: a value only a test passes does
-not justify a knob, so a test runs the operator at its constants. A
-call matches by the function's name (or an import alias of it), so a
-name shared by two functions counts for both. A function no non-test
-code calls is not judged. Two rules:
+AST scan of the package's top-level definitions against every
+non-test reference. References are searched in the package,
+`bench.py`, `tools/` and `perfbench/` — NOT in `tests/`: code or a
+value only a test uses is not shipped for a reason, so a test runs
+the operator the catalog runs, at its constants. A name matches by
+itself (or an import alias of it), so a name shared by two
+definitions counts for both.
+
+`test_no_test_only_definitions` fails on a package top-level function
+or class that nothing outside its own module-level body references —
+counted to a fixpoint, so a helper referenced only from the bodies of
+unreferenced definitions is unreferenced too (the driver entry
+`__spark_entry__.py` is a referrer as well). `PENDING` lists the
+test-only roots kept anyway, each with the change that will give it a
+caller. The parameter rules judge only functions called outside tests:
 
 * never set: a defaulted parameter that no call site passes (by
   keyword, by position, or through a `*args` / `**kw` splat);
@@ -48,6 +56,31 @@ ALLOWED = {
         "deployment: the manifest table a run records its ranges under",
 }
 
+#: the driver entry references the catalog's flagship; it calls no
+#: operator, so it is a referrer but not a parameter call site
+REFERRERS = (*CALLER_ROOTS, "__spark_entry__.py")
+
+_S9 = ("the Glue-catalog step (S9) over convert_to_parquet's output; "
+       "it goes on the graded path with it")
+#: "module.definition" -> why it stays without a non-test caller
+PENDING = {
+    "operators.pipeline.run_full_export":
+        "the reference's export (one DAG per range, bookmark rerun); "
+        "its eth_full_export catalog row is ROADMAP direction 4",
+    "operators.convert.convert_to_parquet":
+        "the reference's three Glue convert jobs; eth_full_export "
+        "reads them back typed (ROADMAP direction 4)",
+    "streaming.incremental_convert":
+        "the convert job's bookmarked incremental run (ROADMAP "
+        "direction 4)",
+    "streaming.stream_chain_export":
+        "the export as a chain stream into the range layout (ROADMAP "
+        "direction 4)",
+    "sources.catalog.register_fixture_tables": _S9,
+    "sources.catalog.register_converted_tables": _S9,
+    "sources.catalog.drop_database": _S9,
+}
+
 
 def _py_files(rel: str):
     path = os.path.join(ROOT, rel)
@@ -65,14 +98,17 @@ def _parse(path: str) -> ast.Module:
         return ast.parse(fh.read(), path)
 
 
+def _module(path: str) -> str:
+    mod = os.path.relpath(path, os.path.join(ROOT, PACKAGE))
+    return mod[:-3].replace(os.sep, ".").removesuffix(".__init__")
+
+
 def _functions():
     """(`module.function`, node) for every package top-level function."""
     for path in _py_files(PACKAGE):
-        mod = os.path.relpath(path, os.path.join(ROOT, PACKAGE))
-        mod = mod[:-3].replace(os.sep, ".").removesuffix(".__init__")
         for fn in _parse(path).body:
             if isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
-                yield f"{mod}.{fn.name}", fn
+                yield f"{_module(path)}.{fn.name}", fn
 
 
 def _params(fn: ast.FunctionDef):
@@ -226,3 +262,64 @@ def test_allowlist_is_live():
     stale = sorted(set(ALLOWED) - set(never) - set(one))
     assert not stale, ("ALLOWED entries now varied by the callers, or "
                        f"gone: {stale}")
+
+
+def _loaded(node, alias: dict[str, str]) -> set[str]:
+    """Every name `node` loads, bare or as an attribute."""
+    return {alias.get(_name(n), _name(n)) for n in ast.walk(node)
+            if _name(n) and isinstance(n.ctx, ast.Load)}
+
+
+def _references():
+    """(names loaded outside any package definition, `name -> names
+    loaded in its body` per package definition, `module.name -> name`
+    of every package top-level function and class)."""
+    roots: set[str] = set()
+    uses: dict[str, set[str]] = {}
+    defs: dict[str, str] = {}
+    package = os.path.join(ROOT, PACKAGE)
+    for rel in REFERRERS:
+        for path in _py_files(rel):
+            tree = _parse(path)
+            alias = {a.asname: a.name for n in ast.walk(tree)
+                     if isinstance(n, ast.ImportFrom)
+                     for a in n.names if a.asname}
+            for node in tree.body:
+                if path.startswith(package) and isinstance(
+                        node, (ast.FunctionDef, ast.AsyncFunctionDef,
+                               ast.ClassDef)):
+                    defs[f"{_module(path)}.{node.name}"] = node.name
+                    uses.setdefault(node.name, set()).update(
+                        _loaded(node, alias))
+                else:
+                    roots |= _loaded(node, alias)
+    return roots, uses, defs
+
+
+def _live(roots: set[str], uses: dict[str, set[str]]) -> set[str]:
+    """The names reachable from `roots` through definition bodies."""
+    live, todo = set(), list(roots)
+    while todo:
+        n = todo.pop()
+        if n not in live:
+            live.add(n)
+            todo.extend(uses.get(n, ()))
+    return live
+
+
+def test_no_test_only_definitions():
+    roots, uses, defs = _references()
+    live = _live(roots | {defs.get(q) for q in PENDING}, uses)
+    dead = sorted(q for q, n in defs.items() if n not in live)
+    assert not dead, (f"{len(dead)} package definitions only tests use "
+                      "(give each a caller, or delete it with the tests "
+                      "that exist only for it):\n" + "\n".join(dead))
+
+
+def test_pending_is_live():
+    roots, uses, defs = _references()
+    pending = {defs.get(q) for q in PENDING}
+    stale = sorted(q for q in PENDING if q not in defs
+                   or defs[q] in _live(roots | pending - {defs[q]}, uses))
+    assert not stale, ("PENDING entries now referenced outside tests, "
+                       f"or gone: {stale}")

@@ -182,20 +182,6 @@ def test_netpbm_roundtrip_property(h, w, data, gray):
     assert (back == px).all()
 
 
-@given(h=st.integers(1, 7), w=st.integers(1, 7), data=st.data())
-@settings(**SETTINGS)
-def test_bmp_roundtrip_property(h, w, data):
-    import numpy as np
-    from ethereum_export_pipeline_spark.operators.multimodal import (
-        decode_bmp, encode_bmp)
-    flat = data.draw(st.lists(st.integers(0, 255), min_size=h * w * 3,
-                              max_size=h * w * 3))
-    px = np.array(flat, dtype=np.uint8).reshape(h, w, 3)
-    rw, rh, rc, back = decode_bmp(encode_bmp(px))
-    assert (rw, rh, rc) == (w, h, 3)
-    assert (back == px).all()
-
-
 @given(samples=st.lists(st.integers(0, 255), min_size=1, max_size=64),
        sixteen=st.booleans(), rate=st.sampled_from([8000, 16000, 44100]))
 @settings(**SETTINGS)
@@ -357,36 +343,6 @@ def test_apply_changes_matches_python_reference(spark, base, feed):
     again = {r["doc_id"]: r["text"]
              for r in apply_changes(merged_df, cdf).collect()}
     assert again == {k: v[0] for k, v in got.items()}
-
-
-@given(edges=st.lists(
-    st.tuples(st.integers(2, 30), st.integers(1, 29)),
-    min_size=1, max_size=25))
-@settings(**SETTINGS)
-def test_ancestor_closure_matches_python_reference(spark, edges):
-    """Pointer-jumping closure == naive python chain-walk on random
-    parent-pointer FORESTS (parent < child enforces acyclicity; one
-    parent per child enforced by dict)."""
-    from ethereum_export_pipeline_spark.operators.graph import (
-        ancestor_closure)
-    parent = {}
-    for c, p in edges:
-        if p < c:
-            parent.setdefault(c, p)
-    if not parent:
-        return
-    expected = set()
-    for c in parent:
-        a = c
-        while a in parent:
-            a = parent[a]
-            expected.add((c, a))
-    df = spark.createDataFrame(list(parent.items()),
-                               "child long, parent long")
-    # depth ≤ 29 → 5 rounds (2^5 = 32) always cover it
-    got = {(r["node"], r["anc"])
-           for r in ancestor_closure(df, rounds=5).collect()}
-    assert got == expected
 
 
 @given(texts=st.lists(

@@ -276,31 +276,6 @@ def test_stream_ooo_census_matches_python_reference(spark):
                 g["late_le_600s"], g["late_gt_600s"]] == buckets
 
 
-# ------------------------------------------------- ancestor closure
-
-def test_ancestor_closure_three_level_forest(spark):
-    from ethereum_export_pipeline_spark.operators.graph import (
-        ancestor_closure)
-    # forest: 1 ← 10 ← 100, 1 ← 11; 2 ← 20 (roots 1, 2)
-    edges = spark.createDataFrame(
-        [Row(child=10, parent=1), Row(child=100, parent=10),
-         Row(child=11, parent=1), Row(child=20, parent=2)])
-    got = {(r["node"], r["anc"])
-           for r in ancestor_closure(edges, rounds=2).collect()}
-    assert got == {(10, 1), (100, 10), (100, 1), (11, 1), (20, 2)}
-
-
-def test_ancestor_closure_log_rounds_cover_depth(spark):
-    from ethereum_export_pipeline_spark.operators.graph import (
-        ancestor_closure)
-    # chain 1 ← 2 ← … ← 8 (depth 7): 3 rounds reach 2³ = 8 hops
-    edges = spark.createDataFrame(
-        [Row(child=i, parent=i - 1) for i in range(2, 9)])
-    got = ancestor_closure(edges, rounds=3)
-    deepest = {r["anc"] for r in got.where("node = 8").collect()}
-    assert deepest == {1, 2, 3, 4, 5, 6, 7}
-
-
 # ------------------------------------------------ script census
 
 def test_script_census_hand_counts(spark):

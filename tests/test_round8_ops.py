@@ -122,58 +122,6 @@ def test_hierarchy_aggregates_matches_python_reference(spark):
     assert got == exp
 
 
-# ------------------------------------------- stream restart recovery
-
-def test_cusum_state_survives_restart_on_same_checkpoint(spark, tmp_path):
-    """State must carry across a FULL stop/start: run half the input
-    to completion, start a NEW query (fresh isolated session) on the
-    SAME checkpoint, feed the rest — alarms whose accumulation spans
-    the restart fire with s values only reachable via recovered
-    state, and phase-1 alarms are NOT re-emitted (committed source
-    offsets are honored, no reprocessing)."""
-    from ethereum_export_pipeline_spark.streaming.sessions import (
-        CUSUM_H, CUSUM_K0, run_cusum_checkpointed)
-    events_dir = tmp_path / "events_in"
-    ckpt = str(tmp_path / "ckpt")
-    events_dir.mkdir()
-
-    def land(name, rows):
-        import pandas as pd
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-        pdf = pd.DataFrame(rows, columns=[
-            "event_id", "ts", "user_id", "event_type", "value", "props"])
-        pdf["ts"] = pd.to_datetime(pdf["ts"], unit="s")
-        pq.write_table(
-            pa.Table.from_pandas(pdf, preserve_index=False),
-            str(events_dir / name), coerce_timestamps="us")
-
-    # user 7: three 150.00s -> s = 9000, 18000, 27000 => ALARM(27000),
-    # reset; then one 150.00 -> s carried into the restart = 9000.
-    # user 8: three 120.00s -> s = 18000 carried, no alarm yet.
-    land("part1.parquet", [
-        (1, 100, 7, "a", 150.0, ""), (2, 101, 7, "a", 150.0, ""),
-        (3, 102, 7, "a", 150.0, ""), (4, 103, 7, "a", 150.0, ""),
-        (5, 100, 8, "a", 120.0, ""), (6, 101, 8, "a", 120.0, ""),
-        (7, 102, 8, "a", 120.0, ""),
-    ])
-    first = run_cusum_checkpointed(spark, str(events_dir), ckpt)
-    assert [(r.user_id, r.event_id, r.s_cents) for r in first] == \
-        [(7, 3, 27_000)]
-
-    # restart: user 7 needs carried s=9000 to alarm (9000+18000-6000 =
-    # 21000 > H; from scratch 12000 stays under); user 8 needs carried
-    # s=18000 (18000+8100-6000 = 20100 > H; from scratch 2100).
-    land("part2.parquet", [
-        (8, 104, 7, "a", 180.0, ""),
-        (9, 103, 8, "a", 81.0, ""),
-    ])
-    second = run_cusum_checkpointed(spark, str(events_dir), ckpt)
-    got = sorted((r.user_id, r.event_id, r.s_cents) for r in second)
-    assert got == [(7, 8, 21_000), (8, 9, 20_100)], got
-    assert CUSUM_K0 == 6_000 and CUSUM_H == 20_000  # values above assume
-
-
 def test_png_media_fixture_matches_ppm_pixels(spark):
     """decode(png fixture) must equal decode(ppm fixture) pixel for
     pixel — the two queries differ by codec only."""

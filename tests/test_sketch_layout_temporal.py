@@ -164,15 +164,16 @@ def test_bloom_no_false_negatives_and_rejects_most(spark):
     foreign keys mostly probe negative (fp rate ~(1-e^{-kn/m})^k ≈
     small at 200 keys / 4096 bits / 4 hashes)."""
     from ethereum_export_pipeline_spark.operators.sketch import (
-        bloom_build, bloom_probe)
+        bloom_bits, bloom_build, bloom_hit_expr)
     members = spark.createDataFrame([(f"in-{i}",) for i in range(200)],
-                                    "key string")
-    limbs = bloom_build(members.withColumnRenamed("key", "shingle"))
-    hits = bloom_probe(members, limbs).collect()
-    assert all(r["bloom_hit"] == 1 for r in hits) and len(hits) == 200
+                                    "shingle string")
+    bits = bloom_bits(bloom_build(members))
+    hits = members.select(bloom_hit_expr(bits).alias("hit")).collect()
+    assert all(r["hit"] == 1 for r in hits) and len(hits) == 200
     outsiders = spark.createDataFrame([(f"out-{i}",) for i in range(500)],
-                                      "key string")
-    fp = sum(r["bloom_hit"] for r in bloom_probe(outsiders, limbs).collect())
+                                      "shingle string")
+    fp = sum(r["hit"] for r in
+             outsiders.select(bloom_hit_expr(bits).alias("hit")).collect())
     assert fp < 50, f"false-positive rate implausibly high: {fp}/500"
 
 

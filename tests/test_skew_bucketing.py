@@ -34,31 +34,11 @@ def test_salted_agg_matches_plain_agg(spark, skewed):
 
 
 def test_salt_distributes_hot_key(spark, skewed):
-    from ethereum_export_pipeline_spark.operators.skew import with_salt
-    n = (with_salt(skewed.where("k = 0"), "v", n_salts=8)
-         .select("__salt").distinct().count())
-    assert n == 8  # the hot key really spreads across salts
-
-
-def test_salted_join_matches_plain_join(spark, skewed):
-    from ethereum_export_pipeline_spark.operators.skew import salted_join
-    dim = spark.range(12).select(F.col("id").alias("k"),
-                                 (F.col("id") * 100).alias("label"))
-    plain = sorted((r.k, r.v, r.label) for r in
-                   skewed.join(dim, "k").collect())
-    hot = spark.createDataFrame([(0,)], "k long")
-    got = sorted((r.k, r.v, r.label) for r in
-                 salted_join(skewed, dim, hot_keys=hot,
-                             n_salts=8).collect())
-    assert got == plain
-
-
-def test_salted_join_all_keys_variant(spark, skewed):
-    from ethereum_export_pipeline_spark.operators.skew import salted_join
-    dim = spark.range(12).select(F.col("id").alias("k"),
-                                 (F.col("id") + 1000).alias("label"))
-    plain = skewed.join(dim, "k").count()
-    assert salted_join(skewed, dim, n_salts=4).count() == plain
+    from ethereum_export_pipeline_spark.operators.skew import (
+        N_SALTS, with_salt)
+    hot = skewed.where("k = 0").withColumnRenamed("v", "event_id")
+    n = with_salt(hot).select("__salt").distinct().count()
+    assert n == N_SALTS  # the hot key really spreads across salts
 
 
 def test_bucketed_join_avoids_shuffle(spark, tmp_path):
@@ -88,21 +68,25 @@ def test_bucketed_join_avoids_shuffle(spark, tmp_path):
 def test_zorder_layout_skips_files_on_the_second_dimension(spark, tmp_path):
     """The reason Z-order exists: a layout sorted on x alone gives
     min/max file skipping on x and NONE on y (every file spans all of
-    y); the Morton layout gives every file a compact rectangle, so a
-    y-only predicate also prunes. Measured here directly from the
-    written files' actual stats."""
+    y); a layout range-partitioned and sorted on the Morton key
+    (`z_value_expr`, x = l_partkey, y = l_suppkey) gives every file a
+    compact rectangle, so a y-only predicate also prunes. Measured
+    here directly from the written files' actual stats."""
     import glob
     import pyspark.sql.functions as F
     from ethereum_export_pipeline_spark.operators.layout import (
-        write_zordered)
+        z_value_expr)
     n = 1 << 14  # a full 128x128 grid
     df = (spark.range(n)
-               .select((F.col("id") % 128).alias("x"),
-                       F.expr("id div 128").alias("y"),
+               .select((F.col("id") % 128).alias("l_partkey"),
+                       F.expr("id div 128").alias("l_suppkey"),
                        F.col("id").alias("v")))
     zdir, ldir = str(tmp_path / "zorder"), str(tmp_path / "linear")
-    write_zordered(df, zdir)
-    (df.repartitionByRange(16, "x").sortWithinPartitions("x")
+    (df.withColumn("__z", z_value_expr())
+       .repartitionByRange(16, "__z").sortWithinPartitions("__z")
+       .drop("__z").write.mode("overwrite").parquet(zdir))
+    (df.repartitionByRange(16, "l_partkey")
+       .sortWithinPartitions("l_partkey")
        .write.mode("overwrite").parquet(ldir))
 
     def overlapping(d, dim, lo, hi):
@@ -119,11 +103,11 @@ def test_zorder_layout_skips_files_on_the_second_dimension(spark, tmp_path):
         return keep, len(files)
 
     # y-band predicate (y in [64, 79], any x):
-    z_y, zn = overlapping(zdir, "y", 64, 79)
-    lin_y, ln = overlapping(ldir, "y", 64, 79)
+    z_y, zn = overlapping(zdir, "l_suppkey", 64, 79)
+    lin_y, ln = overlapping(ldir, "l_suppkey", 64, 79)
     assert lin_y == ln          # x-sorted layout cannot skip on y
     assert z_y <= zn * 0.45     # Morton rectangles: most files skipped
     # and the curve still skips on x too (not as tight as a pure
     # x-sort, which is the documented trade)
-    z_x, _ = overlapping(zdir, "x", 64, 79)
+    z_x, _ = overlapping(zdir, "l_partkey", 64, 79)
     assert z_x <= zn * 0.6
